@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, countDistinct, lit, sum}
 import graft.operators.{Association, Postprocess, Preprocess}
+import graft.operators.Preprocess.column
 import graft.sources.Sources
 
 /**
@@ -18,11 +19,17 @@ import graft.sources.Sources
  * Where the reference materializes a preprocessed IPC file and fans
  * per-pair processes over it, here every stage extends ONE lazy
  * Catalyst plan: preprocessing is projections/filters Catalyst pushes
- * into the scan, and the association engine's melt/groupBy is the
- * only shuffle until the (pair-count-sized) postprocessing. The two
+ * into the scan, and the association engine's fit (the binary
+ * models' block shuffle, the linear co-moment aggregate) is the only
+ * shuffle until the (pair-count-sized) postprocessing. The two
  * exceptions need a total row order made explicit (`orderCol`):
  * forward/backward fill and RINT rank ties — a distributed engine has
  * no "file row order" (preprocessing.py:31-33 relies on it).
+ *
+ * Every job a run triggers carries its stage as the job description:
+ * `graft/read`, `graft/preprocess`, `graft/route`, `graft/fit`,
+ * `graft/postprocess` or `graft/write`. The plan is lazy, so the fit's
+ * own tasks run in the job that writes (or collects) the result.
  */
 final case class GraftConfig(
     input: String,                        // parquet/csv/tsv/txt path
@@ -116,11 +123,41 @@ object Pipeline {
        |  Covariates:  ${fmt(covariates)}""".stripMargin
   }
 
+  /** Run `body` with the job description `graft/<name>`, so every job
+    * it triggers carries the pipeline stage; the caller's description
+    * comes back afterwards. Job groups are left alone: callers may
+    * attribute work by group id. */
+  private def stage[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft/$name")
+    try body finally sc.setJobDescription(outer)
+  }
+
   def run(spark: SparkSession, cfg: GraftConfig): DataFrame =
-    run(Sources.read(spark, cfg.input, cfg.nullValues), cfg)
+    run(stage(spark, "read")(Sources.read(spark, cfg.input, cfg.nullValues)), cfg)
 
   /** Run on an already-loaded frame (testing / composition). */
   def run(raw: DataFrame, cfg: GraftConfig): DataFrame = {
+    val spark = raw.sparkSession
+    val (df, assocCfg) = stage(spark, "preprocess")(preprocess(raw, cfg))
+    val results =
+      if (cfg.model == "linear") stage(spark, "fit")(Association.assoc(df, assocCfg))
+      else {
+        // --distributed forces the Gram IRLS paths (one aggregation
+        // scan per Newton step instead of one task per pair) — same
+        // melt, same viability gates, same output schema, spec-pinned
+        // equal to the in-task fitters; otherwise the route gate picks
+        val gram = cfg.distributed ||
+          stage(spark, "route")(Association.routesToGram(df, assocCfg))
+        stage(spark, "fit")(Association.binaryWide(df, assocCfg, gram))
+      }
+    stage(spark, "postprocess")(postprocess(raw, results, cfg))
+  }
+
+  /** Column selection through the dependent transforms: the frame and
+    * the association config the fit runs on. */
+  private def preprocess(raw: DataFrame, cfg: GraftConfig): (DataFrame, Association.Config) = {
     val predictors = resolve(raw, cfg.predictors)
     val dependents = resolve(raw, cfg.dependents)
     var covariates = resolve(raw, cfg.covariates)
@@ -132,7 +169,7 @@ object Pipeline {
     // included columns when filtering (preprocessing.py:47-49).
     val used = (predictors ++ dependents ++ covariates ++
       (if (cfg.orderCol.nonEmpty) Seq(cfg.orderCol) else Nil)).distinct
-    var df = raw.select(used.map(col): _*)
+    var df = raw.select(used.map(column): _*)
 
     // sex-specific filter (preprocessing.py:43-62)
     if (cfg.maleOnly || cfg.femaleOnly) {
@@ -149,10 +186,7 @@ object Pipeline {
     val usesOrder = cfg.rint ||
       Seq("forward", "backward").contains(cfg.missingCovariateValues)
     if (usesOrder && cfg.orderCol.nonEmpty) {
-      val r = df.agg(
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"),
-        org.apache.spark.sql.functions.countDistinct(col(cfg.orderCol)).as("nd")).head()
+      val r = df.agg(count(lit(1)).as("n"), countDistinct(column(cfg.orderCol)).as("nd")).head()
       require(r.getAs[Long]("n") == r.getAs[Long]("nd"),
         s"--order-col '${cfg.orderCol}' must be unique and non-null: " +
           s"${r.getAs[Long]("n")} rows but ${r.getAs[Long]("nd")} distinct non-null values.")
@@ -161,10 +195,8 @@ object Pipeline {
     // missing covariates (preprocessing.py:7-40)
     if (covariates.nonEmpty) cfg.missingCovariateValues match {
       case "fail" =>
-        val aggCols = org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("__rows") +:
-          covariates.map(c =>
-            org.apache.spark.sql.functions.sum(col(c).isNull.cast("long")).as(c))
+        val aggCols = count(lit(1)).as("__rows") +:
+          covariates.map(c => sum(column(c).isNull.cast("long")).as(c))
         val nulls = df.agg(aggCols.head, aggCols.tail: _*).head()
         val rows = nulls.getAs[Long]("__rows")
         covariates.foreach { c =>
@@ -173,7 +205,7 @@ object Pipeline {
           require(n < rows || rows == 0, s"All values are missing in covariate column '$c'.")
           require(n == 0, s"Missing values found in covariate column '$c': $n missing values.")
         }
-      case "drop" => df = df.na.drop(covariates)
+      case "drop" => df = df.na.drop(covariates.map(Preprocess.quoted))
       case dir @ ("forward" | "backward") =>
         df = Preprocess.fillOrdered(df, covariates, dir == "forward", cfg.orderCol)
       case s => df = Preprocess.fillNulls(df, covariates, s)
@@ -200,28 +232,19 @@ object Pipeline {
       // few dependents); ties break on orderCol, nulls stay null
       df = dependents.foldLeft(df) { (d, dep) =>
         val r = Preprocess.rint(d, dep, cfg.orderCol)
-          .select(col(cfg.orderCol), col("rint").as(s"__rint_$dep"))
+          .select(column(cfg.orderCol), col("rint").as(s"__rint_$dep"))
         d.join(r, Seq(cfg.orderCol), "left")
-          .withColumn(dep, col(s"__rint_$dep"))
+          .withColumn(dep, column(s"__rint_$dep"))
           .drop(s"__rint_$dep")
       }
     }
 
-    // associate
-    val assocCfg = Association.Config(predictors, dependents, covariates,
-      model = cfg.model, minCaseCount = cfg.minCaseCount)
-    val results =
-      if (cfg.distributed && cfg.model != "linear") {
-        // same melt, same viability gates, same output schema — only
-        // the fit topology changes (one aggregation scan per Newton
-        // step instead of one task per pair); spec-pinned equal to
-        // the in-task fitters
-        val melted = Association.melt(df, assocCfg)
-        if (cfg.model == "firth") Association.firthGram(melted, assocCfg)
-        else Association.logisticGram(melted, assocCfg)
-      } else Association.assoc(df, assocCfg)
+    (df, Association.Config(predictors, dependents, covariates,
+      model = cfg.model, minCaseCount = cfg.minCaseCount))
+  }
 
-    // postprocess: Bonferroni, PheCode/custom annotate, sort, write
+  /** Bonferroni, PheCode/custom annotate, sort, write. */
+  private def postprocess(raw: DataFrame, results: DataFrame, cfg: GraftConfig): DataFrame = {
     var out = Postprocess.bonferroni(results)
     val defs: Option[DataFrame] = cfg.annotateDefs.orElse {
       if (cfg.phewas || cfg.flipwas) {
@@ -241,8 +264,8 @@ object Pipeline {
       // reference output naming: {prefix}_polars_mas_results.{ext}
       // (postprocessing.py:32-40); Spark writes it as a directory
       val path = s"${cfg.output}_polars_mas_results.${cfg.outputType}"
-      Postprocess.sortAndWrite(out, path, cfg.outputType, "pval",
-        tieBreak = Seq("predictor", "dependent"))
+      stage(raw.sparkSession, "write")(Postprocess.sortAndWrite(out, path, cfg.outputType,
+        "pval", tieBreak = Seq("predictor", "dependent")))
     } else out.orderBy(col("pval"), col("predictor"), col("dependent"))
   }
 }

@@ -1,10 +1,14 @@
 package graft.operators
 
+import scala.collection.mutable
 import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import graft.models.Models
+import graft.operators.Preprocess.column
 
 /**
  * The MAS association engine — the Spark-native re-expression of the
@@ -17,31 +21,35 @@ import graft.models.Models
  * schema (analysis.py:228-260).
  *
  * Spark-first design, not a port:
- *  - The reference fans (predictor × dependent) tasks across local
- *    processes over a memory-mapped IPC file. Here the wide frame is
- *    melted (two `explode`s) into (predictor, dependent, x, y, covs)
- *    rows and grouped by pair — thousands of pairs spread across
- *    executors, data motion is one shuffle of the melted rows.
- *  - The LINEAR path never materializes a pair's rows: a single-pass
- *    CENTERED co-moment aggregation (Welford/Chan merge — numerically
- *    stable at any partition count, map-side combined) reduces each
- *    pair to O((k+2)²) doubles, and a tiny per-group solve turns
- *    sufficient stats into the fit. At 100 TB the shuffle carries
- *    kilobytes per pair, not rows. Constant-covariate detection also
- *    happens on the co-moments (zero centered variance).
- *  - Group keys are dictionary-encoded to ONE long (indices come free
- *    from the melt's literal structs) so no strings travel through the
- *    shuffle or the per-row typed decode on the fit side.
  *  - The LOGISTIC/FIRTH paths are iteratively reweighted and need the
- *    pair's rows: `mapGroups` fits one pair per task (cohort ×
- *    (k+2) doubles of task memory). For cohorts too large for one
- *    task, the documented escape hatch is the distributed IRLS — one
- *    Gram pass per iteration using the same aggregation as the linear
- *    path.
- *  - Pairs that lose every row to the null-drop vanish from the
- *    aggregation, so the full predictor × dependent grid is restored
- *    with a left join and "No data after dropping nulls." rows
- *    (analysis.py:113-121).
+ *    pair's rows. Every pair shares the predictor and the covariates
+ *    and differs only in y and its null mask, so the wide frame is
+ *    fitted in column blocks ([[assoc]]): each input partition packs
+ *    its rows into one column chunk per block of dependents (of
+ *    predictors, for flipwas-shaped grids), one shuffle keyed by block
+ *    brings a block's chunks together in input order, and the block's
+ *    task fits each of its pairs over the rows where x, y and every
+ *    covariate are non-null. The shuffle carries the predictors and
+ *    covariates once per block and each dependent once, not once per
+ *    pair.
+ *  - The LINEAR path never materializes a pair's rows: the wide frame
+ *    is melted (two `explode`s) into (predictor, dependent, x, y,
+ *    covs) rows, and a single-pass CENTERED co-moment aggregation
+ *    (Welford/Chan merge — numerically stable at any partition count,
+ *    map-side combined) reduces each pair to O((k+2)²) doubles; a tiny
+ *    per-group solve turns sufficient stats into the fit. At 100 TB
+ *    the shuffle carries kilobytes per pair, not rows. Constant-
+ *    covariate detection also happens on the co-moments (zero
+ *    centered variance).
+ *  - Melted group keys are dictionary-encoded to ONE long (indices
+ *    come free from the melt's literal structs) so no strings travel
+ *    through the shuffle or the per-row typed decode on the fit side.
+ *  - For cohorts too large for one task, the binary models route to
+ *    the distributed IRLS — one Gram pass per iteration over the
+ *    melted rows, using the same aggregation as the linear path.
+ *  - Pairs that lose every row to the null-drop produce no fit, so the
+ *    full predictor × dependent grid is restored with a left join and
+ *    "No data after dropping nulls." rows (analysis.py:113-121).
  */
 object Association {
 
@@ -105,14 +113,14 @@ object Association {
     * boundary. */
   def melt(df: DataFrame, cfg: Config): DataFrame = {
     val predArr = array(cfg.predictors.zipWithIndex.map { case (p, pi) =>
-      struct(lit(p).as("predictor"), lit(pi).as("pidx"), col(p).cast("double").as("x"))
+      struct(lit(p).as("predictor"), lit(pi).as("pidx"), column(p).cast("double").as("x"))
     }: _*)
     val depArr = array(cfg.dependents.zipWithIndex.map { case (d, di) =>
-      struct(lit(d).as("dependent"), lit(di).as("didx"), col(d).cast("double").as("y"))
+      struct(lit(d).as("dependent"), lit(di).as("didx"), column(d).cast("double").as("y"))
     }: _*)
     val covArr =
       if (cfg.covariates.isEmpty) lit(Array.empty[Double])
-      else array(cfg.covariates.map(c => col(c).cast("double")): _*)
+      else array(cfg.covariates.map(c => column(c).cast("double")): _*)
     val covsComplete =
       if (cfg.covariates.isEmpty) lit(true)
       else forall(col("covs"), c => c.isNotNull)
@@ -165,11 +173,12 @@ object Association {
       case _ => rescanHitsSource(df)
     }
 
-  /** Run the configured model over the melted frame. */
-  def assoc(df: DataFrame, cfg: Config): DataFrame = {
-    val melted = melt(df, cfg)
-    if (cfg.model == "linear") linear(melted, cfg) else binary(melted, cfg)
-  }
+  /** Run the configured model over the wide frame: linear through the
+    * melt's co-moment aggregate, firth/logistic through the gram
+    * fitters when [[routesToGram]] says so, else in column blocks. */
+  def assoc(df: DataFrame, cfg: Config): DataFrame =
+    if (cfg.model == "linear") linear(melt(df, cfg), cfg)
+    else binaryWide(df, cfg, routesToGram(df, cfg))
 
   /**
    * Dictionary-encode the (predictor, dependent) key to ONE Long and
@@ -351,38 +360,191 @@ object Association {
 
   // ------------------------------------------------------ logistic/firth
 
-  /** Iterative fits: one pair per task via mapGroups over the
-    * long-keyed packed rows (see `keyed` — no string keys or boxed
-    * values through the shuffle or the executor-side decode).
+  /** Rows the melt would emit, without the explode: Σ over input rows
+    * of [every covariate non-null] × #non-null predictors × #non-null
+    * dependents, nulls counted after the melt's double cast (a NaN is a
+    * value, as in the melt's `isNotNull` filter). ONE narrow aggregate
+    * over the wide frame; equal to `melt(df, cfg).count()`. */
+  private[operators] def meltRowCount(df: DataFrame, cfg: Config): Long = {
+    if (cfg.predictors.isEmpty || cfg.dependents.isEmpty) return 0L
+    def nonNull(names: Seq[String]): Column =
+      size(array_compact(array(names.map(n => column(n).cast("double")): _*))).cast("long")
+    val covsComplete =
+      if (cfg.covariates.isEmpty) lit(true)
+      else nonNull(cfg.covariates) === cfg.covariates.size
+    df.agg(coalesce(
+        sum(when(covsComplete, nonNull(cfg.predictors) * nonNull(cfg.dependents))), lit(0L)))
+      .head().getLong(0)
+  }
+
+  /** The gram route's gate: the average pair cohort (`rows` melted rows
+    * over the pair grid) exceeds `spark.graft.irls.groupRowsMax`
+    * (default 20,000; ≤ 0 disables). */
+  private def overGroupRowsMax(spark: SparkSession, rows: => Long, cfg: Config): Boolean = {
+    val groupRowsMax = spark.conf.get("spark.graft.irls.groupRowsMax", "20000").toLong
+    val gridSize = math.max(1L, cfg.predictors.size.toLong * cfg.dependents.size)
+    groupRowsMax > 0 && rows / gridSize > groupRowsMax
+  }
+
+  /** Should [[assoc]] fit this wide frame's binary pairs with the gram
+    * fitters? The same gate as [[binary]]'s, priced by [[meltRowCount]]
+    * instead of a count of the melted frame, so it fires on exactly the
+    * same inputs. */
+  def routesToGram(df: DataFrame, cfg: Config): Boolean =
+    overGroupRowsMax(df.sparkSession, meltRowCount(df, cfg), cfg)
+
+  /** Firth/logistic over the wide frame: with `gram`, melt and run
+    * [[firthGram]] / [[logisticGram]]; otherwise fit in column blocks,
+    * one block per core of the session's default parallelism. */
+  def binaryWide(df: DataFrame, cfg: Config, gram: Boolean): DataFrame =
+    if (gram) {
+      val melted = melt(df, cfg)
+      if (cfg.model == "firth") firthGram(melted, cfg) else logisticGram(melted, cfg)
+    } else binaryBlocks(df, cfg, df.sparkSession.sparkContext.defaultParallelism)
+
+  /** One input partition's slice of the columns one block needs,
+    * column-major, with a null bitmap per column (bit i set = row i
+    * null). A NaN stays a value. */
+  private final case class ColumnChunk(
+      part: Int, n: Int, values: Array[Array[Double]], nulls: Array[java.util.BitSet])
+
+  /** Sends block b's chunks to reduce partition b. */
+  private final class BlockPartitioner(blocks: Int) extends Partitioner {
+    def numPartitions: Int = blocks
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  /** [[binaryBlocks]]' fits before grid completion: one result per pair
+    * with at least one complete row. The longer axis of the grid
+    * (dependents, or predictors for flipwas shapes) is dealt
+    * round-robin into `blocks` blocks. Each input partition packs its
+    * rows into one [[ColumnChunk]] per block — the block's own
+    * predictors or dependents plus the shared axis and the covariates —
+    * so the one shuffle carries n·(P+k)·B + n·D doubles (dependent
+    * blocks), not a row per (sample, pair). A block concatenates its
+    * chunks in map-partition order, so every pair sees its rows in
+    * input order whatever the block count. */
+  private[operators] def blockFits(df: DataFrame, cfg: Config, blocks: Int): RDD[BinResult] = {
+    val predictors = cfg.predictors.toArray
+    val dependents = cfg.dependents.toArray
+    val covNames = cfg.covariates
+    val (nP, k, nD) = (predictors.length, covNames.size, dependents.length)
+    val depAxis = nD >= nP
+    val nBlocks = math.max(1, math.min(blocks, if (depAxis) nD else nP))
+    def dealt(len: Int, b: Int): Array[Int] = (b until len by nBlocks).toArray
+    val blockPreds = Array.tabulate(nBlocks)(b =>
+      if (depAxis) Array.range(0, nP) else dealt(nP, b))
+    val blockDeps = Array.tabulate(nBlocks)(b =>
+      if (depAxis) dealt(nD, b) else Array.range(0, nD))
+    // a block's columns in the projection [predictors, covariates, dependents]
+    val blockCols = Array.tabulate(nBlocks)(b =>
+      blockPreds(b) ++ Array.range(nP, nP + k) ++ blockDeps(b).map(nP + k + _))
+    val nCols = nP + k + nD
+    val minCase = cfg.minCaseCount
+    val firth = cfg.model == "firth"
+    val maxIter = cfg.maxIter
+    val tol = cfg.tol
+    val input = df.select((cfg.predictors ++ covNames ++ cfg.dependents)
+      .map(n => column(n).cast("double")): _*).queryExecution.toRdd
+    val chunks = input.mapPartitionsWithIndex { (part, it) =>
+      val values = Array.fill(nCols)(new mutable.ArrayBuilder.ofDouble)
+      val nulls = Array.fill(nCols)(new java.util.BitSet)
+      var n = 0
+      it.foreach { r =>
+        var j = 0
+        while (j < nCols) {
+          if (r.isNullAt(j)) { nulls(j).set(n); values(j) += 0.0 }
+          else values(j) += r.getDouble(j)
+          j += 1
+        }
+        n += 1
+      }
+      if (n == 0) Iterator.empty
+      else {
+        val v = values.map(_.result())
+        Iterator.tabulate(nBlocks)(b =>
+          (b, ColumnChunk(part, n, blockCols(b).map(v), blockCols(b).map(nulls))))
+      }
+    }
+    chunks.partitionBy(new BlockPartitioner(nBlocks)).mapPartitions { it =>
+      val keyed = it.toArray
+      if (keyed.isEmpty) Iterator.empty
+      else {
+        val b = keyed.head._1
+        val parts = keyed.map(_._2).sortBy(_.part)
+        val n = parts.map(_.n).sum
+        val nc = blockCols(b).length
+        val values = Array.fill(nc)(new Array[Double](n))
+        // valid(c): bit i set = row i of column c non-null
+        val valid = Array.fill(nc)(new java.util.BitSet(n))
+        var off = 0
+        parts.foreach { p =>
+          for (c <- 0 until nc) {
+            System.arraycopy(p.values(c), 0, values(c), off, p.n)
+            valid(c).set(off, off + p.n)
+            p.nulls(c).stream().forEach(i => valid(c).clear(off + i))
+          }
+          off += p.n
+        }
+        val bp = blockPreds(b)
+        val bd = blockDeps(b)
+        val covs = Array.tabulate(k)(c => values(bp.length + c))
+        val covOk = new java.util.BitSet(n)
+        covOk.set(0, n)
+        (0 until k).foreach(c => covOk.and(valid(bp.length + c)))
+        bp.indices.iterator.flatMap { pi =>
+          bd.indices.iterator.flatMap { di =>
+            val y = bp.length + k + di
+            val rows = covOk.clone().asInstanceOf[java.util.BitSet]
+            rows.and(valid(pi))
+            rows.and(valid(y))
+            if (rows.isEmpty) None
+            else Some(fitBinaryPair(predictors(bp(pi)), dependents(bd(di)), values(pi),
+              values(y), covs, rows.stream().toArray, covNames, minCase, firth, maxIter, tol))
+          }
+        }
+      }
+    }
+  }
+
+  /** [[blockFits]] with the full grid restored. `blocks` is the block
+    * count before clamping to the longer grid axis. */
+  private[operators] def binaryBlocks(df: DataFrame, cfg: Config, blocks: Int): DataFrame = {
+    val solved = df.sparkSession.createDataset(blockFits(df, cfg, blocks))(
+      Encoders.product[BinResult]).toDF()
+    completeGrid(solved, cfg, binaryDefaults(cfg))
+  }
+
+  /** Firth/logistic over a LONG-format frame (one row per sample and
+    * pair, as [[melt]] emits or a caller builds by hand): `groupByKey`
+    * on the long-keyed packed rows (see `keyed`), one pair per task
+    * call, through the same per-pair fitter as [[assoc]]'s blocks.
+    * Wide frames go through [[assoc]], which never melts them.
     *
     * AUTO-ROUTE: when the average pair cohort exceeds
     * `spark.graft.irls.groupRowsMax` (default 20,000; ≤ 0 disables),
-    * materializing each pair's rows inside one `mapGroups` task is
-    * the wrong plan — per-group cost is linear in rows and the whole
-    * group sits in one task's heap (measured 12×/decade at the MAS
-    * bench shape). Such frames route to the gram fitters
-    * ([[firthGram]] / [[logisticGram]]): the identical model as ONE
-    * map-side-combined aggregation scan per Newton iteration, no
-    * per-group row materialization, agreement with the in-task
-    * fitter spec-pinned to 1e-6 (SourcesAndGramSpec). The route costs
-    * one shuffle-free count() pre-scan of the melted frame. The one
-    * semantic narrowing on the routed path: per-pair CONSTANT
-    * covariates are not dropped from the design — those pairs report
-    * failed_reason (singular X'WX) instead of a reduced fit; run
-    * `Preprocess.dropConstant` first if that matters (the gram
-    * Scaladoc's long-standing contract). */
+    * materializing each pair's rows inside one task is the wrong plan
+    * — per-group cost is linear in rows and the whole group sits in
+    * one task's heap (measured 12×/decade at the MAS bench shape).
+    * Such frames route to the gram fitters ([[firthGram]] /
+    * [[logisticGram]]): the identical model as ONE map-side-combined
+    * aggregation scan per Newton iteration, agreement with the in-task
+    * fitter spec-pinned to 1e-6 (SourcesAndGramSpec). Here the route
+    * costs a count of the long frame; [[assoc]] prices the same gate
+    * with one narrow aggregate over the wide frame
+    * ([[meltRowCount]]). The one semantic narrowing on the routed
+    * path: per-pair CONSTANT covariates are not dropped from the
+    * design — those pairs report failed_reason (singular X'WX)
+    * instead of a reduced fit; run `Preprocess.dropConstant` first if
+    * that matters (the gram Scaladoc's long-standing contract). */
   def binary(melted: DataFrame, cfg: Config): DataFrame = {
     val spark = melted.sparkSession
     import spark.implicits._
-    val groupRowsMax = spark.conf
-      .get("spark.graft.irls.groupRowsMax", "20000").toLong
-    if (groupRowsMax > 0) {
-      val gridSize = math.max(1L, cfg.predictors.size.toLong * cfg.dependents.size)
-      if (melted.count() / gridSize > groupRowsMax)
-        return if (cfg.model == "firth") firthGram(melted, cfg)
-               else logisticGram(melted, cfg)
-    }
+    if (overGroupRowsMax(spark, melted.count(), cfg))
+      return if (cfg.model == "firth") firthGram(melted, cfg)
+             else logisticGram(melted, cfg)
     val covNames = cfg.covariates
+    val k = covNames.size
     val predictors = cfg.predictors.toArray
     val dependents = cfg.dependents.toArray
     val minCase = cfg.minCaseCount
@@ -393,25 +555,34 @@ object Association {
       .groupByKey(_._1)
       .mapValues(_._2)
       .mapGroups { (key: Long, it: Iterator[Array[Double]]) =>
-        fitBinaryGroup(predictors((key / dependents.length).toInt),
-          dependents((key % dependents.length).toInt), it, covNames, minCase, firth, maxIter, tol)
+        val rows = it.toArray
+        // packed [x, y, covs…] rows → column arrays
+        val cols = Array.tabulate(k + 2)(c => rows.map(_(c)))
+        fitBinaryPair(predictors((key / dependents.length).toInt),
+          dependents((key % dependents.length).toInt), cols(0), cols(1), cols.drop(2),
+          Array.range(0, rows.length), covNames, minCase, firth, maxIter, tol)
       }
       .toDF()
     completeGrid(solved, cfg, binaryDefaults(cfg))
   }
 
-  private def fitBinaryGroup(
-      pred: String, dep: String, it: Iterator[Array[Double]],
+  /** THE per-pair firth/logistic fitter: the pair's rows are `sel`
+    * (non-empty, ascending) of the column arrays `x`, `y` and
+    * `covs(c)`. Validation order, failed_reason text, the per-pair
+    * constant-covariate drop and the equation mirror
+    * analysis.py:168-206. */
+  private def fitBinaryPair(
+      pred: String, dep: String, x: Array[Double], y: Array[Double],
+      covs: Array[Array[Double]], sel: Array[Int],
       covNames: Seq[String], minCase: Int, firth: Boolean,
       maxIter: Int, tol: Double): BinResult = {
     def fail(reason: String): BinResult =
       BinResult(pred, dep, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
         Double.NaN, Double.NaN, -9L, -9L, -9L, converged = false, reason, "nan")
-    val rows = it.toArray
-    val n = rows.length
+    val n = sel.length
     var ySum = 0.0
     var i = 0
-    while (i < n) { ySum += rows(i)(1); i += 1 }
+    while (i < n) { ySum += y(sel(i)); i += 1 }
     val cases = math.round(ySum)
     val controls = n - cases
     // validation order mirrors analysis.py:168-193 exactly
@@ -419,8 +590,9 @@ object Association {
     if (controls < minCase) return fail(s"Insufficient control count ($controls controls).")
     if (cases == n) return fail("All observations are cases.")
     val keptCovs = covNames.indices.filter { c =>
-      val first = rows(0)(c + 2)
-      rows.exists(_(c + 2) != first)
+      val v = covs(c)
+      val first = v(sel(0))
+      sel.exists(r => v(r) != first)
     }
     val keptNames = keptCovs.map(covNames)
     val equation = s"$dep ~ $pred + ${keptNames.mkString(" + ")}"
@@ -428,21 +600,27 @@ object Association {
     // straight to the raw fitters (no DenseMatrix tabulate/copy)
     val kk = keptCovs.size + 2
     val xd = new Array[Double](n * kk)
-    val y = new Array[Double](n)
+    val yd = new Array[Double](n)
     i = 0
     while (i < n) {
-      val row = rows(i)
-      xd(i) = row(0)
-      var j = 0
-      while (j < keptCovs.size) { xd((j + 1) * n + i) = row(keptCovs(j) + 2); j += 1 }
+      val r = sel(i)
+      xd(i) = x(r)
       xd((kk - 1) * n + i) = 1.0
-      y(i) = row(1)
+      yd(i) = y(r)
       i += 1
+    }
+    var j = 0
+    while (j < keptCovs.size) {
+      val v = covs(keptCovs(j))
+      val base = (j + 1) * n
+      i = 0
+      while (i < n) { xd(base + i) = v(sel(i)); i += 1 }
+      j += 1
     }
     try {
       val r =
-        if (firth) Models.firthRaw(xd, n, kk, y, maxIter = maxIter, gtol = tol, xtol = tol)
-        else Models.logisticRaw(xd, n, kk, y, maxIter = maxIter, tol = tol)
+        if (firth) Models.firthRaw(xd, n, kk, yd, maxIter = maxIter, gtol = tol, xtol = tol)
+        else Models.logisticRaw(xd, n, kk, yd, maxIter = maxIter, tol = tol)
       BinResult(pred, dep, r.pval, r.beta, r.se, r.or, r.ciLow, r.ciHigh,
         cases, controls, n, r.converged, "nan", equation)
     } catch {

@@ -15,6 +15,15 @@ import graft.functions.Numerics
  */
 object Preprocess {
 
+  /** A column by its literal name. User-given names (PheCodes such as
+    * `008.5`) may contain dots, which `col` reads as a struct path;
+    * every MAS-path reference to a user-named column goes through
+    * here. */
+  def column(name: String): Column = col(quoted(name))
+
+  /** `name` back-quoted for APIs that parse a column string. */
+  def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
+
   // ------------------------------------------------- p01 column selection
 
   /** Reference column-spec parser (config.py:133-178): comma-separated
@@ -45,7 +54,7 @@ object Preprocess {
         Seq(colSpec)
       }
     }
-    df.select(out.map(col).toIndexedSeq: _*)
+    df.select(out.map(column).toIndexedSeq: _*)
   }
 
   // ----------------------------------------------------- p02 sex filter
@@ -53,8 +62,8 @@ object Preprocess {
   /** Sex-specific row filter (preprocessing.py:43-62): male = sex col
     * != femaleCode, female = sex col == femaleCode. A pushed filter. */
   def sexFilter(df: DataFrame, sexCol: String, femaleCode: Double, femaleOnly: Boolean): DataFrame =
-    if (femaleOnly) df.filter(col(sexCol) === femaleCode)
-    else df.filter(col(sexCol) =!= femaleCode)
+    if (femaleOnly) df.filter(column(sexCol) === femaleCode)
+    else df.filter(column(sexCol) =!= femaleCode)
 
   // ------------------------------------------------------- p03/p04 fills
 
@@ -63,19 +72,20 @@ object Preprocess {
     * cross-joined back (broadcast — one row), so the fill is a pure
     * projection afterwards. */
   def fillNulls(df: DataFrame, cols: Seq[String], strategy: String): DataFrame = strategy match {
-    case "zero" => df.na.fill(0.0, cols)
-    case "one" => df.na.fill(1.0, cols)
-    case "drop" => df.na.drop(cols)
+    case "zero" => df.na.fill(0.0, cols.map(quoted))
+    case "one" => df.na.fill(1.0, cols.map(quoted))
+    case "drop" => df.na.drop(cols.map(quoted))
     case s if s == "mean" || s == "min" || s == "max" =>
       val aggFn: String => Column = s match {
-        case "mean" => c => avg(col(c))
-        case "min" => c => min(col(c))
-        case "max" => c => max(col(c))
+        case "mean" => c => avg(column(c))
+        case "min" => c => min(column(c))
+        case "max" => c => max(column(c))
       }
       val stats = df.agg(aggFn(cols.head).as(s"__f_${cols.head}"),
         cols.tail.map(c => aggFn(c).as(s"__f_$c")): _*)
       val filled = df.crossJoin(broadcast(stats))
-      cols.foldLeft(filled)((d, c) => d.withColumn(c, coalesce(col(c), col(s"__f_$c"))))
+      cols.foldLeft(filled)((d, c) =>
+          d.withColumn(c, coalesce(column(c), column(s"__f_$c"))))
         .drop(cols.map(c => s"__f_$c"): _*)
     case other => throw new IllegalArgumentException(s"Unknown fill strategy: $other")
   }
@@ -113,8 +123,8 @@ object Preprocess {
     val spark = df.sparkSession
     val schema = df.schema
     val idxs = cols.map(schema.fieldIndex).toArray
-    val sorted = (if (forward) df.orderBy(col(orderCol).asc)
-      else df.orderBy(col(orderCol).desc)).rdd
+    val sorted = (if (forward) df.orderBy(column(orderCol).asc)
+      else df.orderBy(column(orderCol).desc)).rdd
     sorted.localCheckpoint() // two passes below; don't re-sort
     // pass 1: last non-null per (partition, column)
     val partLast = sorted.mapPartitionsWithIndex { (pi, it) =>
@@ -176,8 +186,8 @@ object Preprocess {
 
   /** Drop the constant columns found by `constantReport`'s predicate. */
   def dropConstant(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val counts = df.agg(countDistinct(col(cols.head)).as(cols.head),
-      cols.tail.map(c => countDistinct(col(c)).as(c)): _*).head()
+    val counts = df.agg(countDistinct(column(cols.head)).as(cols.head),
+      cols.tail.map(c => countDistinct(column(c)).as(c)): _*).head()
     val toDrop = cols.filter(c => counts.getAs[Long](c) <= 1L)
     df.drop(toDrop: _*)
   }
@@ -202,7 +212,7 @@ object Preprocess {
     * projection Catalyst folds into the scan. */
   def oneHot(df: DataFrame, cols: Seq[String]): DataFrame =
     cols.foldLeft(df) { (d, c) =>
-      val collected = d.select(c).filter(col(c).isNotNull)
+      val collected = d.select(column(c)).filter(column(c).isNotNull)
         .distinct().limit(MaxOneHotLevels + 1).collect()
       require(collected.length <= MaxOneHotLevels,
         s"categorical covariate '$c' has more than $MaxOneHotLevels " +
@@ -213,8 +223,8 @@ object Preprocess {
       if (levels.length <= 2) d
       else {
         val dummies = levels.drop(1).map(v =>
-          when(col(c) === v, 1).otherwise(0).as(s"${c}_$v"))
-        d.select((d.columns.filterNot(_ == c).map(col).toSeq ++ dummies): _*)
+          when(column(c) === v, 1).otherwise(0).as(s"${c}_$v"))
+        d.select((d.columns.filterNot(_ == c).map(column).toSeq ++ dummies): _*)
       }
     }
 
@@ -265,10 +275,10 @@ object Preprocess {
    */
   def rint(df: DataFrame, valueCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
-    val src = df.select(col(idCol).cast("long"), col(valueCol).cast("double"))
-      .where(col(valueCol).isNotNull)
+    val src = df.select(column(idCol).cast("long"), column(valueCol).cast("double"))
+      .where(column(valueCol).isNotNull)
     val n = src.count()
-    val ranked = src.orderBy(col(valueCol), col(idCol)).rdd.zipWithIndex()
+    val ranked = src.orderBy(column(valueCol), column(idCol)).rdd.zipWithIndex()
       .map { case (r, i) => Row(r.getLong(0), r.getDouble(1), i + 1L) }
     val schema = StructType(Seq(
       StructField(idCol, LongType), StructField(valueCol, DoubleType),
@@ -329,7 +339,7 @@ object Preprocess {
 
   /** Log transform of dependents (roadmap): natural log projection. */
   def logTransform(df: DataFrame, cols: Seq[String]): DataFrame =
-    cols.foldLeft(df)((d, c) => d.withColumn(c, log(col(c))))
+    cols.foldLeft(df)((d, c) => d.withColumn(c, log(column(c))))
 
   /**
    * Yeo–Johnson power transform at a FIXED λ — the variance-

@@ -261,4 +261,116 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         orderCol = "id", minCaseCount = 1))).getMessage
     assert(msg.contains("must be unique and non-null"))
   }
+
+  test("dotted column names (PheCodes) give the rows of the same cohort with the dots renamed") {
+    val sess = spark
+    import sess.implicits._
+    val rng = new scala.util.Random(23)
+    val rows = (0 until 300).map { i =>
+      val x = rng.nextGaussian()
+      val pc = if (i % 13 == 0) None else Some(rng.nextGaussian())
+      val d1 = if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(1.2 * x - 0.7)))) 1.0 else 0.0
+      val d2 = if (rng.nextDouble() < 0.35) 1.0 else 0.0
+      (x, pc, Seq("A", "B", "C")(i % 3), d1, d2)
+    }
+    val dotted = Seq("x", "pc.1", "grp.c", "008.5", "250.2")
+    val renamed = dotted.map(_.replace('.', '_'))
+    val back = renamed.zip(dotted).filter { case (r, d) => r != d }
+    // firth: categorical covariate one-hot encoded, incomplete rows
+    // dropped; logistic: numeric covariate mean-filled
+    def run(names: Seq[String], model: String): Seq[Seq[Any]] = {
+      val df = rows.toDF(names: _*)
+      val dir = java.nio.file.Files.createTempDirectory("graft_dotted").toString
+      val firth = model == "firth"
+      Pipeline.run(df, GraftConfig(input = "", predictors = names(0),
+        dependents = s"${names(3)},${names(4)}",
+        covariates = if (firth) s"${names(1)},${names(2)}" else names(1),
+        categoricalCovariates = if (firth) names(2) else "",
+        missingCovariateValues = if (firth) "drop" else "mean",
+        model = model, minCaseCount = 10, output = s"$dir/out", outputType = "parquet"))
+        .collect().toSeq.map(_.toSeq)
+    }
+    def unrename(v: Any): Any = v match {
+      case s: String => back.foldLeft(s) { case (acc, (r, d)) => acc.replace(r, d) }
+      case other => other
+    }
+    for (model <- Seq("firth", "logistic")) {
+      val got = run(dotted, model)
+      val want = run(renamed, model).map(_.map(unrename))
+      assert(got.size == 2 && got.map(_(1)).toSet == Set("008.5", "250.2"), model)
+      assert(got.map(_.map(String.valueOf)) == want.map(_.map(String.valueOf)), model)
+      val equation = got.head(got.head.size - 2).toString
+      assert(equation.contains("pc.1"), model)
+      if (model == "firth") assert(equation.contains("grp.c_B"), equation)
+    }
+  }
+
+  private def labelledRun(cfg: GraftConfig)(check: (Seq[(String, String)],
+      Seq[org.apache.spark.sql.execution.SparkPlan]) => Unit): Unit = {
+    val sc = spark.sparkContext
+    val jobs = java.util.Collections.synchronizedList(new java.util.ArrayList[(String, String)]())
+    val plans = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[org.apache.spark.sql.execution.SparkPlan]())
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.job.description"),
+          e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      Pipeline.run(spark, cfg)
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    import scala.jdk.CollectionConverters._
+    check(jobs.asScala.toSeq, plans.asScala.toSeq)
+  }
+
+  test("every job of Pipeline.run carries a graft stage label; the caller's group survives") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_labels").toString
+    cohortDf.write.parquet(s"$dir/cohort.parquet")
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller description", interruptOnCancel = false)
+    try {
+      labelledRun(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+        dependents = "d1,d2", covariates = "z,zconst,seg", categoricalCovariates = "seg",
+        model = "firth", minCaseCount = 10, output = s"$dir/out")) { (jobs, _) =>
+        assert(jobs.nonEmpty)
+        assert(jobs.forall(_._1.startsWith("graft/")), jobs)
+        assert(jobs.forall(_._2 == "caller-group"), jobs)
+        val labels = jobs.map(_._1).toSet
+        assert(Set("graft/preprocess", "graft/route", "graft/write").subsetOf(labels), labels)
+      }
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+      assert(sc.getLocalProperty("spark.job.description") == "caller description")
+    } finally sc.clearJobGroup()
+  }
+
+  test("an in-task firth study explodes nothing: no Generate in any executed plan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nogen").toString
+    cohortDf.write.parquet(s"$dir/cohort.parquet")
+    labelledRun(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+      dependents = "d1,d2", covariates = "z,zconst,seg", categoricalCovariates = "seg",
+      model = "firth", minCaseCount = 10, output = s"$dir/out")) { (_, plans) =>
+      assert(plans.nonEmpty)
+      val generate = plans.filter(_.toString.contains("Generate "))
+      assert(generate.isEmpty, generate.mkString("\n"))
+    }
+    // the detector sees the melt where one runs: the linear path
+    labelledRun(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+      dependents = "z", model = "linear", quantitative = true, minCaseCount = 10,
+      output = s"$dir/out_linear")) { (_, plans) =>
+      assert(plans.exists(_.toString.contains("Generate ")))
+    }
+  }
 }

@@ -1,0 +1,203 @@
+package graft.operators
+
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
+
+/** The wide-frame binary path (`Association.assoc` for firth/logistic):
+  * column blocks against the long-format entry, block and partition
+  * invariance, and the route aggregate against the melt count. */
+class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
+  private var spark: SparkSession = _
+
+  override def beforeAll(): Unit = {
+    spark = GraftSession.builder("2").appName("block-fit-spec").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+  }
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private val parityDeps =
+    Seq("d_common", "d_sparse", "d_allcase", "d_null", "d_sex", "d_nan", "d_str")
+
+  /** Every degenerate shape the per-pair fitter distinguishes: a sparse
+    * code, an all-cases code, an all-null dependent, a sex-specific
+    * code (sex is constant within its pair), nulls in a predictor and
+    * a covariate, a NaN dependent value and a string-typed numeric
+    * dependent. */
+  private def parityCohort: DataFrame = {
+    val rng = new scala.util.Random(17)
+    val rows = (0 until 300).map { i =>
+      val x = rng.nextGaussian()
+      val x2 = rng.nextGaussian()
+      val z1 = rng.nextGaussian()
+      val sex = i % 2
+      val p = 1.0 / (1.0 + math.exp(-(1.1 * x - 0.4)))
+      def bin(q: Double): Double = if (rng.nextDouble() < q) 1.0 else 0.0
+      val common = bin(p)
+      val strDep = bin(0.4)
+      Row(i,
+        if (i % 17 == 5) null else x,
+        x2,
+        if (i % 23 == 7) null else z1,
+        sex.toDouble,
+        common,
+        if (i % 100 == 3) 1.0 else 0.0,
+        1.0,
+        null,
+        if (sex == 0) null else bin(0.3),
+        if (i == 11) Double.NaN else bin(0.5),
+        if (i % 29 == 2) null else if (strDep == 1.0) "1.0" else "0")
+    }
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("x", DoubleType),
+      StructField("x2", DoubleType), StructField("z1", DoubleType),
+      StructField("sex", DoubleType)) ++
+      parityDeps.map(d => StructField(d, if (d == "d_str") StringType else DoubleType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  private def byPair(df: DataFrame): Map[(String, String), Row] =
+    df.collect().map(r => (r.getAs[String]("predictor"), r.getAs[String]("dependent")) -> r).toMap
+
+  /** One string per row, sorted: doubles as their bits, or rounded to
+    * `dp` places when finite. */
+  private def canon(df: DataFrame, dp: Option[Int] = None): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case d: Double => dp.filter(_ => !d.isNaN && !d.isInfinite) match {
+        case Some(n) => BigDecimal(d).setScale(n, BigDecimal.RoundingMode.HALF_UP).toString
+        case None => java.lang.Double.doubleToLongBits(d).toString
+      }
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted.toSeq
+
+  test("wide column blocks equal binary(melt(wide)) on every degenerate pair shape") {
+    val df = parityCohort
+    for (model <- Seq("firth", "logistic"); minCase <- Seq(0, 5)) {
+      val cfg = Association.Config(Seq("x", "x2"), parityDeps, Seq("z1", "sex"),
+        model = model, minCaseCount = minCase)
+      assert(!Association.routesToGram(df, cfg))
+      val wide = byPair(Association.assoc(df, cfg))
+      val long = byPair(Association.binary(Association.melt(df, cfg), cfg))
+      assert(wide.keySet == long.keySet && wide.size == 2 * parityDeps.size)
+      for ((pair, w) <- wide) {
+        val l = long(pair)
+        val tag = s"$model min=$minCase $pair"
+        for (c <- Seq("cases", "controls", "total_n"))
+          assert(w.getAs[Long](c) == l.getAs[Long](c), s"$tag $c")
+        for (c <- Seq("converged", "failed_reason", "equation"))
+          assert(w.getAs[Any](c) == l.getAs[Any](c), s"$tag $c")
+        for (c <- Seq("pval", "beta", "se", "OR", "ci_low", "ci_high")) {
+          val (a, b) = (w.getAs[Double](c), l.getAs[Double](c))
+          assert((a.isNaN && b.isNaN) || a == b || math.abs(a - b) <= 1e-9, s"$tag $c: $a vs $b")
+        }
+      }
+      // the shapes really are distinct: each gate and the reduced design show up
+      val reasons = wide.values.map(_.getAs[String]("failed_reason")).toSet
+      assert(reasons.contains("No data after dropping nulls."), s"$model $minCase")
+      if (minCase == 0) assert(reasons.contains("All observations are cases."))
+      else {
+        assert(reasons.exists(_.startsWith("Insufficient case count")))
+        assert(reasons.exists(_.startsWith("Insufficient control count")))
+      }
+      val sexEq = wide(("x", "d_sex")).getAs[String]("equation")
+      assert(sexEq == "d_sex ~ x + z1", sexEq)
+      assert(wide(("x", "d_common")).getAs[Long]("total_n") < 300)
+    }
+  }
+
+  test("block count and input partitioning do not change the rows") {
+    val rng = new scala.util.Random(3)
+    val nDeps = 13
+    val deps = (0 until nDeps).map(j => s"d$j")
+    val rows = (0 until 240).map { i =>
+      val x = rng.nextGaussian()
+      val z = rng.nextGaussian()
+      Row((Seq[Any](i, if (i % 19 == 4) null else x, z) ++ deps.indices.map { j =>
+        if ((i + j) % 31 == 0) null
+        else if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.3 * j * x - 0.8)))) 1.0 else 0.0
+      }): _*)
+    }
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("x", DoubleType),
+      StructField("z", DoubleType)) ++ deps.map(StructField(_, DoubleType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(3)
+      .localCheckpoint()
+    val cfg = Association.Config(Seq("x"), deps, Seq("z"), minCaseCount = 5)
+    val one = canon(Association.binaryBlocks(df, cfg, 1))
+    assert(one.size == nDeps)
+    assert(canon(Association.binaryBlocks(df, cfg, 7)) == one)
+    assert(canon(Association.binaryBlocks(df, cfg, nDeps)) == one)
+    // partitioning reorders rows, so sums differ in the last bits only
+    val p1 = canon(Association.binaryBlocks(df.repartition(1), cfg, 4), Some(4))
+    assert(canon(Association.binaryBlocks(df.repartition(5), cfg, 4), Some(4)) == p1)
+    assert(canon(Association.binaryBlocks(df, cfg, 4), Some(4)) == p1)
+    // flipwas shape: the predictors are the blocked axis
+    val flip = Association.Config(Seq("x", "z", "d5"), Seq("d1", "d2"),
+      model = "logistic", minCaseCount = 5)
+    val f1 = canon(Association.binaryBlocks(df, flip, 1))
+    assert(f1.size == 6)
+    for (b <- Seq(2, 3)) assert(canon(Association.binaryBlocks(df, flip, b)) == f1)
+  }
+
+  test("the block fit runs exactly one shuffle") {
+    val df = parityCohort
+    val cfg = Association.Config(Seq("x"), parityDeps, Seq("z1"), minCaseCount = 5)
+    def shuffles(rdd: RDD[_]): Int = rdd.dependencies.map {
+      case s: ShuffleDependency[_, _, _] => 1 + shuffles(s.rdd)
+      case d => shuffles(d.rdd)
+    }.sum
+    assert(shuffles(Association.blockFits(df, cfg, 3)) == 1)
+  }
+
+  test("route aggregate equals the melt count; assoc switches to the gram fitters on it") {
+    val df = parityCohort
+    for (covs <- Seq(Nil, Seq("z1", "sex"))) {
+      val cfg = Association.Config(Seq("x", "x2"), parityDeps, covs)
+      assert(Association.meltRowCount(df, cfg) == Association.melt(df, cfg).count(), covs)
+    }
+    // wide twin of SourcesAndGramSpec's auto-route test, through assoc
+    val rng = new scala.util.Random(41)
+    val wideRows = (0 until 500).map { _ =>
+      val x = rng.nextGaussian()
+      val z = rng.nextGaussian()
+      val a = if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.7 * x - 0.3)))) 1.0 else 0.0
+      val b = if (rng.nextDouble() < 0.35) 1.0 else 0.0
+      (x, z, a, b)
+    }
+    val sess = spark
+    import sess.implicits._
+    val wide = wideRows.toDF("x", "z", "dep_a", "dep_b")
+    def assocAt(gate: String, frame: DataFrame, cfg: Association.Config): Map[String, Row] = {
+      spark.conf.set("spark.graft.irls.groupRowsMax", gate)
+      try Association.assoc(frame, cfg).collect().map(r => r.getAs[String]("dependent") -> r).toMap
+      finally spark.conf.unset("spark.graft.irls.groupRowsMax")
+    }
+    for (model <- Seq("firth", "logistic")) {
+      val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
+        model = model, minCaseCount = 5,
+        maxIter = if (model == "logistic") 50 else 25,
+        tol = if (model == "logistic") 1e-9 else 1e-5)
+      val inTask = assocAt("-1", wide, cfg)
+      val routed = assocAt("100", wide, cfg) // avg group = 500 > 100
+      for (d <- Seq("dep_a", "dep_b"); c <- Seq("beta", "se", "pval", "OR"))
+        assert(math.abs(routed(d).getAs[Double](c) - inTask(d).getAs[Double](c)) < 1e-6,
+          s"$model $d $c")
+      for (d <- Seq("dep_a", "dep_b")) {
+        assert(routed(d).getAs[Long]("cases") == inTask(d).getAs[Long]("cases"), d)
+        assert(routed(d).getAs[Boolean]("converged"), s"$model $d")
+      }
+    }
+    // engagement: a constant covariate is dropped per pair in blocks,
+    // but makes the gram fitter's X'WX singular
+    val wideC = wideRows.map { case (x, _, a, b) => (x, 3.0, a, b) }.toDF("x", "z", "dep_a", "dep_b")
+    val cfgC = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
+      model = "firth", minCaseCount = 5)
+    assert(assocAt("-1", wideC, cfgC).values.forall(_.getAs[Boolean]("converged")),
+      "blocks must fit the reduced design")
+    assert(assocAt("100", wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")),
+      "assoc did not engage the gram fitter (constant covariate fit anyway)")
+  }
+}
