@@ -45,8 +45,9 @@ import graft.operators.Preprocess.column
  *    come free from the melt's literal structs) so no strings travel
  *    through the shuffle or the per-row typed decode on the fit side.
  *  - For cohorts too large for one task, the binary models route to
- *    the distributed IRLS — one Gram pass per iteration over the
- *    melted rows, using the same aggregation as the linear path.
+ *    the gram IRLS ([[gramFit]]): one shuffle-free scan of the melted
+ *    rows per Newton step, per-pair moments summed in task buffers,
+ *    the small solves on the driver.
  *  - Pairs that lose every row to the null-drop produce no fit, so the
  *    full predictor × dependent grid is restored with a left join and
  *    "No data after dropping nulls." rows (analysis.py:113-121).
@@ -148,8 +149,6 @@ object Association {
    * is not a function of the data, so re-scans could fold group rows
    * in different orders between iterations; persisting freezes one
    * layout, exactly what the former unconditional persist did.
-   * `spark.graft.gram.persist` forces either way; default "auto"
-   * applies this leaf test.
    */
   private def rescanHitsSource(df: DataFrame): Boolean = {
     val plan = df.queryExecution.optimizedPlan
@@ -165,13 +164,6 @@ object Association {
       case _ => true
     }
   }
-
-  private def gramPersistOn(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.gram.persist", "auto") match {
-      case "true" => true
-      case "false" => false
-      case _ => rescanHitsSource(df)
-    }
 
   /** Run the configured model over the wide frame: linear through the
     * melt's co-moment aggregate, firth/logistic through the gram
@@ -527,16 +519,16 @@ object Association {
     * — per-group cost is linear in rows and the whole group sits in
     * one task's heap (measured 12×/decade at the MAS bench shape).
     * Such frames route to the gram fitters ([[firthGram]] /
-    * [[logisticGram]]): the identical model as ONE map-side-combined
-    * aggregation scan per Newton iteration, agreement with the in-task
-    * fitter spec-pinned to 1e-6 (SourcesAndGramSpec). Here the route
-    * costs a count of the long frame; [[assoc]] prices the same gate
-    * with one narrow aggregate over the wide frame
-    * ([[meltRowCount]]). The one semantic narrowing on the routed
-    * path: per-pair CONSTANT covariates are not dropped from the
-    * design — those pairs report failed_reason (singular X'WX)
-    * instead of a reduced fit; run `Preprocess.dropConstant` first if
-    * that matters (the gram Scaladoc's long-standing contract). */
+    * [[logisticGram]]): the identical model as one shuffle-free scan
+    * per Newton step, with per-pair moments summed in task buffers and
+    * the m×m solves on the driver; agreement with the in-task fitter is
+    * spec-pinned to 1e-6 (SourcesAndGramSpec). Here the route costs a
+    * count of the long frame; [[assoc]] prices the same gate with one
+    * narrow aggregate over the wide frame ([[meltRowCount]]). The one
+    * semantic narrowing on the routed path: per-pair CONSTANT
+    * covariates are not dropped from the design — those pairs fail as
+    * "Singular information matrix." instead of fitting a reduced
+    * design; run `Preprocess.dropConstant` first if that matters. */
   def binary(melted: DataFrame, cfg: Config): DataFrame = {
     val spark = melted.sparkSession
     import spark.implicits._
@@ -631,68 +623,81 @@ object Association {
     }
   }
 
-  // ----------------------------------------- distributed logistic IRLS
+  // ------------------------------------------ distributed IRLS (gram)
 
-  /** Per-row input for the IRLS moment aggregator: the packed value
-    * array [x, y, covs…] and the pair's current beta (broadcast-
-    * joined alongside it). */
-  private[operators] final case class IrlsRow(v: Array[Double], beta: Array[Double])
+  /** Doubles one task's scan buffer may hold (16 MiB). A scan deals its
+    * slots into slices of `GramBufferDoubles / width` slots and runs
+    * once per slice, so any grid fits. */
+  private val GramBufferDoubles = 1 << 21
 
-  /** Fused IRLS moment buffer: X'WX upper triangle, first-order
-    * score, and (Firth only) the fully-symmetric third-order tensor. */
-  private[operators] final case class IrlsMomState(
-      s: Array[Double], g: Array[Double], t: Array[Double])
+  private def budgetSlice(width: Int): Int = math.max(1, GramBufferDoubles / width)
 
-  /**
-   * ONE fused per-(pair, fit) moment aggregator for the distributed
-   * fitters: all m(m+1)/2 information sums, m score sums, and (for
-   * Firth) m(m+1)(m+2)/6 tensor sums accumulate into a single flat
-   * buffer per group instead of 100+ independent declarative `sum`
-   * columns — the CoMoment lesson applied to the iterative path (one
-   * stateful buffer with map-side combine profiled ~4× faster than
-   * the per-column aggregate plan at the MAS bench shape; with m=7
-   * the per-iteration scan carries 119 aggregate expressions
-   * otherwise). Per-row arithmetic reproduces the previous Column
-   * expressions product-for-product (same fold order for eta, same
-   * (w·xᵢ)·xⱼ and ((u·xᵢ)·xⱼ)·x_l associativity, same weight floor),
-   * so iterate sequences are unchanged up to partial-merge order —
-   * the same tolerance class as partition count, which the registry
-   * is verified invariant under.
-   */
-  private[operators] final class IrlsMoment(m: Int, wFloor: Double, tensor: Boolean)
-      extends Aggregator[IrlsRow, IrlsMomState, IrlsMomState] {
-    private val nS = m * (m + 1) / 2
-    private val nT = if (tensor) m * (m + 1) * (m + 2) / 6 else 0
-    def zero: IrlsMomState =
-      IrlsMomState(new Array[Double](nS), new Array[Double](m), new Array[Double](nT))
-    def reduce(st: IrlsMomState, row: IrlsRow): IrlsMomState = {
-      val v = row.v
-      val b = row.beta
-      val k = m - 2
-      // design features [x, covs…, 1] from the packed [x, y, covs…]
-      val x = new Array[Double](m)
-      x(0) = v(0)
+  /** Per-row accumulation of one gram scan into one slot of a slice
+    * buffer at `off`, from the design features `x` = [x, covs…, 1], the
+    * response `y` and the slot's beta `b`. Of a slot's `width` doubles
+    * the first `sums` add across tasks; the rest take the min. */
+  private abstract class GramKernel(val width: Int, val sums: Int) extends Serializable {
+    def add(x: Array[Double], y: Double, b: Array[Double], buf: Array[Double], off: Int): Unit
+
+    /** `n` slots at the merge identity: sums 0, minima +∞. */
+    def zero(n: Int): Array[Double] = {
+      val buf = new Array[Double](n * width)
+      if (sums < width) (0 until n).foreach(s =>
+        java.util.Arrays.fill(buf, s * width + sums, (s + 1) * width, Double.PositiveInfinity))
+      buf
+    }
+  }
+
+  /** The first pass, one slot per pair: [n, Σy, X'WX and score at β=0
+    * (where w = ¼ exactly), per-covariate min, per-covariate −max]. */
+  private final class FirstPassKernel(m: Int)
+      extends GramKernel(2 + m * (m + 1) / 2 + m + 2 * (m - 2), 2 + m * (m + 1) / 2 + m) {
+    private val k = m - 2
+    private val moments = new StepKernel(m, penalized = false)
+    private val beta0 = new Array[Double](m)
+    def add(x: Array[Double], y: Double, b: Array[Double], buf: Array[Double], off: Int): Unit = {
+      buf(off) += 1.0
+      buf(off + 1) += y
+      moments.add(x, y, beta0, buf, off + 2)
       var c = 0
-      while (c < k) { x(c + 1) = v(c + 2); c += 1 }
-      x(m - 1) = 1.0
+      while (c < k) {
+        val v = x(c + 1)
+        val lo = off + sums + c
+        if (v < buf(lo)) buf(lo) = v
+        if (-v < buf(lo + k)) buf(lo + k) = -v
+        c += 1
+      }
+    }
+  }
+
+  /** A Newton step's scan, one slot per active fit: X'WX and the score
+    * at `b`, plus (penalized) the fully-symmetric third-order tensor
+    * T_jab = Σ w(½−p)·xⱼx_a x_b. Weight floor 1e-12 (Firth, as
+    * `Models.etaPW`) or 1e-10 (logistic). */
+  private final class StepKernel(m: Int, penalized: Boolean) extends GramKernel(
+      m * (m + 1) / 2 + m + (if (penalized) m * (m + 1) * (m + 2) / 6 else 0),
+      m * (m + 1) / 2 + m + (if (penalized) m * (m + 1) * (m + 2) / 6 else 0)) {
+    private val nS = m * (m + 1) / 2
+    private val wFloor = if (penalized) 1e-12 else 1e-10
+    def add(x: Array[Double], y: Double, b: Array[Double], buf: Array[Double], off: Int): Unit = {
       var eta = 0.0
       var i = 0
       while (i < m) { eta += x(i) * b(i); i += 1 }
       val p = 1.0 / (1.0 + math.exp(-eta))
       val w = math.max(p * (1.0 - p), wFloor)
-      val r1 = v(1) - p
-      var idx = 0
+      val r1 = y - p
+      var idx = off
       i = 0
       while (i < m) {
         val wi = w * x(i)
         var j = i
-        while (j < m) { st.s(idx) += wi * x(j); idx += 1; j += 1 }
-        st.g(i) += x(i) * r1
+        while (j < m) { buf(idx) += wi * x(j); idx += 1; j += 1 }
+        buf(off + nS + i) += x(i) * r1
         i += 1
       }
-      if (tensor) {
+      if (penalized) {
         val u = w * (0.5 - p)
-        var ti = 0
+        var ti = off + nS + m
         i = 0
         while (i < m) {
           val ui = u * x(i)
@@ -700,1297 +705,339 @@ object Association {
           while (j < m) {
             val uij = ui * x(j)
             var l = j
-            while (l < m) { st.t(ti) += uij * x(l); ti += 1; l += 1 }
+            while (l < m) { buf(ti) += uij * x(l); ti += 1; l += 1 }
             j += 1
           }
           i += 1
         }
       }
-      st
     }
-    def merge(a: IrlsMomState, b: IrlsMomState): IrlsMomState = {
-      var i = 0
-      while (i < nS) { a.s(i) += b.s(i); i += 1 }
-      i = 0
-      while (i < m) { a.g(i) += b.g(i); i += 1 }
-      i = 0
-      while (i < nT) { a.t(i) += b.t(i); i += 1 }
-      a
-    }
-    def finish(st: IrlsMomState): IrlsMomState = st
-    def bufferEncoder: Encoder[IrlsMomState] = Encoders.product[IrlsMomState]
-    def outputEncoder: Encoder[IrlsMomState] = Encoders.product[IrlsMomState]
   }
 
-  /** First-pass buffer: β=0 moments (p=½ exactly, so w=¼ and the
-    * Firth tensor is identically zero) PLUS the viability facts —
-    * count, case sum, per-covariate min/max. One scan serves the
-    * viability gate AND Newton step 1. */
-  private[operators] final case class FirstPassState(
-      s: Array[Double], g: Array[Double], var n: Long, var ySum: Double,
-      cmin: Array[Double], cmax: Array[Double])
-
-  /** β=0 moment + viability aggregator (see FirstPassState). Per-row
-    * products keep IrlsMoment's associativity — (w·xᵢ)·xⱼ with
-    * w = ¼ exactly — so step 1 is bit-compatible with a beta-joined
-    * first iteration. */
-  private[operators] final class FirstMoment(m: Int)
-      extends Aggregator[Array[Double], FirstPassState, FirstPassState] {
+  /** The Firth final scan, one slot per non-failed fit: X'WX and the
+    * log-likelihood (p clamped to [1e-15, 1 − 1e-15]) at `b`. */
+  private final class FinalKernel(m: Int)
+      extends GramKernel(m * (m + 1) / 2 + 1, m * (m + 1) / 2 + 1) {
     private val nS = m * (m + 1) / 2
-    private val k = m - 2
-    def zero: FirstPassState = FirstPassState(
-      new Array[Double](nS), new Array[Double](m), 0L, 0.0,
-      Array.fill(k)(Double.PositiveInfinity), Array.fill(k)(Double.NegativeInfinity))
-    def reduce(st: FirstPassState, v: Array[Double]): FirstPassState = {
-      st.n += 1
-      st.ySum += v(1)
-      val x = new Array[Double](m)
-      x(0) = v(0)
-      var c = 0
-      while (c < k) {
-        val vc = v(c + 2)
-        x(c + 1) = vc
-        if (vc < st.cmin(c)) st.cmin(c) = vc
-        if (vc > st.cmax(c)) st.cmax(c) = vc
-        c += 1
-      }
-      x(m - 1) = 1.0
-      val r1 = v(1) - 0.5
-      var idx = 0
+    def add(x: Array[Double], y: Double, b: Array[Double], buf: Array[Double], off: Int): Unit = {
+      var eta = 0.0
       var i = 0
+      while (i < m) { eta += x(i) * b(i); i += 1 }
+      val p = 1.0 / (1.0 + math.exp(-eta))
+      val w = math.max(p * (1.0 - p), 1e-12)
+      val pc = math.max(math.min(p, 1.0 - 1e-15), 1e-15)
+      var idx = off
+      i = 0
       while (i < m) {
-        val wi = 0.25 * x(i)
+        val wi = w * x(i)
         var j = i
-        while (j < m) { st.s(idx) += wi * x(j); idx += 1; j += 1 }
-        st.g(i) += x(i) * r1
+        while (j < m) { buf(idx) += wi * x(j); idx += 1; j += 1 }
         i += 1
       }
-      st
-    }
-    def merge(a: FirstPassState, b: FirstPassState): FirstPassState = {
-      var i = 0
-      while (i < nS) { a.s(i) += b.s(i); i += 1 }
-      i = 0
-      while (i < m) { a.g(i) += b.g(i); i += 1 }
-      i = 0
-      while (i < k) {
-        if (b.cmin(i) < a.cmin(i)) a.cmin(i) = b.cmin(i)
-        if (b.cmax(i) > a.cmax(i)) a.cmax(i) = b.cmax(i)
-        i += 1
-      }
-      a.n += b.n
-      a.ySum += b.ySum
-      a
-    }
-    def finish(st: FirstPassState): FirstPassState = st
-    def bufferEncoder: Encoder[FirstPassState] = Encoders.product[FirstPassState]
-    def outputEncoder: Encoder[FirstPassState] = Encoders.product[FirstPassState]
-  }
-
-  /** Executor-side IRLS step result (beta stays a DataFrame column). */
-  private[operators] final case class IrlsStep(
-      beta: Seq[Double], delta: Double, info: Seq[Double], failed: String)
-
-  /** One Newton step from per-pair sufficient statistics — runs inside
-    * a UDF on the (pair-count-sized) stats frame, never on the driver. */
-  private def solveIrlsStep(
-      betaOld: Array[Double], s: Array[Double], g: Array[Double], m: Int): IrlsStep = {
-    def triOf(i: Int, j: Int): Int = i * m - i * (i - 1) / 2 + (j - i)
-    try {
-      val info = DenseMatrix.tabulate(m, m)((a, b) =>
-        s(triOf(math.min(a, b), math.max(a, b))))
-      val delta = info \ DenseVector(g)
-      val nb = betaOld.clone()
-      var i = 0
-      while (i < m) { nb(i) += delta(i); i += 1 }
-      IrlsStep(nb.toSeq, breeze.linalg.max(breeze.numerics.abs(delta)), s.toSeq, null)
-    } catch {
-      case e: Throwable =>
-        IrlsStep(betaOld.toSeq, 0.0, s.toSeq, failureReason(e))
+      buf(off + nS) += y * math.log(pc) + (1.0 - y) * math.log(1.0 - pc)
     }
   }
 
-  /**
-   * Distributed logistic IRLS — the path for pairs whose cohort is too
-   * large to materialize inside one `mapGroups` task (the default
-   * binary path). Nothing but sufficient statistics and scalar
-   * convergence checks ever leave the executors:
-   *
-   * each Newton iteration is ONE declarative aggregation pass over the
-   * melted frame: under the current per-pair beta (a pair-count-sized
-   * DataFrame, broadcast joined), every row contributes w·f_i·f_j and
-   * f_i·(y−p) partials; map-side combine reduces them to O(k²) doubles
-   * per pair, and the k×k Newton systems are solved INSIDE a UDF over
-   * that stats frame — beta never exists driver-side. The driver only
-   * launches jobs and reads one scalar (the global max step) per
-   * iteration; per-iteration `localCheckpoint` cuts the growing
-   * lineage. Iterations are O(scan); data never shuffles by group —
-   * only (pairs × k²) stats move. Wald inference comes from the final
-   * information matrix (executor-side map), exactly as the in-task
-   * fitter does.
-   *
-   * Semantics match `binary(model=logistic)` except per-pair
-   * constant-covariate drop (a constant covariate makes the
-   * information matrix singular → that pair reports failed_reason, as
-   * statsmodels would); run `Preprocess.dropConstant` first.
-   */
-  def logisticGram(melted: DataFrame, cfg: Config): DataFrame = {
-    val spark = melted.sparkSession
-    import spark.implicits._
-    val k = cfg.covariates.size
-    val m = k + 2
-    val predictors = cfg.predictors.toArray
-    val dependents = cfg.dependents.toArray
-    val minCase = cfg.minCaseCount
-    val covNames = cfg.covariates
-    val tol = cfg.tol
-    // every IRLS iteration re-scans this frame — persist it for the
-    // life of the fit when a re-scan would hit a real source
-    // (gramPersistOn; a codegen'd synthetic regenerates faster than
-    // the cache builds), as FLAT PRIMITIVE columns (the firthGram
-    // cache rationale: InMemoryRelation decodes array cells
-    // generically per row, primitive columns read back vectorized);
-    // the packed array the aggregator consumes is re-assembled by a
-    // codegen'd projection on top, values unchanged
-    val keyedDf0 = keyed(melted, cfg).toDF("gkey", "v")
-    val flat = keyedDf0.select(
-      col("gkey") +: (0 until m).map(i => col("v")(i).as(s"v$i")): _*)
-    val cached =
-      if (gramPersistOn(melted))
-        flat.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else flat
-    val keyedDf = cached.select(col("gkey"),
-      array((0 until m).map(i => col(s"v$i")): _*).as("v"))
-    // packed value layout is [x, y, covs…]; design features [x, covs…, 1]
-    def f(i: Int): Column =
-      if (i == 0) col("v")(0) else if (i <= k) col("v")(i + 1) else lit(1.0)
-
-    // one viability aggregation; stays a (pair-count-sized) DataFrame
-    val counts = keyedDf.groupBy("gkey").agg(
-        sum(col("v")(1)).cast("long").as("cases"), count(lit(1)).as("n"))
-      .withColumn("failed_reason",
-        when(col("cases") < minCase,
-          concat(lit("Insufficient case count ("), col("cases").cast("string"), lit(" cases).")))
-          .when(col("n") - col("cases") < minCase,
-            concat(lit("Insufficient control count ("),
-              (col("n") - col("cases")).cast("string"), lit(" controls).")))
-          .when(col("cases") === col("n"), lit("All observations are cases.")))
-      .localCheckpoint(true)
-
-    val pairs = for { i <- 0 until m; j <- i until m } yield (i, j)
-    val solveUdf = udf((b: Seq[Double], s: Seq[Double], g: Seq[Double]) =>
-      solveIrlsStep(b.toArray, s.toArray, g.toArray, m))
-    // final-inference row builder shared VERBATIM by the driver and
-    // DataFrame regimes (a local function VAL so the executor map
-    // closure doesn't capture the module)
-    val resultRow: (Long, Seq[Double], Double, String, Seq[Double], Long, Long) => BinResult = {
-      val preds = predictors; val deps = dependents
-      val mm = m; val cn = covNames; val tl = tol
-      (gkey, b, delta, solveFailed, info, cases, n) => {
-        val pred = preds((gkey / deps.length).toInt)
-        val dep = deps((gkey % deps.length).toInt)
-        if (solveFailed != null)
-          BinResult(pred, dep, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-            Double.NaN, Double.NaN, -9L, -9L, -9L, converged = false, solveFailed, "nan")
-        else {
-          def triOf(i: Int, j: Int): Int = i * mm - i * (i - 1) / 2 + (j - i)
-          val infoM = DenseMatrix.tabulate(mm, mm)((a2, b2) =>
-            info(triOf(math.min(a2, b2), math.max(a2, b2))))
-          val covm = breeze.linalg.inv(infoM)
-          val se0 = math.sqrt(covm(0, 0))
-          val b0 = b(0)
-          BinResult(pred, dep, graft.functions.Numerics.normSf2(b0 / se0), b0, se0,
-            math.exp(b0), b0 - 1.959963984540054 * se0, b0 + 1.959963984540054 * se0,
-            cases, n - cases, n, converged = delta < tl, "nan",
-            s"$dep ~ $pred + ${cn.mkString(" + ")}")
-        }
-      }
-    }
-    // regime gate (static on the config grid, same knob as firthGram):
-    // below it the whole Newton loop runs driver-stepped — ONE
-    // shuffle-free mapPartitions job per iteration over the cached
-    // flat frame, moments accumulated into a flat buffer via the
-    // broadcast beta index, solves on the driver, nothing checkpointed
-    // per step (the firthGram r17 regime, minus the tensor and the
-    // null fit). The DataFrame loops (broadcast / shuffle-beta) are
-    // untouched and remain the at-scale path; all regimes share
-    // solveIrlsStep and the IrlsMoment per-row operand order, pinned
-    // by the regime spec in SourcesAndGramSpec.
-    val driverStepMax = spark.conf
-      .get("spark.graft.irls.driverStepPairs", "20000").toLong
-    val bcastMaxPairs0 = spark.conf
-      .get("spark.graft.irls.broadcastPairs", "2000000").toLong
-    val gridSize = predictors.length.toLong * dependents.length
-    // same double gate as firthGram: past broadcastPairs the state is
-    // too big to stage through the driver AT ALL, so forcing the
-    // shuffle regime (broadcastPairs=0, as the regime spec does) must
-    // also disable the driver step
-    val driverStep = gridSize <= driverStepMax && gridSize <= bcastMaxPairs0
-    val dbgL = sys.env.contains("GRAFT_FIRTH_DEBUG")
-    val solvedViable: DataFrame = if (driverStep) {
-      val nS = m * (m + 1) / 2
-      val nBuf = nS + m
-      // pair-grid-sized collect, bounded by the regime gate
-      val countRows = counts.select("gkey", "cases", "n", "failed_reason")
-        .as[(Long, Long, Long, String)].collect()
-      final class LSt(val gkey: Long) {
-        var beta: Array[Double] = new Array[Double](m)
-        var delta: Double = Double.MaxValue
-        var failed: String = null
-        var info: Seq[Double] = Seq.empty
-      }
-      val states = countRows.filter(_._4 == null).map(r => new LSt(r._1)).sortBy(_.gkey)
-      var it = 0
-      var maxDelta = Double.MaxValue
-      val mm = m
-      val kk = k
-      val nBufL = nBuf
-      val nSL = nS
-      while (it < cfg.maxIter && maxDelta >= tol && states.nonEmpty) {
-        val tIter = System.nanoTime()
-        // the DataFrame loop re-steps every non-failed pair (converged
-        // included) until the GLOBAL max step passes tol — mirror that
-        val act = states.filter(_.failed == null)
-        if (act.isEmpty) { maxDelta = 0.0 }
-        else {
-          val nAct = act.length
-          val idxOf = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
-          act.zipWithIndex.foreach { case (st, i) =>
-            idxOf.put(java.lang.Long.valueOf(st.gkey), java.lang.Integer.valueOf(i))
-          }
-          val betas: Array[Array[Double]] = act.map(_.beta)
-          val bcIdx = spark.sparkContext.broadcast((idxOf, betas))
-          // per-row products replicate IrlsMoment.reduce operand-for-
-          // operand (same eta fold, same (w·xᵢ)·xⱼ, same 1e-10 floor),
-          // so iterates agree across regimes to partial-merge order —
-          // the 1e-8 class the regime spec pins
-          val totals = cached.select(
-              (col("gkey") +: (0 until m).map(i => col(s"v$i"))): _*)
-            .queryExecution.toRdd.mapPartitions { rows =>
-              val (idx, bs) = bcIdx.value
-              val buf = new Array[Double](nAct * nBufL)
-              val x = new Array[Double](mm)
-              while (rows.hasNext) {
-                val r = rows.next()
-                val ai = idx.get(java.lang.Long.valueOf(r.getLong(0)))
-                if (ai != null) {
-                  val a = ai.intValue()
-                  x(0) = r.getDouble(1)
-                  var c = 0
-                  while (c < kk) { x(c + 1) = r.getDouble(c + 3); c += 1 }
-                  x(mm - 1) = 1.0
-                  val b = bs(a)
-                  var eta = 0.0
-                  var i = 0
-                  while (i < mm) { eta += x(i) * b(i); i += 1 }
-                  val p = 1.0 / (1.0 + math.exp(-eta))
-                  val w = math.max(p * (1.0 - p), 1e-10)
-                  val r1 = r.getDouble(2) - p
-                  val off = a * nBufL
-                  var idx2 = off
-                  i = 0
-                  while (i < mm) {
-                    val wi = w * x(i)
-                    var j = i
-                    while (j < mm) { buf(idx2) += wi * x(j); idx2 += 1; j += 1 }
-                    buf(off + nSL + i) += x(i) * r1
-                    i += 1
-                  }
-                }
-              }
-              Iterator.single(buf)
-            }.fold(new Array[Double](nAct * nBufL)) { (a, b) =>
-              var i = 0
-              while (i < a.length) { a(i) += b(i); i += 1 }
-              a
-            }
-          bcIdx.destroy()
-          maxDelta = 0.0
-          var ai = 0
-          while (ai < nAct) {
-            val st = act(ai)
-            val off = ai * nBufL
-            val s = java.util.Arrays.copyOfRange(totals, off, off + nSL)
-            val g = java.util.Arrays.copyOfRange(totals, off + nSL, off + nSL + mm)
-            val res = solveIrlsStep(st.beta, s, g, mm)
-            st.beta = res.beta.toArray
-            st.delta = res.delta
-            st.failed = res.failed
-            st.info = res.info
-            if (res.failed == null && res.delta > maxDelta) maxDelta = res.delta
-            ai += 1
-          }
-        }
-        if (dbgL) System.err.println(
-          f"[logisticGram] driver-iter ${(System.nanoTime() - tIter) / 1e9}%.3f s act=${act.length}")
-        it += 1
-      }
-      cached.unpersist()
-      val byKey = states.map(s => s.gkey -> s).toMap
-      val rows: Seq[BinResult] = countRows.filter(_._4 == null).toSeq.map {
-        case (gkey, cases, n, _) =>
-          val st = byKey(gkey)
-          resultRow(gkey, st.beta.toSeq, st.delta, st.failed, st.info, cases, n)
-      }
-      spark.createDataset(rows).toDF()
-    } else {
-      var beta = counts.filter(col("failed_reason").isNull)
-        .select(col("gkey"), typedlit(Seq.fill(m)(0.0)).as("beta"),
-          lit(Double.MaxValue).as("delta"), lit(null).cast("string").as("solve_failed"),
-          typedlit(Seq.empty[Double]).as("info"))
-        .localCheckpoint(true)
-      var it = 0
-      var maxDelta = Double.MaxValue
-      // ONE fused buffer per pair per iteration (see IrlsMoment) — the
-      // plain-logistic weight floor is 1e-10, no third-order tensor
-      val moment = udaf(new IrlsMoment(m, wFloor = 1e-10, tensor = false))
-      // same big-pair gate as firthGram: above the threshold the beta
-      // table stops staging through the driver as a broadcast and joins
-      // as a shuffle hash join instead (the continue-check here is
-      // already a distributed agg, no change needed)
-      val bcastMaxPairs = spark.conf
-        .get("spark.graft.irls.broadcastPairs", "2000000").toLong
-      val shuffleBeta = beta.count() > bcastMaxPairs
-      while (it < cfg.maxIter && maxDelta >= tol) {
-        val actSt = beta.filter(col("solve_failed").isNull).select("gkey", "beta")
-        val stats = keyedDf.join(
-            if (shuffleBeta) actSt.hint("shuffle_hash") else broadcast(actSt), "gkey")
-          .groupBy("gkey")
-          .agg(moment(col("v"), col("beta")).as("st"))
-          .select(col("gkey"),
-            col("st").getField("s").as("s"), col("st").getField("g").as("g"))
-        beta = beta.join(stats, Seq("gkey"), "left")
-          .select(col("gkey"),
-            when(col("s").isNotNull && col("solve_failed").isNull,
-              solveUdf(col("beta"), col("s"), col("g")))
-              .otherwise(struct(col("beta").as("beta"), lit(0.0).as("delta"),
-                col("info").as("info"), col("solve_failed").as("failed"))).as("u"))
-          .select(col("gkey"), col("u.beta").as("beta"), col("u.delta").as("delta"),
-            col("u.failed").as("solve_failed"), col("u.info").as("info"))
-          .localCheckpoint(true)
-        val row = beta.agg(max(col("delta"))).head()
-        maxDelta = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-        it += 1
-      }
-      cached.unpersist()
-
-      // final inference, executor-side; grid completion restores no-data pairs
-      beta.join(counts.select("gkey", "cases", "n"), "gkey")
-        .as[(Long, Seq[Double], Double, String, Seq[Double], Long, Long)]
-        .map { case (gkey, b, delta, solveFailed, info, cases, n) =>
-          resultRow(gkey, b, delta, solveFailed, info, cases, n)
-        }.toDF()
-    }
-    val failedRows = counts.filter(col("failed_reason").isNotNull)
-      .as[(Long, Long, Long, String)]
-      .map { case (gkey, _, _, reason) =>
-        BinResult(predictors((gkey / dependents.length).toInt),
-          dependents((gkey % dependents.length).toInt),
-          Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-          -9L, -9L, -9L, converged = false, reason, "nan")
-      }.toDF()
-    completeGrid(failedRows.unionAll(solvedViable), cfg, binaryDefaults(cfg))
+  /** One IRLS fit's driver-side state. `fit` 0 is the full fit, 1 the
+    * Firth LRT-null fit (predictor held at 0); `gi` is the pair's grid
+    * index (the `keyed` group key). */
+  private final class GramFit(val gi: Int, val fit: Int, m: Int) {
+    var beta = new Array[Double](m)
+    var step = Double.MaxValue
+    var conv = false
+    var failed: String = null
+    var its = 0
+    var info: Array[Double] = null // logistic: X'WX of the last step
+    var pll = Double.NaN
+    var se0 = Double.NaN
+    var finFailed: String = null
   }
 
-  // ------------------------------------------- distributed Firth IRLS
-
-  /** Executor-side Firth Newton step result. */
-  private[operators] final case class FirthStepR(
-      beta: Seq[Double], conv: Boolean, failed: String)
-
-  /** Executor-side final-pass result: penalized log-likelihood and the
-    * predictor's Wald se at the converged beta. */
-  private[operators] final case class FirthFinalR(
-      pll: Double, se0: Double, failed: String)
-
-  /**
-   * Distributed Firth-penalized IRLS — the a10-style scale path for
-   * the reference's DEFAULT model (cli.py:105-111): the path for
-   * pairs whose cohort is too large to materialize inside one
-   * `mapGroups` task. Semantics mirror `Models.firthRaw` (logistf
-   * defaults: step cap 5, no half-steps, per-pair convergence on
-   * max|δ| < xtol AND max|score| < gtol, LRT p-value from a second
-   * constrained fit with the predictor held at 0, warm-started from
-   * the full fit).
-   *
-   * Each penalized-IRLS iteration is ONE declarative aggregation pass
-   * over the melted frame (round 8 ran two — X'WX, then a second scan
-   * for the hat-diagonal score once the inverse was known; the fusion
-   * halves the per-iteration job count, which dominates at toy scale
-   * and halves scan IO at 100 TB). The melted/packed frame is
-   * persisted MEMORY_AND_DISK for the life of the fit — every Newton
-   * step re-scans it, and without the persist each scan re-runs the
-   * melt projection and the upstream source read (at the bench shape
-   * that recompute was the dominant per-iteration cost; at 100 TB
-   * spill-to-disk persist of [long, (k+2) doubles] rows is the
-   * standard iterative-ML trade, and a deployment that prefers
-   * re-reading parquet over local disk can drop the persist without
-   * touching the algorithm). Under the current per-pair beta
-   * (broadcast joined), the scan reduces, map-side-combined, O(m³)
-   * doubles per pair:
-   *
-   *  - the information matrix X'WX (m(m+1)/2 sums),
-   *  - the first-order score Σ xⱼ(y − p) (m sums),
-   *  - the FULLY-SYMMETRIC third-order tensor
-   *    T_jab = Σ w(½−p)·xⱼx_a x_b (m(m+1)(m+2)/6 sums),
-   *
-   * from which the Firth-modified score is reconstructed inside the
-   * step UDF as scoreⱼ = g1ⱼ + Σ_ab (X'WX)⁻¹_ab·T_jab — algebraically
-   * the per-row hat-diagonal contribution Σ xⱼ·h·(½−p) with the sum
-   * reordered, so no second scan needs the inverse.
-   *
-   * The Newton solve (restricted to free coordinates, step-capped)
-   * runs in a UDF over the stats frame. The per-iteration beta state
-   * is pair-count-bounded and its distribution is GATED on the pair
-   * count (`spark.graft.irls.broadcastPairs`, default 2M): below the
-   * threshold it is collected once per step and broadcast — the same
-   * bytes a BroadcastExchange would stage through the driver, one job
-   * serving both the convergence check and the build side; above it
-   * (~10⁷ simultaneously-active pairs, where neither the collect nor
-   * the broadcast fits on the driver) the state joins as a shuffle
-   * hash join and the convergence check is a distributed count —
-   * nothing row- OR pair-proportional touches the driver. Both
-   * regimes run the identical step UDF over the same per-pair moment
-   * sums, so the iterate sequences agree up to the FP summation
-   * order of the shuffled scan (the regime spec in
-   * SourcesAndGramSpec pins agreement to 1e-8 on every inference
-   * column). Converged pairs freeze and drop out of later scans,
-   * so per-pair iteration counts — and therefore the fitted values —
-   * match the in-task fitter exactly (modulo FP associativity of the
-   * distributed sums). Per-iteration `localCheckpoint` cuts the
-   * growing lineage.
-   *
-   * The full fit and the LRT-null fit are FUSED into one loop (round
-   * 9 ran them back-to-back; round 15 spawned the null when its full
-   * fit finished; round 16 runs both CONCURRENTLY from iteration 1):
-   * state holds one row per (pair, fit), each step is one broadcast
-   * join + one aggregation pass over the same persisted frame, and
-   * while both of a pair's fits are active the join fans each payload
-   * row to both beta rows (one scan, two moment sets). The loop count
-   * drops from ~(full + null) to ~max(full, null) passes — the
-   * per-iteration cost is dominated by fixed job overhead, so fewer
-   * passes beat thinner ones — and the two final log-likelihood/
-   * information scans collapse into one. Both fits converge to the
-   * same penalized fixed points as the sequential schedule (step AND
-   * score below tol), pinned by the gram-vs-in-task parity spec.
-   *
-   * Like `logisticGram`: no per-pair constant-covariate drop (a
-   * constant covariate makes X'WX singular → that pair reports
-   * failed_reason); run `Preprocess.dropConstant` first.
-   */
-  def firthGram(melted: DataFrame, cfg: Config): DataFrame = {
-    val spark = melted.sparkSession
-    import spark.implicits._
-    val k = cfg.covariates.size
-    val m = k + 2
-    val predictors = cfg.predictors.toArray
-    val dependents = cfg.dependents.toArray
-    val minCase = cfg.minCaseCount
-    val covNames = cfg.covariates
-    val gtol = cfg.tol
-    val xtol = cfg.tol
-    val maxStep = 5.0 // logistf maxstep
-    // spark.graft.gram.persist caches the packed frame for the life of
-    // the fit: right when the upstream is a real source scan (every
-    // Newton step re-reads it otherwise — at 100 TB that is ~15 full
-    // corpus reads), wrong when the upstream is a cheap codegen'd
-    // projection that recomputes faster than the columnar cache
-    // scans — default "auto" applies exactly that leaf test
-    // (gramPersistOn; measured at the 90M-row 10x shape: 24-33 s
-    // cache build vs 1.05 s regeneration)
-    val doPersist = gramPersistOn(melted)
-    val keyedDf0 = keyed(melted, cfg).toDF("gkey", "v")
-    // the cache stores FLAT primitive double columns, not the packed
-    // array: InMemoryRelation encodes array cells generically (per-row
-    // UnsafeArrayData decode on every scan — and this frame is
-    // re-scanned every Newton step) while primitive columns read back
-    // vectorized; the packed array the aggregator consumes is
-    // re-assembled by a codegen'd projection on top, so the per-row
-    // values — and the iterate sequence — are unchanged
-    val flat = keyedDf0.select(
-      col("gkey") +: (0 until m).map(i => col("v")(i).as(s"v$i")): _*)
-    val cached =
-      if (doPersist) flat.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else flat
-    val keyedDf = cached.select(col("gkey"),
-      array((0 until m).map(i => col(s"v$i")): _*).as("v"))
-    // packed value layout is [x, y, covs…]; design features [x, covs…, 1]
-    def f(i: Int): Column =
-      if (i == 0) col("v")(0) else if (i <= k) col("v")(i + 1) else lit(1.0)
-    def triOf(i: Int, j: Int): Int = i * m - i * (i - 1) / 2 + (j - i)
-    val pairs = for { i <- 0 until m; j <- i until m } yield (i, j)
-
-    // ONE first-pass scan serves the viability gate AND Newton step 1
-    // (FirstMoment: at β=0 the weights are exactly ¼ and the tensor
-    // vanishes, so step-1 moments need no beta join). ckeep marks
-    // per-pair NON-CONSTANT covariates so the reported equation
-    // matches the in-task fitter's kept-covariate logic (it drops
-    // constants from the design; this path fails such pairs as
-    // singular instead, but the equation string must agree for the
-    // pairs both paths fit)
-    val firstMoment = udaf(new FirstMoment(m))
-    val dbgF = sys.env.contains("GRAFT_FIRTH_DEBUG")
-    def stampF(label: String, t0: Long): Unit =
-      if (dbgF) System.err.println(
-        f"[firthGram] phase $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    // ---- regime decision (static: pairs × 2 fits is known from the
-    // config, no job) — made BEFORE the first pass so the driver
-    // regime can run its raw-row variant of it
-    val bcastMaxPairs = spark.conf
-      .get("spark.graft.irls.broadcastPairs", "2000000").toLong
-    // default sized so the per-task moment buffer (pairs × 2 fits ×
-    // ~119 doubles) stays ~20 MB: far above any PheWAS pair grid,
-    // far below anything that should be driver-resident
-    val driverStepMax = spark.conf
-      .get("spark.graft.irls.driverStepPairs", "20000").toLong
-    val stateRowCount = 2L * cfg.predictors.size * cfg.dependents.size
-    val shuffleBeta = stateRowCount > bcastMaxPairs
-    val driverStep = !shuffleBeta && stateRowCount <= driverStepMax
-    val gridSize = cfg.predictors.size * cfg.dependents.size
-    val nS0 = m * (m + 1) / 2
-    // per-gkey first-pass layout: [n, ySum, s(nS), g(m), cmin(k), cmax(k)]
-    val nF = 2 + nS0 + m + 2 * k
-    val tFirst = System.nanoTime()
-    // driver regime: ONE shuffle-free mapPartitions job computes
-    // viability + β=0 moments into a grid-indexed flat buffer —
-    // the raw-row twin of FirstMoment (same per-row products:
-    // (¼·xᵢ)·xⱼ, x·(y−½), running min/max), merged add-for-sums /
-    // min-max-for-ranges across partitions
-    val firstDrv: Array[Double] = if (!driverStep) null else {
-      val flatPlan0 = cached.select(
-        (col("gkey") +: (0 until m).map(i => col(s"v$i"))): _*)
-      val mm = m
-      val kk = k
-      val nFL = nF
-      val nSL = nS0
-      val gs = gridSize
-      // fold-zero: sums at 0, ranges at their min/max identities —
-      // also the RESULT when the plan yields zero partitions (empty
-      // input), where RDD.reduce would throw; a zero-count grid then
-      // takes the normal non-viable path downstream.
-      val zeroBuf: () => Array[Double] = () => {
-        val buf = new Array[Double](gs * nFL)
-        var gi = 0
-        while (gi < gs) {
-          var c = 0
-          while (c < kk) {
-            buf(gi * nFL + 2 + nSL + mm + c) = Double.PositiveInfinity
-            buf(gi * nFL + 2 + nSL + mm + kk + c) = Double.NegativeInfinity
-            c += 1
-          }
-          gi += 1
-        }
-        buf
+  /** Every fit's `kernel` sums over `rows` (gkey, x, y, covs…): the
+    * fits are dealt into slices of `sliceOf(width)`, and each slice is
+    * ONE shuffle-free job whose tasks accumulate into one slice buffer
+    * (slots looked up by gkey, at the fit's beta), merged on the driver
+    * as tasks finish. The driver's totals start at the merge identity,
+    * so a plan with no rows or no partitions yields zero counts. */
+  private def gramScan(
+      rows: RDD[org.apache.spark.sql.catalyst.InternalRow], m: Int, kernel: GramKernel,
+      fits: Array[GramFit], sliceOf: Int => Int): Array[Double] = {
+    val sc = rows.sparkContext
+    val width = kernel.width
+    val sums = kernel.sums
+    val out = new Array[Double](fits.length * width)
+    fits.indices.grouped(math.max(1, sliceOf(width))).foreach { slice =>
+      val first = slice.head
+      val n = slice.size
+      val idx = new java.util.HashMap[Long, Array[Int]]()
+      slice.foreach { s =>
+        idx.computeIfAbsent(fits(s).gi.toLong, _ => Array(-1, -1))(fits(s).fit) = s - first
       }
-      flatPlan0.queryExecution.toRdd.mapPartitions { it =>
-        val buf = zeroBuf()
-        val x = new Array[Double](mm)
+      val bc = sc.broadcast((idx, slice.map(fits(_).beta).toArray))
+      val total = kernel.zero(n)
+      sc.runJob(rows, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        val (ix, bs) = bc.value
+        val buf = kernel.zero(n)
+        val x = new Array[Double](m)
         while (it.hasNext) {
           val r = it.next()
-          val off = r.getLong(0).toInt * nFL
-          buf(off) += 1.0
-          val y = r.getDouble(2)
-          buf(off + 1) += y
-          x(0) = r.getDouble(1)
-          var c = 0
-          while (c < kk) {
-            val vc = r.getDouble(c + 3)
-            x(c + 1) = vc
-            if (vc < buf(off + 2 + nSL + mm + c)) buf(off + 2 + nSL + mm + c) = vc
-            if (vc > buf(off + 2 + nSL + mm + kk + c)) buf(off + 2 + nSL + mm + kk + c) = vc
-            c += 1
-          }
-          x(mm - 1) = 1.0
-          val r1 = y - 0.5
-          var idx = off + 2
-          var i = 0
-          while (i < mm) {
-            val wi = 0.25 * x(i)
-            var j = i
-            while (j < mm) { buf(idx) += wi * x(j); idx += 1; j += 1 }
-            buf(off + 2 + nSL + i) += x(i) * r1
-            i += 1
+          val si = ix.get(r.getLong(0))
+          if (si != null) {
+            x(0) = r.getDouble(1)
+            var c = 0
+            while (c < m - 2) { x(c + 1) = r.getDouble(c + 3); c += 1 }
+            x(m - 1) = 1.0
+            val y = r.getDouble(2)
+            var f = 0
+            while (f < 2) {
+              if (si(f) >= 0) kernel.add(x, y, bs(si(f)), buf, si(f) * width)
+              f += 1
+            }
           }
         }
-        Iterator.single(buf)
-      }.fold(zeroBuf()) { (a, b) =>
-        var gi = 0
-        while (gi < gs) {
-          val off = gi * nFL
-          var i = off
-          val sumEnd = off + 2 + nSL + mm
-          while (i < sumEnd) { a(i) += b(i); i += 1 }
-          var c = 0
-          while (c < kk) {
-            if (b(sumEnd + c) < a(sumEnd + c)) a(sumEnd + c) = b(sumEnd + c)
-            if (b(sumEnd + kk + c) > a(sumEnd + kk + c)) a(sumEnd + kk + c) = b(sumEnd + kk + c)
-            c += 1
-          }
-          gi += 1
+        buf
+      }, (_: Int, part: Array[Double]) => {
+        var i = 0
+        while (i < part.length) {
+          if (i % width < sums) total(i) += part(i)
+          else if (part(i) < total(i)) total(i) = part(i)
+          i += 1
         }
-        a
+      })
+      bc.destroy()
+      System.arraycopy(total, 0, out, first * width, n * width)
+    }
+    out
+  }
+
+  /** Index of (i, j) in an m×m symmetric matrix's packed upper triangle. */
+  private def triOf(m: Int, i: Int, j: Int): Int = {
+    val (a, b) = (math.min(i, j), math.max(i, j))
+    a * m - a * (a - 1) / 2 + (b - a)
+  }
+
+  /** The m×m symmetric matrix packed from `buf(off)` on. */
+  private def unpack(buf: Array[Double], off: Int, m: Int): DenseMatrix[Double] =
+    DenseMatrix.tabulate(m, m)((i, j) => buf(off + triOf(m, i, j)))
+
+  /** One Newton step at `b` from X'WX (upper triangle `s`), the score
+    * `g` and, when `t` is given, the Firth tensor: the Firth-modified
+    * score is scoreⱼ = gⱼ + Σ_ab (X'WX)⁻¹_ab·T_jab (the hat-diagonal
+    * term with the row sum pushed into T; `tIdx` maps (j, a, b) to the
+    * sorted triple's slot). Solves over the `free` coordinates, caps
+    * max |Δβ| at `maxStep`, and returns the new beta, the capped
+    * max |Δβ| and max |score| over `free`. Throws on a singular X'WX. */
+  private def newtonStep(
+      b: Array[Double], s: Array[Double], g: Array[Double], t: Array[Double],
+      tIdx: Array[Int], free: Array[Int], maxStep: Double): (Array[Double], Double, Double) = {
+    val m = b.length
+    val score =
+      if (t == null) g
+      else {
+        val covm: DenseMatrix[Double] = breeze.linalg.inv(unpack(s, 0, m))
+        Array.tabulate(m) { j =>
+          var acc = g(j)
+          for (a <- 0 until m; c <- 0 until m) acc += covm(a, c) * t(tIdx((j * m + a) * m + c))
+          acc
+        }
       }
-    }
-    val firstAgg = if (driverStep) null else keyedDf.groupBy("gkey")
-      .agg(firstMoment(col("v")).as("st"))
-      .localCheckpoint(true)
-    stampF("firstpass", tFirst)
-    // driver regime: counts as a LocalRelation from the driver
-    // buffer — field-for-field the same rows (incl. the reason
-    // strings) the DataFrame projection produces
-    def firstN(gi: Int): Long = firstDrv(gi * nF).toLong
-    def firstCases(gi: Int): Long = firstDrv(gi * nF + 1).toLong
-    def firstFailed(gi: Int): String = {
-      val cases = firstCases(gi); val n = firstN(gi)
-      if (cases < minCase) s"Insufficient case count ($cases cases)."
-      else if (n - cases < minCase) s"Insufficient control count (${n - cases} controls)."
-      else if (cases == n) "All observations are cases."
-      else null
-    }
-    val counts = if (driverStep) {
-      val rows: Array[org.apache.spark.sql.Row] =
-        (0 until gridSize).filter(gi => firstN(gi) > 0).map { gi =>
-          val ckeep = (0 until k).map(c =>
-            firstDrv(gi * nF + 2 + nS0 + m + c) < firstDrv(gi * nF + 2 + nS0 + m + k + c))
-          org.apache.spark.sql.Row(gi.toLong, firstCases(gi), firstN(gi),
-            ckeep, firstFailed(gi))
-        }.toArray
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("gkey", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cases", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ckeep",
-            org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.BooleanType)),
-          org.apache.spark.sql.types.StructField("failed_reason",
-            org.apache.spark.sql.types.StringType))))
-    } else firstAgg.select(col("gkey"),
-        col("st").getField("ySum").cast("long").as("cases"),
-        col("st").getField("n").as("n"),
-        (if (k == 0) typedlit(Seq.empty[Boolean])
-         else array((0 until k).map(c =>
-           col("st").getField("cmin")(c) < col("st").getField("cmax")(c)): _*)).as("ckeep"))
-      .withColumn("failed_reason",
-        when(col("cases") < minCase,
-          concat(lit("Insufficient case count ("), col("cases").cast("string"), lit(" cases).")))
-          .when(col("n") - col("cases") < minCase,
-            concat(lit("Insufficient control count ("),
-              (col("n") - col("cases")).cast("string"), lit(" controls).")))
-          .when(col("cases") === col("n"), lit("All observations are cases.")))
-    // no own checkpoint: counts is a shallow projection over the
-    // checkpointed firstAgg (DataFrame regimes) or a LocalRelation
-    // (driver regime)
+    val nf = free.length
+    val deltaF = DenseMatrix.tabulate(nf, nf)((a, c) => s(triOf(m, free(a), free(c)))) \
+      DenseVector.tabulate(nf)(a => score(free(a)))
+    val mx = breeze.linalg.max(breeze.numerics.abs(deltaF))
+    val scale = if (mx > maxStep) maxStep / mx else 1.0
+    val nb = b.clone()
+    (0 until nf).foreach(j => nb(free(j)) += scale * deltaF(j))
+    (nb, mx * scale, free.map(j => math.abs(score(j))).max)
+  }
 
-    // p under eta, W floored at 1e-12 (Models.etaPW's floor — NOT the
-    // 1e-10 plain-logistic floor; matching the in-task Firth fitter
-    // bit-for-bit in the weights keeps the iterate sequences aligned)
-    def withPW(joined: DataFrame): DataFrame = {
-      val eta = (0 until m).map(i => f(i) * col("beta")(i)).reduce(_ + _)
-      joined
-        .withColumn("p", lit(1.0) / (lit(1.0) + exp(-eta)))
-        .withColumn("w", greatest(col("p") * (lit(1.0) - col("p")), lit(1e-12)))
+  /** Distributed logistic IRLS over a melted frame, for pairs too large
+    * for one task: [[gramFit]] without the Firth penalty. Every
+    * non-failed pair re-steps until the largest |Δβ| of the grid is
+    * below tol (or maxIter); a pair is `converged` when its own last
+    * |Δβ| is. The Wald se comes from the last step's X'WX. */
+  def logisticGram(melted: DataFrame, cfg: Config): DataFrame =
+    gramFit(melted, cfg, penalized = false)
+
+  /** Distributed Firth-penalized IRLS over a melted frame — the scale
+    * path for the reference's default model (cli.py:105-111):
+    * [[gramFit]] with the penalty. Semantics mirror `Models.firthRaw`
+    * (logistf defaults: step cap 5, no half-steps, convergence on
+    * max|Δβ| < tol AND max|score| < tol): each pair runs the full fit
+    * and the LRT-null fit (predictor held at 0) concurrently from β=0,
+    * the null fit with a budget of 2×maxIter because it starts cold; a
+    * converged fit freezes. One fused final scan gives each fit's
+    * penalized log-likelihood (ll + ½·log det X'WX) and the full fit's
+    * Wald se; the p-value is the χ²₁ LRT. */
+  def firthGram(melted: DataFrame, cfg: Config): DataFrame =
+    gramFit(melted, cfg, penalized = true)
+
+  /**
+   * The gram IRLS fitter behind [[logisticGram]] and [[firthGram]]. It
+   * never holds a pair's rows in one task: the packed melted rows are
+   * scanned once per Newton step, and every scan ([[gramScan]]) is one
+   * shuffle-free job whose tasks accumulate per-pair moments — X'WX,
+   * the score and, penalized, the third-order tensor — into one flat
+   * buffer. The driver merges the buffers, solves the m×m systems and
+   * broadcasts the new betas. A scan deals its slots into slices of at
+   * most `sliceOf(width)` so a task's buffer stays under
+   * `GramBufferDoubles`; a larger grid costs more scans per step, not
+   * more memory. The frame is persisted for the fit when a re-scan
+   * would re-read a real source ([[rescanHitsSource]]).
+   *
+   * The first pass gives each pair's count, case sum, covariate range
+   * and its β=0 moments (exact: w = ¼, tensor 0), which are Newton
+   * step 1. Viability gates run in the in-task order and text; a pair
+   * with a constant covariate then fails as "Singular information
+   * matrix." — this path does not drop per-pair constant covariates
+   * (run `Preprocess.dropConstant` first). Per-row operand order is
+   * the same in every scan, so results match the in-task fitter to
+   * FP summation order (spec-pinned in SourcesAndGramSpec).
+   */
+  private[operators] def gramFit(
+      melted: DataFrame, cfg: Config, penalized: Boolean,
+      sliceOf: Int => Int = budgetSlice): DataFrame = {
+    val spark = melted.sparkSession
+    val k = cfg.covariates.size
+    val m = k + 2
+    val nS = m * (m + 1) / 2
+    val predictors = cfg.predictors.toArray
+    val dependents = cfg.dependents.toArray
+    val tol = cfg.tol
+    val flat = keyed(melted, cfg).toDF("gkey", "v")
+      .select(col("gkey") +: (0 until m).map(i => col("v")(i).as(s"v$i")): _*)
+    val persist = rescanHitsSource(melted)
+    if (persist) flat.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // a fresh plan over `flat`, so the scans read the persisted copy
+    val rows = flat.select("*").queryExecution.toRdd
+    def scan(kernel: GramKernel, fits: Array[GramFit]): Array[Double] =
+      gramScan(rows, m, kernel, fits, sliceOf)
+
+    val firstPass = new FirstPassKernel(m)
+    val nF = firstPass.width
+    val grid = predictors.length * dependents.length
+    val first = scan(firstPass, Array.tabulate(grid)(new GramFit(_, 0, m)))
+    def failRow(gi: Int, reason: String): BinResult =
+      BinResult(predictors(gi / dependents.length), dependents(gi % dependents.length),
+        Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
+        -9L, -9L, -9L, converged = false, reason, "nan")
+    val out = mutable.ArrayBuffer.empty[BinResult]
+    // pairs with no rows are left to completeGrid
+    val viable = (0 until grid).filter(gi => first(gi * nF) > 0).filter { gi =>
+      val off = gi * nF
+      val n = first(off).toLong
+      val cases = first(off + 1).toLong
+      val reason =
+        if (cases < cfg.minCaseCount) s"Insufficient case count ($cases cases)."
+        else if (n - cases < cfg.minCaseCount)
+          s"Insufficient control count (${n - cases} controls)."
+        else if (cases == n) "All observations are cases."
+        else if ((0 until k).exists(c =>
+            !(first(off + firstPass.sums + c) < -first(off + firstPass.sums + k + c))))
+          "Singular information matrix."
+        else null
+      if (reason != null) out += failRow(gi, reason)
+      reason == null
     }
 
-    // sorted index into the fully-symmetric third-order tensor
-    val triples = for { i <- 0 until m; j <- i until m; l <- j until m } yield (i, j, l)
-    val t3 = triples.zipWithIndex.toMap
-
-    // state frame: (gkey, fit, beta[m], conv, failed, its) — one FUSED
-    // penalized Newton loop over both fits; fit 0 = full (all m coords
-    // free), fit 1 = LRT null (predictor held at 0). The per-fit free
-    // coordinate sets are resolved inside the step UDF.
-    val freeByFit = Array((0 until m).toArray, (1 until m).toArray)
-    // the one penalized-Newton step, shared verbatim by the executor
-    // UDF (shuffle/broadcast regimes) and the driver-stepped loop —
-    // the regimes can only differ in WHERE the 7×7 solve runs, never
-    // in its arithmetic. A function VALUE, not a def: eta-expanding a
-    // local def captures the enclosing object in the UDF closure,
-    // which is not serializable
-    val gramStep: (Int, Seq[Double], Seq[Double], Seq[Double], Seq[Double]) => FirthStepR =
-      (fit: Int, b: Seq[Double], s: Seq[Double], g1: Seq[Double], t: Seq[Double]) =>
-      {
-        val free = freeByFit(fit)
-        val nf = free.length
+    val fits = viable.flatMap(gi =>
+      (if (penalized) Seq(0, 1) else Seq(0)).map(new GramFit(gi, _, m))).toArray
+    val free = Array((0 until m).toArray, (1 until m).toArray)
+    val maxStep = if (penalized) 5.0 else Double.PositiveInfinity
+    val tIdx = Array.tabulate(m * m * m) { q =>
+      val Seq(i, j, l) = Seq(q / (m * m), q / m % m, q % m).sorted
+      // slot of (i ≤ j ≤ l) in the kernel's i, j, l loop order
+      (0 until i).map(a => (m - a) * (m - a + 1) / 2).sum +
+        (i until j).map(b => m - b).sum + (l - j)
+    }
+    val stepKernel = new StepKernel(m, penalized)
+    var it = 0
+    var gridStep = Double.MaxValue
+    def active: Array[GramFit] =
+      if (penalized)
+        fits.filter(f => f.failed == null && !f.conv &&
+          f.its < (if (f.fit == 1) 2 * cfg.maxIter else cfg.maxIter))
+      else if (it < cfg.maxIter && gridStep >= tol) fits.filter(_.failed == null)
+      else Array.empty
+    var act = active
+    while (act.nonEmpty) {
+      // step 1 takes the first pass's β=0 moments
+      val mom = if (it == 0) first else scan(stepKernel, act)
+      gridStep = 0.0
+      act.zipWithIndex.foreach { case (f, a) =>
+        val off = if (it == 0) f.gi * nF + 2 else a * stepKernel.width
+        val s = java.util.Arrays.copyOfRange(mom, off, off + nS)
+        val g = java.util.Arrays.copyOfRange(mom, off + nS, off + nS + m)
+        val t =
+          if (!penalized) null
+          else if (it == 0) new Array[Double](stepKernel.width - nS - m)
+          else java.util.Arrays.copyOfRange(mom, off + nS + m, off + stepKernel.width)
         try {
-          val im = DenseMatrix.tabulate(m, m)((a, c) =>
-            s(triOf(math.min(a, c), math.max(a, c))))
-          val covm: DenseMatrix[Double] = breeze.linalg.inv(im)
-          // Firth-modified score reconstructed from the symmetric
-          // tensor: scoreⱼ = g1ⱼ + Σ_ab inv_ab·T_jab (the hat-diagonal
-          // term with the row sum pushed into T)
-          val score = new Array[Double](m)
-          var sj = 0
-          while (sj < m) {
-            var acc = g1(sj)
-            var a = 0
-            while (a < m) {
-              var c = 0
-              while (c < m) {
-                val lo = math.min(sj, math.min(a, c))
-                val hi = math.max(sj, math.max(a, c))
-                acc += covm(a, c) * t(t3((lo, sj + a + c - lo - hi, hi)))
-                c += 1
-              }
-              a += 1
-            }
-            score(sj) = acc
-            sj += 1
-          }
-          val infoF = DenseMatrix.tabulate(nf, nf)((a, c) =>
-            s(triOf(math.min(free(a), free(c)), math.max(free(a), free(c)))))
-          val scoreF = DenseVector.tabulate(nf)(a => score(free(a)))
-          val deltaF = infoF \ scoreF
-          val mx = breeze.linalg.max(breeze.numerics.abs(deltaF))
-          val scale = if (mx > maxStep) maxStep / mx else 1.0
-          val nb = b.toArray.clone()
-          var j = 0
-          while (j < nf) { nb(free(j)) += scale * deltaF(j); j += 1 }
-          var gmax = 0.0
-          var j2 = 0
-          while (j2 < nf) { gmax = math.max(gmax, math.abs(scoreF(j2))); j2 += 1 }
-          FirthStepR(nb.toSeq, mx * scale < xtol && gmax < gtol, null)
+          val (nb, step, score) = newtonStep(f.beta, s, g, t, tIdx, free(f.fit), maxStep)
+          f.beta = nb
+          f.step = step
+          f.conv = step < tol && (!penalized || score < tol)
+          f.info = s
+          gridStep = math.max(gridStep, step)
         } catch {
-          case e: Throwable => FirthStepR(b, conv = false, failureReason(e))
+          case e: Throwable => f.failed = failureReason(e)
         }
+        f.its += 1
       }
-    val stepUdf = udf(gramStep)
-    // final-pass math (penalized ll + Wald se at the converged beta),
-    // shared by the executor UDF and the driver-stepped final scan
-    val finalFn: (Seq[Double], Double) => FirthFinalR = (s: Seq[Double], ll: Double) =>
-      try {
-        val im = DenseMatrix.tabulate(m, m)((a, b) =>
-          s(triOf(math.min(a, b), math.max(a, b))))
-        val l = breeze.linalg.cholesky(im)
-        val logDet = 2.0 * (0 until m).map(i => math.log(l(i, i))).sum
-        val covm: DenseMatrix[Double] = breeze.linalg.inv(im)
-        val se0 = math.sqrt(covm(0, 0))
-        FirthFinalR(ll + 0.5 * logDet, se0, null)
-      } catch {
-        case e: Throwable =>
-          FirthFinalR(Double.NaN, Double.NaN, failureReason(e))
-      }
-
-    // a fit is active until it converges, fails, or exhausts the
-    // per-fit Newton budget (its counts THIS fit's steps — each fit
-    // owns a fresh budget, exactly as the sequential loops did). The
-    // LRT-null fit gets 2× headroom: the sequential schedule
-    // warm-started it from the full solution, so a cold start from
-    // beta=0 spends extra iterations just reaching that
-    // neighborhood — without headroom a pair near the budget edge
-    // could exhaust cold where warm converged, surfacing a different
-    // converged flag than the in-task path (r16 advice). Converged
-    // pairs drop out, so the headroom costs nothing on typical data.
-    def budgetOf: Column =
-      when(col("fit") === 1, lit(2 * cfg.maxIter)).otherwise(lit(cfg.maxIter))
-    def activeCond: Column =
-      !col("conv") && col("failed").isNull && col("its") < budgetOf
-    // BOTH fits (full = 0, LRT null = 1) run CONCURRENTLY from
-    // iteration 1 (r15 verdict item 5). The null fit previously
-    // spawned only when its pair's full fit finished, warm-started
-    // from the full solution — which serialized two Newton chains:
-    // measured at the 5000×1800×5cov headline, ~7 full + ~5 null
-    // iterations at ~0.95 s/iteration of mostly FIXED per-job cost
-    // (the same 12 iterations cost 0.6 s each at a 10× smaller
-    // cohort — the data-dependent share is small). Running the
-    // chains concurrently converges in max(full, null) ≈ 7
-    // iterations; the moment scan prices each payload row against
-    // both active beta rows (the same fan-out the fused final scan
-    // already uses), trading a small data-cost increase for ~5 fewer
-    // fixed-cost jobs. Both schedules converge to the same penalized
-    // fixed point (criterion: step AND score below tol) — the
-    // cold-started null is the same optimum the warm start reached,
-    // pinned by the gram-vs-in-task parity spec at 1e-5.
-    // built lazily: the driver-stepped regime keeps state in a
-    // driver array and never pays this frame's eager checkpoint job
-    def initStateFrame(): DataFrame = counts.filter(col("failed_reason").isNull)
-      .select(col("gkey"), explode(typedlit(Seq(0, 1))).as("fit"),
-        typedlit(Seq.fill(m)(0.0)).as("beta"),
-        lit(false).as("conv"), lit(null).cast("string").as("failed"),
-        lit(0).as("its"))
-      .localCheckpoint(true)
-    var state: DataFrame = null
-    val moment = udaf(new IrlsMoment(m, wFloor = 1e-12, tensor = true))
-    // iteration 1 consumes the first-pass moments (β=0 for every
-    // pair): no beta join, tensor exactly zero — the same scan that
-    // gated viability already produced step 1's stats, and at β=0 the
-    // full and null moments are IDENTICAL (the null fit differs only
-    // in its free set), so one aggregation serves both fits
-    val nT = m * (m + 1) * (m + 2) / 6
-    var firstStats: Option[DataFrame] = if (driverStep) None else Some(firstAgg.select(
-      col("gkey"), explode(typedlit(Seq(0, 1))).as("fit"),
-      col("st").getField("s").as("s"), col("st").getField("g").as("g"),
-      typedlit(Seq.fill(nT)(0.0)).as("t")))
-    // Beta-state distribution regime, gated ONCE on the pair count
-    // (r13 verdict item 2). Below the threshold the active state is
-    // collected and broadcast each step — the collected bytes equal
-    // what BroadcastExchange would move through the driver anyway, and
-    // one job serves both the continue-check and the build side. Above
-    // it (~10^7 simultaneously-active pairs ≈ GBs of beta vectors)
-    // neither the collect nor the broadcast fits on the driver, so the
-    // state side joins as a SHUFFLE hash join (no driver materialize)
-    // and the continue-check becomes a count over the checkpointed
-    // state — two cheap distributed jobs instead of one driver-sized
-    // one. Both regimes step the same state frame with the same UDF
-    // (agreement pinned by the regime spec in SourcesAndGramSpec).
-    // Driver-stepped regime (r16 verdict item 3 — the per-iteration
-    // cost was ~75% fixed job overhead): in the broadcast regime the
-    // ENTIRE active state already round-trips the driver every
-    // iteration (collect → LocalRelation → broadcast), yet each step
-    // still paid THREE cluster jobs — the moment scan, the stepped
-    // join + localCheckpoint, and the next active-collect. When the
-    // pair grid is small enough that the moment rows (~(m²/2 + m³/6)
-    // doubles each) are driver-sized too, the Newton solves run on
-    // the driver and an iteration costs exactly ONE job: the moment
-    // aggregation, collected. State lives in a driver array between
-    // iterations — nothing is checkpointed per step. The arithmetic
-    // is gramStep + IrlsMoment, shared verbatim with the other two
-    // regimes (agreement pinned by the regime spec); the shuffle
-    // regime (pair grids too big for ANY driver materialization) is
-    // untouched. (Regime knobs/decision now live above the first
-    // pass — the decision is static on the config grid size.)
-    var cont = true
-    val dbg = sys.env.contains("GRAFT_FIRTH_DEBUG")
-    def dbgT(label: String, t0: Long): Unit =
-      if (dbg) System.err.println(
-        f"[firthGram]   $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    var finAllDrv: DataFrame = null
-    if (driverStep) {
-      final class DSt(val gkey: Long, val fit: Int) {
-        var beta: Seq[Double] = Seq.fill(m)(0.0)
-        var conv = false; var failed: String = null; var its = 0
-        def alive: Boolean = !conv && failed == null &&
-          its < (if (fit == 1) 2 * cfg.maxIter else cfg.maxIter)
-      }
-      // viable pairs straight from the driver first-pass buffer — no
-      // collect job
-      val viable: Array[Long] = (0 until gridSize)
-        .filter(gi => firstN(gi) > 0 && firstFailed(gi) == null)
-        .map(_.toLong).toArray
-      val sts = viable.flatMap(g => Seq(new DSt(g, 0), new DSt(g, 1)))
-      val byKey = sts.map(s => ((s.gkey, s.fit), s)).toMap
-      val zeroT = Seq.fill(nT)(0.0)
-      val nS = m * (m + 1) / 2
-      val nBuf = nS + m + nT
-      // the per-iteration moment scan runs as ONE shuffle-free
-      // mapPartitions job over the cached flat frame's InternalRows:
-      // the UDAF route paid a per-row IrlsRow decode (two array
-      // copies), a LocalRelation broadcast join, a hash-aggregate
-      // exchange and a 3.6k-row collect EVERY iteration — measured
-      // ~1.2 s/iteration at the headline shape with only ~0.3 s of
-      // arithmetic in it. Here each partition accumulates straight
-      // into one flat (active-fit × 119-double) buffer via the
-      // broadcast beta index and the driver element-wise reduces 32
-      // buffers; the per-row products replicate IrlsMoment.reduce
-      // operand-for-operand (same eta fold, same (w·xᵢ)·xⱼ and
-      // ((u·xᵢ)·xⱼ)·x_l associativity, same floor), so iterates
-      // agree across regimes to partial-merge order — the tolerance
-      // class the regime spec pins at 1e-8.
-      val flatPlan = cached.select(
-        (col("gkey") +: (0 until m).map(i => col(s"v$i"))): _*)
-      // r22 (r21 verdict item 5): the partition-buffer merge after
-      // each moment scan is a DRIVER-SIDE serial fold of ~32
-      // grid-sized arrays — the 8-vs-32-core gram scaling ratio
-      // (1.88x at 4x cores) fingered it as the path's weakest
-      // scaling point. `spark.graft.irls.treeFold=true` merges the
-      // buffers in a depth-2 treeAggregate round on the executors
-      // instead (driver receives ~sqrt(P) pre-merged buffers) — the
-      // re-test knob for the r21 rejection, measured at the 10x
-      // shape this time (ProfMas10x gramtree); the default stays
-      // the serial fold, which r21 measured faster at both shapes.
-      val treeFold = spark.conf
-        .get("spark.graft.irls.treeFold", "false").toBoolean
-      def foldBufs(rdd: org.apache.spark.rdd.RDD[Array[Double]],
-          size: Int): Array[Double] = {
-        def add(a: Array[Double], b: Array[Double]): Array[Double] = {
-          var i = 0
-          while (i < a.length) { a(i) += b(i); i += 1 }
-          a
-        }
-        // fold/treeAggregate both seed a fresh zero per task, so a
-        // zero-partition plan (empty melted input) still returns the
-        // all-zero buffer instead of throwing
-        if (treeFold) rdd.treeAggregate(new Array[Double](size))(add, add, depth = 2)
-        else rdd.fold(new Array[Double](size))(add)
-      }
-      var firstPass = true
-      var act = sts.filter(_.alive)
-      while (act.nonEmpty) {
-        val tIter = System.nanoTime()
-        if (firstPass) {
-          // iteration 1 consumes the first-pass moments (β=0, tensor
-          // exactly zero, full ≡ null) straight from the driver
-          // buffer — no collect, no extra scan
-          firstPass = false
-          viable.foreach { g =>
-            val off = g.toInt * nF
-            val s = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-              java.util.Arrays.copyOfRange(firstDrv, off + 2, off + 2 + nS0))
-            val gr = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-              java.util.Arrays.copyOfRange(firstDrv, off + 2 + nS0, off + 2 + nS0 + m))
-            Seq(0, 1).foreach { fit =>
-              byKey.get((g, fit)).filter(_.alive).foreach { st =>
-                val res = gramStep(fit, st.beta, s, gr, zeroT)
-                st.beta = res.beta; st.conv = res.conv
-                st.failed = res.failed; st.its += 1
-              }
-            }
-          }
-        } else {
-          val nAct = act.length
-          val idxOf = new java.util.HashMap[Long, Array[Int]]()
-          act.zipWithIndex.foreach { case (st, i) =>
-            val a = idxOf.computeIfAbsent(st.gkey, _ => Array(-1, -1))
-            a(st.fit) = i
-          }
-          val betas: Array[Array[Double]] = act.map(_.beta.toArray)
-          val bcIdx = spark.sparkContext.broadcast((idxOf, betas))
-          val mm = m
-          val nBufL = nBuf
-          val nSL = nS
-          val nTL = nT
-          val bufRdd = flatPlan.queryExecution.toRdd.mapPartitions { it =>
-            val (idx, bs) = bcIdx.value
-            val buf = new Array[Double](nAct * nBufL)
-            val x = new Array[Double](mm)
-            val kk = mm - 2
-            while (it.hasNext) {
-              val r = it.next()
-              val slots = idx.get(r.getLong(0))
-              if (slots != null) {
-                // design features [x, covs…, 1] from packed [x, y, covs…]
-                x(0) = r.getDouble(1)
-                var c = 0
-                while (c < kk) { x(c + 1) = r.getDouble(c + 3); c += 1 }
-                x(mm - 1) = 1.0
-                val y = r.getDouble(2)
-                var f = 0
-                while (f < 2) {
-                  val si = slots(f)
-                  if (si >= 0) {
-                    val b = bs(si)
-                    var eta = 0.0
-                    var i = 0
-                    while (i < mm) { eta += x(i) * b(i); i += 1 }
-                    val p = 1.0 / (1.0 + math.exp(-eta))
-                    val w = math.max(p * (1.0 - p), 1e-12)
-                    val r1 = y - p
-                    val off = si * nBufL
-                    var idx2 = off
-                    i = 0
-                    while (i < mm) {
-                      val wi = w * x(i)
-                      var j = i
-                      while (j < mm) { buf(idx2) += wi * x(j); idx2 += 1; j += 1 }
-                      buf(off + nSL + i) += x(i) * r1
-                      i += 1
-                    }
-                    val u = w * (0.5 - p)
-                    var ti = off + nSL + mm
-                    i = 0
-                    while (i < mm) {
-                      val ui = u * x(i)
-                      var j = i
-                      while (j < mm) {
-                        val uij = ui * x(j)
-                        var l = j
-                        while (l < mm) { buf(ti) += uij * x(l); ti += 1; l += 1 }
-                        j += 1
-                      }
-                      i += 1
-                    }
-                  }
-                  f += 1
-                }
-              }
-            }
-            Iterator.single(buf)
-          }
-          val totals = foldBufs(bufRdd, nAct * nBufL)
-          bcIdx.destroy()
-          act.zipWithIndex.foreach { case (st, i) =>
-            val off = i * nBuf
-            val s = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-              java.util.Arrays.copyOfRange(totals, off, off + nS))
-            val gr = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-              java.util.Arrays.copyOfRange(totals, off + nS, off + nS + m))
-            val t = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-              java.util.Arrays.copyOfRange(totals, off + nS + m, off + nBuf))
-            val res = gramStep(st.fit, st.beta, s, gr, t)
-            st.beta = res.beta; st.conv = res.conv
-            st.failed = res.failed; st.its += 1
-          }
-        }
-        act = sts.filter(_.alive)
-        if (dbg) System.err.println(
-          f"[firthGram] driver-iter ${(System.nanoTime() - tIter) / 1e9}%.3f s act=${act.length}")
-      }
-      val outRows: Array[org.apache.spark.sql.Row] =
-        sts.map(s => org.apache.spark.sql.Row(s.gkey, s.fit, s.beta, s.conv, s.failed, s.its))
-      state = spark.createDataFrame(java.util.Arrays.asList(outRows: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("gkey", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("fit", org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("beta",
-            org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)),
-          org.apache.spark.sql.types.StructField("conv", org.apache.spark.sql.types.BooleanType),
-          org.apache.spark.sql.types.StructField("failed", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("its", org.apache.spark.sql.types.IntegerType))))
-      // fused final scan, raw-row: the same ONE-job shape as the
-      // Newton iterations — per row, per non-failed fit: eta at the
-      // FINAL beta, clamped log-likelihood term, 28 information sums;
-      // finalFn (the cholesky/pll/se math) runs on the driver. Same
-      // operand order as the withPW/sum-column chain it replaces.
-      val tFin0 = System.nanoTime()
-      val finSts = sts.filter(_.failed == null)
-      finAllDrv = {
-        if (finSts.isEmpty) {
-          spark.createDataFrame(spark.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("gkey",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("fit",
-                org.apache.spark.sql.types.IntegerType),
-              org.apache.spark.sql.types.StructField("fin",
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("pll",
-                    org.apache.spark.sql.types.DoubleType),
-                  org.apache.spark.sql.types.StructField("se0",
-                    org.apache.spark.sql.types.DoubleType),
-                  org.apache.spark.sql.types.StructField("failed",
-                    org.apache.spark.sql.types.StringType)))))))
-        } else {
-          val nFin = finSts.length
-          val idxF = new java.util.HashMap[Long, Array[Int]]()
-          finSts.zipWithIndex.foreach { case (st, i) =>
-            val a = idxF.computeIfAbsent(st.gkey, _ => Array(-1, -1))
-            a(st.fit) = i
-          }
-          val betasF: Array[Array[Double]] = finSts.map(_.beta.toArray)
-          val bcF = spark.sparkContext.broadcast((idxF, betasF))
-          val mm = m
-          val nSL = nS
-          val nFB = nSL + 1
-          val finTotals = flatPlan.queryExecution.toRdd.mapPartitions { it =>
-            val (idx, bs) = bcF.value
-            val buf = new Array[Double](nFin * nFB)
-            val x = new Array[Double](mm)
-            val kk = mm - 2
-            while (it.hasNext) {
-              val r = it.next()
-              val slots = idx.get(r.getLong(0))
-              if (slots != null) {
-                x(0) = r.getDouble(1)
-                var c = 0
-                while (c < kk) { x(c + 1) = r.getDouble(c + 3); c += 1 }
-                x(mm - 1) = 1.0
-                val y = r.getDouble(2)
-                var f = 0
-                while (f < 2) {
-                  val si = slots(f)
-                  if (si >= 0) {
-                    val b = bs(si)
-                    var eta = 0.0
-                    var i = 0
-                    while (i < mm) { eta += x(i) * b(i); i += 1 }
-                    val p = 1.0 / (1.0 + math.exp(-eta))
-                    val w = math.max(p * (1.0 - p), 1e-12)
-                    val pc = math.max(math.min(p, 1.0 - 1e-15), 1e-15)
-                    val off = si * nFB
-                    var idx2 = off
-                    i = 0
-                    while (i < mm) {
-                      val wi = w * x(i)
-                      var j = i
-                      while (j < mm) { buf(idx2) += wi * x(j); idx2 += 1; j += 1 }
-                      i += 1
-                    }
-                    buf(off + nSL) +=
-                      y * math.log(pc) + (1.0 - y) * math.log(1.0 - pc)
-                  }
-                  f += 1
-                }
-              }
-            }
-            Iterator.single(buf)
-          }.fold(new Array[Double](nFin * nFB)) { (a, b) =>
-            // fold, not reduce: zero-partition plans return all-zero
-            var i = 0
-            while (i < a.length) { a(i) += b(i); i += 1 }
-            a
-          }
-          bcF.destroy()
-          val finRows = finSts.zipWithIndex.map { case (st, i) =>
-            val off = i * nFB
-            val fin = finalFn(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-              java.util.Arrays.copyOfRange(finTotals, off, off + nSL)),
-              finTotals(off + nSL))
-            (st.gkey, st.fit, fin)
-          }.toSeq
-          finRows.toDF("gkey", "fit", "fin")
-        }
-      }
-      stampF("final-scan-drv", tFin0)
-    } else {
-    state = initStateFrame()
-    while (cont) {
-      val tColl = System.nanoTime()
-      val actDf = state.filter(activeCond).select("gkey", "fit", "beta")
-      val actRows: Array[org.apache.spark.sql.Row] =
-        if (shuffleBeta) null else actDf.collect()
-      val nAct: Long = if (shuffleBeta) actDf.count() else actRows.length.toLong
-      dbgT("collect", tColl)
-      cont = nAct > 0
-      if (!cont) {
-        if (sys.env.contains("GRAFT_FIRTH_DEBUG"))
-          System.err.println(s"[firthGram] loop done t=${System.nanoTime() / 1e9}")
-      } else {
-      // the ONE aggregation pass: X'WX, first-order score, and the
-      // third-order tensor reduce map-side from the same scan into
-      // ONE fused buffer per (pair, fit) — see IrlsMoment. While both
-      // of a pair's fits are active the gkey join fans each payload
-      // row out to both beta rows (one scan, two moment sets — the
-      // fused-final-scan trade); fit rides along to key the stats
-      // back to the right state row via groupBy(gkey, fit).
-      val stats = firstStats match {
-        case Some(fs) => firstStats = None; fs
-        case None =>
-          val joined =
-            if (shuffleBeta)
-              // big-pair regime: the state never touches the driver;
-              // shuffle_hash keeps the (small-per-partition) state as
-              // the build side without a broadcast
-              keyedDf.join(actDf.hint("shuffle_hash"), "gkey")
-            else {
-              // LocalRelation, not parallelize: the broadcast build
-              // then runs driver-side with no extra cluster job per
-              // iteration
-              val actSt = spark.createDataFrame(
-                java.util.Arrays.asList(actRows: _*),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("gkey", org.apache.spark.sql.types.LongType),
-                  org.apache.spark.sql.types.StructField("fit", org.apache.spark.sql.types.IntegerType),
-                  org.apache.spark.sql.types.StructField("beta",
-                    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))))
-              keyedDf.join(broadcast(actSt), "gkey")
-            }
-          joined
-            .groupBy("gkey", "fit")
-            .agg(moment(col("v"), col("beta")).as("st"))
-            .select(col("gkey"), col("fit"),
-              col("st").getField("s").as("s"), col("st").getField("g").as("g"),
-              col("st").getField("t").as("t"))
-      }
-      val tStep = System.nanoTime()
-      val stepped = state
-        .join(stats, Seq("gkey", "fit"), "left")
-        .select(col("gkey"), col("fit"), col("its"),
-          col("s").isNotNull.as("stepped"),
-          when(col("failed").isNull && !col("conv") && col("s").isNotNull,
-            stepUdf(col("fit"), col("beta"), col("s"), col("g"), col("t")))
-            .otherwise(struct(col("beta").as("beta"), col("conv").as("conv"),
-              col("failed").as("failed"))).as("u"))
-        .select(col("gkey"), col("fit"),
-          col("u.beta").as("beta"), col("u.conv").as("conv"),
-          col("u.failed").as("failed"),
-          (col("its") + when(col("stepped"), 1).otherwise(0)).as("its"),
-          col("stepped"))
-        // checkpoint BEFORE the spawn branch reuses this frame: the
-        // union's two branches would otherwise each evaluate the full
-        // aggregation-scan subtree — two 9M-row scans per iteration
-        .localCheckpoint(true)
-      dbgT("agg+step+ckpt", tStep)
-      // the null fit runs concurrently from iteration 1 (init above),
-      // so no spawn branch: the stepped checkpoint IS the next state.
-      // The Jeffreys penalty stays on the FULL design for both fits —
-      // only the step UDF's free set differs (firthRaw:250-252).
-      state = stepped.drop("stepped")
-      if (sys.env.contains("GRAFT_FIRTH_DEBUG"))
-        System.err.println(s"[firthGram] iter done n_act=$nAct" +
-          (if (actRows == null) "" else {
-            val nFull = actRows.count(_.getInt(1) == 0)
-            s" full=$nFull null=${actRows.length - nFull}"
-          }) + s" t=${System.nanoTime() / 1e9}")
-      }
-    }
+      it += 1
+      act = active
     }
 
-    // one scan at the FINAL beta: log-likelihood + information matrix
-    // → penalized log-likelihood (ll + ½·log det X'WX) and the
-    // predictor's Wald se, both executor-side
-    val finalUdf = udf(finalFn)
-    // ONE scan at BOTH final betas (the fused state carries full and
-    // null rows): each payload row fans out to its pair's two
-    // broadcast beta rows — same arithmetic as two separate scans,
-    // half the scan IO
-    val pc = greatest(least(col("p"), lit(1.0 - 1e-15)), lit(1e-15))
-    val tFin = System.nanoTime()
-    val finAll = if (finAllDrv != null) finAllDrv else withPW(keyedDf.join(
-        broadcast(state.filter(col("failed").isNull).select("gkey", "fit", "beta")), "gkey"))
-      .withColumn("lli",
-        col("v")(1) * log(pc) + (lit(1.0) - col("v")(1)) * log(lit(1.0) - pc))
-      .groupBy("gkey", "fit").agg(
-        (pairs.map { case (i, j) => sum(col("w") * f(i) * f(j)).as(s"s_${i}_$j") } :+
-          sum(col("lli")).as("ll")).head,
-        (pairs.map { case (i, j) => sum(col("w") * f(i) * f(j)).as(s"s_${i}_$j") }.tail :+
-          sum(col("lli")).as("ll")): _*)
-      .select(col("gkey"), col("fit"),
-        finalUdf(array(pairs.map { case (i, j) => col(s"s_${i}_$j") }: _*), col("ll"))
-          .as("fin"))
-      .localCheckpoint(true)
-    stampF("final-scan", tFin)
-    if (doPersist) cached.unpersist()
+    if (penalized) {
+      val fin = fits.filter(_.failed == null)
+      val finalKernel = new FinalKernel(m)
+      val tot = scan(finalKernel, fin)
+      fin.zipWithIndex.foreach { case (f, a) =>
+        val off = a * finalKernel.width
+        try {
+          val im = unpack(tot, off, m)
+          val l = breeze.linalg.cholesky(im)
+          val logDet = 2.0 * (0 until m).map(i => math.log(l(i, i))).sum
+          f.se0 = math.sqrt(breeze.linalg.inv(im).apply(0, 0))
+          f.pll = tot(off + nS) + 0.5 * logDet
+        } catch {
+          case e: Throwable => f.finFailed = failureReason(e)
+        }
+      }
+    }
+    if (persist) flat.unpersist()
 
-    val fullState = state.filter(col("fit") === 0).select("gkey", "beta", "conv", "failed")
-    val nullState = state.filter(col("fit") === 1).select("gkey", "beta", "conv", "failed")
-    val fullStats = finAll.filter(col("fit") === 0).select("gkey", "fin")
-    val nullStats = finAll.filter(col("fit") === 1).select("gkey", "fin")
-
+    // every fitted pair kept all its covariates (a constant one fails)
     val z975 = 1.959963984540054
-    val solvedViable = fullState
-      .join(fullStats, Seq("gkey"), "left")
-      .join(nullStats.select(col("gkey"), col("fin").as("nfin")), Seq("gkey"), "left")
-      .join(nullState.select(col("gkey"), col("conv").as("nconv"),
-        col("failed").as("nfailed")), Seq("gkey"), "left")
-      .join(counts.select("gkey", "cases", "n", "ckeep"), "gkey")
-      .as[(Long, Seq[Double], Boolean, String, FirthFinalR, FirthFinalR,
-        Boolean, String, Long, Long, Seq[Boolean])]
-      .map { case (gkey, b, conv, failed, fin, nfin, nconv, nfailed, cases, n, ckeep) =>
-        val pred = predictors((gkey / dependents.length).toInt)
-        val dep = dependents((gkey % dependents.length).toInt)
-        val reason = Seq(Option(failed), Option(nfailed),
-          Option(fin).flatMap(r => Option(r.failed)),
-          Option(nfin).flatMap(r => Option(r.failed))).flatten.headOption
-        reason match {
-          case Some(r) =>
-            BinResult(pred, dep, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-              Double.NaN, Double.NaN, -9L, -9L, -9L, converged = false, r, "nan")
-          case None =>
-            val stat = math.max(2.0 * (fin.pll - nfin.pll), 0.0)
-            val pval = graft.functions.Numerics.chi2Sf(stat, 1.0)
-            val b0 = b.head
-            val se0 = fin.se0
-            // kept (per-pair non-constant) covariates only — the same
-            // equation the in-task fitter reports (analysis.py:73
-            // semantics); trailing "+ " with zero kept covs mirrors
-            // the reference
-            val keptNames = covNames.zip(ckeep).collect { case (nm, true) => nm }
-            BinResult(pred, dep, pval, b0, se0, math.exp(b0),
-              b0 - z975 * se0, b0 + z975 * se0,
-              cases, n - cases, n, converged = conv && nconv, "nan",
-              s"$dep ~ $pred + ${keptNames.mkString(" + ")}")
-        }
-      }.toDF()
-    val failedRows = counts.filter(col("failed_reason").isNotNull)
-      .select("gkey", "cases", "n", "failed_reason")
-      .as[(Long, Long, Long, String)]
-      .map { case (gkey, _, _, reason) =>
-        BinResult(predictors((gkey / dependents.length).toInt),
-          dependents((gkey % dependents.length).toInt),
-          Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-          -9L, -9L, -9L, converged = false, reason, "nan")
-      }.toDF()
-    completeGrid(failedRows.unionAll(solvedViable), cfg, binaryDefaults(cfg))
+    fits.grouped(if (penalized) 2 else 1).foreach { pf =>
+      val full = pf.head
+      val gi = full.gi
+      val pred = predictors(gi / dependents.length)
+      val dep = dependents(gi % dependents.length)
+      val n = first(gi * nF).toLong
+      val cases = first(gi * nF + 1).toLong
+      def wald(pval: Double, se0: Double, converged: Boolean): BinResult = {
+        val b0 = full.beta(0)
+        BinResult(pred, dep, pval, b0, se0, math.exp(b0), b0 - z975 * se0, b0 + z975 * se0,
+          cases, n - cases, n, converged, "nan",
+          s"$dep ~ $pred + ${cfg.covariates.mkString(" + ")}")
+      }
+      out += ((pf.map(_.failed) ++ pf.map(_.finFailed)).find(_ != null) match {
+        case Some(reason) => failRow(gi, reason)
+        case None if penalized =>
+          val stat = math.max(2.0 * (full.pll - pf(1).pll), 0.0)
+          wald(graft.functions.Numerics.chi2Sf(stat, 1.0), full.se0, full.conv && pf(1).conv)
+        case None =>
+          try {
+            val se0 = math.sqrt(breeze.linalg.inv(unpack(full.info, 0, m)).apply(0, 0))
+            wald(graft.functions.Numerics.normSf2(full.beta(0) / se0), se0, full.step < tol)
+          } catch {
+            case e: Throwable => failRow(gi, failureReason(e))
+          }
+      })
+    }
+    completeGrid(spark.createDataset(out.toSeq)(Encoders.product[BinResult]).toDF(),
+      cfg, binaryDefaults(cfg))
   }
 
   // ------------------------------------------------------ grid completion

@@ -1521,10 +1521,10 @@ object Mas {
   }
 
   /** a10: the DISTRIBUTED logistic IRLS (Association.logisticGram) on
-    * the same 2×2 tables as a03 — beta stays a DataFrame, Newton
-    * solves run executor-side, one aggregation scan per iteration.
-    * The saturated-model MLE equals the sample log-odds-ratio, so the
-    * closed-form cell oracle applies unchanged. */
+    * the same 2×2 tables as a03 — one shuffle-free moment scan per
+    * Newton step, the small solves on the driver. The saturated-model
+    * MLE equals the sample log-odds-ratio, so the closed-form cell
+    * oracle applies unchanged. */
   def a10AssocLogisticGram(spark: SparkSession, dir: String): DataFrame = {
     val cfg = Association.Config(Seq("xbin"), Seq("d_urgent", "d_open", "d_big", "d_many"),
       model = "logistic", minCaseCount = 5, maxIter = 100, tol = 1e-12)
@@ -1538,12 +1538,12 @@ object Mas {
 
   /** a17: the DISTRIBUTED Firth IRLS (Association.firthGram) on the
     * same 2×2 tables as a04 — the scale path for the reference's
-    * DEFAULT model: beta stays a DataFrame, penalized Newton solves
-    * run executor-side, ONE aggregation scan per iteration (the
-    * hat-diagonal score reconstructs from the same scan's
-    * third-order moment tensor). Same Haldane closed-form beta/OR
-    * oracle as a04; equality with the in-task fitter is spec-pinned
-    * (SourcesAndGramSpec, incl. a multi-covariate shape). */
+    * DEFAULT model: ONE shuffle-free moment scan per Newton step (the
+    * hat-diagonal score reconstructs from the same scan's third-order
+    * moment tensor), the penalized solves on the driver. Same Haldane
+    * closed-form beta/OR oracle as a04; equality with the in-task
+    * fitter is spec-pinned (SourcesAndGramSpec, incl. a
+    * multi-covariate shape). */
   def a17AssocFirthGram(spark: SparkSession, dir: String): DataFrame = {
     val cfg = Association.Config(Seq("xbin"), Seq("d_urgent", "d_open", "d_big", "d_many"),
       model = "firth", minCaseCount = 5, maxIter = 200, tol = 1e-11)

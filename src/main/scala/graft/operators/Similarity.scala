@@ -407,7 +407,7 @@ object Similarity {
     require(n > 0 && n <= 2000000L,
       s"pcaPower: Long-exact Gram bound is n <= 2e6 (got $n); use the DECIMAL(38) variant beyond")
     // both stat scans are shuffle-free mapPartitions folds over flat
-    // long buffers (the IrlsMoment lesson): the previous per-row
+    // long buffers (the gram IRLS scan's lesson): the previous per-row
     // d(d+1)/2 struct explode generated ~114M rows at sf0.1 just to
     // hash-aggregate integers that sum order-independently anyway.
     // Arithmetic is IDENTICAL (exact long sums; the n ≤ 2e6 guard is

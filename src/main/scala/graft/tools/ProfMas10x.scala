@@ -6,9 +6,8 @@ import graft.operators.Association
 /**
  * Isolated MAS 10x point (the Bench scale_slope shape: 50 000 samples
  * x 1800 dependents x 5 covariates, 90M melted rows) for one path —
- * `runMain graft.tools.ProfMas10x <firth|gram|linear> [reps]`.
- * Run with GRAFT_FIRTH_DEBUG=1 to get the per-phase stamps the r20
- * verdict asks to read at this point. Dev-only.
+ * `runMain graft.tools.ProfMas10x <firth|gram|linear|cache> [reps]`.
+ * Dev-only.
  */
 object ProfMas10x {
   def main(args: Array[String]): Unit = {
@@ -59,17 +58,6 @@ object ProfMas10x {
         cached.unpersist(true)
       }
     } else for (r <- 1 to reps) {
-      // r22 regime/fold knobs (r20 item 4 + r21 items 4/5):
-      //  - gramshuffle: broadcastPairs=0 forces the unbounded-grid
-      //    shuffleBeta regime (the fallback that carries the 100 TB
-      //    claim) at the 10x shape
-      //  - gramtree: depth-2 treeAggregate for the per-iteration
-      //    moment-buffer merge instead of the driver serial fold
-      path match {
-        case "gramshuffle" => spark.conf.set("spark.graft.irls.broadcastPairs", "0")
-        case "gramtree" => spark.conf.set("spark.graft.irls.treeFold", "true")
-        case _ => ()
-      }
       val t0 = System.nanoTime()
       (path match {
         case "firth" => Association.binary(melted, cfg)
@@ -78,8 +66,6 @@ object ProfMas10x {
       }).write.format("noop").mode("overwrite").save()
       println(f"PROF mas10x_$path rep$r ${(System.nanoTime() - t0) / 1e9}%.2f s " +
         f"load=${java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage}%.1f")
-      spark.conf.unset("spark.graft.irls.broadcastPairs")
-      spark.conf.unset("spark.graft.irls.treeFold")
       spark.catalog.clearCache()
     }
     spark.stop()

@@ -261,14 +261,11 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out("dep_missing") == "No data after dropping nulls.")
   }
 
-  test("shuffle-beta regime (broadcastPairs=0) matches the broadcast regime") {
-    // r13 verdict item 2: above spark.graft.irls.broadcastPairs the
-    // per-iteration beta state joins as a shuffle hash join with a
-    // distributed continue-check instead of driver collect+broadcast.
-    // Force the shuffle regime with threshold 0 and pin agreement with
-    // the default (broadcast) regime on every inference column. The
-    // two regimes shuffle the scan differently, so sums can differ in
-    // FP associativity — 1e-8 is the pin, not bit equality.
+  test("gram fitters give the same rows at slice capacity 1, 3 and unbounded") {
+    // a scan deals its slots (pairs in the first pass, fits in the
+    // Newton and final scans) into slices and runs once per slice; the
+    // slicing must not change a row. Sums merge in a different order
+    // per slicing, so the pin on the doubles is 1e-8, not bit equality.
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(61)
@@ -276,54 +273,88 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
       val x = rng.nextGaussian(); val z = rng.nextGaussian()
       Seq(
         ("x", "dep_a", x, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.8 * x - 0.4)))) 1.0 else 0.0, Seq(z)),
-        ("x", "dep_b", x, if (rng.nextDouble() < 0.3) 1.0 else 0.0, Seq(z)))
+        ("x", "dep_b", x, if (rng.nextDouble() < 0.3) 1.0 else 0.0, Seq(z)),
+        ("x", "dep_c", x, if (i < 3) 1.0 else 0.0, Seq(z)))
     }
     val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
-    val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
-      model = "firth", minCaseCount = 5)
-    val bcastF = Association.firthGram(melted, cfg).collect()
-      .map(r => r.getAs[String]("dependent") -> r).toMap
-    val bcastL = Association.logisticGram(melted, cfg.copy(model = "logistic")).collect()
-      .map(r => r.getAs[String]("dependent") -> r).toMap
-    spark.conf.set("spark.graft.irls.broadcastPairs", "0")
-    try {
-      val shufF = Association.firthGram(melted, cfg).collect()
-        .map(r => r.getAs[String]("dependent") -> r).toMap
-      val shufL = Association.logisticGram(melted, cfg.copy(model = "logistic")).collect()
-        .map(r => r.getAs[String]("dependent") -> r).toMap
-      for (d <- Seq("dep_a", "dep_b"); c <- Seq("beta", "se", "pval", "OR", "ci_low", "ci_high")) {
-        assert(math.abs(bcastF(d).getAs[Double](c) - shufF(d).getAs[Double](c)) < 1e-8,
-          s"firth $d $c: bcast=${bcastF(d).getAs[Double](c)} shuffle=${shufF(d).getAs[Double](c)}")
-        assert(math.abs(bcastL(d).getAs[Double](c) - shufL(d).getAs[Double](c)) < 1e-8,
-          s"logistic $d $c: bcast=${bcastL(d).getAs[Double](c)} shuffle=${shufL(d).getAs[Double](c)}")
+    val deps = Seq("dep_a", "dep_b", "dep_c")
+    for (model <- Seq("firth", "logistic")) {
+      val cfg = Association.Config(Seq("x"), deps, Seq("z"), model = model, minCaseCount = 5)
+      val bySlots = Seq(1, 3, Int.MaxValue).map { slots =>
+        slots -> operators.GramSlices.fit(melted, cfg, slots).collect()
+          .map(r => r.getAs[String]("dependent") -> r).toMap
       }
-      for (d <- Seq("dep_a", "dep_b")) {
-        assert(shufF(d).getAs[Boolean]("converged"), s"firth $d")
-        assert(shufL(d).getAs[Boolean]("converged"), s"logistic $d")
+      val (_, base) = bySlots.last
+      assert(base("dep_c").getAs[String]("failed_reason") == "Insufficient case count (3 cases).")
+      for ((slots, out) <- bySlots; d <- deps) {
+        for (c <- Seq("beta", "se", "pval", "OR", "ci_low", "ci_high")) {
+          val (a, b) = (out(d).getAs[Double](c), base(d).getAs[Double](c))
+          assert((a.isNaN && b.isNaN) || math.abs(a - b) < 1e-8,
+            s"$model slots=$slots $d $c: $a vs unbounded $b")
+        }
+        for (c <- Seq("converged", "failed_reason", "equation", "cases", "controls", "total_n"))
+          assert(out(d).getAs[Any](c) == base(d).getAs[Any](c), s"$model slots=$slots $d $c")
       }
-    } finally spark.conf.unset("spark.graft.irls.broadcastPairs")
-    // r17: the default above now runs the DRIVER-STEPPED regime
-    // (driverStepPairs covers this tiny grid), so the pin above is
-    // driver-vs-shuffle. Pin the middle regime too: driverStepPairs=0
-    // forces the DataFrame broadcast loop (the r16 path) — all three
-    // regimes share gramStep/IrlsMoment and must land together.
-    spark.conf.set("spark.graft.irls.driverStepPairs", "0")
-    try {
-      val dfLoopF = Association.firthGram(melted, cfg).collect()
-        .map(r => r.getAs[String]("dependent") -> r).toMap
-      val dfLoopL = Association.logisticGram(melted, cfg.copy(model = "logistic"))
-        .collect().map(r => r.getAs[String]("dependent") -> r).toMap
-      for (d <- Seq("dep_a", "dep_b"); c <- Seq("beta", "se", "pval", "OR")) {
-        assert(math.abs(bcastF(d).getAs[Double](c) - dfLoopF(d).getAs[Double](c)) < 1e-8,
-          s"firth $d $c: driver=${bcastF(d).getAs[Double](c)} dfloop=${dfLoopF(d).getAs[Double](c)}")
-        assert(math.abs(bcastL(d).getAs[Double](c) - dfLoopL(d).getAs[Double](c)) < 1e-8,
-          s"logistic $d $c: driver=${bcastL(d).getAs[Double](c)} dfloop=${dfLoopL(d).getAs[Double](c)}")
+      for (d <- Seq("dep_a", "dep_b")) assert(base(d).getAs[Boolean]("converged"), s"$model $d")
+    }
+  }
+
+  test("gram fitters fail a pair with a constant covariate; in-task fits the reduced design") {
+    // the gram path keeps every covariate in the design, so a per-pair
+    // constant covariate makes X'WX singular: the first pass's covariate
+    // range fails such pairs before any Newton step, for both models
+    val sess = spark
+    import sess.implicits._
+    val rng = new scala.util.Random(41)
+    val rows = (0 until 500).flatMap { i =>
+      val x = rng.nextGaussian()
+      Seq(
+        ("x", "dep_a", x, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.7 * x - 0.3)))) 1.0 else 0.0, Seq(3.0)),
+        ("x", "dep_b", x, if (rng.nextDouble() < 0.35) 1.0 else 0.0, Seq(3.0)))
+    }
+    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
+    for (model <- Seq("firth", "logistic")) {
+      val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
+        model = model, minCaseCount = 5)
+      val gram = (if (model == "firth") Association.firthGram(melted, cfg)
+                  else Association.logisticGram(melted, cfg)).collect()
+      assert(gram.length == 2)
+      for (r <- gram) {
+        val d = r.getAs[String]("dependent")
+        assert(r.getAs[String]("failed_reason") == "Singular information matrix.", s"$model $d")
+        assert(!r.getAs[Boolean]("converged"), s"$model $d")
+        assert(r.getAs[String]("equation") == "nan", s"$model $d")
+        assert(Seq("cases", "controls", "total_n").forall(r.getAs[Long](_) == -9L), s"$model $d")
+        assert(r.getAs[Double]("beta").isNaN, s"$model $d")
       }
-      for (d <- Seq("dep_a", "dep_b")) {
-        assert(dfLoopF(d).getAs[Boolean]("converged"), s"firth dfloop $d")
-        assert(dfLoopL(d).getAs[Boolean]("converged"), s"logistic dfloop $d")
+      val inTask = Association.binary(melted, cfg).collect()
+      for (r <- inTask) {
+        val d = r.getAs[String]("dependent")
+        assert(r.getAs[Boolean]("converged") && r.getAs[String]("failed_reason") == "nan",
+          s"$model $d in-task")
+        assert(r.getAs[String]("equation") == s"$d ~ x + ", s"$model $d in-task")
       }
-    } finally spark.conf.unset("spark.graft.irls.driverStepPairs")
+    }
+  }
+
+  test("gram fitters on an empty melted frame return the no-data grid") {
+    val sess = spark
+    import sess.implicits._
+    val melted = Seq(("x", "dep_a", 1.0, 1.0, Seq(0.5)))
+      .toDF("predictor", "dependent", "x", "y", "covs")
+    val zeroPartitions = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], melted.schema)
+    assert(zeroPartitions.rdd.getNumPartitions == 0)
+    for (input <- Seq(melted.limit(0), zeroPartitions); model <- Seq("firth", "logistic")) {
+      val cfg = Association.Config(Seq("x", "w"), Seq("dep_a", "dep_b"), Seq("z"),
+        model = model, minCaseCount = 5)
+      val out = (if (model == "firth") Association.firthGram(input, cfg)
+                 else Association.logisticGram(input, cfg)).collect()
+      assert(out.map(r => (r.getAs[String]("predictor"), r.getAs[String]("dependent"))).toSet ==
+        Set(("x", "dep_a"), ("x", "dep_b"), ("w", "dep_a"), ("w", "dep_b")), model)
+      assert(out.forall(_.getAs[String]("failed_reason") == "No data after dropping nulls."),
+        model)
+    }
   }
 
   test("distributed Gram IRLS applies the same viability gates") {
@@ -339,5 +370,15 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getAs[String]("dependent") -> r.getAs[String]("failed_reason")).toMap
     assert(out("dep_few") == "Insufficient case count (3 cases).")
     assert(out("dep_missing") == "No data after dropping nulls.")
+  }
+}
+
+package operators {
+  /** Test access to the gram fitter's slice capacity: every scan deals
+    * at most `slots` slots into one job. */
+  object GramSlices {
+    def fit(melted: org.apache.spark.sql.DataFrame, cfg: Association.Config,
+        slots: Int): org.apache.spark.sql.DataFrame =
+      Association.gramFit(melted, cfg, penalized = cfg.model == "firth", _ => slots)
   }
 }
