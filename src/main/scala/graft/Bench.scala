@@ -1,911 +1,438 @@
 package graft
 
+import java.util.Locale
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Association
+import graft.operators.{Association, Mas}
 
 /** Benchmark main: times every registered query at the configured
-  * scale factor and prints one JSON line. Materializes through the
-  * noop sink (count() would let Catalyst drop sorts/projections);
+  * scale factor and prints two JSON lines, a detail line and a compact
+  * headline line (always the last stdout line). Materializes through
+  * the noop sink (count() would let Catalyst drop sorts/projections);
   * runs one untimed warm-up query first so JVM/codegen startup isn't
-  * billed to whichever query runs first; fixed alphabetical order. */
+  * billed to whichever query runs first; fixed alphabetical order.
+  *
+  * It reads two environment variables: `SPARK_GRAFT_SF_DIR` (default
+  * sf0.1) and `SPARK_GRAFT_BENCH_ONLY`. `mas` skips the per-query sweep
+  * and times only the MAS headline shapes; any other value is a
+  * comma-separated list of query names or short ids to sweep, with
+  * the headline, probe and scale segments skipped.
+  *
+  * Every published number is measured by the run that publishes it. A
+  * query that throws is listed under `failed`, never timed. End-to-end
+  * study numbers (cohort file → written results) come from
+  * `perfbench/`; this main times operators and the fit alone. */
 object Bench {
+  /** Reps per MAS headline shape; the headline is their min. */
+  private val MasReps = 3
+  /** Longest wait, in seconds, for the host load to fall below 8. */
+  private val LoadGateWaitSecs = 600
+  /** The last stdout line is read through a 2000-char tail buffer. */
+  private[graft] val TailBound = 1900
+
+  private def f1(x: Double): String = "%.1f".formatLocal(Locale.ROOT, x)
+  private def f3(x: Double): String = "%.3f".formatLocal(Locale.ROOT, x)
+  /** 2 dp with trailing zeros trimmed ("1.5", "12.17", "3"). */
+  private[graft] def fq(x: Double): String = {
+    val t = "%.2f".formatLocal(Locale.ROOT, x).reverse.dropWhile(_ == '0').reverse
+    if (t.endsWith(".")) t.dropRight(1) else t
+  }
+  private def jsonObj(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+  private def jsonStrs(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** Per-query JSON keys compress to the canonical short id (a01,
+    * q12, d05b …); mas_* headlines stay full. */
+  def shortId(name: String): String =
+    if (name.startsWith("mas_")) name else name.takeWhile(_ != '_')
+
+  /** The queries a `SPARK_GRAFT_BENCH_ONLY` name list selects. Each
+    * comma-separated token is a full query name or a short id; a token
+    * that matches nothing is an error, not an empty sweep. */
+  private[graft] def selectQueries(spec: String, names: Iterable[String]): Set[String] = {
+    val tokens = spec.split(",").map(_.trim).filter(_.nonEmpty)
+    require(tokens.nonEmpty, "SPARK_GRAFT_BENCH_ONLY names no query")
+    tokens.flatMap { t =>
+      val hits = names.filter(n => n == t || shortId(n) == t)
+      require(hits.nonEmpty, s"SPARK_GRAFT_BENCH_ONLY: no query matches '$t'")
+      hits
+    }.toSet
+  }
+
+  /** Seconds `body` took, or None when it threw: a failure must never
+    * read as a fast time. */
+  private[graft] def attempt(body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    val ok = try { body; true } catch { case _: Throwable => false }
+    if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+  }
+
+  /** The per-query sweep, min-of-2: a single shot on a shared host has
+    * measured 17× swings on unchanged plans. A > 40 % spread between the
+    * two reps adds a third. Each timed query carries the load average
+    * sampled after its reps. A query with any throwing rep is returned
+    * in the second list instead. */
+  private[graft] def sweep(names: Seq[String], rep: String => Option[Double],
+      load: () => Double): (Seq[(String, Double, Double)], Seq[String]) = {
+    val timed = names.map { n =>
+      n -> rep(n).flatMap(r1 => rep(n).flatMap { r2 =>
+        val mn = math.min(r1, r2)
+        if (mn > 0.15 && math.abs(r1 - r2) / mn > 0.4) rep(n).map(math.min(mn, _))
+        else Some(mn)
+      }).map(t => (t, load()))
+    }
+    (timed.collect { case (n, Some((t, l))) => (n, t, l) }, timed.collect { case (n, None) => n })
+  }
+
+  /** One scale_slope entry: `[t1, t10, loads…]`, one load stamp per
+    * one-shot point. */
+  private[graft] def slopeEntry(key: String, t1: Double, t10: Double, loads: Double*): String =
+    s""""$key":[${(Seq(t1, t10).map("%.2f".formatLocal(Locale.ROOT, _)) ++ loads.map(f1))
+      .mkString(",")}]"""
+
+  /** The deterministic synthetic MAS cohort, already melted: n samples
+    * × d dependents × k covariates, x uniform in [-2, 2), y ~
+    * Bernoulli(sigmoid(0.8x − 2 + dep offset)), every value
+    * hash-derived. */
+  private[graft] def masMelted(spark: SparkSession, n: Int, d: Int, k: Int): DataFrame =
+    spark.range(n.toLong * d).select(
+        (col("id") % n).as("sample"), (col("id") / n).cast("long").as("di"))
+      .select(
+        lit("x").as("predictor"),
+        concat(lit("dep_"), col("di")).as("dependent"),
+        (pmod(xxhash64(col("sample"), lit(1)), lit(1000003)) / 1000003.0 * 4.0 - 2.0).as("x"),
+        col("sample"), col("di"))
+      .select(col("predictor"), lit(0).as("pidx"), col("dependent"),
+        col("di").cast("int").as("didx"), col("x"),
+        (pmod(xxhash64(col("sample"), col("di"), lit(7)), lit(1000003)) / 1000003.0 <
+          lit(1.0) / (lit(1.0) + exp(-(col("x") * 0.8 - 2.0 +
+            (col("di") % 7).cast("double") * 0.1)))).cast("double").as("y"),
+        array((1 to k).map(c =>
+          (pmod(xxhash64(col("sample"), lit(c + 100)), lit(1000003)) / 1000003.0).as(s"z$c")): _*)
+          .as("covs"))
+
+  private[graft] def masCfg(d: Int, k: Int): Association.Config =
+    Association.Config(Seq("x"), (0 until d).map(i => s"dep_$i"),
+      (1 to k).map(c => s"z$c"), model = "firth", minCaseCount = 10)
+
+  /** Where the 10× corpus derived from `sfDir` lives: one directory per
+    * absolute source directory, so a run at one scale factor never
+    * reuses another's corpus. */
+  private[graft] def scale10xPath(sfDir: String): String = {
+    val abs = new java.io.File(sfDir).getAbsoluteFile.toPath.normalize.toString
+    "/tmp/graft_scale10x_v4/" + abs.replaceAll("[^A-Za-z0-9._-]", "_") + "-" +
+      Integer.toHexString(abs.hashCode)
+  }
+
+  /** Per-replica offsets of the a46/a49 10× cohort: replica r adds
+    * r × offset to each column. */
+  private[graft] val RankReplicaOffsets =
+    Seq("id" -> 1e7, "x" -> 1e5, "y_avg" -> 1e7, "y_max" -> 1e7, "y_cnt" -> 1e3)
+
+  /** Columns whose value span (max − min) reaches its replica offset.
+    * Replicas are value-disjoint exactly when every span is below its
+    * offset; one aggregate over `coh` decides it. */
+  private[graft] def rankReplicaCollisions(coh: DataFrame): Seq[String] = {
+    val spans = RankReplicaOffsets.map { case (c, _) => (max(col(c)) - min(col(c))).cast("double") }
+    val row = coh.agg(spans.head, spans.tail: _*).head()
+    RankReplicaOffsets.zipWithIndex.collect {
+      case ((c, off), i) if !row.isNullAt(i) && row.getDouble(i) >= off => c
+    }
+  }
+
+  /** The 10× a46/a49 cohort: ten replicas, each offset by a replica
+    * constant, so within-replica rank structure is preserved exactly
+    * while the value sets (the tie tables, the range-partitioned
+    * prefix scan and the rank join) grow 10×. A plain row replica
+    * would keep the tie tables constant and only scale the counts. */
+  private def rankReplica(coh: DataFrame): DataFrame =
+    coh.select(col("xbin") +: RankReplicaOffsets.map(c => col(c._1)) :+
+        explode(array((0 until 10).map(lit): _*)).as("r"): _*)
+      .select(col("xbin") +: RankReplicaOffsets.map { case (c, off) =>
+        (col(c) + col("r") * lit(off)).cast(coh.schema(c).dataType).as(c)
+      }: _*)
+
+  /** Builds the 10× corpus once per `sfDir` (marker file `_GRAFT_DONE`);
+    * None when any part of it fails. */
+  private def scale10xDir(spark: SparkSession, sfDir: String): Option[String] =
+    try {
+      val out = scale10xPath(sfDir)
+      val marker = new java.io.File(out + "/_GRAFT_DONE")
+      if (!marker.exists()) {
+        val reps = explode(array((0 until 10).map(lit): _*)).as("r")
+        // replica r > 0 applies a per-replica VOCABULARY SUBSTITUTION
+        // (every word gets an r-derived suffix): a bijection on words,
+        // so word sequences, n-gram structure and every within-replica
+        // Jaccard similarity are preserved EXACTLY — the corpus's real
+        // near-dup pair density scales 10× — while replica
+        // vocabularies are disjoint, so no artificial cross-replica
+        // near-dups appear
+        spark.read.parquet(sfDir + "/documents.parquet")
+          .select(col("doc_id"), col("text"), col("lang"), col("source"), reps)
+          .select((col("doc_id") + col("r").cast("long") * 1000000L).as("doc_id"),
+            when(col("r") === 0, col("text")).otherwise(
+              array_join(transform(split(col("text"), " "),
+                w => concat(w, lit("zq"), col("r").cast("string"))), " ")).as("text"),
+            col("lang"), col("source"))
+          .select(col("doc_id"), col("text"), col("lang"), col("source"),
+            length(col("text")).as("n_chars"))
+          .write.mode("overwrite").parquet(out + "/documents.parquet")
+        // embeddings: per-replica random sign flips, an orthogonal
+        // transform — within-replica cosine geometry is exactly the
+        // original's, cross-replica similarity is scrambled
+        spark.read.parquet(sfDir + "/embeddings.parquet")
+          .select(col("vec_id"), col("embedding"), col("label"), reps)
+          .select((col("vec_id") + col("r").cast("long") * 1000000L).as("vec_id"),
+            transform(col("embedding"), (x, i) =>
+              when(pmod(xxhash64(col("r"), i), lit(2)) === 0, x).otherwise(-x))
+              .as("embedding"),
+            col("label"))
+          .write.mode("overwrite").parquet(out + "/embeddings.parquet")
+        // graph family: the co-order and trade edge lists at 1×, and a
+        // 10× DISJOINT-UNION replica (per-replica vertex-id offset),
+        // which preserves the degree distribution and every
+        // within-replica wedge and triangle, so edges, wedge volume
+        // and triangles all scale 10×. Both points read precomputed
+        // parquet, so the join that BUILDS the graph is billed to
+        // neither.
+        graft.operators.Graph.coOrderEdges(spark, sfDir)
+          .select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
+          .write.mode("overwrite").parquet(out + "/coorder_edges_1x.parquet")
+        spark.read.parquet(out + "/coorder_edges_1x.parquet")
+          .select(col("u"), col("v"), reps)
+          .select((col("u") + col("r").cast("long") * 100000000L).as("u"),
+            (col("v") + col("r").cast("long") * 100000000L).as("v"))
+          .write.mode("overwrite").parquet(out + "/coorder_edges_10x.parquet")
+        val trade = graft.operators.Graph.tradeEdges(spark, sfDir)
+        trade.select(col("c").as("src"), col("s").as("dst"))
+          .union(trade.select(col("s").as("src"), col("c").as("dst")))
+          .write.mode("overwrite").parquet(out + "/trade_edges_1x.parquet")
+        spark.read.parquet(out + "/trade_edges_1x.parquet")
+          .select(col("src"), col("dst"), reps)
+          .select(concat(col("src"), lit("#"), col("r").cast("string")).as("src"),
+            concat(col("dst"), lit("#"), col("r").cast("string")).as("dst"))
+          .write.mode("overwrite").parquet(out + "/trade_edges_10x.parquet")
+        marker.createNewFile()
+      }
+      Some(out)
+    } catch { case _: Throwable => None }
+
+  /** Everything the compact last line carries. */
+  private[graft] final case class Headline(
+      total: Double, heads: Seq[(String, Double)], slope: Seq[String],
+      failed: Seq[String], reps: Seq[(String, Seq[Double])], cpus: Int,
+      registrySize: Int, loadGate: String, loadSweep: (Double, Double),
+      loadAvg: Double, sf: String) {
+    def json: String =
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
+        s""""queries":${jsonObj(heads.map { case (k, v) => k -> fq(v) })},""" +
+        (if (slope.isEmpty) "" else slope.mkString(""""scale_slope":{""", ",", "},")) +
+        s""""failed":${jsonStrs(failed)},"cpus":$cpus,"registry_size":$registrySize,""" +
+        s""""load_sweep":[${f3(loadSweep._1)},${f3(loadSweep._2)}],""" +
+        s""""load_avg":${f3(loadAvg)},$loadGate,""" +
+        reps.map { case (k, ts) => s""""${k}_reps":${ts.map(fq).mkString("[", ",", "]")},""" }
+          .mkString + s""""sf":"$sf"}"""
+    /** The full line when it fits the tail bound, else a fixed-size
+      * stub naming the file that holds the full line. */
+    def lastLine: String = {
+      val full = json
+      if (full.length <= TailBound) full
+      else s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
+        s""""full":"BENCH_FINAL.json","sf":"$sf"}"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // iteration aids: SPARK_GRAFT_BENCH_ONLY=mas skips the per-query
-    // sweep and times just the MAS headline shapes; any other value is
-    // a comma-separated list of query names to sweep (min-of-2, warm
-    // JVM) with the headline/probe/scale segments skipped
     val benchOnly = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
     val masOnly = benchOnly.contains("mas")
-    // "slope" runs ONLY the scale_slope segment (1x points re-measured
-    // as one-shots since the sweep is skipped) — the knob that lets a
-    // slope regression be adjudicated without paying the full sweep.
-    // "slopemas" additionally runs the MAS headline reps so the mas_*
-    // 10x pairs (which reuse the headline min as their 1x point) are
-    // measurable without the full sweep — the quiet-re-measurement
-    // knob the r13 verdict asked for.
-    val slopeMas = benchOnly.contains("slopemas")
-    val slopeOnly = benchOnly.contains("slope") || slopeMas
-    val onlyNames = benchOnly.filterNot(v => v == "mas" || v == "slope" || v == "slopemas")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val queryNames = SparkEntry.queries.keys.toSeq.sorted
+    // both checks are static: fail before the session starts, not after
+    // the sweep has spent minutes (two names sharing a prefix would
+    // merge two timings under one JSON key)
+    require(queryNames.map(shortId).distinct.size == queryNames.size,
+      "bench short ids collide; disambiguate the query names")
+    val onlyNames = benchOnly.filterNot(_ == "mas").map(selectQueries(_, queryNames))
     val spark = GraftSession.get()
     def loadAvg(): Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    // Load gate: a sweep started at load > 8 produces numbers a reader
-    // must re-measure to trust (the committed r12 sweep ran at 22.9 and
-    // its four scariest per-query times were 2-5x host contention).
-    // Wait for the host to quiet down — up to 10 min by default — and
-    // record how the gate resolved; the run proceeds either way (a
-    // driver round must still produce a BENCH file) but carries the
+    // Load gate: wait for the host load to fall below 8 and record how
+    // the gate resolved; the run proceeds either way but carries the
     // stamp that says whether to believe it.
     val gateStart = loadAvg()
-    val gateWaitMax = sys.env.get("SPARK_GRAFT_LOAD_GATE_WAIT")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(600)
     var gateWaited = 0
-    while (loadAvg() > 8.0 && gateWaited < gateWaitMax) {
+    while (loadAvg() > 8.0 && gateWaited < LoadGateWaitSecs) {
       Thread.sleep(30000); gateWaited += 30
     }
-    val gateJson = s""""load_gate":[${"%.1f".formatLocal(java.util.Locale.ROOT, gateStart)},$gateWaited,${"%.1f".formatLocal(java.util.Locale.ROOT, loadAvg())}]"""
-    // SPARK_GRAFT_SLOPE_COOLDOWN=<secs>: before each one-shot slope
-    // point (and each MAS headline shape), wait — up to the budget —
-    // for the 1-min load average to decay below 3.5, and stamp the
-    // PRE-point load instead of the post-point one. Rationale (r14):
-    // the post-point stamp of a 100-s 32-thread point mostly measures
-    // the point's OWN burst — the r13 slope files stamped
-    // g02/g01/t13/mas at 19-32 on a host whose external load was < 1
-    // (load_gate [0.9,0,0.9]) purely because the preceding points'
-    // bursts hadn't decayed out of the trailing average. The
-    // pre-point stamp after a cool-down is the honest "was anyone
-    // else on the box when this point STARTED" measure; slope_stamp
-    // in the JSON records which convention a file used.
-    val coolSecs = sys.env.get("SPARK_GRAFT_SLOPE_COOLDOWN")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(0)
-    // SPARK_GRAFT_COOLDOWN_BAR lowers the decay threshold (default
-    // 3.5) — the r15 verdict asks the firth headline pinned at
-    // load < 2, which the default bar structurally can't stamp (the
-    // wait stops as soon as the run's own tail decays past 3.5)
-    val coolBar = sys.env.get("SPARK_GRAFT_COOLDOWN_BAR")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(3.5)
-    def coolWait(): Unit = {
-      var waited = 0
-      while (coolSecs > 0 && loadAvg() > coolBar && waited < coolSecs) {
-        Thread.sleep(15000); waited += 15
-      }
+    val gateJson = s""""load_gate":[${f1(gateStart)},$gateWaited,${f1(loadAvg())}]"""
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    def run(name: String, dir: String = sfDir): Unit = noop(SparkEntry.queries(name)(spark, dir))
+    // operators may persist intermediates (signature tables); drop them
+    // so later queries aren't billed for foreign cache memory
+    def timed(body: => Unit): Option[Double] = {
+      val t = attempt(body)
+      spark.catalog.clearCache()
+      t
     }
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // per-query keys compress to the canonical short id (a01, q12,
-    // d05b …; mas_* headlines stay full) — at 90+ queries the full
-    // names alone would blow the driver's 2000-char tail buffer
-    def shortId(name: String): String =
-      if (name.startsWith("mas_")) name else name.takeWhile(_ != '_')
-    // two query names sharing a prefix (t11_a / t11_b) would silently
-    // merge two timings under one JSON key — fail BEFORE the sweep
-    // spends 100+ s, not after (the collision is static)
-    require(SparkEntry.queries.keys.toSeq.map(shortId).distinct.size ==
-      SparkEntry.queries.size, "bench short ids collide; disambiguate the query names")
     try run("q02_filter_project") catch { case _: Throwable => () } // warm-up, untimed
     // Fixed-cost probe: the heavy dedup plans at the smallest SF, where
-    // data cost is negligible — the probe time isolates planning +
-    // Janino compile cost from the sf sweep's data cost (r7 measured:
-    // 2-6 s fixed vs ~10 s total, so the bulk IS data). The probe dir
-    // derives from sfDir's tree; skipped (empty JSON object) if absent
-    // rather than timing an exception path as "compile cost".
-    // getAbsoluteFile: a bare relative sfDir ("sf0.1") has a null
-    // parent, which would silently skip the probe
-    val parentDir = new java.io.File(sfDir).getAbsoluteFile.getParent
-    val probeDir = parentDir + "/sf0.001"
-    val probeNames = Seq("d03_dedup_minhash", "d04_dedup_simhash", "d06_dedup_components")
-    // a probe body that throws must NOT report its time-to-exception
-    // as a compile-cost number — omit the key instead
+    // data cost is negligible, isolate planning + Janino compile cost
+    // from the sweep's data cost. getAbsoluteFile: a bare relative
+    // sfDir has a null parent.
+    val probeDir = new java.io.File(sfDir).getAbsoluteFile.getParent + "/sf0.001"
     val probes =
-      if (masOnly || slopeOnly || onlyNames.isDefined ||
-        !new java.io.File(probeDir).isDirectory) Seq.empty
-      else probeNames.flatMap { name =>
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            SparkEntry.queries(name)(spark, probeDir)
-              .write.format("noop").mode("overwrite").save()
-            true
-          } catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        if (ok) Some(shortId(name) -> dt) else None
-      }
-    // per-query sweep is MIN-OF-2: a single-shot timing on this shared
-    // host has measured 17× swings on unchanged plans (r6→r7 at load
-    // 6→17) — one repeat makes a host spike visible instead of
-    // masquerading as a code regression. load_avg is sampled before
-    // and after the sweep segment for the same reason.
+      if (masOnly || onlyNames.isDefined || !new java.io.File(probeDir).isDirectory) Seq.empty
+      else Seq("d03_dedup_minhash", "d04_dedup_simhash", "d06_dedup_components")
+        .flatMap(n => timed(run(n, probeDir)).map(shortId(n) -> _))
     val loadPreSweep = loadAvg()
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try body catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // operators may persist intermediates (signature tables); drop
-      // them so later queries aren't billed for foreign cache memory
-      spark.catalog.clearCache()
-      dt
-    }
-    // each sweep entry also stamps the load average sampled right after
-    // its reps: the r12 sweep ran at load 22.9 and its per-query times
-    // were 2-5x inflated mid-sweep — the stamp is what lets a reader
-    // discount a spike without re-running (same rule as scale_slope)
-    val sweep3 = (if (masOnly || slopeOnly) Seq.empty[String]
-      else SparkEntry.queries.keys.toSeq.sorted.filter(n => onlyNames.forall(_.contains(n))))
-      .map { name =>
-        val r1 = timed(run(name))
-        val r2 = timed(run(name))
-        val mn = math.min(r1, r2)
-        // adaptive 3rd rep: a >40% spread between reps is the host-
-        // contention signature, and min-of-2 still reports the spike
-        // if BOTH reps landed on it — one more rep bounds that
-        val t = if (mn > 0.15 && math.abs(r1 - r2) / mn > 0.4)
-          math.min(mn, timed(run(name))) else mn
-        (name, t, loadAvg())
-      }
-    val results = sweep3.map { case (n, t, _) => n -> t }
-    val queriesLoad = sweep3.map { case (n, _, l) => n -> l }
+    val (swept, failed) = sweep(
+      if (masOnly) Nil else queryNames.filter(n => onlyNames.forall(_.contains(n))),
+      n => timed(run(n)), () => loadAvg())
+    val results = swept.map { case (n, t, _) => n -> t }
     val loadPostSweep = loadAvg()
-    // MAS headlines: the reference's TWO published benchmark tables
-    // (/root/reference/benchmarks/README.md) at the 5,000 × ~1,800
-    // shape — sample-size table row (5 covariates: 22.2 s) and
-    // covariate-scaling table row (20 covariates: 55.7 s). Same
-    // shapes, deterministic synthetic cohort, full engine path (melt
-    // shape → groupByKey → per-pair Firth with logistf defaults).
-    def masMelted(n: Int, d: Int, k: Int) =
-      spark.range(n.toLong * d).select(
-          (col("id") % n).as("sample"), (col("id") / n).cast("long").as("di"))
-        .select(
-          lit("x").as("predictor"),
-          concat(lit("dep_"), col("di")).as("dependent"),
-          (pmod(xxhash64(col("sample"), lit(1)), lit(1000003)) / 1000003.0 * 4.0 - 2.0).as("x"),
-          col("sample"), col("di"))
-        .select(col("predictor"), lit(0).as("pidx"), col("dependent"),
-          col("di").cast("int").as("didx"), col("x"),
-          // y ~ Bernoulli(sigmoid(0.8x − 2 + dep offset)), hash-derived
-          (pmod(xxhash64(col("sample"), col("di"), lit(7)), lit(1000003)) / 1000003.0 <
-            lit(1.0) / (lit(1.0) + exp(-(col("x") * 0.8 - 2.0 +
-              (col("di") % 7).cast("double") * 0.1)))).cast("double").as("y"),
-          array((1 to k).map(c =>
-            (pmod(xxhash64(col("sample"), lit(c + 100)), lit(1000003)) / 1000003.0).as(s"z$c")): _*)
-            .as("covs"))
-    def masCfg(d: Int, k: Int) =
-      Association.Config(Seq("x"), (0 until d).map(i => s"dep_$i"),
-        (1 to k).map(c => s"z$c"), model = "firth", minCaseCount = 10)
-    // three runs per shape; the headline reports the MIN (the
-    // least-contended estimate — r4's median was pure host
-    // contention at load 28). Raw reps are also reported: identical
-    // code has measured 2 s on a quiet host and 80+ s at system
-    // load ~20 (external tenants), and the per-rep spread + load
-    // average tell those apart.
-    // every rep stamps the load average sampled right after it (r12
-    // verdict: reps [5.04, 4.79, 50.73] were unstamped, so a reader
-    // could not tell the 50.73 was a host spike without re-running)
-    // SPARK_GRAFT_MAS_REPS=<n> widens the rep count (default 3) —
-    // the headline-pinning knob: a min-of-5 at load < 2 settles a
-    // suspect headline swing without touching the default budget
-    val masReps = sys.env.get("SPARK_GRAFT_MAS_REPS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(3)
-    def reps3(body: => Unit): Seq[(Double, Double)] =
-      (1 to masReps).map { _ =>
-        coolWait()
-        val ldPre = loadAvg()
-        val t0 = System.nanoTime()
-        body
-        ((System.nanoTime() - t0) / 1e9,
-          if (coolSecs > 0) ldPre else loadAvg())
-      }
-    val masTime: (Seq[(Double, Double)], Seq[(Double, Double)],
-        Seq[(Double, Double)], Seq[(Double, Double)]) =
-    if (onlyNames.isDefined || (slopeOnly && !slopeMas)) (Nil, Nil, Nil, Nil) else {
-      val n = 5000; val d = 1800
-      val melted5 = masMelted(n, d, 5)
-      val firthReps = reps3 {
-        Association.binary(melted5, masCfg(d, 5)).write.format("noop").mode("overwrite").save()
-      }
-      // covariate-scaling point: same cohort, 20 covariates (the
-      // reference's 55.7 s row — where its per-fit cost grows 2.5×)
-      val firth20Reps = reps3 {
-        Association.binary(masMelted(n, d, 20), masCfg(d, 20))
-          .write.format("noop").mode("overwrite").save()
-      }
-      // same shape through the one-pass Gram OLS path (y treated
-      // quantitatively): sufficient stats only, no per-pair rows
-      val linReps = reps3 {
-        Association.linear(melted5, masCfg(d, 5).copy(model = "linear"))
-          .write.format("noop").mode("overwrite").save()
-      }
-      // same shape through the DISTRIBUTED Firth path (a17's engine):
-      // tracks the scan-per-iteration overhead vs the in-task headline
-      // — the price of not materializing any pair's cohort in one task
-      val gramReps = reps3 {
-        Association.firthGram(melted5, masCfg(d, 5))
-          .write.format("noop").mode("overwrite").save()
-      }
-      (firthReps, firth20Reps, linReps, gramReps)
-    }
-    // headline = min of reps: on this shared host identical code has
-    // measured 2 s quiet and 158 s at load ~28 (external tenants), so
-    // the min is the least-contended estimate of the engine's cost;
-    // the raw reps + load_avg below let a reader judge the spread.
-    // scale_slope: every headline family timed at TWO points an order
-    // of magnitude apart, so the "amortizes at scale" arguments are
-    // measured slopes instead of design reasoning. One shot per
-    // point; a query that fails OMITS its pair — time-to-exception is
-    // not a scale measurement.
-    //  - corpus family (d03/d05b/d10/t13): the sf-sweep point vs a
-    //    10× corpus derived from it once into /tmp: documents get 10
-    //    deterministic word-REMIXED replicas (word multiset — and so
-    //    token statistics — preserved; shingle sets broken, so
-    //    replicas are NOT artificial near-dup clusters), embeddings
-    //    get 10 per-replica random-sign-flip copies (an orthogonal
-    //    transform: within-replica cosine geometry is exactly the
-    //    original's, cross-replica similarity is scrambled).
-    //  - t13 runs BOTH points under corpus-scale BPE knobs
-    //    (spark.graft.bpe.*: 200 merges / 20k train words) so the
-    //    driver-memory-bounded training table is exercised, not the
-    //    toy default.
-    //  - MAS family: the 5k-sample headline reps vs ONE run at
-    //    50 000 × 1800 × 5cov (90M melted rows) through the in-task
-    //    Firth, the Gram linear path, and the distributed Firth —
-    //    the a04-vs-a17 crossover direction in data.
-    def scale10xDir(): Option[String] =
-      try {
-        // v3: adds the graph-family edge corpora (r13)
-        val out = "/tmp/graft_scale10x_v3"
-        val marker = new java.io.File(out + "/_GRAFT_DONE")
-        if (!marker.exists()) {
-          val docs = spark.read.parquet(sfDir + "/documents.parquet")
-          val reps = explode(array((0 until 10).map(lit): _*)).as("r")
-          // replica r > 0 applies a per-replica VOCABULARY SUBSTITUTION
-          // (every word gets an r-derived suffix): a bijection on
-          // words, so word sequences, n-gram structure, and every
-          // within-replica Jaccard similarity are preserved EXACTLY —
-          // the corpus's real near-dup pair density scales 10×, which
-          // is the point — while replica vocabularies are disjoint, so
-          // no artificial cross-replica near-dups appear. (Earlier
-          // word-remix constructions measurably DESTROYED dup pairs —
-          // d03 ran faster at 10× — because positional permutations
-          // break insert-shifted near-dups.)
-          docs.select(col("doc_id"), col("text"), col("lang"), col("source"), reps)
-            .select((col("doc_id") + col("r").cast("long") * 1000000L).as("doc_id"),
-              when(col("r") === 0, col("text")).otherwise(
-                array_join(transform(split(col("text"), " "),
-                  w => concat(w, lit("zq"), col("r").cast("string"))), " ")).as("text"),
-              col("lang"), col("source"))
-            .select(col("doc_id"), col("text"), col("lang"), col("source"),
-              length(col("text")).as("n_chars"))
-            .write.mode("overwrite").parquet(out + "/documents.parquet")
-          spark.read.parquet(sfDir + "/embeddings.parquet")
-            .select(col("vec_id"), col("embedding"), col("label"), reps)
-            .select((col("vec_id") + col("r").cast("long") * 1000000L).as("vec_id"),
-              transform(col("embedding"), (x, i) =>
-                when(pmod(xxhash64(col("r"), i), lit(2)) === 0, x).otherwise(-x))
-                .as("embedding"),
-              col("label"))
-            .write.mode("overwrite").parquet(out + "/embeddings.parquet")
-          // graph family: the co-order and trade edge lists at 1x, and
-          // a 10x DISJOINT-UNION replica (per-replica vertex-id offset).
-          // Disjoint union preserves the degree distribution and every
-          // within-replica wedge/triangle EXACTLY, so edge count, wedge
-          // volume (Σoutdeg²), and triangle count all scale 10x — the
-          // honest "10x the edges at the same shape" point. BOTH points
-          // read precomputed parquet, so the lineitem projection join
-          // that BUILDS the graph is billed to neither.
-          val co = graft.operators.Graph.coOrderEdges(spark, sfDir)
-            .select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-          co.write.mode("overwrite").parquet(out + "/coorder_edges_1x.parquet")
-          spark.read.parquet(out + "/coorder_edges_1x.parquet")
-            .select(col("u"), col("v"), reps)
-            .select((col("u") + col("r").cast("long") * 100000000L).as("u"),
-              (col("v") + col("r").cast("long") * 100000000L).as("v"))
-            .write.mode("overwrite").parquet(out + "/coorder_edges_10x.parquet")
-          val trade = graft.operators.Graph.tradeEdges(spark, sfDir)
-          val bi = trade.select(col("c").as("src"), col("s").as("dst"))
-            .union(trade.select(col("s").as("src"), col("c").as("dst")))
-          bi.write.mode("overwrite").parquet(out + "/trade_edges_1x.parquet")
-          spark.read.parquet(out + "/trade_edges_1x.parquet")
-            .select(col("src"), col("dst"), reps)
-            .select(concat(col("src"), lit("#"), col("r").cast("string")).as("src"),
-              concat(col("dst"), lit("#"), col("r").cast("string")).as("dst"))
-            .write.mode("overwrite").parquet(out + "/trade_edges_10x.parquet")
-          marker.createNewFile()
-        }
-        Some(out)
-      } catch { case _: Throwable => None }
-    // one-shot 10× points are load-contaminated on this shared host
-    // (r11 ran at load 24 with an 8× rep spread and the slopes moved
-    // 46-200% with zero code change) — stamp each point with the load
-    // average sampled right after it, so a reader can discount spikes
-    // without paying min-of-2 on 100+ s runs
-    def oneShot(body: => Unit): Option[(Double, Double)] = {
-      coolWait()
-      val ldPre = loadAvg()
+    // MAS headlines: the reference's two published benchmark tables at
+    // the 5,000 × ~1,800 shape — 5 covariates (22.2 s) and 20 (55.7 s)
+    // — through the in-task Firth, plus the same cohort through the
+    // Gram linear path and the distributed Firth. Each shape runs
+    // MasReps times, every rep stamped with the load after it; the
+    // headline is the min, the least-contended estimate.
+    def reps(body: => Unit): Seq[(Double, Double)] = (1 to MasReps).map { _ =>
       val t0 = System.nanoTime()
-      val ok = try { body; true } catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val ld = if (coolSecs > 0) ldPre else loadAvg()
-      spark.catalog.clearCache()
-      if (ok) Some((dt, ld)) else None
+      body
+      ((System.nanoTime() - t0) / 1e9, loadAvg())
     }
-    // SPARK_GRAFT_SLOPE_MIN2=d03,... re-runs the named 10x points
-    // min-of-2 — the adjudication knob for a suspect slope (a 100+ s
-    // point is too expensive to pay twice on every full bench, but one
-    // targeted re-run settles whether a drift was load or code)
-    val slopeMin2 = sys.env.get("SPARK_GRAFT_SLOPE_MIN2")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
-    // SPARK_GRAFT_SLOPE_FAMS=g02,mas_firth — run only the named slope
-    // families (short ids / mas keys): the adjudication knob for ONE
-    // suspect family without re-paying the whole 10x segment
-    val slopeFams = sys.env.get("SPARK_GRAFT_SLOPE_FAMS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def famOn(key: String): Boolean = slopeFams.forall(_.contains(key))
-    // SPARK_GRAFT_SLOPE_MINN widens SLOPE_MIN2's re-run count (min-of-N,
-    // default 2) — the value-PINNING knob (r17 verdict item 1: a point
-    // whose same-round measurements spanned 25.7-48.6 s needs a
-    // min-of-5 with per-rep stamps published as its spread). Raw reps
-    // of every min-N'd family publish as slope_reps:[[t, load], ...].
-    val slopeMinN = sys.env.get("SPARK_GRAFT_SLOPE_MINN")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 2).getOrElse(2)
-    // SPARK_GRAFT_SLOPE_WARM: untimed warm-up shots DISCARDED before
-    // the timed min-of-N (r18 verdict item 7: the pinned mas_firth 10x
-    // min-of-5 spanned 17.5-48.4 s — the first shot pays page-cache /
-    // shuffle-file / JIT warm-up the later shots don't, so it inflates
-    // the published spread without informing the min). Warm-up shots
-    // are not published; the timed reps still carry per-rep load
-    // stamps, and slope_load_corr below records how much of the
-    // REMAINING spread the load stamps explain.
-    val slopeWarm = sys.env.get("SPARK_GRAFT_SLOPE_WARM")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 0).getOrElse(0)
-    val slopeReps = scala.collection.mutable.LinkedHashMap[String, Seq[(Double, Double)]]()
-    def oneShotN(key: String)(body: => Unit): Option[(Double, Double)] =
-      if (!slopeMin2.contains(key)) oneShot(body)
+    val masRuns: Seq[(String, String, Seq[(Double, Double)])] =
+      if (onlyNames.isDefined) Nil
       else {
-        (1 to slopeWarm).foreach(_ => oneShot(body))
-        val shots = (1 to slopeMinN).flatMap(_ => oneShot(body))
-        if (shots.isEmpty) None
-        else {
-          slopeReps(key) = shots
-          Some((shots.map(_._1).min, shots.map(_._2).max))
-        }
+        val (n, d) = (5000, 1800)
+        val melted5 = masMelted(spark, n, d, 5)
+        Seq(
+          ("mas_firth", "mas_firth_5000x1800x5cov",
+            reps(noop(Association.binary(melted5, masCfg(d, 5))))),
+          ("mas_firth20", "mas_firth_5000x1800x20cov",
+            reps(noop(Association.binary(masMelted(spark, n, d, 20), masCfg(d, 20))))),
+          ("mas_linear", "mas_linear_5000x1800x5cov",
+            reps(noop(Association.linear(melted5, masCfg(d, 5).copy(model = "linear"))))),
+          ("mas_firth_gram", "mas_firth_gram_5000x1800x5cov",
+            reps(noop(Association.firthGram(melted5, masCfg(d, 5))))))
       }
-    // slope entries render [t1, t10, load10] when the 1x point is the
-    // (already load-bracketed) sweep min, and [t1, t10, load1, load10]
-    // when BOTH points are one-shots — per-point stamps everywhere
-    def pair(key: String, p: Option[(Double, Double, Double)]): Option[String] =
-      p.map { case (a, b, ld) =>
-        s""""$key":[${"%.2f".formatLocal(java.util.Locale.ROOT, a)},${"%.2f".formatLocal(java.util.Locale.ROOT, b)},${"%.1f".formatLocal(java.util.Locale.ROOT, ld)}]"""
+    val masMin = masRuns.map { case (k, _, r) => k -> r.map(_._1).min }.toMap
+    val masHeads = masRuns.map { case (k, h, _) => h -> masMin(k) }
+    // scale_slope: every headline family timed at two points an order
+    // of magnitude apart, one post-point-stamped shot per 10× point. A
+    // family whose 1× sweep entry or 10× shot failed omits its entry:
+    // time-to-exception is not a scale measurement.
+    def oneShot(body: => Unit): Option[(Double, Double)] = timed(body).map(_ -> loadAvg())
+    val sweepMin = results.toMap
+    def corpusEntry(name: String, body10x: => Unit): Option[String] =
+      sweepMin.get(name).flatMap(t1 => oneShot(body10x).map { case (t, ld) =>
+        slopeEntry(shortId(name), t1, t, ld)
+      })
+    def bothShots(key: String, body1x: => Unit, body10x: => Unit): Option[String] =
+      for { (a, l1) <- oneShot(body1x); (b, l2) <- oneShot(body10x) }
+        yield slopeEntry(key, a, b, l1, l2)
+    val bigDir = if (masOnly || onlyNames.isDefined) None else scale10xDir(spark, sfDir)
+    val rankCollided = bigDir.toSeq.flatMap(_ => rankReplicaCollisions(Mas.cohort(spark, sfDir)))
+    val slope: Seq[String] = bigDir.toSeq.flatMap { big =>
+      val docsBase = spark.read.parquet(sfDir + "/documents.parquet").count()
+      // the 10× point runs each operator as you'd configure it at that
+      // scale: d10's cluster count scales with the corpus so cluster
+      // SIZE (and the quadratic within-cluster pass) stays constant,
+      // and its codebook trains on a 10% sample; d05b gains 3 bucket
+      // bits per decade for the same reason. The other corpus, gate
+      // and continuation families read documents.parquet, so the 10×
+      // corpus applies directly.
+      val bodies10x: Map[String, () => Unit] = Map(
+        "d05b_dedup_embedding_lsh" -> (() => noop(graft.operators.Dedup.embeddingLshDupPairs(
+          graft.operators.Dedup.embCorpus(spark, big), 0.85, bitsPerBand = 9))),
+        "d10_semdedup" -> (() => noop(graft.operators.Similarity.semDedup(
+          graft.operators.Dedup.embCorpus(spark, big).select("vec_id", "e"),
+          lists = 160, iters = 2, tau = 0.85, trainFrac = 0.1))))
+      val corpusPairs = Seq("d03_dedup_minhash", "d05b_dedup_embedding_lsh", "d10_semdedup",
+          "t20_repetition_gate", "d21_exact_substrings", "d16_fuzzy_contamination",
+          "e16_stream_static_gate", "d22_source_overlap", "c16_interleave", "m22_srt_cues")
+        .flatMap(n => corpusEntry(n, bodies10x.get(n).fold(run(n, big))(_())))
+      // a46/a49 over the value-disjoint replica; a cohort whose spans
+      // reach the offsets would collide, so both entries are omitted
+      // and the detail line names the column instead
+      val rankPairs = if (rankCollided.nonEmpty) Nil else {
+        val coh10 = rankReplica(Mas.cohort(spark, sfDir))
+        Seq(
+          corpusEntry("a46_mann_whitney",
+            noop(Mas.mannWhitney(coh10, "xbin", Seq("y_avg", "y_max", "y_cnt")))),
+          corpusEntry("a49_spearman",
+            noop(Mas.spearman(coh10, Seq("x", "y_avg", "y_cnt", "y_max"))))).flatten
       }
-    def pair4(key: String, p: Option[((Double, Double), (Double, Double))]): Option[String] =
-      p.map { case ((a, l1), (b, l2)) =>
-        s""""$key":[${"%.2f".formatLocal(java.util.Locale.ROOT, a)},${"%.2f".formatLocal(java.util.Locale.ROOT, b)},${"%.1f".formatLocal(java.util.Locale.ROOT, l1)},${"%.1f".formatLocal(java.util.Locale.ROOT, l2)}]"""
+      // graph family: g02's wedge volume and g01's per-iteration shuffle
+      // both scale 10× under disjoint union, so ~linear is the pass bar
+      def graphBody(edges: String)(f: DataFrame => DataFrame): Unit =
+        noop(f(spark.read.parquet(s"$big/$edges")))
+      def g02Body(edges: String): Unit = graphBody(edges) { e =>
+        graft.operators.Graph.triangles(e)
+          .orderBy(col("n_triangles").desc, col("node")).limit(20)
       }
-    def scaleSlope(): Option[String] =
-      if (masOnly || onlyNames.isDefined) None
-      else scale10xDir().map { bigDir =>
-        val docsBase = spark.read.parquet(sfDir + "/documents.parquet").count()
-        // the 10× point runs each operator AS YOU'D CONFIGURE IT at
-        // that scale (the documented operating rule, same as picking
-        // shuffle partitions): d10's cluster count scales with the
-        // corpus so cluster SIZE — and the quadratic within-cluster
-        // pass — stays constant (fixed lists=16 at 10× measured 77 s
-        // of pure oversized-cluster pairing), and its codebook trains
-        // on a 10% sample (full-corpus training is n·k·dims — growing
-        // n AND k makes it quadratic in scale; measured 33 s);
-        // d05b gains 3 bucket bits per decade for the same reason.
-        // d03's banding needs no knob — its candidate volume follows
-        // real dup density.
-        val bigBodies: Map[String, () => Unit] = Map(
-          "d03_dedup_minhash" -> (() =>
-            SparkEntry.queries("d03_dedup_minhash")(spark, bigDir)
-              .write.format("noop").mode("overwrite").save()),
-          "d05b_dedup_embedding_lsh" -> (() =>
-            graft.operators.Dedup.embeddingLshDupPairs(
-              graft.operators.Dedup.embCorpus(spark, bigDir), 0.85, bitsPerBand = 9)
-              .write.format("noop").mode("overwrite").save()),
-          "t20_repetition_gate" -> (() =>
-            SparkEntry.queries("t20_repetition_gate")(spark, bigDir)
-              .write.format("noop").mode("overwrite").save()),
-          // d21 needs no scale knob: char-gram volume follows corpus
-          // chars, and the vocabulary-substitution replicas keep each
-          // replica's duplicated-substring structure intact
-          "d21_exact_substrings" -> (() =>
-            SparkEntry.queries("d21_exact_substrings")(spark, bigDir)
-              .write.format("noop").mode("overwrite").save()),
-          "d10_semdedup" -> (() =>
-            graft.operators.Similarity.semDedup(
-              graft.operators.Dedup.embCorpus(spark, bigDir).select("vec_id", "e"),
-              lists = 160, iters = 2, tau = 0.85, trainFrac = 0.1)
-              .write.format("noop").mode("overwrite").save()))
-        // 1x point: the sweep min when the sweep ran; a fresh one-shot
-        // (with its own load stamp) in slope-only mode
-        def corpusEntry(name: String, body1x: => Unit, body10x: => Unit): Option[String] = {
-          val key = shortId(name)
-          results.toMap.get(name) match {
-            case Some(t1) =>
-              pair(key, oneShotN(key)(body10x).map { case (tBig, ld) => (t1, tBig, ld) })
-            case None =>
-              pair4(key, for {
-                a <- oneShot(body1x)
-                b <- oneShotN(key)(body10x)
-              } yield (a, b))
-          }
-        }
-        // t20 joins the corpus family (r13): no scale knob — the
-        // vocabulary-substitution replicas preserve n-gram structure
-        // exactly (a word bijection), so the 10x point measures the
-        // tagged-gram shuffle's real scaling on the sweep's most
-        // expensive text query
-        val corpusPairs = Seq("d03_dedup_minhash", "d05b_dedup_embedding_lsh",
-          "d10_semdedup", "t20_repetition_gate", "d21_exact_substrings")
-          .filter(n => famOn(shortId(n))).flatMap { name =>
-          corpusEntry(name, run(name), bigBodies(name)())
-        }
-        // contamination + streaming-gate families (r12 verdict: no 10x
-        // point). Both read only documents.parquet, so the 10x corpus
-        // applies directly: the stream/corpus side scales 10x while the
-        // benchmark side (doc_id < 25 — replica offsets keep replicas
-        // out of it) stays fixed, exactly the production shape of a
-        // decontamination tagger on a growing ingest.
-        val gatePairs = Seq("d16_fuzzy_contamination", "e16_stream_static_gate")
-          .filter(n => famOn(shortId(n))).flatMap { name =>
-            corpusEntry(name, run(name),
-              SparkEntry.queries(name)(spark, bigDir)
-                .write.format("noop").mode("overwrite").save())
-          }
-        // r18 continuation families — all read documents.parquet, so
-        // the 10x corpus applies directly: d22's dup-class density
-        // scales with the %7/%10 mirror rules applied over 10x docs
-        // (the hash aggregate and the dup-tail self-join both grow),
-        // c16's prefix scan + TakeOrdered head measure the WFQ order
-        // at 10x tokens, m22's per-row kernel is the linear-flat
-        // control (any super-linear reading means plan overhead crept
-        // back in)
-        val contPairs = Seq("d22_source_overlap", "c16_interleave",
-          "m22_srt_cues")
-          .filter(n => famOn(shortId(n))).flatMap { name =>
-            corpusEntry(name, run(name),
-              SparkEntry.queries(name)(spark, bigDir)
-                .write.format("noop").mode("overwrite").save())
-          }
-        // rank-op family (r22; r20 verdict item 3 / r21 item 7):
-        // a46/a49 10x points over a DISJOINT-VALUE cohort replica —
-        // each replica offsets id and every measured value by a
-        // replica constant (values are bounded, offsets exceed the
-        // bound), so within-replica rank structure is preserved
-        // exactly while the value sets — and therefore the tie
-        // tables, the range-partitioned prefix scan and the rank
-        // join, the machinery whose scaling is under test — grow
-        // 10x. A plain row replica would keep the tie-table SIZE
-        // constant and only scale the counts, which is not the
-        // continuous-trait shape. The 1x point is the declared op on
-        // the sweep's cohort; the 10x body bills the (cheap,
-        // projection-only) replica derivation to itself.
-        val rankPairs = if (!famOn("a46") && !famOn("a49")) Seq.empty else {
-          val coh = graft.operators.Mas.cohort(spark, sfDir)
-          val r10 = explode(array((0 until 10).map(lit): _*)).as("r")
-          val coh10 = coh.select(col("id"), col("xbin"), col("x"),
-              col("y_avg"), col("y_max"), col("y_cnt"), r10)
-            .select((col("id") + col("r").cast("long") * 10000000L).as("id"),
-              col("xbin"),
-              (col("x") + col("r") * lit(100000.0)).as("x"),
-              (col("y_avg") + col("r") * lit(10000000.0)).as("y_avg"),
-              (col("y_max") + col("r") * lit(10000000.0)).as("y_max"),
-              (col("y_cnt") + col("r") * lit(1000.0)).as("y_cnt"))
-          Seq(
-            if (!famOn("a46")) None else corpusEntry("a46_mann_whitney",
-              run("a46_mann_whitney"),
-              graft.operators.Mas.mannWhitney(coh10, "xbin",
-                  Seq("y_avg", "y_max", "y_cnt"))
-                .write.format("noop").mode("overwrite").save()),
-            if (!famOn("a49")) None else corpusEntry("a49_spearman",
-              run("a49_spearman"),
-              graft.operators.Mas.spearman(coh10,
-                  Seq("x", "y_avg", "y_cnt", "y_max"))
-                .write.format("noop").mode("overwrite").save())).flatten
-        }
-        // graph family: both points read precomputed edge parquet (see
-        // scale10xDir) — g02's Σoutdeg² wedge volume and g01's
-        // per-iteration shuffle both scale 10x under disjoint union, so
-        // ~linear measured slope is the pass bar for both
-        def graphBody(edges: String)(f: DataFrame => DataFrame): Unit =
-          f(spark.read.parquet(s"$bigDir/$edges"))
-            .write.format("noop").mode("overwrite").save()
-        def g02Body(edges: String): Unit = graphBody(edges) { e =>
-          graft.operators.Graph.triangles(e)
-            .orderBy(col("n_triangles").desc, col("node")).limit(20)
-        }
-        def g01Body(edges: String): Unit = graphBody(edges) { e =>
-          graft.operators.Graph.pagerank(e, iters = 5)
-            .orderBy(col("rank_micro").desc, col("node")).limit(20)
-        }
-        val graphPairs = Seq(
-          if (!famOn("g02")) None else pair4("g02", for {
-            a <- oneShotN("g02")(g02Body("coorder_edges_1x.parquet"))
-            b <- oneShotN("g02")(g02Body("coorder_edges_10x.parquet"))
-          } yield (a, b)),
-          // g01's SMALL point joins the min-of-2 protocol too (r14: the
-          // quiet pair read 41.1 s at 1x vs 21.3 s at 10x — the small
-          // point was the contaminated one; a one-shot 1x cannot be
-          // adjudicated)
-          if (!famOn("g01")) None else pair4("g01", for {
-            a <- oneShotN("g01")(g01Body("trade_edges_1x.parquet"))
-            b <- oneShotN("g01")(g01Body("trade_edges_10x.parquet"))
-          } yield (a, b))).flatten
-        spark.conf.set("spark.graft.bpe.merges", "200")
-        spark.conf.set("spark.graft.bpe.trainWords", "20000")
-        val t13 = if (!famOn("t13")) None else pair4("t13", for {
-          a <- oneShot(run("t13_bpe_tokens"))
-          b <- oneShotN("t13")(SparkEntry.queries("t13_bpe_tokens")(spark, bigDir)
-            .write.format("noop").mode("overwrite").save())
-        } yield (a, b))
-        spark.conf.unset("spark.graft.bpe.merges")
-        spark.conf.unset("spark.graft.bpe.trainWords")
-        val masPairs =
-          if (masTime._1.isEmpty) Seq.empty
-          else {
-            val big = masMelted(50000, 1800, 5)
-            Seq(
-              // oneShotN: the mas 10x points join the SLOPE_MIN2
-              // adjudication protocol (r16: a one-shot mas_firth 10x
-              // read 64 s vs 14.6 s the round before — unadjudicable
-              // without a second shot)
-              if (!famOn("mas_firth")) None else
-              pair("mas_firth", oneShotN("mas_firth")(
-                Association.binary(big, masCfg(1800, 5))
-                  .write.format("noop").mode("overwrite").save())
-                .map { case (t, ld) => (masTime._1.map(_._1).min, t, ld) }),
-              if (!famOn("mas_linear")) None else
-              pair("mas_linear", oneShotN("mas_linear")(
-                Association.linear(big, masCfg(1800, 5).copy(model = "linear"))
-                  .write.format("noop").mode("overwrite").save())
-                .map { case (t, ld) => (masTime._3.map(_._1).min, t, ld) }),
-              if (!famOn("mas_firth_gram")) None else
-              pair("mas_firth_gram", oneShotN("mas_firth_gram")(
-                Association.firthGram(big, masCfg(1800, 5))
-                  .write.format("noop").mode("overwrite").save())
-                .map { case (t, ld) => (masTime._4.map(_._1).min, t, ld) })).flatten
-          }
-        ((s""""docs":[$docsBase,${docsBase * 10}]""" +:
-          corpusPairs) ++ gatePairs ++ contPairs ++ rankPairs ++ graphPairs ++
-          t13.toSeq ++ masPairs).mkString(",")
+      def g01Body(edges: String): Unit = graphBody(edges) { e =>
+        graft.operators.Graph.pagerank(e, iters = 5)
+          .orderBy(col("rank_micro").desc, col("node")).limit(20)
       }
-    val masHeads = if (onlyNames.isDefined || (slopeOnly && !slopeMas)) Seq.empty else Seq(
-      "mas_firth_5000x1800x5cov" -> masTime._1.map(_._1).min,
-      "mas_firth_5000x1800x20cov" -> masTime._2.map(_._1).min,
-      "mas_linear_5000x1800x5cov" -> masTime._3.map(_._1).min,
-      "mas_firth_gram_5000x1800x5cov" -> masTime._4.map(_._1).min)
-    // ---- adjudicated-evidence embed (r14 verdict items 2+3) ----
-    // A full-sweep bench run on the shared driver host produces slope
-    // and headline numbers at whatever load the host happens to carry;
-    // the adjudicated quiet numbers live in separate BENCH_SLOPE_QUIET
-    // files a reader must cross-reference. If BENCH_SLOPE_EMBED.json
-    // exists (committed from the latest load-gated slopemas run), the
-    // full sweep SKIPS the live 10x segment and embeds that file's
-    // slope table and headline mins — clearly labeled with their
-    // source and per-point load stamps — so the ONE committed BENCH
-    // file carries the evidence a reader should believe. Live reps and
-    // live sweep times still publish alongside (queries_live,
-    // mas_*_reps) — nothing is hidden, the headline block just stops
-    // advertising contaminated numbers as the result.
-    // Jackson (on Spark's classpath) instead of hand-rolled regex
-    // extraction — escaped quotes / nested arrays parse correctly, and
-    // the embed's provenance stamps are machine-checkable (r15 advice).
-    val embedRaw: Option[String] =
-      if (masOnly || slopeOnly || onlyNames.isDefined) None
-      else try {
-        val f = new java.io.File("BENCH_SLOPE_EMBED.json")
-        if (f.exists) {
-          val s = scala.io.Source.fromFile(f, "UTF-8")
-          try Some(s.mkString.trim) finally s.close()
-        } else None
-      } catch { case _: Throwable => None }
-    val embedNode = embedRaw.flatMap { s =>
-      try Some(new com.fasterxml.jackson.databind.ObjectMapper().readTree(s))
-      catch { case _: Throwable => None }
+      val graphPairs = Seq(
+        bothShots("g02", g02Body("coorder_edges_1x.parquet"), g02Body("coorder_edges_10x.parquet")),
+        bothShots("g01", g01Body("trade_edges_1x.parquet"), g01Body("trade_edges_10x.parquet")))
+        .flatten
+      // t13 runs both points under corpus-scale BPE knobs (200 merges /
+      // 20k train words), so the driver-bounded training table is
+      // exercised, not the toy default
+      spark.conf.set("spark.graft.bpe.merges", "200")
+      spark.conf.set("spark.graft.bpe.trainWords", "20000")
+      val t13 = bothShots("t13", run("t13_bpe_tokens"), run("t13_bpe_tokens", big))
+      spark.conf.unset("spark.graft.bpe.merges")
+      spark.conf.unset("spark.graft.bpe.trainWords")
+      // MAS family: the 5k-sample headline min vs one run at 50 000 ×
+      // 1800 × 5 covariates (90M melted rows)
+      val bigMas = masMelted(spark, 50000, 1800, 5)
+      val masPairs = Seq[(String, () => Unit)](
+        "mas_firth" -> (() => noop(Association.binary(bigMas, masCfg(1800, 5)))),
+        "mas_linear" -> (() =>
+          noop(Association.linear(bigMas, masCfg(1800, 5).copy(model = "linear")))),
+        "mas_firth_gram" -> (() => noop(Association.firthGram(bigMas, masCfg(1800, 5)))))
+        .flatMap { case (k, body) =>
+          oneShot(body()).map { case (t, ld) => slopeEntry(k, masMin(k), t, ld) }
+        }
+      (s""""docs":[$docsBase,${docsBase * 10}]""" +: corpusPairs) ++ rankPairs ++
+        graphPairs ++ t13 ++ masPairs
     }
-    def nodeObj(key: String): Option[String] =
-      embedNode.flatMap(n => Option(n.get(key)).filter(_.isObject).map(_.toString))
-    def nodeStr(key: String): Option[String] =
-      embedNode.flatMap(n => Option(n.get(key)).filter(_.isTextual).map(_.asText))
-    def nodeArr(key: String): Option[String] =
-      embedNode.flatMap(n => Option(n.get(key)).filter(_.isArray).map(_.toString))
-    val registrySize = SparkEntry.queries.size
-    val embedReg = embedNode.flatMap(n => Option(n.get("registry_size")).map(_.asInt))
-    val embedCommit = embedNode.flatMap(n => Option(n.get("commit")).map(_.asText))
-    val buildCommit: Option[String] = try {
-      val proc = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-        .redirectErrorStream(true).start()
-      val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").mkString.trim
-      proc.waitFor()
-      Some(out).filter(_.matches("[0-9a-f]{4,40}"))
-    } catch { case _: Throwable => None }
-    // staleness gate: an embed produced at a DIFFERENT registry size is
-    // evidence for another build surface — REFUSE it (fall back to the
-    // live numbers) and say so in the JSON. A commit mismatch alone is
-    // expected (the embed is committed before the driver's bench run)
-    // and publishes as provenance, not a refusal.
-    // CORE-COUNT gate (r21): the driver also benches at a LOWER core
-    // count to measure per-query core scaling — republishing a
-    // 32-core quiet pin as `value` there would erase exactly the
-    // scaling signal that run exists to measure. The embed records
-    // the core count it was measured at ("cpus", legacy embeds imply
-    // 32); any run at a different count refuses the embed and
-    // publishes its own live numbers.
-    val embedCpus = embedNode.flatMap(n => Option(n.get("cpus")).map(_.asInt))
-      .getOrElse(32)
-    val runCpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    // BUILD-COMMIT gate (r22, the r21 verdict's top item): an embed
-    // recorded BEFORE the newest src/main change is evidence for code
-    // that no longer runs — round 21 published a round-20 pin as its
-    // headline and reported itself exactly 1.00-flat. The embed's
-    // commit must NOT be a strict ancestor of the last commit touching
-    // src/main; when it is, the run refuses the embed and publishes
-    // live numbers. Unknown ancestry (shallow clone, foreign hash)
-    // stays permitted and publishes as provenance, same as the
-    // pre-existing commit-mismatch behavior.
-    def gitOut(args: String*): Option[String] = try {
-      val proc = new ProcessBuilder(("git" +: args): _*)
-        .redirectErrorStream(true).start()
-      val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").mkString.trim
-      if (proc.waitFor() == 0) Some(out) else None
-    } catch { case _: Throwable => None }
-    val lastSrcCommit = gitOut("log", "-1", "--format=%h", "--", "src/main")
-      .filter(_.matches("[0-9a-f]{4,40}"))
-    val embedPredatesBuild: Option[String] = for {
-      e <- embedCommit
-      s <- lastSrcCommit
-      // strict ancestor: same-commit embeds (embed + code in one
-      // commit) are fresh; only a true predate refuses
-      if !gitOut("rev-parse", e).exists(full =>
-        gitOut("rev-parse", s).contains(full))
-      if { // merge-base --is-ancestor exits 0 iff e is an ancestor of s
-        try new ProcessBuilder("git", "merge-base", "--is-ancestor", e, s)
-          .start().waitFor() == 0
-        catch { case _: Throwable => false }
-      }
-    } yield s"embed commit $e predates last src/main change $s"
-    val embedStale: Option[String] =
-      embedReg.filter(_ != registrySize)
-        .map(r => s"registry $r != build $registrySize")
-        .orElse(if (runCpus != embedCpus)
-          Some(s"embed cpus $embedCpus != run cpus $runCpus") else None)
-        .orElse(embedPredatesBuild)
-    val embedOk = embedNode.isDefined && embedStale.isEmpty
-    // runs AFTER the headline reps (it reuses their min as point 1);
-    // skipped entirely when the adjudicated embed supplies the table
-    val scaleSlopeJson =
-      if (embedOk && nodeObj("scale_slope").isDefined) None
-      else scaleSlope()
     val all = results ++ masHeads
-    def f3(x: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, x)
-    // per-query times compress to 2 dp with trailing zeros trimmed
-    // ("1.5", "12.17", "3") — the whole JSON line must stay under the
-    // driver's 2000-char tail buffer even as the sweep grows
-    def fq(x: Double): String = {
-      val s = "%.2f".formatLocal(java.util.Locale.ROOT, x)
-      val t = s.reverse.dropWhile(_ == '0').reverse
-      if (t.endsWith(".")) t.dropRight(1) else t
-    }
-    val qs = all.map { case (k, v) => "\"" + shortId(k) + "\":" + fq(v) }
-      .mkString("{", ",", "}")
-    val total = all.map(_._2).sum
-    // 2 dp: the whole line must clear the driver's tail buffer. Each
-    // rep's load stamp goes to the DETAIL file (mas_reps_loads), so a
-    // spiked rep is attributable without bloating the compact line.
-    val reps = s""""mas_firth_reps":[${masTime._1.map(r => fq(r._1)).mkString(",")}],""" +
-      s""""mas_firth20_reps":[${masTime._2.map(r => fq(r._1)).mkString(",")}],""" +
-      s""""mas_linear_reps":[${masTime._3.map(r => fq(r._1)).mkString(",")}],""" +
-      s""""mas_firth_gram_reps":[${masTime._4.map(r => fq(r._1)).mkString(",")}]"""
-    val repsLoads = Seq("mas_firth" -> masTime._1, "mas_firth20" -> masTime._2,
-        "mas_linear" -> masTime._3, "mas_firth_gram" -> masTime._4)
-      .map { case (k, v) =>
-        "\"" + k + "\":[" + v.map(r => "%.1f".formatLocal(java.util.Locale.ROOT, r._2))
-          .mkString(",") + "]"
-      }.mkString("{", ",", "}")
-    // codegen_probe: the same three dedup queries at sf0.001 — their
-    // time there IS the Janino compile cost the sweep no longer pays
-    val probeJson = probes.map { case (k, v) => "\"" + k + "\":" + fq(v) }
-      .mkString("{", ",", "}")
-    // load_sweep brackets the per-query segment; load_avg is sampled
-    // at the end (the MAS headline segment) — together they say which
-    // segment a host spike hit
-    val embedSlope = if (embedOk) nodeObj("scale_slope") else None
-    val embedHeads = if (embedOk) nodeObj("queries") else None
-    // quiet-sweep total passthrough (r17 verdict item 3): when the
-    // embed carries a load-gated sweep total, the wrapper publishes
-    // THAT as `value` (with its source + gate) and its own —
-    // whatever-load-the-host-carried — total as `value_live`, so
-    // BENCH_r{N}.json alone never advertises a contaminated total
-    val embedSweepTotal =
-      if (embedOk)
-        embedNode.flatMap(n => Option(n.get("sweep_total")).filter(_.isNumber).map(_.asDouble))
-      else None
-    val embedSweepSrc = nodeStr("sweep_total_source")
-    val embedSweepGate = if (embedOk) nodeArr("sweep_gate") else None
-    val embedSlopeReps = if (embedOk) nodeObj("slope_reps") else None
-    val embedSrc = nodeStr("source").getOrElse("embed")
-    val embedStamp = nodeStr("slope_stamp")
-    val embedGate = if (embedOk) nodeArr("load_gate") else None
-    val provJson = {
-      val stale = embedStale.map(s => s""""embed_stale":"$s",""").getOrElse("")
-      val commits = (embedCommit, buildCommit) match {
-        case (Some(e), Some(b)) if embedNode.isDefined =>
-          s""""embed_commit":"$e","build_commit":"$b","""
-        case _ => ""
-      }
-      // "cpus": the core count this run measured at — the field the
-      // embed producer (make_slope_embed.py) copies forward so the
-      // cpu-staleness gate can never be fooled by a missing field
-      // (r21 advice item 1: the gate was reader-only)
-      s"""$stale$commits"cpus":$runCpus,"registry_size":$registrySize,"""
-    }
-    val scaleJson = embedSlope match {
-      case Some(obj) =>
-        s""""scale_slope":$obj,"slope_source":"$embedSrc",""" +
-          embedGate.map(g => s""""slope_gate":$g,""").getOrElse("")
-      case None => scaleSlopeJson.map(s => s""""scale_slope":{$s},""").getOrElse("")
-    }
-    // The driver parses the LAST stdout line through a 2000-char tail
-    // buffer: at 147 per-query keys the full line overflows it (BENCH
-    // r10/r11 parsed null). So the full detail (per-query sweep +
-    // codegen probe) goes to an EARLIER line and a file, and the last
-    // line is a compact headline JSON — headlines, scale_slope (with
-    // per-point load stamps), loads, reps, sweep total.
-    val qsLoad = queriesLoad.map { case (k, v) =>
-      "\"" + shortId(k) + "\":" + "%.1f".formatLocal(java.util.Locale.ROOT, v)
-    }.mkString("{", ",", "}")
+    val failedIds = failed.map(shortId)
+    val headline = Headline(all.map(_._2).sum, masHeads, slope, failedIds,
+      masRuns.map { case (k, _, r) => k -> r.map(_._1) },
+      spark.sparkContext.defaultParallelism, SparkEntry.queries.size, gateJson,
+      (loadPreSweep, loadPostSweep), loadAvg(), sfDir)
+    // The full detail (per-query sweep, per-query loads, per-rep MAS
+    // loads, codegen probe) goes to an earlier line and a file; the
+    // last line is the compact headline.
     val detailJson =
-      s"""{"metric":"detail","unit":"sec","queries":$qs,""" +
-      s""""queries_load":$qsLoad,"mas_reps_loads":$repsLoads,$gateJson,""" +
-      s""""codegen_probe":$probeJson,"sf":"$sfDir"}"""
-    val liveHeadJson = masHeads.map { case (k, v) => "\"" + k + "\":" + fq(v) }
-      .mkString("{", ",", "}")
-    // headline block (r14 verdict item 3): sourced from the load-gated
-    // embed run when present — the live mins publish alongside as
-    // queries_live, the raw live reps as mas_*_reps below
-    val masHeadJson = embedHeads.getOrElse(liveHeadJson)
-    val headSrcJson = embedHeads.map(_ =>
-      s""""headline_source":"$embedSrc","queries_live":$liveHeadJson,""").getOrElse("")
-    val stampConv =
-      if (embedSlope.isDefined) embedStamp.getOrElse("pre-point-after-cooldown")
-      else if (coolSecs > 0) "pre-point-after-cooldown" else "post-point"
-    val valueJson = embedSweepTotal match {
-      case Some(t) =>
-        s""""value":${f3(t)},"value_source":"${embedSweepSrc.getOrElse(embedSrc)}",""" +
-          embedSweepGate.map(g => s""""value_gate":$g,""").getOrElse("") +
-          s""""value_live":${f3(total)},"""
-      case None => s""""value":${f3(total)},"""
-    }
-    // raw min-of-N reps (time, pre-rep load) for every SLOPE_MIN2'd
-    // family — the published SPREAD behind a pinned 10x value; a
-    // full-sweep run passes the embed's recorded reps through
-    val slopeRepsJson = {
-      val live =
-        if (slopeReps.isEmpty) None
-        else Some(slopeReps.map { case (k, v) =>
-          "\"" + k + "\":[" + v.map { case (t, l) =>
-            s"[${fq(t)},${"%.1f".formatLocal(java.util.Locale.ROOT, l)}]"
-          }.mkString(",") + "]"
-        }.mkString("{", ",", "}"))
-      live.orElse(embedSlopeReps)
-        .map(o => s""""slope_reps":$o,""").getOrElse("")
-    }
-    // median-alongside-min + load model (r18 verdict item 7): the min
-    // stays the published estimate (least-contended shot), the median
-    // says what a TYPICAL shot costs on this host, and slope_load_corr
-    // (Pearson r between each rep's time and its pre-rep load stamp)
-    // records how much of the rep spread the stamps explain — r near 1
-    // = the spread IS host contention; r near 0 with a wide spread =
-    // something else is moving and needs a look. Derived uniformly
-    // from whichever slope_reps block is being published (live or
-    // embedded), so the three fields always describe the same reps.
-    val slopeStatsJson = {
-      val repMap: Map[String, Seq[(Double, Double)]] =
-        if (slopeReps.nonEmpty) slopeReps.toMap
-        else embedSlopeReps.flatMap { s =>
-          try {
-            val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
-            val it = n.fields()
-            val b = scala.collection.mutable.LinkedHashMap[String, Seq[(Double, Double)]]()
-            while (it.hasNext) {
-              val e = it.next()
-              val v = (0 until e.getValue.size()).map { i =>
-                val p = e.getValue.get(i)
-                (p.get(0).asDouble, p.get(1).asDouble)
-              }
-              b(e.getKey) = v
-            }
-            Some(b.toMap)
-          } catch { case _: Throwable => None }
-        }.getOrElse(Map.empty)
-      // an embed merge can leave a family with zero reps — stats for
-      // it are undefined, and med(Seq()) would crash the bench at
-      // JSON-emission time AFTER the whole sweep has run
-      val repMapNE = repMap.filter(_._2.nonEmpty)
-      if (repMapNE.isEmpty) ""
-      else {
-        def med(xs: Seq[Double]): Double = {
-          val s = xs.sorted
-          if (s.length % 2 == 1) s(s.length / 2)
-          else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-        }
-        def corr(v: Seq[(Double, Double)]): Option[Double] = {
-          if (v.length < 3) None else {
-            val (ts, ls) = (v.map(_._1), v.map(_._2))
-            val (mt, ml) = (ts.sum / ts.length, ls.sum / ls.length)
-            val st = math.sqrt(ts.map(t => (t - mt) * (t - mt)).sum)
-            val sl = math.sqrt(ls.map(l => (l - ml) * (l - ml)).sum)
-            if (st == 0 || sl == 0) None
-            else Some(ts.zip(ls).map { case (t, l) => (t - mt) * (l - ml) }.sum / (st * sl))
-          }
-        }
-        val meds = repMapNE.map { case (k, v) => "\"" + k + "\":" + fq(med(v.map(_._1))) }
-          .mkString("{", ",", "}")
-        val corrs = repMapNE.map { case (k, v) =>
-          "\"" + k + "\":" + corr(v).map(r =>
-            "%.2f".formatLocal(java.util.Locale.ROOT, r)).getOrElse("null")
-        }.mkString("{", ",", "}")
-        s""""slope_medians":$meds,"slope_load_corr":$corrs,"""
-      }
-    }
-    val json = s"""{"metric":"total",$valueJson"unit":"sec",""" +
-      s""""queries":$masHeadJson,$headSrcJson$scaleJson""" +
-      s""""slope_stamp":"$stampConv",$slopeRepsJson$slopeStatsJson$provJson""" +
-      s""""load_sweep":[${f3(loadPreSweep)},${f3(loadPostSweep)}],""" +
-      s""""load_avg":${f3(loadAvg())},$gateJson,$reps,"sf":"$sfDir"}"""
-    try {
-      val w = new java.io.PrintWriter("BENCH_DETAIL.json", "UTF-8")
-      try w.println(detailJson) finally w.close()
-    } catch { case _: Throwable => () }
-    // The driver parses the last stdout line through a 2000-char tail
-    // buffer; r19's full line overflowed it (parsed=null — the
-    // machine-readable summary vanished from BENCH_r19.json even
-    // though every field was committed elsewhere). The FULL compact
-    // block always goes to BENCH_FINAL.json; the stdout line is the
-    // full block only when it fits, else a reduced headline (drops
-    // slope_reps/medians/corr first, then scale detail — all of it
-    // lives in the file the "full" key names).
-    try {
-      val w = new java.io.PrintWriter("BENCH_FINAL.json", "UTF-8")
-      try w.println(json) finally w.close()
-    } catch { case _: Throwable => () }
-    val tailBound = 1900
-    val jsonOut =
-      if (json.length <= tailBound) json
-      else {
-        val reduced = s"""{"metric":"total",$valueJson"unit":"sec",""" +
-          s""""queries":$masHeadJson,$headSrcJson$scaleJson""" +
-          s""""slope_stamp":"$stampConv",$provJson""" +
-          s""""full":"BENCH_FINAL.json",""" +
-          s""""load_sweep":[${f3(loadPreSweep)},${f3(loadPostSweep)}],""" +
-          s""""load_avg":${f3(loadAvg())},$gateJson,"sf":"$sfDir"}"""
-        if (reduced.length <= tailBound) reduced
-        else {
-          val minimal = s"""{"metric":"total",$valueJson"unit":"sec",""" +
-            s""""queries":$masHeadJson,$provJson""" +
-            s""""full":"BENCH_FINAL.json",""" +
-            s""""load_avg":${f3(loadAvg())},"sf":"$sfDir"}"""
-          // masHeadJson/provJson are unbounded in the number of
-          // headline queries — if even the minimal form overflows,
-          // emit a fixed-size stub (r20 advice): the last line must
-          // ALWAYS clear the driver's 2000-char tail parse; every
-          // dropped field lives in the file the "full" key names
-          if (minimal.length <= tailBound) minimal
-          else s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
-            s""""full":"BENCH_FINAL.json","sf":"$sfDir"}"""
-        }
-      }
+      s"""{"metric":"detail","unit":"sec",""" +
+        s""""queries":${jsonObj(all.map { case (k, v) => shortId(k) -> fq(v) })},""" +
+        s""""queries_load":${jsonObj(swept.map { case (k, _, l) => shortId(k) -> f1(l) })},""" +
+        s""""mas_reps_loads":${jsonObj(masRuns.map { case (k, _, r) =>
+          k -> r.map(x => f1(x._2)).mkString("[", ",", "]") })},$gateJson,""" +
+        s""""codegen_probe":${jsonObj(probes.map { case (k, v) => k -> fq(v) })},""" +
+        s""""failed":${jsonStrs(failedIds)},""" +
+        (if (rankCollided.isEmpty) ""
+         else s""""rank_replica_collides":${jsonStrs(rankCollided)},""") +
+        s""""sf":"$sfDir"}"""
+    def writeFile(name: String, line: String): Unit =
+      try {
+        val w = new java.io.PrintWriter(name, "UTF-8")
+        try w.println(line) finally w.close()
+      } catch { case _: Throwable => () }
+    writeFile("BENCH_DETAIL.json", detailJson)
+    writeFile("BENCH_FINAL.json", headline.json)
     // ERROR level from here on: Spark's stop/shutdown-hook INFO lines
-    // must not print after the JSON — the driver parses the last line.
+    // must not print after the JSON — the last line is parsed.
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
     println(detailJson)
-    println(jsonOut)
+    println(headline.lastLine)
   }
 }

@@ -56,21 +56,6 @@ object StreamingOps {
       .asInstanceOf[T]
   }
 
-  /** GRAFT_STREAM_DEBUG=1 prints a per-phase wall-time split of each
-    * gate (feed collect / query start / per-micro-batch / flush /
-    * stop) — the r16 verdict's instrumentation ask: ~20 s of the
-    * quiet sweep is streaming-gate fixed cost, none of it data
-    * volume, and the split says which phase to attack. */
-  private val gateDbg = sys.env.contains("GRAFT_STREAM_DEBUG")
-  private def gphase[T](gate: String, label: String)(body: => T): T =
-    if (!gateDbg) body else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[gate:$gate] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   private def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     // the fused in-batch flush sentinel (e11/e19 family) relies on
     // Spark's automatic no-data micro-batch to close the final
@@ -292,19 +277,19 @@ object StreamingOps {
       agg: DataFrame => DataFrame = tumblingWindowAgg(_)): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: SQLContext = spark.sqlContext
-    val rows = gphase(sinkName, "feed") { cachedFeed(spark, s"events4:$dir") {
+    val rows = cachedFeed(spark, s"events4:$dir") {
       graft.Tables.events(spark, dir)
         .select(col("event_id"), col("event_type"), col("ts"), col("value"))
         .as[(Long, String, java.sql.Timestamp, Double)]
         .collect().sortBy(r => (r._3.getTime, r._1))
-    } }
+    }
     val maxTs = rows.iterator.map(_._3.getTime).max
     val input = MemoryStream[(Long, String, java.sql.Timestamp, Double)]
     val src = input.toDF().toDF("event_id", "event_type", "ts", "value")
     spark.catalog.dropTempView(sinkName)
     withShufflePartitions(spark, 8) {
-      val q = gphase(sinkName, "start") { agg(src).writeStream
-        .format("memory").queryName(sinkName).outputMode("append").start() }
+      val q = agg(src).writeStream
+        .format("memory").queryName(sinkName).outputMode("append").start()
       try {
         // ONE data micro-batch (+ the flush sentinel): the e13 rule
         // applied to the windowed-agg gates — per-batch state-store
@@ -323,10 +308,9 @@ object StreamingOps {
         val sentinel = (-1L, "__flush",
           new java.sql.Timestamp(maxTs + 12L * 3600 * 1000), 0.0)
         val batch = math.max(5000, rows.length + 1)
-        (rows :+ sentinel).grouped(batch).zipWithIndex.foreach { case (b, i) =>
-          gphase(sinkName, s"batch$i(${b.length})") {
-            input.addData(b); q.processAllAvailable() } }
-      } finally gphase(sinkName, "stop") { q.stop() }
+        (rows :+ sentinel).grouped(batch).foreach { b =>
+          input.addData(b); q.processAllAvailable() }
+      } finally q.stop()
     }
     spark.table(sinkName)
       .filter(col("event_type") =!= "__flush")
@@ -365,10 +349,10 @@ object StreamingOps {
     fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
     fs.delete(new org.apache.hadoop.fs.Path(cpDir), true)
     withShufflePartitions(spark, 8) {
-      val q = gphase("e17", "start") { tumblingWindowAgg(src).writeStream
+      val q = tumblingWindowAgg(src).writeStream
         .format("parquet").option("path", outDir)
         .option("checkpointLocation", cpDir)
-        .outputMode("append").start() }
+        .outputMode("append").start()
       try {
         // the e11 slicing rule: ONE data micro-batch, flush sentinel
         // fused in (r19 item 3 — the automatic no-data batch closes
@@ -376,10 +360,9 @@ object StreamingOps {
         val sentinel = (-1L, "__flush",
           new java.sql.Timestamp(maxTs + 12L * 3600 * 1000), 0.0)
         val batch = math.max(5000, rows.length + 1)
-        (rows :+ sentinel).grouped(batch).zipWithIndex.foreach { case (b, i) =>
-          gphase("e17", s"batch$i(${b.length})") {
-            input.addData(b); q.processAllAvailable() } }
-      } finally gphase("e17", "stop") { q.stop() }
+        (rows :+ sentinel).grouped(batch).foreach { b =>
+          input.addData(b); q.processAllAvailable() }
+      } finally q.stop()
     }
     spark.read.parquet(outDir)
       .filter(col("event_type") =!= "__flush")
@@ -404,14 +387,14 @@ object StreamingOps {
     // deterministic 1/3 user sample: the two-sided join state is
     // user-keyed, so this bounds bench-time state without touching
     // the machinery under test (the oracle applies the same filter)
-    val ev = gphase("e13", "feed") { cachedFeed(spark, s"events_vc:$dir") {
+    val ev = cachedFeed(spark, s"events_vc:$dir") {
       graft.Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
         .filter(col("event_type").isin("view", "click") &&
           col("user_id") % 3 === 0)
         .as[(Long, java.sql.Timestamp, Long, String)]
         .collect().sortBy(r => (r._2.getTime, r._1))
-    } }
+    }
     val impIn = MemoryStream[(Long, java.sql.Timestamp, Long)]
     val clkIn = MemoryStream[(Long, java.sql.Timestamp, Long)]
     def named(s: MemoryStream[(Long, java.sql.Timestamp, Long)]): DataFrame =
@@ -424,10 +407,9 @@ object StreamingOps {
     // parallelism (r17 gate-overhead split: both batches were
     // ~90% machinery). Join output is partition-count invariant.
     withShufflePartitions(spark, 4) {
-      val q = gphase("e13", "start") {
-        streamStreamJoin(named(impIn), named(clkIn),
-          joinWindow = "240 minutes", watermark = "6 hours").writeStream
-          .format("memory").queryName(sinkName).outputMode("append").start() }
+      val q = streamStreamJoin(named(impIn), named(clkIn),
+        joinWindow = "240 minutes", watermark = "6 hours").writeStream
+        .format("memory").queryName(sinkName).outputMode("append").start()
       try {
         // ONE time-aligned slice (r17 gate-overhead item): fewer
         // slices is strictly SAFER for the both-sides-in-state
@@ -438,13 +420,12 @@ object StreamingOps {
         // path: both MemoryStream sources feed one micro-batch and
         // the inner join emits exactly the batch range join.
         val batch = math.max(2000, ev.length)
-        ev.grouped(batch).zipWithIndex.foreach { case (b, i) =>
-          gphase("e13", s"batch$i(${b.length})") {
-            impIn.addData(b.filter(_._4 == "view").map(r => (r._1, r._2, r._3)))
-            clkIn.addData(b.filter(_._4 == "click").map(r => (r._1, r._2, r._3)))
-            q.processAllAvailable()
-          } }
-      } finally gphase("e13", "stop") { q.stop() }
+        ev.grouped(batch).foreach { b =>
+          impIn.addData(b.filter(_._4 == "view").map(r => (r._1, r._2, r._3)))
+          clkIn.addData(b.filter(_._4 == "click").map(r => (r._1, r._2, r._3)))
+          q.processAllAvailable()
+        }
+      } finally q.stop()
     }
     spark.table(sinkName).orderBy("imp_id", "click_id")
   }
@@ -504,11 +485,11 @@ object StreamingOps {
         "text", "sh")
       .select(col("doc_id").as("bench_id"), explode(col("sh")).as("s"))
       .localCheckpoint(true)
-    val docs = gphase("e16", "feed") { cachedFeed(spark, s"docs25:$dir") {
+    val docs = cachedFeed(spark, s"docs25:$dir") {
       graft.Tables.documents(spark, dir).filter(col("doc_id") >= 25)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .collect().sortBy(_._1)
-    } }
+    }
     val input = MemoryStream[(Long, String)]
     // +1 h: event-time 0 would sit ON the initial watermark (e10 rule)
     val src = input.toDF().toDF("doc_id", "text")
@@ -516,9 +497,8 @@ object StreamingOps {
     val sinkName = "graft_e16_sink"
     spark.catalog.dropTempView(sinkName)
     withShufflePartitions(spark, 8) {
-      val q = gphase("e16", "start") {
-        streamContamination(src, bPost, minShared = 3).writeStream
-          .format("memory").queryName(sinkName).outputMode("append").start() }
+      val q = streamContamination(src, bPost, minShared = 3).writeStream
+        .format("memory").queryName(sinkName).outputMode("append").start()
       try {
         // ONE data micro-batch (e13 rule): sink is slice-invariant
         // (windows close at the flush watermark); cross-batch window
@@ -529,10 +509,9 @@ object StreamingOps {
         // no-data batch closes the window and emits
         val sentinel = (10000000000L, "")
         val batch = math.max(2000, docs.length + 1)
-        (docs :+ sentinel).grouped(batch).zipWithIndex.foreach { case (b, i) =>
-          gphase("e16", s"batch$i(${b.length})") {
-            input.addData(b); q.processAllAvailable() } }
-      } finally gphase("e16", "stop") { q.stop() }
+        (docs :+ sentinel).grouped(batch).foreach { b =>
+          input.addData(b); q.processAllAvailable() }
+      } finally q.stop()
     }
     spark.table(sinkName).orderBy("bench_id", "corpus_id")
   }
@@ -631,22 +610,21 @@ object StreamingOps {
     val c = graft.operators.Dedup.corpus(spark, dir)
     // the SAME cached persisted-index artifact d18 ingests against
     val oldIdx = graft.operators.Dedup.oldBandIndex(spark, dir)
-    val newDocs = gphase("e19", "feed") { cachedFeed(spark, s"newdocs:$dir") {
+    val newDocs = cachedFeed(spark, s"newdocs:$dir") {
       c.filter(col("doc_id") >= 100000)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .collect().sortBy(_._1)
-    } }
+    }
     val input = MemoryStream[(Long, String)]
     val src = input.toDF().toDF("doc_id", "text")
       .withColumn("ts", timestamp_millis(col("doc_id") + lit(3600000L)))
     val sinkName = "graft_e19_sink"
     spark.catalog.dropTempView(sinkName)
     withShufflePartitions(spark, 8) {
-      val q = gphase("e19", "start") {
-        streamIncrementalDedup(src, oldIdx, 0.5,
-          oldSho = Some(graft.operators.Dedup.oldShoTable(spark, dir)),
-          oldSlim = Some(graft.operators.Dedup.oldSlimIndex(spark, dir))).writeStream
-          .format("memory").queryName(sinkName).outputMode("append").start() }
+      val q = streamIncrementalDedup(src, oldIdx, 0.5,
+        oldSho = Some(graft.operators.Dedup.oldShoTable(spark, dir)),
+        oldSlim = Some(graft.operators.Dedup.oldSlimIndex(spark, dir))).writeStream
+        .format("memory").queryName(sinkName).outputMode("append").start()
       try {
         // ONE data micro-batch (e13 rule): per-new-doc decisions are
         // independent (windowed best-match vs the STATIC old index),
@@ -660,10 +638,9 @@ object StreamingOps {
         // (measured ~1.3 s of e19's 4.6 s steady state).
         val sentinel = (10000000000L, "")
         val batch = math.max(2000, newDocs.length + 1)
-        (newDocs :+ sentinel).grouped(batch).zipWithIndex.foreach { case (b, i) =>
-          gphase("e19", s"batch$i(${b.length})") {
-            input.addData(b); q.processAllAvailable() } }
-      } finally gphase("e19", "stop") { q.stop() }
+        (newDocs :+ sentinel).grouped(batch).foreach { b =>
+          input.addData(b); q.processAllAvailable() }
+      } finally q.stop()
     }
     val matches = spark.table(sinkName)
       .filter(col("doc_id") < 10000000000L)
