@@ -1,6 +1,6 @@
 package graft.models
 
-import breeze.linalg.{DenseMatrix, DenseVector, cholesky, diag, inv}
+import breeze.linalg.{DenseMatrix, DenseVector, cholesky, inv}
 import graft.functions.Numerics
 
 /**
@@ -15,10 +15,14 @@ import graft.functions.Numerics
  *    (maxit=25, maxstep=5, no half-steps, gtol/xtol=1e-5) and an LRT
  *    p-value for the predictor (models.py:9-53)
  *
- * All fitters take a column-major design matrix whose FIRST column is
- * the predictor; the intercept column is appended internally. They are
+ * The binary fitters take a packed column-major design whose FIRST
+ * column is the predictor and whose LAST is the intercept. They are
  * plain-JVM and run inside executor tasks — one fit per
- * (predictor, dependent) group. The iterative kernels are hand-rolled
+ * (predictor, dependent) group. The per-fit steps around the row
+ * passes (the Newton solve and step cap, the Firth final solve, the
+ * Wald and LRT results) are shared with the gram fitter in
+ * `Association`, which runs them on its distributed moments. The
+ * iterative kernels are hand-rolled
  * over flat primitive arrays with buffers allocated once per fit:
  * breeze's idiomatic `xi.t * (xi(::,*) *:* w)` / `xi * infoInv`
  * materialize two n×k temporaries per IRLS iteration, and at the MAS
@@ -39,45 +43,7 @@ final case class FitResult(
 object Models {
   private val Z975 = 1.959963984540054 // qnorm(0.975)
 
-  /** Append an all-ones intercept column (reference adds it last). */
-  def withIntercept(x: DenseMatrix[Double]): DenseMatrix[Double] =
-    DenseMatrix.horzcat(x, DenseMatrix.ones[Double](x.rows, 1))
-
-  /** Flatten a design to column-major with the intercept appended. */
-  private def packed(x: DenseMatrix[Double]): (Array[Double], Int, Int) = {
-    val n = x.rows
-    val k = x.cols + 1
-    val xd = new Array[Double](n * k)
-    var j = 0
-    while (j < x.cols) {
-      var i = 0
-      while (i < n) { xd(j * n + i) = x(i, j); i += 1 }
-      j += 1
-    }
-    java.util.Arrays.fill(xd, (k - 1) * n, k * n, 1.0)
-    (xd, n, k)
-  }
-
   // ------------------------------------------------------------- linear
-
-  /**
-   * OLS from sufficient statistics: xtx/xty INCLUDE the intercept
-   * column (appended last). Raw-sum form — see `linearFromCentered`
-   * for the partition-order-stable variant the engine uses.
-   */
-  def linearFromGram(
-      xtx: DenseMatrix[Double],
-      xty: DenseVector[Double],
-      yty: Double,
-      n: Long): FitResult = {
-    val k = xtx.cols
-    val dfRes = n - k
-    if (dfRes <= 0) return FitResult(Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, converged = false)
-    val xtxInv = inv(xtx)
-    val beta = xtxInv * xty
-    val rss = math.max(0.0, yty - (beta dot xty))
-    tInference(beta(0), rss, dfRes, xtxInv(0, 0))
-  }
 
   /**
    * OLS from CENTERED sufficient statistics — the 100 TB association
@@ -105,19 +71,13 @@ object Models {
     tInference(beta(0), rss, dfRes, cxxInv(0, 0))
   }
 
-  private def tInference(b0: Double, rss: Double, dfRes: Long, v00: Double): FitResult = {
+  private[graft] def tInference(b0: Double, rss: Double, dfRes: Long, v00: Double): FitResult = {
     val sigma2 = rss / dfRes
     val se0 = math.sqrt(sigma2 * v00)
     val t = b0 / se0
     val pval = Numerics.tSf2(t, dfRes.toDouble)
     val tq = Numerics.tQuantile(0.975, dfRes.toDouble)
     FitResult(pval, b0, se0, Double.NaN, b0 - tq * se0, b0 + tq * se0, converged = true)
-  }
-
-  /** OLS from a realized design (materializes the Gram and delegates). */
-  def linear(x: DenseMatrix[Double], y: DenseVector[Double]): FitResult = {
-    val xi = withIntercept(x)
-    linearFromGram(xi.t * xi, xi.t * y, y dot y, y.length.toLong)
   }
 
   // -------------------------------------------------------- raw kernels
@@ -194,16 +154,6 @@ object Models {
 
   // ----------------------------------------------------------- logistic
 
-  /** Newton-Raphson logistic MLE; Wald z p-value/CI for coefficient 0. */
-  def logistic(
-      x: DenseMatrix[Double],
-      y: DenseVector[Double],
-      maxIter: Int = 35,
-      tol: Double = 1e-8): FitResult = {
-    val (xd, n, k) = packed(x)
-    logisticRaw(xd, n, k, y.toArray, maxIter, tol)
-  }
-
   /** Logistic MLE over a packed col-major design (intercept included
     * as the last column). One O(k²) allocation per Newton step. */
   def logisticRaw(
@@ -215,6 +165,7 @@ object Models {
     val wx = new Array[Double](n)
     val info = new Array[Double](k * k)
     val grad = new Array[Double](k)
+    val all = Array.range(0, k)
     var converged = false
     var it = 0
     while (it < maxIter && !converged) {
@@ -229,44 +180,17 @@ object Models {
         grad(a) = acc
         a += 1
       }
-      val delta = new DenseMatrix(k, k, info.clone()) \ new DenseVector(grad.clone())
-      var mx = 0.0
-      var j = 0
-      while (j < k) {
-        beta(j) += delta(j)
-        mx = math.max(mx, math.abs(delta(j)))
-        j += 1
-      }
-      if (mx < tol) converged = true
+      val (step, _) = newtonStep(beta, (a2, b2) => info(a2 * k + b2), grad, all,
+        Double.PositiveInfinity)
+      if (step < tol) converged = true
       it += 1
     }
     // Wald inference from the information at the last pre-step beta
     // (delta < tol at convergence, so identical to machine precision)
-    val covm = inv(new DenseMatrix(k, k, info.clone()))
-    val se0 = math.sqrt(covm(0, 0))
-    val b0 = beta(0)
-    val z = b0 / se0
-    val pval = Numerics.normSf2(z)
-    FitResult(pval, b0, se0, math.exp(b0), b0 - Z975 * se0, b0 + Z975 * se0, converged)
+    wald(beta(0), new DenseMatrix(k, k, info.clone()), converged)
   }
 
   // -------------------------------------------------------------- firth
-
-  /**
-   * Firth-penalized logistic regression (Jeffreys prior), matching
-   * logistf defaults. Returns Wald CI and a likelihood-ratio-test
-   * p-value for coefficient 0 (the predictor), as the reference does.
-   */
-  def firth(
-      x: DenseMatrix[Double],
-      y: DenseVector[Double],
-      maxIter: Int = 25,
-      maxStep: Double = 5.0,
-      gtol: Double = 1e-5,
-      xtol: Double = 1e-5): FitResult = {
-    val (xd, n, k) = packed(x)
-    firthRaw(xd, n, k, y.toArray, maxIter, maxStep, gtol, xtol)
-  }
 
   /** Firth fit over a packed col-major design (intercept last). The
     * per-observation buffers are allocated once and shared by the full
@@ -280,15 +204,18 @@ object Models {
     // LRT: refit with the predictor coefficient constrained to zero;
     // the Jeffreys penalty stays on the full design (logistf behavior).
     // Warm-started from the full fit (as firthmodels does) — same
-    // optimum, fewer IRLS iterations.
+    // optimum, fewer IRLS iterations. Under (quasi-)separation the full
+    // fit leaves the other coefficients far from the null optimum and
+    // the capped steps can stall there; such a fit reruns as the gram
+    // fitter runs every null fit (from β=0, 2×maxIter), so both report
+    // the same null fit.
     val warm = full.beta.clone()
     warm(0) = 0.0
-    val constrained = firthFit(xd, n, k, y, fixZero = 0, maxIter, maxStep, gtol, xtol, warm, ws)
-    val stat = 2.0 * (full.pll - constrained.pll)
-    val pval = Numerics.chi2Sf(math.max(stat, 0.0), 1.0)
-    val b0 = full.beta(0)
-    val se0 = full.se(0)
-    FitResult(pval, b0, se0, math.exp(b0), b0 - Z975 * se0, b0 + Z975 * se0,
+    val warmed = firthFit(xd, n, k, y, fixZero = 0, maxIter, maxStep, gtol, xtol, warm, ws)
+    val constrained =
+      if (warmed.converged) warmed
+      else firthFit(xd, n, k, y, fixZero = 0, 2 * maxIter, maxStep, gtol, xtol, null, ws)
+    lrt(full.beta(0), full.se0, full.pll, constrained.pll,
       full.converged && constrained.converged)
   }
 
@@ -303,7 +230,7 @@ object Models {
   }
 
   private final case class FirthFit(
-      beta: Array[Double], se: Array[Double], pll: Double, converged: Boolean)
+      beta: Array[Double], se0: Double, pll: Double, converged: Boolean)
 
   /**
    * Penalized IRLS. fixZero >= 0 holds that coefficient at zero while
@@ -319,7 +246,6 @@ object Models {
       fixZero: Int, maxIter: Int, maxStep: Double, gtol: Double, xtol: Double,
       init: Array[Double], ws: FirthWorkspace): FirthFit = {
     val free = (0 until k).filter(_ != fixZero).toArray
-    val nf = free.length
     val beta = if (init != null) init.clone() else new Array[Double](k)
     val p = ws.p; val w = ws.w; val resid = ws.resid
     val wx = ws.wx; val tacc = ws.tacc
@@ -387,19 +313,8 @@ object Models {
         score(a) = acc
         a += 1
       }
-      // restrict to free coordinates
-      val scoreF = DenseVector.tabulate(nf)(a2 => score(free(a2)))
-      val infoF = DenseMatrix.tabulate(nf, nf)((a2, b2) => info(free(a2) * k + free(b2)))
-      val deltaF = infoF \ scoreF
-      // cap the step (logistf maxstep)
-      val mx = breeze.linalg.max(breeze.numerics.abs(deltaF))
-      val scale = if (mx > maxStep) maxStep / mx else 1.0
-      var j = 0
-      while (j < nf) { beta(free(j)) += scale * deltaF(j); j += 1 }
-      var gmax = 0.0
-      var j2 = 0
-      while (j2 < nf) { gmax = math.max(gmax, math.abs(scoreF(j2))); j2 += 1 }
-      if (mx * scale < xtol && gmax < gtol) converged = true
+      val (step, gmax) = newtonStep(beta, (a2, b2) => info(a2 * k + b2), score, free, maxStep)
+      if (step < xtol && gmax < gtol) converged = true
       it += 1
     }
     // final penalized log-likelihood and SEs at the solution
@@ -412,14 +327,64 @@ object Models {
       ll += y(i) * math.log(pi) + (1.0 - y(i)) * math.log(1.0 - pi)
       i += 1
     }
-    val infoM = new DenseMatrix(k, k, info.clone())
-    val pll = ll + 0.5 * logDet(infoM)
-    val se = breeze.numerics.sqrt(diag(inv(infoM))).toArray
-    FirthFit(beta, se, pll, converged)
+    val (se0, halfLogDet) = firthFinal(new DenseMatrix(k, k, info.clone()))
+    FirthFit(beta, se0, ll + halfLogDet, converged)
   }
 
-  private def logDet(m: DenseMatrix[Double]): Double = {
-    val l = cholesky(m)
-    2.0 * (0 until m.rows).map(i => math.log(l(i, i))).sum
+  // ------------------------------------------- steps shared with the gram fitter
+
+  /** One Newton step over the `free` coordinates: solves
+    * info_FF·Δ = score_F, caps max |Δ| at `maxStep` (logistf maxstep;
+    * the scale is exactly 1.0 when no cap applies) and adds the scaled
+    * step to `beta` in place. `info(a, b)` reads the full information
+    * matrix. Returns the capped max |Δβ| and max |score| over `free`.
+    * Throws on a singular info_FF, before touching `beta`. */
+  private[graft] def newtonStep(
+      beta: Array[Double], info: (Int, Int) => Double, score: Array[Double],
+      free: Array[Int], maxStep: Double): (Double, Double) = {
+    val nf = free.length
+    val deltaF = DenseMatrix.tabulate(nf, nf)((a, b) => info(free(a), free(b))) \
+      DenseVector.tabulate(nf)(a => score(free(a)))
+    var mx = 0.0
+    var gmax = 0.0
+    var j = 0
+    while (j < nf) {
+      mx = math.max(mx, math.abs(deltaF(j)))
+      gmax = math.max(gmax, math.abs(score(free(j))))
+      j += 1
+    }
+    val scale = if (mx > maxStep) maxStep / mx else 1.0
+    j = 0
+    while (j < nf) { beta(free(j)) += scale * deltaF(j); j += 1 }
+    (mx * scale, gmax)
   }
+
+  /** Firth's final solve from the information matrix X'WX at the
+    * solution: the predictor's se √(info⁻¹)₀₀ and the Jeffreys term
+    * ½·log det info, from one Cholesky. Throws on a non-positive-
+    * definite or singular info. */
+  private[graft] def firthFinal(info: DenseMatrix[Double]): (Double, Double) = {
+    val l = cholesky(info)
+    val logDet = 2.0 * (0 until info.rows).map(i => math.log(l(i, i))).sum
+    (math.sqrt(inv(info).apply(0, 0)), 0.5 * logDet)
+  }
+
+  /** Logistic's result: the predictor's Wald se √(info⁻¹)₀₀ and
+    * two-sided normal p-value. */
+  private[graft] def wald(b0: Double, info: DenseMatrix[Double], converged: Boolean): FitResult = {
+    val se0 = math.sqrt(inv(info).apply(0, 0))
+    result(Numerics.normSf2(b0 / se0), b0, se0, converged)
+  }
+
+  /** Firth's result: the χ²₁ likelihood-ratio p-value from the full and
+    * the predictor-at-zero penalized log-likelihoods, with the full
+    * fit's Wald se. */
+  private[graft] def lrt(b0: Double, se0: Double, pllFull: Double, pllNull: Double,
+      converged: Boolean): FitResult = {
+    val stat = 2.0 * (pllFull - pllNull)
+    result(Numerics.chi2Sf(math.max(stat, 0.0), 1.0), b0, se0, converged)
+  }
+
+  private def result(pval: Double, b0: Double, se0: Double, converged: Boolean): FitResult =
+    FitResult(pval, b0, se0, math.exp(b0), b0 - Z975 * se0, b0 + Z975 * se0, converged)
 }

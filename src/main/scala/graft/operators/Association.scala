@@ -7,7 +7,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
-import graft.models.Models
+import graft.models.{FitResult, Models}
 import graft.operators.Preprocess.column
 
 /**
@@ -48,6 +48,13 @@ import graft.operators.Preprocess.column
  *    the gram IRLS ([[gramFit]]): one shuffle-free scan of the melted
  *    rows per Newton step, per-pair moments summed in task buffers,
  *    the small solves on the driver.
+ *  - Both binary paths share every per-fit step: the viability gates
+ *    and failure rows here, and from `Models` the Newton solve with its
+ *    step cap, the Firth final solve and the Wald/LRT results. Only the
+ *    row kernels differ: the in-task hat-diagonal pass costs fewer
+ *    multiply-adds per row than the gram scan's third-order tensor
+ *    (84 against 175 at 7 columns), and the gram scan needs the tensor
+ *    to take a step from one pass over the rows.
  *  - Pairs that lose every row to the null-drop produce no fit, so the
  *    full predictor × dependent grid is restored with a left join and
  *    "No data after dropping nulls." rows (analysis.py:113-121).
@@ -91,6 +98,28 @@ object Association {
       "Singular information matrix."
     case _ => Option(e.getMessage).getOrElse(e.toString)
   }
+
+  /** A binary pair's failure row; the counts and the equation are -9
+    * and "nan" unless the fit itself failed after validation. */
+  private def failedRow(pred: String, dep: String, reason: String, cases: Long = -9L,
+      controls: Long = -9L, n: Long = -9L, equation: String = "nan"): BinResult =
+    BinResult(pred, dep, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
+      Double.NaN, Double.NaN, cases, controls, n, converged = false, reason, equation)
+
+  /** A fitted binary pair's row. */
+  private def fittedRow(pred: String, dep: String, r: FitResult, cases: Long, n: Long,
+      equation: String): BinResult =
+    BinResult(pred, dep, r.pval, r.beta, r.se, r.or, r.ciLow, r.ciHigh,
+      cases, n - cases, n, r.converged, "nan", equation)
+
+  /** The reference's viability gates in its order and text
+    * (analysis.py:168-193): the failed_reason, or null when the pair
+    * may be fitted. */
+  private def viability(n: Long, cases: Long, minCase: Int): String =
+    if (cases < minCase) s"Insufficient case count ($cases cases)."
+    else if (n - cases < minCase) s"Insufficient control count (${n - cases} controls)."
+    else if (cases == n) "All observations are cases."
+    else null
 
   /** Output row for the linear model (reference analysis.py:246-259). */
   final case class LinResult(
@@ -168,9 +197,13 @@ object Association {
   /** Run the configured model over the wide frame: linear through the
     * melt's co-moment aggregate, firth/logistic through the gram
     * fitters when [[routesToGram]] says so, else in column blocks. */
-  def assoc(df: DataFrame, cfg: Config): DataFrame =
+  def assoc(df: DataFrame, cfg: Config): DataFrame = assoc(df, cfg, GroupRowsMax)
+
+  /** [[assoc]] with the route's threshold given, so a spec can force
+    * either path. */
+  private[operators] def assoc(df: DataFrame, cfg: Config, groupRowsMax: Long): DataFrame =
     if (cfg.model == "linear") linear(melt(df, cfg), cfg)
-    else binaryWide(df, cfg, routesToGram(df, cfg))
+    else binaryWide(df, cfg, routesToGram(df, cfg, groupRowsMax))
 
   /**
    * Dictionary-encode the (predictor, dependent) key to ONE Long and
@@ -369,13 +402,15 @@ object Association {
       .head().getLong(0)
   }
 
+  /** The average pair cohort (melted rows per pair of the grid) above
+    * which the binary models route to the gram fitters. */
+  private val GroupRowsMax = 20000L
+
   /** The gram route's gate: the average pair cohort (`rows` melted rows
-    * over the pair grid) exceeds `spark.graft.irls.groupRowsMax`
-    * (default 20,000; ≤ 0 disables). */
-  private def overGroupRowsMax(spark: SparkSession, rows: => Long, cfg: Config): Boolean = {
-    val groupRowsMax = spark.conf.get("spark.graft.irls.groupRowsMax", "20000").toLong
+    * over the pair grid) exceeds `groupRowsMax`. */
+  private def overGroupRowsMax(rows: Long, cfg: Config, groupRowsMax: Long): Boolean = {
     val gridSize = math.max(1L, cfg.predictors.size.toLong * cfg.dependents.size)
-    groupRowsMax > 0 && rows / gridSize > groupRowsMax
+    rows / gridSize > groupRowsMax
   }
 
   /** Should [[assoc]] fit this wide frame's binary pairs with the gram
@@ -383,7 +418,10 @@ object Association {
     * instead of a count of the melted frame, so it fires on exactly the
     * same inputs. */
   def routesToGram(df: DataFrame, cfg: Config): Boolean =
-    overGroupRowsMax(df.sparkSession, meltRowCount(df, cfg), cfg)
+    routesToGram(df, cfg, GroupRowsMax)
+
+  private def routesToGram(df: DataFrame, cfg: Config, groupRowsMax: Long): Boolean =
+    overGroupRowsMax(meltRowCount(df, cfg), cfg, groupRowsMax)
 
   /** Firth/logistic over the wide frame: with `gram`, melt and run
     * [[firthGram]] / [[logisticGram]]; otherwise fit in column blocks,
@@ -513,8 +551,7 @@ object Association {
     * call, through the same per-pair fitter as [[assoc]]'s blocks.
     * Wide frames go through [[assoc]], which never melts them.
     *
-    * AUTO-ROUTE: when the average pair cohort exceeds
-    * `spark.graft.irls.groupRowsMax` (default 20,000; ≤ 0 disables),
+    * AUTO-ROUTE: when the average pair cohort exceeds 20,000 rows,
     * materializing each pair's rows inside one task is the wrong plan
     * — per-group cost is linear in rows and the whole group sits in
     * one task's heap (measured 12×/decade at the MAS bench shape).
@@ -529,10 +566,14 @@ object Association {
     * covariates are not dropped from the design — those pairs fail as
     * "Singular information matrix." instead of fitting a reduced
     * design; run `Preprocess.dropConstant` first if that matters. */
-  def binary(melted: DataFrame, cfg: Config): DataFrame = {
+  def binary(melted: DataFrame, cfg: Config): DataFrame = binary(melted, cfg, GroupRowsMax)
+
+  /** [[binary]] with the route's threshold given, so a spec can force
+    * either path. */
+  private[operators] def binary(melted: DataFrame, cfg: Config, groupRowsMax: Long): DataFrame = {
     val spark = melted.sparkSession
     import spark.implicits._
-    if (overGroupRowsMax(spark, melted.count(), cfg))
+    if (overGroupRowsMax(melted.count(), cfg, groupRowsMax))
       return if (cfg.model == "firth") firthGram(melted, cfg)
              else logisticGram(melted, cfg)
     val covNames = cfg.covariates
@@ -568,19 +609,13 @@ object Association {
       covs: Array[Array[Double]], sel: Array[Int],
       covNames: Seq[String], minCase: Int, firth: Boolean,
       maxIter: Int, tol: Double): BinResult = {
-    def fail(reason: String): BinResult =
-      BinResult(pred, dep, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-        Double.NaN, Double.NaN, -9L, -9L, -9L, converged = false, reason, "nan")
     val n = sel.length
     var ySum = 0.0
     var i = 0
     while (i < n) { ySum += y(sel(i)); i += 1 }
     val cases = math.round(ySum)
-    val controls = n - cases
-    // validation order mirrors analysis.py:168-193 exactly
-    if (cases < minCase) return fail(s"Insufficient case count ($cases cases).")
-    if (controls < minCase) return fail(s"Insufficient control count ($controls controls).")
-    if (cases == n) return fail("All observations are cases.")
+    val reason = viability(n, cases, minCase)
+    if (reason != null) return failedRow(pred, dep, reason)
     val keptCovs = covNames.indices.filter { c =>
       val v = covs(c)
       val first = v(sel(0))
@@ -613,13 +648,10 @@ object Association {
       val r =
         if (firth) Models.firthRaw(xd, n, kk, yd, maxIter = maxIter, gtol = tol, xtol = tol)
         else Models.logisticRaw(xd, n, kk, yd, maxIter = maxIter, tol = tol)
-      BinResult(pred, dep, r.pval, r.beta, r.se, r.or, r.ciLow, r.ciHigh,
-        cases, controls, n, r.converged, "nan", equation)
+      fittedRow(pred, dep, r, cases, n, equation)
     } catch {
       case e: Throwable =>
-        BinResult(pred, dep, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-          Double.NaN, Double.NaN, cases, controls, n, converged = false,
-          failureReason(e), equation)
+        failedRow(pred, dep, failureReason(e), cases, n - cases, n, equation)
     }
   }
 
@@ -742,7 +774,7 @@ object Association {
     * Firth LRT-null fit (predictor held at 0); `gi` is the pair's grid
     * index (the `keyed` group key). */
   private final class GramFit(val gi: Int, val fit: Int, m: Int) {
-    var beta = new Array[Double](m)
+    val beta = new Array[Double](m)
     var step = Double.MaxValue
     var conv = false
     var failed: String = null
@@ -820,35 +852,20 @@ object Association {
   private def unpack(buf: Array[Double], off: Int, m: Int): DenseMatrix[Double] =
     DenseMatrix.tabulate(m, m)((i, j) => buf(off + triOf(m, i, j)))
 
-  /** One Newton step at `b` from X'WX (upper triangle `s`), the score
-    * `g` and, when `t` is given, the Firth tensor: the Firth-modified
-    * score is scoreⱼ = gⱼ + Σ_ab (X'WX)⁻¹_ab·T_jab (the hat-diagonal
-    * term with the row sum pushed into T; `tIdx` maps (j, a, b) to the
-    * sorted triple's slot). Solves over the `free` coordinates, caps
-    * max |Δβ| at `maxStep`, and returns the new beta, the capped
-    * max |Δβ| and max |score| over `free`. Throws on a singular X'WX. */
-  private def newtonStep(
-      b: Array[Double], s: Array[Double], g: Array[Double], t: Array[Double],
-      tIdx: Array[Int], free: Array[Int], maxStep: Double): (Array[Double], Double, Double) = {
-    val m = b.length
-    val score =
-      if (t == null) g
-      else {
-        val covm: DenseMatrix[Double] = breeze.linalg.inv(unpack(s, 0, m))
-        Array.tabulate(m) { j =>
-          var acc = g(j)
-          for (a <- 0 until m; c <- 0 until m) acc += covm(a, c) * t(tIdx((j * m + a) * m + c))
-          acc
-        }
-      }
-    val nf = free.length
-    val deltaF = DenseMatrix.tabulate(nf, nf)((a, c) => s(triOf(m, free(a), free(c)))) \
-      DenseVector.tabulate(nf)(a => score(free(a)))
-    val mx = breeze.linalg.max(breeze.numerics.abs(deltaF))
-    val scale = if (mx > maxStep) maxStep / mx else 1.0
-    val nb = b.clone()
-    (0 until nf).foreach(j => nb(free(j)) += scale * deltaF(j))
-    (nb, mx * scale, free.map(j => math.abs(score(j))).max)
+  /** The Firth-modified score at a Newton scan's moments: X'WX (upper
+    * triangle `s`), the score `g` and the third-order tensor `t`:
+    * scoreⱼ = gⱼ + Σ_ab (X'WX)⁻¹_ab·T_jab — the hat-diagonal term with
+    * the row sum pushed into T (`tIdx` maps (j, a, b) to the sorted
+    * triple's slot). Throws on a singular X'WX. */
+  private def firthScore(
+      s: Array[Double], g: Array[Double], t: Array[Double], tIdx: Array[Int],
+      m: Int): Array[Double] = {
+    val covm: DenseMatrix[Double] = breeze.linalg.inv(unpack(s, 0, m))
+    Array.tabulate(m) { j =>
+      var acc = g(j)
+      for (a <- 0 until m; c <- 0 until m) acc += covm(a, c) * t(tIdx((j * m + a) * m + c))
+      acc
+    }
   }
 
   /** Distributed logistic IRLS over a melted frame, for pairs too large
@@ -865,10 +882,11 @@ object Association {
     * (logistf defaults: step cap 5, no half-steps, convergence on
     * max|Δβ| < tol AND max|score| < tol): each pair runs the full fit
     * and the LRT-null fit (predictor held at 0) concurrently from β=0,
-    * the null fit with a budget of 2×maxIter because it starts cold; a
-    * converged fit freezes. One fused final scan gives each fit's
-    * penalized log-likelihood (ll + ½·log det X'WX) and the full fit's
-    * Wald se; the p-value is the χ²₁ LRT. */
+    * the null fit with a budget of 2×maxIter because it starts cold (the
+    * in-task fitter reruns its warm-started null fit this way when that
+    * does not converge); a converged fit freezes. One fused final scan
+    * gives each fit's penalized log-likelihood (ll + ½·log det X'WX)
+    * and the full fit's Wald se; the p-value is the χ²₁ LRT. */
   def firthGram(melted: DataFrame, cfg: Config): DataFrame =
     gramFit(melted, cfg, penalized = true)
 
@@ -887,12 +905,15 @@ object Association {
    *
    * The first pass gives each pair's count, case sum, covariate range
    * and its β=0 moments (exact: w = ¼, tensor 0), which are Newton
-   * step 1. Viability gates run in the in-task order and text; a pair
-   * with a constant covariate then fails as "Singular information
+   * step 1. The in-task fitter's viability gates run first, then a
+   * pair with a constant covariate fails as "Singular information
    * matrix." — this path does not drop per-pair constant covariates
-   * (run `Preprocess.dropConstant` first). Per-row operand order is
-   * the same in every scan, so results match the in-task fitter to
-   * FP summation order (spec-pinned in SourcesAndGramSpec).
+   * (run `Preprocess.dropConstant` first). The driver's per-fit steps
+   * are the in-task fitter's own (`Models.newtonStep`,
+   * `Models.firthFinal`, `Models.wald`, `Models.lrt`), and per-row
+   * operand order is the same in every scan, so results match the
+   * in-task fitter to FP summation order (spec-pinned in
+   * SourcesAndGramSpec, separated pairs included).
    */
   private[operators] def gramFit(
       melted: DataFrame, cfg: Config, penalized: Boolean,
@@ -918,20 +939,14 @@ object Association {
     val grid = predictors.length * dependents.length
     val first = scan(firstPass, Array.tabulate(grid)(new GramFit(_, 0, m)))
     def failRow(gi: Int, reason: String): BinResult =
-      BinResult(predictors(gi / dependents.length), dependents(gi % dependents.length),
-        Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-        -9L, -9L, -9L, converged = false, reason, "nan")
+      failedRow(predictors(gi / dependents.length), dependents(gi % dependents.length), reason)
     val out = mutable.ArrayBuffer.empty[BinResult]
     // pairs with no rows are left to completeGrid
     val viable = (0 until grid).filter(gi => first(gi * nF) > 0).filter { gi =>
       val off = gi * nF
-      val n = first(off).toLong
-      val cases = first(off + 1).toLong
+      val gate = viability(first(off).toLong, first(off + 1).toLong, cfg.minCaseCount)
       val reason =
-        if (cases < cfg.minCaseCount) s"Insufficient case count ($cases cases)."
-        else if (n - cases < cfg.minCaseCount)
-          s"Insufficient control count (${n - cases} controls)."
-        else if (cases == n) "All observations are cases."
+        if (gate != null) gate
         else if ((0 until k).exists(c =>
             !(first(off + firstPass.sums + c) < -first(off + firstPass.sums + k + c))))
           "Singular information matrix."
@@ -973,10 +988,11 @@ object Association {
           else if (it == 0) new Array[Double](stepKernel.width - nS - m)
           else java.util.Arrays.copyOfRange(mom, off + nS + m, off + stepKernel.width)
         try {
-          val (nb, step, score) = newtonStep(f.beta, s, g, t, tIdx, free(f.fit), maxStep)
-          f.beta = nb
+          val score = if (t == null) g else firthScore(s, g, t, tIdx, m)
+          val (step, gmax) =
+            Models.newtonStep(f.beta, (a, b) => s(triOf(m, a, b)), score, free(f.fit), maxStep)
           f.step = step
-          f.conv = step < tol && (!penalized || score < tol)
+          f.conv = step < tol && (!penalized || gmax < tol)
           f.info = s
           gridStep = math.max(gridStep, step)
         } catch {
@@ -995,11 +1011,9 @@ object Association {
       fin.zipWithIndex.foreach { case (f, a) =>
         val off = a * finalKernel.width
         try {
-          val im = unpack(tot, off, m)
-          val l = breeze.linalg.cholesky(im)
-          val logDet = 2.0 * (0 until m).map(i => math.log(l(i, i))).sum
-          f.se0 = math.sqrt(breeze.linalg.inv(im).apply(0, 0))
-          f.pll = tot(off + nS) + 0.5 * logDet
+          val (se0, halfLogDet) = Models.firthFinal(unpack(tot, off, m))
+          f.se0 = se0
+          f.pll = tot(off + nS) + halfLogDet
         } catch {
           case e: Throwable => f.finFailed = failureReason(e)
         }
@@ -1008,30 +1022,21 @@ object Association {
     if (persist) flat.unpersist()
 
     // every fitted pair kept all its covariates (a constant one fails)
-    val z975 = 1.959963984540054
     fits.grouped(if (penalized) 2 else 1).foreach { pf =>
       val full = pf.head
       val gi = full.gi
       val pred = predictors(gi / dependents.length)
       val dep = dependents(gi % dependents.length)
-      val n = first(gi * nF).toLong
-      val cases = first(gi * nF + 1).toLong
-      def wald(pval: Double, se0: Double, converged: Boolean): BinResult = {
-        val b0 = full.beta(0)
-        BinResult(pred, dep, pval, b0, se0, math.exp(b0), b0 - z975 * se0, b0 + z975 * se0,
-          cases, n - cases, n, converged, "nan",
+      def row(r: FitResult): BinResult =
+        fittedRow(pred, dep, r, first(gi * nF + 1).toLong, first(gi * nF).toLong,
           s"$dep ~ $pred + ${cfg.covariates.mkString(" + ")}")
-      }
       out += ((pf.map(_.failed) ++ pf.map(_.finFailed)).find(_ != null) match {
         case Some(reason) => failRow(gi, reason)
         case None if penalized =>
-          val stat = math.max(2.0 * (full.pll - pf(1).pll), 0.0)
-          wald(graft.functions.Numerics.chi2Sf(stat, 1.0), full.se0, full.conv && pf(1).conv)
+          row(Models.lrt(full.beta(0), full.se0, full.pll, pf(1).pll, full.conv && pf(1).conv))
         case None =>
-          try {
-            val se0 = math.sqrt(breeze.linalg.inv(unpack(full.info, 0, m)).apply(0, 0))
-            wald(graft.functions.Numerics.normSf2(full.beta(0) / se0), se0, full.step < tol)
-          } catch {
+          try row(Models.wald(full.beta(0), unpack(full.info, 0, m), full.step < tol))
+          catch {
             case e: Throwable => failRow(gi, failureReason(e))
           }
       })

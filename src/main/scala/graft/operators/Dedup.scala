@@ -815,10 +815,7 @@ object Dedup {
    * (bounded by distinct lines, and a 10⁹-copy footer is ONE row of
    * it) → df joins back to the line stream → per-doc rebuild +
    * fingerprint, identical to d12's. The df side is an aggregate
-   * directly under the join, so the common case broadcasts; at
-   * corpus scale the d12 lesson applies verbatim — set
-   * spark.graft.lineDedup.checkpointFirst to materialize the df
-   * table so AQE can skew-split the probe side.
+   * directly under the join, so the common case broadcasts.
    */
   def lineDedup(docs: DataFrame, lineWords: Int = 12,
       minDocs: Int = 5): DataFrame = {
@@ -827,12 +824,8 @@ object Dedup {
         split(TextOps.relined(lineWords), "\n"),
         l => normText(trim(l)))).as(Seq("idx", "l")))
       .filter(length(col("l")) > 0)
-    val dfreq0 = lines.select("l", "doc_id").distinct()
+    val dfreq = lines.select("l", "doc_id").distinct()
       .groupBy("l").agg(count(lit(1)).as("df"))
-    val dfreq = if (docs.sparkSession.conf
-        .get("spark.graft.lineDedup.checkpointFirst", "false").toBoolean)
-      dfreq0.localCheckpoint(true)
-    else dfreq0
     val tagged = lines.join(dfreq, "l")
       .withColumn("keep", col("df") < minDocs)
     val perDoc = tagged.groupBy("doc_id").agg(
@@ -1100,7 +1093,6 @@ object Dedup {
    */
   def minhashLshPairs(docs: DataFrame, tau: Double, bands: Int = 32, rows: Int = 4,
       shOpt: Option[DataFrame] = None): DataFrame = {
-    val spark = docs.sparkSession
     val params = permParams(bands * rows, 42L)
     val sigUdf = udf((sh: Seq[String]) => minhashSig(sh, params))
     val bandUdf = udf((sig: Seq[Long]) =>
@@ -1115,47 +1107,16 @@ object Dedup {
     // materialized signature table.
     val withSh = shOpt.getOrElse(shingleTable(docs))
     val sigs = withSh.withColumn("sig", sigUdf(col("sh")))
-    // Candidate dedup strategy: a pair colliding in k bands appears k
-    // times in the bucket-join output, and `distinct()` shuffles that
-    // k-fold stream (map-side combine removes ~nothing — duplicates of
-    // a pair live in DIFFERENT (band, bh) partitions). The minBand
-    // variant dedups AT THE SOURCE: each bucket row carries the doc's
-    // full band-hash array (bands×4 B) and a pair is emitted only from
-    // its MINIMAL colliding band — exactly-once globally, no distinct,
-    // no pair-stream exchange. Trade: the bucket-join shuffle widens by
-    // the array; wins when collisions/pair is high (dup-dense corpora),
-    // loses when the corpus is dup-sparse and the pair stream is tiny.
-    val minBand = spark.conf.getOption("spark.graft.minhash.minBand")
-      .orElse(sys.env.get("SPARK_GRAFT_MINHASH_MINBAND"))
-      .exists(_.toBoolean)
-    val cand =
-      if (minBand) {
-        val bandArrUdf = udf((sig: Seq[Long]) =>
-          (0 until bands).map(bi =>
-            scala.util.hashing.MurmurHash3.orderedHash(
-              sig.slice(bi * rows, bi * rows + rows))).toArray)
-        val buckets = sigs.select(col("doc_id"), bandArrUdf(col("sig")).as("bhs"))
-          .select(col("doc_id"), col("bhs"),
-            posexplode(col("bhs")).as(Seq("band", "bh")))
-          .localCheckpoint(true)
-        buckets.as("x").join(buckets.as("y"),
-            col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-              col("x.doc_id") < col("y.doc_id") &&
-              // first index where the band hashes agree (1-based)
-              col("x.band") === array_position(
-                zip_with(col("x.bhs"), col("y.bhs"), (a, b) => a === b),
-                lit(true)) - 1)
-          .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"))
-      } else {
-        val buckets = sigs.select(col("doc_id"), explode(bandUdf(col("sig"))).as("b"))
-          .select(col("doc_id"), col("b._1").as("band"), col("b._2").as("bh"))
-          .localCheckpoint(true)
-        buckets.as("x").join(buckets.as("y"),
-            col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"))
-          .distinct()
-      }
+    // A pair colliding in k bands appears k times in the bucket join;
+    // `distinct()` collapses them before the exact Jaccard verify.
+    val buckets = sigs.select(col("doc_id"), explode(bandUdf(col("sig"))).as("b"))
+      .select(col("doc_id"), col("b._1").as("band"), col("b._2").as("bh"))
+      .localCheckpoint(true)
+    val cand = buckets.as("x").join(buckets.as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"))
+      .distinct()
     val sh1 = withSh.select(col("doc_id").as("id1"), col("sh").as("sh1"))
     val sh2 = withSh.select(col("doc_id").as("id2"), col("sh").as("sh2"))
     cand.join(sh1, "id1").join(sh2, "id2")

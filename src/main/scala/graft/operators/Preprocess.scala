@@ -70,12 +70,17 @@ object Preprocess {
   /** Missing-covariate fill (preprocessing.py:7-40): strategy ∈
     * mean|min|max|zero|one. Statistics come from one aggregate row
     * cross-joined back (broadcast — one row), so the fill is a pure
-    * projection afterwards. */
+    * projection afterwards. A statistic fill over a string column is
+    * refused up front: it would fail mid-job on the first value that
+    * does not parse as a number. */
   def fillNulls(df: DataFrame, cols: Seq[String], strategy: String): DataFrame = strategy match {
     case "zero" => df.na.fill(0.0, cols.map(quoted))
     case "one" => df.na.fill(1.0, cols.map(quoted))
     case "drop" => df.na.drop(cols.map(quoted))
     case s if s == "mean" || s == "min" || s == "max" =>
+      cols.find(c => df.schema(c).dataType == StringType).foreach(c =>
+        throw new IllegalArgumentException(
+          s"Cannot fill nulls in string column '$c' with its $s; use drop, fail or a numeric encoding."))
       val aggFn: String => Column = s match {
         case "mean" => c => avg(column(c))
         case "min" => c => min(column(c))

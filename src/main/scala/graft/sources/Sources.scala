@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.types.{DataType, NullType, StringType, StructType}
+import graft.operators.Preprocess.column
 
 /**
  * Input readers mirroring the reference's format handling
@@ -10,11 +12,9 @@ import org.apache.spark.sql.types.StringType
  * tsv, txt (tab-delimited), with user-supplied null markers.
  *
  * Parquet carries nulls in the schema; the delimited readers accept a
- * list of null markers. Spark's csv source takes ONE `nullValue`, so
- * the first marker rides the scan (vectorized) and any further
- * markers are nulled by a projection over the string-typed columns —
- * numeric columns can't contain a surviving marker string (a column
- * holding one would have inferred as string).
+ * list of null markers, and every marker nulls its exact text in every
+ * column before types are inferred, as the reference's `null_values`
+ * does.
  */
 object Sources {
 
@@ -108,23 +108,51 @@ object Sources {
       .parquet(path)
   }
 
+  /** A delimited file with a header row. Spark's csv source takes ONE
+    * `nullValue`, and its inference would read any further marker as
+    * data (a `-9` in a numeric column is the number −9, an `NA` makes
+    * the column a string). So one pass over the file as strings nulls
+    * every marker, runs Spark's own CSV inference on what is left and
+    * notes the columns that hold a marker after the first. The file is
+    * then read with the inferred types; a column that held such a
+    * marker is read as strings, nulled and cast. */
   private def delimited(spark: SparkSession, path: String, delim: String,
       nullValues: Seq[String]): DataFrame = {
-    var reader = spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .option("delimiter", delim)
-    nullValues.headOption.foreach(v => reader = reader.option("nullValue", v))
-    val df = reader.csv(path)
-    val rest = nullValues.drop(1)
-    if (rest.isEmpty) df
-    else {
-      val cols = df.schema.fields.map { f =>
-        if (f.dataType == StringType)
-          when(col(f.name).isin(rest: _*), lit(null)).otherwise(col(f.name)).as(f.name)
-        else col(f.name)
+    val options = Map("header" -> "true", "delimiter" -> delim) ++
+      nullValues.headOption.map("nullValue" -> _)
+    val raw = spark.read.options(options).csv(path)
+    val names = raw.columns
+    val n = names.length
+    val rest = nullValues.drop(1).toSet
+    val inference = new CSVInferSchema(new CSVOptions(options + ("inferSchema" -> "true"),
+      true, spark.conf.get("spark.sql.session.timeZone")))
+    type Seen = (Array[DataType], Array[Boolean])
+    val merge = (a: Seen, b: Seen) =>
+      (inference.mergeRowTypes(a._1, b._1), a._2.zip(b._2).map(m => m._1 || m._2))
+    val (types, marked) = raw.queryExecution.toRdd.mapPartitions { rows =>
+      var types = Array.fill[DataType](n)(NullType)
+      val marked = new Array[Boolean](n)
+      val tokens = new Array[String](n)
+      rows.foreach { r =>
+        var i = 0
+        while (i < n) {
+          tokens(i) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+          if (tokens(i) != null && rest(tokens(i))) { marked(i) = true; tokens(i) = null }
+          i += 1
+        }
+        types = inference.inferRowType(types, tokens)
       }
-      df.select(cols.toIndexedSeq: _*)
-    }
+      Iterator.single((types, marked))
+    }.treeAggregate((Array.fill[DataType](n)(NullType), new Array[Boolean](n)))(merge, merge)
+    val fields = inference.toStructFields(types, names)
+    val typed = spark.read.options(options).schema(StructType(fields.zip(marked).map {
+      case (f, m) => if (m) f.copy(dataType = StringType) else f
+    })).csv(path)
+    if (!marked.contains(true)) typed
+    else typed.select(fields.zip(marked).toIndexedSeq.map { case (f, m) =>
+      if (!m) column(f.name)
+      else when(column(f.name).isin(rest.toSeq: _*), lit(null)).otherwise(column(f.name))
+        .cast(f.dataType).as(f.name)
+    }: _*)
   }
 }

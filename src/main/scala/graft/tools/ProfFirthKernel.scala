@@ -1,6 +1,6 @@
 package graft.tools
 
-import breeze.linalg.{DenseMatrix, DenseVector, cholesky, diag, inv}
+import breeze.linalg.{DenseMatrix, inv}
 import graft.models.Models
 
 /**
@@ -12,7 +12,9 @@ import graft.models.Models
  * bench's concurrency shape). Variant OLD is a verbatim copy of the
  * r21 kernel (2-multiply xtwx inner loop, pair-wise quadratic form);
  * variant NEW calls Models.firthRaw (hoisted w-column, per-leading-
- * column quadratic form). Prints per-round medians and the max
+ * column quadratic form). The variants differ only in their row
+ * passes: every one takes its Newton step, final solve and LRT from
+ * `Models`. Prints per-round medians and the max
  * coefficient/p-value deltas between variants (expected ~1e-9: same
  * fixed point, different FP summation order).
  */
@@ -57,17 +59,12 @@ object ProfFirthKernel {
     val info = new Array[Double](k * k)
     val score = new Array[Double](k)
   }
-  private final case class Fit(beta: Array[Double], se: Array[Double],
-      pll: Double, converged: Boolean)
-  private def logDet(m: DenseMatrix[Double]): Double = {
-    val l = cholesky(m)
-    2.0 * (0 until m.rows).map(i => math.log(l(i, i))).sum
-  }
+  private final case class Fit(beta: Array[Double], se0: Double, pll: Double,
+      converged: Boolean)
   private def firthFitOld(xd: Array[Double], n: Int, k: Int, y: Array[Double],
       fixZero: Int, maxIter: Int, maxStep: Double, gtol: Double, xtol: Double,
       init: Array[Double], ws: Ws): Fit = {
     val free = (0 until k).filter(_ != fixZero).toArray
-    val nf = free.length
     val beta = if (init != null) init.clone() else new Array[Double](k)
     val p = ws.p; val w = ws.w; val resid = ws.resid
     val info = ws.info; val score = ws.score
@@ -106,17 +103,8 @@ object ProfFirthKernel {
         score(a) = acc
         a += 1
       }
-      val scoreF = DenseVector.tabulate(nf)(a2 => score(free(a2)))
-      val infoF = DenseMatrix.tabulate(nf, nf)((a2, b2) => info(free(a2) * k + free(b2)))
-      val deltaF = infoF \ scoreF
-      val mx = breeze.linalg.max(breeze.numerics.abs(deltaF))
-      val scale = if (mx > maxStep) maxStep / mx else 1.0
-      var j = 0
-      while (j < nf) { beta(free(j)) += scale * deltaF(j); j += 1 }
-      var gmax = 0.0
-      var j2 = 0
-      while (j2 < nf) { gmax = math.max(gmax, math.abs(scoreF(j2))); j2 += 1 }
-      if (mx * scale < xtol && gmax < gtol) converged = true
+      val (step, gmax) = Models.newtonStep(beta, (a2, b2) => info(a2 * k + b2), score, free, maxStep)
+      if (step < xtol && gmax < gtol) converged = true
       it += 1
     }
     etaPW(xd, n, k, beta, p, w, 1e-12)
@@ -128,10 +116,8 @@ object ProfFirthKernel {
       ll += y(i) * math.log(pi) + (1.0 - y(i)) * math.log(1.0 - pi)
       i += 1
     }
-    val infoM = new DenseMatrix(k, k, info.clone())
-    val pll = ll + 0.5 * logDet(infoM)
-    val se = breeze.numerics.sqrt(diag(inv(infoM))).toArray
-    Fit(beta, se, pll, converged)
+    val (se0, halfLogDet) = Models.firthFinal(new DenseMatrix(k, k, info.clone()))
+    Fit(beta, se0, ll + halfLogDet, converged)
   }
   private def firthRawOld(xd: Array[Double], n: Int, k: Int,
       y: Array[Double]): (Double, Double) = {
@@ -140,8 +126,7 @@ object ProfFirthKernel {
     val warm = full.beta.clone()
     warm(0) = 0.0
     val c = firthFitOld(xd, n, k, y, 0, 25, 5.0, 1e-5, 1e-5, warm, ws)
-    val stat = 2.0 * (full.pll - c.pll)
-    (full.beta(0), graft.functions.Numerics.chi2Sf(math.max(stat, 0.0), 1.0))
+    (full.beta(0), Models.lrt(full.beta(0), full.se0, full.pll, c.pll, full.converged && c.converged).pval)
   }
 
   // ----- register-blocked prototype (the BLK variant): the A/B of
@@ -200,7 +185,6 @@ object ProfFirthKernel {
       fixZero: Int, maxIter: Int, maxStep: Double, gtol: Double, xtol: Double,
       init: Array[Double], ws: WsB): Fit = {
     val free = (0 until k).filter(_ != fixZero).toArray
-    val nf = free.length
     val beta = if (init != null) init.clone() else new Array[Double](k)
     val p = ws.p; val w = ws.w; val resid = ws.resid
     val wx = ws.wx; val tacc = ws.tacc
@@ -257,17 +241,8 @@ object ProfFirthKernel {
         score(a) = acc
         a += 1
       }
-      val scoreF = DenseVector.tabulate(nf)(a2 => score(free(a2)))
-      val infoF = DenseMatrix.tabulate(nf, nf)((a2, b2) => info(free(a2) * k + free(b2)))
-      val deltaF = infoF \ scoreF
-      val mx = breeze.linalg.max(breeze.numerics.abs(deltaF))
-      val scale = if (mx > maxStep) maxStep / mx else 1.0
-      var j = 0
-      while (j < nf) { beta(free(j)) += scale * deltaF(j); j += 1 }
-      var gmax = 0.0
-      var j2 = 0
-      while (j2 < nf) { gmax = math.max(gmax, math.abs(scoreF(j2))); j2 += 1 }
-      if (mx * scale < xtol && gmax < gtol) converged = true
+      val (step, gmax) = Models.newtonStep(beta, (a2, b2) => info(a2 * k + b2), score, free, maxStep)
+      if (step < xtol && gmax < gtol) converged = true
       it += 1
     }
     etaPW(xd, n, k, beta, p, w, 1e-12)
@@ -279,10 +254,8 @@ object ProfFirthKernel {
       ll += y(i) * math.log(pi) + (1.0 - y(i)) * math.log(1.0 - pi)
       i += 1
     }
-    val infoM = new DenseMatrix(k, k, info.clone())
-    val pll = ll + 0.5 * logDet(infoM)
-    val se = breeze.numerics.sqrt(diag(inv(infoM))).toArray
-    Fit(beta, se, pll, converged)
+    val (se0, halfLogDet) = Models.firthFinal(new DenseMatrix(k, k, info.clone()))
+    Fit(beta, se0, ll + halfLogDet, converged)
   }
   private def firthRawBlk(xd: Array[Double], n: Int, k: Int,
       y: Array[Double]): (Double, Double) = {
@@ -291,8 +264,7 @@ object ProfFirthKernel {
     val warm = full.beta.clone()
     warm(0) = 0.0
     val c = firthFitBlk(xd, n, k, y, 0, 25, 5.0, 1e-5, 1e-5, warm, ws)
-    val stat = 2.0 * (full.pll - c.pll)
-    (full.beta(0), graft.functions.Numerics.chi2Sf(math.max(stat, 0.0), 1.0))
+    (full.beta(0), Models.lrt(full.beta(0), full.se0, full.pll, c.pll, full.converged && c.converged).pval)
   }
 
   // ----- synthetic pair grid (hash-derived, the bench's shape) -----

@@ -59,18 +59,6 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exact == lsh, s"missing=${exact -- lsh} extra=${lsh -- exact}")
   }
 
-  test("minBand candidate emission is result-identical to the distinct path") {
-    val base = Dedup.minhashLshPairs(Dedup.corpus(spark, dir), 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    spark.conf.set("spark.graft.minhash.minBand", "true")
-    try {
-      val mb = Dedup.minhashLshPairs(Dedup.corpus(spark, dir), 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(base.nonEmpty && mb == base,
-        s"missing=${base -- mb} extra=${mb -- base}")
-    } finally spark.conf.unset("spark.graft.minhash.minBand")
-  }
-
   test("df-capped shingle join verifies exactly; generous cap equals exact") {
     val exact = Dedup.ngramJaccardPairs(Dedup.corpus(spark, dir), 0.5, Some("source"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

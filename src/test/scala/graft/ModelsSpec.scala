@@ -2,17 +2,54 @@ package graft
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.models.Models
+import graft.models.{FitResult, Models}
 
 class ModelsSpec extends AnyFunSuite {
   def near(a: Double, b: Double, tol: Double): Boolean = math.abs(a - b) <= tol
+
+  // Breeze-matrix entry points over the packed fitters: the design comes
+  // without its intercept column, which the reference appends last.
+
+  private def withIntercept(x: DenseMatrix[Double]): DenseMatrix[Double] =
+    DenseMatrix.horzcat(x, DenseMatrix.ones[Double](x.rows, 1))
+
+  /** The design column-major with the intercept appended. */
+  private def packed(x: DenseMatrix[Double]): (Array[Double], Int, Int) =
+    (withIntercept(x).toArray, x.rows, x.cols + 1)
+
+  /** OLS from raw sufficient statistics (intercept column included):
+    * the reference the centered engine path is checked against. */
+  private def linearFromGram(xtx: DenseMatrix[Double], xty: DenseVector[Double], yty: Double,
+      n: Long): FitResult = {
+    val dfRes = n - xtx.cols
+    if (dfRes <= 0) return FitResult(Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, converged = false)
+    val xtxInv = breeze.linalg.inv(xtx)
+    val beta = xtxInv * xty
+    val rss = math.max(0.0, yty - (beta dot xty))
+    Models.tInference(beta(0), rss, dfRes, xtxInv(0, 0))
+  }
+
+  private def linear(x: DenseMatrix[Double], y: DenseVector[Double]): FitResult = {
+    val xi = withIntercept(x)
+    linearFromGram(xi.t * xi, xi.t * y, y dot y, y.length.toLong)
+  }
+
+  private def logistic(x: DenseMatrix[Double], y: DenseVector[Double]): FitResult = {
+    val (xd, n, k) = packed(x)
+    Models.logisticRaw(xd, n, k, y.toArray, maxIter = 35, tol = 1e-8)
+  }
+
+  private def firth(x: DenseMatrix[Double], y: DenseVector[Double]): FitResult = {
+    val (xd, n, k) = packed(x)
+    Models.firthRaw(xd, n, k, y.toArray)
+  }
 
   test("OLS matches hand-computed normal equations on small data") {
     // y = 2*x + 1 + noise-free => beta exactly 2, se 0-ish (rank issues), so
     // use noisy data with known closed form instead.
     val x = DenseMatrix(1.0, 2.0, 3.0, 4.0, 5.0)
     val y = DenseVector(2.1, 3.9, 6.2, 8.1, 9.7)
-    val r = Models.linear(x, y)
+    val r = linear(x, y)
     // closed form simple regression
     val n = 5.0
     val sx = breeze.linalg.sum(x(::, 0)); val sy = breeze.linalg.sum(y)
@@ -37,7 +74,7 @@ class ModelsSpec extends AnyFunSuite {
     val y = Array.tabulate(n)(i => 1.5 * x1(i) - 0.7 * x2(i) + 3.0 + 0.1 * rng.nextGaussian())
     val xm = DenseMatrix.horzcat(
       new DenseMatrix(n, 1, x1), new DenseMatrix(n, 1, x2))
-    val r = Models.linear(xm, DenseVector(y))
+    val r = linear(xm, DenseVector(y))
     assert(near(r.beta, 1.5, 0.02))
     assert(r.pval < 1e-10)
   }
@@ -51,7 +88,7 @@ class ModelsSpec extends AnyFunSuite {
       if (i < 100) { if (i < 20) 1.0 else 0.0 }
       else { if (i < 160) 1.0 else 0.0 }
     }
-    val r = Models.logistic(x, y)
+    val r = logistic(x, y)
     assert(r.converged)
     assert(near(r.beta, math.log(6.0), 1e-6), s"beta ${r.beta}")
     // Wald se for 2x2: sqrt(1/a + 1/b + 1/c + 1/d)
@@ -70,7 +107,7 @@ class ModelsSpec extends AnyFunSuite {
       if (i < 50) { if (i < 15) 1.0 else 0.0 }
       else { if (i < 55) 1.0 else 0.0 }
     }
-    val r = Models.firth(x, y)
+    val r = firth(x, y)
     val expected = math.log((15.5 * 45.5) / (35.5 * 5.5))
     assert(r.converged)
     assert(near(r.beta, expected, 1e-4), s"beta ${r.beta} vs $expected")
@@ -86,7 +123,7 @@ class ModelsSpec extends AnyFunSuite {
     // x perfectly separates y: plain logistic diverges; Firth stays finite
     val x = DenseMatrix.tabulate(40, 1)((i, _) => if (i < 20) -1.0 else 1.0)
     val y = DenseVector.tabulate(40)(i => if (i < 20) 0.0 else 1.0)
-    val r = Models.firth(x, y)
+    val r = firth(x, y)
     assert(!r.beta.isNaN && !r.beta.isInfinite)
     assert(r.beta > 0 && r.beta < 10) // finite, bias-reduced
     assert(r.pval < 1e-6)
@@ -99,9 +136,9 @@ class ModelsSpec extends AnyFunSuite {
     val x2 = Array.fill(n)(rng.nextDouble())
     val y = Array.tabulate(n)(i => 0.5 * x1(i) + 2.0 * x2(i) + rng.nextGaussian())
     val xm = DenseMatrix.horzcat(new DenseMatrix(n, 1, x1), new DenseMatrix(n, 1, x2))
-    val direct = Models.linear(xm, DenseVector(y))
-    val xi = Models.withIntercept(xm)
-    val viaGram = Models.linearFromGram(xi.t * xi, xi.t * DenseVector(y), DenseVector(y) dot DenseVector(y), n)
+    val direct = linear(xm, DenseVector(y))
+    val xi = withIntercept(xm)
+    val viaGram = linearFromGram(xi.t * xi, xi.t * DenseVector(y), DenseVector(y) dot DenseVector(y), n)
     assert(near(direct.beta, viaGram.beta, 1e-10))
     assert(near(direct.se, viaGram.se, 1e-10))
     assert(near(direct.pval, viaGram.pval, 1e-10))
@@ -122,7 +159,7 @@ class ModelsSpec extends AnyFunSuite {
     val m1 = x1.sum / n; val m2 = x2.sum / n; val my = y.sum / n
     val xmS = DenseMatrix.horzcat(
       new DenseMatrix(n, 1, x1.map(_ - m1)), new DenseMatrix(n, 1, x2.map(_ - m2)))
-    val reference = Models.linear(xmS, DenseVector(y.map(_ - my)))
+    val reference = linear(xmS, DenseVector(y.map(_ - my)))
     def cm(a: Array[Double], ma: Double, b: Array[Double], mb: Double): Double =
       (0 until n).map(i => (a(i) - ma) * (b(i) - mb)).sum
     val cxx = DenseMatrix(
@@ -151,7 +188,7 @@ class ModelsSpec extends AnyFunSuite {
       if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-eta))) 1.0 else 0.0
     }
     def fitRef(fixZero: Int, init: DenseVector[Double]): (DenseVector[Double], Double) = {
-      val xi = Models.withIntercept(x)
+      val xi = withIntercept(x)
       val k = xi.cols
       val free = (0 until k).filter(_ != fixZero).toIndexedSeq
       var beta = init.copy
@@ -200,7 +237,7 @@ class ModelsSpec extends AnyFunSuite {
     val (_, pllNull) = fitRef(0, warm)
     val statRef = 2.0 * (pllFull - pllNull)
     val pRef = graft.functions.Numerics.chi2Sf(math.max(statRef, 0.0), 1.0)
-    val r = Models.firth(x, yv)
+    val r = firth(x, yv)
     assert(near(r.beta, bFull(0), 1e-6), s"beta ${r.beta} vs ${bFull(0)}")
     assert(near(r.pval, pRef, 1e-6), s"pval ${r.pval} vs $pRef")
     assert(r.converged)

@@ -157,6 +157,32 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getAs[Double]("beta") > 0.5)
   }
 
+  test("a mean/min/max fill over a string covariate fails on the config, before any job") {
+    val sess = spark
+    import sess.implicits._
+    val raw = (0 until 40).map { i =>
+      (i.toDouble, if (i % 2 == 0) 1.0 else 0.0, if (i % 5 == 0) null else Seq("a", "b", "c")(i % 3))
+    }.toDF("x", "d1", "seg")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      for (fill <- Seq("mean", "min", "max")) {
+        val e = intercept[IllegalArgumentException](Pipeline.run(raw, GraftConfig(
+          input = "", predictors = "x", dependents = "d1", covariates = "seg", categoricalCovariates = "seg",
+          model = "logistic", missingCovariateValues = fill, minCaseCount = 5)))
+        assert(e.getMessage.contains("'seg'") && e.getMessage.contains(fill), e.getMessage)
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(jobs.get == 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("forward/backward covariate fill uses the explicit order column") {
     val sess = spark
     import sess.implicits._

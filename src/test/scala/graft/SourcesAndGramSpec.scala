@@ -51,16 +51,14 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     w.println("id,v,s"); w.println("1,2.5,hello"); w.println("2,NA,NA")
     w.println("3,4.5,-9"); w.println("4,-9,world")
     w.close()
-    // "NA" rides the scan option; "-9" is the post-pass marker
+    // "NA" rides the scan option; "-9" is nulled before inference
     val df = Sources.read(spark, csv.toString, nullValues = Seq("NA", "-9"))
     val rows = df.collect().map(r => r.getAs[Int]("id") ->
       (Option(r.get(1)), Option(r.get(2)))).toMap
     assert(rows(2)._1.isEmpty && rows(2)._2.isEmpty)
-    assert(rows(3)._2.isEmpty) // "-9" in string col nulled by post-pass
+    assert(rows(3)._2.isEmpty) // "-9" in the string column
     assert(rows(1) == (Some(2.5), Some("hello")))
-    // note: "-9" in the NUMERIC column v parses as -9.0 (documented:
-    // numeric-looking markers need the scan-level option slot)
-    assert(rows(4)._1.contains(-9.0))
+    assert(rows(4)._1.isEmpty) // "-9" in the numeric column v
     val tsv = new java.io.File(s"$dir/t.tsv")
     val w2 = new java.io.PrintWriter(tsv)
     w2.println("a\tb"); w2.println("1\tx"); w2.println("2\tNA")
@@ -98,6 +96,27 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     // --min-case-cout must not silently run with the default
     intercept[IllegalArgumentException](
       Main.parseArgs(Array("-i", "a", "-p", "p", "-d", "d", "--min-case-cout", "50")))
+  }
+
+  test("every null marker nulls every column of a delimited file") {
+    val dir = Files.createTempDirectory("graft_markers")
+    val f = dir.resolve("cohort.tsv")
+    Files.write(f, java.util.Arrays.asList(
+      "id\tcount\tdose\tlabel", "1\t3\t0.5\ta", "2\tNA\t-9\tb", "3\t-9\tNA\tNA",
+      "4\t7\t1.25\t-9"))
+    for (markers <- Seq(Seq("NA", "-9"), Seq("-9", "NA"))) {
+      val df = Sources.read(spark, f.toString, markers)
+      val types = df.schema.fields.map(c => c.name -> c.dataType.typeName).toMap
+      assert(types == Map("id" -> "integer", "count" -> "integer", "dose" -> "double",
+        "label" -> "string"), markers)
+      val rows = df.orderBy("id").collect()
+      assert(rows.map(r => Option(r.getAs[Integer]("count")).map(_.intValue)).toSeq ==
+        Seq(Some(3), None, None, Some(7)), markers)
+      assert(rows.map(r => Option(r.getAs[java.lang.Double]("dose")).map(_.doubleValue)).toSeq ==
+        Seq(Some(0.5), None, None, Some(1.25)), markers)
+      assert(rows.map(r => Option(r.getAs[String]("label"))).toSeq ==
+        Seq(Some("a"), Some("b"), None, None), markers)
+    }
   }
 
   test("distributed Gram IRLS matches the in-task logistic fitter") {
@@ -144,14 +163,10 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
         model = model, minCaseCount = 5,
         maxIter = if (model == "logistic") 50 else 25,
         tol = if (model == "logistic") 1e-9 else 1e-5)
-      spark.conf.set("spark.graft.irls.groupRowsMax", "-1")
-      val inTask = Association.binary(melted, cfg).collect()
+      val inTask = operators.RouteGate.binary(melted, cfg, Long.MaxValue).collect()
         .map(r => r.getAs[String]("dependent") -> r).toMap
-      spark.conf.set("spark.graft.irls.groupRowsMax", "100") // avg group = 500 > 100
-      val routed =
-        try Association.binary(melted, cfg).collect()
-          .map(r => r.getAs[String]("dependent") -> r).toMap
-        finally spark.conf.unset("spark.graft.irls.groupRowsMax")
+      val routed = operators.RouteGate.binary(melted, cfg, 100).collect() // avg group = 500 > 100
+        .map(r => r.getAs[String]("dependent") -> r).toMap
       for (d <- Seq("dep_a", "dep_b"); c <- Seq("beta", "se", "pval", "OR")) {
         assert(math.abs(routed(d).getAs[Double](c) - inTask(d).getAs[Double](c)) < 1e-6,
           s"$model $d $c: routed=${routed(d).getAs[Double](c)} inTask=${inTask(d).getAs[Double](c)}")
@@ -170,12 +185,8 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     val meltedC = rowsC.toDF("predictor", "dependent", "x", "y", "covs")
     val cfgC = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
       model = "firth", minCaseCount = 5)
-    spark.conf.set("spark.graft.irls.groupRowsMax", "-1")
-    val inTaskC = Association.binary(meltedC, cfgC).collect()
-    spark.conf.set("spark.graft.irls.groupRowsMax", "100")
-    val routedC =
-      try Association.binary(meltedC, cfgC).collect()
-      finally spark.conf.unset("spark.graft.irls.groupRowsMax")
+    val inTaskC = operators.RouteGate.binary(meltedC, cfgC, Long.MaxValue).collect()
+    val routedC = operators.RouteGate.binary(meltedC, cfgC, 100).collect()
     assert(inTaskC.forall(_.getAs[Boolean]("converged")),
       "in-task must fit the reduced design")
     assert(routedC.exists(r => !r.getAs[Boolean]("converged")),
@@ -357,6 +368,46 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("separated pairs: in-task and gram fits agree, for firth and logistic") {
+    // dep_sep is completely separated by x; dep_quasi is separated except
+    // on a band of x where cases and controls alternate. Logistic's MLE
+    // diverges on dep_sep and Firth's capped steps stop short of their
+    // limit, so neither fit converges there, but both paths must report
+    // the same row.
+    val sess = spark
+    import sess.implicits._
+    val rng = new scala.util.Random(7)
+    val rows = (0 until 400).flatMap { i =>
+      val x = rng.nextGaussian()
+      val z = rng.nextGaussian()
+      val quasi = if (x > 0.3) 1.0 else if (x < 0.1) 0.0 else (i % 2).toDouble
+      Seq(("x", "dep_sep", x, if (x > 0) 1.0 else 0.0, Seq(z)),
+        ("x", "dep_quasi", x, quasi, Seq(z)))
+    }
+    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
+    for (model <- Seq("firth", "logistic")) {
+      val cfg = Association.Config(Seq("x"), Seq("dep_sep", "dep_quasi"), Seq("z"),
+        model = model, minCaseCount = 5)
+      def byDep(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getAs[String]("dependent") -> r).toMap
+      val inTask = byDep(operators.RouteGate.binary(melted, cfg, Long.MaxValue))
+      val gram = byDep(if (model == "firth") Association.firthGram(melted, cfg)
+                       else Association.logisticGram(melted, cfg))
+      for (d <- Seq("dep_sep", "dep_quasi")) {
+        for (c <- Seq("pval", "beta", "se", "OR", "ci_low", "ci_high")) {
+          val (a, b) = (inTask(d).getAs[Double](c), gram(d).getAs[Double](c))
+          assert(a == b || math.abs(a - b) <= 1e-6 * math.max(1.0, math.abs(b)),
+            s"$model $d $c: in-task $a, gram $b")
+        }
+        for (c <- Seq("converged", "failed_reason", "cases", "controls", "total_n"))
+          assert(inTask(d).getAs[Any](c) == gram(d).getAs[Any](c), s"$model $d $c")
+      }
+      for (r <- inTask.values ++ gram.values)
+        assert(!(r.getAs[Double]("pval").isNaN && r.getAs[String]("failed_reason") == "nan"),
+          s"$model ${r.getAs[String]("dependent")}: NaN pval on a row without a failed_reason")
+    }
+  }
+
   test("distributed Gram IRLS applies the same viability gates") {
     val sess = spark
     import sess.implicits._
@@ -380,5 +431,13 @@ package operators {
     def fit(melted: org.apache.spark.sql.DataFrame, cfg: Association.Config,
         slots: Int): org.apache.spark.sql.DataFrame =
       Association.gramFit(melted, cfg, penalized = cfg.model == "firth", _ => slots)
+  }
+
+  /** Test access to the binary route's threshold (average melted rows
+    * per pair): `Long.MaxValue` keeps every pair in-task. */
+  object RouteGate {
+    def binary(melted: org.apache.spark.sql.DataFrame, cfg: Association.Config,
+        groupRowsMax: Long): org.apache.spark.sql.DataFrame =
+      Association.binary(melted, cfg, groupRowsMax)
   }
 }

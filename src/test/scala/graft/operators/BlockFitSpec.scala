@@ -170,18 +170,15 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sess = spark
     import sess.implicits._
     val wide = wideRows.toDF("x", "z", "dep_a", "dep_b")
-    def assocAt(gate: String, frame: DataFrame, cfg: Association.Config): Map[String, Row] = {
-      spark.conf.set("spark.graft.irls.groupRowsMax", gate)
-      try Association.assoc(frame, cfg).collect().map(r => r.getAs[String]("dependent") -> r).toMap
-      finally spark.conf.unset("spark.graft.irls.groupRowsMax")
-    }
+    def assocAt(gate: Long, frame: DataFrame, cfg: Association.Config): Map[String, Row] =
+      Association.assoc(frame, cfg, gate).collect().map(r => r.getAs[String]("dependent") -> r).toMap
     for (model <- Seq("firth", "logistic")) {
       val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
         model = model, minCaseCount = 5,
         maxIter = if (model == "logistic") 50 else 25,
         tol = if (model == "logistic") 1e-9 else 1e-5)
-      val inTask = assocAt("-1", wide, cfg)
-      val routed = assocAt("100", wide, cfg) // avg group = 500 > 100
+      val inTask = assocAt(Long.MaxValue, wide, cfg)
+      val routed = assocAt(100, wide, cfg) // avg group = 500 > 100
       for (d <- Seq("dep_a", "dep_b"); c <- Seq("beta", "se", "pval", "OR"))
         assert(math.abs(routed(d).getAs[Double](c) - inTask(d).getAs[Double](c)) < 1e-6,
           s"$model $d $c")
@@ -195,9 +192,9 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wideC = wideRows.map { case (x, _, a, b) => (x, 3.0, a, b) }.toDF("x", "z", "dep_a", "dep_b")
     val cfgC = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
       model = "firth", minCaseCount = 5)
-    assert(assocAt("-1", wideC, cfgC).values.forall(_.getAs[Boolean]("converged")),
+    assert(assocAt(Long.MaxValue, wideC, cfgC).values.forall(_.getAs[Boolean]("converged")),
       "blocks must fit the reduced design")
-    assert(assocAt("100", wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")),
+    assert(assocAt(100, wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")),
       "assoc did not engage the gram fitter (constant covariate fit anyway)")
   }
 }
