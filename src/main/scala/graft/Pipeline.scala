@@ -17,19 +17,23 @@ import graft.sources.Sources
  * Bonferroni → optional PheCode annotate → sort → write.
  *
  * Where the reference materializes a preprocessed IPC file and fans
- * per-pair processes over it, here every stage extends ONE lazy
- * Catalyst plan: preprocessing is projections/filters Catalyst pushes
- * into the scan, and the association engine's fit (the binary
- * models' block shuffle, the linear co-moment aggregate) is the only
- * shuffle until the (pair-count-sized) postprocessing. The two
- * exceptions need a total row order made explicit (`orderCol`):
- * forward/backward fill and RINT rank ties — a distributed engine has
- * no "file row order" (preprocessing.py:31-33 relies on it).
+ * per-pair processes over it, here preprocessing is projections and
+ * filters Catalyst pushes into the scan, and the association engine's
+ * fit (the binary models' block shuffle, the linear co-moment
+ * aggregate) is the only shuffle until the (pair-count-sized)
+ * postprocessing. The two exceptions need a total row order made
+ * explicit (`orderCol`): forward/backward fill and RINT rank ties — a
+ * distributed engine has no "file row order" (preprocessing.py:31-33
+ * relies on it).
  *
  * Every job a run triggers carries its stage as the job description:
  * `graft/read`, `graft/preprocess`, `graft/route`, `graft/fit`,
- * `graft/postprocess` or `graft/write`. The plan is lazy, so the fit's
- * own tasks run in the job that writes (or collects) the result.
+ * `graft/postprocess` or `graft/write`. The binary models fit every
+ * pair once, in `graft/fit` jobs, into a local relation of pair rows
+ * that postprocessing and the write read; so a run without `output`
+ * has fitted by the time it returns. The linear model's co-moment
+ * aggregate stays in the lazy plan and runs in the job that writes
+ * (or collects) the result.
  */
 final case class GraftConfig(
     input: String,                        // parquet/csv/tsv/txt path
@@ -77,6 +81,8 @@ object Pipeline {
       covariates: Seq[String], categoricals: Seq[String]): Unit = {
     require(Seq("firth", "logistic", "linear").contains(cfg.model),
       s"Unknown model: ${cfg.model}")
+    require(predictors.nonEmpty, s"The predictor spec '${cfg.predictors}' selects no columns.")
+    require(dependents.nonEmpty, s"The dependent spec '${cfg.dependents}' selects no columns.")
     require(!(cfg.rint && cfg.logt), "--rint and --logt are mutually exclusive.")
     require(!(cfg.phewas && cfg.flipwas), "--phewas and --flipwas are mutually exclusive.")
     require(!(cfg.maleOnly && cfg.femaleOnly), "--male-only and --female-only are mutually exclusive.")
@@ -146,8 +152,8 @@ object Pipeline {
       else {
         // --distributed forces the Gram IRLS paths (one aggregation
         // scan per Newton step instead of one task per pair) — same
-        // melt, same viability gates, same output schema, spec-pinned
-        // equal to the in-task fitters; otherwise the route gate picks
+        // viability gates, same output schema, spec-pinned equal to the
+        // in-task fitters; otherwise the frame's row count picks
         val gram = cfg.distributed ||
           stage(spark, "route")(Association.routesToGram(df, assocCfg))
         stage(spark, "fit")(Association.binaryWide(df, assocCfg, gram))

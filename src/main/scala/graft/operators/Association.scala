@@ -195,8 +195,11 @@ object Association {
   }
 
   /** Run the configured model over the wide frame: linear through the
-    * melt's co-moment aggregate, firth/logistic through the gram
-    * fitters when [[routesToGram]] says so, else in column blocks. */
+    * melt's co-moment aggregate (lazy: it runs in the job that reads the
+    * result), firth/logistic through the gram fitters when the frame has
+    * more than 20,000 rows ([[routesToGram]]), else in column blocks.
+    * Both binary paths fit eagerly, inside this call, and return a
+    * local relation of pair rows. */
   def assoc(df: DataFrame, cfg: Config): DataFrame = assoc(df, cfg, GroupRowsMax)
 
   /** [[assoc]] with the route's threshold given, so a spec can force
@@ -385,47 +388,29 @@ object Association {
 
   // ------------------------------------------------------ logistic/firth
 
-  /** Rows the melt would emit, without the explode: Σ over input rows
-    * of [every covariate non-null] × #non-null predictors × #non-null
-    * dependents, nulls counted after the melt's double cast (a NaN is a
-    * value, as in the melt's `isNotNull` filter). ONE narrow aggregate
-    * over the wide frame; equal to `melt(df, cfg).count()`. */
-  private[operators] def meltRowCount(df: DataFrame, cfg: Config): Long = {
-    if (cfg.predictors.isEmpty || cfg.dependents.isEmpty) return 0L
-    def nonNull(names: Seq[String]): Column =
-      size(array_compact(array(names.map(n => column(n).cast("double")): _*))).cast("long")
-    val covsComplete =
-      if (cfg.covariates.isEmpty) lit(true)
-      else nonNull(cfg.covariates) === cfg.covariates.size
-    df.agg(coalesce(
-        sum(when(covsComplete, nonNull(cfg.predictors) * nonNull(cfg.dependents))), lit(0L)))
-      .head().getLong(0)
-  }
-
-  /** The average pair cohort (melted rows per pair of the grid) above
-    * which the binary models route to the gram fitters. */
+  /** The row count above which the binary models route to the gram
+    * fitters: of the wide frame in [[routesToGram]], of the long frame
+    * per pair of the grid in [[binary]]. */
   private val GroupRowsMax = 20000L
 
-  /** The gram route's gate: the average pair cohort (`rows` melted rows
-    * over the pair grid) exceeds `groupRowsMax`. */
-  private def overGroupRowsMax(rows: Long, cfg: Config, groupRowsMax: Long): Boolean = {
-    val gridSize = math.max(1L, cfg.predictors.size.toLong * cfg.dependents.size)
-    rows / gridSize > groupRowsMax
-  }
-
   /** Should [[assoc]] fit this wide frame's binary pairs with the gram
-    * fitters? The same gate as [[binary]]'s, priced by [[meltRowCount]]
-    * instead of a count of the melted frame, so it fires on exactly the
-    * same inputs. */
+    * fitters? Yes when the frame has more than 20,000 rows; never for
+    * an empty grid. One count of the frame, no expression over the
+    * dependents. The row count bounds every pair's cohort from above,
+    * so this routes at least every frame whose average pair cohort
+    * exceeds the threshold, and exactly those when no pair loses a row
+    * to nulls. */
   def routesToGram(df: DataFrame, cfg: Config): Boolean =
     routesToGram(df, cfg, GroupRowsMax)
 
-  private def routesToGram(df: DataFrame, cfg: Config, groupRowsMax: Long): Boolean =
-    overGroupRowsMax(meltRowCount(df, cfg), cfg, groupRowsMax)
+  private[operators] def routesToGram(df: DataFrame, cfg: Config, groupRowsMax: Long): Boolean =
+    cfg.predictors.nonEmpty && cfg.dependents.nonEmpty && df.count() > groupRowsMax
 
   /** Firth/logistic over the wide frame: with `gram`, melt and run
-    * [[firthGram]] / [[logisticGram]]; otherwise fit in column blocks,
-    * one block per core of the session's default parallelism. */
+    * [[firthGram]] / [[logisticGram]]; otherwise fit in column blocks
+    * ([[binaryBlocks]]), one block per core of the session's default
+    * parallelism. Either way every pair is fitted once, here, and the
+    * result is a local relation. */
   def binaryWide(df: DataFrame, cfg: Config, gram: Boolean): DataFrame =
     if (gram) {
       val melted = melt(df, cfg)
@@ -538,9 +523,15 @@ object Association {
   }
 
   /** [[blockFits]] with the full grid restored. `blocks` is the block
-    * count before clamping to the longer grid axis. */
+    * count before clamping to the longer grid axis. The fits run here,
+    * once: their rows are collected into a local relation, as
+    * [[gramFit]] returns, so Bonferroni's count, the sort and the write
+    * read the rows instead of re-running the block shuffle's reduce
+    * side. The driver holds one row per fitted pair, a few hundred
+    * bytes each: some 0.5 GB of heap at 10^6 pairs, the same order as
+    * the grid [[completeGrid]] builds there. */
   private[operators] def binaryBlocks(df: DataFrame, cfg: Config, blocks: Int): DataFrame = {
-    val solved = df.sparkSession.createDataset(blockFits(df, cfg, blocks))(
+    val solved = df.sparkSession.createDataset(blockFits(df, cfg, blocks).collect().toSeq)(
       Encoders.product[BinResult]).toDF()
     completeGrid(solved, cfg, binaryDefaults(cfg))
   }
@@ -560,12 +551,13 @@ object Association {
     * per Newton step, with per-pair moments summed in task buffers and
     * the m×m solves on the driver; agreement with the in-task fitter is
     * spec-pinned to 1e-6 (SourcesAndGramSpec). Here the route costs a
-    * count of the long frame; [[assoc]] prices the same gate with one
-    * narrow aggregate over the wide frame ([[meltRowCount]]). The one
-    * semantic narrowing on the routed path: per-pair CONSTANT
-    * covariates are not dropped from the design — those pairs fail as
-    * "Singular information matrix." instead of fitting a reduced
-    * design; run `Preprocess.dropConstant` first if that matters. */
+    * count of the long frame, divided by the grid; [[assoc]] gates on
+    * the wide frame's row count instead, an upper bound of the same
+    * average ([[routesToGram]]). The one semantic narrowing on the
+    * routed path: per-pair CONSTANT covariates are not dropped from the
+    * design — those pairs fail as "Singular information matrix."
+    * instead of fitting a reduced design; run `Preprocess.dropConstant`
+    * first if that matters. */
   def binary(melted: DataFrame, cfg: Config): DataFrame = binary(melted, cfg, GroupRowsMax)
 
   /** [[binary]] with the route's threshold given, so a spec can force
@@ -573,7 +565,8 @@ object Association {
   private[operators] def binary(melted: DataFrame, cfg: Config, groupRowsMax: Long): DataFrame = {
     val spark = melted.sparkSession
     import spark.implicits._
-    if (overGroupRowsMax(melted.count(), cfg, groupRowsMax))
+    if (melted.count() / math.max(1L, cfg.predictors.size.toLong * cfg.dependents.size) >
+        groupRowsMax)
       return if (cfg.model == "firth") firthGram(melted, cfg)
              else logisticGram(melted, cfg)
     val covNames = cfg.covariates
@@ -938,8 +931,6 @@ object Association {
     val nF = firstPass.width
     val grid = predictors.length * dependents.length
     val first = scan(firstPass, Array.tabulate(grid)(new GramFit(_, 0, m)))
-    def failRow(gi: Int, reason: String): BinResult =
-      failedRow(predictors(gi / dependents.length), dependents(gi % dependents.length), reason)
     val out = mutable.ArrayBuffer.empty[BinResult]
     // pairs with no rows are left to completeGrid
     val viable = (0 until grid).filter(gi => first(gi * nF) > 0).filter { gi =>
@@ -951,7 +942,8 @@ object Association {
             !(first(off + firstPass.sums + c) < -first(off + firstPass.sums + k + c))))
           "Singular information matrix."
         else null
-      if (reason != null) out += failRow(gi, reason)
+      if (reason != null)
+        out += failedRow(predictors(gi / dependents.length), dependents(gi % dependents.length), reason)
       reason == null
     }
 
@@ -1027,17 +1019,20 @@ object Association {
       val gi = full.gi
       val pred = predictors(gi / dependents.length)
       val dep = dependents(gi % dependents.length)
-      def row(r: FitResult): BinResult =
-        fittedRow(pred, dep, r, first(gi * nF + 1).toLong, first(gi * nF).toLong,
-          s"$dep ~ $pred + ${cfg.covariates.mkString(" + ")}")
+      val (n, cases) = (first(gi * nF).toLong, first(gi * nF + 1).toLong)
+      val equation = s"$dep ~ $pred + ${cfg.covariates.mkString(" + ")}"
+      // a fit that throws keeps the pair's counts and equation, as in-task
+      def failRow(reason: String): BinResult =
+        failedRow(pred, dep, reason, cases, n - cases, n, equation)
+      def row(r: FitResult): BinResult = fittedRow(pred, dep, r, cases, n, equation)
       out += ((pf.map(_.failed) ++ pf.map(_.finFailed)).find(_ != null) match {
-        case Some(reason) => failRow(gi, reason)
+        case Some(reason) => failRow(reason)
         case None if penalized =>
           row(Models.lrt(full.beta(0), full.se0, full.pll, pf(1).pll, full.conv && pf(1).conv))
         case None =>
           try row(Models.wald(full.beta(0), unpack(full.info, 0, m), full.step < tol))
           catch {
-            case e: Throwable => failRow(gi, failureReason(e))
+            case e: Throwable => failRow(failureReason(e))
           }
       })
     }

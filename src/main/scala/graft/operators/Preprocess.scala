@@ -29,26 +29,33 @@ object Preprocess {
   /** Reference column-spec parser (config.py:133-178): comma-separated
     * names and positional specs `i:N`, `i:start-end` (end exclusive),
     * `i:start-` (to the last column). Resolution happens on the
-    * schema — the projection itself stays a pushdown-friendly select. */
+    * schema — the projection itself stays a pushdown-friendly select.
+    * A malformed or negative index and a range that selects no column
+    * (start ≥ end) are config errors naming the spec. */
   def selectColumns(df: DataFrame, spec: String): DataFrame = {
     val names = df.columns
     val out = spec.split(",").flatMap { raw =>
       val colSpec = raw.trim
       if (colSpec.startsWith("i:")) {
-        val idx = colSpec.drop(2)
-        if (idx.forall(_.isDigit)) {
-          val i = idx.toInt
-          require(i < names.length, s"Index $i is out of range for input with ${names.length} columns")
-          Seq(names(i))
-        } else if (idx.contains("-")) {
-          val Array(s, e) = idx.split("-", -1)
-          val start = s.toInt
-          val end = if (e.isEmpty) names.length else e.toInt
-          require(start < names.length, s"Start index $start is out of range")
-          require(end <= names.length, s"End index $end out of range for ${names.length} columns")
-          names.slice(start, end).toSeq
-        } else throw new IllegalArgumentException(
-          "Invalid index format. Please use i:<index>, i:<start>-<end>, or i:<start>-.")
+        def invalid = new IllegalArgumentException(s"Invalid column spec '$colSpec'. " +
+          "Please use i:<index>, i:<start>-<end>, or i:<start>-.")
+        def index(s: String): Int =
+          s.toIntOption.filter(_ => s.forall(_.isDigit)).getOrElse(throw invalid)
+        colSpec.drop(2).split("-", -1) match {
+          case Array(one) =>
+            val i = index(one)
+            require(i < names.length, s"Index $i is out of range for input with ${names.length} columns")
+            Seq(names(i))
+          case Array(s, e) =>
+            val start = index(s)
+            val end = if (e.isEmpty) names.length else index(e)
+            require(start < names.length, s"Start index $start is out of range")
+            require(end <= names.length, s"End index $end out of range for ${names.length} columns")
+            require(start < end,
+              s"Column spec '$colSpec' selects no columns: start $start is not below end $end")
+            names.slice(start, end).toSeq
+          case _ => throw invalid
+        }
       } else {
         require(names.contains(colSpec), s"Column $colSpec does not exist in the input file.")
         Seq(colSpec)

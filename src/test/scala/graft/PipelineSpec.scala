@@ -157,12 +157,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getAs[Double]("beta") > 0.5)
   }
 
-  test("a mean/min/max fill over a string covariate fails on the config, before any job") {
-    val sess = spark
-    import sess.implicits._
-    val raw = (0 until 40).map { i =>
-      (i.toDouble, if (i % 2 == 0) 1.0 else 0.0, if (i % 5 == 0) null else Seq("a", "b", "c")(i % 3))
-    }.toDF("x", "d1", "seg")
+  /** The message of the IllegalArgumentException `body` throws, after
+    * checking that no Spark job started before it was thrown. */
+  private def configError(body: => Any): String = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -172,16 +169,36 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.spark.ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try {
-      for (fill <- Seq("mean", "min", "max")) {
-        val e = intercept[IllegalArgumentException](Pipeline.run(raw, GraftConfig(
-          input = "", predictors = "x", dependents = "d1", covariates = "seg", categoricalCovariates = "seg",
-          model = "logistic", missingCovariateValues = fill, minCaseCount = 5)))
-        assert(e.getMessage.contains("'seg'") && e.getMessage.contains(fill), e.getMessage)
-      }
+      val e = intercept[IllegalArgumentException](body)
       org.apache.spark.ListenerBusDrain(sc)
-      assert(jobs.get == 0)
+      assert(jobs.get == 0, e.getMessage)
+      e.getMessage
     } finally sc.removeSparkListener(listener)
   }
+
+  test("a mean/min/max fill over a string covariate fails on the config, before any job") {
+    val sess = spark
+    import sess.implicits._
+    val raw = (0 until 40).map { i =>
+      (i.toDouble, if (i % 2 == 0) 1.0 else 0.0, if (i % 5 == 0) null else Seq("a", "b", "c")(i % 3))
+    }.toDF("x", "d1", "seg")
+    for (fill <- Seq("mean", "min", "max")) {
+      val msg = configError(Pipeline.run(raw, GraftConfig(
+        input = "", predictors = "x", dependents = "d1", covariates = "seg", categoricalCovariates = "seg",
+        model = "logistic", missingCovariateValues = fill, minCaseCount = 5)))
+      assert(msg.contains("'seg'") && msg.contains(fill), msg)
+    }
+  }
+
+  // degenerate column specs: each names the spec, before any job
+  for ((predictors, dependents, named) <- Seq(
+      ("x", "i:5-3", "'i:5-3'"), ("x", "i:-3", "'i:-3'"), ("i:a-b", "d1", "'i:a-b'"),
+      ("", "d1", "predictor spec ''"), ("x", " ", "dependent spec ' '")))
+    test(s"column specs '$predictors' / '$dependents' fail on the config, before any job") {
+      val msg = configError(Pipeline.run(cohortDf, GraftConfig(input = "",
+        predictors = predictors, dependents = dependents, minCaseCount = 10)))
+      assert(msg.contains(named), msg)
+    }
 
   test("forward/backward covariate fill uses the explicit order column") {
     val sess = spark
@@ -331,16 +348,33 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  private def labelledRun(cfg: GraftConfig)(check: (Seq[(String, String)],
-      Seq[org.apache.spark.sql.execution.SparkPlan]) => Unit): Unit = {
+  /** What one `Pipeline.run` did, as listeners saw it: each job's
+    * (description, group), each executed plan, each submitted stage's
+    * (description, id, whether it reads the binary models' block
+    * shuffle) and each finished task's (stage id, partition). The block
+    * shuffle is the only `ShuffledRDD` of a run: Spark SQL's exchanges
+    * read through `ShuffledRowRDD`. */
+  private final case class Observed(jobs: Seq[(String, String)],
+      plans: Seq[org.apache.spark.sql.execution.SparkPlan],
+      stages: Seq[(String, Int, Boolean)], tasks: Seq[(Int, Int)])
+
+  private def observe(cfg: GraftConfig): Observed = {
+    import org.apache.spark.scheduler._
     val sc = spark.sparkContext
-    val jobs = java.util.Collections.synchronizedList(new java.util.ArrayList[(String, String)]())
-    val plans = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.execution.SparkPlan]())
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    def list[T] = java.util.Collections.synchronizedList(new java.util.ArrayList[T]())
+    val jobs = list[(String, String)]
+    val plans = list[org.apache.spark.sql.execution.SparkPlan]
+    val stages = list[(String, Int, Boolean)]
+    val tasks = list[(Int, Int)]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.add((e.properties.getProperty("spark.job.description"),
           e.properties.getProperty("spark.jobGroup.id")))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.add((e.properties.getProperty("spark.job.description"), e.stageInfo.stageId,
+          e.stageInfo.rddInfos.exists(_.name == "ShuffledRDD")))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskInfo.successful) tasks.add((e.stageId, e.taskInfo.partitionId))
     }
     val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -359,7 +393,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.listenerManager.unregister(planListener)
     }
     import scala.jdk.CollectionConverters._
-    check(jobs.asScala.toSeq, plans.asScala.toSeq)
+    Observed(jobs.asScala.toSeq, plans.asScala.toSeq, stages.asScala.toSeq, tasks.asScala.toSeq)
   }
 
   test("every job of Pipeline.run carries a graft stage label; the caller's group survives") {
@@ -368,35 +402,61 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sc = spark.sparkContext
     sc.setJobGroup("caller-group", "caller description", interruptOnCancel = false)
     try {
-      labelledRun(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+      val run = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
         dependents = "d1,d2", covariates = "z,zconst,seg", categoricalCovariates = "seg",
-        model = "firth", minCaseCount = 10, output = s"$dir/out")) { (jobs, _) =>
-        assert(jobs.nonEmpty)
-        assert(jobs.forall(_._1.startsWith("graft/")), jobs)
-        assert(jobs.forall(_._2 == "caller-group"), jobs)
-        val labels = jobs.map(_._1).toSet
-        assert(Set("graft/preprocess", "graft/route", "graft/write").subsetOf(labels), labels)
-      }
+        model = "firth", minCaseCount = 10, output = s"$dir/out"))
+      val jobs = run.jobs
+      assert(jobs.nonEmpty)
+      assert(jobs.forall(_._1.startsWith("graft/")), jobs)
+      assert(jobs.forall(_._2 == "caller-group"), jobs)
+      val labels = jobs.map(_._1).toSet
+      assert(Set("graft/preprocess", "graft/route", "graft/fit", "graft/write").subsetOf(labels),
+        labels)
+      // the fit's tasks run under graft/fit, never again under the write
+      val block = run.stages.filter(_._3)
+      assert(block.nonEmpty && block.forall(_._1 == "graft/fit"), run.stages)
       assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
       assert(sc.getLocalProperty("spark.job.description") == "caller description")
     } finally sc.clearJobGroup()
   }
 
+  test("one Pipeline.run fits each binary pair once, for firth and for logistic") {
+    // each task of the block stage fits every pair of its block: the
+    // dependents dealt round-robin over min(cores, D) blocks
+    val sess = spark
+    import sess.implicits._
+    val rng = new scala.util.Random(9)
+    val deps = (1 to 5).map(j => s"d$j")
+    val dir = java.nio.file.Files.createTempDirectory("graft_fits").toString
+    (0 until 300).map { _ =>
+      val x = rng.nextGaussian()
+      def bin(q: Double): Double = if (rng.nextDouble() < q) 1.0 else 0.0
+      (x, rng.nextGaussian(), bin(1.0 / (1.0 + math.exp(-x))), bin(0.2), bin(0.3), bin(0.4), bin(0.5))
+    }.toDF("x" +: "z" +: deps: _*).write.parquet(s"$dir/cohort.parquet")
+    val blocks = math.min(spark.sparkContext.defaultParallelism, deps.size)
+    for (model <- Seq("firth", "logistic")) {
+      val run = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+        dependents = deps.mkString(","), covariates = "z", model = model, minCaseCount = 10,
+        output = s"$dir/out_$model"))
+      val blockStages = run.stages.filter(_._3).map(_._2).toSet
+      assert(blockStages.nonEmpty, model)
+      val fits = run.tasks.collect { case (st, b) if blockStages(st) => (b until deps.size by blocks).size }
+      assert(fits.sum == deps.size, s"$model: ${fits.size} block tasks ran")
+    }
+  }
+
   test("an in-task firth study explodes nothing: no Generate in any executed plan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_nogen").toString
     cohortDf.write.parquet(s"$dir/cohort.parquet")
-    labelledRun(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+    val plans = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
       dependents = "d1,d2", covariates = "z,zconst,seg", categoricalCovariates = "seg",
-      model = "firth", minCaseCount = 10, output = s"$dir/out")) { (_, plans) =>
-      assert(plans.nonEmpty)
-      val generate = plans.filter(_.toString.contains("Generate "))
-      assert(generate.isEmpty, generate.mkString("\n"))
-    }
+      model = "firth", minCaseCount = 10, output = s"$dir/out")).plans
+    assert(plans.nonEmpty)
+    val generate = plans.filter(_.toString.contains("Generate "))
+    assert(generate.isEmpty, generate.mkString("\n"))
     // the detector sees the melt where one runs: the linear path
-    labelledRun(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+    assert(observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
       dependents = "z", model = "linear", quantitative = true, minCaseCount = 10,
-      output = s"$dir/out_linear")) { (_, plans) =>
-      assert(plans.exists(_.toString.contains("Generate ")))
-    }
+      output = s"$dir/out_linear")).plans.exists(_.toString.contains("Generate ")))
   }
 }

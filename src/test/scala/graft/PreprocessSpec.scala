@@ -25,6 +25,9 @@ class PreprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException](Preprocess.selectColumns(df, "nope"))
     intercept[IllegalArgumentException](Preprocess.selectColumns(df, "i:9"))
     intercept[IllegalArgumentException](Preprocess.selectColumns(df, "i:1-9"))
+    for (bad <- Seq("i:4-2", "i:2-2", "i:-3", "i:a-b", "i:1-2-3", "i:"))
+      assert(intercept[IllegalArgumentException](Preprocess.selectColumns(df, bad))
+        .getMessage.contains(s"'$bad'"), bad)
   }
 
   test("p22 date features agree with java.time for every row at sf0.001") {

@@ -10,7 +10,7 @@ import graft.GraftSession
 
 /** The wide-frame binary path (`Association.assoc` for firth/logistic):
   * column blocks against the long-format entry, block and partition
-  * invariance, and the route aggregate against the melt count. */
+  * invariance, and the route on the frame's row count. */
 class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
@@ -152,12 +152,42 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(shuffles(Association.blockFits(df, cfg, 3)) == 1)
   }
 
-  test("route aggregate equals the melt count; assoc switches to the gram fitters on it") {
-    val df = parityCohort
-    for (covs <- Seq(Nil, Seq("z1", "sex"))) {
-      val cfg = Association.Config(Seq("x", "x2"), parityDeps, covs)
-      assert(Association.meltRowCount(df, cfg) == Association.melt(df, cfg).count(), covs)
+  test("collinear covariates: both routes fail the pair with its counts and equation") {
+    // z2 = 2·z1 exactly, so X'WX is exactly singular on either route;
+    // neither covariate is constant, so neither fitter drops one
+    val sess = spark
+    import sess.implicits._
+    val rng = new scala.util.Random(23)
+    val wide = (0 until 500).map { i =>
+      val x = rng.nextGaussian()
+      val z1 = rng.nextGaussian()
+      val a = if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.7 * x - 0.3)))) 1.0 else 0.0
+      (x, z1, 2.0 * z1, a, if (i % 3 == 0) 1.0 else 0.0)
+    }.toDF("x", "z1", "z2", "dep_a", "dep_b")
+    for (model <- Seq("firth", "logistic")) {
+      val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z1", "z2"),
+        model = model, minCaseCount = 5)
+      def byDep(df: DataFrame): Map[String, Row] =
+        df.collect().map(r => r.getAs[String]("dependent") -> r).toMap
+      val melted = Association.melt(wide, cfg)
+      val inTask = byDep(Association.assoc(wide, cfg, Long.MaxValue))
+      for ((route, rows) <- Seq(
+          "gram" -> byDep(Association.assoc(wide, cfg, 100)),
+          "long in-task" -> byDep(Association.binary(melted, cfg, Long.MaxValue)),
+          "long gram" -> byDep(Association.binary(melted, cfg, 100)));
+          d <- Seq("dep_a", "dep_b")) {
+        val (want, got) = (inTask(d), rows(d))
+        val tag = s"$model $route $d"
+        assert(want.getAs[String]("failed_reason") == "Singular information matrix.", tag)
+        assert(want.getAs[String]("equation") == s"$d ~ x + z1 + z2", tag)
+        assert(want.getAs[Long]("total_n") == 500L, tag)
+        for (c <- Seq("failed_reason", "equation", "cases", "controls", "total_n", "converged"))
+          assert(got.getAs[Any](c) == want.getAs[Any](c), s"$tag $c")
+      }
     }
+  }
+
+  test("the row count routes assoc to the gram fitters above the threshold") {
     // wide twin of SourcesAndGramSpec's auto-route test, through assoc
     val rng = new scala.util.Random(41)
     val wideRows = (0 until 500).map { _ =>
@@ -178,7 +208,7 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
         maxIter = if (model == "logistic") 50 else 25,
         tol = if (model == "logistic") 1e-9 else 1e-5)
       val inTask = assocAt(Long.MaxValue, wide, cfg)
-      val routed = assocAt(100, wide, cfg) // avg group = 500 > 100
+      val routed = assocAt(100, wide, cfg) // 500 rows > 100
       for (d <- Seq("dep_a", "dep_b"); c <- Seq("beta", "se", "pval", "OR"))
         assert(math.abs(routed(d).getAs[Double](c) - inTask(d).getAs[Double](c)) < 1e-6,
           s"$model $d $c")
@@ -196,5 +226,12 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
       "blocks must fit the reduced design")
     assert(assocAt(100, wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")),
       "assoc did not engage the gram fitter (constant covariate fit anyway)")
+    // the boundary: 500 rows stay in-task at a threshold of 500 and
+    // route at 499; an empty grid never routes
+    assert(!Association.routesToGram(wideC, cfgC, 500))
+    assert(Association.routesToGram(wideC, cfgC, 499))
+    assert(assocAt(500, wideC, cfgC).values.forall(_.getAs[Boolean]("converged")))
+    assert(assocAt(499, wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")))
+    assert(!Association.routesToGram(wideC, cfgC.copy(dependents = Nil), 0))
   }
 }
