@@ -1,7 +1,7 @@
 package graft
 
 import java.util.Locale
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Association, Mas}
 
@@ -90,26 +90,21 @@ object Bench {
     s""""$key":[${(Seq(t1, t10).map("%.2f".formatLocal(Locale.ROOT, _)) ++ loads.map(f1))
       .mkString(",")}]"""
 
-  /** The deterministic synthetic MAS cohort, already melted: n samples
-    * × d dependents × k covariates, x uniform in [-2, 2), y ~
-    * Bernoulli(sigmoid(0.8x − 2 + dep offset)), every value
-    * hash-derived. */
-  private[graft] def masMelted(spark: SparkSession, n: Int, d: Int, k: Int): DataFrame =
-    spark.range(n.toLong * d).select(
-        (col("id") % n).as("sample"), (col("id") / n).cast("long").as("di"))
-      .select(
-        lit("x").as("predictor"),
-        concat(lit("dep_"), col("di")).as("dependent"),
-        (pmod(xxhash64(col("sample"), lit(1)), lit(1000003)) / 1000003.0 * 4.0 - 2.0).as("x"),
-        col("sample"), col("di"))
-      .select(col("predictor"), lit(0).as("pidx"), col("dependent"),
-        col("di").cast("int").as("didx"), col("x"),
-        (pmod(xxhash64(col("sample"), col("di"), lit(7)), lit(1000003)) / 1000003.0 <
-          lit(1.0) / (lit(1.0) + exp(-(col("x") * 0.8 - 2.0 +
-            (col("di") % 7).cast("double") * 0.1)))).cast("double").as("y"),
-        array((1 to k).map(c =>
-          (pmod(xxhash64(col("sample"), lit(c + 100)), lit(1000003)) / 1000003.0).as(s"z$c")): _*)
-          .as("covs"))
+  /** The deterministic synthetic MAS cohort as a wide frame: n samples
+    * (rows) of a predictor x, d dependents dep_0… and k covariates z1…,
+    * x uniform in [-2, 2), dep_j ~ Bernoulli(sigmoid(0.8x − 2 + dep
+    * offset)), every value hash-derived. */
+  private[graft] def masWide(spark: SparkSession, n: Int, d: Int, k: Int): DataFrame = {
+    def unit(keys: Column*): Column =
+      pmod(xxhash64(keys: _*), lit(1000003)) / 1000003.0
+    val deps = (0 until d).map { di =>
+      (unit(col("id"), lit(di.toLong), lit(7)) < lit(1.0) / (lit(1.0) +
+        exp(-(col("x") * 0.8 - 2.0 + (di % 7).toDouble * 0.1)))).cast("double").as(s"dep_$di")
+    }
+    val covs = (1 to k).map(c => unit(col("id"), lit(c + 100)).as(s"z$c"))
+    spark.range(n.toLong).select(col("id"), (unit(col("id"), lit(1)) * 4.0 - 2.0).as("x"))
+      .select((col("x") +: deps) ++ covs: _*)
+  }
 
   private[graft] def masCfg(d: Int, k: Int): Association.Config =
     Association.Config(Seq("x"), (0 until d).map(i => s"dep_$i"),
@@ -292,8 +287,8 @@ object Bench {
     val loadPostSweep = loadAvg()
     // MAS headlines: the reference's two published benchmark tables at
     // the 5,000 × ~1,800 shape — 5 covariates (22.2 s) and 20 (55.7 s)
-    // — through the in-task Firth, plus the same cohort through the
-    // Gram linear path and the distributed Firth. Each shape runs
+    // — through the column-block Firth fit, plus the same cohort
+    // through the linear co-moments and the gram Firth. Each shape runs
     // MasReps times, every rep stamped with the load after it; the
     // headline is the min, the least-contended estimate.
     def reps(body: => Unit): Seq[(Double, Double)] = (1 to MasReps).map { _ =>
@@ -305,16 +300,17 @@ object Bench {
       if (onlyNames.isDefined) Nil
       else {
         val (n, d) = (5000, 1800)
-        val melted5 = masMelted(spark, n, d, 5)
+        val wide5 = masWide(spark, n, d, 5)
         Seq(
           ("mas_firth", "mas_firth_5000x1800x5cov",
-            reps(noop(Association.binary(melted5, masCfg(d, 5))))),
+            reps(noop(Association.binaryWide(wide5, masCfg(d, 5), gram = false)))),
           ("mas_firth20", "mas_firth_5000x1800x20cov",
-            reps(noop(Association.binary(masMelted(spark, n, d, 20), masCfg(d, 20))))),
+            reps(noop(Association.binaryWide(masWide(spark, n, d, 20), masCfg(d, 20),
+              gram = false)))),
           ("mas_linear", "mas_linear_5000x1800x5cov",
-            reps(noop(Association.linear(melted5, masCfg(d, 5).copy(model = "linear"))))),
+            reps(noop(Association.assoc(wide5, masCfg(d, 5).copy(model = "linear"))))),
           ("mas_firth_gram", "mas_firth_gram_5000x1800x5cov",
-            reps(noop(Association.firthGram(melted5, masCfg(d, 5))))))
+            reps(noop(Association.binaryWide(wide5, masCfg(d, 5), gram = true)))))
       }
     val masMin = masRuns.map { case (k, _, r) => k -> r.map(_._1).min }.toMap
     val masHeads = masRuns.map { case (k, h, _) => h -> masMin(k) }
@@ -388,13 +384,15 @@ object Bench {
       spark.conf.unset("spark.graft.bpe.merges")
       spark.conf.unset("spark.graft.bpe.trainWords")
       // MAS family: the 5k-sample headline min vs one run at 50 000 ×
-      // 1800 × 5 covariates (90M melted rows)
-      val bigMas = masMelted(spark, 50000, 1800, 5)
+      // 1800 × 5 covariates
+      val bigMas = masWide(spark, 50000, 1800, 5)
       val masPairs = Seq[(String, () => Unit)](
-        "mas_firth" -> (() => noop(Association.binary(bigMas, masCfg(1800, 5)))),
+        "mas_firth" -> (() =>
+          noop(Association.binaryWide(bigMas, masCfg(1800, 5), gram = false))),
         "mas_linear" -> (() =>
-          noop(Association.linear(bigMas, masCfg(1800, 5).copy(model = "linear")))),
-        "mas_firth_gram" -> (() => noop(Association.firthGram(bigMas, masCfg(1800, 5)))))
+          noop(Association.assoc(bigMas, masCfg(1800, 5).copy(model = "linear")))),
+        "mas_firth_gram" -> (() =>
+          noop(Association.binaryWide(bigMas, masCfg(1800, 5), gram = true))))
         .flatMap { case (k, body) =>
           oneShot(body()).map { case (t, ld) => slopeEntry(k, masMin(k), t, ld) }
         }

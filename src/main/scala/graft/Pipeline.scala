@@ -20,7 +20,7 @@ import graft.sources.Sources
  * per-pair processes over it, here preprocessing is projections and
  * filters Catalyst pushes into the scan, and the association engine's
  * fit (the binary models' block shuffle, the linear co-moment
- * aggregate) is the only shuffle until the (pair-count-sized)
+ * merge) is the only shuffle until the (pair-count-sized)
  * postprocessing. The two exceptions need a total row order made
  * explicit (`orderCol`): forward/backward fill and RINT rank ties — a
  * distributed engine has no "file row order" (preprocessing.py:31-33
@@ -28,12 +28,10 @@ import graft.sources.Sources
  *
  * Every job a run triggers carries its stage as the job description:
  * `graft/read`, `graft/preprocess`, `graft/route`, `graft/fit`,
- * `graft/postprocess` or `graft/write`. The binary models fit every
- * pair once, in `graft/fit` jobs, into a local relation of pair rows
- * that postprocessing and the write read; so a run without `output`
- * has fitted by the time it returns. The linear model's co-moment
- * aggregate stays in the lazy plan and runs in the job that writes
- * (or collects) the result.
+ * `graft/postprocess` or `graft/write`. Every model fits every pair
+ * once, in `graft/fit` jobs, into a local relation of pair rows that
+ * postprocessing and the write read; so a run without `output` has
+ * fitted by the time it returns.
  */
 final case class GraftConfig(
     input: String,                        // parquet/csv/tsv/txt path

@@ -1,12 +1,14 @@
 package graft.operators
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.models.{FitResult, Models}
 import graft.operators.Preprocess.column
 
@@ -21,33 +23,31 @@ import graft.operators.Preprocess.column
  * schema (analysis.py:228-260).
  *
  * Spark-first design, not a port:
- *  - The LOGISTIC/FIRTH paths are iteratively reweighted and need the
- *    pair's rows. Every pair shares the predictor and the covariates
- *    and differs only in y and its null mask, so the wide frame is
- *    fitted in column blocks ([[assoc]]): each input partition packs
- *    its rows into one column chunk per block of dependents (of
+ *  - The engine reads the wide frame, never a melted one. One packer
+ *    ([[columnChunks]]) turns each input partition into a column chunk
+ *    of [predictors, covariates, dependents] with a null bitmap per
+ *    column, and every model reads those chunks. A pair's rows are the
+ *    chunk rows where x, y and every covariate are non-null, in input
+ *    order. No row is exploded per (sample, pair).
+ *  - The LOGISTIC/FIRTH in-task path fits in column blocks ([[assoc]]):
+ *    each chunk is sliced into one chunk per block of dependents (of
  *    predictors, for flipwas-shaped grids), one shuffle keyed by block
  *    brings a block's chunks together in input order, and the block's
- *    task fits each of its pairs over the rows where x, y and every
- *    covariate are non-null. The shuffle carries the predictors and
+ *    task fits each of its pairs. The shuffle carries the predictors and
  *    covariates once per block and each dependent once, not once per
  *    pair.
- *  - The LINEAR path never materializes a pair's rows: the wide frame
- *    is melted (two `explode`s) into (predictor, dependent, x, y,
- *    covs) rows, and a single-pass CENTERED co-moment aggregation
- *    (Welford/Chan merge — numerically stable at any partition count,
- *    map-side combined) reduces each pair to O((k+2)²) doubles; a tiny
- *    per-group solve turns sufficient stats into the fit. At 100 TB
- *    the shuffle carries kilobytes per pair, not rows. Constant-
- *    covariate detection also happens on the co-moments (zero
- *    centered variance).
- *  - Melted group keys are dictionary-encoded to ONE long (indices
- *    come free from the melt's literal structs) so no strings travel
- *    through the shuffle or the per-row typed decode on the fit side.
+ *  - The LINEAR path never materializes a pair's rows in one place: each
+ *    partition folds every pair's rows into CENTERED co-moments
+ *    ([[GramState]], Welford update), the states merge by pair (Chan
+ *    merge — numerically stable at any partition count) and a small
+ *    per-pair solve on the executors turns them into the fit. The
+ *    shuffle carries O((k+2)²) doubles per pair and partition, never
+ *    rows. Constant-covariate detection also happens on the co-moments
+ *    (zero centered variance).
  *  - For cohorts too large for one task, the binary models route to
- *    the gram IRLS ([[gramFit]]): one shuffle-free scan of the melted
- *    rows per Newton step, per-pair moments summed in task buffers,
- *    the small solves on the driver.
+ *    the gram IRLS ([[gramFit]]): one shuffle-free scan of the
+ *    persisted chunks per Newton step, per-pair moments summed in task
+ *    buffers, the small solves on the driver.
  *  - Both binary paths share every per-fit step: the viability gates
  *    and failure rows here, and from `Models` the Newton solve with its
  *    step cap, the Firth final solve and the Wald/LRT results. Only the
@@ -55,9 +55,10 @@ import graft.operators.Preprocess.column
  *    multiply-adds per row than the gram scan's third-order tensor
  *    (84 against 175 at 7 columns), and the gram scan needs the tensor
  *    to take a step from one pass over the rows.
- *  - Pairs that lose every row to the null-drop produce no fit, so the
- *    full predictor × dependent grid is restored with a left join and
- *    "No data after dropping nulls." rows (analysis.py:113-121).
+ *  - Every model collects its pair rows to the driver, so pairs that
+ *    lose every row to the null-drop are restored there: the full
+ *    predictor × dependent grid, with "No data after dropping nulls."
+ *    rows (analysis.py:113-121).
  */
 object Association {
 
@@ -99,6 +100,9 @@ object Association {
     case _ => Option(e.getMessage).getOrElse(e.toString)
   }
 
+  /** The failed_reason of a pair with no complete row (analysis.py:113-121). */
+  private val NoData = "No data after dropping nulls."
+
   /** A binary pair's failure row; the counts and the equation are -9
     * and "nan" unless the fit itself failed after validation. */
   private def failedRow(pred: String, dep: String, reason: String, cases: Long = -9L,
@@ -129,10 +133,19 @@ object Association {
       n_observations: Long,
       converged: Boolean, failed_reason: String, equation: String)
 
+  /** A linear pair's failure row: the linear twin of [[failedRow]]. */
+  private def linFailedRow(pred: String, dep: String, reason: String, n: Long = -9L,
+      equation: String = "nan"): LinResult =
+    LinResult(pred, dep, Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, n,
+      converged = false, reason, equation)
+
   /** Wide → long melt: one row per (input row, predictor, dependent)
     * that survives the pair null-drop, covariates packed as an array.
     * Two explodes over literal-struct arrays — pure projection, no
-    * shuffle; Catalyst prunes unreferenced input columns.
+    * shuffle; Catalyst prunes unreferenced input columns. The engine
+    * itself never melts: this is a reshaping step for callers that
+    * aggregate per pair, and the input of the long-format entries
+    * [[linear]] and [[binary]], which need its `pidx`/`didx`.
     *
     * Rows with ANY null covariate are dropped too: the reference's
     * missing-covariate contract is resolved in preprocessing
@@ -162,96 +175,121 @@ object Association {
       .filter(col("x").isNotNull && col("y").isNotNull && covsComplete)
   }
 
-  /**
-   * Should an iteratively re-scanned frame be persisted? Persist is
-   * right exactly when a re-scan would re-read a REAL source (file /
-   * table / an upstream cache) — at 100 TB that is ~15 full corpus
-   * reads over a Newton fit. It is WRONG when the upstream is a pure
-   * codegen'd derivation (range + deterministic projections): at the
-   * 90M-row MAS 10x shape the columnar cache BUILD measured 24-33 s
-   * against 1.05 s per full regeneration and 0.35 s per warm cache
-   * scan — the cache never pays for itself inside one fit. A plan
-   * with any nondeterministic expression must persist regardless
-   * (recompute would change the data between iterations) — and so
-   * must a plan with a round-robin `Repartition` (r21 advice): it has
-   * no nondeterministic EXPRESSION, but the row→partition assignment
-   * is not a function of the data, so re-scans could fold group rows
-   * in different orders between iterations; persisting freezes one
-   * layout, exactly what the former unconditional persist did.
-   */
-  private def rescanHitsSource(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.optimizedPlan
-    val nondet = plan.find(p => p.expressions.exists(e => !e.deterministic)).isDefined ||
-      plan.find {
-        case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r.shuffle
-        case _ => false
-      }.isDefined
-    nondet || plan.collectLeaves().exists {
-      case _: org.apache.spark.sql.catalyst.plans.logical.Range => false
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => false
-      case _: org.apache.spark.sql.catalyst.plans.logical.OneRowRelation => false
-      case _ => true
-    }
+  /** [[melt]]'s rows as (grid index, [x, y, covs…]), the grid index
+    * being pidx·D + didx: the input of the long-format entries. */
+  private def meltedRows(melted: DataFrame, cfg: Config): DataFrame = {
+    require(melted.columns.contains("pidx") && melted.columns.contains("didx"),
+      "a long-format frame needs Association.melt's pidx and didx columns")
+    melted.select((col("pidx") * cfg.dependents.size + col("didx")).cast("int").as("gi"),
+      concat(array(col("x"), col("y")), col("covs")).as("v"))
   }
 
-  /** Run the configured model over the wide frame: linear through the
-    * melt's co-moment aggregate (lazy: it runs in the job that reads the
-    * result), firth/logistic through the gram fitters when the frame has
-    * more than 20,000 rows ([[routesToGram]]), else in column blocks.
-    * Both binary paths fit eagerly, inside this call, and return a
-    * local relation of pair rows. */
+  /** Run the configured model over the wide frame and return a local
+    * relation of pair rows, one per grid pair: linear through the
+    * chunk co-moments ([[linearChunks]]), firth/logistic through the
+    * gram fitters when the frame has more than 20,000 rows
+    * ([[routesToGram]]), else in column blocks. Every pair is fitted
+    * once, inside this call. */
   def assoc(df: DataFrame, cfg: Config): DataFrame = assoc(df, cfg, GroupRowsMax)
 
   /** [[assoc]] with the route's threshold given, so a spec can force
     * either path. */
   private[operators] def assoc(df: DataFrame, cfg: Config, groupRowsMax: Long): DataFrame =
-    if (cfg.model == "linear") linear(melt(df, cfg), cfg)
+    if (cfg.model == "linear") linearChunks(df, cfg)
     else binaryWide(df, cfg, routesToGram(df, cfg, groupRowsMax))
 
-  /**
-   * Dictionary-encode the (predictor, dependent) key to ONE Long and
-   * pack [x, y, covs…] into ONE primitive double array — both as
-   * codegen'd projections. Profiling at the MAS benchmark shape showed
-   * the typed path's per-row cost was dominated by decoding two String
-   * keys (UTF8String → String allocation per row, ~5 s of a 7 s job);
-   * with a long key + primitive array the shuffle payload and the
-   * executor-side decode are allocation-minimal. Rows whose names fall
-   * outside cfg (possible only when callers hand-build a melted frame)
-   * drop out here and are restored by completeGrid as null pairs.
-   */
-  private def keyed(melted: DataFrame, cfg: Config): Dataset[(Long, Array[Double])] = {
-    val spark = melted.sparkSession
-    import spark.implicits._
-    val dCount = cfg.dependents.size
-    val pack = concat(array(col("x"), col("y")), col("covs")).as("v")
-    val withKey =
-      if (melted.columns.contains("pidx") && melted.columns.contains("didx"))
-        // melt() emits the indices from its literal structs — free
-        melted.select((col("pidx").cast("long") * dCount + col("didx")).as("gkey"), pack)
-      else {
-        // hand-built melted frames: O(1) hash probe per row against a
-        // broadcast (predictor, dependent) → key dim (a literal-map
-        // element_at here would be a LINEAR scan of the map per row)
-        val dim = cfg.predictors.zipWithIndex.flatMap { case (p, pi) =>
-          cfg.dependents.zipWithIndex.map { case (d, di) =>
-            (p, d, pi.toLong * dCount + di)
-          }
-        }.toDF("predictor", "dependent", "gkey")
-        melted.join(broadcast(dim), Seq("predictor", "dependent")).select(col("gkey"), pack)
-      }
-    withKey.as[(Long, Array[Double])]
+  // ------------------------------------------------------ column chunks
+
+  /** One input partition's rows of the wide frame's columns (all of
+    * [predictors, covariates, dependents], or one block's selection of
+    * them), column-major, with a null bitmap per column (bit i set = row
+    * i null). A NaN stays a value. */
+  private final case class ColumnChunk(
+      part: Int, n: Int, values: Array[Array[Double]], nulls: Array[java.util.BitSet]) {
+
+    /** The rows where every column of `cols` is non-null. */
+    def complete(cols: Seq[Int]): java.util.BitSet = {
+      val rows = new java.util.BitSet(n)
+      rows.set(0, n)
+      cols.foreach(c => rows.andNot(nulls(c)))
+      rows
+    }
+
+    /** The rows of the pair of columns `x` and `y`: `covOk` (the rows
+      * whose covariates are complete) where x and y are non-null. */
+    def pairRows(covOk: java.util.BitSet, x: Int, y: Int): java.util.BitSet = {
+      val rows = covOk.clone().asInstanceOf[java.util.BitSet]
+      rows.andNot(nulls(x))
+      rows.andNot(nulls(y))
+      rows
+    }
+
+    def select(cols: Array[Int]): ColumnChunk = ColumnChunk(part, n, cols.map(values), cols.map(nulls))
   }
+
+  /** The packer every model reads: each non-empty input partition of
+    * `df` becomes one [[ColumnChunk]] of [predictors, covariates,
+    * dependents] cast to double, rows in input order. */
+  private def columnChunks(df: DataFrame, cfg: Config): RDD[ColumnChunk] = {
+    val names = cfg.predictors ++ cfg.covariates ++ cfg.dependents
+    val nCols = names.size
+    df.select(names.map(n => column(n).cast("double")): _*).queryExecution.toRdd
+      .mapPartitionsWithIndex { (part, it) =>
+        val values = Array.fill(nCols)(new mutable.ArrayBuilder.ofDouble)
+        val nulls = Array.fill(nCols)(new java.util.BitSet)
+        var n = 0
+        it.foreach { r =>
+          var j = 0
+          while (j < nCols) {
+            if (r.isNullAt(j)) { nulls(j).set(n); values(j) += 0.0 }
+            else values(j) += r.getDouble(j)
+            j += 1
+          }
+          n += 1
+        }
+        if (n == 0) Iterator.empty
+        else Iterator.single(ColumnChunk(part, n, values.map(_.result()), nulls))
+      }
+  }
+
+  /** `parts` end to end, in the given order. */
+  private def concatChunks(parts: Array[ColumnChunk]): ColumnChunk = {
+    val n = parts.map(_.n).sum
+    val nc = parts.head.values.length
+    val values = Array.fill(nc)(new Array[Double](n))
+    val nulls = Array.fill(nc)(new java.util.BitSet(n))
+    var off = 0
+    parts.foreach { p =>
+      for (c <- 0 until nc) {
+        System.arraycopy(p.values(c), 0, values(c), off, p.n)
+        p.nulls(c).stream().forEach(i => nulls(c).set(off + i))
+      }
+      off += p.n
+    }
+    ColumnChunk(parts.head.part, n, values, nulls)
+  }
+
+  /** The predictor × dependent grid in grid order: each pair's fitted
+    * row, or `missing` for a pair without one, as a local relation. */
+  private def completeGrid[R <: Product: TypeTag](spark: SparkSession, cfg: Config,
+      fitted: Iterable[R])(pair: R => (String, String), missing: (String, String) => R): DataFrame = {
+    val byPair = fitted.iterator.map(r => pair(r) -> r).toMap
+    val grid = for (p <- cfg.predictors; d <- cfg.dependents)
+      yield byPair.getOrElse((p, d), missing(p, d))
+    spark.createDataset(grid)(Encoders.product[R]).toDF()
+  }
+
+  private def binaryGrid(spark: SparkSession, cfg: Config, fitted: Iterable[BinResult]): DataFrame =
+    completeGrid(spark, cfg, fitted)(r => (r.predictor, r.dependent), failedRow(_, _, NoData))
 
   // ------------------------------------------------------------- linear
 
   /**
-   * One-pass distributed OLS on CENTERED sufficient statistics: each
-   * pair reduces to the co-moment matrix C_ij = Σ(f_i−μ_i)(f_j−μ_j)
-   * over [x, covs…, y] via Spark's built-in `covar_pop` — whose
-   * update/merge is the numerically stable Welford/Chan co-moment
-   * recursion AND stays inside whole-stage-codegen'd HashAggregate
-   * with map-side partial combine. The shuffle carries O(p²) doubles
-   * per pair per partition, never rows; at 100 TB that is kilobytes.
+   * One pair's CENTERED sufficient statistics: the observation count,
+   * the means and the upper triangle of the co-moment matrix
+   * C_ij = Σ(v_i−μ_i)(v_j−μ_j) over [x, y, covs…]. Rows fold in with
+   * Welford's update ([[add]]), states merge with Chan et al.'s pairwise
+   * merge ([[merge]]).
    *
    * Why centered: raw Σ f_i·f_j sums of ~1e5-magnitude features lose
    * ~10 significant digits to cancellation in rss = Syy − β·Sxy, which
@@ -264,27 +302,16 @@ object Association {
    * with the same slope/se as the reference's intercept-last fit
    * (models.py:72-83).
    */
-  /** Per-group co-moment state: observation count, means, and the
-    * upper triangle of Σ(v_i−μ_i)(v_j−μ_j) over [x, y, covs…]. */
-  private[operators] final case class GramState(
-      var n: Long, mean: Array[Double], c: Array[Double])
+  private[operators] final class GramState(p: Int) extends Serializable {
+    var n = 0L
+    val mean = new Array[Double](p)
+    val c = new Array[Double](p * (p + 1) / 2)
 
-  /** Single-pass multivariate co-moment aggregator (Welford update,
-    * Chan et al. pairwise merge — the same stable recursion behind
-    * covar_pop, but ONE fused state instead of p(p+1)/2 independent
-    * stateful aggregates, which profiled 4× faster at the MAS bench
-    * shape). Mergeable ⇒ map-side partial aggregation: the shuffle
-    * carries one O(p²) buffer per (pair × partition), never rows. */
-  private[operators] final class CoMoment(p: Int)
-      extends Aggregator[Array[Double], GramState, GramState] {
-    def zero: GramState = GramState(0L, new Array[Double](p), new Array[Double](p * (p + 1) / 2))
-    def reduce(st: GramState, v: Array[Double]): GramState = {
-      st.n += 1
+    def add(v: Array[Double]): Unit = {
+      n += 1
       // C_ij += d_i·d_j·(n−1)/n with d against the PRE-update means —
       // the exact Welford identity, no per-row temporaries
-      val f = (st.n - 1).toDouble / st.n
-      val mean = st.mean
-      val c = st.c
+      val f = (n - 1).toDouble / n
       var idx = 0
       var i = 0
       while (i < p) {
@@ -294,65 +321,99 @@ object Association {
         i += 1
       }
       i = 0
-      while (i < p) { mean(i) += (v(i) - mean(i)) / st.n; i += 1 }
-      st
+      while (i < p) { mean(i) += (v(i) - mean(i)) / n; i += 1 }
     }
-    def merge(a: GramState, b: GramState): GramState = {
-      if (a.n == 0) return b
-      if (b.n == 0) return a
-      val nA = a.n.toDouble
+
+    def merge(b: GramState): GramState = {
+      if (n == 0) return b
+      if (b.n == 0) return this
+      val nA = n.toDouble
       val nB = b.n.toDouble
       val f = nA * nB / (nA + nB)
       var idx = 0
       var i = 0
       while (i < p) {
-        val di = f * (b.mean(i) - a.mean(i))
+        val di = f * (b.mean(i) - mean(i))
         var j = i
-        while (j < p) { a.c(idx) += b.c(idx) + di * (b.mean(j) - a.mean(j)); idx += 1; j += 1 }
+        while (j < p) { c(idx) += b.c(idx) + di * (b.mean(j) - mean(j)); idx += 1; j += 1 }
         i += 1
       }
       i = 0
-      while (i < p) { a.mean(i) += (b.mean(i) - a.mean(i)) * nB / (nA + nB); i += 1 }
-      a.n += b.n
-      a
+      while (i < p) { mean(i) += (b.mean(i) - mean(i)) * nB / (nA + nB); i += 1 }
+      n += b.n
+      this
     }
-    def finish(st: GramState): GramState = st
-    def bufferEncoder: Encoder[GramState] = Encoders.product[GramState]
-    def outputEncoder: Encoder[GramState] = Encoders.product[GramState]
   }
 
+  /** Linear over the wide frame's chunks: each partition folds every
+    * pair's rows, in input order, into one [[GramState]], and emits no
+    * state for a pair without a row there. */
+  private def linearChunks(df: DataFrame, cfg: Config): DataFrame = {
+    val (nP, k, nD) = (cfg.predictors.size, cfg.covariates.size, cfg.dependents.size)
+    val states = columnChunks(df, cfg).flatMap { ch =>
+      val covOk = ch.complete(nP until nP + k)
+      val v = new Array[Double](k + 2)
+      for {
+        pi <- (0 until nP).iterator
+        di <- (0 until nD).iterator
+        rows = ch.pairRows(covOk, pi, nP + k + di)
+        if !rows.isEmpty
+      } yield {
+        val (x, y) = (ch.values(pi), ch.values(nP + k + di))
+        val st = new GramState(k + 2)
+        var r = rows.nextSetBit(0)
+        while (r >= 0) {
+          v(0) = x(r)
+          v(1) = y(r)
+          var c = 0
+          while (c < k) { v(c + 2) = ch.values(nP + c)(r); c += 1 }
+          st.add(v)
+          r = rows.nextSetBit(r + 1)
+        }
+        (pi * nD + di, st)
+      }
+    }
+    solveLinear(df.sparkSession, states, cfg)
+  }
+
+  /** Linear OLS over [[melt]]'s long frame: a compatibility entry for
+    * callers that melt first. It needs melt's `pidx`/`didx`; each
+    * partition folds its rows into one [[GramState]] per pair, then the
+    * states merge and solve as [[assoc]]'s do. Wide frames go through
+    * [[assoc]], which never melts them. */
   def linear(melted: DataFrame, cfg: Config): DataFrame = {
-    val spark = melted.sparkSession
-    import spark.implicits._
-    val k = cfg.covariates.size
-    val p = k + 2
+    val p = cfg.covariates.size + 2
+    val states = meltedRows(melted, cfg).queryExecution.toRdd.mapPartitions { it =>
+      val byPair = mutable.HashMap.empty[Int, GramState]
+      it.foreach(r => byPair.getOrElseUpdate(r.getInt(0), new GramState(p))
+        .add(r.getArray(1).toDoubleArray()))
+      byPair.iterator
+    }
+    solveLinear(melted.sparkSession, states, cfg)
+  }
+
+  /** Merge the states by pair, solve each pair on the executors and
+    * collect the rows: the grid as a local relation. */
+  private def solveLinear(spark: SparkSession, states: RDD[(Int, GramState)],
+      cfg: Config): DataFrame = {
     val predictors = cfg.predictors.toArray
     val dependents = cfg.dependents.toArray
-    val covNames = cfg.covariates
-    val minN = cfg.minCaseCount
-    // untyped udaf over the long-keyed frame: the grouping key stays a
-    // plain column (codegen'd HashAggregate keying, no AppendColumns /
-    // closure key / tuple wrapper per row) and only the packed value
-    // array reaches the aggregator
-    val coMoment = udaf(new CoMoment(p))
-    val solved = keyed(melted, cfg).toDF("gkey", "v")
-      .groupBy("gkey").agg(coMoment(col("v")).as("st"))
-      .as[(Long, GramState)]
-      .map { case (key, st) =>
-        solveLinearGroup(predictors((key / dependents.length).toInt),
-          dependents((key % dependents.length).toInt), st, covNames, minN)
-      }
-      .toDF()
-    completeGrid(solved, cfg, linearDefaults(cfg))
+    val parts = math.max(1,
+      math.min(spark.sparkContext.defaultParallelism, predictors.length * dependents.length))
+    val fitted = states.reduceByKey((a, b) => a.merge(b), parts).map { case (gi, st) =>
+      solveLinearGroup(predictors(gi / dependents.length), dependents(gi % dependents.length),
+        st, cfg)
+    }.collect()
+    completeGrid(spark, cfg, fitted)(r => (r.predictor, r.dependent), linFailedRow(_, _, NoData))
   }
 
   /** Solve one pair from centered sufficient statistics (runs once per
-    * group — off the hot path). Variable order in the state is
-    * [x, y, covs…] (the `keyed` packing); constant covariates are
-    * detected and dropped from the co-moments directly: sd(c) ≈ 0. */
-  private def solveLinearGroup(
-      pred: String, dep: String, st: GramState,
-      covNames: Seq[String], minN: Int): LinResult = {
+    * pair — off the hot path). Variable order in the state is
+    * [x, y, covs…]; constant covariates are detected and dropped from
+    * the co-moments directly: sd(c) ≈ 0. */
+  private def solveLinearGroup(pred: String, dep: String, st: GramState,
+      cfg: Config): LinResult = {
+    val covNames = cfg.covariates
     val k = covNames.size
     val p = k + 2
     def C(i: Int, j: Int): Double = {
@@ -360,9 +421,7 @@ object Association {
       st.c(a * p - a * (a - 1) / 2 + (b - a))
     }
     val n = st.n
-    if (n < minN)
-      return LinResult(pred, dep, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-        Double.NaN, -9L, converged = false, s"Not enough observations ($n).", "nan")
+    if (n < cfg.minCaseCount) return linFailedRow(pred, dep, s"Not enough observations ($n).")
     // variables: x = 0, y = 1, cov c = c + 2
     val keptCovs = (0 until k).filter { cI =>
       math.sqrt(C(cI + 2, cI + 2) / n) > 1e-9 * (1.0 + math.abs(st.mean(cI + 2)))
@@ -379,18 +438,14 @@ object Association {
       LinResult(pred, dep, r.pval, r.beta, r.se, r.ciLow, r.ciHigh, n, r.converged,
         "nan", equation)
     } catch {
-      case e: Throwable =>
-        LinResult(pred, dep, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-          Double.NaN, n, converged = false,
-          failureReason(e), equation)
+      case e: Throwable => linFailedRow(pred, dep, failureReason(e), n, equation)
     }
   }
 
   // ------------------------------------------------------ logistic/firth
 
-  /** The row count above which the binary models route to the gram
-    * fitters: of the wide frame in [[routesToGram]], of the long frame
-    * per pair of the grid in [[binary]]. */
+  /** The wide frame's row count above which the binary models route to
+    * the gram fitters ([[routesToGram]]). */
   private val GroupRowsMax = 20000L
 
   /** Should [[assoc]] fit this wide frame's binary pairs with the gram
@@ -406,22 +461,14 @@ object Association {
   private[operators] def routesToGram(df: DataFrame, cfg: Config, groupRowsMax: Long): Boolean =
     cfg.predictors.nonEmpty && cfg.dependents.nonEmpty && df.count() > groupRowsMax
 
-  /** Firth/logistic over the wide frame: with `gram`, melt and run
-    * [[firthGram]] / [[logisticGram]]; otherwise fit in column blocks
+  /** Firth/logistic over the wide frame: with `gram`, through
+    * [[firthGram]] / [[logisticGram]]; otherwise in column blocks
     * ([[binaryBlocks]]), one block per core of the session's default
     * parallelism. Either way every pair is fitted once, here, and the
     * result is a local relation. */
   def binaryWide(df: DataFrame, cfg: Config, gram: Boolean): DataFrame =
-    if (gram) {
-      val melted = melt(df, cfg)
-      if (cfg.model == "firth") firthGram(melted, cfg) else logisticGram(melted, cfg)
-    } else binaryBlocks(df, cfg, df.sparkSession.sparkContext.defaultParallelism)
-
-  /** One input partition's slice of the columns one block needs,
-    * column-major, with a null bitmap per column (bit i set = row i
-    * null). A NaN stays a value. */
-  private final case class ColumnChunk(
-      part: Int, n: Int, values: Array[Array[Double]], nulls: Array[java.util.BitSet])
+    if (gram) gramFit(df, cfg, penalized = cfg.model == "firth")
+    else binaryBlocks(df, cfg, df.sparkSession.sparkContext.defaultParallelism)
 
   /** Sends block b's chunks to reduce partition b. */
   private final class BlockPartitioner(blocks: Int) extends Partitioner {
@@ -432,18 +479,17 @@ object Association {
   /** [[binaryBlocks]]' fits before grid completion: one result per pair
     * with at least one complete row. The longer axis of the grid
     * (dependents, or predictors for flipwas shapes) is dealt
-    * round-robin into `blocks` blocks. Each input partition packs its
-    * rows into one [[ColumnChunk]] per block — the block's own
-    * predictors or dependents plus the shared axis and the covariates —
-    * so the one shuffle carries n·(P+k)·B + n·D doubles (dependent
-    * blocks), not a row per (sample, pair). A block concatenates its
-    * chunks in map-partition order, so every pair sees its rows in
-    * input order whatever the block count. */
+    * round-robin into `blocks` blocks. Each input partition's chunk is
+    * sliced into one chunk per block — the block's own predictors or
+    * dependents plus the shared axis and the covariates — so the one
+    * shuffle carries n·(P+k)·B + n·D doubles (dependent blocks), not a
+    * row per (sample, pair). A block concatenates its chunks in
+    * map-partition order, so every pair sees its rows in input order
+    * whatever the block count. */
   private[operators] def blockFits(df: DataFrame, cfg: Config, blocks: Int): RDD[BinResult] = {
     val predictors = cfg.predictors.toArray
     val dependents = cfg.dependents.toArray
-    val covNames = cfg.covariates
-    val (nP, k, nD) = (predictors.length, covNames.size, dependents.length)
+    val (nP, k, nD) = (predictors.length, cfg.covariates.size, dependents.length)
     val depAxis = nD >= nP
     val nBlocks = math.max(1, math.min(blocks, if (depAxis) nD else nP))
     def dealt(len: Int, b: Int): Array[Int] = (b until len by nBlocks).toArray
@@ -451,75 +497,32 @@ object Association {
       if (depAxis) Array.range(0, nP) else dealt(nP, b))
     val blockDeps = Array.tabulate(nBlocks)(b =>
       if (depAxis) dealt(nD, b) else Array.range(0, nD))
-    // a block's columns in the projection [predictors, covariates, dependents]
+    // a block's columns in the chunk's [predictors, covariates, dependents]
     val blockCols = Array.tabulate(nBlocks)(b =>
       blockPreds(b) ++ Array.range(nP, nP + k) ++ blockDeps(b).map(nP + k + _))
-    val nCols = nP + k + nD
-    val minCase = cfg.minCaseCount
-    val firth = cfg.model == "firth"
-    val maxIter = cfg.maxIter
-    val tol = cfg.tol
-    val input = df.select((cfg.predictors ++ covNames ++ cfg.dependents)
-      .map(n => column(n).cast("double")): _*).queryExecution.toRdd
-    val chunks = input.mapPartitionsWithIndex { (part, it) =>
-      val values = Array.fill(nCols)(new mutable.ArrayBuilder.ofDouble)
-      val nulls = Array.fill(nCols)(new java.util.BitSet)
-      var n = 0
-      it.foreach { r =>
-        var j = 0
-        while (j < nCols) {
-          if (r.isNullAt(j)) { nulls(j).set(n); values(j) += 0.0 }
-          else values(j) += r.getDouble(j)
-          j += 1
-        }
-        n += 1
-      }
-      if (n == 0) Iterator.empty
-      else {
-        val v = values.map(_.result())
-        Iterator.tabulate(nBlocks)(b =>
-          (b, ColumnChunk(part, n, blockCols(b).map(v), blockCols(b).map(nulls))))
-      }
-    }
-    chunks.partitionBy(new BlockPartitioner(nBlocks)).mapPartitions { it =>
-      val keyed = it.toArray
-      if (keyed.isEmpty) Iterator.empty
-      else {
-        val b = keyed.head._1
-        val parts = keyed.map(_._2).sortBy(_.part)
-        val n = parts.map(_.n).sum
-        val nc = blockCols(b).length
-        val values = Array.fill(nc)(new Array[Double](n))
-        // valid(c): bit i set = row i of column c non-null
-        val valid = Array.fill(nc)(new java.util.BitSet(n))
-        var off = 0
-        parts.foreach { p =>
-          for (c <- 0 until nc) {
-            System.arraycopy(p.values(c), 0, values(c), off, p.n)
-            valid(c).set(off, off + p.n)
-            p.nulls(c).stream().forEach(i => valid(c).clear(off + i))
-          }
-          off += p.n
-        }
-        val bp = blockPreds(b)
-        val bd = blockDeps(b)
-        val covs = Array.tabulate(k)(c => values(bp.length + c))
-        val covOk = new java.util.BitSet(n)
-        covOk.set(0, n)
-        (0 until k).foreach(c => covOk.and(valid(bp.length + c)))
-        bp.indices.iterator.flatMap { pi =>
-          bd.indices.iterator.flatMap { di =>
-            val y = bp.length + k + di
-            val rows = covOk.clone().asInstanceOf[java.util.BitSet]
-            rows.and(valid(pi))
-            rows.and(valid(y))
-            if (rows.isEmpty) None
-            else Some(fitBinaryPair(predictors(bp(pi)), dependents(bd(di)), values(pi),
-              values(y), covs, rows.stream().toArray, covNames, minCase, firth, maxIter, tol))
+    columnChunks(df, cfg)
+      .flatMap(ch => Iterator.tabulate(nBlocks)(b => (b, ch.select(blockCols(b)))))
+      .partitionBy(new BlockPartitioner(nBlocks)).mapPartitions { it =>
+        val keyed = it.toArray
+        if (keyed.isEmpty) Iterator.empty
+        else {
+          val b = keyed.head._1
+          val ch = concatChunks(keyed.map(_._2).sortBy(_.part))
+          val bp = blockPreds(b)
+          val bd = blockDeps(b)
+          val covs = Array.tabulate(k)(c => ch.values(bp.length + c))
+          val covOk = ch.complete(bp.length until bp.length + k)
+          bp.indices.iterator.flatMap { pi =>
+            bd.indices.iterator.flatMap { di =>
+              val y = bp.length + k + di
+              val rows = ch.pairRows(covOk, pi, y)
+              if (rows.isEmpty) None
+              else Some(fitBinaryPair(predictors(bp(pi)), dependents(bd(di)), ch.values(pi),
+                ch.values(y), covs, rows.stream().toArray, cfg))
+            }
           }
         }
       }
-    }
   }
 
   /** [[blockFits]] with the full grid restored. `blocks` is the block
@@ -528,86 +531,51 @@ object Association {
     * [[gramFit]] returns, so Bonferroni's count, the sort and the write
     * read the rows instead of re-running the block shuffle's reduce
     * side. The driver holds one row per fitted pair, a few hundred
-    * bytes each: some 0.5 GB of heap at 10^6 pairs, the same order as
-    * the grid [[completeGrid]] builds there. */
-  private[operators] def binaryBlocks(df: DataFrame, cfg: Config, blocks: Int): DataFrame = {
-    val solved = df.sparkSession.createDataset(blockFits(df, cfg, blocks).collect().toSeq)(
-      Encoders.product[BinResult]).toDF()
-    completeGrid(solved, cfg, binaryDefaults(cfg))
-  }
+    * bytes each: some 0.5 GB of heap at 10^6 pairs. */
+  private[operators] def binaryBlocks(df: DataFrame, cfg: Config, blocks: Int): DataFrame =
+    binaryGrid(df.sparkSession, cfg, blockFits(df, cfg, blocks).collect())
 
-  /** Firth/logistic over a LONG-format frame (one row per sample and
-    * pair, as [[melt]] emits or a caller builds by hand): `groupByKey`
-    * on the long-keyed packed rows (see `keyed`), one pair per task
-    * call, through the same per-pair fitter as [[assoc]]'s blocks.
-    * Wide frames go through [[assoc]], which never melts them.
-    *
-    * AUTO-ROUTE: when the average pair cohort exceeds 20,000 rows,
-    * materializing each pair's rows inside one task is the wrong plan
-    * — per-group cost is linear in rows and the whole group sits in
-    * one task's heap (measured 12×/decade at the MAS bench shape).
-    * Such frames route to the gram fitters ([[firthGram]] /
-    * [[logisticGram]]): the identical model as one shuffle-free scan
-    * per Newton step, with per-pair moments summed in task buffers and
-    * the m×m solves on the driver; agreement with the in-task fitter is
-    * spec-pinned to 1e-6 (SourcesAndGramSpec). Here the route costs a
-    * count of the long frame, divided by the grid; [[assoc]] gates on
-    * the wide frame's row count instead, an upper bound of the same
-    * average ([[routesToGram]]). The one semantic narrowing on the
-    * routed path: per-pair CONSTANT covariates are not dropped from the
-    * design — those pairs fail as "Singular information matrix."
-    * instead of fitting a reduced design; run `Preprocess.dropConstant`
-    * first if that matters. */
-  def binary(melted: DataFrame, cfg: Config): DataFrame = binary(melted, cfg, GroupRowsMax)
-
-  /** [[binary]] with the route's threshold given, so a spec can force
-    * either path. */
-  private[operators] def binary(melted: DataFrame, cfg: Config, groupRowsMax: Long): DataFrame = {
+  /** Firth/logistic over [[melt]]'s long frame: a compatibility entry
+    * for callers that melt first. It needs melt's `pidx`/`didx`; each
+    * pair's rows gather in one task (`groupByKey`) and go through the
+    * block fit's per-pair fitter, so the rows match [[assoc]]'s in-task
+    * path. It never routes to the gram fitters. Wide frames go through
+    * [[assoc]], which never melts them. */
+  def binary(melted: DataFrame, cfg: Config): DataFrame = {
     val spark = melted.sparkSession
     import spark.implicits._
-    if (melted.count() / math.max(1L, cfg.predictors.size.toLong * cfg.dependents.size) >
-        groupRowsMax)
-      return if (cfg.model == "firth") firthGram(melted, cfg)
-             else logisticGram(melted, cfg)
-    val covNames = cfg.covariates
-    val k = covNames.size
+    val k = cfg.covariates.size
     val predictors = cfg.predictors.toArray
     val dependents = cfg.dependents.toArray
-    val minCase = cfg.minCaseCount
-    val firth = cfg.model == "firth"
-    val maxIter = cfg.maxIter
-    val tol = cfg.tol
-    val solved = keyed(melted, cfg)
+    val fitted = meltedRows(melted, cfg).as[(Int, Array[Double])]
       .groupByKey(_._1)
       .mapValues(_._2)
-      .mapGroups { (key: Long, it: Iterator[Array[Double]]) =>
+      .mapGroups { (gi: Int, it: Iterator[Array[Double]]) =>
         val rows = it.toArray
         // packed [x, y, covs…] rows → column arrays
         val cols = Array.tabulate(k + 2)(c => rows.map(_(c)))
-        fitBinaryPair(predictors((key / dependents.length).toInt),
-          dependents((key % dependents.length).toInt), cols(0), cols(1), cols.drop(2),
-          Array.range(0, rows.length), covNames, minCase, firth, maxIter, tol)
+        fitBinaryPair(predictors(gi / dependents.length), dependents(gi % dependents.length),
+          cols(0), cols(1), cols.drop(2), Array.range(0, rows.length), cfg)
       }
-      .toDF()
-    completeGrid(solved, cfg, binaryDefaults(cfg))
+      .collect()
+    binaryGrid(spark, cfg, fitted)
   }
 
   /** THE per-pair firth/logistic fitter: the pair's rows are `sel`
     * (non-empty, ascending) of the column arrays `x`, `y` and
-    * `covs(c)`. Validation order, failed_reason text, the per-pair
-    * constant-covariate drop and the equation mirror
-    * analysis.py:168-206. */
+    * `covs(c)`, the columns of `cfg`'s covariates. Validation order,
+    * failed_reason text, the per-pair constant-covariate drop and the
+    * equation mirror analysis.py:168-206. */
   private def fitBinaryPair(
       pred: String, dep: String, x: Array[Double], y: Array[Double],
-      covs: Array[Array[Double]], sel: Array[Int],
-      covNames: Seq[String], minCase: Int, firth: Boolean,
-      maxIter: Int, tol: Double): BinResult = {
+      covs: Array[Array[Double]], sel: Array[Int], cfg: Config): BinResult = {
+    val covNames = cfg.covariates
     val n = sel.length
     var ySum = 0.0
     var i = 0
     while (i < n) { ySum += y(sel(i)); i += 1 }
     val cases = math.round(ySum)
-    val reason = viability(n, cases, minCase)
+    val reason = viability(n, cases, cfg.minCaseCount)
     if (reason != null) return failedRow(pred, dep, reason)
     val keptCovs = covNames.indices.filter { c =>
       val v = covs(c)
@@ -639,8 +607,9 @@ object Association {
     }
     try {
       val r =
-        if (firth) Models.firthRaw(xd, n, kk, yd, maxIter = maxIter, gtol = tol, xtol = tol)
-        else Models.logisticRaw(xd, n, kk, yd, maxIter = maxIter, tol = tol)
+        if (cfg.model == "firth")
+          Models.firthRaw(xd, n, kk, yd, maxIter = cfg.maxIter, gtol = cfg.tol, xtol = cfg.tol)
+        else Models.logisticRaw(xd, n, kk, yd, maxIter = cfg.maxIter, tol = cfg.tol)
       fittedRow(pred, dep, r, cases, n, equation)
     } catch {
       case e: Throwable =>
@@ -765,7 +734,7 @@ object Association {
 
   /** One IRLS fit's driver-side state. `fit` 0 is the full fit, 1 the
     * Firth LRT-null fit (predictor held at 0); `gi` is the pair's grid
-    * index (the `keyed` group key). */
+    * index, predictor index · D + dependent index. */
   private final class GramFit(val gi: Int, val fit: Int, m: Int) {
     val beta = new Array[Double](m)
     var step = Double.MaxValue
@@ -778,46 +747,52 @@ object Association {
     var finFailed: String = null
   }
 
-  /** Every fit's `kernel` sums over `rows` (gkey, x, y, covs…): the
-    * fits are dealt into slices of `sliceOf(width)`, and each slice is
-    * ONE shuffle-free job whose tasks accumulate into one slice buffer
-    * (slots looked up by gkey, at the fit's beta), merged on the driver
-    * as tasks finish. The driver's totals start at the merge identity,
-    * so a plan with no rows or no partitions yields zero counts. */
+  /** Every fit's `kernel` sums over its pair's rows of the `chunks`
+    * ([predictors, covariates, dependents] of `nP`, `k` and `nD`
+    * columns): the fits are dealt into slices of `sliceOf(width)`, and
+    * each slice is ONE shuffle-free job whose tasks accumulate into one
+    * slice buffer at the fits' betas, merged on the driver as tasks
+    * finish. Each slot walks its pair's rows in ascending order, so a
+    * slot sees its rows in input order in every scan. The driver's
+    * totals start at the merge identity, so a plan with no rows or no
+    * partitions yields zero counts. */
   private def gramScan(
-      rows: RDD[org.apache.spark.sql.catalyst.InternalRow], m: Int, kernel: GramKernel,
+      chunks: RDD[ColumnChunk], nP: Int, k: Int, nD: Int, kernel: GramKernel,
       fits: Array[GramFit], sliceOf: Int => Int): Array[Double] = {
-    val sc = rows.sparkContext
+    val sc = chunks.sparkContext
+    val m = k + 2
     val width = kernel.width
     val sums = kernel.sums
     val out = new Array[Double](fits.length * width)
     fits.indices.grouped(math.max(1, sliceOf(width))).foreach { slice =>
       val first = slice.head
       val n = slice.size
-      val idx = new java.util.HashMap[Long, Array[Int]]()
-      slice.foreach { s =>
-        idx.computeIfAbsent(fits(s).gi.toLong, _ => Array(-1, -1))(fits(s).fit) = s - first
-      }
-      val bc = sc.broadcast((idx, slice.map(fits(_).beta).toArray))
+      val bc = sc.broadcast((slice.map(fits(_).gi).toArray, slice.map(fits(_).beta).toArray))
       val total = kernel.zero(n)
-      sc.runJob(rows, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        val (ix, bs) = bc.value
+      sc.runJob(chunks, (it: Iterator[ColumnChunk]) => {
+        val (gis, bs) = bc.value
         val buf = kernel.zero(n)
         val x = new Array[Double](m)
-        while (it.hasNext) {
-          val r = it.next()
-          val si = ix.get(r.getLong(0))
-          if (si != null) {
-            x(0) = r.getDouble(1)
-            var c = 0
-            while (c < m - 2) { x(c + 1) = r.getDouble(c + 3); c += 1 }
-            x(m - 1) = 1.0
-            val y = r.getDouble(2)
-            var f = 0
-            while (f < 2) {
-              if (si(f) >= 0) kernel.add(x, y, bs(si(f)), buf, si(f) * width)
-              f += 1
+        x(m - 1) = 1.0
+        it.foreach { ch =>
+          val covs = Array.tabulate(k)(c => ch.values(nP + c))
+          val covOk = ch.complete(nP until nP + k)
+          var rows: java.util.BitSet = null
+          var s = 0
+          while (s < n) {
+            val (pi, y) = (gis(s) / nD, nP + k + gis(s) % nD)
+            // a Firth pair's two fits sit in adjacent slots
+            if (s == 0 || gis(s) != gis(s - 1)) rows = ch.pairRows(covOk, pi, y)
+            val (xs, ys) = (ch.values(pi), ch.values(y))
+            var r = rows.nextSetBit(0)
+            while (r >= 0) {
+              x(0) = xs(r)
+              var c = 0
+              while (c < k) { x(c + 1) = covs(c)(r); c += 1 }
+              kernel.add(x, ys(r), bs(s), buf, s * width)
+              r = rows.nextSetBit(r + 1)
             }
+            s += 1
           }
         }
         buf
@@ -861,15 +836,15 @@ object Association {
     }
   }
 
-  /** Distributed logistic IRLS over a melted frame, for pairs too large
-    * for one task: [[gramFit]] without the Firth penalty. Every
+  /** Distributed logistic IRLS over the wide frame, for cohorts too
+    * large for one task: [[gramFit]] without the Firth penalty. Every
     * non-failed pair re-steps until the largest |Δβ| of the grid is
     * below tol (or maxIter); a pair is `converged` when its own last
     * |Δβ| is. The Wald se comes from the last step's X'WX. */
-  def logisticGram(melted: DataFrame, cfg: Config): DataFrame =
-    gramFit(melted, cfg, penalized = false)
+  def logisticGram(df: DataFrame, cfg: Config): DataFrame =
+    gramFit(df, cfg, penalized = false)
 
-  /** Distributed Firth-penalized IRLS over a melted frame — the scale
+  /** Distributed Firth-penalized IRLS over the wide frame — the scale
     * path for the reference's default model (cli.py:105-111):
     * [[gramFit]] with the penalty. Semantics mirror `Models.firthRaw`
     * (logistf defaults: step cap 5, no half-steps, convergence on
@@ -880,21 +855,22 @@ object Association {
     * does not converge); a converged fit freezes. One fused final scan
     * gives each fit's penalized log-likelihood (ll + ½·log det X'WX)
     * and the full fit's Wald se; the p-value is the χ²₁ LRT. */
-  def firthGram(melted: DataFrame, cfg: Config): DataFrame =
-    gramFit(melted, cfg, penalized = true)
+  def firthGram(df: DataFrame, cfg: Config): DataFrame =
+    gramFit(df, cfg, penalized = true)
 
   /**
    * The gram IRLS fitter behind [[logisticGram]] and [[firthGram]]. It
-   * never holds a pair's rows in one task: the packed melted rows are
-   * scanned once per Newton step, and every scan ([[gramScan]]) is one
+   * never holds a pair's rows in one task: the wide frame's column
+   * chunks ([[columnChunks]]) are persisted for the fit and scanned
+   * once per Newton step, and every scan ([[gramScan]]) is one
    * shuffle-free job whose tasks accumulate per-pair moments — X'WX,
    * the score and, penalized, the third-order tensor — into one flat
    * buffer. The driver merges the buffers, solves the m×m systems and
    * broadcasts the new betas. A scan deals its slots into slices of at
    * most `sliceOf(width)` so a task's buffer stays under
    * `GramBufferDoubles`; a larger grid costs more scans per step, not
-   * more memory. The frame is persisted for the fit when a re-scan
-   * would re-read a real source ([[rescanHitsSource]]).
+   * more memory. Persisting the chunks also freezes a nondeterministic
+   * upstream: every scan reads the same rows in the same order.
    *
    * The first pass gives each pair's count, case sum, covariate range
    * and its β=0 moments (exact: w = ¼, tensor 0), which are Newton
@@ -909,30 +885,32 @@ object Association {
    * SourcesAndGramSpec, separated pairs included).
    */
   private[operators] def gramFit(
-      melted: DataFrame, cfg: Config, penalized: Boolean,
+      df: DataFrame, cfg: Config, penalized: Boolean,
       sliceOf: Int => Int = budgetSlice): DataFrame = {
-    val spark = melted.sparkSession
+    val chunks = columnChunks(df, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    val fitted = try gramFits(chunks, cfg, penalized, sliceOf) finally chunks.unpersist()
+    binaryGrid(df.sparkSession, cfg, fitted)
+  }
+
+  /** [[gramFit]]'s rows before grid completion: one per pair with at
+    * least one row. */
+  private def gramFits(chunks: RDD[ColumnChunk], cfg: Config, penalized: Boolean,
+      sliceOf: Int => Int): Seq[BinResult] = {
     val k = cfg.covariates.size
     val m = k + 2
     val nS = m * (m + 1) / 2
     val predictors = cfg.predictors.toArray
     val dependents = cfg.dependents.toArray
     val tol = cfg.tol
-    val flat = keyed(melted, cfg).toDF("gkey", "v")
-      .select(col("gkey") +: (0 until m).map(i => col("v")(i).as(s"v$i")): _*)
-    val persist = rescanHitsSource(melted)
-    if (persist) flat.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // a fresh plan over `flat`, so the scans read the persisted copy
-    val rows = flat.select("*").queryExecution.toRdd
     def scan(kernel: GramKernel, fits: Array[GramFit]): Array[Double] =
-      gramScan(rows, m, kernel, fits, sliceOf)
+      gramScan(chunks, predictors.length, k, dependents.length, kernel, fits, sliceOf)
 
     val firstPass = new FirstPassKernel(m)
     val nF = firstPass.width
     val grid = predictors.length * dependents.length
     val first = scan(firstPass, Array.tabulate(grid)(new GramFit(_, 0, m)))
     val out = mutable.ArrayBuffer.empty[BinResult]
-    // pairs with no rows are left to completeGrid
+    // pairs with no rows are left to the grid completion
     val viable = (0 until grid).filter(gi => first(gi * nF) > 0).filter { gi =>
       val off = gi * nF
       val gate = viability(first(off).toLong, first(off + 1).toLong, cfg.minCaseCount)
@@ -1011,8 +989,6 @@ object Association {
         }
       }
     }
-    if (persist) flat.unpersist()
-
     // every fitted pair kept all its covariates (a constant one fails)
     fits.grouped(if (penalized) 2 else 1).foreach { pf =>
       val full = pf.head
@@ -1036,24 +1012,8 @@ object Association {
           }
       })
     }
-    completeGrid(spark.createDataset(out.toSeq)(Encoders.product[BinResult]).toDF(),
-      cfg, binaryDefaults(cfg))
+    out.toSeq
   }
-
-  // ------------------------------------------------------ grid completion
-
-  private def linearDefaults(cfg: Config): Map[String, Column] = Map(
-    "pval" -> lit(Double.NaN), "beta" -> lit(Double.NaN), "se" -> lit(Double.NaN),
-    "ci_low" -> lit(Double.NaN), "ci_high" -> lit(Double.NaN),
-    "n_observations" -> lit(-9L), "converged" -> lit(false),
-    "failed_reason" -> lit("No data after dropping nulls."), "equation" -> lit("nan"))
-
-  private def binaryDefaults(cfg: Config): Map[String, Column] = Map(
-    "pval" -> lit(Double.NaN), "beta" -> lit(Double.NaN), "se" -> lit(Double.NaN),
-    "OR" -> lit(Double.NaN), "ci_low" -> lit(Double.NaN), "ci_high" -> lit(Double.NaN),
-    "cases" -> lit(-9L), "controls" -> lit(-9L), "total_n" -> lit(-9L),
-    "converged" -> lit(false),
-    "failed_reason" -> lit("No data after dropping nulls."), "equation" -> lit("nan"))
 
   /**
    * Weighted least squares for one predictor per group — precision /
@@ -2507,21 +2467,4 @@ object Association {
         .as("p_wald"))
   }
 
-  /** Pairs whose rows all dropped produce no group — restore the full
-    * predictor × dependent grid with reference default values
-    * (analysis.py:113-121, schema defaults :228-260). The grid is a
-    * literal local relation; both sides are one-row-per-pair small. */
-  private def completeGrid(
-      solved: DataFrame, cfg: Config, defaults: Map[String, Column]): DataFrame = {
-    val spark = solved.sparkSession
-    import spark.implicits._
-    val grid = cfg.predictors.flatMap(p => cfg.dependents.map(d => (p, d)))
-      .toDF("predictor", "dependent")
-    val joined = grid.join(broadcast(solved), Seq("predictor", "dependent"), "left")
-    val cols = Seq(col("predictor"), col("dependent")) ++
-      solved.columns.filterNot(c => c == "predictor" || c == "dependent").map { c =>
-        coalesce(col(c), defaults(c)).as(c)
-      }
-    joined.select(cols: _*)
-  }
 }

@@ -1528,7 +1528,7 @@ object Mas {
   def a10AssocLogisticGram(spark: SparkSession, dir: String): DataFrame = {
     val cfg = Association.Config(Seq("xbin"), Seq("d_urgent", "d_open", "d_big", "d_many"),
       model = "logistic", minCaseCount = 5, maxIter = 100, tol = 1e-12)
-    Association.logisticGram(Association.melt(cohort(spark, dir), cfg), cfg)
+    Association.logisticGram(cohort(spark, dir), cfg)
       .select(col("predictor"), col("dependent"),
         r4(col("beta")).as("beta"), r4(col("se")).as("se"),
         r4(col("OR")).as("OR"),
@@ -1547,7 +1547,7 @@ object Mas {
   def a17AssocFirthGram(spark: SparkSession, dir: String): DataFrame = {
     val cfg = Association.Config(Seq("xbin"), Seq("d_urgent", "d_open", "d_big", "d_many"),
       model = "firth", minCaseCount = 5, maxIter = 200, tol = 1e-11)
-    Association.firthGram(Association.melt(cohort(spark, dir), cfg), cfg)
+    Association.firthGram(cohort(spark, dir), cfg)
       .select(col("predictor"), col("dependent"),
         r4(col("beta")).as("beta"), r4(col("OR")).as("OR"),
         col("cases"), col("controls"), col("total_n"))

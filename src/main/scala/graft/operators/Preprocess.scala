@@ -196,12 +196,15 @@ object Preprocess {
       (col("s.n_unique") <= 1).as("dropped")).orderBy("col_name")
   }
 
-  /** Drop the constant columns found by `constantReport`'s predicate. */
+  /** Drop the columns `constantReport` marks dropped, from one min/max
+    * aggregate instead of its distinct counts: a column has at most one
+    * distinct non-null value exactly when its max is null or its min
+    * equals its max (Spark orders NaN above every value, equates NaN
+    * with NaN and 0.0 with -0.0, as its distinct count does). */
   def dropConstant(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val counts = df.agg(countDistinct(column(cols.head)).as(cols.head),
-      cols.tail.map(c => countDistinct(column(c)).as(c)): _*).head()
-    val toDrop = cols.filter(c => counts.getAs[Long](c) <= 1L)
-    df.drop(toDrop: _*)
+    val flags = cols.map(c => max(column(c)).isNull || min(column(c)) === max(column(c)))
+    val constant = df.agg(flags.head, flags.tail: _*).head()
+    df.drop(cols.indices.filter(constant.getBoolean).map(cols): _*)
   }
 
   // ------------------------------------------------------- p06 one-hot

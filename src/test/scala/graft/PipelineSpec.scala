@@ -358,7 +358,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       plans: Seq[org.apache.spark.sql.execution.SparkPlan],
       stages: Seq[(String, Int, Boolean)], tasks: Seq[(Int, Int)])
 
-  private def observe(cfg: GraftConfig): Observed = {
+  private def observe(cfg: GraftConfig): Observed = observing { Pipeline.run(spark, cfg); () }
+
+  /** What `body` did, as [[observe]] reports a run. */
+  private def observing(body: => Unit): Observed = {
     import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     def list[T] = java.util.Collections.synchronizedList(new java.util.ArrayList[T]())
@@ -386,7 +389,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     sc.addSparkListener(jobListener)
     spark.listenerManager.register(planListener)
     try {
-      Pipeline.run(spark, cfg)
+      body
       org.apache.spark.ListenerBusDrain(sc)
     } finally {
       sc.removeSparkListener(jobListener)
@@ -445,18 +448,37 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("an in-task firth study explodes nothing: no Generate in any executed plan") {
+  test("no model explodes: no Generate in any plan Pipeline.run executes") {
     val dir = java.nio.file.Files.createTempDirectory("graft_nogen").toString
     cohortDf.write.parquet(s"$dir/cohort.parquet")
-    val plans = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+    val binary = GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
       dependents = "d1,d2", covariates = "z,zconst,seg", categoricalCovariates = "seg",
-      model = "firth", minCaseCount = 10, output = s"$dir/out")).plans
-    assert(plans.nonEmpty)
-    val generate = plans.filter(_.toString.contains("Generate "))
-    assert(generate.isEmpty, generate.mkString("\n"))
-    // the detector sees the melt where one runs: the linear path
-    assert(observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
-      dependents = "z", model = "linear", quantitative = true, minCaseCount = 10,
-      output = s"$dir/out_linear")).plans.exists(_.toString.contains("Generate ")))
+      model = "firth", minCaseCount = 10)
+    val linear = binary.copy(dependents = "z", covariates = "sex", categoricalCovariates = "",
+      model = "linear", quantitative = true)
+    for ((name, cfg) <- Seq("firth" -> binary, "logistic" -> binary.copy(model = "logistic"),
+        "distributed firth" -> binary.copy(distributed = true), "linear" -> linear)) {
+      val plans = observe(cfg.copy(output = s"$dir/out_${name.replace(' ', '_')}")).plans
+      assert(plans.nonEmpty, name)
+      val generate = plans.filter(_.toString.contains("Generate "))
+      assert(generate.isEmpty, s"$name: ${generate.mkString("\n")}")
+    }
+    // the detector sees an explode where one runs: the melt itself
+    val melt = operators.Association.melt(spark.read.parquet(s"$dir/cohort.parquet"),
+      operators.Association.Config(Seq("x"), Seq("d1", "d2"), Seq("z")))
+    assert(observing(melt.write.format("noop").mode("overwrite").save()).plans
+      .exists(_.toString.contains("Generate ")))
+  }
+
+  test("the linear fit runs under graft/fit; no fit stage runs under graft/write") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_linfit").toString
+    cohortDf.write.parquet(s"$dir/cohort.parquet")
+    val run = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x,sex",
+      dependents = "z,d1", covariates = "seg", categoricalCovariates = "seg",
+      model = "linear", quantitative = true, minCaseCount = 10, output = s"$dir/out"))
+    assert(run.jobs.map(_._1).contains("graft/fit"), run.jobs)
+    // the co-moment merge is the run's only ShuffledRDD
+    val merge = run.stages.filter(_._3)
+    assert(merge.nonEmpty && merge.forall(_._1 == "graft/fit"), run.stages)
   }
 }

@@ -138,6 +138,21 @@ class PreprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = Seq((1, 7, "x"), (2, 7, "y"), (3, 7, "x")).toDF("a", "b", "c")
     val out = Preprocess.dropConstant(df, Seq("a", "b", "c"))
     assert(out.columns.toSeq == Seq("a", "c"))
+    // the min/max predicate drops exactly what constantReport's distinct
+    // count marks dropped, on every edge of Spark's double ordering
+    val nan = Double.NaN
+    val edges = Seq[(Option[Double], Option[Double], Option[Double], Option[Double],
+        Option[String], Option[String], Option[Double])](
+      (Some(nan), Some(nan), Some(0.0), None, Some("x"), Some("x"), Some(1.0)),
+      (Some(nan), Some(1.0), Some(-0.0), None, Some("y"), None, Some(1.0)),
+      (None, Some(nan), Some(0.0), None, Some("x"), Some("x"), None))
+      .toDF("nan_only", "nan_value", "zeros", "all_null", "s2", "s1", "one_value")
+    val cols = edges.columns.toSeq
+    val report = Preprocess.constantReport(edges, cols).collect()
+      .map(r => r.getAs[String]("col_name") -> r.getAs[Boolean]("dropped")).toMap
+    assert(report == Map("nan_only" -> true, "nan_value" -> false, "zeros" -> true,
+      "all_null" -> true, "s2" -> false, "s1" -> true, "one_value" -> true))
+    assert(Preprocess.dropConstant(edges, cols).columns.toSeq == cols.filterNot(report))
   }
 
   test("oneHot leaves <=2-level columns untouched") {

@@ -119,108 +119,60 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  private def byDep(df: org.apache.spark.sql.DataFrame): Map[String, org.apache.spark.sql.Row] =
+    df.collect().map(r => r.getAs[String]("dependent") -> r).toMap
+
+  /** The column-block (in-task) fit of a wide frame. */
+  private def inTask(wide: org.apache.spark.sql.DataFrame, cfg: Association.Config) =
+    byDep(Association.binaryWide(wide, cfg, gram = false))
+
+  /** The gram fit of a wide frame, with the model's entry point. */
+  private def gram(wide: org.apache.spark.sql.DataFrame, cfg: Association.Config) =
+    byDep(if (cfg.model == "firth") Association.firthGram(wide, cfg)
+          else Association.logisticGram(wide, cfg))
+
   test("distributed Gram IRLS matches the in-task logistic fitter") {
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(13)
-    val rows = (0 until 600).flatMap { i =>
+    val wide = (0 until 600).map { _ =>
       val x = rng.nextGaussian()
       val z = rng.nextGaussian()
-      Seq(
-        ("x", "dep_a", x, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.9 * x - 0.5)))) 1.0 else 0.0, Seq(z)),
-        ("x", "dep_b", x, if (rng.nextDouble() < 0.25) 1.0 else 0.0, Seq(z)))
-    }
-    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
+      (x, z, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.9 * x - 0.5)))) 1.0 else 0.0,
+        if (rng.nextDouble() < 0.25) 1.0 else 0.0)
+    }.toDF("x", "z", "dep_a", "dep_b")
     val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
       model = "logistic", minCaseCount = 5, maxIter = 50, tol = 1e-9)
-    val inTask = Association.binary(melted, cfg).collect()
-      .map(r => r.getAs[String]("dependent") -> r).toMap
-    val gram = Association.logisticGram(melted, cfg).collect()
-      .map(r => r.getAs[String]("dependent") -> r).toMap
+    val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
     for (d <- Seq("dep_a", "dep_b")) {
-      assert(math.abs(gram(d).getAs[Double]("beta") - inTask(d).getAs[Double]("beta")) < 1e-6, d)
-      assert(math.abs(gram(d).getAs[Double]("se") - inTask(d).getAs[Double]("se")) < 1e-6, d)
-      assert(math.abs(gram(d).getAs[Double]("pval") - inTask(d).getAs[Double]("pval")) < 1e-6, d)
-      assert(gram(d).getAs[Long]("cases") == inTask(d).getAs[Long]("cases"), d)
-      assert(gram(d).getAs[Boolean]("converged"), d)
+      for (c <- Seq("beta", "se", "pval"))
+        assert(math.abs(gramRows(d).getAs[Double](c) - blocks(d).getAs[Double](c)) < 1e-6, s"$d $c")
+      assert(gramRows(d).getAs[Long]("cases") == blocks(d).getAs[Long]("cases"), d)
+      assert(gramRows(d).getAs[Boolean]("converged"), d)
     }
-  }
-
-  test("binary() auto-routes oversized groups to the gram fitters, values pinned equal") {
-    val sess = spark
-    import sess.implicits._
-    val rng = new scala.util.Random(41)
-    val rows = (0 until 500).flatMap { i =>
-      val x = rng.nextGaussian()
-      val z = rng.nextGaussian()
-      Seq(
-        ("x", "dep_a", x, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.7 * x - 0.3)))) 1.0 else 0.0, Seq(z)),
-        ("x", "dep_b", x, if (rng.nextDouble() < 0.35) 1.0 else 0.0, Seq(z)))
-    }
-    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
-    for (model <- Seq("firth", "logistic")) {
-      val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
-        model = model, minCaseCount = 5,
-        maxIter = if (model == "logistic") 50 else 25,
-        tol = if (model == "logistic") 1e-9 else 1e-5)
-      val inTask = operators.RouteGate.binary(melted, cfg, Long.MaxValue).collect()
-        .map(r => r.getAs[String]("dependent") -> r).toMap
-      val routed = operators.RouteGate.binary(melted, cfg, 100).collect() // avg group = 500 > 100
-        .map(r => r.getAs[String]("dependent") -> r).toMap
-      for (d <- Seq("dep_a", "dep_b"); c <- Seq("beta", "se", "pval", "OR")) {
-        assert(math.abs(routed(d).getAs[Double](c) - inTask(d).getAs[Double](c)) < 1e-6,
-          s"$model $d $c: routed=${routed(d).getAs[Double](c)} inTask=${inTask(d).getAs[Double](c)}")
-      }
-      for (d <- Seq("dep_a", "dep_b")) {
-        assert(routed(d).getAs[Long]("cases") == inTask(d).getAs[Long]("cases"), d)
-        assert(routed(d).getAs[Boolean]("converged"), s"$model $d")
-      }
-    }
-    // engagement observable: the routed path does NOT drop a per-pair
-    // constant covariate (documented gram contract — singular X'WX
-    // fails the pair), while the in-task fitter fits a reduced
-    // design. A constant covariate + a tiny gate therefore proves the
-    // route really switched paths.
-    val rowsC = rows.map { case (p, d, x, y, _) => (p, d, x, y, Seq(3.0)) }
-    val meltedC = rowsC.toDF("predictor", "dependent", "x", "y", "covs")
-    val cfgC = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
-      model = "firth", minCaseCount = 5)
-    val inTaskC = operators.RouteGate.binary(meltedC, cfgC, Long.MaxValue).collect()
-    val routedC = operators.RouteGate.binary(meltedC, cfgC, 100).collect()
-    assert(inTaskC.forall(_.getAs[Boolean]("converged")),
-      "in-task must fit the reduced design")
-    assert(routedC.exists(r => !r.getAs[Boolean]("converged")),
-      "routed path did not engage the gram fitter (constant covariate fit anyway)")
   }
 
   test("distributed Firth IRLS matches the in-task firth fitter incl. LRT pval") {
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(29)
-    val rows = (0 until 500).flatMap { i =>
+    val wide = (0 until 500).map { _ =>
       val x = rng.nextGaussian()
       val z = rng.nextGaussian()
-      Seq(
-        ("x", "dep_a", x, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.8 * x - 0.4)))) 1.0 else 0.0, Seq(z)),
-        ("x", "dep_b", x, if (rng.nextDouble() < 0.3) 1.0 else 0.0, Seq(z)))
-    }
-    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
+      (x, z, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.8 * x - 0.4)))) 1.0 else 0.0,
+        if (rng.nextDouble() < 0.3) 1.0 else 0.0)
+    }.toDF("x", "z", "dep_a", "dep_b")
     // logistf defaults (maxit 25, gtol/xtol 1e-5) — the reference's
     // default-model configuration, so the equality pin covers the
     // config the engine actually runs
     val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
       model = "firth", minCaseCount = 5)
-    val inTask = Association.binary(melted, cfg).collect()
-      .map(r => r.getAs[String]("dependent") -> r).toMap
-    val gram = Association.firthGram(melted, cfg).collect()
-      .map(r => r.getAs[String]("dependent") -> r).toMap
+    val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
     for (d <- Seq("dep_a", "dep_b")) {
-      assert(math.abs(gram(d).getAs[Double]("beta") - inTask(d).getAs[Double]("beta")) < 1e-6, d)
-      assert(math.abs(gram(d).getAs[Double]("se") - inTask(d).getAs[Double]("se")) < 1e-6, d)
-      assert(math.abs(gram(d).getAs[Double]("pval") - inTask(d).getAs[Double]("pval")) < 1e-6, d)
-      assert(math.abs(gram(d).getAs[Double]("OR") - inTask(d).getAs[Double]("OR")) < 1e-6, d)
-      assert(gram(d).getAs[Long]("cases") == inTask(d).getAs[Long]("cases"), d)
-      assert(gram(d).getAs[Boolean]("converged"), d)
+      for (c <- Seq("beta", "se", "pval", "OR"))
+        assert(math.abs(gramRows(d).getAs[Double](c) - blocks(d).getAs[Double](c)) < 1e-6, s"$d $c")
+      assert(gramRows(d).getAs[Long]("cases") == blocks(d).getAs[Long]("cases"), d)
+      assert(gramRows(d).getAs[Boolean]("converged"), d)
     }
   }
 
@@ -231,43 +183,39 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(47)
-    val rows = (0 until 800).flatMap { i =>
+    val wide = (0 until 800).map { _ =>
       val x = rng.nextGaussian()
       val z1 = rng.nextGaussian(); val z2 = rng.nextGaussian()
       val z3 = if (rng.nextDouble() < 0.4) 1.0 else 0.0
       val eta = 0.7 * x - 0.3 * z1 + 0.5 * z2 - 0.2 * z3 - 0.4
-      Seq(
-        ("x", "dep_a", x, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-eta))) 1.0 else 0.0, Seq(z1, z2, z3)),
-        ("x", "dep_b", x, if (rng.nextDouble() < 0.2) 1.0 else 0.0, Seq(z1, z2, z3)))
-    }
-    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
+      (x, z1, z2, z3, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-eta))) 1.0 else 0.0,
+        if (rng.nextDouble() < 0.2) 1.0 else 0.0)
+    }.toDF("x", "z1", "z2", "z3", "dep_a", "dep_b")
     val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z1", "z2", "z3"),
       model = "firth", minCaseCount = 5)
-    val inTask = Association.binary(melted, cfg).collect()
-      .map(r => r.getAs[String]("dependent") -> r).toMap
-    val gram = Association.firthGram(melted, cfg).collect()
-      .map(r => r.getAs[String]("dependent") -> r).toMap
+    val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
     for (d <- Seq("dep_a", "dep_b")) {
       for (c <- Seq("beta", "se", "pval", "OR", "ci_low", "ci_high"))
-        assert(math.abs(gram(d).getAs[Double](c) - inTask(d).getAs[Double](c)) < 1e-4,
-          s"$d $c: gram=${gram(d).getAs[Double](c)} inTask=${inTask(d).getAs[Double](c)}")
-      assert(gram(d).getAs[Long]("cases") == inTask(d).getAs[Long]("cases"), d)
-      assert(gram(d).getAs[String]("equation") == inTask(d).getAs[String]("equation"), d)
-      assert(gram(d).getAs[Boolean]("converged"), d)
+        assert(math.abs(gramRows(d).getAs[Double](c) - blocks(d).getAs[Double](c)) < 1e-4,
+          s"$d $c: gram=${gramRows(d).getAs[Double](c)} inTask=${blocks(d).getAs[Double](c)}")
+      assert(gramRows(d).getAs[Long]("cases") == blocks(d).getAs[Long]("cases"), d)
+      assert(gramRows(d).getAs[String]("equation") == blocks(d).getAs[String]("equation"), d)
+      assert(gramRows(d).getAs[Boolean]("converged"), d)
     }
   }
 
-  test("distributed Firth IRLS applies the same viability gates") {
+  /** 100 rows: x alternating 0/1, dep_few with 3 cases, dep_missing all null. */
+  private def fewCases = {
     val sess = spark
     import sess.implicits._
-    val rows = (0 until 100).map { i =>
-      ("x", "dep_few", i.toDouble % 2, if (i < 3) 1.0 else 0.0, Seq.empty[Double])
-    }
-    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
+    (0 until 100).map(i => (i.toDouble % 2, if (i < 3) 1.0 else 0.0, Option.empty[Double]))
+      .toDF("x", "dep_few", "dep_missing")
+  }
+
+  test("distributed Firth IRLS applies the same viability gates") {
     val cfg = Association.Config(Seq("x"), Seq("dep_few", "dep_missing"),
       model = "firth", minCaseCount = 5)
-    val out = Association.firthGram(melted, cfg).collect()
-      .map(r => r.getAs[String]("dependent") -> r.getAs[String]("failed_reason")).toMap
+    val out = gram(fewCases, cfg).map { case (d, r) => d -> r.getAs[String]("failed_reason") }
     assert(out("dep_few") == "Insufficient case count (3 cases).")
     assert(out("dep_missing") == "No data after dropping nulls.")
   }
@@ -280,20 +228,16 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(61)
-    val rows = (0 until 400).flatMap { i =>
+    val wide = (0 until 400).map { i =>
       val x = rng.nextGaussian(); val z = rng.nextGaussian()
-      Seq(
-        ("x", "dep_a", x, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.8 * x - 0.4)))) 1.0 else 0.0, Seq(z)),
-        ("x", "dep_b", x, if (rng.nextDouble() < 0.3) 1.0 else 0.0, Seq(z)),
-        ("x", "dep_c", x, if (i < 3) 1.0 else 0.0, Seq(z)))
-    }
-    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
+      (x, z, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.8 * x - 0.4)))) 1.0 else 0.0,
+        if (rng.nextDouble() < 0.3) 1.0 else 0.0, if (i < 3) 1.0 else 0.0)
+    }.toDF("x", "z", "dep_a", "dep_b", "dep_c")
     val deps = Seq("dep_a", "dep_b", "dep_c")
     for (model <- Seq("firth", "logistic")) {
       val cfg = Association.Config(Seq("x"), deps, Seq("z"), model = model, minCaseCount = 5)
       val bySlots = Seq(1, 3, Int.MaxValue).map { slots =>
-        slots -> operators.GramSlices.fit(melted, cfg, slots).collect()
-          .map(r => r.getAs[String]("dependent") -> r).toMap
+        slots -> byDep(operators.GramSlices.fit(wide, cfg, slots))
       }
       val (_, base) = bySlots.last
       assert(base("dep_c").getAs[String]("failed_reason") == "Insufficient case count (3 cases).")
@@ -317,30 +261,24 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(41)
-    val rows = (0 until 500).flatMap { i =>
+    val wide = (0 until 500).map { _ =>
       val x = rng.nextGaussian()
-      Seq(
-        ("x", "dep_a", x, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.7 * x - 0.3)))) 1.0 else 0.0, Seq(3.0)),
-        ("x", "dep_b", x, if (rng.nextDouble() < 0.35) 1.0 else 0.0, Seq(3.0)))
-    }
-    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
+      (x, 3.0, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.7 * x - 0.3)))) 1.0 else 0.0,
+        if (rng.nextDouble() < 0.35) 1.0 else 0.0)
+    }.toDF("x", "z", "dep_a", "dep_b")
     for (model <- Seq("firth", "logistic")) {
       val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
         model = model, minCaseCount = 5)
-      val gram = (if (model == "firth") Association.firthGram(melted, cfg)
-                  else Association.logisticGram(melted, cfg)).collect()
-      assert(gram.length == 2)
-      for (r <- gram) {
-        val d = r.getAs[String]("dependent")
+      val gramRows = gram(wide, cfg)
+      assert(gramRows.size == 2)
+      for ((d, r) <- gramRows) {
         assert(r.getAs[String]("failed_reason") == "Singular information matrix.", s"$model $d")
         assert(!r.getAs[Boolean]("converged"), s"$model $d")
         assert(r.getAs[String]("equation") == "nan", s"$model $d")
         assert(Seq("cases", "controls", "total_n").forall(r.getAs[Long](_) == -9L), s"$model $d")
         assert(r.getAs[Double]("beta").isNaN, s"$model $d")
       }
-      val inTask = Association.binary(melted, cfg).collect()
-      for (r <- inTask) {
-        val d = r.getAs[String]("dependent")
+      for ((d, r) <- inTask(wide, cfg)) {
         assert(r.getAs[Boolean]("converged") && r.getAs[String]("failed_reason") == "nan",
           s"$model $d in-task")
         assert(r.getAs[String]("equation") == s"$d ~ x + ", s"$model $d in-task")
@@ -348,15 +286,14 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("gram fitters on an empty melted frame return the no-data grid") {
+  test("gram fitters on an empty frame return the no-data grid") {
     val sess = spark
     import sess.implicits._
-    val melted = Seq(("x", "dep_a", 1.0, 1.0, Seq(0.5)))
-      .toDF("predictor", "dependent", "x", "y", "covs")
+    val wide = Seq((1.0, 2.0, 0.5, 1.0, 0.0)).toDF("x", "w", "z", "dep_a", "dep_b")
     val zeroPartitions = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], melted.schema)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], wide.schema)
     assert(zeroPartitions.rdd.getNumPartitions == 0)
-    for (input <- Seq(melted.limit(0), zeroPartitions); model <- Seq("firth", "logistic")) {
+    for (input <- Seq(wide.limit(0), zeroPartitions); model <- Seq("firth", "logistic")) {
       val cfg = Association.Config(Seq("x", "w"), Seq("dep_a", "dep_b"), Seq("z"),
         model = model, minCaseCount = 5)
       val out = (if (model == "firth") Association.firthGram(input, cfg)
@@ -377,48 +314,35 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(7)
-    val rows = (0 until 400).flatMap { i =>
+    val wide = (0 until 400).map { i =>
       val x = rng.nextGaussian()
       val z = rng.nextGaussian()
       val quasi = if (x > 0.3) 1.0 else if (x < 0.1) 0.0 else (i % 2).toDouble
-      Seq(("x", "dep_sep", x, if (x > 0) 1.0 else 0.0, Seq(z)),
-        ("x", "dep_quasi", x, quasi, Seq(z)))
-    }
-    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
+      (x, z, if (x > 0) 1.0 else 0.0, quasi)
+    }.toDF("x", "z", "dep_sep", "dep_quasi")
     for (model <- Seq("firth", "logistic")) {
       val cfg = Association.Config(Seq("x"), Seq("dep_sep", "dep_quasi"), Seq("z"),
         model = model, minCaseCount = 5)
-      def byDep(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => r.getAs[String]("dependent") -> r).toMap
-      val inTask = byDep(operators.RouteGate.binary(melted, cfg, Long.MaxValue))
-      val gram = byDep(if (model == "firth") Association.firthGram(melted, cfg)
-                       else Association.logisticGram(melted, cfg))
+      val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
       for (d <- Seq("dep_sep", "dep_quasi")) {
         for (c <- Seq("pval", "beta", "se", "OR", "ci_low", "ci_high")) {
-          val (a, b) = (inTask(d).getAs[Double](c), gram(d).getAs[Double](c))
+          val (a, b) = (blocks(d).getAs[Double](c), gramRows(d).getAs[Double](c))
           assert(a == b || math.abs(a - b) <= 1e-6 * math.max(1.0, math.abs(b)),
             s"$model $d $c: in-task $a, gram $b")
         }
         for (c <- Seq("converged", "failed_reason", "cases", "controls", "total_n"))
-          assert(inTask(d).getAs[Any](c) == gram(d).getAs[Any](c), s"$model $d $c")
+          assert(blocks(d).getAs[Any](c) == gramRows(d).getAs[Any](c), s"$model $d $c")
       }
-      for (r <- inTask.values ++ gram.values)
+      for (r <- blocks.values ++ gramRows.values)
         assert(!(r.getAs[Double]("pval").isNaN && r.getAs[String]("failed_reason") == "nan"),
           s"$model ${r.getAs[String]("dependent")}: NaN pval on a row without a failed_reason")
     }
   }
 
   test("distributed Gram IRLS applies the same viability gates") {
-    val sess = spark
-    import sess.implicits._
-    val rows = (0 until 100).map { i =>
-      ("x", "dep_few", i.toDouble % 2, if (i < 3) 1.0 else 0.0, Seq.empty[Double])
-    }
-    val melted = rows.toDF("predictor", "dependent", "x", "y", "covs")
     val cfg = Association.Config(Seq("x"), Seq("dep_few", "dep_missing"),
       model = "logistic", minCaseCount = 5)
-    val out = Association.logisticGram(melted, cfg).collect()
-      .map(r => r.getAs[String]("dependent") -> r.getAs[String]("failed_reason")).toMap
+    val out = gram(fewCases, cfg).map { case (d, r) => d -> r.getAs[String]("failed_reason") }
     assert(out("dep_few") == "Insufficient case count (3 cases).")
     assert(out("dep_missing") == "No data after dropping nulls.")
   }
@@ -428,16 +352,8 @@ package operators {
   /** Test access to the gram fitter's slice capacity: every scan deals
     * at most `slots` slots into one job. */
   object GramSlices {
-    def fit(melted: org.apache.spark.sql.DataFrame, cfg: Association.Config,
+    def fit(df: org.apache.spark.sql.DataFrame, cfg: Association.Config,
         slots: Int): org.apache.spark.sql.DataFrame =
-      Association.gramFit(melted, cfg, penalized = cfg.model == "firth", _ => slots)
-  }
-
-  /** Test access to the binary route's threshold (average melted rows
-    * per pair): `Long.MaxValue` keeps every pair in-task. */
-  object RouteGate {
-    def binary(melted: org.apache.spark.sql.DataFrame, cfg: Association.Config,
-        groupRowsMax: Long): org.apache.spark.sql.DataFrame =
-      Association.binary(melted, cfg, groupRowsMax)
+      Association.gramFit(df, cfg, penalized = cfg.model == "firth", _ => slots)
   }
 }

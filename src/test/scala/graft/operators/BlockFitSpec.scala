@@ -8,9 +8,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSession
 
-/** The wide-frame binary path (`Association.assoc` for firth/logistic):
-  * column blocks against the long-format entry, block and partition
-  * invariance, and the route on the frame's row count. */
+/** The wide-frame paths of `Association.assoc`: column blocks against
+  * the long-format entry, block and partition invariance, the route on
+  * the frame's row count, linear partition invariance, and all-null
+  * columns on every chunk path. */
 class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
@@ -169,12 +170,10 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
         model = model, minCaseCount = 5)
       def byDep(df: DataFrame): Map[String, Row] =
         df.collect().map(r => r.getAs[String]("dependent") -> r).toMap
-      val melted = Association.melt(wide, cfg)
       val inTask = byDep(Association.assoc(wide, cfg, Long.MaxValue))
       for ((route, rows) <- Seq(
           "gram" -> byDep(Association.assoc(wide, cfg, 100)),
-          "long in-task" -> byDep(Association.binary(melted, cfg, Long.MaxValue)),
-          "long gram" -> byDep(Association.binary(melted, cfg, 100)));
+          "long in-task" -> byDep(Association.binary(Association.melt(wide, cfg), cfg)));
           d <- Seq("dep_a", "dep_b")) {
         val (want, got) = (inTask(d), rows(d))
         val tag = s"$model $route $d"
@@ -233,5 +232,61 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(assocAt(500, wideC, cfgC).values.forall(_.getAs[Boolean]("converged")))
     assert(assocAt(499, wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")))
     assert(!Association.routesToGram(wideC, cfgC.copy(dependents = Nil), 0))
+  }
+
+  test("linear output is 4-dp identical at input partitions 1, 7 and 32") {
+    val rng = new scala.util.Random(11)
+    val deps = (0 until 6).map(j => s"y$j")
+    val rows = (0 until 500).map { i =>
+      val x = 1e5 + 50.0 * rng.nextGaussian()
+      val (w, z) = (rng.nextGaussian(), rng.nextGaussian())
+      Row((Seq[Any](if (i % 41 == 3) null else x, w, z, if (i % 2 == 0) 1.0 else 0.0) ++
+        deps.indices.map { j =>
+          if ((i + j) % 37 == 0) null
+          else 3.0 * j * (x - 1e5) - w + 2.0 * z + rng.nextGaussian()
+        }): _*)
+    }
+    val schema = StructType(Seq("x", "w", "z", "c").map(StructField(_, DoubleType)) ++
+      deps.map(StructField(_, DoubleType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val cfg = Association.Config(Seq("x", "w"), deps, Seq("z", "c"), model = "linear",
+      minCaseCount = 10)
+    val runs = Seq(1, 7, 32).map(p => canon(Association.assoc(df.repartition(p), cfg), Some(4)))
+    assert(runs.head.size == 2 * deps.size)
+    assert(runs.forall(_ == runs.head), runs.map(_.take(2)))
+  }
+
+  test("an all-null dependent or predictor gives no-data rows on every chunk path") {
+    val rng = new scala.util.Random(19)
+    val rows = (0 until 400).map { _ =>
+      val x = rng.nextGaussian()
+      val z = rng.nextGaussian()
+      Row(x, null, z, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-x))) 1.0 else 0.0, null)
+    }
+    val schema = StructType(Seq("x", "x_null", "z", "d_ok", "d_null")
+      .map(StructField(_, DoubleType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val preds = Seq("x", "x_null")
+    val deps = Seq("d_ok", "d_null")
+    def check(route: String, out: DataFrame, count: String): Unit = {
+      val got = byPair(out)
+      assert(got.keySet == (for (p <- preds; d <- deps) yield (p, d)).toSet, route)
+      for ((pair @ (p, d), r) <- got) {
+        val reason = r.getAs[String]("failed_reason")
+        if (p == "x" && d == "d_ok") assert(reason == "nan", s"$route $pair: $reason")
+        else {
+          assert(reason == "No data after dropping nulls.", s"$route $pair: $reason")
+          assert(r.getAs[Long](count) == -9L, s"$route $pair $count")
+          assert(r.getAs[String]("equation") == "nan", s"$route $pair")
+        }
+      }
+    }
+    check("linear", Association.assoc(df, Association.Config(preds, deps, Seq("z"),
+      model = "linear", minCaseCount = 5)), "n_observations")
+    for (model <- Seq("firth", "logistic")) {
+      val cfg = Association.Config(preds, deps, Seq("z"), model = model, minCaseCount = 5)
+      check(s"$model blocks", Association.binaryWide(df, cfg, gram = false), "total_n")
+      check(s"$model gram", Association.binaryWide(df, cfg, gram = true), "total_n")
+    }
   }
 }

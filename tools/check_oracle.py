@@ -4,8 +4,14 @@
 Runs DuckDB oracle SQL against the testdata parquet tables and
 compares with the Verify-dumped Spark results (columns sorted by name,
 rows sorted, exact value compare). Dev tool only — not library code.
+
+    python3 tools/check_oracle.py <sfDir> <outDir> [name ...]
+
+Each name is a query name or its short id (`a01`); with names, only
+those queries are checked. Every line carries the DuckDB seconds of
+its oracle query.
 """
-import json, sys, glob
+import json, sys, glob, time
 import duckdb
 import pandas as pd
 
@@ -24,8 +30,17 @@ def normalize(df):
             df[c] = pd.to_datetime(df[c]).dt.tz_localize(None)
     return df
 
-def main(sfdir, outdir):
+def picks(name, tokens):
+    return any(name == t or name.startswith(t + "_") for t in tokens)
+
+def main(sfdir, outdir, *names):
     sql = json.load(open(f"{outdir}/oracle_sql.json"))
+    if names:
+        unknown = [t for t in names if not any(picks(n, [t]) for n in sql)]
+        if unknown:
+            print(f"UNKNOWN  {' '.join(unknown)}")
+            return 1
+        sql = {n: q for n, q in sql.items() if picks(n, names)}
     con = duckdb.connect()
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
@@ -34,10 +49,12 @@ def main(sfdir, outdir):
         spark_df = load_spark(outdir, name)
         if spark_df is None:
             print(f"MISSING  {name}"); fail += 1; continue
+        t0 = time.perf_counter()
         try:
             duck_df = con.execute(q).fetchdf()
         except Exception as e:
             print(f"SQLERR   {name}: {e}"); fail += 1; continue
+        name = f"{name} [duckdb {time.perf_counter() - t0:.1f}s]"
         a, b = normalize(spark_df), normalize(duck_df)
         if list(a.columns) != list(b.columns):
             print(f"COLS     {name}: spark={list(a.columns)} duck={list(b.columns)}"); fail += 1; continue
