@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, countDistinct, lit, sum}
+import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
 import graft.operators.{Association, Postprocess, Preprocess}
 import graft.operators.Preprocess.column
 import graft.sources.Sources
@@ -27,8 +27,10 @@ import graft.sources.Sources
  * relies on it).
  *
  * Every job a run triggers carries its stage as the job description:
- * `graft/read`, `graft/preprocess`, `graft/route`, `graft/fit`,
- * `graft/postprocess` or `graft/write`. Every model fits every pair
+ * `graft/read`, `graft/preprocess`, `graft/fit`, `graft/postprocess` or
+ * `graft/write`. Preprocessing asks the cohort its column statistics
+ * in one aggregate (`Preprocess.profile`), whose row count also routes
+ * the binary fit. Every model fits every pair
  * once, in `graft/fit` jobs, into a local relation of pair rows that
  * postprocessing and the write read; so a run without `output` has
  * fitted by the time it returns.
@@ -144,24 +146,24 @@ object Pipeline {
   /** Run on an already-loaded frame (testing / composition). */
   def run(raw: DataFrame, cfg: GraftConfig): DataFrame = {
     val spark = raw.sparkSession
-    val (df, assocCfg) = stage(spark, "preprocess")(preprocess(raw, cfg))
-    val results =
-      if (cfg.model == "linear") stage(spark, "fit")(Association.assoc(df, assocCfg))
-      else {
-        // --distributed forces the Gram IRLS paths (one aggregation
-        // scan per Newton step instead of one task per pair) — same
-        // viability gates, same output schema, spec-pinned equal to the
-        // in-task fitters; otherwise the frame's row count picks
-        val gram = cfg.distributed ||
-          stage(spark, "route")(Association.routesToGram(df, assocCfg))
-        stage(spark, "fit")(Association.binaryWide(df, assocCfg, gram))
-      }
+    val (df, assocCfg, rows) = stage(spark, "preprocess")(preprocess(raw, cfg))
+    val results = stage(spark, "fit") {
+      if (cfg.model == "linear") Association.assoc(df, assocCfg)
+      // --distributed forces the Gram IRLS paths (one aggregation scan
+      // per Newton step instead of one task per pair) — same viability
+      // gates, same output schema, spec-pinned equal to the in-task
+      // fitters; otherwise the profiled row count picks
+      else Association.binaryWide(df, assocCfg,
+        cfg.distributed || rows.exists(Association.routesToGram(_, assocCfg)))
+    }
     stage(spark, "postprocess")(postprocess(raw, results, cfg))
   }
 
-  /** Column selection through the dependent transforms: the frame and
-    * the association config the fit runs on. */
-  private def preprocess(raw: DataFrame, cfg: GraftConfig): (DataFrame, Association.Config) = {
+  /** Column selection through the dependent transforms: the frame, the
+    * association config the fit runs on and, when the profile ran, the
+    * frame's row count. */
+  private[graft] def preprocess(raw: DataFrame,
+      cfg: GraftConfig): (DataFrame, Association.Config, Option[Long]) = {
     val predictors = resolve(raw, cfg.predictors)
     val dependents = resolve(raw, cfg.dependents)
     var covariates = resolve(raw, cfg.covariates)
@@ -187,47 +189,50 @@ object Pipeline {
     // n_observations) and make rank tie-breaks nondeterministic —
     // fail fast instead. One small aggregate, only when orderCol is
     // actually used.
-    val usesOrder = cfg.rint ||
-      Seq("forward", "backward").contains(cfg.missingCovariateValues)
-    if (usesOrder && cfg.orderCol.nonEmpty) {
+    val strategy = cfg.missingCovariateValues
+    if (cfg.rint || Seq("forward", "backward").contains(strategy)) {
       val r = df.agg(count(lit(1)).as("n"), countDistinct(column(cfg.orderCol)).as("nd")).head()
       require(r.getAs[Long]("n") == r.getAs[Long]("nd"),
         s"--order-col '${cfg.orderCol}' must be unique and non-null: " +
           s"${r.getAs[Long]("n")} rows but ${r.getAs[Long]("nd")} distinct non-null values.")
     }
 
-    // missing covariates (preprocessing.py:7-40)
-    if (covariates.nonEmpty) cfg.missingCovariateValues match {
-      case "fail" =>
-        val aggCols = count(lit(1)).as("__rows") +:
-          covariates.map(c => sum(column(c).isNull.cast("long")).as(c))
-        val nulls = df.agg(aggCols.head, aggCols.tail: _*).head()
-        val rows = nulls.getAs[Long]("__rows")
-        covariates.foreach { c =>
-          val n = nulls.getAs[Long](c)
-          // all-missing first, like preprocessing.py:12-16
-          require(n < rows || rows == 0, s"All values are missing in covariate column '$c'.")
-          require(n == 0, s"Missing values found in covariate column '$c': $n missing values.")
-        }
-      case "drop" => df = df.na.drop(covariates.map(Preprocess.quoted))
+    // missing covariates (preprocessing.py:7-40); a mean/min/max fill
+    // and the fail check read the profile below
+    if (covariates.nonEmpty) df = strategy match {
+      case "fail" | "mean" | "min" | "max" => df
       case dir @ ("forward" | "backward") =>
-        df = Preprocess.fillOrdered(df, covariates, dir == "forward", cfg.orderCol)
-      case s => df = Preprocess.fillNulls(df, covariates, s)
+        Preprocess.fillOrdered(df, covariates, dir == "forward", cfg.orderCol)
+      case s => Preprocess.fillNulls(df, covariates, s)
     }
 
-    // global constant-covariate drop (preprocessing.py:65-79)
-    if (covariates.nonEmpty) {
-      df = Preprocess.dropConstant(df, covariates)
-      covariates = covariates.filter(df.columns.contains)
+    // one aggregate answers the fail check, the fill values, the
+    // constant-covariate drop (preprocessing.py:65-79) and the route's
+    // row count. A mean/min/max fill is profiled before it runs: its
+    // value comes from the same row. No covariates: only a binary
+    // model's route needs the row count, and --distributed needs none.
+    val rows = Option.when(covariates.nonEmpty || cfg.model != "linear" && !cfg.distributed) {
+      val p = Preprocess.profile(df, covariates, strategy)
+      // all-missing first, like preprocessing.py:12-16
+      if (strategy == "fail") for ((c, n) <- p.nulls) {
+        require(n < p.rows || p.rows == 0, s"All values are missing in covariate column '$c'.")
+        require(n == 0, s"Missing values found in covariate column '$c': $n missing values.")
+      }
+      df = Preprocess.fill(df, p).drop(p.constant: _*)
+      covariates = covariates.filterNot(p.constant.contains)
+      p.rows
     }
 
-    // one-hot categoricals, first level dropped (preprocessing.py:82-108)
-    if (categoricals.nonEmpty) {
-      val beforeCols = df.columns.toSet
-      df = Preprocess.oneHot(df, categoricals)
-      val newCols = df.columns.filterNot(beforeCols.contains)
-      covariates = covariates.filterNot(categoricals.contains) ++ newCols
-    }
+    // one-hot the categoricals that survived the drop, first level
+    // dropped (preprocessing.py:82-108); one with two levels or fewer
+    // stays a covariate as it is. The dummies are the only columns
+    // outside `used`.
+    df = Preprocess.oneHot(df, categoricals.filter(covariates.contains))
+    covariates = covariates.filter(df.columns.contains) ++ df.columns.filterNot(used.contains)
+    // the fitters read covariates as numbers: a string left after the
+    // encoding is a config error here, not a cast failure in the fit
+    Preprocess.requireNumeric(df, covariates)(c => s"Covariate column '$c' holds strings; one-hot " +
+      "encodes only categoricals with more than two levels, so encode it as numbers.")
 
     // dependent transforms (README-roadmap: log / RINT), pre-melt
     if (cfg.logt) df = Preprocess.logTransform(df, dependents)
@@ -244,7 +249,7 @@ object Pipeline {
     }
 
     (df, Association.Config(predictors, dependents, covariates,
-      model = cfg.model, minCaseCount = cfg.minCaseCount))
+      model = cfg.model, minCaseCount = cfg.minCaseCount), rows)
   }
 
   /** Bonferroni, PheCode/custom annotate, sort, write. */

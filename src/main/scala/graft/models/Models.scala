@@ -103,7 +103,7 @@ object Models {
     * weighted column w·x_a is hoisted into the caller-provided `wx`
     * scratch once per a, and the b-loop is 4-way register-blocked —
     * one wx load feeds four FMAs against four b-columns. The r21
-    * inner loop ran 3 loads per FMA and the ProfFirthKernel A/B
+    * inner loop ran 3 loads per FMA and an in-JVM interleaved A/B
     * showed it LOAD-bound (halving the multiplies alone bought only
     * 1.09x); blocking cuts loads to ~5 per 4 FMAs and measured 1.56x
     * on the whole fit at the k=22 MAS shape (1.08x at k=7), with
@@ -263,10 +263,10 @@ object Models {
       // load/store, then resid_i += x_a(i)·tacc_i. Same q_i up to FP
       // summation order — the declared Firth fits converge to
       // tol ≤ 1e-11 of the same fixed point, far below the 4-dp
-      // output rounding (oracle-verified; ProfFirthKernel measured
-      // old-vs-blocked |dBeta| ≤ 1e-16) — and the pass goes from 3
-      // memory ops per FMA to ~6 per 4 (the same load-bound analysis
-      // as xtwx).
+      // output rounding (oracle-verified; an in-JVM interleaved A/B
+      // measured old-vs-blocked |dBeta| ≤ 1e-16) — and the pass goes
+      // from 3 memory ops per FMA to ~6 per 4 (the same load-bound
+      // analysis as xtwx).
       java.util.Arrays.fill(resid, 0, n, 0.0)
       var qa = 0
       while (qa < k) {

@@ -188,15 +188,15 @@ object Association {
     * relation of pair rows, one per grid pair: linear through the
     * chunk co-moments ([[linearChunks]]), firth/logistic through the
     * gram fitters when the frame has more than 20,000 rows
-    * ([[routesToGram]]), else in column blocks. Every pair is fitted
-    * once, inside this call. */
+    * ([[routesToGram]], one count of the frame), else in column
+    * blocks. Every pair is fitted once, inside this call. */
   def assoc(df: DataFrame, cfg: Config): DataFrame = assoc(df, cfg, GroupRowsMax)
 
   /** [[assoc]] with the route's threshold given, so a spec can force
     * either path. */
   private[operators] def assoc(df: DataFrame, cfg: Config, groupRowsMax: Long): DataFrame =
     if (cfg.model == "linear") linearChunks(df, cfg)
-    else binaryWide(df, cfg, routesToGram(df, cfg, groupRowsMax))
+    else binaryWide(df, cfg, routesToGram(df.count(), cfg, groupRowsMax))
 
   // ------------------------------------------------------ column chunks
 
@@ -448,18 +448,18 @@ object Association {
     * the gram fitters ([[routesToGram]]). */
   private val GroupRowsMax = 20000L
 
-  /** Should [[assoc]] fit this wide frame's binary pairs with the gram
-    * fitters? Yes when the frame has more than 20,000 rows; never for
-    * an empty grid. One count of the frame, no expression over the
-    * dependents. The row count bounds every pair's cohort from above,
-    * so this routes at least every frame whose average pair cohort
-    * exceeds the threshold, and exactly those when no pair loses a row
-    * to nulls. */
-  def routesToGram(df: DataFrame, cfg: Config): Boolean =
-    routesToGram(df, cfg, GroupRowsMax)
+  /** Should a wide frame of `rows` rows have its binary pairs fitted by
+    * the gram fitters? Yes when it has more than 20,000 rows; never for
+    * an empty grid, which leaves `rows` unread. The row count bounds
+    * every pair's cohort from above, so this routes at least every
+    * frame whose average pair cohort exceeds the threshold, and exactly
+    * those when no pair loses a row to nulls. `Pipeline.run` passes the
+    * row count its preprocessing profile read; [[assoc]] counts. */
+  def routesToGram(rows: => Long, cfg: Config): Boolean =
+    routesToGram(rows, cfg, GroupRowsMax)
 
-  private[operators] def routesToGram(df: DataFrame, cfg: Config, groupRowsMax: Long): Boolean =
-    cfg.predictors.nonEmpty && cfg.dependents.nonEmpty && df.count() > groupRowsMax
+  private[operators] def routesToGram(rows: => Long, cfg: Config, groupRowsMax: Long): Boolean =
+    cfg.predictors.nonEmpty && cfg.dependents.nonEmpty && rows > groupRowsMax
 
   /** Firth/logistic over the wide frame: with `gram`, through
     * [[firthGram]] / [[logisticGram]]; otherwise in column blocks
@@ -1106,19 +1106,27 @@ object Association {
   }
 
   /**
-   * Poisson log-linear fit for one predictor + intercept:
-   * y ~ Poisson(exp(α + βx)), Newton-Raphson on the 2-parameter
-   * score, Wald se from the inverse information. The count-outcome
-   * model family (event counts, episode counts) that the
-   * logistic/linear pair doesn't cover. Allocation-light flat-array
-   * kernel in the IRLS style of the binary fitters; on a saturated
-   * binary design the MLE is the closed-form rate ratio
-   * β = ln(ȳ₁/ȳ₀) with se = √(1/Σy₁ + 1/Σy₀) — which is what the
-   * DuckDB oracle replays.
+   * The count models' fit for one predictor + intercept: Fisher scoring
+   * on the 2-parameter score Σ(1, x)(y − μ)w with information
+   * Σ(1, x)(1, x)'μw, where μᵢ = Eᵢ·exp(α + βxᵢ) and w = 1/(1 + μ/θ).
+   * θ = ∞ is the Poisson model (w exactly 1.0), finite θ the NB2
+   * negative binomial with fixed dispersion (variance μ + μ²/θ: the
+   * overdispersed counts a Poisson fit understates se for), and a unit
+   * exposure E the plain count model; a non-unit E enters the linear
+   * predictor as ln E with coefficient fixed at 1, so β is the log
+   * incidence rate ratio. Wald se from the inverse information.
+   * Allocation-light flat-array kernel in the IRLS style of the binary
+   * fitters. On a saturated binary design the MLE is closed-form — the
+   * score zeroes at the exposure-weighted class rates whatever θ, so
+   * β = ln((Σy₁/ΣE₁)/(Σy₀/ΣE₀)), with se = √(1/Σy₁ + 1/Σy₀) for
+   * Poisson and √(1/I₀ + 1/I₁), I_g = n_g·μ_g/(1 + μ_g/θ), for NB2 —
+   * which is what the DuckDB oracles replay.
    */
-  private[graft] def poissonFit(x: Array[Double], y: Array[Double],
-      maxIter: Int = 25, tol: Double = 1e-10): (Double, Double, Boolean) = {
-    var a = math.log(math.max(y.sum / y.length, 1e-12))
+  private[graft] def countFit(x: Array[Double], y: Array[Double], exposure: Array[Double],
+      theta: Double, maxIter: Int = 25, tol: Double = 1e-10): (Double, Double, Boolean) = {
+    require(theta > 0, s"countFit: dispersion theta must be positive, got $theta")
+    val poisson = theta == Double.PositiveInfinity
+    var a = math.log(math.max(y.sum / exposure.sum, 1e-12))
     var b = 0.0
     var converged = false
     var it = 0
@@ -1127,10 +1135,12 @@ object Association {
       var i00 = 0.0; var i01 = 0.0; var i11 = 0.0
       var i = 0
       while (i < x.length) {
-        val mu = math.exp(a + b * x(i))
-        val r = y(i) - mu
+        val mu = exposure(i) * math.exp(a + b * x(i))
+        val w = if (poisson) 1.0 else 1.0 / (1.0 + mu / theta)
+        val r = (y(i) - mu) * w
         s0 += r; s1 += r * x(i)
-        i00 += mu; i01 += mu * x(i); i11 += mu * x(i) * x(i)
+        val wmu = mu * w
+        i00 += wmu; i01 += wmu * x(i); i11 += wmu * x(i) * x(i)
         i += 1
       }
       val det = i00 * i11 - i01 * i01
@@ -1146,8 +1156,10 @@ object Association {
     var i00 = 0.0; var i01 = 0.0; var i11 = 0.0
     var i = 0
     while (i < x.length) {
-      val mu = math.exp(a + b * x(i))
-      i00 += mu; i01 += mu * x(i); i11 += mu * x(i) * x(i)
+      val mu = exposure(i) * math.exp(a + b * x(i))
+      // the final information divides where the steps multiply by w
+      val wmu = if (poisson) mu else mu / (1.0 + mu / theta)
+      i00 += wmu; i01 += wmu * x(i); i11 += wmu * x(i) * x(i)
       i += 1
     }
     val det = i00 * i11 - i01 * i01
@@ -1155,21 +1167,52 @@ object Association {
     else (Double.NaN, Double.NaN, false)
   }
 
-  /**
-   * Poisson RATE model with an EXPOSURE OFFSET for one predictor +
-   * intercept: y ~ Poisson(E·exp(α + βx)) — the person-time /
-   * exposure-denominated rate regression (events per unit exposure:
-   * incidence rates over follow-up time, counts per revenue, errors
-   * per request volume) that a plain count model (a15) cannot
-   * express: ln E enters the linear predictor with coefficient
-   * FIXED at 1, so β is the log INCIDENCE RATE RATIO. Same Newton
-   * kernel shape as [[poissonFit]] with μᵢ = Eᵢ·exp(α + βxᵢ). On a
-   * saturated binary design the MLE is closed-form — the score zeroes
-   * at the exposure-weighted class rates, so
-   * β = ln((Σy₁/ΣE₁)/(Σy₀/ΣE₀)), se = √(1/Σy₁ + 1/Σy₀) (the
-   * classic two-rate comparison) — which is what the DuckDB oracle
-   * replays.
-   */
+  /** Per-group count-model fits ([[countFit]]): groups parallelize
+    * across executors via `mapGroups` (the a03/a04 execution shape),
+    * each task holding one group's (x, y, E) arrays. Rows with a null x
+    * or y, a negative y or a non-positive exposure are dropped at the
+    * engine boundary (ln E undefined — the preprocessing contract, same
+    * rule as the null-covariate drop). Degenerate groups (single-class
+    * x, det ≤ 0) serialize beta and se as NULL, matching how SQL
+    * oracles express "no estimate" — a NaN sentinel would hash-diverge
+    * from the oracle's NULL. */
+  private def countGroups(df: DataFrame, xCol: String, yCol: String, exposure: Column,
+      byCol: String, theta: Double): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(byCol).cast("string"), col(xCol).cast("double"),
+        col(yCol).cast("double"), exposure.cast("double").as("__e"))
+      .filter(col(xCol).isNotNull && col(yCol).isNotNull &&
+        col(yCol) >= 0 && col("__e") > 0)
+      .as[(String, Double, Double, Double)]
+      .groupByKey(_._1)
+      .mapGroups { (grp, it) =>
+        val rows = it.toArray
+        val (beta, se, conv) =
+          countFit(rows.map(_._2), rows.map(_._3), rows.map(_._4), theta)
+        (grp, rows.length.toLong,
+          if (beta.isNaN) None else Some(beta),
+          if (se.isNaN) None else Some(se), conv)
+      }
+      .toDF(byCol, "n", "beta", "se", "converged")
+  }
+
+  /** Per-group Poisson association ([[countFit]], θ = ∞, unit exposure). */
+  def poisson(df: DataFrame, xCol: String, yCol: String, byCol: String): DataFrame =
+    countGroups(df, xCol, yCol, lit(1.0), byCol, Double.PositiveInfinity)
+
+  /** Per-stratum offset-Poisson rate fits ([[countFit]], θ = ∞,
+    * exposure `eCol`). */
+  def poissonOffset(df: DataFrame, xCol: String, yCol: String,
+      eCol: String, byCol: String): DataFrame =
+    countGroups(df, xCol, yCol, col(eCol), byCol, Double.PositiveInfinity)
+
+  /** Per-group negative-binomial association with fixed dispersion θ
+    * ([[countFit]], unit exposure). */
+  def negbin(df: DataFrame, xCol: String, yCol: String, byCol: String,
+      theta: Double): DataFrame =
+    countGroups(df, xCol, yCol, lit(1.0), byCol, theta)
+
   /**
    * Two-sided Fisher exact p for a 2×2 table — sum of all
    * hypergeometric masses ≤ p_obs·(1+1e-7) (the R convention's
@@ -1259,172 +1302,6 @@ object Association {
       k += 1
     }
     math.min(1.0, 2.0 * s)
-  }
-
-  private[graft] def poissonOffsetFit(x: Array[Double], y: Array[Double],
-      e: Array[Double], maxIter: Int = 25, tol: Double = 1e-10): (Double, Double, Boolean) = {
-    var a = math.log(math.max(y.sum / e.sum, 1e-12))
-    var b = 0.0
-    var converged = false
-    var it = 0
-    while (it < maxIter && !converged) {
-      var s0 = 0.0; var s1 = 0.0
-      var i00 = 0.0; var i01 = 0.0; var i11 = 0.0
-      var i = 0
-      while (i < x.length) {
-        val mu = e(i) * math.exp(a + b * x(i))
-        val r = y(i) - mu
-        s0 += r; s1 += r * x(i)
-        i00 += mu; i01 += mu * x(i); i11 += mu * x(i) * x(i)
-        i += 1
-      }
-      val det = i00 * i11 - i01 * i01
-      if (det <= 0) { it = maxIter }
-      else {
-        val da = (i11 * s0 - i01 * s1) / det
-        val db = (i00 * s1 - i01 * s0) / det
-        a += da; b += db
-        converged = math.abs(da) < tol && math.abs(db) < tol
-      }
-      it += 1
-    }
-    var i00 = 0.0; var i01 = 0.0; var i11 = 0.0
-    var i = 0
-    while (i < x.length) {
-      val mu = e(i) * math.exp(a + b * x(i))
-      i00 += mu; i01 += mu * x(i); i11 += mu * x(i) * x(i)
-      i += 1
-    }
-    val det = i00 * i11 - i01 * i01
-    if (det > 0) (b, math.sqrt(i00 / det), converged)
-    else (Double.NaN, Double.NaN, false)
-  }
-
-  /** Per-stratum offset-Poisson rate fits ([[poissonOffsetFit]]);
-    * rows with non-positive exposure are dropped at the engine
-    * boundary (ln E undefined — the preprocessing contract, same
-    * rule as the null-covariate drop). */
-  def poissonOffset(df: DataFrame, xCol: String, yCol: String,
-      eCol: String, byCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(byCol).cast("string"), col(xCol).cast("double"),
-        col(yCol).cast("double"), col(eCol).cast("double"))
-      .filter(col(xCol).isNotNull && col(yCol).isNotNull &&
-        col(yCol) >= 0 && col(eCol) > 0)
-      .as[(String, Double, Double, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (grp, it) =>
-        val rows = it.toArray
-        val (beta, se, conv) =
-          poissonOffsetFit(rows.map(_._2), rows.map(_._3), rows.map(_._4))
-        (grp, rows.length.toLong,
-          if (beta.isNaN) None else Some(beta),
-          if (se.isNaN) None else Some(se), conv)
-      }
-      .toDF(byCol, "n", "beta", "se", "converged")
-  }
-
-  /**
-   * Negative-binomial (NB2, fixed dispersion θ) log-linear fit for
-   * one predictor + intercept: y ~ NB(mean exp(α + βx), var μ+μ²/θ)
-   * — the OVERDISPERSED count family a Poisson fit (a15) understates
-   * se for (real count data is nearly always overdispersed: episode
-   * counts, utilization counts). Fisher scoring on the fixed-θ
-   * score Σx(y−μ)/(1+μ/θ) with information Σxx'μ/(1+μ/θ); same
-   * allocation-light flat-array kernel shape as `poissonFit`. On a
-   * saturated binary design the score zeroes at the group means
-   * regardless of θ (the per-group weight is constant), so the MLE
-   * is the same closed-form rate ratio β = ln(ȳ₁/ȳ₀) as Poisson
-   * while the se widens to √(1/I₀ + 1/I₁) with
-   * I_g = n_g·μ_g/(1+μ_g/θ) — which is what the DuckDB oracle
-   * replays.
-   */
-  private[graft] def negbinFit(x: Array[Double], y: Array[Double], theta: Double,
-      maxIter: Int = 25, tol: Double = 1e-10): (Double, Double, Boolean) = {
-    require(theta > 0, s"negbinFit: dispersion theta must be positive, got $theta")
-    var a = math.log(math.max(y.sum / y.length, 1e-12))
-    var b = 0.0
-    var converged = false
-    var it = 0
-    while (it < maxIter && !converged) {
-      var s0 = 0.0; var s1 = 0.0
-      var i00 = 0.0; var i01 = 0.0; var i11 = 0.0
-      var i = 0
-      while (i < x.length) {
-        val mu = math.exp(a + b * x(i))
-        val w = 1.0 / (1.0 + mu / theta)
-        val r = (y(i) - mu) * w
-        s0 += r; s1 += r * x(i)
-        val wmu = mu * w
-        i00 += wmu; i01 += wmu * x(i); i11 += wmu * x(i) * x(i)
-        i += 1
-      }
-      val det = i00 * i11 - i01 * i01
-      if (det <= 0) { it = maxIter }
-      else {
-        val da = (i11 * s0 - i01 * s1) / det
-        val db = (i00 * s1 - i01 * s0) / det
-        a += da; b += db
-        converged = math.abs(da) < tol && math.abs(db) < tol
-      }
-      it += 1
-    }
-    var i00 = 0.0; var i01 = 0.0; var i11 = 0.0
-    var i = 0
-    while (i < x.length) {
-      val mu = math.exp(a + b * x(i))
-      val wmu = mu / (1.0 + mu / theta)
-      i00 += wmu; i01 += wmu * x(i); i11 += wmu * x(i) * x(i)
-      i += 1
-    }
-    val det = i00 * i11 - i01 * i01
-    if (det > 0) (b, math.sqrt(i00 / det), converged)
-    else (Double.NaN, Double.NaN, false)
-  }
-
-  /** Per-group negative-binomial association (fixed dispersion):
-    * the a15 execution shape — groups parallelize via `mapGroups`,
-    * one group's (x, y) arrays per task. */
-  def negbin(df: DataFrame, xCol: String, yCol: String, byCol: String,
-      theta: Double): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(byCol).cast("string"), col(xCol).cast("double"), col(yCol).cast("double"))
-      .filter(col(xCol).isNotNull && col(yCol).isNotNull && col(yCol) >= 0)
-      .as[(String, Double, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (grp, it) =>
-        val rows = it.toArray
-        val (beta, se, conv) = negbinFit(rows.map(_._2), rows.map(_._3), theta)
-        (grp, rows.length.toLong,
-          if (beta.isNaN) None else Some(beta),
-          if (se.isNaN) None else Some(se), conv)
-      }
-      .toDF(byCol, "n", "beta", "se", "converged")
-  }
-
-  /** Per-group Poisson association: groups parallelize across
-    * executors via `mapGroups` (the a03/a04 execution shape); each
-    * task holds one group's (x, y) arrays. */
-  def poisson(df: DataFrame, xCol: String, yCol: String, byCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(byCol).cast("string"), col(xCol).cast("double"), col(yCol).cast("double"))
-      .filter(col(xCol).isNotNull && col(yCol).isNotNull && col(yCol) >= 0)
-      .as[(String, Double, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (grp, it) =>
-        val rows = it.toArray
-        val (beta, se, conv) = poissonFit(rows.map(_._2), rows.map(_._3))
-        // degenerate groups (single-class x, det<=0) serialize as
-        // NULL, matching how SQL oracles express "no estimate" — a
-        // NaN sentinel would hash-diverge from the oracle's NULL
-        (grp, rows.length.toLong,
-          if (beta.isNaN) None else Some(beta),
-          if (se.isNaN) None else Some(se), conv)
-      }
-      .toDF(byCol, "n", "beta", "se", "converged")
   }
 
   /**

@@ -74,31 +74,70 @@ object Preprocess {
 
   // ------------------------------------------------------- p03/p04 fills
 
+  /** What [[profile]] reads of a frame in one aggregate: its row count;
+    * each column's null count, in column order; the columns with at
+    * most one distinct non-null value (after the fill, when the
+    * strategy fills with a statistic); and each column's fill value as
+    * a typed literal. */
+  final case class Profile(rows: Long, nulls: Seq[(String, Long)], constant: Seq[String],
+      fills: Map[String, Column])
+
+  /** The statistic of each fill strategy that needs one. */
+  private val fillStats = Map[String, Column => Column](("mean", avg), ("min", min), ("max", max))
+
+  /** Throws `error(c)` for the first of `cols` that holds strings. */
+  def requireNumeric(df: DataFrame, cols: Seq[String])(error: String => String): Unit =
+    cols.find(c => df.schema(c).dataType == StringType).foreach(c =>
+      throw new IllegalArgumentException(error(c)))
+
+  /**
+   * One aggregate over `cols` (none: the row count alone) that answers
+   * every question preprocessing asks of them under the missing-value
+   * `strategy`. A column is constant when its max is null or its min
+   * equals its max — the columns [[constantReport]] marks dropped,
+   * since Spark orders NaN above every value and equates NaN with NaN
+   * and 0.0 with -0.0, as its distinct count does. For a mean, min or
+   * max fill the aggregate also computes each column's fill value, and
+   * the constant flag describes the filled column: filling a constant
+   * column keeps it constant only when the fill equals its value, which
+   * a mean of several copies of 0.1 does not. Such a fill over a string
+   * column is refused before the aggregate runs: it would fail mid-job
+   * on the first value that does not parse as a number.
+   */
+  def profile(df: DataFrame, cols: Seq[String], strategy: String = "fail"): Profile = {
+    val stat = fillStats.get(strategy)
+    if (stat.isDefined) requireNumeric(df, cols)(c => s"Cannot fill nulls in string column '$c' " +
+      s"with its $strategy; use drop, fail or a numeric encoding.")
+    val rows = count(lit(1))
+    // per column: null count, constant flag, fill value (min without a fill)
+    val row = df.agg(rows, cols.map { c =>
+      val v = column(c)
+      val f = stat.fold(min(v))(_(v))
+      val same = max(v).isNull || min(v) === max(v)
+      struct(rows - count(v), same && (count(v) === rows || f <=> min(v)), f)
+    }: _*).head()
+    val per = cols.indices.map(i => cols(i) -> row.getStruct(i + 1))
+    Profile(row.getLong(0), per.map { case (c, r) => c -> r.getLong(0) },
+      per.collect { case (c, r) if r.getBoolean(1) => c },
+      if (stat.isEmpty) Map.empty
+      else per.map { case (c, r) => c -> lit(r.get(2)).cast(r.schema(2).dataType) }.toMap)
+  }
+
+  /** `df` with each of the profile's fill columns coalesced with its
+    * fill literal: one projection, in place. */
+  def fill(df: DataFrame, p: Profile): DataFrame = df.select(df.columns.toIndexedSeq.map(c =>
+    p.fills.get(c).fold(column(c))(f => coalesce(column(c), f).as(c))): _*)
+
   /** Missing-covariate fill (preprocessing.py:7-40): strategy ∈
-    * mean|min|max|zero|one. Statistics come from one aggregate row
-    * cross-joined back (broadcast — one row), so the fill is a pure
-    * projection afterwards. A statistic fill over a string column is
-    * refused up front: it would fail mid-job on the first value that
-    * does not parse as a number. */
+    * drop|mean|min|max|zero|one. A mean/min/max fill reads its
+    * statistics from one [[profile]] and applies them as literals, so
+    * later jobs have nothing to recompute; zero and one fill NaN too,
+    * as `na.fill` does. */
   def fillNulls(df: DataFrame, cols: Seq[String], strategy: String): DataFrame = strategy match {
     case "zero" => df.na.fill(0.0, cols.map(quoted))
     case "one" => df.na.fill(1.0, cols.map(quoted))
     case "drop" => df.na.drop(cols.map(quoted))
-    case s if s == "mean" || s == "min" || s == "max" =>
-      cols.find(c => df.schema(c).dataType == StringType).foreach(c =>
-        throw new IllegalArgumentException(
-          s"Cannot fill nulls in string column '$c' with its $s; use drop, fail or a numeric encoding."))
-      val aggFn: String => Column = s match {
-        case "mean" => c => avg(column(c))
-        case "min" => c => min(column(c))
-        case "max" => c => max(column(c))
-      }
-      val stats = df.agg(aggFn(cols.head).as(s"__f_${cols.head}"),
-        cols.tail.map(c => aggFn(c).as(s"__f_$c")): _*)
-      val filled = df.crossJoin(broadcast(stats))
-      cols.foldLeft(filled)((d, c) =>
-          d.withColumn(c, coalesce(column(c), column(s"__f_$c"))))
-        .drop(cols.map(c => s"__f_$c"): _*)
+    case s if fillStats.contains(s) => fill(df, profile(df, cols, s))
     case other => throw new IllegalArgumentException(s"Unknown fill strategy: $other")
   }
 
@@ -196,16 +235,10 @@ object Preprocess {
       (col("s.n_unique") <= 1).as("dropped")).orderBy("col_name")
   }
 
-  /** Drop the columns `constantReport` marks dropped, from one min/max
-    * aggregate instead of its distinct counts: a column has at most one
-    * distinct non-null value exactly when its max is null or its min
-    * equals its max (Spark orders NaN above every value, equates NaN
-    * with NaN and 0.0 with -0.0, as its distinct count does). */
-  def dropConstant(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val flags = cols.map(c => max(column(c)).isNull || min(column(c)) === max(column(c)))
-    val constant = df.agg(flags.head, flags.tail: _*).head()
-    df.drop(cols.indices.filter(constant.getBoolean).map(cols): _*)
-  }
+  /** Drop the columns `constantReport` marks dropped, from the min/max
+    * flags of one [[profile]] instead of its distinct counts. */
+  def dropConstant(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.drop(profile(df, cols).constant: _*)
 
   // ------------------------------------------------------- p06 one-hot
 

@@ -292,7 +292,8 @@ class AssociationSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val (b2, _, conv2) = {
       val arr = rows2.toArray
-      operators.Association.poissonFit(arr.map(_._2), arr.map(_._3))
+      operators.Association.countFit(arr.map(_._2), arr.map(_._3), Array.fill(arr.length)(1.0),
+        Double.PositiveInfinity)
     }
     assert(conv2)
     // alpha from refitting driver-side: recompute mu and check scores
@@ -1158,7 +1159,7 @@ class AssociationSpec extends AnyFunSuite with BeforeAndAfterAll {
       p1c.getAs[Double]("beta_z2") == p8c.getAs[Double]("beta_z2"))
   }
 
-  test("poissonOffsetFit: unit exposure reduces to poissonFit exactly; scaling invariance; closed form; score zero") {
+  test("countFit: unit exposure, exposure scaling, closed form, zero score") {
     val rng = new scala.util.Random(91)
     val n = 400
     val x = Array.tabulate(n)(i => if (i % 2 == 0) 1.0 else 0.0)
@@ -1170,27 +1171,36 @@ class AssociationSpec extends AnyFunSuite with BeforeAndAfterAll {
       while (u > c && k < 500) { k += 1; p *= mu / k; c += p }
       k.toDouble
     }
-    // e ≡ 1: bit-identical to the plain Poisson kernel
+    def fit(x: Array[Double], e: Array[Double]) =
+      operators.Association.countFit(x, y, e, Double.PositiveInfinity)
+    // e ≡ 1: the plain Poisson rate ratio of the class means, and the
+    // offset entry over a unit exposure column is bit-identical to the
+    // plain Poisson entry
     val ones = Array.fill(n)(1.0)
-    val (b1, s1, c1) = operators.Association.poissonOffsetFit(x, y, ones)
-    val (b2, s2, c2) = operators.Association.poissonFit(x, y)
-    assert(b1 == b2 && s1 == s2 && c1 == c2)
-    // closed form on the saturated binary design
-    val (bf, sf, cf) = operators.Association.poissonOffsetFit(x, y, e)
-    assert(cf)
+    val (b1, s1, c1) = fit(x, ones)
     def cls(v: Double) = x.indices.filter(x(_) == v)
-    val sy1 = cls(1.0).map(y).sum; val se1 = cls(1.0).map(e).sum
-    val sy0 = cls(0.0).map(y).sum; val se0 = cls(0.0).map(e).sum
+    val sy1 = cls(1.0).map(y).sum; val sy0 = cls(0.0).map(y).sum
+    assert(c1 && math.abs(b1 - math.log((sy1 / cls(1.0).size) / (sy0 / cls(0.0).size))) < 1e-8)
+    assert(math.abs(s1 - math.sqrt(1.0 / sy1 + 1.0 / sy0)) < 1e-8)
+    val sess = spark
+    import sess.implicits._
+    val frame = x.indices.map(i => ("g", x(i), y(i), 1.0)).toDF("grp", "x", "y", "e")
+    assert(operators.Association.poissonOffset(frame, "x", "y", "e", "grp").collect().toSeq ==
+      operators.Association.poisson(frame, "x", "y", "grp").collect().toSeq)
+    // closed form on the saturated binary design
+    val (bf, sf, cf) = fit(x, e)
+    assert(cf)
+    val se1 = cls(1.0).map(e).sum; val se0 = cls(0.0).map(e).sum
     assert(math.abs(bf - math.log((sy1 / se1) / (sy0 / se0))) < 1e-8)
     assert(math.abs(sf - math.sqrt(1.0 / sy1 + 1.0 / sy0)) < 1e-8)
     assert(math.abs(bf - 0.6) < 0.3) // recovers the simulated IRR
     // exposure scaling: E → 10E shifts the intercept, not beta/se
-    val (bs, ss, _) = operators.Association.poissonOffsetFit(x, y, e.map(_ * 10))
+    val (bs, ss, _) = fit(x, e.map(_ * 10))
     assert(math.abs(bs - bf) < 1e-8 && math.abs(ss - sf) < 1e-8)
     // continuous x: the independent score Σx(y−E·exp(a+bx)) zeroes at
     // the fit (recover a from the 0-score of the intercept equation)
     val xc = Array.tabulate(n)(i => (i % 5).toDouble / 2.0)
-    val (bc, _, cc) = operators.Association.poissonOffsetFit(xc, y, e)
+    val (bc, _, cc) = fit(xc, e)
     assert(cc)
     // solve intercept at fixed bc by 1-d Newton for the score check
     var a = 0.0

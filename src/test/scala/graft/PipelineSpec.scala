@@ -413,8 +413,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(jobs.forall(_._1.startsWith("graft/")), jobs)
       assert(jobs.forall(_._2 == "caller-group"), jobs)
       val labels = jobs.map(_._1).toSet
-      assert(Set("graft/preprocess", "graft/route", "graft/fit", "graft/write").subsetOf(labels),
-        labels)
+      assert(Set("graft/preprocess", "graft/fit", "graft/write").subsetOf(labels), labels)
       // the fit's tasks run under graft/fit, never again under the write
       val block = run.stages.filter(_._3)
       assert(block.nonEmpty && block.forall(_._1 == "graft/fit"), run.stages)
@@ -480,5 +479,50 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the co-moment merge is the run's only ShuffledRDD
     val merge = run.stages.filter(_._3)
     assert(merge.nonEmpty && merge.forall(_._1 == "graft/fit"), run.stages)
+  }
+
+  test("preprocessing profiles the cohort once: no route job, half the jobs, no fill recomputed") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_profile").toString
+    cohortDf.withColumn("zh", org.apache.spark.sql.functions.expr("if(id % 7 = 0, null, z)"))
+      .write.parquet(s"$dir/cohort.parquet")
+    def jobs(run: Observed, label: String) = run.jobs.count(_._1 == label)
+    // one aggregate for the fail check, the constant drop and the route
+    // count, one for the 3-level categorical's level scan: two jobs each
+    // under adaptive execution
+    val firth = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+      dependents = "d1,d2", covariates = "z,zconst,seg", categoricalCovariates = "seg",
+      model = "firth", minCaseCount = 10, output = s"$dir/out_firth"))
+    assert(jobs(firth, "graft/route") == 0, firth.jobs)
+    assert(jobs(firth, "graft/preprocess") == 4, firth.jobs)
+    // the mean fill is a literal: the fit's plan reads no aggregate
+    val linear = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
+      dependents = "z", covariates = "zh,zconst", missingCovariateValues = "mean",
+      model = "linear", quantitative = true, minCaseCount = 10, output = s"$dir/out_linear"))
+    assert(jobs(linear, "graft/fit") == 1, linear.jobs)
+  }
+
+  test("a constant categorical is dropped before one-hot; a 2-level one stays a covariate") {
+    val site = cohortDf.withColumn("site", org.apache.spark.sql.functions.lit("S1"))
+    def equation(df: org.apache.spark.sql.DataFrame, covariates: String, categoricals: String) =
+      Pipeline.run(df, GraftConfig(input = "", predictors = "x", dependents = "d1",
+        covariates = covariates, categoricalCovariates = categoricals, model = "logistic",
+        minCaseCount = 10)).collect().head.getAs[String]("equation")
+    assert(equation(site, "site,z", "site") == "d1 ~ x + z")
+    assert(equation(cohortDf, "z,sex", "sex") == "d1 ~ x + z + sex")
+    assert(equation(cohortDf, "z,seg", "seg") == "d1 ~ x + z + seg_B + seg_C")
+  }
+
+  test("a string covariate left after one-hot is a config error before any fit job") {
+    val grp = cohortDf.withColumn("grp", org.apache.spark.sql.functions.expr("if(id % 2 = 0, 'M', 'F')"))
+    for ((covariates, categoricals) <- Seq(("z,grp", "grp"), ("grp,z", ""))) {
+      var msg = ""
+      val run = observing {
+        msg = intercept[IllegalArgumentException](Pipeline.run(grp, GraftConfig(input = "",
+          predictors = "x", dependents = "d1", covariates = covariates,
+          categoricalCovariates = categoricals, model = "logistic", minCaseCount = 10))).getMessage
+      }
+      assert(msg.contains("'grp'") && msg.contains("strings"), msg)
+      assert(!run.jobs.exists(_._1 == "graft/fit"), run.jobs)
+    }
   }
 }

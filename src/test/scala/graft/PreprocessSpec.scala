@@ -155,6 +155,75 @@ class PreprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Preprocess.dropConstant(edges, cols).columns.toSeq == cols.filterNot(report))
   }
 
+  test("Pipeline keeps and fills each covariate as the reference fill and constantReport say") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{avg, coalesce, col, lit, max, min}
+    import org.apache.spark.sql.types._
+    val nan = Double.NaN
+    val columns = Seq[(String, DataType, Seq[Any])](
+      ("nan_only", DoubleType, Seq(nan, null, nan, nan, null, nan, nan, nan)),
+      ("nan_value", DoubleType, Seq(nan, 2.5, null, 2.5, nan, null, 2.5, 2.5)),
+      ("zeros", DoubleType, Seq(0.0, -0.0, null, 0.0, -0.0, null, 0.0, 0.0)),
+      ("all_null", DoubleType, Seq.fill(8)(null)),
+      // three copies of 0.1 average to 0.10000000000000002
+      ("one_value", DoubleType, Seq(null, 0.1, 0.1, null, 0.1, null, null, null)),
+      ("two_values", DoubleType, Seq(1.0, null, 2.0, 1.0, null, 2.0, 1.0, 2.0)),
+      ("str", StringType, Seq("a", null, "b", "a", "b", null, "a", "b")))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("x", DoubleType),
+      StructField("d1", DoubleType)) ++ columns.map(c => StructField(c._1, c._2)))
+    val rows = (0 until 8).map(i =>
+      Row.fromSeq(Seq[Any](i.toLong, i * 0.5, (i % 2).toDouble) ++ columns.map(_._3(i))))
+    val raw = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val stats = Map[String, org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+      "mean" -> (c => avg(c)), "min" -> (c => min(c)), "max" -> (c => max(c)))
+
+    /** The strategy's fill of `c` done independently of the pipeline,
+      * or the error the pipeline must raise instead. */
+    def reference(df: org.apache.spark.sql.DataFrame, c: String, s: String) = {
+      val string = df.schema(c).dataType == StringType
+      val nulls = df.filter(col(c).isNull).count()
+      s match {
+        case "fail" if nulls > 0 => Left("covariate column '" + c + "'")
+        case "fail" => Right(df)
+        case "drop" => Right(df.na.drop(Seq(c)))
+        case "zero" => Right(df.na.fill(0.0, Seq(c)))
+        case "one" => Right(df.na.fill(1.0, Seq(c)))
+        case st if stats.contains(st) && string => Left(s"string column '$c' with its $st")
+        case st if stats.contains(st) =>
+          val v = df.agg(stats(st)(col(c))).head().get(0)
+          Right(df.withColumn(c, coalesce(col(c), lit(v))))
+        case dir => Right(Preprocess.fillDirectional(df, Seq(c), dir == "forward", Nil, Seq("id")))
+      }
+    }
+    def values(df: org.apache.spark.sql.DataFrame, c: String): Seq[String] =
+      df.orderBy("id").select(col("id"), col(c)).collect().toSeq.map(_.toSeq.mkString(":"))
+    for (s <- Seq("fail", "drop", "zero", "one", "mean", "min", "max", "forward", "backward");
+        (c, _, _) <- columns;
+        df <- if (s == "fail") Seq(raw, raw.na.drop(Seq(c))) else Seq(raw)) {
+      val tag = s"$s $c ${df.count()} rows"
+      val cfg = GraftConfig(input = "", predictors = "x", dependents = "d1", covariates = c,
+        missingCovariateValues = s, orderCol = "id")
+      val expected = reference(df, c, s).map { filled =>
+        val kept = Preprocess.constantReport(filled, Seq(c)).head().getAs[Long]("n_unique") > 1
+        (filled, kept)
+      }
+      expected match {
+        case Right((_, true)) if df.schema(c).dataType == StringType =>
+          val msg = intercept[IllegalArgumentException](Pipeline.preprocess(df, cfg)).getMessage
+          assert(msg.contains(s"'$c' holds strings"), s"$tag: $msg")
+        case Right((filled, kept)) =>
+          val (out, assocCfg, rowCount) = Pipeline.preprocess(df, cfg)
+          assert(assocCfg.covariates.contains(c) == kept, tag)
+          assert(rowCount.contains(filled.count()), tag)
+          if (kept) assert(values(out, c) == values(filled, c), tag)
+          else assert(values(out, "id") == values(filled, "id"), tag)
+        case Left(error) =>
+          val msg = intercept[IllegalArgumentException](Pipeline.preprocess(df, cfg)).getMessage
+          assert(msg.contains(error), s"$tag: $msg")
+      }
+    }
+  }
+
   test("oneHot leaves <=2-level columns untouched") {
     val sess = spark
     import sess.implicits._

@@ -80,7 +80,7 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (model <- Seq("firth", "logistic"); minCase <- Seq(0, 5)) {
       val cfg = Association.Config(Seq("x", "x2"), parityDeps, Seq("z1", "sex"),
         model = model, minCaseCount = minCase)
-      assert(!Association.routesToGram(df, cfg))
+      assert(!Association.routesToGram(df.count(), cfg))
       val wide = byPair(Association.assoc(df, cfg))
       val long = byPair(Association.binary(Association.melt(df, cfg), cfg))
       assert(wide.keySet == long.keySet && wide.size == 2 * parityDeps.size)
@@ -226,12 +226,13 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(assocAt(100, wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")),
       "assoc did not engage the gram fitter (constant covariate fit anyway)")
     // the boundary: 500 rows stay in-task at a threshold of 500 and
-    // route at 499; an empty grid never routes
-    assert(!Association.routesToGram(wideC, cfgC, 500))
-    assert(Association.routesToGram(wideC, cfgC, 499))
+    // route at 499; an empty grid never routes, nor reads the count
+    assert(!Association.routesToGram(wideC.count(), cfgC, 500))
+    assert(Association.routesToGram(wideC.count(), cfgC, 499))
     assert(assocAt(500, wideC, cfgC).values.forall(_.getAs[Boolean]("converged")))
     assert(assocAt(499, wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")))
-    assert(!Association.routesToGram(wideC, cfgC.copy(dependents = Nil), 0))
+    assert(!Association.routesToGram(fail("an empty grid read the row count"),
+      cfgC.copy(dependents = Nil), 0))
   }
 
   test("linear output is 4-dp identical at input partitions 1, 7 and 32") {
