@@ -29,7 +29,8 @@ object Main {
   private val boolFlags = Set(
     "dry-run", "quantitative", "rint", "logt", "phewas", "flipwas",
     "male-only", "female-only", "verbose", "quiet",
-    // graft extension (not in the reference CLI): distributed IRLS
+    // graft extension (not in the reference CLI): fit binary pairs with
+    // the gram IRLS, for a cohort whose column block does not fit one task
     "distributed")
 
   /** Short aliases, exactly the reference's (cli.py). */
@@ -104,14 +105,19 @@ object Main {
     val spark =
       if (sys.props.contains("spark.master")) SparkSession.builder().appName("graft").getOrCreate()
       else GraftSession.get()
-    val raw = graft.sources.Sources.read(spark, cfg.input, cfg.nullValues)
-    if (cfg.dryRun) {
-      // summary-and-exit, like the reference's --dry-run (cli.py:11-15)
-      println(Pipeline.summary(raw, cfg))
-    } else {
-      val results = Pipeline.run(raw, cfg)
-      if (cfg.output.isEmpty) results.show(50, truncate = false)
-    }
+    run(spark, cfg)
     spark.stop()
   }
+
+  /** One CLI invocation on `spark`: the pipeline, its results shown
+    * when there is no output prefix, or on `--dry-run` the
+    * configuration summary of the input (read under `graft/read`). */
+  private[graft] def run(spark: SparkSession, cfg: GraftConfig): Unit =
+    if (cfg.dryRun) {
+      // summary-and-exit, like the reference's --dry-run (cli.py:11-15)
+      println(Pipeline.summary(Pipeline.read(spark, cfg), cfg))
+    } else {
+      val results = Pipeline.run(spark, cfg)
+      if (cfg.output.isEmpty) results.show(50, truncate = false)
+    }
 }

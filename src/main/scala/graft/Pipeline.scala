@@ -28,12 +28,13 @@ import graft.sources.Sources
  *
  * Every job a run triggers carries its stage as the job description:
  * `graft/read`, `graft/preprocess`, `graft/fit`, `graft/postprocess` or
- * `graft/write`. Preprocessing asks the cohort its column statistics
- * in one aggregate (`Preprocess.profile`), whose row count also routes
- * the binary fit. Every model fits every pair
- * once, in `graft/fit` jobs, into a local relation of pair rows that
- * postprocessing and the write read; so a run without `output` has
- * fitted by the time it returns.
+ * `graft/write`. Preprocessing asks the cohort its covariate
+ * statistics in one aggregate (`Preprocess.profile`). Every model fits
+ * every pair once, in `graft/fit` jobs, into a local relation of pair
+ * rows that postprocessing and the write read; so a run without
+ * `output` has fitted by the time it returns. The binary models fit in
+ * column blocks at every cohort size, or with the gram IRLS when
+ * `distributed` asks for it.
  */
 final case class GraftConfig(
     input: String,                        // parquet/csv/tsv/txt path
@@ -59,10 +60,10 @@ final case class GraftConfig(
     output: String = "",                  // output PREFIX; empty = don't write
     outputType: String = "csv",           // reference default (cli.py:61-68)
     dryRun: Boolean = false,
-    distributed: Boolean = false,         // graft extension: route binary fits
-                                          // through the Gram IRLS paths (cohorts
-                                          // too large for one task); linear is
-                                          // always distributed (sufficient stats)
+    distributed: Boolean = false,         // graft extension: fit binary pairs with
+                                          // the gram IRLS, for a cohort whose
+                                          // column block does not fit one task;
+                                          // linear is always distributed
     annotateDefs: Option[DataFrame] = None, // direct defs override (tests/composition)
     annotateOn: String = "dependent",
     annotateKey: String = "phecode")
@@ -140,30 +141,28 @@ object Pipeline {
     try body finally sc.setJobDescription(outer)
   }
 
-  def run(spark: SparkSession, cfg: GraftConfig): DataFrame =
-    run(stage(spark, "read")(Sources.read(spark, cfg.input, cfg.nullValues)), cfg)
+  def run(spark: SparkSession, cfg: GraftConfig): DataFrame = run(read(spark, cfg), cfg)
+
+  /** The configured input, read under `graft/read`. */
+  private[graft] def read(spark: SparkSession, cfg: GraftConfig): DataFrame =
+    stage(spark, "read")(Sources.read(spark, cfg.input, cfg.nullValues))
 
   /** Run on an already-loaded frame (testing / composition). */
   def run(raw: DataFrame, cfg: GraftConfig): DataFrame = {
     val spark = raw.sparkSession
-    val (df, assocCfg, rows) = stage(spark, "preprocess")(preprocess(raw, cfg))
+    val (df, assocCfg) = stage(spark, "preprocess")(preprocess(raw, cfg))
     val results = stage(spark, "fit") {
       if (cfg.model == "linear") Association.assoc(df, assocCfg)
-      // --distributed forces the Gram IRLS paths (one aggregation scan
-      // per Newton step instead of one task per pair) — same viability
-      // gates, same output schema, spec-pinned equal to the in-task
-      // fitters; otherwise the profiled row count picks
-      else Association.binaryWide(df, assocCfg,
-        cfg.distributed || rows.exists(Association.routesToGram(_, assocCfg)))
+      // --distributed asks for the gram IRLS (one scan per Newton step
+      // instead of one task per block): the same rows, spec-pinned
+      else Association.binaryWide(df, assocCfg, cfg.distributed)
     }
     stage(spark, "postprocess")(postprocess(raw, results, cfg))
   }
 
-  /** Column selection through the dependent transforms: the frame, the
-    * association config the fit runs on and, when the profile ran, the
-    * frame's row count. */
-  private[graft] def preprocess(raw: DataFrame,
-      cfg: GraftConfig): (DataFrame, Association.Config, Option[Long]) = {
+  /** Column selection through the dependent transforms: the frame and
+    * the association config the fit runs on. */
+  private[graft] def preprocess(raw: DataFrame, cfg: GraftConfig): (DataFrame, Association.Config) = {
     val predictors = resolve(raw, cfg.predictors)
     val dependents = resolve(raw, cfg.dependents)
     var covariates = resolve(raw, cfg.covariates)
@@ -206,21 +205,18 @@ object Pipeline {
       case s => Preprocess.fillNulls(df, covariates, s)
     }
 
-    // one aggregate answers the fail check, the fill values, the
-    // constant-covariate drop (preprocessing.py:65-79) and the route's
-    // row count. A mean/min/max fill is profiled before it runs: its
-    // value comes from the same row. No covariates: only a binary
-    // model's route needs the row count, and --distributed needs none.
-    val rows = Option.when(covariates.nonEmpty || cfg.model != "linear" && !cfg.distributed) {
+    // one aggregate answers the fail check, the fill values and the
+    // constant-covariate drop (preprocessing.py:65-79). A mean/min/max
+    // fill is profiled before it runs: its value comes from the same row
+    if (covariates.nonEmpty) {
       val p = Preprocess.profile(df, covariates, strategy)
       // all-missing first, like preprocessing.py:12-16
       if (strategy == "fail") for ((c, n) <- p.nulls) {
         require(n < p.rows || p.rows == 0, s"All values are missing in covariate column '$c'.")
         require(n == 0, s"Missing values found in covariate column '$c': $n missing values.")
       }
-      df = Preprocess.fill(df, p).drop(p.constant: _*)
+      df = Preprocess.fill(df, p.fills).drop(p.constant: _*)
       covariates = covariates.filterNot(p.constant.contains)
-      p.rows
     }
 
     // one-hot the categoricals that survived the drop, first level
@@ -249,7 +245,7 @@ object Pipeline {
     }
 
     (df, Association.Config(predictors, dependents, covariates,
-      model = cfg.model, minCaseCount = cfg.minCaseCount), rows)
+      model = cfg.model, minCaseCount = cfg.minCaseCount))
   }
 
   /** Bonferroni, PheCode/custom annotate, sort, write. */

@@ -44,14 +44,17 @@ import graft.operators.Preprocess.column
  *    shuffle carries O((k+2)²) doubles per pair and partition, never
  *    rows. Constant-covariate detection also happens on the co-moments
  *    (zero centered variance).
- *  - For cohorts too large for one task, the binary models route to
- *    the gram IRLS ([[gramFit]]): one shuffle-free scan of the
- *    persisted chunks per Newton step, per-pair moments summed in task
- *    buffers, the small solves on the driver.
- *  - Both binary paths share every per-fit step: the viability gates
- *    and failure rows here, and from `Models` the Newton solve with its
- *    step cap, the Firth final solve and the Wald/LRT results. Only the
- *    row kernels differ: the in-task hat-diagonal pass costs fewer
+ *  - On request (`--distributed`, [[firthGram]], [[logisticGram]]) the
+ *    binary models fit with the gram IRLS ([[gramFit]]) instead: one
+ *    shuffle-free scan of the persisted chunks per Newton step,
+ *    per-pair moments summed in task buffers, the small solves on the
+ *    driver. It serves a cohort whose column block does not fit one
+ *    task; it is never picked by cohort size.
+ *  - Both binary paths apply one per-pair rule: the viability gates,
+ *    the drop of covariates constant within the pair and the failure
+ *    rows here, and from `Models` the Newton solve with its step cap,
+ *    the Firth final solve and the Wald/LRT results. Only the row
+ *    kernels differ: the in-task hat-diagonal pass costs fewer
  *    multiply-adds per row than the gram scan's third-order tensor
  *    (84 against 175 at 7 columns), and the gram scan needs the tensor
  *    to take a step from one pass over the rows.
@@ -186,17 +189,11 @@ object Association {
 
   /** Run the configured model over the wide frame and return a local
     * relation of pair rows, one per grid pair: linear through the
-    * chunk co-moments ([[linearChunks]]), firth/logistic through the
-    * gram fitters when the frame has more than 20,000 rows
-    * ([[routesToGram]], one count of the frame), else in column
-    * blocks. Every pair is fitted once, inside this call. */
-  def assoc(df: DataFrame, cfg: Config): DataFrame = assoc(df, cfg, GroupRowsMax)
-
-  /** [[assoc]] with the route's threshold given, so a spec can force
-    * either path. */
-  private[operators] def assoc(df: DataFrame, cfg: Config, groupRowsMax: Long): DataFrame =
-    if (cfg.model == "linear") linearChunks(df, cfg)
-    else binaryWide(df, cfg, routesToGram(df.count(), cfg, groupRowsMax))
+    * chunk co-moments ([[linearChunks]]), firth/logistic in column
+    * blocks ([[binaryBlocks]]) at every cohort size. Every pair is
+    * fitted once, inside this call. */
+  def assoc(df: DataFrame, cfg: Config): DataFrame =
+    if (cfg.model == "linear") linearChunks(df, cfg) else binaryWide(df, cfg, gram = false)
 
   // ------------------------------------------------------ column chunks
 
@@ -444,28 +441,16 @@ object Association {
 
   // ------------------------------------------------------ logistic/firth
 
-  /** The wide frame's row count above which the binary models route to
-    * the gram fitters ([[routesToGram]]). */
-  private val GroupRowsMax = 20000L
-
-  /** Should a wide frame of `rows` rows have its binary pairs fitted by
-    * the gram fitters? Yes when it has more than 20,000 rows; never for
-    * an empty grid, which leaves `rows` unread. The row count bounds
-    * every pair's cohort from above, so this routes at least every
-    * frame whose average pair cohort exceeds the threshold, and exactly
-    * those when no pair loses a row to nulls. `Pipeline.run` passes the
-    * row count its preprocessing profile read; [[assoc]] counts. */
-  def routesToGram(rows: => Long, cfg: Config): Boolean =
-    routesToGram(rows, cfg, GroupRowsMax)
-
-  private[operators] def routesToGram(rows: => Long, cfg: Config, groupRowsMax: Long): Boolean =
-    cfg.predictors.nonEmpty && cfg.dependents.nonEmpty && rows > groupRowsMax
-
-  /** Firth/logistic over the wide frame: with `gram`, through
-    * [[firthGram]] / [[logisticGram]]; otherwise in column blocks
+  /** Firth/logistic over the wide frame: in column blocks
     * ([[binaryBlocks]]), one block per core of the session's default
-    * parallelism. Either way every pair is fitted once, here, and the
-    * result is a local relation. */
+    * parallelism, or with `gram` through [[firthGram]] /
+    * [[logisticGram]]. Both give the same row for a pair. A block's
+    * task holds n·(P + k + ⌈D/B⌉) doubles (n rows, P predictors, k
+    * covariates, D dependents over B blocks; the predictors are the
+    * dealt axis when P > D), so `gram` serves a cohort whose block does
+    * not fit one task: it keeps only per-pair moments in a task and
+    * persists the chunks `MEMORY_AND_DISK`. Either way every pair is
+    * fitted once, here, and the result is a local relation. */
   def binaryWide(df: DataFrame, cfg: Config, gram: Boolean): DataFrame =
     if (gram) gramFit(df, cfg, penalized = cfg.model == "firth")
     else binaryBlocks(df, cfg, df.sparkSession.sparkContext.defaultParallelism)
@@ -531,16 +516,16 @@ object Association {
     * [[gramFit]] returns, so Bonferroni's count, the sort and the write
     * read the rows instead of re-running the block shuffle's reduce
     * side. The driver holds one row per fitted pair, a few hundred
-    * bytes each: some 0.5 GB of heap at 10^6 pairs. */
+    * bytes each: some 0.5 GB of heap at 10^6 pairs. A block's task
+    * holds its n·(P + k + ⌈D/B⌉) doubles at once ([[binaryWide]]). */
   private[operators] def binaryBlocks(df: DataFrame, cfg: Config, blocks: Int): DataFrame =
     binaryGrid(df.sparkSession, cfg, blockFits(df, cfg, blocks).collect())
 
   /** Firth/logistic over [[melt]]'s long frame: a compatibility entry
     * for callers that melt first. It needs melt's `pidx`/`didx`; each
     * pair's rows gather in one task (`groupByKey`) and go through the
-    * block fit's per-pair fitter, so the rows match [[assoc]]'s in-task
-    * path. It never routes to the gram fitters. Wide frames go through
-    * [[assoc]], which never melts them. */
+    * block fit's per-pair fitter, so the rows match [[assoc]]'s. Wide
+    * frames go through [[assoc]], which never melts them. */
   def binary(melted: DataFrame, cfg: Config): DataFrame = {
     val spark = melted.sparkSession
     import spark.implicits._
@@ -643,7 +628,9 @@ object Association {
   }
 
   /** The first pass, one slot per pair: [n, Σy, X'WX and score at β=0
-    * (where w = ¼ exactly), per-covariate min, per-covariate −max]. */
+    * (where w = ¼ exactly), per-covariate min, per-covariate −max]. A
+    * NaN sets both to −∞: the in-task fitter keeps a covariate holding
+    * one, since NaN equals no value. */
   private final class FirstPassKernel(m: Int)
       extends GramKernel(2 + m * (m + 1) / 2 + m + 2 * (m - 2), 2 + m * (m + 1) / 2 + m) {
     private val k = m - 2
@@ -657,6 +644,7 @@ object Association {
       while (c < k) {
         val v = x(c + 1)
         val lo = off + sums + c
+        if (v.isNaN) { buf(lo) = Double.NegativeInfinity; buf(lo + k) = Double.NegativeInfinity }
         if (v < buf(lo)) buf(lo) = v
         if (-v < buf(lo + k)) buf(lo + k) = -v
         c += 1
@@ -734,10 +722,13 @@ object Association {
 
   /** One IRLS fit's driver-side state. `fit` 0 is the full fit, 1 the
     * Firth LRT-null fit (predictor held at 0); `gi` is the pair's grid
-    * index, predictor index · D + dependent index. */
-  private final class GramFit(val gi: Int, val fit: Int, m: Int) {
+    * index, predictor index · D + dependent index. `kept` are the
+    * design coordinates of [x, covs…, 1] the pair keeps, ascending: its
+    * Newton steps solve over them (the null fit without coordinate 0)
+    * and the others stay at 0. */
+  private final class GramFit(val gi: Int, val fit: Int, val kept: Array[Int], m: Int) {
+    val free: Array[Int] = if (fit == 1) kept.filter(_ != 0) else kept
     val beta = new Array[Double](m)
-    var step = Double.MaxValue
     var conv = false
     var failed: String = null
     var its = 0
@@ -816,73 +807,76 @@ object Association {
     a * m - a * (a - 1) / 2 + (b - a)
   }
 
-  /** The m×m symmetric matrix packed from `buf(off)` on. */
-  private def unpack(buf: Array[Double], off: Int, m: Int): DenseMatrix[Double] =
-    DenseMatrix.tabulate(m, m)((i, j) => buf(off + triOf(m, i, j)))
+  /** The symmetric matrix packed from `buf(off)` on (m×m), read at
+    * the coordinates `coords`. */
+  private def unpack(buf: Array[Double], off: Int, m: Int, coords: Array[Int]): DenseMatrix[Double] =
+    DenseMatrix.tabulate(coords.length, coords.length)((i, j) => buf(off + triOf(m, coords(i), coords(j))))
 
-  /** The Firth-modified score at a Newton scan's moments: X'WX (upper
-    * triangle `s`), the score `g` and the third-order tensor `t`:
-    * scoreⱼ = gⱼ + Σ_ab (X'WX)⁻¹_ab·T_jab — the hat-diagonal term with
+  /** The Firth-modified score over the design coordinates `kept` at a
+    * Newton scan's moments: X'WX (upper triangle `s`), the score `g` and
+    * the third-order tensor `t`: scoreⱼ = gⱼ + Σ_ab (X'WX)⁻¹_ab·T_jab
+    * over a, b in `kept` — the hat-diagonal term of the kept design with
     * the row sum pushed into T (`tIdx` maps (j, a, b) to the sorted
-    * triple's slot). Throws on a singular X'WX. */
+    * triple's slot). Throws on a singular kept X'WX. */
   private def firthScore(
       s: Array[Double], g: Array[Double], t: Array[Double], tIdx: Array[Int],
-      m: Int): Array[Double] = {
-    val covm: DenseMatrix[Double] = breeze.linalg.inv(unpack(s, 0, m))
-    Array.tabulate(m) { j =>
-      var acc = g(j)
-      for (a <- 0 until m; c <- 0 until m) acc += covm(a, c) * t(tIdx((j * m + a) * m + c))
-      acc
-    }
+      m: Int, kept: Array[Int]): Array[Double] = {
+    val covm: DenseMatrix[Double] = breeze.linalg.inv(unpack(s, 0, m, kept))
+    val score = g.clone()
+    for (j <- kept; a <- kept.indices; c <- kept.indices)
+      score(j) += covm(a, c) * t(tIdx((j * m + kept(a)) * m + kept(c)))
+    score
   }
 
-  /** Distributed logistic IRLS over the wide frame, for cohorts too
-    * large for one task: [[gramFit]] without the Firth penalty. Every
-    * non-failed pair re-steps until the largest |Δβ| of the grid is
-    * below tol (or maxIter); a pair is `converged` when its own last
-    * |Δβ| is. The Wald se comes from the last step's X'WX. */
+  /** Distributed logistic IRLS over the wide frame: [[gramFit]]
+    * without the Firth penalty. Each fit stops at its own |Δβ| < tol
+    * (or maxIter), as `Models.logisticRaw` does, and the Wald se comes
+    * from the last step's X'WX. */
   def logisticGram(df: DataFrame, cfg: Config): DataFrame =
     gramFit(df, cfg, penalized = false)
 
-  /** Distributed Firth-penalized IRLS over the wide frame — the scale
-    * path for the reference's default model (cli.py:105-111):
-    * [[gramFit]] with the penalty. Semantics mirror `Models.firthRaw`
-    * (logistf defaults: step cap 5, no half-steps, convergence on
-    * max|Δβ| < tol AND max|score| < tol): each pair runs the full fit
-    * and the LRT-null fit (predictor held at 0) concurrently from β=0,
-    * the null fit with a budget of 2×maxIter because it starts cold (the
-    * in-task fitter reruns its warm-started null fit this way when that
-    * does not converge); a converged fit freezes. One fused final scan
-    * gives each fit's penalized log-likelihood (ll + ½·log det X'WX)
-    * and the full fit's Wald se; the p-value is the χ²₁ LRT. */
+  /** Distributed Firth-penalized IRLS over the wide frame, the
+    * reference's default model (cli.py:105-111): [[gramFit]] with the
+    * penalty. Semantics mirror `Models.firthRaw` (logistf defaults: step
+    * cap 5, no half-steps, convergence on max|Δβ| < tol AND max|score| <
+    * tol): each pair runs the full fit and the LRT-null fit (predictor
+    * held at 0) concurrently from β=0, the null fit with a budget of
+    * 2×maxIter because it starts cold (the in-task fitter reruns its
+    * warm-started null fit this way when that does not converge). One
+    * fused final scan gives each fit's penalized log-likelihood (ll +
+    * ½·log det X'WX) and the full fit's Wald se; the p-value is the χ²₁
+    * LRT. */
   def firthGram(df: DataFrame, cfg: Config): DataFrame =
     gramFit(df, cfg, penalized = true)
 
   /**
-   * The gram IRLS fitter behind [[logisticGram]] and [[firthGram]]. It
-   * never holds a pair's rows in one task: the wide frame's column
+   * The gram IRLS fitter behind [[logisticGram]] and [[firthGram]], for
+   * a cohort whose column block does not fit one task ([[binaryWide]]).
+   * It never holds a pair's rows in one task: the wide frame's column
    * chunks ([[columnChunks]]) are persisted for the fit and scanned
    * once per Newton step, and every scan ([[gramScan]]) is one
    * shuffle-free job whose tasks accumulate per-pair moments — X'WX,
    * the score and, penalized, the third-order tensor — into one flat
-   * buffer. The driver merges the buffers, solves the m×m systems and
+   * buffer. The driver merges the buffers, solves the small systems and
    * broadcasts the new betas. A scan deals its slots into slices of at
    * most `sliceOf(width)` so a task's buffer stays under
    * `GramBufferDoubles`; a larger grid costs more scans per step, not
    * more memory. Persisting the chunks also freezes a nondeterministic
    * upstream: every scan reads the same rows in the same order.
    *
-   * The first pass gives each pair's count, case sum, covariate range
-   * and its β=0 moments (exact: w = ¼, tensor 0), which are Newton
-   * step 1. The in-task fitter's viability gates run first, then a
-   * pair with a constant covariate fails as "Singular information
-   * matrix." — this path does not drop per-pair constant covariates
-   * (run `Preprocess.dropConstant` first). The driver's per-fit steps
-   * are the in-task fitter's own (`Models.newtonStep`,
+   * Each pair follows the in-task fitter's rules. The first pass gives
+   * its count, case sum, covariate ranges and β=0 moments (exact: w =
+   * ¼, tensor 0), which are Newton step 1. The viability gates run on
+   * the counts; a covariate whose range is one value within the pair
+   * is dropped from its design: the Newton steps, the Firth tensor
+   * term, the final solve, the Wald se and the `equation` read only the
+   * kept coordinates. Each fit freezes once converged. The driver's
+   * per-fit steps are the in-task fitter's own (`Models.newtonStep`,
    * `Models.firthFinal`, `Models.wald`, `Models.lrt`), and per-row
    * operand order is the same in every scan, so results match the
    * in-task fitter to FP summation order (spec-pinned in
-   * SourcesAndGramSpec, separated pairs included).
+   * SourcesAndGramSpec, constant covariates and separated pairs
+   * included).
    */
   private[operators] def gramFit(
       df: DataFrame, cfg: Config, penalized: Boolean,
@@ -908,26 +902,25 @@ object Association {
     val firstPass = new FirstPassKernel(m)
     val nF = firstPass.width
     val grid = predictors.length * dependents.length
-    val first = scan(firstPass, Array.tabulate(grid)(new GramFit(_, 0, m)))
+    val all = Array.range(0, m)
+    val first = scan(firstPass, Array.tabulate(grid)(new GramFit(_, 0, all, m)))
     val out = mutable.ArrayBuffer.empty[BinResult]
     // pairs with no rows are left to the grid completion
     val viable = (0 until grid).filter(gi => first(gi * nF) > 0).filter { gi =>
-      val off = gi * nF
-      val gate = viability(first(off).toLong, first(off + 1).toLong, cfg.minCaseCount)
-      val reason =
-        if (gate != null) gate
-        else if ((0 until k).exists(c =>
-            !(first(off + firstPass.sums + c) < -first(off + firstPass.sums + k + c))))
-          "Singular information matrix."
-        else null
+      val reason = viability(first(gi * nF).toLong, first(gi * nF + 1).toLong, cfg.minCaseCount)
       if (reason != null)
         out += failedRow(predictors(gi / dependents.length), dependents(gi % dependents.length), reason)
       reason == null
     }
-
-    val fits = viable.flatMap(gi =>
-      (if (penalized) Seq(0, 1) else Seq(0)).map(new GramFit(gi, _, m))).toArray
-    val free = Array((0 until m).toArray, (1 until m).toArray)
+    // x, the intercept and each covariate whose min is below its max
+    def kept(gi: Int): Array[Int] = {
+      val lo = gi * nF + firstPass.sums - 1
+      all.filter(j => j == 0 || j == m - 1 || first(lo + j) < -first(lo + k + j))
+    }
+    val fits = viable.flatMap { gi =>
+      val coords = kept(gi)
+      (if (penalized) Seq(0, 1) else Seq(0)).map(new GramFit(gi, _, coords, m))
+    }.toArray
     val maxStep = if (penalized) 5.0 else Double.PositiveInfinity
     val tIdx = Array.tabulate(m * m * m) { q =>
       val Seq(i, j, l) = Seq(q / (m * m), q / m % m, q % m).sorted
@@ -936,19 +929,13 @@ object Association {
         (i until j).map(b => m - b).sum + (l - j)
     }
     val stepKernel = new StepKernel(m, penalized)
+    def active: Array[GramFit] = fits.filter(f => f.failed == null && !f.conv &&
+      f.its < (if (f.fit == 1) 2 * cfg.maxIter else cfg.maxIter))
     var it = 0
-    var gridStep = Double.MaxValue
-    def active: Array[GramFit] =
-      if (penalized)
-        fits.filter(f => f.failed == null && !f.conv &&
-          f.its < (if (f.fit == 1) 2 * cfg.maxIter else cfg.maxIter))
-      else if (it < cfg.maxIter && gridStep >= tol) fits.filter(_.failed == null)
-      else Array.empty
     var act = active
     while (act.nonEmpty) {
       // step 1 takes the first pass's β=0 moments
       val mom = if (it == 0) first else scan(stepKernel, act)
-      gridStep = 0.0
       act.zipWithIndex.foreach { case (f, a) =>
         val off = if (it == 0) f.gi * nF + 2 else a * stepKernel.width
         val s = java.util.Arrays.copyOfRange(mom, off, off + nS)
@@ -958,13 +945,11 @@ object Association {
           else if (it == 0) new Array[Double](stepKernel.width - nS - m)
           else java.util.Arrays.copyOfRange(mom, off + nS + m, off + stepKernel.width)
         try {
-          val score = if (t == null) g else firthScore(s, g, t, tIdx, m)
+          val score = if (t == null) g else firthScore(s, g, t, tIdx, m, f.kept)
           val (step, gmax) =
-            Models.newtonStep(f.beta, (a, b) => s(triOf(m, a, b)), score, free(f.fit), maxStep)
-          f.step = step
+            Models.newtonStep(f.beta, (a, b) => s(triOf(m, a, b)), score, f.free, maxStep)
           f.conv = step < tol && (!penalized || gmax < tol)
           f.info = s
-          gridStep = math.max(gridStep, step)
         } catch {
           case e: Throwable => f.failed = failureReason(e)
         }
@@ -981,7 +966,7 @@ object Association {
       fin.zipWithIndex.foreach { case (f, a) =>
         val off = a * finalKernel.width
         try {
-          val (se0, halfLogDet) = Models.firthFinal(unpack(tot, off, m))
+          val (se0, halfLogDet) = Models.firthFinal(unpack(tot, off, m, f.kept))
           f.se0 = se0
           f.pll = tot(off + nS) + halfLogDet
         } catch {
@@ -989,14 +974,14 @@ object Association {
         }
       }
     }
-    // every fitted pair kept all its covariates (a constant one fails)
     fits.grouped(if (penalized) 2 else 1).foreach { pf =>
       val full = pf.head
       val gi = full.gi
       val pred = predictors(gi / dependents.length)
       val dep = dependents(gi % dependents.length)
       val (n, cases) = (first(gi * nF).toLong, first(gi * nF + 1).toLong)
-      val equation = s"$dep ~ $pred + ${cfg.covariates.mkString(" + ")}"
+      val keptNames = full.kept.slice(1, full.kept.length - 1).map(j => cfg.covariates(j - 1))
+      val equation = s"$dep ~ $pred + ${keptNames.mkString(" + ")}"
       // a fit that throws keeps the pair's counts and equation, as in-task
       def failRow(reason: String): BinResult =
         failedRow(pred, dep, reason, cases, n - cases, n, equation)
@@ -1006,7 +991,7 @@ object Association {
         case None if penalized =>
           row(Models.lrt(full.beta(0), full.se0, full.pll, pf(1).pll, full.conv && pf(1).conv))
         case None =>
-          try row(Models.wald(full.beta(0), unpack(full.info, 0, m), full.step < tol))
+          try row(Models.wald(full.beta(0), unpack(full.info, 0, m, full.kept), full.conv))
           catch {
             case e: Throwable => failRow(failureReason(e))
           }

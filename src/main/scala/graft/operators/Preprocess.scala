@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, NumericType, StringType, StructField, StructType}
 import graft.Tables
 import graft.functions.Numerics
 
@@ -123,21 +123,24 @@ object Preprocess {
       else per.map { case (c, r) => c -> lit(r.get(2)).cast(r.schema(2).dataType) }.toMap)
   }
 
-  /** `df` with each of the profile's fill columns coalesced with its
-    * fill literal: one projection, in place. */
-  def fill(df: DataFrame, p: Profile): DataFrame = df.select(df.columns.toIndexedSeq.map(c =>
-    p.fills.get(c).fold(column(c))(f => coalesce(column(c), f).as(c))): _*)
+  /** `df` with each column of `fills` coalesced with its fill literal:
+    * one projection, in place. A NaN is a value, not a null. */
+  def fill(df: DataFrame, fills: Map[String, Column]): DataFrame =
+    df.select(df.columns.toIndexedSeq.map(c =>
+      fills.get(c).fold(column(c))(f => coalesce(column(c), f).as(c))): _*)
 
   /** Missing-covariate fill (preprocessing.py:7-40): strategy ∈
     * drop|mean|min|max|zero|one. A mean/min/max fill reads its
-    * statistics from one [[profile]] and applies them as literals, so
-    * later jobs have nothing to recompute; zero and one fill NaN too,
-    * as `na.fill` does. */
+    * statistics from one [[profile]]; zero and one fill each numeric
+    * column with the constant cast to its type, and string columns keep
+    * their nulls. Either way the fill is a literal, so later jobs have
+    * nothing to recompute, and NaN stays in place. */
   def fillNulls(df: DataFrame, cols: Seq[String], strategy: String): DataFrame = strategy match {
-    case "zero" => df.na.fill(0.0, cols.map(quoted))
-    case "one" => df.na.fill(1.0, cols.map(quoted))
+    case v @ ("zero" | "one") =>
+      fill(df, cols.map(c => c -> df.schema(c).dataType).collect { case (c, t: NumericType) =>
+        c -> lit(if (v == "zero") 0.0 else 1.0).cast(t) }.toMap)
     case "drop" => df.na.drop(cols.map(quoted))
-    case s if fillStats.contains(s) => fill(df, profile(df, cols, s))
+    case s if fillStats.contains(s) => fill(df, profile(df, cols, s).fills)
     case other => throw new IllegalArgumentException(s"Unknown fill strategy: $other")
   }
 

@@ -447,6 +447,53 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a CLI run carries graft labels on every job, its read included") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli").toString
+    val w = new java.io.PrintWriter(s"$dir/cohort.csv")
+    w.println("id,x,z,d1")
+    val rng = new scala.util.Random(13)
+    (0 until 200).foreach { i =>
+      val x = rng.nextGaussian()
+      val z = if (i % 9 == 0) "NA" else f"${rng.nextGaussian()}%.6f"
+      val d1 = if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(1.2 * x - 0.5)))) 1 else 0
+      w.println(s"$i,$x,$z,$d1")
+    }
+    w.close()
+    val cfg = Main.parseArgs(Array("-i", s"$dir/cohort.csv", "-p", "x", "-d", "d1", "-c", "z",
+      "-nv", "NA", "-mcv", "mean", "-m", "logistic", "-mc", "5", "-o", s"$dir/out"))
+    val jobs = observing(Main.run(spark, cfg)).jobs.map(_._1)
+    assert(jobs.nonEmpty && jobs.forall(d => d != null && d.startsWith("graft/")), jobs)
+    assert(jobs.contains("graft/read"), jobs)
+  }
+
+  test("a 20,001-row cohort fits in column blocks: a sex-specific code drops sex") {
+    // above the row count that used to route binary fits to the gram
+    // IRLS; every cohort size takes the same per-pair rule and one fit job
+    val sess = spark
+    import sess.implicits._
+    val rng = new scala.util.Random(31)
+    val df = (0 until 20001).map { i =>
+      val x = rng.nextGaussian()
+      val sex = (i % 2).toDouble
+      val p = 1.0 / (1.0 + math.exp(-(0.8 * x - 1.0)))
+      def bin(): Double = if (rng.nextDouble() < p) 1.0 else 0.0
+      (x, rng.nextGaussian(), sex, bin(), if (sex == 0.0) None else Some(bin()))
+    }.toDF("x", "z", "sex", "d1", "d_sex")
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val run = observing {
+      rows = Pipeline.run(df, GraftConfig(input = "", predictors = "x", dependents = "d1,d_sex",
+        covariates = "z,sex", model = "firth", minCaseCount = 10)).collect()
+    }
+    assert(run.jobs.count(_._1 == "graft/fit") == 1, run.jobs)
+    val byDep = rows.map(r => r.getAs[String]("dependent") -> r).toMap
+    for ((d, equation, n) <- Seq(("d1", "d1 ~ x + z + sex", 20001L), ("d_sex", "d_sex ~ x + z", 10000L))) {
+      val r = byDep(d)
+      assert(r.getAs[String]("equation") == equation, d)
+      assert(r.getAs[Boolean]("converged") && r.getAs[String]("failed_reason") == "nan", d)
+      assert(r.getAs[Long]("total_n") == n, d)
+    }
+  }
+
   test("no model explodes: no Generate in any plan Pipeline.run executes") {
     val dir = java.nio.file.Files.createTempDirectory("graft_nogen").toString
     cohortDf.write.parquet(s"$dir/cohort.parquet")
@@ -486,9 +533,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     cohortDf.withColumn("zh", org.apache.spark.sql.functions.expr("if(id % 7 = 0, null, z)"))
       .write.parquet(s"$dir/cohort.parquet")
     def jobs(run: Observed, label: String) = run.jobs.count(_._1 == label)
-    // one aggregate for the fail check, the constant drop and the route
-    // count, one for the 3-level categorical's level scan: two jobs each
-    // under adaptive execution
+    // one aggregate for the fail check and the constant drop, one for
+    // the 3-level categorical's level scan: two jobs each under adaptive
+    // execution
     val firth = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
       dependents = "d1,d2", covariates = "z,zconst,seg", categoricalCovariates = "seg",
       model = "firth", minCaseCount = 10, output = s"$dir/out_firth"))

@@ -254,34 +254,38 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("gram fitters fail a pair with a constant covariate; in-task fits the reduced design") {
-    // the gram path keeps every covariate in the design, so a per-pair
-    // constant covariate makes X'WX singular: the first pass's covariate
-    // range fails such pairs before any Newton step, for both models
+  test("gram fitters drop a within-pair constant covariate as in-task") {
+    // zc is constant everywhere; sex is constant within dep_sex's pair
+    // (a sex-specific code). Both fitters drop them from that pair's
+    // design and equation, so the rows agree.
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(41)
-    val wide = (0 until 500).map { _ =>
+    val wide = (0 until 500).map { i =>
       val x = rng.nextGaussian()
-      (x, 3.0, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.7 * x - 0.3)))) 1.0 else 0.0,
-        if (rng.nextDouble() < 0.35) 1.0 else 0.0)
-    }.toDF("x", "z", "dep_a", "dep_b")
-    for (model <- Seq("firth", "logistic")) {
-      val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
-        model = model, minCaseCount = 5)
-      val gramRows = gram(wide, cfg)
-      assert(gramRows.size == 2)
-      for ((d, r) <- gramRows) {
-        assert(r.getAs[String]("failed_reason") == "Singular information matrix.", s"$model $d")
-        assert(!r.getAs[Boolean]("converged"), s"$model $d")
-        assert(r.getAs[String]("equation") == "nan", s"$model $d")
-        assert(Seq("cases", "controls", "total_n").forall(r.getAs[Long](_) == -9L), s"$model $d")
-        assert(r.getAs[Double]("beta").isNaN, s"$model $d")
-      }
-      for ((d, r) <- inTask(wide, cfg)) {
-        assert(r.getAs[Boolean]("converged") && r.getAs[String]("failed_reason") == "nan",
-          s"$model $d in-task")
-        assert(r.getAs[String]("equation") == s"$d ~ x + ", s"$model $d in-task")
+      val sex = (i % 2).toDouble
+      def bin(q: Double): Double = if (rng.nextDouble() < q) 1.0 else 0.0
+      (x, rng.nextGaussian(), sex, 3.0, bin(1.0 / (1.0 + math.exp(-(0.7 * x - 0.3)))), bin(0.35),
+        if (sex == 0.0) None else Some(bin(1.0 / (1.0 + math.exp(-(0.9 * x - 0.6))))))
+    }.toDF("x", "z1", "sex", "zc", "dep_a", "dep_b", "dep_sex")
+    val deps = Seq("dep_a", "dep_b", "dep_sex")
+    for (model <- Seq("firth", "logistic");
+        (covariates, equations) <- Seq(
+          Seq("z1", "sex", "zc") -> Map("dep_a" -> "dep_a ~ x + z1 + sex",
+            "dep_b" -> "dep_b ~ x + z1 + sex", "dep_sex" -> "dep_sex ~ x + z1"),
+          Seq("zc") -> deps.map(d => d -> s"$d ~ x + ").toMap)) {
+      val cfg = Association.Config(Seq("x"), deps, covariates, model = model, minCaseCount = 5)
+      val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
+      for (d <- deps) {
+        val tag = s"$model ${covariates.mkString(",")} $d"
+        assert(blocks(d).getAs[String]("equation") == equations(d), tag)
+        assert(blocks(d).getAs[Boolean]("converged"), tag)
+        for (c <- Seq("pval", "beta", "se", "OR", "ci_low", "ci_high")) {
+          val (a, b) = (blocks(d).getAs[Double](c), gramRows(d).getAs[Double](c))
+          assert(math.abs(a - b) < 1e-6, s"$tag $c: in-task $a, gram $b")
+        }
+        for (c <- Seq("equation", "cases", "controls", "total_n", "converged", "failed_reason"))
+          assert(blocks(d).getAs[Any](c) == gramRows(d).getAs[Any](c), s"$tag $c")
       }
     }
   }

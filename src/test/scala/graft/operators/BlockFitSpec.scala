@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSession
 
 /** The wide-frame paths of `Association.assoc`: column blocks against
-  * the long-format entry, block and partition invariance, the route on
-  * the frame's row count, linear partition invariance, and all-null
-  * columns on every chunk path. */
+  * the long-format entry, block and partition invariance, collinear
+  * covariates on both binary fitters, linear partition invariance, and
+  * all-null columns on every chunk path. */
 class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
@@ -80,7 +80,6 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (model <- Seq("firth", "logistic"); minCase <- Seq(0, 5)) {
       val cfg = Association.Config(Seq("x", "x2"), parityDeps, Seq("z1", "sex"),
         model = model, minCaseCount = minCase)
-      assert(!Association.routesToGram(df.count(), cfg))
       val wide = byPair(Association.assoc(df, cfg))
       val long = byPair(Association.binary(Association.melt(df, cfg), cfg))
       assert(wide.keySet == long.keySet && wide.size == 2 * parityDeps.size)
@@ -170,9 +169,9 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
         model = model, minCaseCount = 5)
       def byDep(df: DataFrame): Map[String, Row] =
         df.collect().map(r => r.getAs[String]("dependent") -> r).toMap
-      val inTask = byDep(Association.assoc(wide, cfg, Long.MaxValue))
+      val inTask = byDep(Association.assoc(wide, cfg))
       for ((route, rows) <- Seq(
-          "gram" -> byDep(Association.assoc(wide, cfg, 100)),
+          "gram" -> byDep(Association.binaryWide(wide, cfg, gram = true)),
           "long in-task" -> byDep(Association.binary(Association.melt(wide, cfg), cfg)));
           d <- Seq("dep_a", "dep_b")) {
         val (want, got) = (inTask(d), rows(d))
@@ -184,55 +183,6 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
           assert(got.getAs[Any](c) == want.getAs[Any](c), s"$tag $c")
       }
     }
-  }
-
-  test("the row count routes assoc to the gram fitters above the threshold") {
-    // wide twin of SourcesAndGramSpec's auto-route test, through assoc
-    val rng = new scala.util.Random(41)
-    val wideRows = (0 until 500).map { _ =>
-      val x = rng.nextGaussian()
-      val z = rng.nextGaussian()
-      val a = if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.7 * x - 0.3)))) 1.0 else 0.0
-      val b = if (rng.nextDouble() < 0.35) 1.0 else 0.0
-      (x, z, a, b)
-    }
-    val sess = spark
-    import sess.implicits._
-    val wide = wideRows.toDF("x", "z", "dep_a", "dep_b")
-    def assocAt(gate: Long, frame: DataFrame, cfg: Association.Config): Map[String, Row] =
-      Association.assoc(frame, cfg, gate).collect().map(r => r.getAs[String]("dependent") -> r).toMap
-    for (model <- Seq("firth", "logistic")) {
-      val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
-        model = model, minCaseCount = 5,
-        maxIter = if (model == "logistic") 50 else 25,
-        tol = if (model == "logistic") 1e-9 else 1e-5)
-      val inTask = assocAt(Long.MaxValue, wide, cfg)
-      val routed = assocAt(100, wide, cfg) // 500 rows > 100
-      for (d <- Seq("dep_a", "dep_b"); c <- Seq("beta", "se", "pval", "OR"))
-        assert(math.abs(routed(d).getAs[Double](c) - inTask(d).getAs[Double](c)) < 1e-6,
-          s"$model $d $c")
-      for (d <- Seq("dep_a", "dep_b")) {
-        assert(routed(d).getAs[Long]("cases") == inTask(d).getAs[Long]("cases"), d)
-        assert(routed(d).getAs[Boolean]("converged"), s"$model $d")
-      }
-    }
-    // engagement: a constant covariate is dropped per pair in blocks,
-    // but makes the gram fitter's X'WX singular
-    val wideC = wideRows.map { case (x, _, a, b) => (x, 3.0, a, b) }.toDF("x", "z", "dep_a", "dep_b")
-    val cfgC = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
-      model = "firth", minCaseCount = 5)
-    assert(assocAt(Long.MaxValue, wideC, cfgC).values.forall(_.getAs[Boolean]("converged")),
-      "blocks must fit the reduced design")
-    assert(assocAt(100, wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")),
-      "assoc did not engage the gram fitter (constant covariate fit anyway)")
-    // the boundary: 500 rows stay in-task at a threshold of 500 and
-    // route at 499; an empty grid never routes, nor reads the count
-    assert(!Association.routesToGram(wideC.count(), cfgC, 500))
-    assert(Association.routesToGram(wideC.count(), cfgC, 499))
-    assert(assocAt(500, wideC, cfgC).values.forall(_.getAs[Boolean]("converged")))
-    assert(assocAt(499, wideC, cfgC).values.exists(r => !r.getAs[Boolean]("converged")))
-    assert(!Association.routesToGram(fail("an empty grid read the row count"),
-      cfgC.copy(dependents = Nil), 0))
   }
 
   test("linear output is 4-dp identical at input partitions 1, 7 and 32") {
