@@ -288,7 +288,7 @@ object Bench {
     // MAS headlines: the reference's two published benchmark tables at
     // the 5,000 × ~1,800 shape — 5 covariates (22.2 s) and 20 (55.7 s)
     // — through the column-block Firth fit, plus the same cohort
-    // through the linear co-moments and the gram Firth. Each shape runs
+    // through the linear co-moments. Each shape runs
     // MasReps times, every rep stamped with the load after it; the
     // headline is the min, the least-contended estimate.
     def reps(body: => Unit): Seq[(Double, Double)] = (1 to MasReps).map { _ =>
@@ -303,14 +303,11 @@ object Bench {
         val wide5 = masWide(spark, n, d, 5)
         Seq(
           ("mas_firth", "mas_firth_5000x1800x5cov",
-            reps(noop(Association.binaryWide(wide5, masCfg(d, 5), gram = false)))),
+            reps(noop(Association.assoc(wide5, masCfg(d, 5))))),
           ("mas_firth20", "mas_firth_5000x1800x20cov",
-            reps(noop(Association.binaryWide(masWide(spark, n, d, 20), masCfg(d, 20),
-              gram = false)))),
+            reps(noop(Association.assoc(masWide(spark, n, d, 20), masCfg(d, 20))))),
           ("mas_linear", "mas_linear_5000x1800x5cov",
-            reps(noop(Association.assoc(wide5, masCfg(d, 5).copy(model = "linear"))))),
-          ("mas_firth_gram", "mas_firth_gram_5000x1800x5cov",
-            reps(noop(Association.binaryWide(wide5, masCfg(d, 5), gram = true)))))
+            reps(noop(Association.assoc(wide5, masCfg(d, 5).copy(model = "linear"))))))
       }
     val masMin = masRuns.map { case (k, _, r) => k -> r.map(_._1).min }.toMap
     val masHeads = masRuns.map { case (k, h, _) => h -> masMin(k) }
@@ -388,11 +385,9 @@ object Bench {
       val bigMas = masWide(spark, 50000, 1800, 5)
       val masPairs = Seq[(String, () => Unit)](
         "mas_firth" -> (() =>
-          noop(Association.binaryWide(bigMas, masCfg(1800, 5), gram = false))),
+          noop(Association.assoc(bigMas, masCfg(1800, 5)))),
         "mas_linear" -> (() =>
-          noop(Association.assoc(bigMas, masCfg(1800, 5).copy(model = "linear")))),
-        "mas_firth_gram" -> (() =>
-          noop(Association.binaryWide(bigMas, masCfg(1800, 5), gram = true))))
+          noop(Association.assoc(bigMas, masCfg(1800, 5).copy(model = "linear")))))
         .flatMap { case (k, body) =>
           oneShot(body()).map { case (t, ld) => slopeEntry(k, masMin(k), t, ld) }
         }

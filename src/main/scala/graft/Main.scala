@@ -28,10 +28,7 @@ object Main {
   /** argparse-style store_true flags (cli.py). */
   private val boolFlags = Set(
     "dry-run", "quantitative", "rint", "logt", "phewas", "flipwas",
-    "male-only", "female-only", "verbose", "quiet",
-    // graft extension (not in the reference CLI): fit binary pairs with
-    // the gram IRLS, for a cohort whose column block does not fit one task
-    "distributed")
+    "male-only", "female-only", "verbose", "quiet")
 
   /** Short aliases, exactly the reference's (cli.py). */
   private val shortAliases = Map(
@@ -95,8 +92,7 @@ object Main {
       orderCol = m.getOrElse("order-col", ""),
       output = m.getOrElse("output", ""),
       outputType = outputType,
-      dryRun = m.getOrElse("dry-run", "false").toBoolean,
-      distributed = m.getOrElse("distributed", "false").toBoolean)
+      dryRun = m.getOrElse("dry-run", "false").toBoolean)
   }
 
   def main(args: Array[String]): Unit = {

@@ -32,9 +32,9 @@ import graft.sources.Sources
  * statistics in one aggregate (`Preprocess.profile`). Every model fits
  * every pair once, in `graft/fit` jobs, into a local relation of pair
  * rows that postprocessing and the write read; so a run without
- * `output` has fitted by the time it returns. The binary models fit in
- * column blocks at every cohort size, or with the gram IRLS when
- * `distributed` asks for it.
+ * `output` has fitted and postprocessed by the time it returns: its
+ * result is a local relation of sorted rows. The binary models fit in
+ * column blocks at every cohort size.
  */
 final case class GraftConfig(
     input: String,                        // parquet/csv/tsv/txt path
@@ -60,10 +60,10 @@ final case class GraftConfig(
     output: String = "",                  // output PREFIX; empty = don't write
     outputType: String = "csv",           // reference default (cli.py:61-68)
     dryRun: Boolean = false,
-    distributed: Boolean = false,         // graft extension: fit binary pairs with
-                                          // the gram IRLS, for a cohort whose
-                                          // column block does not fit one task;
-                                          // linear is always distributed
+    distributed: Boolean = false,         // removed option: `true` is a config error.
+                                          // The field stays while perfbench's
+                                          // Study.scala reads it (ROADMAP item 4
+                                          // deletes it)
     annotateDefs: Option[DataFrame] = None, // direct defs override (tests/composition)
     annotateOn: String = "dependent",
     annotateKey: String = "phecode")
@@ -82,6 +82,7 @@ object Pipeline {
       covariates: Seq[String], categoricals: Seq[String]): Unit = {
     require(Seq("firth", "logistic", "linear").contains(cfg.model),
       s"Unknown model: ${cfg.model}")
+    require(!cfg.distributed, "distributed = true asked for the gram IRLS, which was removed.")
     require(predictors.nonEmpty, s"The predictor spec '${cfg.predictors}' selects no columns.")
     require(dependents.nonEmpty, s"The dependent spec '${cfg.dependents}' selects no columns.")
     require(!(cfg.rint && cfg.logt), "--rint and --logt are mutually exclusive.")
@@ -124,7 +125,7 @@ object Pipeline {
     s"""Configuration summary:
        |  Input file: ${cfg.input}
        |  Output prefix: ${cfg.output}
-       |  Model: ${cfg.model}${if (cfg.distributed) " (distributed IRLS)" else ""}
+       |  Model: ${cfg.model}
        |  Predictors:  ${fmt(predictors)}
        |  Dependents:  ${fmt(dependents)}
        |  Covariates:  ${fmt(covariates)}""".stripMargin
@@ -151,12 +152,7 @@ object Pipeline {
   def run(raw: DataFrame, cfg: GraftConfig): DataFrame = {
     val spark = raw.sparkSession
     val (df, assocCfg) = stage(spark, "preprocess")(preprocess(raw, cfg))
-    val results = stage(spark, "fit") {
-      if (cfg.model == "linear") Association.assoc(df, assocCfg)
-      // --distributed asks for the gram IRLS (one scan per Newton step
-      // instead of one task per block): the same rows, spec-pinned
-      else Association.binaryWide(df, assocCfg, cfg.distributed)
-    }
+    val results = stage(spark, "fit")(Association.assoc(df, assocCfg))
     stage(spark, "postprocess")(postprocess(raw, results, cfg))
   }
 
@@ -248,9 +244,10 @@ object Pipeline {
       model = cfg.model, minCaseCount = cfg.minCaseCount))
   }
 
-  /** Bonferroni, PheCode/custom annotate, sort, write. */
+  /** Bonferroni, PheCode/custom annotate, sort, write. Without
+    * `output` the sorted rows are collected here, so their jobs carry
+    * `graft/postprocess` and the caller gets a local relation. */
   private def postprocess(raw: DataFrame, results: DataFrame, cfg: GraftConfig): DataFrame = {
-    var out = Postprocess.bonferroni(results)
     val defs: Option[DataFrame] = cfg.annotateDefs.orElse {
       if (cfg.phewas || cfg.flipwas) {
         // no --phecode-defs needed: the public catalog ships bundled,
@@ -261,9 +258,8 @@ object Pipeline {
         else Sources.bundledPhecodeDefs(raw.sparkSession))
       } else None
     }
-    defs.foreach { d =>
-      val on = if (cfg.flipwas) "predictor" else cfg.annotateOn
-      out = Postprocess.annotate(out, d, on, cfg.annotateKey)
+    val out = defs.foldLeft(Postprocess.bonferroni(results)) { (df, d) =>
+      Postprocess.annotate(df, d, if (cfg.flipwas) "predictor" else cfg.annotateOn, cfg.annotateKey)
     }
     if (cfg.output.nonEmpty) {
       // reference output naming: {prefix}_polars_mas_results.{ext}
@@ -271,6 +267,9 @@ object Pipeline {
       val path = s"${cfg.output}_polars_mas_results.${cfg.outputType}"
       stage(raw.sparkSession, "write")(Postprocess.sortAndWrite(out, path, cfg.outputType,
         "pval", tieBreak = Seq("predictor", "dependent")))
-    } else out.orderBy(col("pval"), col("predictor"), col("dependent"))
+    } else {
+      val sorted = out.orderBy(col("pval"), col("predictor"), col("dependent"))
+      raw.sparkSession.createDataFrame(java.util.Arrays.asList(sorted.collect(): _*), sorted.schema)
+    }
   }
 }

@@ -67,8 +67,10 @@ object SparkEntry {
     "a08_pipeline_logt" -> (Mas.a08PipelineLogt _),
     "a09_pipeline_rint" -> (Mas.a09PipelineRint _),
     "a12_pipeline_categorical" -> (Mas.a12PipelineCategorical _),
-    "a10_assoc_logistic_gram" -> (Mas.a10AssocLogisticGram _),
-    "a17_assoc_firth_gram" -> (Mas.a17AssocFirthGram _),
+    // a10/a17 named the gram IRLS, which is gone: they run a03/a04's
+    // column-block fits, at the same tolerances, against their own oracles
+    "a10_assoc_logistic_gram" -> (Mas.a03AssocLogistic _),
+    "a17_assoc_firth_gram" -> (Mas.a04AssocFirth _),
     "t13_bpe_tokens" -> (TextOps.t13BpeTokens _),
     "t24_tokenizer_fertility" -> (TextOps.t24TokenizerFertility _),
     "t21_zipf_slope" -> (TextOps.t21ZipfSlope _),

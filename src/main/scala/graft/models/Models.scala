@@ -18,10 +18,9 @@ import graft.functions.Numerics
  * The binary fitters take a packed column-major design whose FIRST
  * column is the predictor and whose LAST is the intercept. They are
  * plain-JVM and run inside executor tasks — one fit per
- * (predictor, dependent) group. The per-fit steps around the row
- * passes (the Newton solve and step cap, the Firth final solve, the
- * Wald and LRT results) are shared with the gram fitter in
- * `Association`, which runs them on its distributed moments. The
+ * (predictor, dependent) group. Logistic and Firth share the per-fit
+ * steps around the row passes: the Newton solve and step cap, the
+ * Firth final solve, the Wald and LRT results. The
  * iterative kernels are hand-rolled
  * over flat primitive arrays with buffers allocated once per fit:
  * breeze's idiomatic `xi.t * (xi(::,*) *:* w)` / `xi * infoInv`
@@ -180,8 +179,7 @@ object Models {
         grad(a) = acc
         a += 1
       }
-      val (step, _) = newtonStep(beta, (a2, b2) => info(a2 * k + b2), grad, all,
-        Double.PositiveInfinity)
+      val (step, _) = newtonStep(beta, info, grad, all, Double.PositiveInfinity)
       if (step < tol) converged = true
       it += 1
     }
@@ -206,9 +204,8 @@ object Models {
     // Warm-started from the full fit (as firthmodels does) — same
     // optimum, fewer IRLS iterations. Under (quasi-)separation the full
     // fit leaves the other coefficients far from the null optimum and
-    // the capped steps can stall there; such a fit reruns as the gram
-    // fitter runs every null fit (from β=0, 2×maxIter), so both report
-    // the same null fit.
+    // the capped steps can stall there; such a fit reruns cold, from
+    // β=0 with 2×maxIter, clear of the full fit's coefficients.
     val warm = full.beta.clone()
     warm(0) = 0.0
     val warmed = firthFit(xd, n, k, y, fixZero = 0, maxIter, maxStep, gtol, xtol, warm, ws)
@@ -313,7 +310,7 @@ object Models {
         score(a) = acc
         a += 1
       }
-      val (step, gmax) = newtonStep(beta, (a2, b2) => info(a2 * k + b2), score, free, maxStep)
+      val (step, gmax) = newtonStep(beta, info, score, free, maxStep)
       if (step < xtol && gmax < gtol) converged = true
       it += 1
     }
@@ -331,19 +328,20 @@ object Models {
     FirthFit(beta, se0, ll + halfLogDet, converged)
   }
 
-  // ------------------------------------------- steps shared with the gram fitter
+  // ---------------------------------------------- steps shared by the fitters
 
   /** One Newton step over the `free` coordinates: solves
     * info_FF·Δ = score_F, caps max |Δ| at `maxStep` (logistf maxstep;
     * the scale is exactly 1.0 when no cap applies) and adds the scaled
-    * step to `beta` in place. `info(a, b)` reads the full information
-    * matrix. Returns the capped max |Δβ| and max |score| over `free`.
+    * step to `beta` in place. `info` is the full k×k information
+    * matrix (k = beta's length). Returns the capped max |Δβ| and max |score| over `free`.
     * Throws on a singular info_FF, before touching `beta`. */
-  private[graft] def newtonStep(
-      beta: Array[Double], info: (Int, Int) => Double, score: Array[Double],
+  private def newtonStep(
+      beta: Array[Double], info: Array[Double], score: Array[Double],
       free: Array[Int], maxStep: Double): (Double, Double) = {
     val nf = free.length
-    val deltaF = DenseMatrix.tabulate(nf, nf)((a, b) => info(free(a), free(b))) \
+    val k = beta.length
+    val deltaF = DenseMatrix.tabulate(nf, nf)((a, b) => info(free(a) * k + free(b))) \
       DenseVector.tabulate(nf)(a => score(free(a)))
     var mx = 0.0
     var gmax = 0.0
@@ -363,7 +361,7 @@ object Models {
     * solution: the predictor's se √(info⁻¹)₀₀ and the Jeffreys term
     * ½·log det info, from one Cholesky. Throws on a non-positive-
     * definite or singular info. */
-  private[graft] def firthFinal(info: DenseMatrix[Double]): (Double, Double) = {
+  private def firthFinal(info: DenseMatrix[Double]): (Double, Double) = {
     val l = cholesky(info)
     val logDet = 2.0 * (0 until info.rows).map(i => math.log(l(i, i))).sum
     (math.sqrt(inv(info).apply(0, 0)), 0.5 * logDet)
@@ -371,7 +369,7 @@ object Models {
 
   /** Logistic's result: the predictor's Wald se √(info⁻¹)₀₀ and
     * two-sided normal p-value. */
-  private[graft] def wald(b0: Double, info: DenseMatrix[Double], converged: Boolean): FitResult = {
+  private def wald(b0: Double, info: DenseMatrix[Double], converged: Boolean): FitResult = {
     val se0 = math.sqrt(inv(info).apply(0, 0))
     result(Numerics.normSf2(b0 / se0), b0, se0, converged)
   }
@@ -379,7 +377,7 @@ object Models {
   /** Firth's result: the χ²₁ likelihood-ratio p-value from the full and
     * the predictor-at-zero penalized log-likelihoods, with the full
     * fit's Wald se. */
-  private[graft] def lrt(b0: Double, se0: Double, pllFull: Double, pllNull: Double,
+  private def lrt(b0: Double, se0: Double, pllFull: Double, pllNull: Double,
       converged: Boolean): FitResult = {
     val stat = 2.0 * (pllFull - pllNull)
     result(Numerics.chi2Sf(math.max(stat, 0.0), 1.0), b0, se0, converged)

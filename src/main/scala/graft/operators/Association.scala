@@ -8,7 +8,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.models.{FitResult, Models}
 import graft.operators.Preprocess.column
 
@@ -29,13 +28,15 @@ import graft.operators.Preprocess.column
  *    column, and every model reads those chunks. A pair's rows are the
  *    chunk rows where x, y and every covariate are non-null, in input
  *    order. No row is exploded per (sample, pair).
- *  - The LOGISTIC/FIRTH in-task path fits in column blocks ([[assoc]]):
+ *  - The LOGISTIC/FIRTH path fits in column blocks ([[binaryBlocks]]):
  *    each chunk is sliced into one chunk per block of dependents (of
  *    predictors, for flipwas-shaped grids), one shuffle keyed by block
  *    brings a block's chunks together in input order, and the block's
  *    task fits each of its pairs. The shuffle carries the predictors and
  *    covariates once per block and each dependent once, not once per
- *    pair.
+ *    pair. There are as many blocks as input partitions or cores,
+ *    whichever is more (at most one per dependent), so a block holds no
+ *    more of the dependents than one input chunk does.
  *  - The LINEAR path never materializes a pair's rows in one place: each
  *    partition folds every pair's rows into CENTERED co-moments
  *    ([[GramState]], Welford update), the states merge by pair (Chan
@@ -44,20 +45,11 @@ import graft.operators.Preprocess.column
  *    shuffle carries O((k+2)²) doubles per pair and partition, never
  *    rows. Constant-covariate detection also happens on the co-moments
  *    (zero centered variance).
- *  - On request (`--distributed`, [[firthGram]], [[logisticGram]]) the
- *    binary models fit with the gram IRLS ([[gramFit]]) instead: one
- *    shuffle-free scan of the persisted chunks per Newton step,
- *    per-pair moments summed in task buffers, the small solves on the
- *    driver. It serves a cohort whose column block does not fit one
- *    task; it is never picked by cohort size.
- *  - Both binary paths apply one per-pair rule: the viability gates,
- *    the drop of covariates constant within the pair and the failure
- *    rows here, and from `Models` the Newton solve with its step cap,
- *    the Firth final solve and the Wald/LRT results. Only the row
- *    kernels differ: the in-task hat-diagonal pass costs fewer
- *    multiply-adds per row than the gram scan's third-order tensor
- *    (84 against 175 at 7 columns), and the gram scan needs the tensor
- *    to take a step from one pass over the rows.
+ *  - One per-pair rule serves both binary models ([[fitBinaryPair]]):
+ *    the viability gates, the drop of covariates constant within the
+ *    pair and the failure rows here, and from `Models` the IRLS kernel
+ *    with its Newton solve, step cap, Firth final solve and Wald/LRT
+ *    results.
  *  - Every model collects its pair rows to the driver, so pairs that
  *    lose every row to the null-drop are restored there: the full
  *    predictor × dependent grid, with "No data after dropping nulls."
@@ -86,12 +78,11 @@ object Association {
       cases: Long, controls: Long, total_n: Long,
       converged: Boolean, failed_reason: String, equation: String)
 
-  /** Uniform failed_reason text across the in-task and distributed
-    * fitters: Breeze reports singular / non-positive-definite
-    * information matrices with different exception types and messages
-    * depending on which kernel hit the degeneracy; downstream
-    * consumers compare failed_reason strings, so every fitter catch
-    * block normalizes here. */
+  /** Uniform failed_reason text for every fitter: Breeze reports
+    * singular / non-positive-definite information matrices with
+    * different exception types and messages depending on which solve
+    * hit the degeneracy; downstream consumers compare failed_reason
+    * strings, so every fitter catch block normalizes here. */
   private[operators] def failureReason(e: Throwable): String = e match {
     case _: breeze.linalg.MatrixSingularException |
         _: breeze.linalg.NotConvergedException |
@@ -193,7 +184,7 @@ object Association {
     * blocks ([[binaryBlocks]]) at every cohort size. Every pair is
     * fitted once, inside this call. */
   def assoc(df: DataFrame, cfg: Config): DataFrame =
-    if (cfg.model == "linear") linearChunks(df, cfg) else binaryWide(df, cfg, gram = false)
+    if (cfg.model == "linear") linearChunks(df, cfg) else binaryBlocks(df, cfg, None)
 
   // ------------------------------------------------------ column chunks
 
@@ -245,25 +236,13 @@ object Association {
           n += 1
         }
         if (n == 0) Iterator.empty
-        else Iterator.single(ColumnChunk(part, n, values.map(_.result()), nulls))
+        else Iterator.single(ColumnChunk(part, n, Array.tabulate(nCols) { j =>
+          // drop each builder once copied: the task never holds two copies
+          val v = values(j).result()
+          values(j) = null
+          v
+        }, nulls))
       }
-  }
-
-  /** `parts` end to end, in the given order. */
-  private def concatChunks(parts: Array[ColumnChunk]): ColumnChunk = {
-    val n = parts.map(_.n).sum
-    val nc = parts.head.values.length
-    val values = Array.fill(nc)(new Array[Double](n))
-    val nulls = Array.fill(nc)(new java.util.BitSet(n))
-    var off = 0
-    parts.foreach { p =>
-      for (c <- 0 until nc) {
-        System.arraycopy(p.values(c), 0, values(c), off, p.n)
-        p.nulls(c).stream().forEach(i => nulls(c).set(off + i))
-      }
-      off += p.n
-    }
-    ColumnChunk(parts.head.part, n, values, nulls)
   }
 
   /** The predictor × dependent grid in grid order: each pair's fitted
@@ -441,20 +420,6 @@ object Association {
 
   // ------------------------------------------------------ logistic/firth
 
-  /** Firth/logistic over the wide frame: in column blocks
-    * ([[binaryBlocks]]), one block per core of the session's default
-    * parallelism, or with `gram` through [[firthGram]] /
-    * [[logisticGram]]. Both give the same row for a pair. A block's
-    * task holds n·(P + k + ⌈D/B⌉) doubles (n rows, P predictors, k
-    * covariates, D dependents over B blocks; the predictors are the
-    * dealt axis when P > D), so `gram` serves a cohort whose block does
-    * not fit one task: it keeps only per-pair moments in a task and
-    * persists the chunks `MEMORY_AND_DISK`. Either way every pair is
-    * fitted once, here, and the result is a local relation. */
-  def binaryWide(df: DataFrame, cfg: Config, gram: Boolean): DataFrame =
-    if (gram) gramFit(df, cfg, penalized = cfg.model == "firth")
-    else binaryBlocks(df, cfg, df.sparkSession.sparkContext.defaultParallelism)
-
   /** Sends block b's chunks to reduce partition b. */
   private final class BlockPartitioner(blocks: Int) extends Partitioner {
     def numPartitions: Int = blocks
@@ -464,19 +429,24 @@ object Association {
   /** [[binaryBlocks]]' fits before grid completion: one result per pair
     * with at least one complete row. The longer axis of the grid
     * (dependents, or predictors for flipwas shapes) is dealt
-    * round-robin into `blocks` blocks. Each input partition's chunk is
-    * sliced into one chunk per block — the block's own predictors or
+    * round-robin into B blocks: `blocks` if given, else
+    * max(default parallelism, input partitions of the chunk RDD), never
+    * more than that axis has. Each input partition's chunk is sliced
+    * into one chunk per block — the block's own predictors or
     * dependents plus the shared axis and the covariates — so the one
     * shuffle carries n·(P+k)·B + n·D doubles (dependent blocks), not a
-    * row per (sample, pair). A block concatenates its chunks in
-    * map-partition order, so every pair sees its rows in input order
-    * whatever the block count. */
-  private[operators] def blockFits(df: DataFrame, cfg: Config, blocks: Int): RDD[BinResult] = {
+    * row per (sample, pair). A block reads its chunks in map-partition
+    * order, so every pair sees its rows in input order whatever the
+    * block count. */
+  private[operators] def blockFits(df: DataFrame, cfg: Config,
+      blocks: Option[Int]): RDD[BinResult] = {
     val predictors = cfg.predictors.toArray
     val dependents = cfg.dependents.toArray
     val (nP, k, nD) = (predictors.length, cfg.covariates.size, dependents.length)
     val depAxis = nD >= nP
-    val nBlocks = math.max(1, math.min(blocks, if (depAxis) nD else nP))
+    val chunks = columnChunks(df, cfg)
+    val nBlocks = math.max(1, math.min(if (depAxis) nD else nP, blocks.getOrElse(
+      math.max(df.sparkSession.sparkContext.defaultParallelism, chunks.getNumPartitions))))
     def dealt(len: Int, b: Int): Array[Int] = (b until len by nBlocks).toArray
     val blockPreds = Array.tabulate(nBlocks)(b =>
       if (depAxis) Array.range(0, nP) else dealt(nP, b))
@@ -485,40 +455,47 @@ object Association {
     // a block's columns in the chunk's [predictors, covariates, dependents]
     val blockCols = Array.tabulate(nBlocks)(b =>
       blockPreds(b) ++ Array.range(nP, nP + k) ++ blockDeps(b).map(nP + k + _))
-    columnChunks(df, cfg)
+    chunks
       .flatMap(ch => Iterator.tabulate(nBlocks)(b => (b, ch.select(blockCols(b)))))
       .partitionBy(new BlockPartitioner(nBlocks)).mapPartitions { it =>
         val keyed = it.toArray
         if (keyed.isEmpty) Iterator.empty
         else {
           val b = keyed.head._1
-          val ch = concatChunks(keyed.map(_._2).sortBy(_.part))
+          val parts = keyed.map(_._2).sortBy(_.part)
           val bp = blockPreds(b)
           val bd = blockDeps(b)
-          val covs = Array.tabulate(k)(c => ch.values(bp.length + c))
-          val covOk = ch.complete(bp.length until bp.length + k)
+          val covs = Array.range(bp.length, bp.length + k)
+          val covOk = parts.map(_.complete(covs))
           bp.indices.iterator.flatMap { pi =>
             bd.indices.iterator.flatMap { di =>
               val y = bp.length + k + di
-              val rows = ch.pairRows(covOk, pi, y)
-              if (rows.isEmpty) None
-              else Some(fitBinaryPair(predictors(bp(pi)), dependents(bd(di)), ch.values(pi),
-                ch.values(y), covs, rows.stream().toArray, cfg))
+              val sels = Array.tabulate(parts.length)(p =>
+                parts(p).pairRows(covOk(p), pi, y).stream().toArray)
+              if (sels.forall(_.isEmpty)) None
+              else Some(fitBinaryPair(predictors(bp(pi)), dependents(bd(di)), parts, sels, pi, y,
+                covs, cfg))
             }
           }
         }
       }
   }
 
-  /** [[blockFits]] with the full grid restored. `blocks` is the block
-    * count before clamping to the longer grid axis. The fits run here,
-    * once: their rows are collected into a local relation, as
-    * [[gramFit]] returns, so Bonferroni's count, the sort and the write
-    * read the rows instead of re-running the block shuffle's reduce
-    * side. The driver holds one row per fitted pair, a few hundred
-    * bytes each: some 0.5 GB of heap at 10^6 pairs. A block's task
-    * holds its n·(P + k + ⌈D/B⌉) doubles at once ([[binaryWide]]). */
-  private[operators] def binaryBlocks(df: DataFrame, cfg: Config, blocks: Int): DataFrame =
+  /** [[blockFits]] with the full grid restored: [[assoc]]'s binary fit,
+    * with `blocks` None. The fits run here, once: their rows are
+    * collected into a local relation, so Bonferroni's count, the sort
+    * and the write read the rows instead of re-running the block
+    * shuffle's reduce side. The driver holds one row per fitted pair, a
+    * few hundred bytes each: some 0.5 GB of heap at 10^6 pairs.
+    *
+    * Memory: a block's task holds n·(P + k) + n·⌈D/B⌉ doubles (n rows,
+    * P predictors, k covariates, D dependents; the predictors are the
+    * dealt axis when P > D): its chunks, read in place. With B at least
+    * the input partition count, that is no more of the dependents than
+    * one input partition's chunk, the chunk the packer of every model
+    * builds in a map task; so a cohort whose input partitions fit a
+    * task fits its blocks too. */
+  private[operators] def binaryBlocks(df: DataFrame, cfg: Config, blocks: Option[Int]): DataFrame =
     binaryGrid(df.sparkSession, cfg, blockFits(df, cfg, blocks).collect())
 
   /** Firth/logistic over [[melt]]'s long frame: a compatibility entry
@@ -537,35 +514,55 @@ object Association {
       .mapValues(_._2)
       .mapGroups { (gi: Int, it: Iterator[Array[Double]]) =>
         val rows = it.toArray
-        // packed [x, y, covs…] rows → column arrays
-        val cols = Array.tabulate(k + 2)(c => rows.map(_(c)))
+        // packed [x, y, covs…] rows → one chunk of column arrays
+        val ch = ColumnChunk(0, rows.length, Array.tabulate(k + 2)(c => rows.map(_(c))),
+          Array.fill(k + 2)(new java.util.BitSet))
         fitBinaryPair(predictors(gi / dependents.length), dependents(gi % dependents.length),
-          cols(0), cols(1), cols.drop(2), Array.range(0, rows.length), cfg)
+          Array(ch), Array(Array.range(0, rows.length)), 0, 1, Array.range(2, k + 2), cfg)
       }
       .collect()
     binaryGrid(spark, cfg, fitted)
   }
 
-  /** THE per-pair firth/logistic fitter: the pair's rows are `sel`
-    * (non-empty, ascending) of the column arrays `x`, `y` and
-    * `covs(c)`, the columns of `cfg`'s covariates. Validation order,
-    * failed_reason text, the per-pair constant-covariate drop and the
-    * equation mirror analysis.py:168-206. */
+  /** THE per-pair firth/logistic fitter: the pair's rows are `sels(p)`
+    * (ascending) of each chunk `parts(p)`, chunk by chunk, at least one
+    * of them; `x`, `y` and `covs` are column indices in the chunks,
+    * `covs` those of `cfg`'s covariates. The rows go from the chunks
+    * straight into the packed design. Validation order, failed_reason
+    * text, the per-pair constant-covariate drop and the equation mirror
+    * analysis.py:168-206. */
   private def fitBinaryPair(
-      pred: String, dep: String, x: Array[Double], y: Array[Double],
-      covs: Array[Array[Double]], sel: Array[Int], cfg: Config): BinResult = {
+      pred: String, dep: String, parts: Array[ColumnChunk], sels: Array[Array[Int]],
+      x: Int, y: Int, covs: Array[Int], cfg: Config): BinResult = {
     val covNames = cfg.covariates
-    val n = sel.length
+    val n = sels.map(_.length).sum
+    // the pair's values of chunk column `c`, in row order, into `out` from `off`
+    def gather(c: Int, out: Array[Double], off: Int): Unit = {
+      var i = off
+      var p = 0
+      while (p < parts.length) {
+        val v = parts(p).values(c)
+        val sel = sels(p)
+        var s = 0
+        while (s < sel.length) { out(i) = v(sel(s)); i += 1; s += 1 }
+        p += 1
+      }
+    }
+    val yd = new Array[Double](n)
+    gather(y, yd, 0)
     var ySum = 0.0
     var i = 0
-    while (i < n) { ySum += y(sel(i)); i += 1 }
+    while (i < n) { ySum += yd(i); i += 1 }
     val cases = math.round(ySum)
     val reason = viability(n, cases, cfg.minCaseCount)
     if (reason != null) return failedRow(pred, dep, reason)
+    val p0 = sels.indexWhere(_.nonEmpty)
     val keptCovs = covNames.indices.filter { c =>
-      val v = covs(c)
-      val first = v(sel(0))
-      sel.exists(r => v(r) != first)
+      val first = parts(p0).values(covs(c))(sels(p0)(0))
+      parts.indices.exists { p =>
+        val v = parts(p).values(covs(c))
+        sels(p).exists(r => v(r) != first)
+      }
     }
     val keptNames = keptCovs.map(covNames)
     val equation = s"$dep ~ $pred + ${keptNames.mkString(" + ")}"
@@ -573,23 +570,9 @@ object Association {
     // straight to the raw fitters (no DenseMatrix tabulate/copy)
     val kk = keptCovs.size + 2
     val xd = new Array[Double](n * kk)
-    val yd = new Array[Double](n)
-    i = 0
-    while (i < n) {
-      val r = sel(i)
-      xd(i) = x(r)
-      xd((kk - 1) * n + i) = 1.0
-      yd(i) = y(r)
-      i += 1
-    }
-    var j = 0
-    while (j < keptCovs.size) {
-      val v = covs(keptCovs(j))
-      val base = (j + 1) * n
-      i = 0
-      while (i < n) { xd(base + i) = v(sel(i)); i += 1 }
-      j += 1
-    }
+    gather(x, xd, 0)
+    keptCovs.indices.foreach(j => gather(covs(keptCovs(j)), xd, (j + 1) * n))
+    java.util.Arrays.fill(xd, (kk - 1) * n, kk * n, 1.0)
     try {
       val r =
         if (cfg.model == "firth")
@@ -600,404 +583,6 @@ object Association {
       case e: Throwable =>
         failedRow(pred, dep, failureReason(e), cases, n - cases, n, equation)
     }
-  }
-
-  // ------------------------------------------ distributed IRLS (gram)
-
-  /** Doubles one task's scan buffer may hold (16 MiB). A scan deals its
-    * slots into slices of `GramBufferDoubles / width` slots and runs
-    * once per slice, so any grid fits. */
-  private val GramBufferDoubles = 1 << 21
-
-  private def budgetSlice(width: Int): Int = math.max(1, GramBufferDoubles / width)
-
-  /** Per-row accumulation of one gram scan into one slot of a slice
-    * buffer at `off`, from the design features `x` = [x, covs…, 1], the
-    * response `y` and the slot's beta `b`. Of a slot's `width` doubles
-    * the first `sums` add across tasks; the rest take the min. */
-  private abstract class GramKernel(val width: Int, val sums: Int) extends Serializable {
-    def add(x: Array[Double], y: Double, b: Array[Double], buf: Array[Double], off: Int): Unit
-
-    /** `n` slots at the merge identity: sums 0, minima +∞. */
-    def zero(n: Int): Array[Double] = {
-      val buf = new Array[Double](n * width)
-      if (sums < width) (0 until n).foreach(s =>
-        java.util.Arrays.fill(buf, s * width + sums, (s + 1) * width, Double.PositiveInfinity))
-      buf
-    }
-  }
-
-  /** The first pass, one slot per pair: [n, Σy, X'WX and score at β=0
-    * (where w = ¼ exactly), per-covariate min, per-covariate −max]. A
-    * NaN sets both to −∞: the in-task fitter keeps a covariate holding
-    * one, since NaN equals no value. */
-  private final class FirstPassKernel(m: Int)
-      extends GramKernel(2 + m * (m + 1) / 2 + m + 2 * (m - 2), 2 + m * (m + 1) / 2 + m) {
-    private val k = m - 2
-    private val moments = new StepKernel(m, penalized = false)
-    private val beta0 = new Array[Double](m)
-    def add(x: Array[Double], y: Double, b: Array[Double], buf: Array[Double], off: Int): Unit = {
-      buf(off) += 1.0
-      buf(off + 1) += y
-      moments.add(x, y, beta0, buf, off + 2)
-      var c = 0
-      while (c < k) {
-        val v = x(c + 1)
-        val lo = off + sums + c
-        if (v.isNaN) { buf(lo) = Double.NegativeInfinity; buf(lo + k) = Double.NegativeInfinity }
-        if (v < buf(lo)) buf(lo) = v
-        if (-v < buf(lo + k)) buf(lo + k) = -v
-        c += 1
-      }
-    }
-  }
-
-  /** A Newton step's scan, one slot per active fit: X'WX and the score
-    * at `b`, plus (penalized) the fully-symmetric third-order tensor
-    * T_jab = Σ w(½−p)·xⱼx_a x_b. Weight floor 1e-12 (Firth, as
-    * `Models.etaPW`) or 1e-10 (logistic). */
-  private final class StepKernel(m: Int, penalized: Boolean) extends GramKernel(
-      m * (m + 1) / 2 + m + (if (penalized) m * (m + 1) * (m + 2) / 6 else 0),
-      m * (m + 1) / 2 + m + (if (penalized) m * (m + 1) * (m + 2) / 6 else 0)) {
-    private val nS = m * (m + 1) / 2
-    private val wFloor = if (penalized) 1e-12 else 1e-10
-    def add(x: Array[Double], y: Double, b: Array[Double], buf: Array[Double], off: Int): Unit = {
-      var eta = 0.0
-      var i = 0
-      while (i < m) { eta += x(i) * b(i); i += 1 }
-      val p = 1.0 / (1.0 + math.exp(-eta))
-      val w = math.max(p * (1.0 - p), wFloor)
-      val r1 = y - p
-      var idx = off
-      i = 0
-      while (i < m) {
-        val wi = w * x(i)
-        var j = i
-        while (j < m) { buf(idx) += wi * x(j); idx += 1; j += 1 }
-        buf(off + nS + i) += x(i) * r1
-        i += 1
-      }
-      if (penalized) {
-        val u = w * (0.5 - p)
-        var ti = off + nS + m
-        i = 0
-        while (i < m) {
-          val ui = u * x(i)
-          var j = i
-          while (j < m) {
-            val uij = ui * x(j)
-            var l = j
-            while (l < m) { buf(ti) += uij * x(l); ti += 1; l += 1 }
-            j += 1
-          }
-          i += 1
-        }
-      }
-    }
-  }
-
-  /** The Firth final scan, one slot per non-failed fit: X'WX and the
-    * log-likelihood (p clamped to [1e-15, 1 − 1e-15]) at `b`. */
-  private final class FinalKernel(m: Int)
-      extends GramKernel(m * (m + 1) / 2 + 1, m * (m + 1) / 2 + 1) {
-    private val nS = m * (m + 1) / 2
-    def add(x: Array[Double], y: Double, b: Array[Double], buf: Array[Double], off: Int): Unit = {
-      var eta = 0.0
-      var i = 0
-      while (i < m) { eta += x(i) * b(i); i += 1 }
-      val p = 1.0 / (1.0 + math.exp(-eta))
-      val w = math.max(p * (1.0 - p), 1e-12)
-      val pc = math.max(math.min(p, 1.0 - 1e-15), 1e-15)
-      var idx = off
-      i = 0
-      while (i < m) {
-        val wi = w * x(i)
-        var j = i
-        while (j < m) { buf(idx) += wi * x(j); idx += 1; j += 1 }
-        i += 1
-      }
-      buf(off + nS) += y * math.log(pc) + (1.0 - y) * math.log(1.0 - pc)
-    }
-  }
-
-  /** One IRLS fit's driver-side state. `fit` 0 is the full fit, 1 the
-    * Firth LRT-null fit (predictor held at 0); `gi` is the pair's grid
-    * index, predictor index · D + dependent index. `kept` are the
-    * design coordinates of [x, covs…, 1] the pair keeps, ascending: its
-    * Newton steps solve over them (the null fit without coordinate 0)
-    * and the others stay at 0. */
-  private final class GramFit(val gi: Int, val fit: Int, val kept: Array[Int], m: Int) {
-    val free: Array[Int] = if (fit == 1) kept.filter(_ != 0) else kept
-    val beta = new Array[Double](m)
-    var conv = false
-    var failed: String = null
-    var its = 0
-    var info: Array[Double] = null // logistic: X'WX of the last step
-    var pll = Double.NaN
-    var se0 = Double.NaN
-    var finFailed: String = null
-  }
-
-  /** Every fit's `kernel` sums over its pair's rows of the `chunks`
-    * ([predictors, covariates, dependents] of `nP`, `k` and `nD`
-    * columns): the fits are dealt into slices of `sliceOf(width)`, and
-    * each slice is ONE shuffle-free job whose tasks accumulate into one
-    * slice buffer at the fits' betas, merged on the driver as tasks
-    * finish. Each slot walks its pair's rows in ascending order, so a
-    * slot sees its rows in input order in every scan. The driver's
-    * totals start at the merge identity, so a plan with no rows or no
-    * partitions yields zero counts. */
-  private def gramScan(
-      chunks: RDD[ColumnChunk], nP: Int, k: Int, nD: Int, kernel: GramKernel,
-      fits: Array[GramFit], sliceOf: Int => Int): Array[Double] = {
-    val sc = chunks.sparkContext
-    val m = k + 2
-    val width = kernel.width
-    val sums = kernel.sums
-    val out = new Array[Double](fits.length * width)
-    fits.indices.grouped(math.max(1, sliceOf(width))).foreach { slice =>
-      val first = slice.head
-      val n = slice.size
-      val bc = sc.broadcast((slice.map(fits(_).gi).toArray, slice.map(fits(_).beta).toArray))
-      val total = kernel.zero(n)
-      sc.runJob(chunks, (it: Iterator[ColumnChunk]) => {
-        val (gis, bs) = bc.value
-        val buf = kernel.zero(n)
-        val x = new Array[Double](m)
-        x(m - 1) = 1.0
-        it.foreach { ch =>
-          val covs = Array.tabulate(k)(c => ch.values(nP + c))
-          val covOk = ch.complete(nP until nP + k)
-          var rows: java.util.BitSet = null
-          var s = 0
-          while (s < n) {
-            val (pi, y) = (gis(s) / nD, nP + k + gis(s) % nD)
-            // a Firth pair's two fits sit in adjacent slots
-            if (s == 0 || gis(s) != gis(s - 1)) rows = ch.pairRows(covOk, pi, y)
-            val (xs, ys) = (ch.values(pi), ch.values(y))
-            var r = rows.nextSetBit(0)
-            while (r >= 0) {
-              x(0) = xs(r)
-              var c = 0
-              while (c < k) { x(c + 1) = covs(c)(r); c += 1 }
-              kernel.add(x, ys(r), bs(s), buf, s * width)
-              r = rows.nextSetBit(r + 1)
-            }
-            s += 1
-          }
-        }
-        buf
-      }, (_: Int, part: Array[Double]) => {
-        var i = 0
-        while (i < part.length) {
-          if (i % width < sums) total(i) += part(i)
-          else if (part(i) < total(i)) total(i) = part(i)
-          i += 1
-        }
-      })
-      bc.destroy()
-      System.arraycopy(total, 0, out, first * width, n * width)
-    }
-    out
-  }
-
-  /** Index of (i, j) in an m×m symmetric matrix's packed upper triangle. */
-  private def triOf(m: Int, i: Int, j: Int): Int = {
-    val (a, b) = (math.min(i, j), math.max(i, j))
-    a * m - a * (a - 1) / 2 + (b - a)
-  }
-
-  /** The symmetric matrix packed from `buf(off)` on (m×m), read at
-    * the coordinates `coords`. */
-  private def unpack(buf: Array[Double], off: Int, m: Int, coords: Array[Int]): DenseMatrix[Double] =
-    DenseMatrix.tabulate(coords.length, coords.length)((i, j) => buf(off + triOf(m, coords(i), coords(j))))
-
-  /** The Firth-modified score over the design coordinates `kept` at a
-    * Newton scan's moments: X'WX (upper triangle `s`), the score `g` and
-    * the third-order tensor `t`: scoreⱼ = gⱼ + Σ_ab (X'WX)⁻¹_ab·T_jab
-    * over a, b in `kept` — the hat-diagonal term of the kept design with
-    * the row sum pushed into T (`tIdx` maps (j, a, b) to the sorted
-    * triple's slot). Throws on a singular kept X'WX. */
-  private def firthScore(
-      s: Array[Double], g: Array[Double], t: Array[Double], tIdx: Array[Int],
-      m: Int, kept: Array[Int]): Array[Double] = {
-    val covm: DenseMatrix[Double] = breeze.linalg.inv(unpack(s, 0, m, kept))
-    val score = g.clone()
-    for (j <- kept; a <- kept.indices; c <- kept.indices)
-      score(j) += covm(a, c) * t(tIdx((j * m + kept(a)) * m + kept(c)))
-    score
-  }
-
-  /** Distributed logistic IRLS over the wide frame: [[gramFit]]
-    * without the Firth penalty. Each fit stops at its own |Δβ| < tol
-    * (or maxIter), as `Models.logisticRaw` does, and the Wald se comes
-    * from the last step's X'WX. */
-  def logisticGram(df: DataFrame, cfg: Config): DataFrame =
-    gramFit(df, cfg, penalized = false)
-
-  /** Distributed Firth-penalized IRLS over the wide frame, the
-    * reference's default model (cli.py:105-111): [[gramFit]] with the
-    * penalty. Semantics mirror `Models.firthRaw` (logistf defaults: step
-    * cap 5, no half-steps, convergence on max|Δβ| < tol AND max|score| <
-    * tol): each pair runs the full fit and the LRT-null fit (predictor
-    * held at 0) concurrently from β=0, the null fit with a budget of
-    * 2×maxIter because it starts cold (the in-task fitter reruns its
-    * warm-started null fit this way when that does not converge). One
-    * fused final scan gives each fit's penalized log-likelihood (ll +
-    * ½·log det X'WX) and the full fit's Wald se; the p-value is the χ²₁
-    * LRT. */
-  def firthGram(df: DataFrame, cfg: Config): DataFrame =
-    gramFit(df, cfg, penalized = true)
-
-  /**
-   * The gram IRLS fitter behind [[logisticGram]] and [[firthGram]], for
-   * a cohort whose column block does not fit one task ([[binaryWide]]).
-   * It never holds a pair's rows in one task: the wide frame's column
-   * chunks ([[columnChunks]]) are persisted for the fit and scanned
-   * once per Newton step, and every scan ([[gramScan]]) is one
-   * shuffle-free job whose tasks accumulate per-pair moments — X'WX,
-   * the score and, penalized, the third-order tensor — into one flat
-   * buffer. The driver merges the buffers, solves the small systems and
-   * broadcasts the new betas. A scan deals its slots into slices of at
-   * most `sliceOf(width)` so a task's buffer stays under
-   * `GramBufferDoubles`; a larger grid costs more scans per step, not
-   * more memory. Persisting the chunks also freezes a nondeterministic
-   * upstream: every scan reads the same rows in the same order.
-   *
-   * Each pair follows the in-task fitter's rules. The first pass gives
-   * its count, case sum, covariate ranges and β=0 moments (exact: w =
-   * ¼, tensor 0), which are Newton step 1. The viability gates run on
-   * the counts; a covariate whose range is one value within the pair
-   * is dropped from its design: the Newton steps, the Firth tensor
-   * term, the final solve, the Wald se and the `equation` read only the
-   * kept coordinates. Each fit freezes once converged. The driver's
-   * per-fit steps are the in-task fitter's own (`Models.newtonStep`,
-   * `Models.firthFinal`, `Models.wald`, `Models.lrt`), and per-row
-   * operand order is the same in every scan, so results match the
-   * in-task fitter to FP summation order (spec-pinned in
-   * SourcesAndGramSpec, constant covariates and separated pairs
-   * included).
-   */
-  private[operators] def gramFit(
-      df: DataFrame, cfg: Config, penalized: Boolean,
-      sliceOf: Int => Int = budgetSlice): DataFrame = {
-    val chunks = columnChunks(df, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    val fitted = try gramFits(chunks, cfg, penalized, sliceOf) finally chunks.unpersist()
-    binaryGrid(df.sparkSession, cfg, fitted)
-  }
-
-  /** [[gramFit]]'s rows before grid completion: one per pair with at
-    * least one row. */
-  private def gramFits(chunks: RDD[ColumnChunk], cfg: Config, penalized: Boolean,
-      sliceOf: Int => Int): Seq[BinResult] = {
-    val k = cfg.covariates.size
-    val m = k + 2
-    val nS = m * (m + 1) / 2
-    val predictors = cfg.predictors.toArray
-    val dependents = cfg.dependents.toArray
-    val tol = cfg.tol
-    def scan(kernel: GramKernel, fits: Array[GramFit]): Array[Double] =
-      gramScan(chunks, predictors.length, k, dependents.length, kernel, fits, sliceOf)
-
-    val firstPass = new FirstPassKernel(m)
-    val nF = firstPass.width
-    val grid = predictors.length * dependents.length
-    val all = Array.range(0, m)
-    val first = scan(firstPass, Array.tabulate(grid)(new GramFit(_, 0, all, m)))
-    val out = mutable.ArrayBuffer.empty[BinResult]
-    // pairs with no rows are left to the grid completion
-    val viable = (0 until grid).filter(gi => first(gi * nF) > 0).filter { gi =>
-      val reason = viability(first(gi * nF).toLong, first(gi * nF + 1).toLong, cfg.minCaseCount)
-      if (reason != null)
-        out += failedRow(predictors(gi / dependents.length), dependents(gi % dependents.length), reason)
-      reason == null
-    }
-    // x, the intercept and each covariate whose min is below its max
-    def kept(gi: Int): Array[Int] = {
-      val lo = gi * nF + firstPass.sums - 1
-      all.filter(j => j == 0 || j == m - 1 || first(lo + j) < -first(lo + k + j))
-    }
-    val fits = viable.flatMap { gi =>
-      val coords = kept(gi)
-      (if (penalized) Seq(0, 1) else Seq(0)).map(new GramFit(gi, _, coords, m))
-    }.toArray
-    val maxStep = if (penalized) 5.0 else Double.PositiveInfinity
-    val tIdx = Array.tabulate(m * m * m) { q =>
-      val Seq(i, j, l) = Seq(q / (m * m), q / m % m, q % m).sorted
-      // slot of (i ≤ j ≤ l) in the kernel's i, j, l loop order
-      (0 until i).map(a => (m - a) * (m - a + 1) / 2).sum +
-        (i until j).map(b => m - b).sum + (l - j)
-    }
-    val stepKernel = new StepKernel(m, penalized)
-    def active: Array[GramFit] = fits.filter(f => f.failed == null && !f.conv &&
-      f.its < (if (f.fit == 1) 2 * cfg.maxIter else cfg.maxIter))
-    var it = 0
-    var act = active
-    while (act.nonEmpty) {
-      // step 1 takes the first pass's β=0 moments
-      val mom = if (it == 0) first else scan(stepKernel, act)
-      act.zipWithIndex.foreach { case (f, a) =>
-        val off = if (it == 0) f.gi * nF + 2 else a * stepKernel.width
-        val s = java.util.Arrays.copyOfRange(mom, off, off + nS)
-        val g = java.util.Arrays.copyOfRange(mom, off + nS, off + nS + m)
-        val t =
-          if (!penalized) null
-          else if (it == 0) new Array[Double](stepKernel.width - nS - m)
-          else java.util.Arrays.copyOfRange(mom, off + nS + m, off + stepKernel.width)
-        try {
-          val score = if (t == null) g else firthScore(s, g, t, tIdx, m, f.kept)
-          val (step, gmax) =
-            Models.newtonStep(f.beta, (a, b) => s(triOf(m, a, b)), score, f.free, maxStep)
-          f.conv = step < tol && (!penalized || gmax < tol)
-          f.info = s
-        } catch {
-          case e: Throwable => f.failed = failureReason(e)
-        }
-        f.its += 1
-      }
-      it += 1
-      act = active
-    }
-
-    if (penalized) {
-      val fin = fits.filter(_.failed == null)
-      val finalKernel = new FinalKernel(m)
-      val tot = scan(finalKernel, fin)
-      fin.zipWithIndex.foreach { case (f, a) =>
-        val off = a * finalKernel.width
-        try {
-          val (se0, halfLogDet) = Models.firthFinal(unpack(tot, off, m, f.kept))
-          f.se0 = se0
-          f.pll = tot(off + nS) + halfLogDet
-        } catch {
-          case e: Throwable => f.finFailed = failureReason(e)
-        }
-      }
-    }
-    fits.grouped(if (penalized) 2 else 1).foreach { pf =>
-      val full = pf.head
-      val gi = full.gi
-      val pred = predictors(gi / dependents.length)
-      val dep = dependents(gi % dependents.length)
-      val (n, cases) = (first(gi * nF).toLong, first(gi * nF + 1).toLong)
-      val keptNames = full.kept.slice(1, full.kept.length - 1).map(j => cfg.covariates(j - 1))
-      val equation = s"$dep ~ $pred + ${keptNames.mkString(" + ")}"
-      // a fit that throws keeps the pair's counts and equation, as in-task
-      def failRow(reason: String): BinResult =
-        failedRow(pred, dep, reason, cases, n - cases, n, equation)
-      def row(r: FitResult): BinResult = fittedRow(pred, dep, r, cases, n, equation)
-      out += ((pf.map(_.failed) ++ pf.map(_.finFailed)).find(_ != null) match {
-        case Some(reason) => failRow(reason)
-        case None if penalized =>
-          row(Models.lrt(full.beta(0), full.se0, full.pll, pf(1).pll, full.conv && pf(1).conv))
-        case None =>
-          try row(Models.wald(full.beta(0), unpack(full.info, 0, m, full.kept), full.conv))
-          catch {
-            case e: Throwable => failRow(failureReason(e))
-          }
-      })
-    }
-    out.toSeq
   }
 
   /**

@@ -52,8 +52,7 @@ object Graph {
   /** Driver-resident regime gate for the iterative rank loops: below
     * this edge count the whole power iteration runs on the driver
     * over collected CSR arrays (ONE collect job; zero per-iteration
-    * jobs) — the firthGram driver-step regime applied to graphs. The
-    * integer rank state makes the twin EXACT, not approximate:
+    * jobs). The integer rank state makes the twin EXACT, not approximate:
     * contributions are integer floor-divs summed in any order, and
     * the single double op per vertex replicates Spark's Round
     * ([[sparkRound0]]). Above the gate the declarative loop runs

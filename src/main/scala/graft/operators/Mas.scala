@@ -1520,40 +1520,6 @@ object Mas {
     icdToPhecode(coded, icdMap).orderBy("person_id", "phecode")
   }
 
-  /** a10: the DISTRIBUTED logistic IRLS (Association.logisticGram) on
-    * the same 2×2 tables as a03 — one shuffle-free moment scan per
-    * Newton step, the small solves on the driver. The saturated-model
-    * MLE equals the sample log-odds-ratio, so the closed-form cell
-    * oracle applies unchanged. */
-  def a10AssocLogisticGram(spark: SparkSession, dir: String): DataFrame = {
-    val cfg = Association.Config(Seq("xbin"), Seq("d_urgent", "d_open", "d_big", "d_many"),
-      model = "logistic", minCaseCount = 5, maxIter = 100, tol = 1e-12)
-    Association.logisticGram(cohort(spark, dir), cfg)
-      .select(col("predictor"), col("dependent"),
-        r4(col("beta")).as("beta"), r4(col("se")).as("se"),
-        r4(col("OR")).as("OR"),
-        col("cases"), col("controls"), col("total_n"))
-      .orderBy("dependent")
-  }
-
-  /** a17: the DISTRIBUTED Firth IRLS (Association.firthGram) on the
-    * same 2×2 tables as a04 — the scale path for the reference's
-    * DEFAULT model: ONE shuffle-free moment scan per Newton step (the
-    * hat-diagonal score reconstructs from the same scan's third-order
-    * moment tensor), the penalized solves on the driver. Same Haldane
-    * closed-form beta/OR oracle as a04; equality with the in-task
-    * fitter is spec-pinned (SourcesAndGramSpec, incl. a
-    * multi-covariate shape). */
-  def a17AssocFirthGram(spark: SparkSession, dir: String): DataFrame = {
-    val cfg = Association.Config(Seq("xbin"), Seq("d_urgent", "d_open", "d_big", "d_many"),
-      model = "firth", minCaseCount = 5, maxIter = 200, tol = 1e-11)
-    Association.firthGram(cohort(spark, dir), cfg)
-      .select(col("predictor"), col("dependent"),
-        r4(col("beta")).as("beta"), r4(col("OR")).as("OR"),
-        col("cases"), col("controls"), col("total_n"))
-      .orderBy("dependent")
-  }
-
   /** Half-away-from-zero to the 1e-6 grid — the Similarity.qMicro
     * rule, so driver-side Newton steps land on the same doubles as
     * DuckDB `round(x, 6)`. */
@@ -3754,8 +3720,8 @@ object Mas {
       (cohortSql + "\n" +
         Seq("d_urgent", "d_open", "d_big", "d_many").map(logisticBranch)
           .mkString("", "\nUNION ALL\n", "\nORDER BY dependent")),
-    // distributed Firth converges to the same penalized MLE as a04 →
-    // same Haldane closed-form beta/OR oracle
+    // Firth at a17's tolerance converges to the same penalized MLE as
+    // a04 → same Haldane closed-form beta/OR oracle
     "a17_assoc_firth_gram" ->
       (cohortSql + "\n" +
         Seq("d_urgent", "d_open", "d_big", "d_many").map(firthBranch)

@@ -75,13 +75,13 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("the compact last line parses and fits the tail bound at the worst case") {
     val big = 999999.99
     val heads = Seq("mas_firth_5000x1800x5cov", "mas_firth_5000x1800x20cov",
-      "mas_linear_5000x1800x5cov", "mas_firth_gram_5000x1800x5cov").map(_ -> big)
+      "mas_linear_5000x1800x5cov").map(_ -> big)
     val families = Seq("d03", "d05b", "d10", "t20", "d21", "d16", "e16", "d22", "c16",
-      "m22", "a46", "a49", "g02", "g01", "t13", "mas_firth", "mas_linear", "mas_firth_gram")
+      "m22", "a46", "a49", "g02", "g01", "t13", "mas_firth", "mas_linear")
     val slope = """"docs":[999999,9999990]""" +:
       families.map(Bench.slopeEntry(_, big, big, 999.9, 999.9))
-    assert(slope.size == 19)
-    val reps = Seq("mas_firth", "mas_firth20", "mas_linear", "mas_firth_gram")
+    assert(slope.size == 18)
+    val reps = Seq("mas_firth", "mas_firth20", "mas_linear")
       .map(_ -> Seq(big, big, big))
     val h = Bench.Headline(heads.map(_._2).sum + 300 * big, heads, slope, Nil, reps, 32, 257,
       """"load_gate":[999.9,600,999.9]""", (999.999, 999.999), 999.999, "/data/testdata/sf0.1")
@@ -91,8 +91,8 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val node = new ObjectMapper().readTree(line)
     assert(node.get("metric").asText == "total")
     assert(node.get("value").isNumber)
-    assert(node.get("queries").size == 4)
-    assert(node.get("scale_slope").size == 19)
+    assert(node.get("queries").size == 3)
+    assert(node.get("scale_slope").size == 18)
     assert(node.get("mas_firth_reps").size == 3)
   }
 

@@ -1078,7 +1078,7 @@ class JoinsCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cp64 = operators.Graph.triangles(e, hubCap = 64)
       .agg(sum(col("n_triangles"))).head().getLong(0)
     assert(cp16 > 0 && cp16 <= cp64 && cp64 <= ex)
-    // the r16 agreement measurement (BENCH_G02_HUBCAP_r16.json):
+    // the r16 agreement measurement:
     // cap=64 keeps 17 of the exact top-20 at this scale (degrading
     // with density: 14/20 at 10x edges, 5/20 at 100x) — pin the
     // documented level with margin so a ranking consumer knows what

@@ -48,30 +48,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.head.getAs[Double]("beta") > 0.5)
   }
 
-  test("--distributed routes binary fits through the Gram paths with identical results") {
-    def run(dist: Boolean, model: String) = Pipeline.run(cohortDf, GraftConfig(
-      input = "", predictors = "x", dependents = "d1,d2",
-      covariates = "z", model = model, minCaseCount = 10,
-      distributed = dist))
-      .collect().map(r => r.getAs[String]("dependent") -> r).toMap
-    for (model <- Seq("firth", "logistic")) {
-      val inTask = run(dist = false, model)
-      val gram = run(dist = true, model)
-      assert(gram.keySet == inTask.keySet, model)
-      for (d <- gram.keys; c <- Seq("pval", "beta", "se", "OR")) {
-        assert(math.abs(gram(d).getAs[Double](c) - inTask(d).getAs[Double](c)) < 1e-5,
-          s"$model $d $c")
-      }
-      for (d <- gram.keys) {
-        assert(gram(d).getAs[String]("equation") == inTask(d).getAs[String]("equation"),
-          s"$model $d equation")
-      }
-    }
-    // CLI flag parses (graft extension, not a reference flag)
-    assert(Main.parseArgs(Array("-i", "a", "-p", "p", "-d", "d", "--distributed")).distributed)
-    assert(!Main.parseArgs(Array("-i", "a", "-p", "p", "-d", "d")).distributed)
-  }
-
   test("--phewas with no --phecode-defs annotates from the bundled public catalog") {
     val sess = spark
     import sess.implicits._
@@ -188,6 +164,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         model = "logistic", missingCovariateValues = fill, minCaseCount = 5)))
       assert(msg.contains("'seg'") && msg.contains(fill), msg)
     }
+  }
+
+  test("distributed = true fails before any job; --distributed is an unknown flag") {
+    val msg = configError(Pipeline.run(cohortDf, GraftConfig(input = "", predictors = "x",
+      dependents = "d1,d2", covariates = "z", minCaseCount = 10, distributed = true)))
+    assert(msg.contains("gram IRLS") && msg.contains("removed"), msg)
+    val flag = intercept[IllegalArgumentException](
+      Main.parseArgs(Array("-i", "a", "-p", "p", "-d", "d", "--distributed")))
+    assert(flag.getMessage.contains("Unknown flag --distributed"), flag.getMessage)
   }
 
   // degenerate column specs: each names the spec, before any job
@@ -466,9 +451,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs.contains("graft/read"), jobs)
   }
 
+  test("without output, Pipeline.run and a CLI run leave no job without a graft label") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nooutput").toString
+    cohortDf.write.parquet(s"$dir/cohort.parquet")
+    val cfg = GraftConfig(input = s"$dir/cohort.parquet", predictors = "x", dependents = "d1,d2",
+      covariates = "z,seg", categoricalCovariates = "seg", model = "firth", minCaseCount = 10)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val run = observing { rows = Pipeline.run(spark, cfg).collect() }.jobs.map(_._1)
+    assert(rows.length == 2 && rows.head.getAs[Double]("pval") <= rows(1).getAs[Double]("pval"))
+    assert(run.nonEmpty && run.forall(d => d != null && d.startsWith("graft/")), run)
+    assert(run.contains("graft/postprocess"), run)
+    val cli = observing(Main.run(spark, cfg)).jobs.map(_._1)
+    assert(cli.nonEmpty && cli.forall(d => d != null && d.startsWith("graft/")), cli)
+  }
+
   test("a 20,001-row cohort fits in column blocks: a sex-specific code drops sex") {
-    // above the row count that used to route binary fits to the gram
-    // IRLS; every cohort size takes the same per-pair rule and one fit job
+    // every cohort size takes the same per-pair rule and one fit job
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(31)
@@ -503,8 +501,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val linear = binary.copy(dependents = "z", covariates = "sex", categoricalCovariates = "",
       model = "linear", quantitative = true)
     for ((name, cfg) <- Seq("firth" -> binary, "logistic" -> binary.copy(model = "logistic"),
-        "distributed firth" -> binary.copy(distributed = true), "linear" -> linear)) {
-      val plans = observe(cfg.copy(output = s"$dir/out_${name.replace(' ', '_')}")).plans
+        "linear" -> linear)) {
+      val plans = observe(cfg.copy(output = s"$dir/out_$name")).plans
       assert(plans.nonEmpty, name)
       val generate = plans.filter(_.toString.contains("Generate "))
       assert(generate.isEmpty, s"$name: ${generate.mkString("\n")}")

@@ -122,142 +122,30 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def byDep(df: org.apache.spark.sql.DataFrame): Map[String, org.apache.spark.sql.Row] =
     df.collect().map(r => r.getAs[String]("dependent") -> r).toMap
 
-  /** The column-block (in-task) fit of a wide frame. */
-  private def inTask(wide: org.apache.spark.sql.DataFrame, cfg: Association.Config) =
-    byDep(Association.binaryWide(wide, cfg, gram = false))
+  /** `Association.assoc`'s fit of a wide frame, by dependent. */
+  private def fit(wide: org.apache.spark.sql.DataFrame, cfg: Association.Config) =
+    byDep(Association.assoc(wide, cfg))
 
-  /** The gram fit of a wide frame, with the model's entry point. */
-  private def gram(wide: org.apache.spark.sql.DataFrame, cfg: Association.Config) =
-    byDep(if (cfg.model == "firth") Association.firthGram(wide, cfg)
-          else Association.logisticGram(wide, cfg))
-
-  test("distributed Gram IRLS matches the in-task logistic fitter") {
+  test("the binary fits apply the viability gates, for firth and logistic") {
     val sess = spark
     import sess.implicits._
-    val rng = new scala.util.Random(13)
-    val wide = (0 until 600).map { _ =>
-      val x = rng.nextGaussian()
-      val z = rng.nextGaussian()
-      (x, z, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.9 * x - 0.5)))) 1.0 else 0.0,
-        if (rng.nextDouble() < 0.25) 1.0 else 0.0)
-    }.toDF("x", "z", "dep_a", "dep_b")
-    val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
-      model = "logistic", minCaseCount = 5, maxIter = 50, tol = 1e-9)
-    val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
-    for (d <- Seq("dep_a", "dep_b")) {
-      for (c <- Seq("beta", "se", "pval"))
-        assert(math.abs(gramRows(d).getAs[Double](c) - blocks(d).getAs[Double](c)) < 1e-6, s"$d $c")
-      assert(gramRows(d).getAs[Long]("cases") == blocks(d).getAs[Long]("cases"), d)
-      assert(gramRows(d).getAs[Boolean]("converged"), d)
-    }
-  }
-
-  test("distributed Firth IRLS matches the in-task firth fitter incl. LRT pval") {
-    val sess = spark
-    import sess.implicits._
-    val rng = new scala.util.Random(29)
-    val wide = (0 until 500).map { _ =>
-      val x = rng.nextGaussian()
-      val z = rng.nextGaussian()
-      (x, z, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.8 * x - 0.4)))) 1.0 else 0.0,
-        if (rng.nextDouble() < 0.3) 1.0 else 0.0)
-    }.toDF("x", "z", "dep_a", "dep_b")
-    // logistf defaults (maxit 25, gtol/xtol 1e-5) — the reference's
-    // default-model configuration, so the equality pin covers the
-    // config the engine actually runs
-    val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z"),
-      model = "firth", minCaseCount = 5)
-    val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
-    for (d <- Seq("dep_a", "dep_b")) {
-      for (c <- Seq("beta", "se", "pval", "OR"))
-        assert(math.abs(gramRows(d).getAs[Double](c) - blocks(d).getAs[Double](c)) < 1e-6, s"$d $c")
-      assert(gramRows(d).getAs[Long]("cases") == blocks(d).getAs[Long]("cases"), d)
-      assert(gramRows(d).getAs[Boolean]("converged"), d)
-    }
-  }
-
-  test("distributed Firth IRLS matches the in-task fitter on a multi-covariate shape") {
-    // the DuckDB oracle only checks a17's Haldane 2x2 closed form;
-    // equality with the in-task fitter on a 3-covariate design is the
-    // stronger guarantee (round-8 verdict task 5)
-    val sess = spark
-    import sess.implicits._
-    val rng = new scala.util.Random(47)
-    val wide = (0 until 800).map { _ =>
-      val x = rng.nextGaussian()
-      val z1 = rng.nextGaussian(); val z2 = rng.nextGaussian()
-      val z3 = if (rng.nextDouble() < 0.4) 1.0 else 0.0
-      val eta = 0.7 * x - 0.3 * z1 + 0.5 * z2 - 0.2 * z3 - 0.4
-      (x, z1, z2, z3, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-eta))) 1.0 else 0.0,
-        if (rng.nextDouble() < 0.2) 1.0 else 0.0)
-    }.toDF("x", "z1", "z2", "z3", "dep_a", "dep_b")
-    val cfg = Association.Config(Seq("x"), Seq("dep_a", "dep_b"), Seq("z1", "z2", "z3"),
-      model = "firth", minCaseCount = 5)
-    val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
-    for (d <- Seq("dep_a", "dep_b")) {
-      for (c <- Seq("beta", "se", "pval", "OR", "ci_low", "ci_high"))
-        assert(math.abs(gramRows(d).getAs[Double](c) - blocks(d).getAs[Double](c)) < 1e-4,
-          s"$d $c: gram=${gramRows(d).getAs[Double](c)} inTask=${blocks(d).getAs[Double](c)}")
-      assert(gramRows(d).getAs[Long]("cases") == blocks(d).getAs[Long]("cases"), d)
-      assert(gramRows(d).getAs[String]("equation") == blocks(d).getAs[String]("equation"), d)
-      assert(gramRows(d).getAs[Boolean]("converged"), d)
-    }
-  }
-
-  /** 100 rows: x alternating 0/1, dep_few with 3 cases, dep_missing all null. */
-  private def fewCases = {
-    val sess = spark
-    import sess.implicits._
-    (0 until 100).map(i => (i.toDouble % 2, if (i < 3) 1.0 else 0.0, Option.empty[Double]))
+    // 100 rows: x alternating 0/1, dep_few with 3 cases, dep_missing all null
+    val fewCases = (0 until 100)
+      .map(i => (i.toDouble % 2, if (i < 3) 1.0 else 0.0, Option.empty[Double]))
       .toDF("x", "dep_few", "dep_missing")
-  }
-
-  test("distributed Firth IRLS applies the same viability gates") {
-    val cfg = Association.Config(Seq("x"), Seq("dep_few", "dep_missing"),
-      model = "firth", minCaseCount = 5)
-    val out = gram(fewCases, cfg).map { case (d, r) => d -> r.getAs[String]("failed_reason") }
-    assert(out("dep_few") == "Insufficient case count (3 cases).")
-    assert(out("dep_missing") == "No data after dropping nulls.")
-  }
-
-  test("gram fitters give the same rows at slice capacity 1, 3 and unbounded") {
-    // a scan deals its slots (pairs in the first pass, fits in the
-    // Newton and final scans) into slices and runs once per slice; the
-    // slicing must not change a row. Sums merge in a different order
-    // per slicing, so the pin on the doubles is 1e-8, not bit equality.
-    val sess = spark
-    import sess.implicits._
-    val rng = new scala.util.Random(61)
-    val wide = (0 until 400).map { i =>
-      val x = rng.nextGaussian(); val z = rng.nextGaussian()
-      (x, z, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.8 * x - 0.4)))) 1.0 else 0.0,
-        if (rng.nextDouble() < 0.3) 1.0 else 0.0, if (i < 3) 1.0 else 0.0)
-    }.toDF("x", "z", "dep_a", "dep_b", "dep_c")
-    val deps = Seq("dep_a", "dep_b", "dep_c")
     for (model <- Seq("firth", "logistic")) {
-      val cfg = Association.Config(Seq("x"), deps, Seq("z"), model = model, minCaseCount = 5)
-      val bySlots = Seq(1, 3, Int.MaxValue).map { slots =>
-        slots -> byDep(operators.GramSlices.fit(wide, cfg, slots))
-      }
-      val (_, base) = bySlots.last
-      assert(base("dep_c").getAs[String]("failed_reason") == "Insufficient case count (3 cases).")
-      for ((slots, out) <- bySlots; d <- deps) {
-        for (c <- Seq("beta", "se", "pval", "OR", "ci_low", "ci_high")) {
-          val (a, b) = (out(d).getAs[Double](c), base(d).getAs[Double](c))
-          assert((a.isNaN && b.isNaN) || math.abs(a - b) < 1e-8,
-            s"$model slots=$slots $d $c: $a vs unbounded $b")
-        }
-        for (c <- Seq("converged", "failed_reason", "equation", "cases", "controls", "total_n"))
-          assert(out(d).getAs[Any](c) == base(d).getAs[Any](c), s"$model slots=$slots $d $c")
-      }
-      for (d <- Seq("dep_a", "dep_b")) assert(base(d).getAs[Boolean]("converged"), s"$model $d")
+      val cfg = Association.Config(Seq("x"), Seq("dep_few", "dep_missing"),
+        model = model, minCaseCount = 5)
+      val out = fit(fewCases, cfg).map { case (d, r) => d -> r.getAs[String]("failed_reason") }
+      assert(out("dep_few") == "Insufficient case count (3 cases).", model)
+      assert(out("dep_missing") == "No data after dropping nulls.", model)
     }
   }
 
-  test("gram fitters drop a within-pair constant covariate as in-task") {
+  test("the binary fits drop a within-pair constant covariate") {
     // zc is constant everywhere; sex is constant within dep_sex's pair
-    // (a sex-specific code). Both fitters drop them from that pair's
-    // design and equation, so the rows agree.
+    // (a sex-specific code). The fit drops them from that pair's design
+    // and equation and still converges.
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(41)
@@ -275,22 +163,16 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
             "dep_b" -> "dep_b ~ x + z1 + sex", "dep_sex" -> "dep_sex ~ x + z1"),
           Seq("zc") -> deps.map(d => d -> s"$d ~ x + ").toMap)) {
       val cfg = Association.Config(Seq("x"), deps, covariates, model = model, minCaseCount = 5)
-      val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
+      val rows = fit(wide, cfg)
       for (d <- deps) {
         val tag = s"$model ${covariates.mkString(",")} $d"
-        assert(blocks(d).getAs[String]("equation") == equations(d), tag)
-        assert(blocks(d).getAs[Boolean]("converged"), tag)
-        for (c <- Seq("pval", "beta", "se", "OR", "ci_low", "ci_high")) {
-          val (a, b) = (blocks(d).getAs[Double](c), gramRows(d).getAs[Double](c))
-          assert(math.abs(a - b) < 1e-6, s"$tag $c: in-task $a, gram $b")
-        }
-        for (c <- Seq("equation", "cases", "controls", "total_n", "converged", "failed_reason"))
-          assert(blocks(d).getAs[Any](c) == gramRows(d).getAs[Any](c), s"$tag $c")
+        assert(rows(d).getAs[String]("equation") == equations(d), tag)
+        assert(rows(d).getAs[Boolean]("converged"), tag)
       }
     }
   }
 
-  test("gram fitters on an empty frame return the no-data grid") {
+  test("the binary fits on an empty or zero-partition frame give the no-data grid") {
     val sess = spark
     import sess.implicits._
     val wide = Seq((1.0, 2.0, 0.5, 1.0, 0.0)).toDF("x", "w", "z", "dep_a", "dep_b")
@@ -300,8 +182,7 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (input <- Seq(wide.limit(0), zeroPartitions); model <- Seq("firth", "logistic")) {
       val cfg = Association.Config(Seq("x", "w"), Seq("dep_a", "dep_b"), Seq("z"),
         model = model, minCaseCount = 5)
-      val out = (if (model == "firth") Association.firthGram(input, cfg)
-                 else Association.logisticGram(input, cfg)).collect()
+      val out = Association.assoc(input, cfg).collect()
       assert(out.map(r => (r.getAs[String]("predictor"), r.getAs[String]("dependent"))).toSet ==
         Set(("x", "dep_a"), ("x", "dep_b"), ("w", "dep_a"), ("w", "dep_b")), model)
       assert(out.forall(_.getAs[String]("failed_reason") == "No data after dropping nulls."),
@@ -309,12 +190,12 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("separated pairs: in-task and gram fits agree, for firth and logistic") {
+  test("separated pairs: no NaN pval without a failed_reason, firth and logistic") {
     // dep_sep is completely separated by x; dep_quasi is separated except
     // on a band of x where cases and controls alternate. Logistic's MLE
     // diverges on dep_sep and Firth's capped steps stop short of their
-    // limit, so neither fit converges there, but both paths must report
-    // the same row.
+    // limit, so neither fit converges there, but every row is either a
+    // number or a named failure.
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(7)
@@ -327,37 +208,11 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (model <- Seq("firth", "logistic")) {
       val cfg = Association.Config(Seq("x"), Seq("dep_sep", "dep_quasi"), Seq("z"),
         model = model, minCaseCount = 5)
-      val (blocks, gramRows) = (inTask(wide, cfg), gram(wide, cfg))
-      for (d <- Seq("dep_sep", "dep_quasi")) {
-        for (c <- Seq("pval", "beta", "se", "OR", "ci_low", "ci_high")) {
-          val (a, b) = (blocks(d).getAs[Double](c), gramRows(d).getAs[Double](c))
-          assert(a == b || math.abs(a - b) <= 1e-6 * math.max(1.0, math.abs(b)),
-            s"$model $d $c: in-task $a, gram $b")
-        }
-        for (c <- Seq("converged", "failed_reason", "cases", "controls", "total_n"))
-          assert(blocks(d).getAs[Any](c) == gramRows(d).getAs[Any](c), s"$model $d $c")
-      }
-      for (r <- blocks.values ++ gramRows.values)
+      val rows = fit(wide, cfg)
+      assert(rows.keySet == Set("dep_sep", "dep_quasi"), model)
+      for (r <- rows.values)
         assert(!(r.getAs[Double]("pval").isNaN && r.getAs[String]("failed_reason") == "nan"),
           s"$model ${r.getAs[String]("dependent")}: NaN pval on a row without a failed_reason")
     }
-  }
-
-  test("distributed Gram IRLS applies the same viability gates") {
-    val cfg = Association.Config(Seq("x"), Seq("dep_few", "dep_missing"),
-      model = "logistic", minCaseCount = 5)
-    val out = gram(fewCases, cfg).map { case (d, r) => d -> r.getAs[String]("failed_reason") }
-    assert(out("dep_few") == "Insufficient case count (3 cases).")
-    assert(out("dep_missing") == "No data after dropping nulls.")
-  }
-}
-
-package operators {
-  /** Test access to the gram fitter's slice capacity: every scan deals
-    * at most `slots` slots into one job. */
-  object GramSlices {
-    def fit(df: org.apache.spark.sql.DataFrame, cfg: Association.Config,
-        slots: Int): org.apache.spark.sql.DataFrame =
-      Association.gramFit(df, cfg, penalized = cfg.model == "firth", _ => slots)
   }
 }

@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSession
 
 /** The wide-frame paths of `Association.assoc`: column blocks against
-  * the long-format entry, block and partition invariance, collinear
-  * covariates on both binary fitters, linear partition invariance, and
-  * all-null columns on every chunk path. */
+  * the long-format entry, block and partition invariance, the block
+  * count rule, collinear covariates on the wide and the long route,
+  * linear partition invariance, and all-null columns on every chunk
+  * path. */
 class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
@@ -126,20 +127,55 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(3)
       .localCheckpoint()
     val cfg = Association.Config(Seq("x"), deps, Seq("z"), minCaseCount = 5)
-    val one = canon(Association.binaryBlocks(df, cfg, 1))
+    val one = canon(Association.binaryBlocks(df, cfg, Some(1)))
     assert(one.size == nDeps)
-    assert(canon(Association.binaryBlocks(df, cfg, 7)) == one)
-    assert(canon(Association.binaryBlocks(df, cfg, nDeps)) == one)
+    assert(canon(Association.binaryBlocks(df, cfg, Some(7))) == one)
+    assert(canon(Association.binaryBlocks(df, cfg, Some(nDeps))) == one)
     // partitioning reorders rows, so sums differ in the last bits only
-    val p1 = canon(Association.binaryBlocks(df.repartition(1), cfg, 4), Some(4))
-    assert(canon(Association.binaryBlocks(df.repartition(5), cfg, 4), Some(4)) == p1)
-    assert(canon(Association.binaryBlocks(df, cfg, 4), Some(4)) == p1)
+    val p1 = canon(Association.binaryBlocks(df.repartition(1), cfg, Some(4)), Some(4))
+    assert(canon(Association.binaryBlocks(df.repartition(5), cfg, Some(4)), Some(4)) == p1)
+    assert(canon(Association.binaryBlocks(df, cfg, Some(4)), Some(4)) == p1)
     // flipwas shape: the predictors are the blocked axis
     val flip = Association.Config(Seq("x", "z", "d5"), Seq("d1", "d2"),
       model = "logistic", minCaseCount = 5)
-    val f1 = canon(Association.binaryBlocks(df, flip, 1))
+    val f1 = canon(Association.binaryBlocks(df, flip, Some(1)))
     assert(f1.size == 6)
-    for (b <- Seq(2, 3)) assert(canon(Association.binaryBlocks(df, flip, b)) == f1)
+    for (b <- Seq(2, 3)) assert(canon(Association.binaryBlocks(df, flip, Some(b))) == f1)
+  }
+
+  test("assoc deals a block per input partition when they outnumber the cores") {
+    // 12 input partitions, 13 dependents, 2 cores: B = min(13, max(2, 12))
+    val rng = new scala.util.Random(37)
+    val deps = (0 until 13).map(j => s"d$j")
+    val rows = (0 until 360).map { _ =>
+      val x = rng.nextGaussian()
+      Row((Seq[Any](x, rng.nextGaussian()) ++ deps.indices.map { j =>
+        if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.2 * j * x - 0.6)))) 1.0 else 0.0
+      }): _*)
+    }
+    val schema = StructType((Seq("x", "z") ++ deps).map(StructField(_, DoubleType)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(12)
+      .localCheckpoint()
+    assert(df.rdd.getNumPartitions == 12 && spark.sparkContext.defaultParallelism == 2)
+    val cfg = Association.Config(Seq("x"), deps, Seq("z"), minCaseCount = 5)
+    val sc = spark.sparkContext
+    val blockStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val blockTasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "ShuffledRDD")) blockStages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (blockStages.contains(e.stageId) && e.taskInfo.successful) blockTasks.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val rule = try {
+      val out = Association.assoc(df, cfg)
+      org.apache.spark.ListenerBusDrain(sc)
+      out
+    } finally sc.removeSparkListener(listener)
+    assert(blockStages.size == 1 && blockTasks.get == 12, s"${blockTasks.get} block tasks")
+    assert(canon(rule) == canon(Association.binaryBlocks(df, cfg, Some(4))))
   }
 
   test("the block fit runs exactly one shuffle") {
@@ -149,12 +185,12 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
       case s: ShuffleDependency[_, _, _] => 1 + shuffles(s.rdd)
       case d => shuffles(d.rdd)
     }.sum
-    assert(shuffles(Association.blockFits(df, cfg, 3)) == 1)
+    assert(shuffles(Association.blockFits(df, cfg, Some(3))) == 1)
   }
 
   test("collinear covariates: both routes fail the pair with its counts and equation") {
-    // z2 = 2·z1 exactly, so X'WX is exactly singular on either route;
-    // neither covariate is constant, so neither fitter drops one
+    // z2 = 2·z1 exactly, so X'WX is exactly singular on the wide and the
+    // long route; neither covariate is constant, so neither drops one
     val sess = spark
     import sess.implicits._
     val rng = new scala.util.Random(23)
@@ -171,7 +207,6 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
         df.collect().map(r => r.getAs[String]("dependent") -> r).toMap
       val inTask = byDep(Association.assoc(wide, cfg))
       for ((route, rows) <- Seq(
-          "gram" -> byDep(Association.binaryWide(wide, cfg, gram = true)),
           "long in-task" -> byDep(Association.binary(Association.melt(wide, cfg), cfg)));
           d <- Seq("dep_a", "dep_b")) {
         val (want, got) = (inTask(d), rows(d))
@@ -236,8 +271,7 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
       model = "linear", minCaseCount = 5)), "n_observations")
     for (model <- Seq("firth", "logistic")) {
       val cfg = Association.Config(preds, deps, Seq("z"), model = model, minCaseCount = 5)
-      check(s"$model blocks", Association.binaryWide(df, cfg, gram = false), "total_n")
-      check(s"$model gram", Association.binaryWide(df, cfg, gram = true), "total_n")
+      check(s"$model blocks", Association.assoc(df, cfg), "total_n")
     }
   }
 }
