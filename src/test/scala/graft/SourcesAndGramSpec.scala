@@ -126,21 +126,20 @@ class SourcesAndGramSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def fit(wide: org.apache.spark.sql.DataFrame, cfg: Association.Config) =
     byDep(Association.assoc(wide, cfg))
 
-  test("the binary fits apply the viability gates, for firth and logistic") {
-    val sess = spark
-    import sess.implicits._
-    // 100 rows: x alternating 0/1, dep_few with 3 cases, dep_missing all null
-    val fewCases = (0 until 100)
-      .map(i => (i.toDouble % 2, if (i < 3) 1.0 else 0.0, Option.empty[Double]))
-      .toDF("x", "dep_few", "dep_missing")
-    for (model <- Seq("firth", "logistic")) {
+  for (model <- Seq("firth", "logistic"))
+    test(s"the $model fit applies the viability gates") {
+      val sess = spark
+      import sess.implicits._
+      // 100 rows: x alternating 0/1, dep_few with 3 cases, dep_missing all null
+      val fewCases = (0 until 100)
+        .map(i => (i.toDouble % 2, if (i < 3) 1.0 else 0.0, Option.empty[Double]))
+        .toDF("x", "dep_few", "dep_missing")
       val cfg = Association.Config(Seq("x"), Seq("dep_few", "dep_missing"),
         model = model, minCaseCount = 5)
       val out = fit(fewCases, cfg).map { case (d, r) => d -> r.getAs[String]("failed_reason") }
-      assert(out("dep_few") == "Insufficient case count (3 cases).", model)
-      assert(out("dep_missing") == "No data after dropping nulls.", model)
+      assert(out("dep_few") == "Insufficient case count (3 cases).")
+      assert(out("dep_missing") == "No data after dropping nulls.")
     }
-  }
 
   test("the binary fits drop a within-pair constant covariate") {
     // zc is constant everywhere; sex is constant within dep_sex's pair
