@@ -20,21 +20,24 @@ import graft.sources.Sources
  * per-pair processes over it, here preprocessing is projections and
  * filters Catalyst pushes into the scan, and the association engine's
  * fit (the binary models' block shuffle, the linear co-moment
- * merge) is the only shuffle until the (pair-count-sized)
- * postprocessing. The two exceptions need a total row order made
- * explicit (`orderCol`): forward/backward fill and RINT rank ties — a
- * distributed engine has no "file row order" (preprocessing.py:31-33
- * relies on it).
+ * merge) is the only shuffle of row data in a run: the profile's
+ * aggregate exchanges one partial row per input partition, and
+ * postprocessing none. The two exceptions need a total row order
+ * made explicit (`orderCol`): forward/backward fill and RINT rank
+ * ties — a distributed engine has no "file row order"
+ * (preprocessing.py:31-33 relies on it).
  *
  * Every job a run triggers carries its stage as the job description:
  * `graft/read`, `graft/preprocess`, `graft/fit`, `graft/postprocess` or
  * `graft/write`. Preprocessing asks the cohort its covariate
  * statistics in one aggregate (`Preprocess.profile`). Every model fits
  * every pair once, in `graft/fit` jobs, into a local relation of pair
- * rows that postprocessing and the write read; so a run without
- * `output` has fitted and postprocessed by the time it returns: its
- * result is a local relation of sorted rows. The binary models fit in
- * column blocks at every cohort size.
+ * rows. Postprocessing (Bonferroni, annotation, sort) runs on those
+ * rows on the driver, where they already are: its only jobs read the
+ * PheCode definitions. The write is one job of one partition. A run's
+ * result is the local relation of sorted rows, with or without
+ * `output`. The binary models fit in column blocks at every cohort
+ * size.
  */
 final case class GraftConfig(
     input: String,                        // parquet/csv/tsv/txt path
@@ -70,10 +73,11 @@ final case class GraftConfig(
 
 object Pipeline {
 
-  /** Resolve a comma/`i:` column spec against the frame (empty → none). */
+  /** Resolve a comma/`i:` column spec against the frame's column names
+    * (empty → none); no plan is built. */
   private def resolve(df: DataFrame, spec: String): Seq[String] =
     if (spec.trim.isEmpty) Nil
-    else Preprocess.selectColumns(df, spec).columns.toSeq
+    else Preprocess.resolveColumns(df.columns.toIndexedSeq, spec)
 
   /** Config-level validation — the reference's fail-fast contract
     * (config.py:180-196 unique sets, cli.py mutually-exclusive
@@ -211,7 +215,9 @@ object Pipeline {
         require(n < p.rows || p.rows == 0, s"All values are missing in covariate column '$c'.")
         require(n == 0, s"Missing values found in covariate column '$c': $n missing values.")
       }
-      df = Preprocess.fill(df, p.fills).drop(p.constant: _*)
+      // each is a full-width projection: skip the one with nothing to do
+      if (p.fills.nonEmpty) df = Preprocess.fill(df, p.fills)
+      if (p.constant.nonEmpty) df = df.drop(p.constant: _*)
       covariates = covariates.filterNot(p.constant.contains)
     }
 
@@ -244,9 +250,10 @@ object Pipeline {
       model = cfg.model, minCaseCount = cfg.minCaseCount))
   }
 
-  /** Bonferroni, PheCode/custom annotate, sort, write. Without
-    * `output` the sorted rows are collected here, so their jobs carry
-    * `graft/postprocess` and the caller gets a local relation. */
+  /** Bonferroni, PheCode/custom annotate and sort on the driver, over
+    * the fit's local relation (`Postprocess.onDriver`: no job but the
+    * defs' read and collect), then the write as one job of one
+    * partition. The caller gets the sorted rows as a local relation. */
   private def postprocess(raw: DataFrame, results: DataFrame, cfg: GraftConfig): DataFrame = {
     val defs: Option[DataFrame] = cfg.annotateDefs.orElse {
       if (cfg.phewas || cfg.flipwas) {
@@ -258,18 +265,14 @@ object Pipeline {
         else Sources.bundledPhecodeDefs(raw.sparkSession))
       } else None
     }
-    val out = defs.foldLeft(Postprocess.bonferroni(results)) { (df, d) =>
-      Postprocess.annotate(df, d, if (cfg.flipwas) "predictor" else cfg.annotateOn, cfg.annotateKey)
-    }
+    val sorted = Postprocess.onDriver(results, defs,
+      if (cfg.flipwas) "predictor" else cfg.annotateOn, cfg.annotateKey)
     if (cfg.output.nonEmpty) {
       // reference output naming: {prefix}_polars_mas_results.{ext}
       // (postprocessing.py:32-40); Spark writes it as a directory
       val path = s"${cfg.output}_polars_mas_results.${cfg.outputType}"
-      stage(raw.sparkSession, "write")(Postprocess.sortAndWrite(out, path, cfg.outputType,
-        "pval", tieBreak = Seq("predictor", "dependent")))
-    } else {
-      val sorted = out.orderBy(col("pval"), col("predictor"), col("dependent"))
-      raw.sparkSession.createDataFrame(java.util.Arrays.asList(sorted.collect(): _*), sorted.schema)
+      stage(raw.sparkSession, "write")(Postprocess.write(sorted.coalesce(1), path, cfg.outputType))
     }
+    sorted
   }
 }

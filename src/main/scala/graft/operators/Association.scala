@@ -37,9 +37,15 @@ import graft.operators.Preprocess.column
  *    pair. There are as many blocks as input partitions or cores,
  *    whichever is more (at most one per dependent), so a block holds no
  *    more of the dependents than one input chunk does.
- *  - The LINEAR path never materializes a pair's rows in one place: each
- *    partition folds every pair's rows into CENTERED co-moments
- *    ([[GramState]], Welford update), the states merge by pair (Chan
+ *  - The LINEAR path never materializes a pair's rows in one place:
+ *    each chunk computes shared sums once ([[LinearSums]]: the
+ *    covariate block, and every predictor's and dependent's sums over
+ *    its complete rows, on columns shifted by their means), and each
+ *    pair corrects them for the rows it drops and adds Σx·y, an O(n)
+ *    pass per pair, into CENTERED co-moments ([[GramState]]). A pair
+ *    where some variable is (nearly) constant over its rows folds them
+ *    exactly with Welford's update instead, so a within-pair constant
+ *    covariate still has zero variance. The states merge by pair (Chan
  *    merge — numerically stable at any partition count) and a small
  *    per-pair solve on the executors turns them into the fit. The
  *    shuffle carries O((k+2)²) doubles per pair and partition, never
@@ -264,8 +270,9 @@ object Association {
    * One pair's CENTERED sufficient statistics: the observation count,
    * the means and the upper triangle of the co-moment matrix
    * C_ij = Σ(v_i−μ_i)(v_j−μ_j) over [x, y, covs…]. Rows fold in with
-   * Welford's update ([[add]]), states merge with Chan et al.'s pairwise
-   * merge ([[merge]]).
+   * Welford's update ([[add]]), a chunk's pair starts from its shared
+   * sums ([[GramState.fromSums]], see [[LinearSums]]), and states merge
+   * with Chan et al.'s pairwise merge ([[merge]]).
    *
    * Why centered: raw Σ f_i·f_j sums of ~1e5-magnitude features lose
    * ~10 significant digits to cancellation in rss = Syy − β·Sxy, which
@@ -321,33 +328,231 @@ object Association {
     }
   }
 
-  /** Linear over the wide frame's chunks: each partition folds every
-    * pair's rows, in input order, into one [[GramState]], and emits no
-    * state for a pair without a row there. */
+  private[operators] object GramState {
+
+    /** The state of `n` rows from their sums over shifted values: `s(i)`
+      * = Σ(v_i − shift_i) and `q` the upper triangle of
+      * Σ(v_i − shift_i)(v_j − shift_j). */
+    def fromSums(n: Long, shift: Array[Double], s: Array[Double], q: Array[Double]): GramState = {
+      val p = shift.length
+      val st = new GramState(p)
+      st.n = n
+      var idx = 0
+      var i = 0
+      while (i < p) {
+        st.mean(i) = shift(i) + s(i) / n
+        var j = i
+        while (j < p) { st.c(idx) = q(idx) - s(i) * s(j) / n; idx += 1; j += 1 }
+        i += 1
+      }
+      st
+    }
+  }
+
+  /** A pair's sums are trusted only where every variable's centered sum
+    * of squares over the pair's rows exceeds this share of its shared
+    * one; below it the pair is folded row by row ([[LinearSums]]). */
+  private val ExactFoldBelow = 1e-6
+
+  /**
+   * The shared half of the linear fold over one chunk, done once for
+   * all of its pairs. Each column is first shifted in place by its mean
+   * over its own complete rows (a covariate over `covOk`, a predictor or
+   * dependent over `covOk` where it is non-null; non-finite values do
+   * not count), so the plain sums below keep the precision of centered
+   * ones; the chunk is the task's own, so no copy is made. Then, over
+   * those rows: the covariate block's Σc and Σc·c′, and every
+   * predictor's and dependent's Σu, Σu² and Σu·c.
+   *
+   * A pair ([[pair]]) starts from those sums and subtracts the rows it
+   * drops: on the x side x's rows where y is null, on the y side the
+   * converse, and for the covariate block the rows where x or y is
+   * null. Adding Σx·y over its rows completes its sums: O(n) per pair,
+   * plus O(k²) per dropped row, where a Welford fold costs
+   * O(n·(k+2)²/2) and k+2 divisions per row. A pair that keeps fewer
+   * rows than it drops (a sparse dependent) folds its own rows instead.
+   *
+   * Exact fallback: the subtraction leaves rounding residue of order
+   * ε × the shared sum of squares where a variable is constant over the
+   * pair's rows (`sex` in a sex-specific code), and [[solveLinearGroup]]
+   * drops a constant covariate only when its variance is zero to 1e-9,
+   * so it would keep `sex` in the equation and move the fit. A pair in
+   * which some variable's centered sum of squares is at most
+   * [[ExactFoldBelow]] of its shared one (or is not finite: a NaN or
+   * infinite value among the rows) is folded row by row with
+   * [[GramState.add]] instead, which is exact for constants. The
+   * fallback costs time only: it reads the same rows.
+   */
+  private final class LinearSums(ch: ColumnChunk, nP: Int, k: Int) {
+    private val vals = ch.values
+    private val covs = Array.tabulate(k)(a => vals(nP + a))
+    private val covOk = ch.complete(nP until nP + k)
+    private val shift = new Array[Double](vals.length)
+    // the covariate block over covOk: Σc and the upper triangle of Σc·c′
+    private val covS = new Array[Double](k)
+    private val covQ = new Array[Double](k * (k + 1) / 2)
+    // each predictor and dependent over its complete rows: Σu, Σu², Σu·c
+    private val uS = new Array[Double](vals.length)
+    private val uQ = new Array[Double](vals.length)
+    private val uC = new Array[Array[Double]](vals.length)
+
+    /** Shift column `c` in place by its mean over the finite values of `rows`. */
+    private def center(c: Int, rows: java.util.BitSet): Unit = {
+      var sum = 0.0
+      var cnt = 0
+      var r = rows.nextSetBit(0)
+      while (r >= 0) {
+        val v = vals(c)(r)
+        if (!v.isNaN && !v.isInfinite) { sum += v; cnt += 1 }
+        r = rows.nextSetBit(r + 1)
+      }
+      val mu = sum / cnt
+      if (cnt > 0 && !mu.isInfinite) {
+        shift(c) = mu
+        val col = vals(c)
+        var i = 0
+        while (i < col.length) { col(i) -= mu; i += 1 }
+      }
+    }
+
+    // the folds run in methods: left in this constructor, the covariate
+    // loop stayed uncompiled on HotSpot 17 and took three quarters of a
+    // 100,000-row fit's task CPU
+    for (a <- 0 until k) center(nP + a, covOk)
+    foldCovariates()
+    for (u <- (0 until nP) ++ (nP + k until vals.length)) foldColumn(u)
+
+    /** The covariate block's sums over covOk. */
+    private def foldCovariates(): Unit = {
+      var r = covOk.nextSetBit(0)
+      while (r >= 0) {
+        var idx = 0
+        var a = 0
+        while (a < k) {
+          val ca = covs(a)(r)
+          covS(a) += ca
+          var b = a
+          while (b < k) { covQ(idx) += ca * covs(b)(r); idx += 1; b += 1 }
+          a += 1
+        }
+        r = covOk.nextSetBit(r + 1)
+      }
+    }
+
+    /** Predictor or dependent column `u`, shifted, and its sums over its
+      * complete rows. */
+    private def foldColumn(u: Int): Unit = {
+      val rows = ch.pairRows(covOk, u, u)
+      center(u, rows)
+      val col = vals(u)
+      val sc = new Array[Double](k)
+      var s = 0.0
+      var q = 0.0
+      var r = rows.nextSetBit(0)
+      while (r >= 0) {
+        val v = col(r)
+        s += v
+        q += v * v
+        var a = 0
+        while (a < k) { sc(a) += v * covs(a)(r); a += 1 }
+        r = rows.nextSetBit(r + 1)
+      }
+      uS(u) = s
+      uQ(u) = q
+      uC(u) = sc
+    }
+
+    /** The state of the pair of columns `x` and `y` over this chunk's
+      * rows, or None when it has no row here. */
+    def pair(x: Int, y: Int): Option[GramState] = {
+      val rows = ch.pairRows(covOk, x, y)
+      val n = rows.cardinality
+      if (n == 0) return None
+      // variables: x = 0, y = 1, covariate a = a + 2
+      val p = k + 2
+      val sh = Array.tabulate(p)(i => shift(if (i == 0) x else if (i == 1) y else nP + i - 2))
+      // the rows of covOk the pair drops: x or y is null there. A pair
+      // that keeps fewer rows than it drops (a sparse or sex-specific
+      // dependent) folds its own rows: fewer than it would subtract
+      val (xv, yv, nx, ny) = (vals(x), vals(y), ch.nulls(x), ch.nulls(y))
+      val drop = nx.clone().asInstanceOf[java.util.BitSet]
+      drop.or(ny)
+      drop.and(covOk)
+      if (drop.cardinality >= n) return Some(fold(rows, x, y, sh))
+      def at(i: Int, j: Int): Int = i * p - i * (i - 1) / 2 + (j - i)
+      val s = new Array[Double](p)
+      val q = new Array[Double](p * (p + 1) / 2)
+      for ((u, i) <- Seq(x -> 0, y -> 1)) {
+        s(i) = uS(u)
+        q(at(i, i)) = uQ(u)
+        System.arraycopy(uC(u), 0, q, at(i, 2), k)
+      }
+      // the covariate block's rows of the triangle follow one another as in covQ
+      val cov0 = at(2, 2)
+      System.arraycopy(covS, 0, s, 2, k)
+      System.arraycopy(covQ, 0, q, cov0, covQ.length)
+      var r = drop.nextSetBit(0)
+      while (r >= 0) {
+        val i = if (!nx.get(r)) 0 else if (!ny.get(r)) 1 else -1
+        if (i >= 0) {
+          val v = if (i == 0) xv(r) else yv(r)
+          s(i) -= v
+          q(at(i, i)) -= v * v
+          val ic = at(i, 2)
+          var a = 0
+          while (a < k) { q(ic + a) -= v * covs(a)(r); a += 1 }
+        }
+        var idx = cov0
+        var a = 0
+        while (a < k) {
+          val ca = covs(a)(r)
+          s(a + 2) -= ca
+          var b = a
+          while (b < k) { q(idx) -= ca * covs(b)(r); idx += 1; b += 1 }
+          a += 1
+        }
+        r = drop.nextSetBit(r + 1)
+      }
+      var xy = 0.0
+      r = rows.nextSetBit(0)
+      while (r >= 0) { xy += xv(r) * yv(r); r = rows.nextSetBit(r + 1) }
+      q(at(0, 1)) = xy
+      val shared = Array.tabulate(p)(i =>
+        if (i == 0) uQ(x) else if (i == 1) uQ(y) else covQ(at(i, i) - cov0))
+      val exact = (0 until p).forall(i => q(at(i, i)) - s(i) * s(i) / n > ExactFoldBelow * shared(i))
+      Some(if (exact) GramState.fromSums(n, sh, s, q) else fold(rows, x, y, sh))
+    }
+
+    /** The pair's rows folded one by one: the exact fallback. */
+    private def fold(rows: java.util.BitSet, x: Int, y: Int, sh: Array[Double]): GramState = {
+      val st = new GramState(k + 2)
+      val v = new Array[Double](k + 2)
+      var r = rows.nextSetBit(0)
+      while (r >= 0) {
+        v(0) = vals(x)(r)
+        v(1) = vals(y)(r)
+        var a = 0
+        while (a < k) { v(a + 2) = covs(a)(r); a += 1 }
+        st.add(v)
+        r = rows.nextSetBit(r + 1)
+      }
+      for (i <- sh.indices) st.mean(i) += sh(i)
+      st
+    }
+  }
+
+  /** Linear over the wide frame's chunks: each partition builds its
+    * [[LinearSums]] once and derives every pair's [[GramState]] from
+    * them, and emits no state for a pair without a row there. */
   private def linearChunks(df: DataFrame, cfg: Config): DataFrame = {
     val (nP, k, nD) = (cfg.predictors.size, cfg.covariates.size, cfg.dependents.size)
     val states = columnChunks(df, cfg).flatMap { ch =>
-      val covOk = ch.complete(nP until nP + k)
-      val v = new Array[Double](k + 2)
+      val sums = new LinearSums(ch, nP, k)
       for {
         pi <- (0 until nP).iterator
         di <- (0 until nD).iterator
-        rows = ch.pairRows(covOk, pi, nP + k + di)
-        if !rows.isEmpty
-      } yield {
-        val (x, y) = (ch.values(pi), ch.values(nP + k + di))
-        val st = new GramState(k + 2)
-        var r = rows.nextSetBit(0)
-        while (r >= 0) {
-          v(0) = x(r)
-          v(1) = y(r)
-          var c = 0
-          while (c < k) { v(c + 2) = ch.values(nP + c)(r); c += 1 }
-          st.add(v)
-          r = rows.nextSetBit(r + 1)
-        }
-        (pi * nD + di, st)
-      }
+        st <- sums.pair(pi, nP + k + di)
+      } yield (pi * nD + di, st)
     }
     solveLinear(df.sparkSession, states, cfg)
   }

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{BooleanType, DoubleType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
 
 /**
@@ -15,7 +17,10 @@ import graft.Tables
  * (predictor, dependent) pair) — smaller than the input data, but a
  * 10M-pair flipwas is still 10M rows, so nothing here may funnel
  * through a single task: BH runs on a distributed range-sort with
- * per-partition suffix scans (no global window).
+ * per-partition suffix scans (no global window). The one exception is
+ * [[onDriver]], the pipeline's Bonferroni/annotate/sort: it reads a
+ * grid the fit has already collected to the driver, so it adds no
+ * bound that the fit does not have.
  */
 object Postprocess {
 
@@ -242,14 +247,86 @@ object Postprocess {
   def sortAndWrite(df: DataFrame, path: String, format: String,
       pvalCol: String = "pval", tieBreak: Seq[String] = Nil): DataFrame = {
     val sorted = df.orderBy((col(pvalCol) +: tieBreak.map(col)): _*)
-    format match {
-      case "parquet" => sorted.write.mode("overwrite").parquet(path)
-      case "csv" => sorted.write.mode("overwrite").option("header", "true").csv(path)
-      case "tsv" | "txt" => sorted.write.mode("overwrite")
-        .option("header", "true").option("delimiter", "\t").csv(path)
-      case other => throw new IllegalArgumentException(s"Unsupported output format: $other")
-    }
+    write(sorted, path, format)
     sorted
+  }
+
+  /** Write `df` as parquet or as delimited text with a header. */
+  def write(df: DataFrame, path: String, format: String): Unit = format match {
+    case "parquet" => df.write.mode("overwrite").parquet(path)
+    case "csv" => df.write.mode("overwrite").option("header", "true").csv(path)
+    case "tsv" | "txt" => df.write.mode("overwrite")
+      .option("header", "true").option("delimiter", "\t").csv(path)
+    case other => throw new IllegalArgumentException(s"Unsupported output format: $other")
+  }
+
+  /**
+   * [[bonferroni]], then [[annotate]] when `defs` is given, then the
+   * sort by (pval, predictor, dependent), over the rows of a results
+   * relation the driver already holds (the pair grid `Association.assoc`
+   * returns): no job runs but the read and collect of `defs`. The
+   * result is a local relation of the sorted rows.
+   *
+   * It keeps the Spark plan's semantics: n_tests counts the non-null
+   * pvals (a NaN counts) and a null pval gets a null flag; the join is a
+   * left join in which a duplicate key fans out, a null key never
+   * matches and an unmatched row gets nulls, with the key column(s)
+   * dropped by name; the order is Spark's: pval ascending with nulls
+   * first, NaN last and -0.0 equal to 0.0, then predictor and dependent
+   * in UTF-8 byte order, nulls first. A defs key of another type than
+   * the `on` column is compared as that column's type.
+   */
+  def onDriver(results: DataFrame, defs: Option[DataFrame], on: String, defsKey: String,
+      alpha: Double = 0.05): DataFrame = {
+    val in = results.schema
+    val pv = in.fieldIndex("pval")
+    val rows = results.collect()
+    val threshold = alpha / rows.count(!_.isNullAt(pv))
+    val flagged = rows.map(r =>
+      Row.fromSeq(r.toSeq :+ (if (r.isNullAt(pv)) null else r.getDouble(pv) < threshold)))
+    val withFlag = in.add("bonferroni_significant", BooleanType, nullable = true)
+    val (schema, out) = defs.fold((withFlag, flagged))(annotateRows(withFlag, flagged, _, on, defsKey))
+    val Seq(p, pr, de) = Seq("pval", "predictor", "dependent").map(schema.fieldIndex)
+    def utf8(r: Row, i: Int) = UTF8String.fromString(r.getString(i))
+    val byOrder = new Ordering[(Row, UTF8String, UTF8String)] {
+      def compare(a: (Row, UTF8String, UTF8String), b: (Row, UTF8String, UTF8String)): Int = {
+        val c =
+          if (a._1.isNullAt(p)) { if (b._1.isNullAt(p)) 0 else -1 }
+          else if (b._1.isNullAt(p)) 1
+          else {
+            val (x, y) = (a._1.getDouble(p), b._1.getDouble(p))
+            if (x == y) 0 else java.lang.Double.compare(x, y)
+          }
+        if (c != 0) c else {
+          val cp = bytes(a._2, b._2)
+          if (cp != 0) cp else bytes(a._3, b._3)
+        }
+      }
+      private def bytes(x: UTF8String, y: UTF8String): Int =
+        if (x == null) { if (y == null) 0 else -1 } else if (y == null) 1 else x.binaryCompare(y)
+    }
+    val sorted = out.map(r => (r, utf8(r, pr), utf8(r, de))).sorted(byOrder).map(_._1)
+    results.sparkSession.createDataFrame(java.util.Arrays.asList(sorted: _*), schema)
+  }
+
+  /** [[annotate]]'s left join over local rows: the schema and the rows. */
+  private def annotateRows(schema: StructType, rows: Array[Row], defs: DataFrame, on: String,
+      defsKey: String): (StructType, Array[Row]) = {
+    val onType = schema(on).dataType
+    val d = if (defs.schema(defsKey).dataType == onType) defs
+      else defs.withColumn(defsKey, Preprocess.column(defsKey).cast(onType))
+    val ki = d.schema.fieldIndex(defsKey)
+    val byKey = d.collect().filterNot(_.isNullAt(ki)).groupBy(_.get(ki))
+    val resolver = SQLConf.get.resolver
+    val left = schema.fields.indices.filterNot(i => resolver(schema(i).name, defsKey))
+    val right = d.schema.fields.indices.filterNot(i => resolver(d.schema(i).name, defsKey))
+    val oi = schema.fieldIndex(on)
+    val none = Row.fromSeq(Seq.fill(d.schema.length)(null))
+    val out = rows.flatMap { r =>
+      val matches = if (r.isNullAt(oi)) None else byKey.get(r.get(oi))
+      matches.getOrElse(Array(none)).map(m => Row.fromSeq(left.map(r.get) ++ right.map(m.get)))
+    }
+    (StructType(left.map(schema(_)) ++ right.map(i => d.schema(i).copy(nullable = true))), out)
   }
 
   // ============================================================ queries

@@ -32,9 +32,14 @@ object Preprocess {
     * schema — the projection itself stays a pushdown-friendly select.
     * A malformed or negative index and a range that selects no column
     * (start ≥ end) are config errors naming the spec. */
-  def selectColumns(df: DataFrame, spec: String): DataFrame = {
-    val names = df.columns
-    val out = spec.split(",").flatMap { raw =>
+  def selectColumns(df: DataFrame, spec: String): DataFrame =
+    df.select(resolveColumns(df.columns.toIndexedSeq, spec).map(column): _*)
+
+  /** The names `spec` selects from `names`, in spec order: the resolver
+    * [[selectColumns]] projects with, read from a schema's names
+    * alone. */
+  def resolveColumns(names: IndexedSeq[String], spec: String): Seq[String] =
+    spec.split(",").toSeq.flatMap { raw =>
       val colSpec = raw.trim
       if (colSpec.startsWith("i:")) {
         def invalid = new IllegalArgumentException(s"Invalid column spec '$colSpec'. " +
@@ -53,7 +58,7 @@ object Preprocess {
             require(end <= names.length, s"End index $end out of range for ${names.length} columns")
             require(start < end,
               s"Column spec '$colSpec' selects no columns: start $start is not below end $end")
-            names.slice(start, end).toSeq
+            names.slice(start, end)
           case _ => throw invalid
         }
       } else {
@@ -61,8 +66,6 @@ object Preprocess {
         Seq(colSpec)
       }
     }
-    df.select(out.map(column).toIndexedSeq: _*)
-  }
 
   // ----------------------------------------------------- p02 sex filter
 

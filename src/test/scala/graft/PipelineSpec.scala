@@ -336,12 +336,20 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** What one `Pipeline.run` did, as listeners saw it: each job's
     * (description, group), each executed plan, each submitted stage's
     * (description, id, whether it reads the binary models' block
-    * shuffle) and each finished task's (stage id, partition). The block
-    * shuffle is the only `ShuffledRDD` of a run: Spark SQL's exchanges
-    * read through `ShuffledRowRDD`. */
+    * shuffle), each finished task's (stage id, partition) and the ids
+    * of the stages that wrote shuffle records. The block shuffle is the
+    * only `ShuffledRDD` of a run: Spark SQL's exchanges read through
+    * `ShuffledRowRDD`. */
   private final case class Observed(jobs: Seq[(String, String)],
       plans: Seq[org.apache.spark.sql.execution.SparkPlan],
-      stages: Seq[(String, Int, Boolean)], tasks: Seq[(Int, Int)])
+      stages: Seq[(String, Int, Boolean)], tasks: Seq[(Int, Int)], shuffleWrites: Seq[Int]) {
+
+    /** The job description of each stage that wrote shuffle output. */
+    def shuffles: Seq[String] = {
+      val desc = stages.map(s => s._2 -> s._1).toMap
+      shuffleWrites.distinct.map(desc)
+    }
+  }
 
   private def observe(cfg: GraftConfig): Observed = observing { Pipeline.run(spark, cfg); () }
 
@@ -354,6 +362,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plans = list[org.apache.spark.sql.execution.SparkPlan]
     val stages = list[(String, Int, Boolean)]
     val tasks = list[(Int, Int)]
+    val shuffleWrites = list[Int]
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.add((e.properties.getProperty("spark.job.description"),
@@ -361,8 +370,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         stages.add((e.properties.getProperty("spark.job.description"), e.stageInfo.stageId,
           e.stageInfo.rddInfos.exists(_.name == "ShuffledRDD")))
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         if (e.taskInfo.successful) tasks.add((e.stageId, e.taskInfo.partitionId))
+        if (e.taskMetrics != null && e.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleWrites.add(e.stageId)
+      }
     }
     val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -381,7 +393,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.listenerManager.unregister(planListener)
     }
     import scala.jdk.CollectionConverters._
-    Observed(jobs.asScala.toSeq, plans.asScala.toSeq, stages.asScala.toSeq, tasks.asScala.toSeq)
+    Observed(jobs.asScala.toSeq, plans.asScala.toSeq, stages.asScala.toSeq, tasks.asScala.toSeq,
+      shuffleWrites.asScala.toSeq)
   }
 
   test("every job of Pipeline.run carries a graft stage label; the caller's group survives") {
@@ -460,7 +473,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val run = observing { rows = Pipeline.run(spark, cfg).collect() }.jobs.map(_._1)
     assert(rows.length == 2 && rows.head.getAs[Double]("pval") <= rows(1).getAs[Double]("pval"))
     assert(run.nonEmpty && run.forall(d => d != null && d.startsWith("graft/")), run)
-    assert(run.contains("graft/postprocess"), run)
+    // postprocessing without defs runs on the driver's rows: no job
+    assert(run.contains("graft/fit") && !run.contains("graft/postprocess"), run)
     val cli = observing(Main.run(spark, cfg)).jobs.map(_._1)
     assert(cli.nonEmpty && cli.forall(d => d != null && d.startsWith("graft/")), cli)
   }
@@ -544,6 +558,43 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       dependents = "z", covariates = "zh,zconst", missingCovariateValues = "mean",
       model = "linear", quantitative = true, minCaseCount = 10, output = s"$dir/out_linear"))
     assert(jobs(linear, "graft/fit") == 1, linear.jobs)
+  }
+
+  test("postprocessing runs on the driver: six jobs, one write job, no shuffle after the fit") {
+    // the shape of a quantitative study: tab-delimited input with a
+    // null marker, a mean fill, a constant covariate, 3 x 4 pairs
+    val dir = java.nio.file.Files.createTempDirectory("graft_post").toString
+    val w = new java.io.PrintWriter(s"$dir/cohort.tsv")
+    val rng = new scala.util.Random(23)
+    w.println((Seq("id", "x1", "x2", "x3", "z", "batch") ++ (1 to 4).map(j => s"y$j")).mkString("\t"))
+    (0 until 300).foreach { i =>
+      val xs = Seq.fill(3)(rng.nextGaussian())
+      val z = if (i % 11 == 0) "NA" else f"${rng.nextGaussian()}%.6f"
+      val ys = (1 to 4).map(j => if ((i + j) % 17 == 0) "NA" else f"${xs(j % 3) + rng.nextGaussian()}%.6f")
+      w.println((Seq(i.toString) ++ xs.map(v => f"$v%.6f") ++ Seq(z, "1") ++ ys).mkString("\t"))
+    }
+    w.close()
+    val cfg = GraftConfig(input = s"$dir/cohort.tsv", predictors = "i:1-4", dependents = "i:6-",
+      covariates = "z,batch", nullValues = Seq("NA"), model = "linear", quantitative = true,
+      missingCovariateValues = "mean", minCaseCount = 10, outputType = "parquet",
+      output = s"$dir/out")
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val run = observing { rows = Pipeline.run(spark, cfg).collect() }
+    val jobs = run.jobs.map(_._1)
+    assert(jobs.count(_ == "graft/write") == 1, jobs)
+    // read: header and type inference; preprocess: the profile's
+    // aggregate, two jobs under adaptive execution; the fit; the write
+    assert(jobs.size == 6, jobs)
+    // past the profile's exchange, the co-moment merge is the only shuffle
+    assert(run.shuffles.toSet == Set("graft/preprocess", "graft/fit"), (run.shuffles, jobs))
+    // the written part file holds the returned rows in their order
+    val parts = new java.io.File(s"$dir/out_polars_mas_results.parquet").listFiles()
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1, parts.toSeq)
+    val written = spark.read.parquet(parts.head.getPath).collect()
+    assert(written.toSeq == rows.toSeq && rows.length == 12)
+    val p = rows.map(_.getAs[Double]("pval"))
+    assert(p.zip(p.tail).forall { case (a, b) => a <= b || b.isNaN }, p.toSeq)
   }
 
   test("a constant categorical is dropped before one-hot; a 2-level one stays a covariate") {

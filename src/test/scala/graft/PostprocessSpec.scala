@@ -90,6 +90,55 @@ class PostprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out(4).contains(true: java.lang.Boolean))
   }
 
+  test("onDriver equals bonferroni, annotate and orderBy: NaN/null pvals, ties, odd def keys") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    // pval: null, NaN, ties, and -0.0 equal to 0.0: the three rows at
+    // zero sort by name in UTF-8 byte order, y < U+FF5A < U+1F600 (in
+    // UTF-16 the surrogate pair sorts before U+FF5A; if -0.0 sorted
+    // before 0.0, U+1F600 would come first). Dependent keys with a
+    // duplicate def, with no def and null
+    val pvals = Seq[java.lang.Double](null, 0.0, -0.0, 0.0, 0.01, 0.01, 0.5, null,
+      Double.NaN, 1e-9, 0.01, 0.2)
+    val preds = Seq("x", "\uff5a", "\ud83d\ude00", "y", null, "\u00e9", "x", "y", "x", "y", "y", "x")
+    val deps = Seq("008", "250.2", "008", "250.2", "401.1", null, "999", "008", "401.1",
+      "250.2", "008", "401.1")
+    val results = spark.createDataFrame(java.util.Arrays.asList(pvals.indices.map(i =>
+      Row(preds(i), deps(i), pvals(i), i.toDouble, if (i % 3 == 0) null else s"r$i")): _*),
+      StructType(Seq(StructField("predictor", StringType), StructField("dependent", StringType),
+        StructField("pval", DoubleType), StructField("beta", DoubleType),
+        StructField("failed_reason", StringType))))
+    // "008" twice (fans out), "401.1" absent, a null key and a key that
+    // only the flipwas join meets
+    val defs = spark.createDataFrame(java.util.Arrays.asList(
+      Row("008", "Intestinal infection", "Both", "infectious", "1"),
+      Row("008", "Intestinal infection (dup)", "Both", "infectious", "1"),
+      Row("250.2", "Type 2 diabetes", "Both", "endocrine", "3"),
+      Row(null, "no key", "Both", "none", "0"),
+      Row("x", "a predictor", "Male", "flip", "9")),
+      StructType(Seq("phecode", "phenotype", "sex", "category", "category_number")
+        .map(StructField(_, StringType))))
+    def canon(r: Row): String = r.toSeq.map(String.valueOf).mkString("|")
+    for ((name, annotation) <- Seq("plain" -> None, "phewas" -> Some("dependent"),
+        "flipwas" -> Some("predictor"))) {
+      val spark0 = annotation.foldLeft(Postprocess.bonferroni(results))((df, on) =>
+        Postprocess.annotate(df, defs, on, "phecode"))
+        .orderBy(col("pval"), col("predictor"), col("dependent"))
+      val local = Postprocess.onDriver(results, annotation.map(_ => defs),
+        annotation.getOrElse("dependent"), "phecode")
+      assert(local.schema.map(f => (f.name, f.dataType)) == spark0.schema.map(f => (f.name, f.dataType)),
+        name)
+      val (a, b) = (local.collect(), spark0.collect())
+      def key(r: Row) = Seq("pval", "predictor", "dependent").map(c => String.valueOf(r.getAs[Any](c)))
+      assert(a.map(key).toSeq == b.map(key).toSeq, name)
+      assert(a.filter(r => !r.isNullAt(2) && r.getDouble(2) == 0.0).map(_.getString(0)).distinct
+        .toSeq == Seq("y", "\uff5a", "\ud83d\ude00"), name)
+      assert(a.map(canon).sorted.toSeq == b.map(canon).sorted.toSeq, name)
+      if (name == "phewas") assert(a.length > results.count(), "a duplicate key fans out")
+    }
+  }
+
   test("sortAndWrite emits all four formats") {
     val sess = spark
     import sess.implicits._

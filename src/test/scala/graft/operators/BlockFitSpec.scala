@@ -242,6 +242,54 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(runs.forall(_ == runs.head), runs.map(_.take(2)))
   }
 
+  test("the linear fold from shared sums gives the Welford fold's rows, n 25 to 100,000") {
+    // nulls in x, y and a covariate; a predictor offset by 1e5; a
+    // sex-specific y (sex is constant within its pairs; it keeps more
+    // rows than it drops, so its sums are corrected, not refolded); a
+    // y on one row in seven (folded from its own rows) and, in the
+    // second covariate set, a covariate constant at 0.1. linear(melt)
+    // folds each pair's rows one by one with GramState.add
+    def cohort(n: Int): DataFrame = {
+      val rng = new scala.util.Random(n)
+      val rows = (0 until n).map { i =>
+        val x = 1e5 + 50.0 * rng.nextGaussian()
+        val (x2, z) = (rng.nextGaussian(), rng.nextGaussian())
+        val sex = if (rng.nextDouble() < 0.6) 1.0 else 0.0
+        val y = 0.02 * (x - 1e5) - x2 + 0.5 * z + 0.3 * sex + rng.nextGaussian()
+        Row(if (i % 41 == 3) null else x, x2, if (i % 23 == 7) null else z, sex, 0.1,
+          if (i % 37 == 0) null else y,
+          if (sex == 0.0) null else 0.8 * x2 - 0.2 * z + rng.nextGaussian(),
+          if (i % 13 == 5) null else z + 0.1 * rng.nextGaussian(),
+          if (i % 7 == 0) x2 - z + rng.nextGaussian() else null)
+      }
+      val schema = StructType(Seq("x", "x2", "z", "sex", "c01", "y", "y_sex", "y2", "y_few")
+        .map(StructField(_, DoubleType)))
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    }
+    def rows(df: DataFrame): Map[(String, String), Seq[String]] =
+      byPair(df).map { case (pair, r) =>
+        pair -> (Seq("n_observations", "converged", "failed_reason", "equation")
+          .map(c => String.valueOf(r.getAs[Any](c))) ++
+          Seq("pval", "beta", "se").map { c =>
+            val d = r.getAs[Double](c)
+            if (d.isNaN) "NaN" else BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+          })
+      }
+    for (n <- Seq(25, 200, 5000, 100000); covs <- Seq(Seq("z", "sex"), Seq("z", "sex", "c01"))) {
+      val df = cohort(n)
+      val cfg = Association.Config(Seq("x", "x2"), Seq("y", "y_sex", "y2", "y_few"), covs,
+        model = "linear", minCaseCount = 10)
+      for (parts <- Seq(1, 7, 32)) {
+        val wide = df.repartition(parts)
+        val got = rows(Association.assoc(wide, cfg))
+        val welford = rows(Association.linear(Association.melt(wide, cfg), cfg))
+        assert(got.size == 8 && got == welford, s"n $n, covariates $covs, $parts partitions")
+        if (n >= 200) assert(got(("x2", "y_sex"))(3) == "y_sex ~ x2 + z",
+          s"n $n, $parts partitions: sex is constant within the pair")
+      }
+    }
+  }
+
   test("an all-null dependent or predictor gives no-data rows on every chunk path") {
     val rng = new scala.util.Random(19)
     val rows = (0 until 400).map { _ =>

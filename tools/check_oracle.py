@@ -9,11 +9,52 @@ rows sorted, exact value compare). Dev tool only — not library code.
 
 Each name is a query name or its short id (`a01`); with names, only
 those queries are checked. Every line carries the DuckDB seconds of
-its oracle query.
+its oracle query, or `cached`.
+
+DuckDB's normalized answers are cached under `.oracle_cache/` at the
+repository root, keyed on the oracle SQL text, a manifest of the
+sfDir's parquet files (name, size, SHA-256) and `duckdb.__version__`.
+A miss reruns DuckDB; the compare is the same exact compare either way.
+Delete the directory to drop the cache.
 """
-import json, sys, glob, time
+import hashlib, json, os, sys, glob, time
 import duckdb
 import pandas as pd
+
+CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".oracle_cache")
+
+def manifest(sfdir):
+    """(name, size, SHA-256) of every parquet file under sfdir."""
+    out = []
+    for d, _, files in sorted(os.walk(sfdir)):
+        for f in sorted(files):
+            if ".parquet" not in f:
+                continue
+            path = os.path.join(d, f)
+            h = hashlib.sha256()
+            with open(path, "rb") as fh:
+                for block in iter(lambda: fh.read(1 << 20), b""):
+                    h.update(block)
+            out.append([os.path.relpath(path, sfdir), os.path.getsize(path), h.hexdigest()])
+    return out
+
+def cache_path(q, files):
+    key = json.dumps([q, files, duckdb.__version__]).encode()
+    return os.path.join(CACHE, hashlib.sha256(key).hexdigest() + ".pkl")
+
+def oracle_answer(con, q, files):
+    """DuckDB's normalized answer and how it was had: `cached` or its seconds."""
+    path = cache_path(q, files)
+    if os.path.exists(path):
+        return pd.read_pickle(path), "cached"
+    t0 = time.perf_counter()
+    df = normalize(con.execute(q).fetchdf())
+    took = f"duckdb {time.perf_counter() - t0:.1f}s"
+    os.makedirs(CACHE, exist_ok=True)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    df.to_pickle(tmp)
+    os.replace(tmp, path)
+    return df, took
 
 def load_spark(outdir, name):
     files = glob.glob(f"{outdir}/{name}/*.parquet")
@@ -44,18 +85,18 @@ def main(sfdir, outdir, *names):
     con = duckdb.connect()
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
+    files = manifest(sfdir)
     ok = fail = 0
     for name, q in sorted(sql.items()):
         spark_df = load_spark(outdir, name)
         if spark_df is None:
             print(f"MISSING  {name}"); fail += 1; continue
-        t0 = time.perf_counter()
         try:
-            duck_df = con.execute(q).fetchdf()
+            b, how = oracle_answer(con, q, files)
         except Exception as e:
             print(f"SQLERR   {name}: {e}"); fail += 1; continue
-        name = f"{name} [duckdb {time.perf_counter() - t0:.1f}s]"
-        a, b = normalize(spark_df), normalize(duck_df)
+        name = f"{name} [{how}]"
+        a = normalize(spark_df)
         if list(a.columns) != list(b.columns):
             print(f"COLS     {name}: spark={list(a.columns)} duck={list(b.columns)}"); fail += 1; continue
         if len(a) != len(b):
