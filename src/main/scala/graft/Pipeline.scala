@@ -62,14 +62,15 @@ final case class GraftConfig(
     orderCol: String = "",                // explicit row order: forward/backward fill, RINT ties
     output: String = "",                  // output PREFIX; empty = don't write
     outputType: String = "csv",           // reference default (cli.py:61-68)
-    dryRun: Boolean = false,
-    distributed: Boolean = false,         // removed option: `true` is a config error.
-                                          // The field stays while perfbench's
-                                          // Study.scala reads it (ROADMAP item 4
-                                          // deletes it)
-    annotateDefs: Option[DataFrame] = None, // direct defs override (tests/composition)
-    annotateOn: String = "dependent",
-    annotateKey: String = "phecode")
+    dryRun: Boolean = false) {
+  // constants that perfbench's traced study reads: no fit is forced
+  // distributed, the defs always come from a PheCode catalog and join
+  // the dependents (flipwas: the predictors) on `phecode`
+  val distributed: Boolean = false
+  val annotateDefs: Option[DataFrame] = None
+  val annotateOn: String = "dependent"
+  val annotateKey: String = "phecode"
+}
 
 object Pipeline {
 
@@ -86,7 +87,6 @@ object Pipeline {
       covariates: Seq[String], categoricals: Seq[String]): Unit = {
     require(Seq("firth", "logistic", "linear").contains(cfg.model),
       s"Unknown model: ${cfg.model}")
-    require(!cfg.distributed, "distributed = true asked for the gram IRLS, which was removed.")
     require(predictors.nonEmpty, s"The predictor spec '${cfg.predictors}' selects no columns.")
     require(dependents.nonEmpty, s"The dependent spec '${cfg.dependents}' selects no columns.")
     require(!(cfg.rint && cfg.logt), "--rint and --logt are mutually exclusive.")
@@ -255,18 +255,13 @@ object Pipeline {
     * defs' read and collect), then the write as one job of one
     * partition. The caller gets the sorted rows as a local relation. */
   private def postprocess(raw: DataFrame, results: DataFrame, cfg: GraftConfig): DataFrame = {
-    val defs: Option[DataFrame] = cfg.annotateDefs.orElse {
-      if (cfg.phewas || cfg.flipwas) {
-        // no --phecode-defs needed: the public catalog ships bundled,
-        // mirroring the reference (constants.py:6-16); a user-pointed
-        // CSV overrides it
-        Some(if (cfg.phecodeDefs.nonEmpty)
-          Sources.phecodeDefs(raw.sparkSession, cfg.phecodeDefs)
-        else Sources.bundledPhecodeDefs(raw.sparkSession))
-      } else None
-    }
-    val sorted = Postprocess.onDriver(results, defs,
-      if (cfg.flipwas) "predictor" else cfg.annotateOn, cfg.annotateKey)
+    // no --phecode-defs needed: the public catalog ships bundled,
+    // mirroring the reference (constants.py:6-16); a user-pointed CSV
+    // overrides it
+    val defs = if (!cfg.phewas && !cfg.flipwas) None
+      else if (cfg.phecodeDefs.nonEmpty) Some(Sources.phecodeDefs(raw.sparkSession, cfg.phecodeDefs))
+      else Some(Sources.bundledPhecodeDefs(raw.sparkSession))
+    val sorted = Postprocess.onDriver(results, defs, if (cfg.flipwas) "predictor" else "dependent")
     if (cfg.output.nonEmpty) {
       // reference output naming: {prefix}_polars_mas_results.{ext}
       // (postprocessing.py:32-40); Spark writes it as a directory

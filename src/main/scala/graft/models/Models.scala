@@ -41,6 +41,7 @@ final case class FitResult(
 
 object Models {
   private val Z975 = 1.959963984540054 // qnorm(0.975)
+  private val FirthMaxStep = 5.0         // logistf maxstep
 
   // ------------------------------------------------------------- linear
 
@@ -195,10 +196,9 @@ object Models {
     * and the LRT-constrained fit. */
   def firthRaw(
       xd: Array[Double], n: Int, k: Int, y: Array[Double],
-      maxIter: Int = 25, maxStep: Double = 5.0,
-      gtol: Double = 1e-5, xtol: Double = 1e-5): FitResult = {
+      maxIter: Int = 25, gtol: Double = 1e-5, xtol: Double = 1e-5): FitResult = {
     val ws = new FirthWorkspace(n, k)
-    val full = firthFit(xd, n, k, y, fixZero = -1, maxIter, maxStep, gtol, xtol, null, ws)
+    val full = firthFit(xd, n, k, y, fixZero = -1, maxIter, gtol, xtol, null, ws)
     // LRT: refit with the predictor coefficient constrained to zero;
     // the Jeffreys penalty stays on the full design (logistf behavior).
     // Warm-started from the full fit (as firthmodels does) — same
@@ -208,10 +208,10 @@ object Models {
     // β=0 with 2×maxIter, clear of the full fit's coefficients.
     val warm = full.beta.clone()
     warm(0) = 0.0
-    val warmed = firthFit(xd, n, k, y, fixZero = 0, maxIter, maxStep, gtol, xtol, warm, ws)
+    val warmed = firthFit(xd, n, k, y, fixZero = 0, maxIter, gtol, xtol, warm, ws)
     val constrained =
       if (warmed.converged) warmed
-      else firthFit(xd, n, k, y, fixZero = 0, 2 * maxIter, maxStep, gtol, xtol, null, ws)
+      else firthFit(xd, n, k, y, fixZero = 0, 2 * maxIter, gtol, xtol, null, ws)
     lrt(full.beta(0), full.se0, full.pll, constrained.pll,
       full.converged && constrained.converged)
   }
@@ -240,7 +240,7 @@ object Models {
    */
   private def firthFit(
       xd: Array[Double], n: Int, k: Int, y: Array[Double],
-      fixZero: Int, maxIter: Int, maxStep: Double, gtol: Double, xtol: Double,
+      fixZero: Int, maxIter: Int, gtol: Double, xtol: Double,
       init: Array[Double], ws: FirthWorkspace): FirthFit = {
     val free = (0 until k).filter(_ != fixZero).toArray
     val beta = if (init != null) init.clone() else new Array[Double](k)
@@ -310,7 +310,7 @@ object Models {
         score(a) = acc
         a += 1
       }
-      val (step, gmax) = newtonStep(beta, info, score, free, maxStep)
+      val (step, gmax) = newtonStep(beta, info, score, free, FirthMaxStep)
       if (step < xtol && gmax < gtol) converged = true
       it += 1
     }

@@ -3,9 +3,9 @@ package graft.operators
 import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.spark.Partitioner
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.models.{FitResult, Models}
@@ -625,12 +625,6 @@ object Association {
 
   // ------------------------------------------------------ logistic/firth
 
-  /** Sends block b's chunks to reduce partition b. */
-  private final class BlockPartitioner(blocks: Int) extends Partitioner {
-    def numPartitions: Int = blocks
-    def getPartition(key: Any): Int = key.asInstanceOf[Int]
-  }
-
   /** [[binaryBlocks]]' fits before grid completion: one result per pair
     * with at least one complete row. The longer axis of the grid
     * (dependents, or predictors for flipwas shapes) is dealt
@@ -662,7 +656,8 @@ object Association {
       blockPreds(b) ++ Array.range(nP, nP + k) ++ blockDeps(b).map(nP + k + _))
     chunks
       .flatMap(ch => Iterator.tabulate(nBlocks)(b => (b, ch.select(blockCols(b)))))
-      .partitionBy(new BlockPartitioner(nBlocks)).mapPartitions { it =>
+      // block b's chunks go to reduce partition b: an Int key hashes to itself
+      .partitionBy(new HashPartitioner(nBlocks)).mapPartitions { it =>
         val keyed = it.toArray
         if (keyed.isEmpty) Iterator.empty
         else {
@@ -1147,9 +1142,9 @@ object Association {
    *   U_s  = xc − n1·e^β/(n1·e^β + (sz − n1))
    *   I_s  = n1·e^β·(sz − n1)/(n1·e^β + (sz − n1))²
    * so the WHOLE fit runs over the (stratum, sz, n1, xc) COUNT table
-   * — one map-side-combined aggregate at any data size, Newton in a
-   * per-stratum task over the bounded cells (β floor-gridded to 1e-6
-   * per step, fixed `iters`, the a23 replay rule). Concordant sets
+   * — one map-side-combined aggregate at any data size, then the Cox
+   * fits' [[gridNewton]] in a per-stratum task over the bounded cells;
+   * the oracle (`clogitSql`) unrolls the trajectory. Concordant sets
    * (n1 = 0 or n1 = sz) contribute exactly zero score/information —
    * they stay in the table (the oracle mirrors the same sums) and
    * `n_informative` reports the discordant count. At sz ≡ 2 the MLE
@@ -1171,41 +1166,33 @@ object Association {
         col(xCaseCol).cast("int").as("xc"))
       .agg(count(lit(1)).cast("double").as("c"))
       .as[(String, Int, Int, Int, Double)]
-    cells.groupByKey(_._1).flatMapGroups { (grp, it) =>
+    cells.groupByKey(_._1).mapGroups { (grp, it) =>
       val rows = it.toArray.sortBy(r => (r._2, r._3, r._4))
       val nSets = rows.iterator.map(_._5).sum.toLong
       val nInf = rows.iterator.filter(r => r._3 > 0 && r._3 < r._2)
         .map(_._5).sum.toLong
-      def pass(beta: Double): (Double, Double) = {
-        val eb = math.exp(beta)
+      // (U, I) at β
+      def pass(b: Array[Double]): Array[Double] = {
+        val eb = math.exp(b(0))
         var u = 0.0; var inf = 0.0
         rows.foreach { case (_, sz, n1, xc, c) =>
           val den = n1 * eb + (sz - n1)
           u += c * (xc - n1 * eb / den)
           inf += c * (n1 * eb * (sz - n1)) / (den * den)
         }
-        (u, inf)
+        Array(u, inf)
       }
-      var beta = 0.0; var dead = false; var k = 0
-      while (k < iters && !dead) {
-        val (u, inf) = pass(beta)
-        if (inf <= 0) dead = true
-        else beta = math.floor((beta + u / inf) * 1e6 + 0.5) / 1e6
-        k += 1
-      }
-      val infFin = if (dead) 0.0 else pass(beta)._2
-      if (infFin <= 0)
-        Iterator.single((grp, nSets, nInf, None: Option[Double],
-          None: Option[Double], None: Option[Double], None: Option[Double]))
-      else {
-        val x = math.abs(beta) * math.sqrt(infFin)
-        val t = 1.0 / (1.0 + 0.2316419 * x)
-        val poly = t * (0.319381530 + t * (-0.356563782 + t * (1.781477937 +
-          t * (-1.821255978 + t * 1.330274429))))
-        val p = 2.0 * math.exp(-0.5 * x * x) * 0.3989422804014327 * poly
-        Iterator.single((grp, nSets, nInf, Some(beta),
-          Some(1.0 / math.sqrt(infFin)), Some(math.exp(beta)), Some(p)))
-      }
+      val none = None: Option[Double]
+      gridNewton(1, iters)(pass)((b, m) => if (m(1) <= 0) None else Some(Array(b(0) + m(0) / m(1))))
+        .collect { case (b, m) if m(1) > 0 =>
+          val x = math.abs(b(0)) * math.sqrt(m(1))
+          val t = 1.0 / (1.0 + 0.2316419 * x)
+          val poly = t * (0.319381530 + t * (-0.356563782 + t * (1.781477937 +
+            t * (-1.821255978 + t * 1.330274429))))
+          val p = 2.0 * math.exp(-0.5 * x * x) * 0.3989422804014327 * poly
+          (grp, nSets, nInf, Some(b(0)), Some(1.0 / math.sqrt(m(1))), Some(math.exp(b(0))), Some(p))
+        }
+        .getOrElse((grp, nSets, nInf, none, none, none, none))
     }.toDF(byCol, "n_sets", "n_informative", "beta", "se", "or", "p_wald")
   }
 
@@ -1278,6 +1265,99 @@ object Association {
   }
 
   /**
+   * One event time of a stratum's Cox risk table. Subjects fall into
+   * covariate cells: x ∈ {0, 1} times the row-major index of the
+   * integer covariate levels (z1·(z2Max+1) + z2; one cell without
+   * covariates). `n0(c)` and `n1(c)` count the subjects of cell c with
+   * x = 0 and x = 1 whose time is ≥ t, the risk set at t. `d`, `dx`
+   * and `dz(j)` are Σd, Σd·x and Σd·z_j over the subjects with an event
+   * at t. Every entry is an integer count below 2^53, exact in doubles
+   * in any summation order.
+   */
+  private final case class RiskTime(d: Double, dx: Double, dz: Array[Double],
+      n0: Array[Double], n1: Array[Double])
+
+  /**
+   * The risk tables every Cox fit reads, one `fit(stratum, events,
+   * table)` row per stratum with at least one event; strata with none
+   * emit nothing (there is no likelihood). Rows are kept with a
+   * positive time, a 0/1 event, a 0/1 `x` and each covariate of
+   * `levels` an integer in 0..max. The only subject-proportional work
+   * is one map-side-combined count aggregate per (stratum, time, x,
+   * covariate cell), so a stratum's table is bounded by distinct event
+   * times × cells, never by subjects, and every Newton step of the fit
+   * is an in-task pass over it: one shuffle at any data size. The
+   * table runs times descending, so risk sets are prefix sums; every
+   * cell of a tied time joins the risk set before the time's entry is
+   * recorded (tied events share the risk set), and the (x, cell)
+   * tiebreak pins the in-task order at any partition count.
+   */
+  private def riskTables[T: Encoder](df: DataFrame, timeCol: String, eventCol: String,
+      xCol: String, byCol: String, levels: Seq[(String, Int)])(
+      fit: (String, Long, Array[RiskTime]) => T): Dataset[T] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val keep = levels.foldLeft(col(timeCol).isNotNull && col(timeCol) > 0 &&
+        col(eventCol).isin(0.0, 1.0) && col(xCol).isin(0.0, 1.0)) { case (ok, (z, max)) =>
+      ok && col(z).isNotNull && col(z) === floor(col(z)) && col(z) >= 0 && col(z) <= max
+    }
+    val sizes = levels.map(_._2 + 1).toArray
+    val cell = levels.foldLeft(lit(0)) { case (c, (z, max)) => c * (max + 1) + col(z).cast("int") }
+    df.filter(keep)
+      .groupBy(col(byCol).cast("string").as("g"), col(timeCol).cast("double").as("t"),
+        col(xCol).cast("int").as("x"), cell.as("cell"))
+      .agg(count(lit(1)).cast("double").as("c"), sum(col(eventCol)).cast("double").as("d"))
+      .as[(String, Double, Int, Int, Double, Double)]
+      .groupByKey(_._1)
+      .flatMapGroups { (grp, it) =>
+        val rows = it.toArray.sortBy(r => (-r._2, r._3, r._4))
+        val n = Array.ofDim[Double](2, sizes.product)
+        val table = mutable.ArrayBuffer.empty[RiskTime]
+        var i = 0
+        while (i < rows.length) {
+          val t = rows(i)._2
+          var d = 0.0; var dx = 0.0
+          val dz = new Array[Double](sizes.length)
+          // compare, not ==: a NaN time still ends its own group
+          while (i < rows.length && java.lang.Double.compare(rows(i)._2, t) == 0) {
+            val (_, _, x, c, cnt, dc) = rows(i)
+            n(x)(c) += cnt
+            d += dc; dx += dc * x
+            var rest = c; var j = sizes.length - 1
+            while (j >= 0) { dz(j) += dc * (rest % sizes(j)); rest /= sizes(j); j -= 1 }
+            i += 1
+          }
+          if (d > 0) table += RiskTime(d, dx, dz, n(0).clone(), n(1).clone())
+        }
+        if (table.isEmpty) Iterator.empty
+        else Iterator.single(fit(grp, table.iterator.map(_.d).sum.toLong, table.toArray))
+      }
+  }
+
+  /**
+   * The Newton loop of the Cox and clogit fits: from β = 0, `iters`
+   * times, `step(β, pass(β))` proposes the next iterate from the fit's
+   * score/information pass and its own solve, and every component
+   * lands on the 1e-6 grid, floor(b·1e6 + 0.5)/1e6 (half up, the grid
+   * the oracles' unrolled CTEs replay). The count is fixed, not a
+   * convergence test, so the DuckDB oracle unrolls the exact
+   * trajectory. A step that finds the information dead (None) latches
+   * the fit to None; otherwise the result is the last iterate with one
+   * final pass at it, for the fit's own gates and standard errors.
+   */
+  private def gridNewton(dim: Int, iters: Int)(pass: Array[Double] => Array[Double])(
+      step: (Array[Double], Array[Double]) => Option[Array[Double]])
+      : Option[(Array[Double], Array[Double])] = {
+    var beta = Option(new Array[Double](dim))
+    var k = 0
+    while (k < iters && beta.isDefined) {
+      beta = beta.flatMap(b => step(b, pass(b))).map(_.map(v => math.floor(v * 1e6 + 0.5) / 1e6))
+      k += 1
+    }
+    beta.map(b => (b, pass(b)))
+  }
+
+  /**
    * Full Cox proportional-hazards fit (Breslow ties) of a BINARY
    * exposure, per stratum — a19's one-step estimate iterated to the
    * partial-likelihood MLE, the age-at-onset PheWAS measure
@@ -1285,95 +1365,45 @@ object Association {
    * approximates when the true β is far from 0.
    *
    * For binary x the risk-set sums S_k(β) = Σ_{risk} x^k·exp(βx)
-   * collapse to closed forms over the SAME bounded per-time table a19
-   * builds — S0 = n0 + n1·e^β, S1 = S2 = n1·e^β with (n, n1) the
-   * risk-set total/exposed counts — so each Newton step on the
-   * Breslow partial likelihood is one pass over distinct event times:
+   * collapse to closed forms over the risk table ([[riskTables]], no
+   * covariates) — S0 = n0 + n1·e^β, S1 = S2 = n1·e^β with (n0, n1) the
+   * risk set's unexposed/exposed counts — so each Newton step
+   * ([[gridNewton]]) on the Breslow partial likelihood is one pass
+   * over distinct event times:
    *   U(β) = Σ_t [d1 − d·n1·e^β / S0]
    *   I(β) = Σ_t  d·(n1·e^β·n0) / S0²
-   *   β ← grid(β + U/I)      (1e-6 floor-to-grid, the a21/g01 rule,
-   *                           so the DuckDB oracle unrolls the exact
-   *                           trajectory as CTEs)
-   * `iters` is FIXED (not a convergence test) for oracle replay; at
-   * iters = 1 and untied event times β equals a19's `beta_1step`
+   *   β ← grid(β + U/I)
+   * At iters = 1 and untied event times β equals a19's `beta_1step`
    * (with ties the log-rank V carries the hypergeometric (n−d)/(n−1)
-   * factor Breslow information does not — spec-pinned).
-   *
-   * Scale shape: identical to a19 — the only subject-proportional
-   * work is the (stratum, time) aggregate; each task then holds one
-   * stratum's per-time table (bounded by distinct EVENT TIMES, not
-   * subjects), and every Newton iteration is an in-task array pass,
-   * so 6 iterations cost the same one shuffle as the score test.
-   * Strata with zero events emit nothing (there is no likelihood);
-   * degenerate information (n1 ≡ 0 or ≡ n) yields null β/se.
+   * factor Breslow information does not — spec-pinned). Degenerate
+   * information (n1 ≡ 0 or ≡ n) yields null β/se. The oracle
+   * (`coxPhSql`) replays the trajectory as CTEs.
    */
   def coxPh(df: DataFrame, timeCol: String, eventCol: String,
       xCol: String, byCol: String, iters: Int = 6): DataFrame = {
     require(iters >= 1 && iters <= 20, s"coxPh: iters in [1,20], got $iters")
     val spark = df.sparkSession
     import spark.implicits._
-    val perTime = df
-      .filter(col(timeCol).isNotNull && col(timeCol) > 0 &&
-        col(eventCol).isin(0.0, 1.0) && col(xCol).isin(0.0, 1.0))
-      .groupBy(col(byCol).cast("string").as("g"), col(timeCol).cast("double").as("t"))
-      .agg(
-        sum(col(eventCol)).as("d"),
-        sum(col(eventCol) * col(xCol)).as("d1"),
-        count(lit(1)).cast("double").as("c"),
-        sum(col(xCol)).as("c1"))
-      .as[(String, Double, Double, Double, Double, Double)]
-    perTime.groupByKey(_._1)
-      .flatMapGroups { (grp, it) =>
-        // t DESC so risk sets are prefix sums; the sort also pins the
-        // in-task summation order at any partition count
-        val rows = it.toArray.sortBy(r => -r._2)
-        var n = 0.0; var n1 = 0.0
-        val ev = Array.newBuilder[(Double, Double, Double, Double)]
-        rows.foreach { case (_, _, d, d1, c, c1) =>
-          n += c; n1 += c1
-          if (d > 0) ev += ((d, d1, n, n1))
+    riskTables(df, timeCol, eventCol, xCol, byCol, Nil) { (grp, events, table) =>
+      // (U, I) at β
+      def pass(b: Array[Double]): Array[Double] = {
+        val eb = math.exp(b(0))
+        var u = 0.0; var inf = 0.0
+        table.foreach { e =>
+          val n0 = e.n0(0); val nn1 = e.n1(0)
+          val s0 = n0 + nn1 * eb
+          u += e.dx - e.d * nn1 * eb / s0
+          inf += e.d * (nn1 * eb * n0) / (s0 * s0)
         }
-        val evs = ev.result()
-        if (evs.isEmpty) Iterator.empty
-        else {
-          val events = evs.iterator.map(_._1).sum.toLong
-          var beta = 0.0
-          var dead = false
-          var k = 0
-          while (k < iters && !dead) {
-            val eb = math.exp(beta)
-            var u = 0.0; var inf = 0.0
-            evs.foreach { case (d, d1, nn, nn1) =>
-              val n0 = nn - nn1
-              val s0 = n0 + nn1 * eb
-              u += d1 - d * nn1 * eb / s0
-              inf += d * (nn1 * eb * n0) / (s0 * s0)
-            }
-            if (inf <= 0) dead = true
-            else beta = math.floor((beta + u / inf) * 1e6 + 0.5) / 1e6
-            k += 1
-          }
-          val infFin =
-            if (dead) 0.0
-            else {
-              val eb = math.exp(beta)
-              var inf = 0.0
-              evs.foreach { case (d, _, nn, nn1) =>
-                val n0 = nn - nn1
-                val s0 = n0 + nn1 * eb
-                inf += d * (nn1 * eb * n0) / (s0 * s0)
-              }
-              inf
-            }
-          if (infFin <= 0)
-            Iterator.single((grp, events, None: Option[Double],
-              None: Option[Double], None: Option[Double]))
-          else
-            Iterator.single((grp, events, Some(beta),
-              Some(1.0 / math.sqrt(infFin)), Some(beta * beta * infFin)))
-        }
+        Array(u, inf)
       }
-      .toDF(byCol, "events", "beta", "se", "chi2")
+      val none = None: Option[Double]
+      gridNewton(1, iters)(pass)((b, m) => if (m(1) <= 0) None else Some(Array(b(0) + m(0) / m(1))))
+        .collect { case (b, m) if m(1) > 0 =>
+          (grp, events, Some(b(0)), Some(1.0 / math.sqrt(m(1))), Some(b(0) * b(0) * m(1)))
+        }
+        .getOrElse((grp, events, none, none, none))
+    }.toDF(byCol, "events", "beta", "se", "chi2")
   }
 
   /**
@@ -1384,90 +1414,57 @@ object Association {
    * the l-th of d tied events by l/d of the EVENT subjects' own
    * hazard mass, which is visibly different exactly in the tied-time
    * strata day-grained cohorts generate. For binary x the per-tie
-   * sums stay closed-form over a23's bounded per-time table — with
+   * sums stay closed-form over a23's risk table — with
    * e = exp(β), S0 = n0 + n1·e, S1 = n1·e over the risk set and
    * s0e = d0 + d1·e, s1e = d1·e over the d tied events:
    *   U(β) = Σ_t [ d1 − Σ_{l<d} (S1 − (l/d)·s1e) / (S0 − (l/d)·s0e) ]
    *   I(β) = Σ_t   Σ_{l<d} r_l·(1 − r_l),  r_l the U ratio above
    * (binary x makes S2 = S1 and s2e = s1e, so the information term
    * collapses to r(1−r)). At d = 1 every term reduces to Breslow's —
-   * untied strata fit identically (spec-pinned). β steps on the 1e-6
-   * grid, fixed `iters`, so the DuckDB oracle unrolls the exact
-   * trajectory — the inner Σ_l as an in-order `list_sum` over
-   * `generate_series`, the same left-to-right order as the kernel's
-   * l loop. Scale shape identical to a23: one (stratum, time)
-   * aggregate, in-task Newton over the bounded table; the l loop adds
-   * O(ties) work per event time, never another shuffle.
+   * untied strata fit identically (spec-pinned). The oracle
+   * (`coxPhEfronSql`) unrolls the [[gridNewton]] trajectory with the
+   * inner Σ_l as an in-order `list_sum` over `generate_series`, the
+   * same left-to-right order as the kernel's l loop, which adds
+   * O(ties) work per event time and never another shuffle.
    */
   def coxPhEfron(df: DataFrame, timeCol: String, eventCol: String,
       xCol: String, byCol: String, iters: Int = 6): DataFrame = {
     require(iters >= 1 && iters <= 20, s"coxPhEfron: iters in [1,20], got $iters")
     val spark = df.sparkSession
     import spark.implicits._
-    val perTime = df
-      .filter(col(timeCol).isNotNull && col(timeCol) > 0 &&
-        col(eventCol).isin(0.0, 1.0) && col(xCol).isin(0.0, 1.0))
-      .groupBy(col(byCol).cast("string").as("g"), col(timeCol).cast("double").as("t"))
-      .agg(
-        sum(col(eventCol)).as("d"),
-        sum(col(eventCol) * col(xCol)).as("d1"),
-        count(lit(1)).cast("double").as("c"),
-        sum(col(xCol)).as("c1"))
-      .as[(String, Double, Double, Double, Double, Double)]
-    perTime.groupByKey(_._1)
-      .flatMapGroups { (grp, it) =>
-        val rows = it.toArray.sortBy(r => -r._2)
-        var n = 0.0; var n1 = 0.0
-        val ev = Array.newBuilder[(Double, Double, Double, Double)]
-        rows.foreach { case (_, _, d, d1, c, c1) =>
-          n += c; n1 += c1
-          if (d > 0) ev += ((d, d1, n, n1))
-        }
-        val evs = ev.result()
-        if (evs.isEmpty) Iterator.empty
-        else {
-          val events = evs.iterator.map(_._1).sum.toLong
-          // (U, I) at beta — the l loop's operand order mirrors the
-          // oracle's generate_series list_sum term-for-term
-          def pass(beta: Double): (Double, Double) = {
-            val eb = math.exp(beta)
-            var u = 0.0; var inf = 0.0
-            evs.foreach { case (d, d1, nn, nn1) =>
-              val s0 = (nn - nn1) + nn1 * eb
-              val s1 = nn1 * eb
-              val s0e = (d - d1) + d1 * eb
-              val s1e = d1 * eb
-              var rs = 0.0; var is = 0.0
-              val dd = d.toInt
-              var l = 0
-              while (l < dd) {
-                val f = l / d
-                val r = (s1 - f * s1e) / (s0 - f * s0e)
-                rs += r; is += r * (1.0 - r)
-                l += 1
-              }
-              u += d1 - rs
-              inf += is
-            }
-            (u, inf)
+    riskTables(df, timeCol, eventCol, xCol, byCol, Nil) { (grp, events, table) =>
+      // (U, I) at β — the l loop's operand order mirrors the
+      // oracle's generate_series list_sum term-for-term
+      def pass(b: Array[Double]): Array[Double] = {
+        val eb = math.exp(b(0))
+        var u = 0.0; var inf = 0.0
+        table.foreach { e =>
+          val (d, d1) = (e.d, e.dx)
+          val s0 = e.n0(0) + e.n1(0) * eb
+          val s1 = e.n1(0) * eb
+          val s0e = (d - d1) + d1 * eb
+          val s1e = d1 * eb
+          var rs = 0.0; var is = 0.0
+          val dd = d.toInt
+          var l = 0
+          while (l < dd) {
+            val f = l / d
+            val r = (s1 - f * s1e) / (s0 - f * s0e)
+            rs += r; is += r * (1.0 - r)
+            l += 1
           }
-          var beta = 0.0; var dead = false; var k = 0
-          while (k < iters && !dead) {
-            val (u, inf) = pass(beta)
-            if (inf <= 0) dead = true
-            else beta = math.floor((beta + u / inf) * 1e6 + 0.5) / 1e6
-            k += 1
-          }
-          val infFin = if (dead) 0.0 else pass(beta)._2
-          if (infFin <= 0)
-            Iterator.single((grp, events, None: Option[Double],
-              None: Option[Double], None: Option[Double]))
-          else
-            Iterator.single((grp, events, Some(beta),
-              Some(1.0 / math.sqrt(infFin)), Some(beta * beta * infFin)))
+          u += d1 - rs
+          inf += is
         }
+        Array(u, inf)
       }
-      .toDF(byCol, "events", "beta", "se", "chi2")
+      val none = None: Option[Double]
+      gridNewton(1, iters)(pass)((b, m) => if (m(1) <= 0) None else Some(Array(b(0) + m(0) / m(1))))
+        .collect { case (b, m) if m(1) > 0 =>
+          (grp, events, Some(b(0)), Some(1.0 / math.sqrt(m(1))), Some(b(0) * b(0) * m(1)))
+        }
+        .getOrElse((grp, events, none, none, none))
+    }.toDF(byCol, "events", "beta", "se", "chi2")
   }
 
   /**
@@ -1500,6 +1497,7 @@ object Association {
       byCol, zMax = bins - 1, iters = iters)
   }
 
+
   /**
    * Covariate-ADJUSTED Cox proportional-hazards fit (Breslow ties) of
    * a binary exposure plus one integer-leveled covariate, per stratum
@@ -1507,23 +1505,17 @@ object Association {
    * age-at-onset PheWAS hazard ratio where calendar-time (or age-band)
    * confounding must be adjusted out, not stratified away.
    *
-   * The design KEEPS a23's bounded-table shape by stratifying the
-   * risk-set counts on the covariate's levels: with x ∈ {0,1} and
-   * z ∈ {0..zMax}, the Breslow risk sums collapse to closed forms
-   * over per-(time, x, z) counts —
+   * The risk table ([[riskTables]]) counts the risk set per covariate
+   * level: with x ∈ {0,1} and z ∈ {0..zMax}, the Breslow risk sums
+   * collapse to closed forms over per-(time, x, z) counts —
    *   S0  = Σ_z (n0z + n1z·e^βx)·e^(βz·z)      S1x = S2xx = Σ_z n1z·e^βx·e^(βz·z)
    *   S1z = Σ_z z·(n0z + n1z·e^βx)·e^(βz·z)    S2xz = Σ_z z·n1z·e^βx·e^(βz·z)
    *   S2zz = Σ_z z²·(n0z + n1z·e^βx)·e^(βz·z)
-   * — so the ONLY subject-proportional work is one (stratum, time, x,
-   * z) count aggregate (≤ 2·(zMax+1) cells per distinct time), each
-   * task holds one stratum's bounded table, and every 2×2 Newton step
-   * on the partial likelihood is an in-task array pass. Both β's are
-   * re-rounded to the 1e-6 grid per step (the a21/a23 replay rule) so
-   * the DuckDB oracle unrolls the exact trajectory as CTE pairs.
-   * `iters` is FIXED for oracle replay. Singular / non-PD information
-   * (det ≤ 0, a diagonal ≤ 0) latches β to null; zero-event strata
-   * emit nothing. At 100 TB this costs the same ONE shuffle as a19 —
-   * the covariate widens the per-time table, not the scan count.
+   * — and each [[gridNewton]] step solves the 2×2 system in closed
+   * form; the oracle (`coxPhCovSql`) unrolls the trajectory as CTE
+   * pairs. Singular / non-PD information (det ≤ 0, a diagonal ≤ 0)
+   * latches β to null. The covariate widens the table to
+   * 2·(zMax+1) cells per distinct time, not the scan count.
    */
   def coxPhCov(df: DataFrame, timeCol: String, eventCol: String,
       xCol: String, zCol: String, byCol: String, zMax: Int,
@@ -1532,100 +1524,49 @@ object Association {
     require(zMax >= 1 && zMax <= 64, s"coxPhCov: zMax in [1,64], got $zMax")
     val spark = df.sparkSession
     import spark.implicits._
-    val perCell = df
-      .filter(col(timeCol).isNotNull && col(timeCol) > 0 &&
-        col(eventCol).isin(0.0, 1.0) && col(xCol).isin(0.0, 1.0) &&
-        col(zCol).isNotNull && col(zCol) === floor(col(zCol)) &&
-        col(zCol) >= 0 && col(zCol) <= zMax)
-      .groupBy(col(byCol).cast("string").as("g"),
-        col(timeCol).cast("double").as("t"),
-        col(xCol).cast("int").as("x"), col(zCol).cast("int").as("z"))
-      .agg(count(lit(1)).cast("double").as("c"), sum(col(eventCol)).as("d"))
-      .as[(String, Double, Int, Int, Double, Double)]
-    perCell.groupByKey(_._1)
-      .flatMapGroups { (grp, it) =>
-        // t DESC; every cell of a tied time joins the risk set BEFORE
-        // the event entry is recorded (Breslow: ties share the risk
-        // set). The (x, z) tiebreak pins the in-task order at any
-        // partition count; all count arithmetic is integer-exact.
-        val rows = it.toArray.sortBy(r => (-r._2, r._3, r._4))
-        val k1 = zMax + 1
-        val n = Array.ofDim[Double](2, k1)
-        // (d, dx, dz, risk n0[z], risk n1[z]) per event time — bounded
-        // by distinct EVENT times, not subjects
-        val ev = scala.collection.mutable.ArrayBuffer
-          .empty[(Double, Double, Double, Array[Double], Array[Double])]
-        var i = 0
-        while (i < rows.length) {
-          val t = rows(i)._2
-          var dT = 0.0; var dxT = 0.0; var dzT = 0.0
-          while (i < rows.length && rows(i)._2 == t) {
-            val r = rows(i)
-            n(r._3)(r._4) += r._5
-            dT += r._6; dxT += r._6 * r._3; dzT += r._6 * r._4
-            i += 1
+    val k1 = zMax + 1
+    riskTables(df, timeCol, eventCol, xCol, byCol, Seq(zCol -> zMax)) { (grp, events, table) =>
+      // (ux, uz, ixx, ixz, izz) at (bx, bz) — the z loop and every
+      // operand order mirror the oracle's generated left-assoc SQL
+      // term-for-term
+      def pass(beta: Array[Double]): Array[Double] = {
+        val ex = math.exp(beta(0)); val bz = beta(1)
+        var ux = 0.0; var uz = 0.0
+        var ixx = 0.0; var ixz = 0.0; var izz = 0.0
+        table.foreach { e =>
+          val (d, dx, dz, n0, n1) = (e.d, e.dx, e.dz(0), e.n0, e.n1)
+          var s0 = 0.0; var s1x = 0.0; var s1z = 0.0
+          var s2xz = 0.0; var s2zz = 0.0
+          var z = 0
+          while (z < k1) {
+            val ezv = math.exp(bz * z)
+            val both = (n0(z) + n1(z) * ex) * ezv
+            val x1 = n1(z) * ex * ezv
+            s0 += both; s1x += x1; s1z += z * both
+            s2xz += z * x1; s2zz += (z * z) * both
+            z += 1
           }
-          if (dT > 0) ev += ((dT, dxT, dzT, n(0).clone(), n(1).clone()))
+          ux += dx - d * s1x / s0
+          uz += dz - d * s1z / s0
+          ixx += d * (s1x / s0 - (s1x / s0) * (s1x / s0))
+          ixz += d * (s2xz / s0 - (s1x / s0) * (s1z / s0))
+          izz += d * (s2zz / s0 - (s1z / s0) * (s1z / s0))
         }
-        if (ev.isEmpty) Iterator.empty
-        else {
-          val events = ev.iterator.map(_._1).sum.toLong
-          var bx = 0.0; var bz = 0.0; var dead = false
-          // (ux, uz, ixx, ixz, izz) at the current (bx, bz) — the z
-          // loop and every operand order mirror the oracle's generated
-          // left-assoc SQL term-for-term
-          def pass(): Array[Double] = {
-            val ex = math.exp(bx)
-            var ux = 0.0; var uz = 0.0
-            var ixx = 0.0; var ixz = 0.0; var izz = 0.0
-            ev.foreach { case (d, dx, dz, n0, n1) =>
-              var s0 = 0.0; var s1x = 0.0; var s1z = 0.0
-              var s2xz = 0.0; var s2zz = 0.0
-              var z = 0
-              while (z < k1) {
-                val ezv = math.exp(bz * z)
-                val both = (n0(z) + n1(z) * ex) * ezv
-                val x1 = n1(z) * ex * ezv
-                s0 += both; s1x += x1; s1z += z * both
-                s2xz += z * x1; s2zz += (z * z) * both
-                z += 1
-              }
-              ux += dx - d * s1x / s0
-              uz += dz - d * s1z / s0
-              ixx += d * (s1x / s0 - (s1x / s0) * (s1x / s0))
-              ixz += d * (s2xz / s0 - (s1x / s0) * (s1z / s0))
-              izz += d * (s2zz / s0 - (s1z / s0) * (s1z / s0))
-            }
-            Array(ux, uz, ixx, ixz, izz)
-          }
-          var k = 0
-          while (k < iters && !dead) {
-            val a = pass()
-            val det = a(2) * a(4) - a(3) * a(3)
-            if (det <= 0 || a(2) <= 0) dead = true
-            else {
-              val nbx = math.floor((bx + (a(4) * a(0) - a(3) * a(1)) / det) * 1e6 + 0.5) / 1e6
-              val nbz = math.floor((bz + (a(2) * a(1) - a(3) * a(0)) / det) * 1e6 + 0.5) / 1e6
-              bx = nbx; bz = nbz
-            }
-            k += 1
-          }
-          val none = None: Option[Double]
-          if (dead)
-            Iterator.single((grp, events, none, none, none, none, none))
-          else {
-            val a = pass()
-            val det = a(2) * a(4) - a(3) * a(3)
-            if (det <= 0 || a(2) <= 0 || a(4) <= 0)
-              Iterator.single((grp, events, none, none, none, none, none))
-            else
-              Iterator.single((grp, events, Some(bx),
-                Some(math.sqrt(a(4) / det)), Some(bz),
-                Some(math.sqrt(a(2) / det)), Some(bx * bx * det / a(4))))
-          }
-        }
+        Array(ux, uz, ixx, ixz, izz)
       }
-      .toDF(byCol, "events", "beta_x", "se_x", "beta_z", "se_z", "chi2")
+      val none = None: Option[Double]
+      gridNewton(2, iters)(pass) { (b, a) =>
+        val det = a(2) * a(4) - a(3) * a(3)
+        if (det <= 0 || a(2) <= 0) None
+        else Some(Array(b(0) + (a(4) * a(0) - a(3) * a(1)) / det,
+          b(1) + (a(2) * a(1) - a(3) * a(0)) / det))
+      }.flatMap { case (b, a) =>
+        val det = a(2) * a(4) - a(3) * a(3)
+        if (det <= 0 || a(2) <= 0 || a(4) <= 0) None
+        else Some((grp, events, Some(b(0)), Some(math.sqrt(a(4) / det)), Some(b(1)),
+          Some(math.sqrt(a(2) / det)), Some(b(0) * b(0) * det / a(4))))
+      }.getOrElse((grp, events, none, none, none, none, none))
+    }.toDF(byCol, "events", "beta_x", "se_x", "beta_z", "se_z", "chi2")
   }
 
   /**
@@ -1637,27 +1578,20 @@ object Association {
    * are the matching survival-side shape, cf.
    * reference `models.py:9-83`).
    *
-   * Same bounded-table design: risk-set counts stratify on the
-   * covariate CELLS (x, z1, z2) ∈ {0,1}×{0..z1Max}×{0..z2Max}, so the
-   * Breslow sums collapse to closed forms over per-(time, cell)
-   * counts —
+   * The risk table counts the covariate CELLS (x, z1, z2) ∈
+   * {0,1}×{0..z1Max}×{0..z2Max} (≤ 2·(z1Max+1)·(z2Max+1) per distinct
+   * time), so the Breslow sums collapse to closed forms —
    *   S0    = Σ_cells (n0 + n1·e^βx)·e^(β1·z1 + β2·z2)
    *   S1x   = Σ n1·e^βx·e^(…)          S1j  = Σ zj·(n0 + n1·e^βx)·e^(…)
    *   S2xj  = Σ zj·n1·e^βx·e^(…)       S2jk = Σ zj·zk·(n0 + n1·e^βx)·e^(…)
-   * — and each Newton step solves the symmetric 3×3 system by the
-   * closed ADJUGATE (cofactors a00/a01/a02/a11/a12/a22, det by the
+   * — and each [[gridNewton]] step solves the symmetric 3×3 system by
+   * the closed ADJUGATE (cofactors a00/a01/a02/a11/a12/a22, det by the
    * first-row Laplace expansion), never a matrix library: the same
    * machinery a34's closed 2×2 inverse extends. Positive-definiteness
    * gates by Sylvester minors (ixx > 0, a22 = ixx·i11 − ix1² > 0,
-   * det > 0); singular/indefinite information latches to null. Both
-   * betas re-round to the 1e-6 grid per step so the DuckDB oracle
-   * unrolls the identical trajectory as cofactor CTE pairs.
-   *
-   * Scale: the ONLY subject-proportional work is one (stratum, time,
-   * x, z1, z2) count aggregate (≤ 2·(z1Max+1)·(z2Max+1) cells per
-   * distinct time); each task holds one stratum's bounded table and
-   * every 3×3 Newton step is an in-task array pass — a second
-   * adjuster widens the per-time table, not the shuffle count.
+   * det > 0); singular/indefinite information latches to null. The
+   * oracle (`coxPhCov2Sql`) unrolls the trajectory as cofactor CTE
+   * pairs.
    */
   def coxPhCov2(df: DataFrame, timeCol: String, eventCol: String,
       xCol: String, z1Col: String, z2Col: String, byCol: String,
@@ -1667,138 +1601,79 @@ object Association {
     require(z2Max >= 1 && z2Max <= 32, s"coxPhCov2: z2Max in [1,32], got $z2Max")
     val spark = df.sparkSession
     import spark.implicits._
-    val perCell = df
-      .filter(col(timeCol).isNotNull && col(timeCol) > 0 &&
-        col(eventCol).isin(0.0, 1.0) && col(xCol).isin(0.0, 1.0) &&
-        col(z1Col).isNotNull && col(z1Col) === floor(col(z1Col)) &&
-        col(z1Col) >= 0 && col(z1Col) <= z1Max &&
-        col(z2Col).isNotNull && col(z2Col) === floor(col(z2Col)) &&
-        col(z2Col) >= 0 && col(z2Col) <= z2Max)
-      .groupBy(col(byCol).cast("string").as("g"),
-        col(timeCol).cast("double").as("t"),
-        col(xCol).cast("int").as("x"),
-        col(z1Col).cast("int").as("z1"), col(z2Col).cast("int").as("z2"))
-      .agg(count(lit(1)).cast("double").as("c"), sum(col(eventCol)).as("d"))
-      .as[(String, Double, Int, Int, Int, Double, Double)]
-    perCell.groupByKey(_._1)
-      .flatMapGroups { (grp, it) =>
-        // t DESC (Breslow: tied events share the risk set); the
-        // (x, z1, z2) tiebreak pins in-task order at any partition
-        // count; count arithmetic is integer-exact
-        val rows = it.toArray.sortBy(r => (-r._2, r._3, r._4, r._5))
-        val k1 = z1Max + 1; val k2 = z2Max + 1
-        val n = Array.ofDim[Double](2, k1, k2)
-        // (d, dx, d1, d2, risk n0[z1][z2], risk n1[z1][z2]) per event
-        // time — bounded by distinct EVENT times, not subjects
-        val ev = scala.collection.mutable.ArrayBuffer
-          .empty[(Double, Double, Double, Double,
-            Array[Array[Double]], Array[Array[Double]])]
-        var i = 0
-        while (i < rows.length) {
-          val t = rows(i)._2
-          var dT = 0.0; var dxT = 0.0; var d1T = 0.0; var d2T = 0.0
-          while (i < rows.length && rows(i)._2 == t) {
-            val r = rows(i)
-            n(r._3)(r._4)(r._5) += r._6
-            dT += r._7; dxT += r._7 * r._3
-            d1T += r._7 * r._4; d2T += r._7 * r._5
-            i += 1
-          }
-          if (dT > 0) ev += ((dT, dxT, d1T, d2T,
-            n(0).map(_.clone()), n(1).map(_.clone())))
-        }
-        if (ev.isEmpty) Iterator.empty
-        else {
-          val events = ev.iterator.map(_._1).sum.toLong
-          var bx = 0.0; var b1 = 0.0; var b2 = 0.0; var dead = false
-          // (ux, u1, u2, ixx, ix1, ix2, i11, i12, i22) at the current
-          // iterate — the z1-outer/z2-inner loop and every operand
-          // order mirror the oracle's generated left-assoc SQL
-          def pass(): Array[Double] = {
-            val ex = math.exp(bx)
-            var ux = 0.0; var u1 = 0.0; var u2 = 0.0
-            var ixx = 0.0; var ix1 = 0.0; var ix2 = 0.0
-            var i11 = 0.0; var i12 = 0.0; var i22 = 0.0
-            ev.foreach { case (d, dx, d1, d2, n0, n1) =>
-              var s0 = 0.0; var s1x = 0.0; var s11 = 0.0; var s12 = 0.0
-              var sx1 = 0.0; var sx2 = 0.0
-              var s211 = 0.0; var s212 = 0.0; var s222 = 0.0
-              var a = 0
-              while (a < k1) {
-                var b = 0
-                while (b < k2) {
-                  val ezv = math.exp(b1 * a + b2 * b)
-                  val both = (n0(a)(b) + n1(a)(b) * ex) * ezv
-                  val x1v = n1(a)(b) * ex * ezv
-                  s0 += both; s1x += x1v
-                  s11 += a * both; s12 += b * both
-                  sx1 += a * x1v; sx2 += b * x1v
-                  s211 += (a * a) * both; s212 += (a * b) * both
-                  s222 += (b * b) * both
-                  b += 1
-                }
-                a += 1
-              }
-              ux += dx - d * s1x / s0
-              u1 += d1 - d * s11 / s0
-              u2 += d2 - d * s12 / s0
-              ixx += d * (s1x / s0 - (s1x / s0) * (s1x / s0))
-              ix1 += d * (sx1 / s0 - (s1x / s0) * (s11 / s0))
-              ix2 += d * (sx2 / s0 - (s1x / s0) * (s12 / s0))
-              i11 += d * (s211 / s0 - (s11 / s0) * (s11 / s0))
-              i12 += d * (s212 / s0 - (s11 / s0) * (s12 / s0))
-              i22 += d * (s222 / s0 - (s12 / s0) * (s12 / s0))
+    val k1 = z1Max + 1; val k2 = z2Max + 1
+    riskTables(df, timeCol, eventCol, xCol, byCol, Seq(z1Col -> z1Max, z2Col -> z2Max)) {
+        (grp, events, table) =>
+      // (ux, u1, u2, ixx, ix1, ix2, i11, i12, i22) at the iterate — the
+      // z1-outer/z2-inner loop and every operand order mirror the
+      // oracle's generated left-assoc SQL
+      def pass(beta: Array[Double]): Array[Double] = {
+        val ex = math.exp(beta(0)); val b1 = beta(1); val b2 = beta(2)
+        var ux = 0.0; var u1 = 0.0; var u2 = 0.0
+        var ixx = 0.0; var ix1 = 0.0; var ix2 = 0.0
+        var i11 = 0.0; var i12 = 0.0; var i22 = 0.0
+        table.foreach { e =>
+          val (d, dx, d1, d2, n0, n1) = (e.d, e.dx, e.dz(0), e.dz(1), e.n0, e.n1)
+          var s0 = 0.0; var s1x = 0.0; var s11 = 0.0; var s12 = 0.0
+          var sx1 = 0.0; var sx2 = 0.0
+          var s211 = 0.0; var s212 = 0.0; var s222 = 0.0
+          var a = 0
+          while (a < k1) {
+            var b = 0
+            while (b < k2) {
+              val ezv = math.exp(b1 * a + b2 * b)
+              val both = (n0(a * k2 + b) + n1(a * k2 + b) * ex) * ezv
+              val x1v = n1(a * k2 + b) * ex * ezv
+              s0 += both; s1x += x1v
+              s11 += a * both; s12 += b * both
+              sx1 += a * x1v; sx2 += b * x1v
+              s211 += (a * a) * both; s212 += (a * b) * both
+              s222 += (b * b) * both
+              b += 1
             }
-            Array(ux, u1, u2, ixx, ix1, ix2, i11, i12, i22)
+            a += 1
           }
-          // symmetric-3×3 cofactors in the oracle's exact operand order
-          def cof(m: Array[Double]): Array[Double] = {
-            val a00 = m(6) * m(8) - m(7) * m(7)
-            val a01 = m(5) * m(7) - m(4) * m(8)
-            val a02 = m(4) * m(7) - m(6) * m(5)
-            val a11 = m(3) * m(8) - m(5) * m(5)
-            val a12 = m(4) * m(5) - m(3) * m(7)
-            val a22 = m(3) * m(6) - m(4) * m(4)
-            val det = m(3) * (m(6) * m(8) - m(7) * m(7)) +
-              m(4) * (m(5) * m(7) - m(4) * m(8)) +
-              m(5) * (m(4) * m(7) - m(6) * m(5))
-            Array(a00, a01, a02, a11, a12, a22, det)
-          }
-          var k = 0
-          while (k < iters && !dead) {
-            val m = pass()
-            val c = cof(m)
-            if (c(6) <= 0 || m(3) <= 0 || c(5) <= 0) dead = true
-            else {
-              val nbx = math.floor((bx +
-                (c(0) * m(0) + c(1) * m(1) + c(2) * m(2)) / c(6)) * 1e6 + 0.5) / 1e6
-              val nb1 = math.floor((b1 +
-                (c(1) * m(0) + c(3) * m(1) + c(4) * m(2)) / c(6)) * 1e6 + 0.5) / 1e6
-              val nb2 = math.floor((b2 +
-                (c(2) * m(0) + c(4) * m(1) + c(5) * m(2)) / c(6)) * 1e6 + 0.5) / 1e6
-              bx = nbx; b1 = nb1; b2 = nb2
-            }
-            k += 1
-          }
-          val none = None: Option[Double]
-          if (dead)
-            Iterator.single((grp, events, none, none, none, none, none, none, none))
-          else {
-            val m = pass()
-            val c = cof(m)
-            if (c(6) <= 0 || m(3) <= 0 || c(0) <= 0 || c(3) <= 0 || c(5) <= 0)
-              Iterator.single((grp, events, none, none, none, none, none, none, none))
-            else
-              Iterator.single((grp, events, Some(bx),
-                Some(math.sqrt(c(0) / c(6))), Some(b1),
-                Some(math.sqrt(c(3) / c(6))), Some(b2),
-                Some(math.sqrt(c(5) / c(6))),
-                Some(bx * bx * c(6) / c(0))))
-          }
+          ux += dx - d * s1x / s0
+          u1 += d1 - d * s11 / s0
+          u2 += d2 - d * s12 / s0
+          ixx += d * (s1x / s0 - (s1x / s0) * (s1x / s0))
+          ix1 += d * (sx1 / s0 - (s1x / s0) * (s11 / s0))
+          ix2 += d * (sx2 / s0 - (s1x / s0) * (s12 / s0))
+          i11 += d * (s211 / s0 - (s11 / s0) * (s11 / s0))
+          i12 += d * (s212 / s0 - (s11 / s0) * (s12 / s0))
+          i22 += d * (s222 / s0 - (s12 / s0) * (s12 / s0))
         }
+        Array(ux, u1, u2, ixx, ix1, ix2, i11, i12, i22)
       }
-      .toDF(byCol, "events", "beta_x", "se_x", "beta_z1", "se_z1",
-        "beta_z2", "se_z2", "chi2")
+      // symmetric-3×3 cofactors in the oracle's exact operand order
+      def cof(m: Array[Double]): Array[Double] = {
+        val a00 = m(6) * m(8) - m(7) * m(7)
+        val a01 = m(5) * m(7) - m(4) * m(8)
+        val a02 = m(4) * m(7) - m(6) * m(5)
+        val a11 = m(3) * m(8) - m(5) * m(5)
+        val a12 = m(4) * m(5) - m(3) * m(7)
+        val a22 = m(3) * m(6) - m(4) * m(4)
+        val det = m(3) * (m(6) * m(8) - m(7) * m(7)) +
+          m(4) * (m(5) * m(7) - m(4) * m(8)) +
+          m(5) * (m(4) * m(7) - m(6) * m(5))
+        Array(a00, a01, a02, a11, a12, a22, det)
+      }
+      val none = None: Option[Double]
+      gridNewton(3, iters)(pass) { (b, m) =>
+        val c = cof(m)
+        if (c(6) <= 0 || m(3) <= 0 || c(5) <= 0) None
+        else Some(Array(b(0) + (c(0) * m(0) + c(1) * m(1) + c(2) * m(2)) / c(6),
+          b(1) + (c(1) * m(0) + c(3) * m(1) + c(4) * m(2)) / c(6),
+          b(2) + (c(2) * m(0) + c(4) * m(1) + c(5) * m(2)) / c(6)))
+      }.flatMap { case (b, m) =>
+        val c = cof(m)
+        if (c(6) <= 0 || m(3) <= 0 || c(0) <= 0 || c(3) <= 0 || c(5) <= 0) None
+        else Some((grp, events, Some(b(0)), Some(math.sqrt(c(0) / c(6))), Some(b(1)),
+          Some(math.sqrt(c(3) / c(6))), Some(b(2)), Some(math.sqrt(c(5) / c(6))),
+          Some(b(0) * b(0) * c(6) / c(0))))
+      }.getOrElse((grp, events, none, none, none, none, none, none, none))
+    }.toDF(byCol, "events", "beta_x", "se_x", "beta_z1", "se_z1",
+      "beta_z2", "se_z2", "chi2")
   }
 
   /**
@@ -2105,9 +1980,6 @@ object Association {
     val b = col("n01") + when(h, 0.5).otherwise(0.0)
     val z = log(a / b) / sqrt(lit(1.0) / a + lit(1.0) / b)
     val x = abs(z)
-    val t = lit(1.0) / (lit(1.0) + lit(0.2316419) * x)
-    val poly = t * (lit(0.319381530) + t * (lit(-0.356563782) +
-      t * (lit(1.781477937) + t * (lit(-1.821255978) + t * lit(1.330274429)))))
     cells.select(col(byCol), col("n_pairs"), col("n10"), col("n01"),
       log(a / b).as("beta"),
       sqrt(lit(1.0) / a + lit(1.0) / b).as("se"),
@@ -2115,8 +1987,7 @@ object Association {
       when(col("n10") + col("n01") > 0,
         (col("n10") - col("n01")) * (col("n10") - col("n01"))
           / (col("n10") + col("n01")).cast("double")).as("mcnemar_chi2"),
-      (lit(2.0) * exp(lit(-0.5) * x * x) * lit(0.3989422804014327) * poly)
-        .as("p_wald"))
+      Norm.zsTail(x).as("p_wald"))
   }
 
 }

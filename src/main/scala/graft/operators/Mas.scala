@@ -716,9 +716,6 @@ object Mas {
       (sw2 - sw * sw / col("n"))
     val z = tstat / sqrt(vt)
     val x = abs(z)
-    val t = lit(1.0) / (lit(1.0) + lit(0.2316419) * x)
-    val poly = t * (lit(0.319381530) + t * (lit(-0.356563782) +
-      t * (lit(1.781477937) + t * (lit(-1.821255978) + t * lit(1.330274429)))))
     cells.select(col("dependent"),
       col("n").cast("long").as("total_n"), col("r").cast("long").as("cases"),
       col("n0").cast("long").as("n0"), col("n1").cast("long").as("n1"),
@@ -727,8 +724,7 @@ object Mas {
       when(vt > 0, r4(tstat)).as("t_stat"),
       when(vt > 0, r4(z)).as("z"),
       when(vt > 0, r4(z * z)).as("chi2"),
-      when(vt > 0, round(lit(2.0) * exp(lit(-0.5) * x * x) *
-        lit(0.3989422804014327) * poly, 6)).as("p_trend"))
+      when(vt > 0, round(Norm.zsTail(x), 6)).as("p_trend"))
   }
 
   /** a28: CA trend of urgency/openness/size outcomes on the
@@ -743,11 +739,7 @@ object Mas {
     * every oracle mirror. */
   private def twoSidedP(z: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val x = abs(z)
-    val t = lit(1.0) / (lit(1.0) + lit(0.2316419) * x)
-    val poly = t * (lit(0.319381530) + t * (lit(-0.356563782) +
-      t * (lit(1.781477937) + t * (lit(-1.821255978) + t * lit(1.330274429)))))
-    round(lit(2.0) * exp(lit(-0.5) * x * x) *
-      lit(0.3989422804014327) * poly, 6) + lit(0.0)
+    round(Norm.zsTail(x), 6) + lit(0.0)
   }
 
   /**
@@ -1200,10 +1192,6 @@ object Mas {
       (col("n1") - e1) * (col("n1") - e1) / e1 +
       (col("n2") - e2) * (col("n2") - e2) / e2
     val x = sqrt(chi2)
-    val t = lit(1.0) / (lit(1.0) + lit(0.2316419) * x)
-    val poly = t * (lit(0.319381530) + t * (lit(-0.356563782) +
-      t * (lit(1.781477937) + t * (lit(-1.821255978) + t * lit(1.330274429)))))
-    val poly2 = lit(2.0) * exp(lit(-0.5) * x * x) * lit(0.3989422804014327) * poly
     val ok = p > 0 && p < 1
     cells.select(col("variant"),
       col("n").cast("long").as("total_n"),
@@ -1211,7 +1199,7 @@ object Mas {
       col("n2").cast("long").as("n2"),
       round(p, 6).as("allele_freq"),
       when(ok, r4(chi2)).as("chi2"),
-      when(ok, round(poly2, 6)).as("p_hwe"))
+      when(ok, round(Norm.zsTail(x), 6)).as("p_hwe"))
   }
 
   /** a29: HWE QC over three deterministic pseudo-variants of the
@@ -1520,12 +1508,6 @@ object Mas {
     icdToPhecode(coded, icdMap).orderBy("person_id", "phecode")
   }
 
-  /** Half-away-from-zero to the 1e-6 grid — the Similarity.qMicro
-    * rule, so driver-side Newton steps land on the same doubles as
-    * DuckDB `round(x, 6)`. */
-  private def q6(x: Double): Double =
-    (if (x >= 0) math.floor(x * 1e6 + 0.5) else math.ceil(x * 1e6 - 0.5)) / 1e6
-
   /**
    * GWAS-style SCORE-TEST screen — the association engine's true
    * 100 TB path (REGENIE/SAIGE-style step-1/step-2 split): fit the
@@ -1592,8 +1574,8 @@ object Mas {
         val u0 = r.getLong(4) / 1.0e6; val u1 = r.getLong(5) / 1.0e6
         val det = a * c - b * b
         val (b0, b1) = betas(dep)
-        dep -> ((q6(b0 + (c * u0 - b * u1) / det),
-          q6(b1 + (a * u1 - b * u0) / det)))
+        dep -> ((Preprocess.q6(b0 + (c * u0 - b * u1) / det),
+          Preprocess.q6(b1 + (a * u1 - b * u0) / det)))
       }.toMap
     }
     // score pass: ONE aggregation for every (predictor, dependent)

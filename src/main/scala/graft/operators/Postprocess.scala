@@ -261,8 +261,9 @@ object Postprocess {
   }
 
   /**
-   * [[bonferroni]], then [[annotate]] when `defs` is given, then the
-   * sort by (pval, predictor, dependent), over the rows of a results
+   * [[bonferroni]] at α = 0.05, then [[annotate]] on the defs'
+   * `phecode` column when `defs` is given, then the sort by (pval,
+   * predictor, dependent), over the rows of a results
    * relation the driver already holds (the pair grid `Association.assoc`
    * returns): no job runs but the read and collect of `defs`. The
    * result is a local relation of the sorted rows.
@@ -276,16 +277,15 @@ object Postprocess {
    * in UTF-8 byte order, nulls first. A defs key of another type than
    * the `on` column is compared as that column's type.
    */
-  def onDriver(results: DataFrame, defs: Option[DataFrame], on: String, defsKey: String,
-      alpha: Double = 0.05): DataFrame = {
+  def onDriver(results: DataFrame, defs: Option[DataFrame], on: String): DataFrame = {
     val in = results.schema
     val pv = in.fieldIndex("pval")
     val rows = results.collect()
-    val threshold = alpha / rows.count(!_.isNullAt(pv))
+    val threshold = 0.05 / rows.count(!_.isNullAt(pv))
     val flagged = rows.map(r =>
       Row.fromSeq(r.toSeq :+ (if (r.isNullAt(pv)) null else r.getDouble(pv) < threshold)))
     val withFlag = in.add("bonferroni_significant", BooleanType, nullable = true)
-    val (schema, out) = defs.fold((withFlag, flagged))(annotateRows(withFlag, flagged, _, on, defsKey))
+    val (schema, out) = defs.fold((withFlag, flagged))(annotateRows(withFlag, flagged, _, on, "phecode"))
     val Seq(p, pr, de) = Seq("pval", "predictor", "dependent").map(schema.fieldIndex)
     def utf8(r: Row, i: Int) = UTF8String.fromString(r.getString(i))
     val byOrder = new Ordering[(Row, UTF8String, UTF8String)] {
@@ -405,16 +405,11 @@ object Postprocess {
     val a = c.crossJoin(broadcast(lam))
       .withColumn("chi2_adj", col("chi2") / col("lam"))
       .withColumn("x", sqrt(col("chi2_adj")))
-      .withColumn("t", lit(1.0) / (lit(1.0) + lit(0.2316419) * col("x")))
-    val poly = col("t") * (lit(0.319381530) + col("t") * (lit(-0.356563782) +
-      col("t") * (lit(1.781477937) + col("t") * (lit(-1.821255978) +
-        col("t") * lit(1.330274429)))))
     a.select(col(idCol), round(col(pvalCol), 6).as("pval"),
       Norm.r4(col("chi2")).as("chi2"),
       Norm.r4(col("chi2_adj")).as("chi2_adj"),
       round(col("lam"), 6).as("lambda_used"),
-      round(lit(2.0) * exp(lit(-0.5) * col("x") * col("x")) *
-        lit(0.3989422804014327) * poly, 6).as("p_adj"))
+      round(Norm.zsTail(col("x")), 6).as("p_adj"))
   }
 
   /** s13: GC-corrected p-values over the pseudo p-value results. */
@@ -757,15 +752,10 @@ object Postprocess {
         sum(w * w).as("w2"))
     val zc = col("wz") / sqrt(col("w2"))
     val x = abs(zc)
-    val t = lit(1.0) / (lit(1.0) + lit(0.2316419) * x)
-    val poly = t * (lit(0.319381530) + t * (lit(-0.356563782) +
-      t * (lit(1.781477937) + t * (lit(-1.821255978) +
-        t * lit(1.330274429)))))
     agg.select(keyCols.map(col) ++ Seq(
       col("k_cohorts"),
       Norm.r4(zc).as("z_comb"),
-      (round(lit(2.0) * exp(lit(-0.5) * x * x) *
-        lit(0.3989422804014327) * poly, 6) + lit(0.0)).as("p_stouffer")): _*)
+      (round(Norm.zsTail(x), 6) + lit(0.0)).as("p_stouffer")): _*)
   }
 
   /** s20: Stouffer weighted-Z over the pseudo cohort results. */

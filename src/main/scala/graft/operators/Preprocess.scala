@@ -860,6 +860,43 @@ object Preprocess {
       .select(col("s.col1"), col("s.col2"), Norm.r4(col("s.r")).as("r"))
   }
 
+  /** Half-away-from-zero to the 1e-6 grid, as Spark's and DuckDB's
+    * `round(x, 6)` — the fixed-point-oracle rule, so driver-side steps
+    * land on the doubles the oracle's `round` gives. */
+  private[operators] def q6(x: Double): Double =
+    (if (x >= 0) math.floor(x * 1e6 + 0.5) else math.ceil(x * 1e6 - 0.5)) / 1e6
+
+  /** The k×k correlation matrix of `cols` from one `corr` aggregate:
+    * unit diagonal, every other entry on the [[q6]] grid. A correlation
+    * that is undefined (a constant column or < 2 complete rows) or NaN
+    * would poison every entry downstream, so it fails naming the pair. */
+  private def corrQ6(df: DataFrame, cols: Seq[String], who: String): Array[Array[Double]] = {
+    val pairs = for { i <- cols.indices; j <- i + 1 until cols.size } yield (i, j)
+    def x(i: Int) = col(cols(i)).cast("double")
+    def agg(cs: Seq[Column]) = df.agg(cs.head, cs.tail: _*).head()
+    def fail(p: Int, what: String) = new IllegalArgumentException(
+      s"$who: corr(${cols(pairs(p)._1)}, ${cols(pairs(p)._2)}) is $what — drop or fix the column first")
+    val undefined = "undefined (a constant column or < 2 complete rows)"
+    val row = try agg(pairs.map { case (i, j) => corr(x(i), x(j)) }) catch {
+      // under ANSI mode corr divides by a constant column's zero
+      // variance instead of giving null: find the pair by its variances
+      case e: ArithmeticException =>
+        val v = agg(pairs.flatMap { case (i, j) =>
+          val both = x(i).isNotNull && x(j).isNotNull
+          Seq(var_pop(when(both, x(i))), var_pop(when(both, x(j))))
+        })
+        throw pairs.indices.find(p => Seq(2 * p, 2 * p + 1).exists(k => v.isNullAt(k) || v.getDouble(k) == 0))
+          .map(fail(_, undefined)).getOrElse(e)
+    }
+    val r = Array.tabulate(cols.size, cols.size)((i, j) => if (i == j) 1.0 else 0.0)
+    pairs.zipWithIndex.foreach { case ((i, j), p) =>
+      if (row.isNullAt(p)) throw fail(p, undefined)
+      if (row.getDouble(p).isNaN) throw fail(p, "NaN")
+      val c = q6(row.getDouble(p)); r(i)(j) = c; r(j)(i) = c
+    }
+    r
+  }
+
   /**
    * Variance inflation factors — the multicollinearity screen run
    * before association (a near-collinear covariate silently inflates
@@ -882,20 +919,8 @@ object Preprocess {
         "screen with corrMatrix first or raise maxCols explicitly")
     val spark = df.sparkSession
     import spark.implicits._
-    val k = cols.size
-    val pairs = for { i <- cols.indices; j <- i + 1 until cols.size } yield (i, j)
-    val aggs = pairs.map { case (i, j) =>
-      corr(col(cols(i)).cast("double"), col(cols(j)).cast("double")).as(s"__c_${i}_$j") }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    def q6(x: Double): Double =
-      (if (x >= 0) math.floor(x * 1e6 + 0.5) else math.ceil(x * 1e6 - 0.5)) / 1e6
-    val r = breeze.linalg.DenseMatrix.eye[Double](k)
-    pairs.zipWithIndex.foreach { case ((i, j), p) =>
-      val v = q6(row.getDouble(p))
-      r(i, j) = v
-      r(j, i) = v
-    }
-    val inv = breeze.linalg.inv(r)
+    val r = corrQ6(df, cols, "vif")
+    val inv = breeze.linalg.inv(breeze.linalg.DenseMatrix.tabulate(r.length, r.length)(r(_)(_)))
     cols.zipWithIndex.map { case (c, i) => (c, inv(i, i)) }
       .toDF("covariate", "vif")
       .select(col("covariate"), Norm.r4(col("vif")).as("vif"))
@@ -950,20 +975,7 @@ object Preprocess {
       s"vifGauss: ${cols.size} columns exceeds maxCols=$maxCols (driver-side k×k inverse)")
     val spark = df.sparkSession
     import spark.implicits._
-    val k = cols.size
-    val pairs = for { i <- cols.indices; j <- i + 1 until cols.size } yield (i, j)
-    val aggs = pairs.map { case (i, j) =>
-      corr(col(cols(i)).cast("double"), col(cols(j)).cast("double")).as(s"__c_${i}_$j") }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    def q6(x: Double): Double =
-      (if (x >= 0) math.floor(x * 1e6 + 0.5) else math.ceil(x * 1e6 - 0.5)) / 1e6
-    val r = Array.tabulate(k, k)((i, j) => if (i == j) 1.0 else 0.0)
-    pairs.zipWithIndex.foreach { case ((i, j), p) =>
-      val v = q6(row.getDouble(p))
-      r(i)(j) = v
-      r(j)(i) = v
-    }
-    val inv = gaussJordanInv(r)
+    val inv = gaussJordanInv(corrQ6(df, cols, "vifGauss"))
     cols.zipWithIndex.map { case (c, i) => (c, inv(i)(i)) }
       .toDF("covariate", "vif")
       .select(col("covariate"), Norm.r4(col("vif")).as("vif"))
@@ -1010,23 +1022,7 @@ object Preprocess {
     val spark = df.sparkSession
     import spark.implicits._
     val k = cols.size
-    val pairs = for { i <- cols.indices; j <- i + 1 until cols.size } yield (i, j)
-    val aggs = pairs.map { case (i, j) =>
-      corr(col(cols(i)).cast("double"), col(cols(j)).cast("double")).as(s"__c_${i}_$j") }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    def q6(x: Double): Double =
-      (if (x >= 0) math.floor(x * 1e6 + 0.5) else math.ceil(x * 1e6 - 0.5)) / 1e6
-    val r = Array.tabulate(k, k)((i, j) => if (i == j) 1.0 else 0.0)
-    pairs.zipWithIndex.foreach { case ((i, j), p) =>
-      // corr() returns null on a constant column or < 2 complete rows
-      // and NaN would silently poison every loading — fail naming the
-      // offending pair (r16 advice; vifGauss's collinear-pivot style)
-      require(!row.isNullAt(p) && !row.getDouble(p).isNaN,
-        s"pcaTop: corr(${cols(i)}, ${cols(j)}) is ${
-          if (row.isNullAt(p)) "null (constant column or < 2 complete rows)"
-          else "NaN"} — drop or fix the column before PCA")
-      val c = q6(row.getDouble(p)); r(i)(j) = c; r(j)(i) = c
-    }
+    val r = corrQ6(df, cols, "pcaTop")
     def mul(v: Array[Double]): Array[Double] = Array.tabulate(k) { i =>
       var s = 0.0; var j = 0
       while (j < k) { s += r(i)(j) * v(j); j += 1 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.io.InputStream
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
@@ -18,57 +20,55 @@ import graft.operators.Preprocess.column
  */
 object Sources {
 
-  def read(spark: SparkSession, path: String, nullValues: Seq[String] = Nil,
-      format: Option[String] = None): DataFrame = {
-    val fmt = format.getOrElse(path.split('.').last.toLowerCase)
-    fmt match {
+  def read(spark: SparkSession, path: String, nullValues: Seq[String] = Nil): DataFrame =
+    path.split('.').last.toLowerCase match {
       case "parquet" => spark.read.parquet(path)
       case "csv" => delimited(spark, path, ",", nullValues)
       case "tsv" | "txt" => delimited(spark, path, "\t", nullValues)
       case other => throw new IllegalArgumentException(s"Unsupported input file format: .$other")
     }
-  }
 
   /**
    * PheCode definitions loader (reference constants.py:6-16): reads a
    * user-pointed copy of the public PheWAS-catalog CSV
    * (phecode_definitions1.2.csv layout) and selects the five
-   * annotation columns. All columns load as strings — `phecode` MUST
-   * stay string ("008" ≠ "8", schema_overrides in the reference) and
-   * the rest are labels. The frame is dimension-sized (~1,800 rows);
-   * every join against it broadcasts.
+   * annotation columns. The file's lines are read on the driver
+   * through Hadoop's `FileSystem`, so any URI Spark reads works, and
+   * parsed as the bundled catalog is ([[phecodeParse]]).
    */
-  /** One reader body for both catalog loaders — options and the
-    * 5-column projection must never diverge between the path and the
-    * bundled-resource entry points. */
-  private def phecodeReader(spark: SparkSession) =
-    spark.read.option("header", "true").option("inferSchema", "false")
-
-  private def phecodeSelect(df: DataFrame): DataFrame =
-    df.select("phecode", "phenotype", "sex", "category", "category_number")
-
-  def phecodeDefs(spark: SparkSession, path: String): DataFrame =
-    phecodeSelect(phecodeReader(spark).csv(path))
+  def phecodeDefs(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    phecodeParse(spark, p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p))
+  }
 
   /**
    * The bundled public PheCode catalog (phecode_definitions v1.2, the
    * same public data the reference redistributes and auto-joins on
    * `--phewas`/`--flipwas` — constants.py:6-16). Shipped as a
    * classpath resource so annotation works with no user-supplied
-   * file; `--phecode-defs` stays available as an override. The
-   * ~1.9k lines are read driver-side and handed to the CSV reader as
-   * an in-memory Dataset (full quoting semantics, no temp file) — a
-   * driver-local path would break on any real cluster, where the csv
-   * scan tasks run on executors that can't see the driver's /tmp.
+   * file; `--phecode-defs` stays available as an override.
    */
   def bundledPhecodeDefs(spark: SparkSession): DataFrame = {
     val in = getClass.getResourceAsStream("/graft/phecode_definitions1.2.csv")
     require(in != null, "bundled phecode_definitions1.2.csv missing from classpath")
+    phecodeParse(spark, in)
+  }
+
+  /** One parse for both catalogs: the ~1.9k lines of `in` are read on
+    * the driver and handed to the CSV reader as an in-memory Dataset
+    * (full quoting semantics, no temp file, one job fewer than a path
+    * scan, which first runs a job for the header). All columns load as
+    * strings — `phecode` MUST stay string ("008" ≠ "8",
+    * schema_overrides in the reference) and the rest are labels. The
+    * frame is dimension-sized; every join against it broadcasts. */
+  private def phecodeParse(spark: SparkSession, in: InputStream): DataFrame = {
     val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
       finally in.close()
     import spark.implicits._
-    phecodeSelect(phecodeReader(spark).csv(spark.createDataset(lines)))
+    spark.read.option("header", "true").option("inferSchema", "false")
+      .csv(spark.createDataset(lines))
+      .select("phecode", "phenotype", "sex", "category", "category_number")
   }
 
   /**

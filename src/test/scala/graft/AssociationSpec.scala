@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, round, when}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -582,6 +582,47 @@ class AssociationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r3 = operators.Association.clogit1M(conc, "size", "n1", "x_case", "grp").head()
     assert(r3.getAs[Long]("n_sets") == 2L && r3.getAs[Long]("n_informative") == 0L)
     assert(r3.isNullAt(r3.fieldIndex("beta")))
+  }
+
+  test("coxPh, coxPhEfron and clogit1M rows are bit-identical at 1 and 7 input and shuffle partitions") {
+    val sess = spark
+    import sess.implicits._
+    val rng = new scala.util.Random(31)
+    // three strata with day-grained (tied) times; stratum c is all
+    // exposed, so its information is dead and its fit null
+    val surv = (0 until 240).map { i =>
+      val g = Seq("a", "b", "c")(i % 3)
+      val x = if (g == "c") 1.0 else (i / 3 % 2).toDouble
+      val t = math.ceil(-math.log(1 - rng.nextDouble()) / (if (x == 1.0) 1.6 else 1.0) * 10)
+      (g, t, if (rng.nextDouble() < 0.75) 1.0 else 0.0, x)
+    }.toDF("grp", "time", "event", "x")
+    val sets = (0 until 200).map { i =>
+      val sz = 2 + i % 4
+      val n1 = rng.nextInt(sz + 1)
+      val xc = if (n1 == sz) 1.0 else if (n1 == 0 || rng.nextDouble() < 0.4) 0.0 else 1.0
+      (Seq("a", "b")(i % 2), sz.toLong, n1.toDouble, xc)
+    }.toDF("grp", "size", "n1", "x_case")
+    val fits = Seq[(String, DataFrame => DataFrame, DataFrame)](
+      ("coxPh", Association.coxPh(_, "time", "event", "x", "grp", iters = 8), surv),
+      ("coxPhEfron", Association.coxPhEfron(_, "time", "event", "x", "grp", iters = 8), surv),
+      ("clogit1M", Association.clogit1M(_, "size", "n1", "x_case", "grp", iters = 8), sets))
+    def bits(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try for ((name, fit, df) <- fits) {
+      def rows(input: Int, shuffle: Int): Seq[Seq[Any]] = {
+        spark.conf.set(key, shuffle.toString)
+        fit(df.repartition(input)).collect().toSeq.map(bits).sortBy(_.head.toString)
+      }
+      val base = rows(1, 1)
+      assert(base.size == (if (name == "clogit1M") 2 else 3), name)
+      assert(base.count(_.contains(null)) == (if (name == "clogit1M") 0 else 1), s"$name: $base")
+      for (input <- Seq(1, 7); shuffle <- Seq(1, 7))
+        assert(rows(input, shuffle) == base, s"$name at $input input and $shuffle shuffle partitions")
+    } finally spark.conf.set(key, saved)
   }
 
   test("logrankK3: matches brute-force subject-level U/V; empty arm nulls out") {

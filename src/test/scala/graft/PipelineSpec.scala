@@ -166,10 +166,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("distributed = true fails before any job; --distributed is an unknown flag") {
-    val msg = configError(Pipeline.run(cohortDf, GraftConfig(input = "", predictors = "x",
-      dependents = "d1,d2", covariates = "z", minCaseCount = 10, distributed = true)))
-    assert(msg.contains("gram IRLS") && msg.contains("removed"), msg)
+  test("--distributed is an unknown flag") {
     val flag = intercept[IllegalArgumentException](
       Main.parseArgs(Array("-i", "a", "-p", "p", "-d", "d", "--distributed")))
     assert(flag.getMessage.contains("Unknown flag --distributed"), flag.getMessage)
@@ -477,6 +474,38 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(run.contains("graft/fit") && !run.contains("graft/postprocess"), run)
     val cli = observing(Main.run(spark, cfg)).jobs.map(_._1)
     assert(cli.nonEmpty && cli.forall(d => d != null && d.startsWith("graft/")), cli)
+  }
+
+  test("a --phecode-defs run reads its defs in one postprocess job, as a bundled-catalog run does") {
+    val sess = spark
+    import sess.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_defs").toString
+    val w = new java.io.PrintWriter(s"$dir/defs.csv")
+    w.println("phecode,phenotype,sex,category,category_number")
+    w.println("008,\"Intestinal infection, user copy\",Both,infectious diseases,1")
+    w.println("244,Hypothyroidism,Female,endocrine/metabolic,3")
+    w.close()
+    val rng = new scala.util.Random(17)
+    val df = (0 until 300).map { _ =>
+      val x = rng.nextGaussian()
+      (x, if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(1.5 * x - 0.5)))) 1.0 else 0.0,
+        if (rng.nextDouble() < 0.4) 1.0 else 0.0)
+    }.toDF("x", "008", "244")
+    def run(defs: String): (Map[String, String], Seq[String]) = {
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val jobs = observing {
+        rows = Pipeline.run(df, GraftConfig(input = "", predictors = "x", dependents = "008,244",
+          model = "logistic", minCaseCount = 5, phewas = true, phecodeDefs = defs)).collect()
+      }.jobs.map(_._1)
+      (rows.map(r => r.getAs[String]("dependent") -> r.getAs[String]("phenotype")).toMap, jobs)
+    }
+    // a URI, as Spark's own readers take it
+    val (user, userJobs) = run(new java.io.File(s"$dir/defs.csv").toURI.toString)
+    val (bundled, bundledJobs) = run("")
+    assert(user == Map("008" -> "Intestinal infection, user copy", "244" -> "Hypothyroidism"), user)
+    assert(bundled("008") == "Intestinal infection", bundled)
+    assert(userJobs.count(_ == "graft/postprocess") == 1, userJobs)
+    assert(bundledJobs.count(_ == "graft/postprocess") == 1, bundledJobs)
   }
 
   test("a 20,001-row cohort fits in column blocks: a sex-specific code drops sex") {

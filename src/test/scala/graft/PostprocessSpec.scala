@@ -126,7 +126,7 @@ class PostprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
         Postprocess.annotate(df, defs, on, "phecode"))
         .orderBy(col("pval"), col("predictor"), col("dependent"))
       val local = Postprocess.onDriver(results, annotation.map(_ => defs),
-        annotation.getOrElse("dependent"), "phecode")
+        annotation.getOrElse("dependent"))
       assert(local.schema.map(f => (f.name, f.dataType)) == spark0.schema.map(f => (f.name, f.dataType)),
         name)
       val (a, b) = (local.collect(), spark0.collect())

@@ -489,4 +489,20 @@ class PreprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(ex.getMessage.contains("collinear") || ex.getCause != null)
   }
+
+  test("vif and vifGauss on a constant column name the pair, in ANSI and in legacy mode") {
+    val sess = spark
+    import sess.implicits._
+    val df = (0 until 50).map(i => (i.toDouble, (i * 7 % 11).toDouble, 3.0)).toDF("a", "b", "k")
+    // ANSI mode divides by the zero variance; legacy mode gives a null corr
+    val ansi = "spark.sql.ansi.enabled"
+    val saved = spark.conf.get(ansi)
+    try for (mode <- Seq("true", "false"); (name, run) <- Seq[(String, Seq[String] => Any)](
+        "vif" -> (c => Preprocess.vif(df, c)), "vifGauss" -> (c => Preprocess.vifGauss(df, c)))) {
+      spark.conf.set(ansi, mode)
+      val ex = intercept[IllegalArgumentException](run(Seq("a", "b", "k")))
+      assert(ex.getMessage.contains(s"$name: corr(a, k) is undefined"), s"ansi $mode: ${ex.getMessage}")
+      assert(ex.getMessage.contains("constant column"), ex.getMessage)
+    } finally spark.conf.set(ansi, saved)
+  }
 }
