@@ -1310,7 +1310,9 @@ object Association {
       .as[(String, Double, Int, Int, Double, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (grp, it) =>
-        val rows = it.toArray.sortBy(r => (-r._2, r._3, r._4))
+        // times descending under Double.compare, so a NaN time is the
+        // largest, as Spark and DuckDB order it (-t would sort it last)
+        val rows = it.toArray.sortBy(r => (r._2, -r._3, -r._4)).reverse
         val n = Array.ofDim[Double](2, sizes.product)
         val table = mutable.ArrayBuffer.empty[RiskTime]
         var i = 0

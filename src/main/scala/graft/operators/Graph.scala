@@ -1,15 +1,22 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import graft.Tables
 
 /**
  * Graph analytics over relationship tables — the Pregel-shaped
  * message-passing family d06's connected components started,
  * expressed as joins + map-side-combined aggregates (the Spark-first
- * form of "vertex program + message sum"): no graph library, no
- * driver-side adjacency, state = one row per vertex.
+ * form of "vertex program + message sum"), with no graph library.
+ * The one-shot operators (triangles, link prediction, degree
+ * summaries) never collect. The iterative loops (pagerank,
+ * personalized pagerank, label propagation, k-core, multi-source
+ * BFS) pick one of three regimes per run at [[driverRegimeOk]] and
+ * [[broadcastRegimeOk]]: a driver-resident integer twin over
+ * collected edges, a loop that broadcasts the per-vertex state to the
+ * edges, or a loop that shuffles both.
  */
 object Graph {
 
@@ -20,281 +27,203 @@ object Graph {
     * DuckDB CTEs (the n03 codebook rule applied to graph state). */
   val Scale = 1000000L
 
-  /**
-   * PageRank with damping d = 0.85, fixed `iters` power iterations
-   * from the uniform vector — fixed iteration count, not a
-   * convergence test, so the oracle can unroll the loop exactly.
-   *
-   * Per iteration (all declarative):
-   *   contrib(v) = Σ_{u→v} r(u) div outdeg(u)   — integer floor
-   *   division loses < outdeg(u) micro-units per vertex
-   *   (deterministically, identically in both engines);
-   *   dangling mass = Σ r(u) over outdeg-0 vertices (one 1-row
-   *   aggregate, broadcast-cross-joined);
-   *   r'(v) = teleport + round(d · (contrib(v) + dangling/N)).
-   * outdeg rides INSIDE the rank state (joined once at setup), so an
-   * iteration is exactly one shuffle join with the edge list on src
-   * plus one shuffle aggregate on dst — no per-vertex table is ever
-   * broadcast (|V| is cluster-scale; only the 1-row dangling
-   * aggregate broadcasts). Each round cuts lineage with
-   * localCheckpoint (the d06 rule — cache() alone grows the plan
-   * exponentially).
-   *
-   * `edges` must be (src, dst) pairs; vertices = edge endpoints.
-   */
   /** Spark's Round-on-double, replicated for the driver-resident
-    * rank loops: BigDecimal.valueOf (= Double.toString) + HALF_UP —
+    * rank loop: BigDecimal.valueOf (= Double.toString) + HALF_UP —
     * the exact expression semantics, so the regimes are bit-equal. */
   private def sparkRound0(x: Double): Long =
     java.math.BigDecimal.valueOf(x)
       .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
 
-  /** Driver-resident regime gate for the iterative rank loops: below
-    * this edge count the whole power iteration runs on the driver
-    * over collected CSR arrays (ONE collect job; zero per-iteration
-    * jobs). The integer rank state makes the twin EXACT, not approximate:
-    * contributions are integer floor-divs summed in any order, and
-    * the single double op per vertex replicates Spark's Round
-    * ([[sparkRound0]]). Above the gate the declarative loop runs
-    * unchanged (one edge join + one dst aggregate per round) — the
-    * cluster-scale path; the 10× bench graphs (12M edges) stay on
-    * it. Regime equality is spec-pinned bit-for-bit. */
-  private def driverEdgeMax(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.graph.driverEdges", "4000000").toLong
+  /** Edge gate of the driver regime: at or below 4M edges (stubs for
+    * labelProp) the whole loop runs on the driver over one collect
+    * ([[DriverGraph]]), with zero per-round jobs. Integer state makes
+    * the twin exact, not approximate: sums are integer in any order,
+    * and the one double op per vertex replicates Spark's Round
+    * ([[sparkRound0]]). A heap guard also caps it: the collected
+    * edges, at ~200 B each, must fit in a quarter of the driver's max
+    * heap, so 4M edges need ≈ 3.2 GiB and a 1g driver admits about
+    * 1.3M. A collect that overflows `spark.driver.maxResultSize` also
+    * falls through. The 10× bench graphs (12M edges) stay above it.
+    *
+    * Vertex gate of the broadcast regime: at or below 4M vertices the
+    * per-round state (rank, label, survivor or reached set, one row
+    * per vertex) is the broadcast build side of the edge join, so the
+    * edge list never crosses an exchange after setup and the only
+    * per-round shuffle is the |V|-bounded state aggregate. Its heap
+    * guard is ~100 B per vertex in an eighth of the heap. Above it
+    * the shuffle loop runs: when |V| itself is cluster-scale a
+    * broadcast would OOM every executor. `broadcast()` is a planner
+    * hint over the same expressions, so the two loops are
+    * structurally bit-equal.
+    *
+    * The gates are constants; `regimes` lowers the ceiling for a
+    * dynamic scope (2 = every regime, 1 = no driver regime, 0 = the
+    * shuffle loop only), so a spec can pin all three bit-equal. */
+  private[graft] val regimes = new scala.util.DynamicVariable(2)
+  private val DriverEdgeMax = 4000000L
+  private val BroadcastVertexMax = 4000000L
 
-  /** Conservative driver-heap cost of one collected edge Row: two
-    * boxed endpoints + Row shell + index HashMap entry. */
-  private val DriverRegimeBytesPerEdge = 200L
+  private def driverRegimeOk(edgeCount: Long): Boolean =
+    regimes.value >= 2 && edgeCount <= DriverEdgeMax &&
+      edgeCount * 200L <= Runtime.getRuntime.maxMemory / 4
 
-  /** Full admission test for the driver-resident regime: the
-    * row-count knob AND a heap guard — collected edges must fit in a
-    * quarter of the driver's max heap at ~200 B/edge, so the 4M-edge
-    * default needs ≈ 3.2 GiB of driver heap; on a default-1g-driver
-    * cluster the guard caps admission near 1.3M edges and everything
-    * larger takes the declarative loop (the at-scale path) instead
-    * of OOMing the driver. Raising `spark.graft.graph.driverEdges`
-    * therefore also requires `spark.driver.memory` ≥ edges·800 B. */
-  private def driverRegimeOk(spark: SparkSession, edgeCount: Long): Boolean =
-    edgeCount <= driverEdgeMax(spark) &&
-      edgeCount * DriverRegimeBytesPerEdge <= Runtime.getRuntime.maxMemory / 4
-
-  /** Broadcast-state regime gate for the iterative loops' DISTRIBUTED
-    * path: when the per-iteration small state (rank vector / label
-    * vector / survivor set / BFS reached set — one row per VERTEX)
-    * fits a broadcast, the loop joins it to the once-materialized
-    * edge table as the BUILD side, so the edge list — the 100 TB
-    * side — never crosses an exchange after setup; the only
-    * per-iteration shuffle is the |V|-bounded state aggregate
-    * (map-side combined). Above the gate the plain shuffle loop runs
-    * unchanged — when |V| itself is cluster-scale a broadcast would
-    * OOM every executor, and rank/edge co-partitioning is the only
-    * correct plan. `broadcast()` is a planner HINT over the same
-    * expressions, so the two regimes are structurally bit-equal
-    * (spec-pinned anyway). Heap guard mirrors [[driverRegimeOk]]:
-    * the driver assembles the broadcast relation at ~100 B/row and
-    * must hold it in an eighth of its heap — a default-1g driver
-    * caps near 1.3M vertices, the 4M default needs ≥ 3.2 GiB. */
-  private def broadcastVertexMax(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.graph.broadcastVertices", "4000000").toLong
-
-  private val BroadcastRegimeBytesPerVertex = 100L
-
-  private def broadcastRegimeOk(spark: SparkSession, vertexCount: Long): Boolean =
-    vertexCount <= broadcastVertexMax(spark) &&
-      vertexCount * BroadcastRegimeBytesPerVertex <= Runtime.getRuntime.maxMemory / 8
+  private def broadcastRegimeOk(vertexCount: Long): Boolean =
+    regimes.value >= 1 && vertexCount <= BroadcastVertexMax &&
+      vertexCount * 100L <= Runtime.getRuntime.maxMemory / 8
 
   /** `broadcast()` as a regime-gated hint. */
   private def mb(df: DataFrame, on: Boolean): DataFrame =
     if (on) broadcast(df) else df
 
-  /** Collect for the driver regimes that degrades instead of dying:
-    * a `spark.driver.maxResultSize` overflow (the one collect
-    * failure Spark raises catchably) returns None and the caller
-    * falls through to the declarative loop. */
-  private def collectDriver(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] =
-    try Some(df.collect())
+  /** The driver regime's graph index: the collected (a, b) edge rows
+    * with every endpoint mapped to a dense int id in first-seen
+    * order; edge i runs us(i) → vs(i) and nodes(id) is the value. */
+  private final class DriverGraph(e: DataFrame, rows: Array[Row]) {
+    val spark: SparkSession = e.sparkSession
+    private val idx = new java.util.HashMap[Any, Integer]()
+    private def intern(v: Any): Int = idx.computeIfAbsent(v, _ => idx.size()).intValue()
+    val us = new Array[Int](rows.length)
+    val vs = new Array[Int](rows.length)
+    for (i <- rows.indices) { us(i) = intern(rows(i).get(0)); vs(i) = intern(rows(i).get(1)) }
+    val n: Int = idx.size()
+    val nodes = new Array[Any](n)
+    idx.forEach((k, v) => nodes(v.intValue()) = k)
+    /** Id of a node value, -1 when it is not in the graph. */
+    def id(v: Any): Int = idx.getOrDefault(v, -1).intValue()
+    /** CSR adjacency (off, nbr): u's neighbors are nbr(off(u) until
+      * off(u + 1)); `both` adds every edge's reverse (multi-edges kept). */
+    def csr(both: Boolean): (Array[Int], Array[Int]) = {
+      val off = new Array[Int](n + 1)
+      for (j <- us.indices) { off(us(j) + 1) += 1; if (both) off(vs(j) + 1) += 1 }
+      for (i <- 0 until n) off(i + 1) += off(i)
+      val nbr = new Array[Int](off(n))
+      val fill = off.clone()
+      def add(a: Int, b: Int): Unit = { nbr(fill(a)) = b; fill(a) += 1 }
+      for (j <- us.indices) { add(us(j), vs(j)); if (both) add(vs(j), us(j)) }
+      (off, nbr)
+    }
+    /** A result frame of (`key` node, `value` long) rows. */
+    def frame(key: String, value: String, rows: Iterable[(Int, Long)]): DataFrame =
+      longFrame(spark, key, e.schema.head.dataType, value,
+        rows.map { case (i, v) => (nodes(i), v) })
+  }
+
+  private def longFrame(spark: SparkSession, key: String, keyType: DataType,
+      value: String, rows: Iterable[(Any, Long)]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (k, v) => Row(k, v) }.toSeq: _*),
+      StructType(Seq(StructField(key, keyType), StructField(value, LongType))))
+
+  /** The driver regime's index of `e`, or None when the regime is
+    * not admitted for `gateCount` or the collect overflows
+    * `spark.driver.maxResultSize` (the one collect failure Spark
+    * raises catchably); the caller then runs its distributed loop. */
+  private def driverGraph(e: DataFrame, gateCount: Long): Option[DriverGraph] =
+    if (!driverRegimeOk(gateCount)) None
+    else try Some(new DriverGraph(e, e.collect()))
     catch {
-      case e: org.apache.spark.SparkException
-          if e.getMessage != null && e.getMessage.contains("maxResultSize") =>
+      case ex: org.apache.spark.SparkException
+          if ex.getMessage != null && ex.getMessage.contains("maxResultSize") =>
         None
     }
 
-  /** Shared driver-resident integer power iteration: `seedsOpt`
-    * None = uniform PageRank, Some = personalized (teleport and
-    * dangling mass return to the seed set). Arithmetic is the
-    * DataFrame loop's, operand for operand. */
-  private def rankDriver(spark: SparkSession,
-      erows: Array[org.apache.spark.sql.Row],
-      nodeType: org.apache.spark.sql.types.DataType, iters: Int,
-      seedsOpt: Option[DataFrame]): DataFrame = {
-    val idx = new java.util.HashMap[Any, Integer]()
-    def nodeIdx(v: Any): Int = {
-      var i = idx.get(v)
-      if (i == null) { i = idx.size(); idx.put(v, i) }
-      i.intValue()
-    }
-    val srcIdx = new Array[Int](erows.length)
-    val dstIdx = new Array[Int](erows.length)
-    var ei = 0
-    while (ei < erows.length) {
-      srcIdx(ei) = nodeIdx(erows(ei).get(0))
-      dstIdx(ei) = nodeIdx(erows(ei).get(1))
-      ei += 1
-    }
-    val n = idx.size()
-    val nodesArr = new Array[Any](n)
-    idx.forEach((k, v) => nodesArr(v.intValue()) = k)
+  /** Driver-resident twin of [[rankLoop]]: the same integer power
+    * iteration, operand for operand, over the collected edges. */
+  private def rankDriver(g: DriverGraph, iters: Int,
+      seedsOpt: Option[DataFrame], op: String): DataFrame = {
+    val n = g.n
     val outdeg = new Array[Long](n)
-    ei = 0
-    while (ei < erows.length) { outdeg(srcIdx(ei)) += 1L; ei += 1 }
-    val isSeed = new Array[Boolean](n)
-    val sCount: Long = seedsOpt match {
-      case None => 0L
-      case Some(sd) =>
-        sd.select(col("node")).distinct().collect().foreach { r =>
-          val i = idx.get(r.get(0))
-          if (i != null) isSeed(i.intValue()) = true
-        }
-        isSeed.count(identity).toLong
-    }
-    if (seedsOpt.isDefined)
-      require(sCount >= 1, "ppr: seed set is empty (or disjoint from the graph)")
-    val r = new Array[Long](n)
-    val teleport =
-      if (seedsOpt.isDefined) math.round(0.15 * Scale.toDouble / sCount)
-      else math.round(0.15 * Scale.toDouble / n)
-    var v0 = 0
-    while (v0 < n) {
-      r(v0) =
-        if (seedsOpt.isDefined) { if (isSeed(v0)) Scale / sCount else 0L }
-        else Scale / n
-      v0 += 1
-    }
+    g.us.foreach(u => outdeg(u) += 1L)
+    val isSeed = Array.fill(n)(seedsOpt.isEmpty)
+    seedsOpt.foreach(_.select(col("node")).distinct().collect().foreach { r =>
+      val i = g.id(r.get(0))
+      if (i >= 0) isSeed(i) = true
+    })
+    val s = isSeed.count(identity).toLong
+    require(s >= 1 || seedsOpt.isEmpty, s"$op: seed set is empty (or disjoint from the graph)")
+    val teleport = math.round(0.15 * Scale.toDouble / s)
+    val r = Array.tabulate(n)(i => if (isSeed(i)) Scale / s else 0L)
     val cval = new Array[Long](n)
     val contrib = new Array[Long](n)
     for (_ <- 1 to iters) {
-      var i = 0
       var dm = 0L
-      while (i < n) {
+      for (i <- 0 until n) {
         if (outdeg(i) > 0) cval(i) = r(i) / outdeg(i) else dm += r(i)
         contrib(i) = 0L
-        i += 1
       }
-      ei = 0
-      while (ei < erows.length) {
-        contrib(dstIdx(ei)) += cval(srcIdx(ei))
-        ei += 1
-      }
-      i = 0
-      while (i < n) {
-        r(i) =
-          if (seedsOpt.isDefined)
-            (if (isSeed(i)) teleport else 0L) +
-              sparkRound0(0.85 * (contrib(i) +
-                (if (isSeed(i)) dm / sCount else 0L)).toDouble)
-          else teleport + sparkRound0(0.85 * (contrib(i) + dm / n).toDouble)
-        i += 1
-      }
+      for (j <- g.us.indices) contrib(g.vs(j)) += cval(g.us(j))
+      for (i <- 0 until n)
+        r(i) = if (isSeed(i)) teleport + sparkRound0(0.85 * (contrib(i) + dm / s).toDouble)
+          else sparkRound0(0.85 * contrib(i).toDouble)
     }
     // final projection (incl. the 4-dp round) runs as the SAME Spark
     // expressions over the LocalRelation — no second rounding twin
-    val rows: Array[org.apache.spark.sql.Row] =
-      Array.tabulate(n)(i => org.apache.spark.sql.Row(nodesArr(i), r(i)))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("r",
-          org.apache.spark.sql.types.LongType))))
+    g.frame("node", "r", (0 until n).map(i => (i, r(i))))
       .select(col("node"), col("r").as("rank_micro"),
         round(col("r") / Scale.toDouble, 4).as("rank"))
   }
 
-  def pagerank(edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"pagerank: iters in [1,50], got $iters")
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    if (driverRegimeOk(edges.sparkSession, e.count())) {
-      val rowsOpt = collectDriver(e)
-      if (rowsOpt.isDefined)
-        return rankDriver(edges.sparkSession, rowsOpt.get,
-          e.schema.fields(0).dataType, iters, None)
-    }
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val n = nodes.count()
-    // broadcast-state regime: the rank vector rides to the edges
-    val bc = broadcastRegimeOk(edges.sparkSession, n)
-    val teleport = math.round(0.15 * Scale.toDouble / n)
-    val r0 = Scale / n // uniform start, floor to the grid
-    // state = (node, outdeg, r): one shuffle join here, then outdeg
-    // travels with the rank vector for the whole run
-    var rank = nodes.join(outdeg, Seq("node"), "left")
-      .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-        lit(r0).as("r"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val contrib = mb(rank.filter(col("outdeg") > 0)
-          .select(col("node"), expr("r div outdeg").as("c")), bc)
-        .join(e, col("node") === e("src"))
-        .groupBy(col("dst").as("node")).agg(sum("c").as("contrib"))
-      val dangling = rank.filter(col("outdeg") === 0)
-        .agg(coalesce(sum("r"), lit(0L)).as("dm"))
-      rank = rank.select(col("node"), col("outdeg"))
-        .join(mb(contrib, bc), Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("outdeg"),
-          (lit(teleport) + round(lit(0.85) *
-            (coalesce(col("contrib"), lit(0L)) + expr(s"dm div ${n}L")))
-            .cast("long")).as("r"))
-        .localCheckpoint(true)
-    }
-    rank.select(col("node"), col("r").as("rank_micro"),
-      round(col("r") / Scale.toDouble, 4).as("rank"))
-  }
+  /**
+   * PageRank with damping d = 0.85, fixed `iters` power iterations
+   * from the uniform vector — fixed iteration count, not a
+   * convergence test, so the oracle can unroll the loop exactly. It
+   * is [[personalizedPagerank]] with every vertex a seed, bit for
+   * bit: r0 = Scale div N, teleport = round(0.15·Scale/N), and the
+   * dangling mass returns as dm div N to every vertex.
+   *
+   * `edges` must be (src, dst) pairs; vertices = edge endpoints.
+   */
+  def pagerank(edges: DataFrame, iters: Int): DataFrame =
+    rankLoop(edges, None, iters, "pagerank")
 
   /**
    * Personalized PageRank — the seed-biased variant behind
    * graph-based corpus expansion ("find documents/entities close to
    * THIS set"): teleport mass and dangling mass return to a SEED SET
    * instead of the uniform vector, so rank concentrates in the
-   * seeds' neighborhood. Same integer-grid power iteration as
-   * [[pagerank]] (floor-div contribs, one edge join + one dst
-   * aggregate per round, only the 1-row dangling aggregate
-   * broadcasts, lineage cut per round); the only new state is a
-   * boolean `is_seed` riding the rank vector — joined once at setup,
-   * never re-joined. r0 = Scale div |S| on seeds, 0 elsewhere;
-   * r'(v) = [v∈S]·ts + round(0.85·(contrib(v) + [v∈S]·(dm div |S|)))
-   * with ts = round(0.15·Scale/|S|).
+   * seeds' neighborhood. r0 = Scale div |S| on seeds, 0 elsewhere;
+   *   contrib(v) = Σ_{u→v} r(u) div outdeg(u)   — integer floor
+   *   division loses < outdeg(u) micro-units per vertex
+   *   (deterministically, identically in both engines);
+   *   dm = Σ r(u) over outdeg-0 vertices (one 1-row aggregate,
+   *   broadcast-cross-joined);
+   *   r'(v) = [v∈S]·ts + round(0.85·(contrib(v) + [v∈S]·(dm div |S|)))
+   * with ts = round(0.15·Scale/|S|). outdeg and the boolean `is_seed`
+   * ride inside the rank state (joined once at setup), so a round of
+   * the distributed loops is one join with the edge list on src plus
+   * one aggregate on dst, lineage cut per round with localCheckpoint
+   * (the d06 rule — cache() alone grows the plan exponentially).
    */
   def personalizedPagerank(edges: DataFrame, seeds: DataFrame,
-      iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"ppr: iters in [1,50], got $iters")
+      iters: Int): DataFrame =
+    rankLoop(edges, Some(seeds), iters, "ppr")
+
+  /** The one rank loop: `seedsOpt` None makes every vertex a seed
+    * without a join. */
+  private def rankLoop(edges: DataFrame, seedsOpt: Option[DataFrame],
+      iters: Int, op: String): DataFrame = {
+    require(iters >= 1 && iters <= 50, s"$op: iters in [1,50], got $iters")
     val e = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(true)
-    if (driverRegimeOk(edges.sparkSession, e.count())) {
-      val rowsOpt = collectDriver(e)
-      if (rowsOpt.isDefined)
-        return rankDriver(edges.sparkSession, rowsOpt.get,
-          e.schema.fields(0).dataType, iters, Some(seeds))
-    }
+    val drv = driverGraph(e, e.count())
+    if (drv.isDefined) return rankDriver(drv.get, iters, seedsOpt, op)
     val outdeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    val seed1 = seeds.select(col("node")).distinct()
-      .withColumn("is_seed", lit(true))
-    var rank = nodes.join(outdeg, Seq("node"), "left")
-      .join(seed1, Seq("node"), "left")
+      .join(outdeg, Seq("node"), "left")
+    val rank = seedsOpt.fold(nodes.withColumn("is_seed", lit(true))) { sd =>
+        nodes.join(sd.select(col("node")).distinct().withColumn("is_seed", lit(true)),
+          Seq("node"), "left")
+      }
       .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
         coalesce(col("is_seed"), lit(false)).as("is_seed"))
       .localCheckpoint(true)
-    // broadcast-state regime gate on |V| (rank is checkpointed: the
-    // count is a metadata-cheap job, not a recompute)
-    val bc = broadcastRegimeOk(edges.sparkSession, rank.count())
-    val s = rank.filter(col("is_seed")).count()
-    require(s >= 1, "ppr: seed set is empty (or disjoint from the graph)")
+    // rank is checkpointed: the |V| count is metadata-cheap
+    val nv = rank.count()
+    val bc = broadcastRegimeOk(nv)
+    val s = if (seedsOpt.isEmpty) nv else rank.filter(col("is_seed")).count()
+    require(s >= 1 || seedsOpt.isEmpty, s"$op: seed set is empty (or disjoint from the graph)")
     val ts = math.round(0.15 * Scale.toDouble / s)
     var r = rank.withColumn("r",
         when(col("is_seed"), lit(Scale / s)).otherwise(lit(0L)))
@@ -439,7 +368,7 @@ object Graph {
       scored.join(und2, Seq("a", "b"), "left_anti").localCheckpoint(true)
     }
 
-  /** Exact (or hub-capped) triangle participation counts of the
+  /** Exact triangle participation counts of the
     * co-order graph — a producer/consumer artifact: g02 (the top-k
     * report) is the PRODUCER and always rebuilds it (its measurement
     * IS the count), publishing the table for g08 (clustering
@@ -447,29 +376,26 @@ object Graph {
     * the edge list; g08 standalone builds it on demand. The count
     * table is |V|-bounded, so the checkpoint is small however dense
     * the graph. */
-  private def coOrderTriangles(spark: SparkSession, dir: String,
-      hubCap: Int): DataFrame =
-    Tables.sessionCached(coOrderTriCache, spark, dir + "|tri" + hubCap) {
-      buildCoOrderTriangles(spark, dir, hubCap)
+  private def coOrderTriangles(spark: SparkSession, dir: String): DataFrame =
+    Tables.sessionCached(coOrderTriCache, spark, dir + "|tri") {
+      buildCoOrderTriangles(spark, dir)
     }
   /** Session-cached degree-oriented out-adjacency of the co-order
-    * graph, keyed by hubCap — the orientation INDEX [[triangles]]
+    * graph — the orientation INDEX [[triangles]]
     * probes, materialized once per session like [[coOrderAdjArrays]]
     * (a static graph's index is a derived view, not per-query work;
     * r19 item 1 — g02 paid this build on every call). Cached ≡ fresh
     * is spec-pinned. */
-  private[graft] def coOrderOrientedAdj(spark: SparkSession, dir: String,
-      hubCap: Int): DataFrame =
-    Tables.sessionCached(coOrderOrientCache, spark, dir + "|orient" + hubCap) {
-      orientedAdjArrays(coOrderEdges(spark, dir), hubCap).localCheckpoint(true)
+  private[graft] def coOrderOrientedAdj(spark: SparkSession, dir: String): DataFrame =
+    Tables.sessionCached(coOrderOrientCache, spark, dir + "|orient") {
+      orientedAdjArrays(coOrderEdges(spark, dir)).localCheckpoint(true)
     }
 
   private val coOrderOrientCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  private def buildCoOrderTriangles(spark: SparkSession, dir: String,
-      hubCap: Int): DataFrame =
-    trianglesFromAdj(coOrderOrientedAdj(spark, dir, hubCap)).localCheckpoint(true)
+  private def buildCoOrderTriangles(spark: SparkSession, dir: String): DataFrame =
+    trianglesFromAdj(coOrderOrientedAdj(spark, dir)).localCheckpoint(true)
 
   /**
    * Triangle counting by DEGREE ORIENTATION, edge-centric: each
@@ -553,19 +479,15 @@ object Graph {
       .groupBy("node").agg(sum(col("n")).as("n_triangles"))
   }
 
-  /** g02: per-part triangle participation in the co-order graph,
-    * top-20 most clustered parts. `spark.graft.triangles.hubCap`
-    * (default 0 = exact) engages the capped-out-list variant — the
-    * registered oracle runs exact, the knob is the at-scale escape
-    * hatch. */
+  /** g02: per-part exact triangle participation in the co-order
+    * graph, top-20 most clustered parts. */
   def g02Triangles(spark: SparkSession, dir: String): DataFrame = {
-    val cap = spark.conf.get("spark.graft.triangles.hubCap", "0").toInt
     // the COUNT is always a fresh build (g02's work IS the count);
     // the orientation index underneath is the session-cached derived
     // view (coOrderOrientedAdj). Republish so g08 consumes this build
     // instead of paying its own
-    val tri = buildCoOrderTriangles(spark, dir, cap)
-    Tables.sessionPut(coOrderTriCache, spark, dir + "|tri" + cap, tri)
+    val tri = buildCoOrderTriangles(spark, dir)
+    Tables.sessionPut(coOrderTriCache, spark, dir + "|tri", tri)
     tri.orderBy(col("n_triangles").desc, col("node"))
       .limit(20)
   }
@@ -583,92 +505,39 @@ object Graph {
    */
   def labelProp(und: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 20, s"labelProp: iters in [1,20], got $iters")
-    // driver-resident twin (same regime/gate as [[rankDriver]]): the
-    // whole state is one label per vertex and the per-round mode is
-    // integer counting — max(cnt), ties to MIN label, exactly the
-    // max(struct(cnt, −lbl)) aggregate below; zero per-round jobs.
-    // Long-labeled graphs only (the declarative tie-break negates the
-    // label, so the operator is numeric-labeled by contract anyway).
-    if (und.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType)) {
-      val spark = und.sparkSession
-      val e = und.select(col("u"), col("v")).localCheckpoint(true)
-      val erowsOpt =
-        if (driverRegimeOk(spark, 2 * e.count())) collectDriver(e) else None
-      if (erowsOpt.isDefined) {
-        val erows = erowsOpt.get
-        val idx = new java.util.HashMap[Long, Integer]()
-        def nodeIdx(v: Long): Int = {
-          var i = idx.get(v)
-          if (i == null) { i = idx.size(); idx.put(v, i) }
-          i.intValue()
-        }
-        val us = new Array[Int](erows.length)
-        val vs = new Array[Int](erows.length)
-        var ei = 0
-        while (ei < erows.length) {
-          us(ei) = nodeIdx(erows(ei).getLong(0))
-          vs(ei) = nodeIdx(erows(ei).getLong(1))
-          ei += 1
-        }
-        val n = idx.size()
-        val value = new Array[Long](n)
-        idx.forEach((k, v) => value(v.intValue()) = k)
-        // CSR over BOTH directions (no dedup — multi-edges count
-        // twice in the neighbor-label mode, as in the union below)
-        val deg = new Array[Int](n)
-        ei = 0
-        while (ei < erows.length) { deg(us(ei)) += 1; deg(vs(ei)) += 1; ei += 1 }
-        val off = new Array[Int](n + 1)
-        var i = 0
-        while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-        val nbr = new Array[Int](off(n))
-        val fill = java.util.Arrays.copyOf(off, n)
-        ei = 0
-        while (ei < erows.length) {
-          nbr(fill(us(ei))) = vs(ei); fill(us(ei)) += 1
-          nbr(fill(vs(ei))) = us(ei); fill(vs(ei)) += 1
-          ei += 1
-        }
-        var lab: Array[Long] = value.clone()
-        for (_ <- 1 to iters) {
-          val next = new Array[Long](n)
-          val cnt = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-          i = 0
-          while (i < n) {
-            cnt.clear()
-            var j = off(i)
-            while (j < off(i + 1)) {
-              cnt.merge(lab(nbr(j)), 1L, (a, b) => a + b)
-              j += 1
-            }
-            var bestLbl = Long.MaxValue
-            var bestCnt = -1L
-            val it = cnt.entrySet().iterator()
-            while (it.hasNext) {
-              val en = it.next()
-              val l = en.getKey.longValue(); val c = en.getValue.longValue()
-              if (c > bestCnt || (c == bestCnt && l < bestLbl)) {
-                bestCnt = c; bestLbl = l
-              }
-            }
-            next(i) = bestLbl
-            i += 1
+    // driver regime, gated on the 2·|E| stubs: the state is one
+    // label per vertex and the per-round mode is integer counting —
+    // max(cnt), ties to MIN label, exactly the max(struct(cnt, −lbl))
+    // aggregate below. Long-labeled graphs only (the declarative
+    // tie-break negates the label, so the operator is numeric-labeled
+    // by contract anyway).
+    val drv =
+      if (und.schema.fields.forall(_.dataType == LongType)) {
+        val e = und.select(col("u"), col("v")).localCheckpoint(true)
+        driverGraph(e, 2 * e.count())
+      } else None
+    if (drv.isDefined) {
+      val g = drv.get
+      // both directions, no dedup — a multi-edge counts twice in the
+      // neighbor-label mode, as in the union below
+      val (off, nbr) = g.csr(both = true)
+      val cnt = new java.util.HashMap[Long, Long]()
+      var lab = g.nodes.map(_.asInstanceOf[Long])
+      for (_ <- 1 to iters) {
+        val prev = lab
+        lab = Array.tabulate(g.n) { i =>
+          cnt.clear()
+          for (j <- off(i) until off(i + 1)) cnt.merge(prev(nbr(j)), 1L, _ + _)
+          var bestLbl = Long.MaxValue
+          var bestCnt = -1L
+          cnt.forEach { (l, c) =>
+            if (c > bestCnt || (c == bestCnt && l < bestLbl)) { bestCnt = c; bestLbl = l }
           }
-          lab = next
+          bestLbl
         }
-        val comm = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        i = 0
-        while (i < n) { comm.merge(lab(i), 1L, (a, b) => a + b); i += 1 }
-        val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-        comm.forEach((l, c) => out += org.apache.spark.sql.Row(l.longValue(), c.longValue()))
-        return spark.createDataFrame(java.util.Arrays.asList(out.toArray: _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("community",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n_members",
-              org.apache.spark.sql.types.LongType))))
       }
+      return longFrame(g.spark, "community", LongType, "n_members",
+        lab.groupMapReduce(identity)(_ => 1L)(_ + _))
     }
     val adj = und.select(col("u").as("a"), col("v").as("b"))
       .union(und.select(col("v").as("a"), col("u").as("b")))
@@ -678,7 +547,7 @@ object Graph {
       .localCheckpoint(true)
     // broadcast-state regime: the |V|-row label vector is the build
     // side, so the 2E adjacency stubs never shuffle per round
-    val bc = broadcastRegimeOk(und.sparkSession, lab.count())
+    val bc = broadcastRegimeOk(lab.count())
     for (_ <- 1 to iters) {
       val lb = mb(lab, bc)
       val counts = adj.join(lb, adj("b") === lb("node"))
@@ -893,60 +762,24 @@ object Graph {
     require(k >= 1, s"kcore: k >= 1, got $k")
     require(rounds >= 1 && rounds <= 20, s"kcore: rounds in [1,20], got $rounds")
     var e = und.select(col("u"), col("v")).localCheckpoint(true)
-    // driver-resident peel below the [[driverEdgeMax]] gate — pure
-    // integer degree counting, so the twin is exact; zero per-round
-    // jobs (the declarative loop paid a degree aggregate + two
-    // semi-joins + checkpoint per round)
-    val kErowsOpt =
-      if (driverRegimeOk(und.sparkSession, e.count())) collectDriver(e)
-      else None
-    if (kErowsOpt.isDefined) {
-      val spark = und.sparkSession
-      val erows = kErowsOpt.get
-      val idx = new java.util.HashMap[Any, Integer]()
-      def nodeIdx(v: Any): Int = {
-        var i = idx.get(v)
-        if (i == null) { i = idx.size(); idx.put(v, i) }
-        i.intValue()
-      }
-      val us = new Array[Int](erows.length)
-      val vs = new Array[Int](erows.length)
-      var ei = 0
-      while (ei < erows.length) {
-        us(ei) = nodeIdx(erows(ei).get(0)); vs(ei) = nodeIdx(erows(ei).get(1))
-        ei += 1
-      }
-      val n = idx.size()
-      val nodesArr = new Array[Any](n)
-      idx.forEach((kk, v) => nodesArr(v.intValue()) = kk)
-      val alive = Array.fill(erows.length)(true)
-      val deg = new Array[Long](n)
-      for (_ <- 1 to rounds) {
+    // driver-resident peel: pure integer degree counting, so the twin
+    // is exact; zero per-round jobs (the declarative loop pays a
+    // degree aggregate + two semi-joins + checkpoint per round)
+    val drv = driverGraph(e, e.count())
+    if (drv.isDefined) {
+      val g = drv.get
+      val alive = Array.fill(g.us.length)(true)
+      val deg = new Array[Long](g.n)
+      def degrees(): Unit = {
         java.util.Arrays.fill(deg, 0L)
-        ei = 0
-        while (ei < erows.length) {
-          if (alive(ei)) { deg(us(ei)) += 1; deg(vs(ei)) += 1 }
-          ei += 1
-        }
-        ei = 0
-        while (ei < erows.length) {
-          if (alive(ei) && (deg(us(ei)) < k || deg(vs(ei)) < k)) alive(ei) = false
-          ei += 1
-        }
+        for (j <- alive.indices) if (alive(j)) { deg(g.us(j)) += 1; deg(g.vs(j)) += 1 }
       }
-      java.util.Arrays.fill(deg, 0L)
-      ei = 0
-      while (ei < erows.length) {
-        if (alive(ei)) { deg(us(ei)) += 1; deg(vs(ei)) += 1 }
-        ei += 1
+      for (_ <- 1 to rounds) {
+        degrees()
+        for (j <- alive.indices) if (deg(g.us(j)) < k || deg(g.vs(j)) < k) alive(j) = false
       }
-      val out = (0 until n).filter(deg(_) > 0)
-        .map(i => org.apache.spark.sql.Row(nodesArr(i), deg(i))).toArray
-      return spark.createDataFrame(java.util.Arrays.asList(out: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", e.schema.fields(0).dataType),
-          org.apache.spark.sql.types.StructField("core_deg",
-            org.apache.spark.sql.types.LongType))))
+      degrees()
+      return g.frame("node", "core_deg", (0 until g.n).filter(deg(_) > 0).map(i => (i, deg(i))))
     }
     for (_ <- 1 to rounds) {
       // the survivor set is |V|-bounded: checkpoint it so the degree
@@ -959,7 +792,7 @@ object Graph {
         .select("node")
         .localCheckpoint(true)
       // broadcast-state regime: survivors build-side, edges stay put
-      val bc = broadcastRegimeOk(und.sparkSession, keep.count())
+      val bc = broadcastRegimeOk(keep.count())
       e = e.join(mb(keep.select(col("node").as("u")), bc), Seq("u"), "left_semi")
         .join(mb(keep.select(col("node").as("v")), bc), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
@@ -1000,76 +833,30 @@ object Graph {
       .union(und.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint(true)
     val nodes = bi.select(col("u").as("node")).distinct()
-    // driver-resident BFS below the [[driverEdgeMax]] gate: the seed
-    // predicate still evaluates as a Spark filter (one small job over
-    // the distinct node list), then the level expansion — integer
-    // min-fold ≡ textbook BFS — runs over collected CSR arrays with
-    // zero per-round jobs (the declarative loop paid a frontier join
-    // + min aggregate + checkpoint per round).
-    val bErowsOpt =
-      if (driverRegimeOk(und.sparkSession, bi.count())) collectDriver(bi)
-      else None
-    if (bErowsOpt.isDefined) {
-      val spark = und.sparkSession
-      val erows = bErowsOpt.get
-      val idx = new java.util.HashMap[Any, Integer]()
-      def nodeIdx(v: Any): Int = {
-        var i = idx.get(v)
-        if (i == null) { i = idx.size(); idx.put(v, i) }
-        i.intValue()
-      }
-      val us = new Array[Int](erows.length)
-      val vs = new Array[Int](erows.length)
-      var ei = 0
-      while (ei < erows.length) {
-        us(ei) = nodeIdx(erows(ei).get(0)); vs(ei) = nodeIdx(erows(ei).get(1))
-        ei += 1
-      }
-      val n = idx.size()
-      val nodesArr = new Array[Any](n)
-      idx.forEach((kk, v) => nodesArr(v.intValue()) = kk)
-      // CSR over the directed bi rows (u -> v)
-      val deg = new Array[Int](n)
-      ei = 0
-      while (ei < erows.length) { deg(us(ei)) += 1; ei += 1 }
-      val off = new Array[Int](n + 1)
-      var i = 0
-      while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-      val nbr = new Array[Int](off(n))
-      val fill = java.util.Arrays.copyOf(off, n)
-      ei = 0
-      while (ei < erows.length) {
-        nbr(fill(us(ei))) = vs(ei); fill(us(ei)) += 1; ei += 1
-      }
-      val hops = Array.fill(n)(-1L)
+    // driver-resident BFS: the seed predicate still evaluates as a
+    // Spark filter (one small job over the distinct node list), then
+    // the level expansion — integer min-fold ≡ textbook BFS — runs
+    // over the CSR arrays with zero per-round jobs (the declarative
+    // loop pays a frontier join + min aggregate + checkpoint per round)
+    val drv = driverGraph(bi, bi.count())
+    if (drv.isDefined) {
+      val g = drv.get
+      val (off, nbr) = g.csr(both = false)
+      val hops = Array.fill(g.n)(-1L)
       nodes.filter(seedPred).collect().foreach { r =>
-        val ix = idx.get(r.get(0))
-        if (ix != null) hops(ix.intValue()) = 0L
+        val i = g.id(r.get(0))
+        if (i >= 0) hops(i) = 0L
       }
-      var frontier = (0 until n).filter(hops(_) == 0L).toArray
+      var frontier = hops.indices.filter(hops(_) == 0L).toArray
       for (k <- 1 to rounds) {
-        val next = scala.collection.mutable.ArrayBuffer[Int]()
-        var fi = 0
-        while (fi < frontier.length) {
-          val u = frontier(fi)
-          var j = off(u)
-          while (j < off(u + 1)) {
-            val v = nbr(j)
-            if (hops(v) < 0) { hops(v) = k.toLong; next += v }
-            j += 1
-          }
-          fi += 1
+        val next = scala.collection.mutable.ArrayBuilder.make[Int]
+        for (u <- frontier; j <- off(u) until off(u + 1)) {
+          val v = nbr(j)
+          if (hops(v) < 0) { hops(v) = k.toLong; next += v }
         }
-        frontier = next.toArray
+        frontier = next.result()
       }
-      val out = (0 until n).filter(hops(_) >= 0)
-        .map(i2 => org.apache.spark.sql.Row(nodesArr(i2), hops(i2))).toArray
-      return spark.createDataFrame(java.util.Arrays.asList(out: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            bi.schema.fields(0).dataType),
-          org.apache.spark.sql.types.StructField("hops",
-            org.apache.spark.sql.types.LongType))))
+      return g.frame("node", "hops", hops.indices.filter(hops(_) >= 0).map(i => (i, hops(i))))
     }
     var reached = nodes.filter(seedPred)
       .select(col("node"), lit(0L).as("hops"))
@@ -1079,7 +866,7 @@ object Graph {
       // checkpointed — the count is metadata-cheap) is the build
       // side, so the edge stubs never shuffle per round
       val frontier = reached.filter(col("hops") === (k - 1))
-      val bc = broadcastRegimeOk(und.sparkSession, reached.count())
+      val bc = broadcastRegimeOk(reached.count())
       val expand = mb(frontier, bc)
         .join(bi, col("node") === bi("u"))
         .select(col("v").as("node"), lit(k.toLong).as("hops"))
@@ -1125,12 +912,12 @@ object Graph {
     * materialization g02 ranks ([[coOrderTriangles]]). */
   def g08ClusteringCoeff(spark: SparkSession, dir: String): DataFrame =
     clusteringCoeff(coOrderEdges(spark, dir),
-      Some(coOrderTriangles(spark, dir, hubCap = 0))).orderBy("node")
+      Some(coOrderTriangles(spark, dir))).orderBy("node")
 
   /**
    * Log2-binned DEGREE DISTRIBUTION — the first-read summary of any
    * graph (and the heavy-tail diagnostic that decides whether hub
-   * mitigation like g02's hubCap is needed at all): one degree
+   * mitigation like [[triangles]]' hubCap is needed at all): one degree
    * aggregate, one |bins|-bounded histogram aggregate, both
    * map-side combined. The bin index floor(ln d/ln 2 + 1e-9) is
    * computed by the IDENTICAL IEEE expression in both engines — the

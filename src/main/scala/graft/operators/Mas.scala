@@ -742,6 +742,26 @@ object Mas {
     round(Norm.zsTail(x), 6) + lit(0.0)
   }
 
+  /** The rank tests' tie table with `c`, the number of rows of the
+    * same `key` below each value: `ties` holds one (key, v) row with
+    * its count `t`. The cumulative counts come from the RANGE-
+    * PARTITIONED two-pass prefix scan (the c02/c16 machinery), NOT a
+    * per-key window: a continuous trait's tie table is ~|rows| long,
+    * and a window partitioned only by key would drag it through one
+    * partition per key. The global scan runs in (key, v) struct
+    * order; per-key c is the global cum minus the key's base (its
+    * first value's cum) — the c16 per-source-base trick, |keys| rows
+    * broadcast. */
+  private def tiesBefore(ties: DataFrame, key: String): DataFrame = {
+    val ordered = ties.withColumn("__ord", struct(col(key), col("v")))
+    val scanned = Corpus.prefixScan(ordered, "__ord", "t", Seq("__cum")) {
+      (start, _) => Seq(start)
+    }
+    val bases = scanned.groupBy(key).agg(min("__cum").as("__base"))
+    scanned.join(broadcast(bases), key)
+      .withColumn("c", col("__cum") - col("__base"))
+  }
+
   /**
    * a46: MANN–WHITNEY U (Wilcoxon rank-sum) — the nonparametric
    * two-group comparison a01's linear model is NOT (no normality
@@ -777,21 +797,7 @@ object Mas {
     val ties = melted.groupBy("dep", "v").agg(
       count(lit(1)).as("t"),
       sum(when(col("g") === 1L, 1L).otherwise(0L)).as("t1"))
-    // cumulative tie counts via the RANGE-PARTITIONED two-pass prefix
-    // scan (the c02/c16 machinery), NOT a per-dep window: a continuous
-    // trait's tie table is ~|rows| long, and a window partitioned only
-    // by dep would drag it through one partition per dependent. The
-    // global scan runs in (dep, v) struct order; per-dep cumBefore is
-    // the global cum minus the dep's base (its first value's cum) —
-    // the c16 per-source-base trick, |deps| rows broadcast.
-    val ordered = ties.withColumn("__ord", struct(col("dep"), col("v")))
-    val scanned = Corpus.prefixScan(ordered, "__ord", "t", Seq("__cum")) {
-      (start, _) => Seq(start)
-    }
-    val bases = scanned.groupBy("dep").agg(min("__cum").as("__base"))
-    val ranked = scanned.join(broadcast(bases), "dep")
-      .withColumn("c", col("__cum") - col("__base"))
-    val agg = ranked.groupBy("dep").agg(
+    val agg = tiesBefore(ties, "dep").groupBy("dep").agg(
       sum("t").as("n"), sum("t1").as("n1"),
       sum(col("t1").cast("decimal(38,0)") *
         (lit(2L) * col("c") + col("t") + lit(1L))).as("r1x2"),
@@ -901,15 +907,6 @@ object Mas {
     val tieAggs = Seq(count(lit(1)).as("t")) ++
       gs.map(i => sum(when(col("g") === i.toLong, 1L).otherwise(0L)).as(s"t$i"))
     val ties = melted.groupBy("dep", "v").agg(tieAggs.head, tieAggs.tail: _*)
-    // same range-partitioned two-pass prefix scan + per-dep base as
-    // a46 (a continuous trait's tie table is ~|rows| long)
-    val ordered = ties.withColumn("__ord", struct(col("dep"), col("v")))
-    val scanned = Corpus.prefixScan(ordered, "__ord", "t", Seq("__cum")) {
-      (start, _) => Seq(start)
-    }
-    val bases = scanned.groupBy("dep").agg(min("__cum").as("__base"))
-    val ranked = scanned.join(broadcast(bases), "dep")
-      .withColumn("c", col("__cum") - col("__base"))
     val rank2 = lit(2L) * col("c") + col("t") + lit(1L)
     val aggExprs = Seq(sum("t").as("n")) ++
       gs.map(i => sum(col(s"t$i")).as(s"n$i")) ++
@@ -917,7 +914,7 @@ object Mas {
         sum(col(s"t$i").cast("decimal(38,0)") * rank2).as(s"r${i}x2")) ++
       Seq(sum(col("t").cast("decimal(38,0)") * col("t") * col("t") - col("t"))
         .cast("decimal(38,0)").as("tie3"))
-    val agg = ranked.groupBy("dep").agg(aggExprs.head, aggExprs.tail: _*)
+    val agg = tiesBefore(ties, "dep").groupBy("dep").agg(aggExprs.head, aggExprs.tail: _*)
     val n = col("n").cast("double")
     val sumTerm = gs.map { i =>
       val rg = col(s"r${i}x2").cast("double") / lit(2.0)
@@ -984,15 +981,9 @@ object Mas {
       explode(map(cols.flatMap(c => Seq(lit(c), col(c))): _*))
         .as(Seq("cname", "v")))
     val ties = melted.groupBy("cname", "v").agg(count(lit(1)).as("t"))
-    val ordered = ties.withColumn("__ord", struct(col("cname"), col("v")))
-    val scanned = Corpus.prefixScan(ordered, "__ord", "t", Seq("__cum")) {
-      (start, _) => Seq(start)
-    }
-    val bases = scanned.groupBy("cname").agg(min("__cum").as("__base"))
-    val rankTable = scanned.join(broadcast(bases), "cname")
+    val rankTable = tiesBefore(ties, "cname")
       .select(col("cname"), col("v"),
-        (lit(2L) * (col("__cum") - col("__base")) + col("t") + lit(1L))
-          .as("rank2"))
+        (lit(2L) * col("c") + col("t") + lit(1L)).as("rank2"))
     val rowAggs = cols.map(c =>
       max(when(col("cname") === c, col("rank2"))).as(s"r_$c"))
     val rankedRows = melted.join(rankTable, Seq("cname", "v"))

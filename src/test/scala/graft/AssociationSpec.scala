@@ -1200,6 +1200,38 @@ class AssociationSpec extends AnyFunSuite with BeforeAndAfterAll {
       p1c.getAs[Double]("beta_z2") == p8c.getAs[Double]("beta_z2"))
   }
 
+  test("coxPhCov and coxPhCov2 fit a NaN time as the largest time, equal to +Inf") {
+    val sess = spark
+    import sess.implicits._
+    val rng = new scala.util.Random(41)
+    val rows = (0 until 90).map { i =>
+      val t = -math.log(1 - rng.nextDouble()) / math.exp(0.5 * (i % 2))
+      ("g", t + 0.01, if (rng.nextDouble() < 0.8) 1.0 else 0.0,
+        (i % 2).toDouble, (i % 3).toDouble, (i / 2 % 2).toDouble)
+    }
+    // one event and one censored row get the odd time: Spark and
+    // DuckDB both order NaN above every double
+    def frame(odd: Double) = rows.zipWithIndex.map { case ((g, t, ev, x, z1, z2), i) =>
+      if (i == 4) (g, odd, 1.0, x, z1, z2)
+      else if (i == 7) (g, odd, 0.0, x, z1, z2)
+      else (g, t, ev, x, z1, z2)
+    }.toDF("grp", "time", "event", "x", "z1", "z2")
+    def bits(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    })
+    val fits = Seq[(String, DataFrame => DataFrame)](
+      "coxPhCov" -> (Association.coxPhCov(_, "time", "event", "x", "z1", "grp",
+        zMax = 2, iters = 8)),
+      "coxPhCov2" -> (Association.coxPhCov2(_, "time", "event", "x", "z1", "z2", "grp",
+        z1Max = 2, z2Max = 1, iters = 8)))
+    for ((name, fit) <- fits) {
+      val nan = bits(fit(frame(Double.NaN)))
+      assert(nan.size == 1 && !nan.head.contains(null), s"$name: $nan")
+      assert(nan == bits(fit(frame(Double.PositiveInfinity))), name)
+    }
+  }
+
   test("countFit: unit exposure, exposure scaling, closed form, zero score") {
     val rng = new scala.util.Random(91)
     val n = 400

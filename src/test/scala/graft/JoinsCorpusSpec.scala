@@ -753,47 +753,38 @@ class JoinsCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("rank-loop driver regime is bit-equal to the declarative loop") {
     val sess = spark
     import sess.implicits._
-    // r17: pagerank/ppr/labelProp run driver-resident below
-    // spark.graft.graph.driverEdges. Integer state makes the twin
-    // EXACT (order-independent sums; Spark's Round replicated via
-    // BigDecimal HALF_UP) — pin bit equality against the DataFrame
-    // loop forced with the gate at 0.
+    // pagerank/ppr/labelProp/kcore/bfs run driver-resident below the
+    // edge gate. Integer state makes the twin EXACT (order-independent
+    // sums; Spark's Round replicated via BigDecimal HALF_UP). The
+    // distributed path is itself dual-regime: state broadcasts to the
+    // edges below the vertex gate, plain shuffle loop above. Pin all
+    // THREE regimes bit-equal, forced through Graph.regimes.
     val e = (1L to 200L).map(i => (i, i * 7 % 97 + 1)).toDF("src", "dst")
     val und = (1L to 200L).map(i => (i, i * 11 % 83 + 1)).toDF("u", "v")
     val seeds = Seq(3L, 9L, 27L).toDF("node")
-    def all() = (
-      operators.Graph.pagerank(e, 4).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      operators.Graph.personalizedPagerank(e, seeds, 4).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      operators.Graph.labelProp(und, 3).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      operators.Graph.kcore(und, 2, 3).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      operators.Graph.bfsHops(und, col("node") % 13 === 0, 3).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    // string ids pin the shared driver index for non-Long nodes
+    val es = (1 to 200).map(i => (s"n$i", s"n${i * 7 % 97 + 1}")).toDF("src", "dst")
+    val unds = (1 to 200).map(i => (s"n$i", s"n${i * 11 % 83 + 1}")).toDF("u", "v")
+    val seedsS = Seq("n3", "n9", "n27").toDF("node")
+    def m(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.get(0) -> r.getLong(1)).toMap
+    def all() = Seq(
+      "pagerank" -> m(operators.Graph.pagerank(e, 4)),
+      "ppr" -> m(operators.Graph.personalizedPagerank(e, seeds, 4)),
+      "labelProp" -> m(operators.Graph.labelProp(und, 3)),
+      "kcore" -> m(operators.Graph.kcore(und, 2, 3)),
+      "bfs" -> m(operators.Graph.bfsHops(und, col("node") % 13 === 0, 3)),
+      "pagerank (string ids)" -> m(operators.Graph.pagerank(es, 4)),
+      "ppr (string ids)" -> m(operators.Graph.personalizedPagerank(es, seedsS, 4)),
+      "kcore (string ids)" -> m(operators.Graph.kcore(unds, 2, 3)),
+      "bfs (string ids)" -> m(operators.Graph.bfsHops(unds,
+        substring(col("node"), 2, 3).cast("long") % 13 === 0, 3)))
     val drv = all()
-    spark.conf.set("spark.graft.graph.driverEdges", "0")
-    try {
-      // r18: the distributed path itself is dual-regime — state
-      // broadcasts to the edges below spark.graft.graph
-      // .broadcastVertices (the default admits this graph), plain
-      // shuffle loop above. Pin all THREE regimes bit-equal.
-      val bcast = all()
-      spark.conf.set("spark.graft.graph.broadcastVertices", "0")
-      val shuf = all()
-      for ((trip, name) <- Seq(
-          (drv._1, bcast._1, shuf._1) -> "pagerank",
-          (drv._2, bcast._2, shuf._2) -> "ppr",
-          (drv._3, bcast._3, shuf._3) -> "labelProp",
-          (drv._4, bcast._4, shuf._4) -> "kcore",
-          (drv._5, bcast._5, shuf._5) -> "bfs")) {
-        assert(trip._1 == trip._2, s"$name: driver vs broadcast regimes differ")
-        assert(trip._2 == trip._3, s"$name: broadcast vs shuffle regimes differ")
-      }
-    } finally {
-      spark.conf.unset("spark.graft.graph.driverEdges")
-      spark.conf.unset("spark.graft.graph.broadcastVertices")
+    val bcast = operators.Graph.regimes.withValue(1)(all())
+    val shuf = operators.Graph.regimes.withValue(0)(all())
+    for (((name, d), i) <- drv.zipWithIndex) {
+      assert(d.nonEmpty, s"$name: empty result")
+      assert(d == bcast(i)._2, s"$name: driver vs broadcast regimes differ")
+      assert(bcast(i)._2 == shuf(i)._2, s"$name: broadcast vs shuffle regimes differ")
     }
   }
 
@@ -885,7 +876,7 @@ class JoinsCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("g02 cached orientation index equals a fresh build (persisted-artifact rule)") {
     val dir = "/root/testdata/sf0.001"
-    val cached = operators.Graph.coOrderOrientedAdj(spark, dir, 0)
+    val cached = operators.Graph.coOrderOrientedAdj(spark, dir)
     val fresh = operators.Graph.orientedAdjArrays(
       operators.Graph.coOrderEdges(spark, dir), 0)
     val a = cached.orderBy("src").collect().map(_.toString)
@@ -1044,23 +1035,13 @@ class JoinsCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(capped1.values.sum < exact.values.sum)
     assert(capped1.forall { case (n, c) => c <= exact(n) })
-    // the g02 wrapper reads the session knob
-    val prev = spark.conf.getOption("spark.graft.triangles.hubCap")
-    spark.conf.set("spark.graft.triangles.hubCap", "1")
-    try {
-      // wheel W8 capped at 1 out-edge per vertex: strictly fewer than
-      // the 8 exact triangles
-      val wheel = ((1L to 8L).map(i => (0L, i)) ++
-        (1L to 7L).map(i => (i, i + 1)) :+ (1L, 8L)).toDF("u", "v")
-      val cw = operators.Graph.triangles(wheel, hubCap = 1)
-        .agg(sum(col("n_triangles"))).head()
-      assert(cw.isNullAt(0) || cw.getLong(0) < 24L)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.triangles.hubCap", v)
-        case None => spark.conf.unset("spark.graft.triangles.hubCap")
-      }
-    }
+    // wheel W8 capped at 1 out-edge per vertex: strictly fewer than
+    // the 8 exact triangles
+    val wheel = ((1L to 8L).map(i => (0L, i)) ++
+      (1L to 7L).map(i => (i, i + 1)) :+ (1L, 8L)).toDF("u", "v")
+    val cw = operators.Graph.triangles(wheel, hubCap = 1)
+      .agg(sum(col("n_triangles"))).head()
+    assert(cw.isNullAt(0) || cw.getLong(0) < 24L)
   }
 
   test("triangles hubCap on the real co-order graph: capped is a close lower bound") {

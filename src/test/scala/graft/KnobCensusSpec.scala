@@ -13,11 +13,8 @@ class KnobCensusSpec extends AnyFunSuite {
     "spark.graft.bpe.merges",
     "spark.graft.bpe.trainWords",
     "spark.graft.dedup.blockRowsMax",
-    "spark.graft.graph.broadcastVertices",
-    "spark.graft.graph.driverEdges",
     "spark.graft.icdMapPath",
-    "spark.graft.paraDedup.checkpointFirst",
-    "spark.graft.triangles.hubCap")
+    "spark.graft.paraDedup.checkpointFirst")
 
   private val envVars = Set(
     "SPARK_GRAFT_BENCH_ONLY",
