@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
 import graft.operators.{Association, Postprocess, Preprocess}
@@ -30,7 +31,8 @@ import graft.sources.Sources
  * Every job a run triggers carries its stage as the job description:
  * `graft/read`, `graft/preprocess`, `graft/fit`, `graft/postprocess` or
  * `graft/write`. Preprocessing asks the cohort its covariate
- * statistics in one aggregate (`Preprocess.profile`). Every model fits
+ * statistics and its categoricals' levels in one aggregate
+ * (`Preprocess.profile`). Every model fits
  * every pair once, in `graft/fit` jobs, into a local relation of pair
  * rows. Postprocessing (Bonferroni, annotation, sort) runs on those
  * rows on the driver, where they already are: its only jobs read the
@@ -83,8 +85,8 @@ object Pipeline {
   /** Config-level validation — the reference's fail-fast contract
     * (config.py:180-196 unique sets, cli.py mutually-exclusive
     * groups), plus the engine pairings a lazy plan can check early. */
-  private def validate(cfg: GraftConfig, predictors: Seq[String], dependents: Seq[String],
-      covariates: Seq[String], categoricals: Seq[String]): Unit = {
+  private def validate(spark: SparkSession, cfg: GraftConfig, predictors: Seq[String],
+      dependents: Seq[String], covariates: Seq[String], categoricals: Seq[String]): Unit = {
     require(Seq("firth", "logistic", "linear").contains(cfg.model),
       s"Unknown model: ${cfg.model}")
     require(predictors.nonEmpty, s"The predictor spec '${cfg.predictors}' selects no columns.")
@@ -112,6 +114,15 @@ object Pipeline {
     val cc = categoricals.toSet
     require(cc.isEmpty || (cc & c).nonEmpty && (cc -- c).isEmpty,
       "Categorical covariate columns must be a subset of covariate columns")
+    // the defs are read after the fit: a path that is not one file
+    // (a directory, a glob, a missing file) fails here, before any job
+    if (cfg.phecodeDefs.nonEmpty && (cfg.phewas || cfg.flipwas)) {
+      val path = new Path(cfg.phecodeDefs)
+      val isFile = try path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getFileStatus(path).isFile
+        catch { case _: java.io.FileNotFoundException => false }
+      require(isFile, s"--phecode-defs '${cfg.phecodeDefs}' is not a file: it takes one CSV file.")
+    }
   }
 
   /** Reference-style configuration summary (config.py:231-255) — what
@@ -167,7 +178,7 @@ object Pipeline {
     val dependents = resolve(raw, cfg.dependents)
     var covariates = resolve(raw, cfg.covariates)
     val categoricals = resolve(raw, cfg.categoricalCovariates)
-    validate(cfg, predictors, dependents, covariates, categoricals)
+    validate(raw.sparkSession, cfg, predictors, dependents, covariates, categoricals)
 
     // project to the used columns only — pushdown-friendly. The sex
     // column is NOT auto-included: the reference requires it among the
@@ -205,11 +216,14 @@ object Pipeline {
       case s => Preprocess.fillNulls(df, covariates, s)
     }
 
-    // one aggregate answers the fail check, the fill values and the
-    // constant-covariate drop (preprocessing.py:65-79). A mean/min/max
-    // fill is profiled before it runs: its value comes from the same row
+    // one aggregate answers the fail check, the fill values, the
+    // constant-covariate drop (preprocessing.py:65-79) and the
+    // categoricals' levels. A mean/min/max fill is profiled before it
+    // runs: its value comes from the same row
+    var levels = Map.empty[String, Seq[String]]
     if (covariates.nonEmpty) {
-      val p = Preprocess.profile(df, covariates, strategy)
+      val p = Preprocess.profile(df, covariates, strategy, categoricals)
+      levels = p.levels
       // all-missing first, like preprocessing.py:12-16
       if (strategy == "fail") for ((c, n) <- p.nulls) {
         require(n < p.rows || p.rows == 0, s"All values are missing in covariate column '$c'.")
@@ -225,7 +239,7 @@ object Pipeline {
     // dropped (preprocessing.py:82-108); one with two levels or fewer
     // stays a covariate as it is. The dummies are the only columns
     // outside `used`.
-    df = Preprocess.oneHot(df, categoricals.filter(covariates.contains))
+    df = Preprocess.encode(df, categoricals.filter(covariates.contains), levels)
     covariates = covariates.filter(df.columns.contains) ++ df.columns.filterNot(used.contains)
     // the fitters read covariates as numbers: a string left after the
     // encoding is a config error here, not a cast failure in the fit

@@ -82,17 +82,26 @@ object Models {
 
   // -------------------------------------------------------- raw kernels
 
-  /** Fused eta → p → w pass: p_i = sigmoid(x_i·beta), w_i = p(1−p)
-    * floored at wfloor. No allocation. */
-  private def etaPW(
+  /** eta → p → w: p_i = sigmoid(x_i·beta), w_i = p(1−p) floored at
+    * wfloor. η accumulates in `p` column by column (p_i += x_ij·β_j, j
+    * ascending), a unit-stride loop the JIT vectorizes; each row still
+    * sums 0.0 + x_i0·β_0 + x_i1·β_1 + … in that order, so p and w are
+    * bit-identical to the row-by-row dot product. No allocation. */
+  private[graft] def etaPW(
       xd: Array[Double], n: Int, k: Int, beta: Array[Double],
       p: Array[Double], w: Array[Double], wfloor: Double): Unit = {
+    java.util.Arrays.fill(p, 0, n, 0.0)
+    var j = 0
+    while (j < k) {
+      val o = j * n
+      val bj = beta(j)
+      var i = 0
+      while (i < n) { p(i) += xd(o + i) * bj; i += 1 }
+      j += 1
+    }
     var i = 0
     while (i < n) {
-      var acc = 0.0
-      var j = 0
-      while (j < k) { acc += xd(j * n + i) * beta(j); j += 1 }
-      val pi = 1.0 / (1.0 + math.exp(-acc))
+      val pi = 1.0 / (1.0 + math.exp(-p(i)))
       p(i) = pi
       w(i) = math.max(pi * (1.0 - pi), wfloor)
       i += 1

@@ -6,8 +6,13 @@ import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, NamedExpression,
+  UnsafeProjection}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ParquetBatches
+import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import graft.models.{FitResult, Models}
 import graft.operators.Preprocess.column
 
@@ -25,9 +30,10 @@ import graft.operators.Preprocess.column
  *  - The engine reads the wide frame, never a melted one. One packer
  *    ([[columnChunks]]) turns each input partition into a column chunk
  *    of [predictors, covariates, dependents] with a null bitmap per
- *    column, and every model reads those chunks. A pair's rows are the
- *    chunk rows where x, y and every covariate are non-null, in input
- *    order. No row is exploded per (sample, pair).
+ *    column, and every model reads those chunks. A parquet cohort is
+ *    copied from the scan's column batches, any other input row by row.
+ *    A pair's rows are the chunk rows where x, y and every covariate are
+ *    non-null, in input order. No row is exploded per (sample, pair).
  *  - The LOGISTIC/FIRTH path fits in column blocks ([[binaryBlocks]]):
  *    each chunk is sliced into one chunk per block of dependents (of
  *    predictors, for flipwas-shaped grids), one shuffle keyed by block
@@ -198,7 +204,7 @@ object Association {
     * [predictors, covariates, dependents], or one block's selection of
     * them), column-major, with a null bitmap per column (bit i set = row
     * i null). A NaN stays a value. */
-  private final case class ColumnChunk(
+  private[operators] final case class ColumnChunk(
       part: Int, n: Int, values: Array[Array[Double]], nulls: Array[java.util.BitSet]) {
 
     /** The rows where every column of `cols` is non-null. */
@@ -221,34 +227,133 @@ object Association {
     def select(cols: Array[Int]): ColumnChunk = ColumnChunk(part, n, cols.map(values), cols.map(nulls))
   }
 
+  /** One input partition's columns as they arrive, a segment of rows at
+    * a time (a column batch, or a run of rows), joined at the end into
+    * arrays of the partition's exact row count. A null slot holds 0.0
+    * and its bit in `nulls`. */
+  private final class ChunkBuilder(nCols: Int) {
+    private val segs = mutable.ArrayBuffer.empty[(Array[Array[Double]], Int)]
+    val nulls: Array[java.util.BitSet] = Array.fill(nCols)(new java.util.BitSet)
+    /** Rows added so far: the chunk row of the next segment's first row. */
+    var rows = 0
+
+    /** The next `n` rows: column j's values are `seg(j)(0 until n)`. */
+    def add(seg: Array[Array[Double]], n: Int): Unit = if (n > 0) { segs += ((seg, n)); rows += n }
+
+    def result(part: Int): Iterator[ColumnChunk] =
+      if (rows == 0) Iterator.empty
+      else Iterator.single(ColumnChunk(part, rows, Array.tabulate(nCols) { j =>
+        if (segs.size == 1 && segs.head._1(j).length == rows) segs.head._1(j)
+        else {
+          val v = new Array[Double](rows)
+          var off = 0
+          // drop each segment's column once copied: the task never holds two copies
+          for ((seg, n) <- segs) { System.arraycopy(seg(j), 0, v, off, n); seg(j) = null; off += n }
+          v
+        }
+      }, nulls))
+  }
+
+  /** Forces [[columnChunks]]' row loop for a dynamic scope, so a spec
+    * can pin the column-batch path against it. */
+  private[operators] val rowLoop = new scala.util.DynamicVariable(false)
+
   /** The packer every model reads: each non-empty input partition of
     * `df` becomes one [[ColumnChunk]] of [predictors, covariates,
-    * dependents] cast to double, rows in input order. */
-  private def columnChunks(df: DataFrame, cfg: Config): RDD[ColumnChunk] = {
+    * dependents] cast to double, rows in input order. When the plan is
+    * a projection over a parquet scan (or the bare scan), the chunk is
+    * copied from the scan's column batches ([[batchChunks]]); any other
+    * plan (a delimited read, a filter, a join, an RDD frame) runs the
+    * row loop. Both give the same doubles in the same partitions. */
+  private[operators] def columnChunks(df: DataFrame, cfg: Config): RDD[ColumnChunk] = {
     val names = cfg.predictors ++ cfg.covariates ++ cfg.dependents
     val nCols = names.size
-    df.select(names.map(n => column(n).cast("double")): _*).queryExecution.toRdd
-      .mapPartitionsWithIndex { (part, it) =>
-        val values = Array.fill(nCols)(new mutable.ArrayBuilder.ofDouble)
-        val nulls = Array.fill(nCols)(new java.util.BitSet)
-        var n = 0
-        it.foreach { r =>
-          var j = 0
-          while (j < nCols) {
-            if (r.isNullAt(j)) { nulls(j).set(n); values(j) += 0.0 }
-            else values(j) += r.getDouble(j)
-            j += 1
+    val qe = df.select(names.map(n => column(n).cast("double")): _*).queryExecution
+    qe.executedPlan match {
+      case ParquetBatches(exprs, input, batches) if !rowLoop.value =>
+        batchChunks(exprs, input, batches)
+      case _ => qe.toRdd.mapPartitionsWithIndex { (part, it) =>
+        val b = new ChunkBuilder(nCols)
+        var size = 256 // segments double up to the reader's batch size
+        while (it.hasNext) {
+          val seg = Array.fill(nCols)(new Array[Double](size))
+          var n = 0
+          while (n < size && it.hasNext) {
+            val r = it.next()
+            var j = 0
+            while (j < nCols) {
+              if (r.isNullAt(j)) b.nulls(j).set(b.rows + n) else seg(j)(n) = r.getDouble(j)
+              j += 1
+            }
+            n += 1
           }
-          n += 1
+          b.add(seg, n)
+          size = math.min(2 * size, 4096)
         }
-        if (n == 0) Iterator.empty
-        else Iterator.single(ColumnChunk(part, n, Array.tabulate(nCols) { j =>
-          // drop each builder once copied: the task never holds two copies
-          val v = values(j).result()
-          values(j) = null
-          v
-        }, nulls))
+        b.result(part)
       }
+    }
+  }
+
+  /** [[columnChunks]] from a parquet scan's column batches: a projected
+    * column that is a double scan column is copied a batch at a time
+    * (`getDoubles`; null slots are read only in a batch that has nulls,
+    * and zeroed, since the reader reuses its vectors); every other
+    * projected expression (one-hot cases, fills, casts) is evaluated by
+    * one projection bound to the scan output, row by row over the
+    * batch. */
+  private def batchChunks(exprs: Seq[NamedExpression], input: Seq[Attribute],
+      batches: RDD[ColumnarBatch]): RDD[ColumnChunk] = {
+    val nCols = exprs.size
+    // output j: the scan ordinal of a double column copied as it is, or -1
+    val direct = exprs.map {
+      case Alias(a: Attribute, _) if a.dataType == DoubleType => input.indexWhere(_.exprId == a.exprId)
+      case a: Attribute if a.dataType == DoubleType => input.indexWhere(_.exprId == a.exprId)
+      case _ => -1
+    }.toArray
+    val evaluated = direct.indices.filter(direct(_) < 0).toArray
+    val projected = evaluated.map(exprs(_): Expression).toSeq
+    batches.mapPartitionsWithIndex { (part, it) =>
+      val b = new ChunkBuilder(nCols)
+      val proj = UnsafeProjection.create(projected, input)
+      proj.initialize(part)
+      it.foreach { batch =>
+        val n = batch.numRows()
+        val seg = new Array[Array[Double]](nCols)
+        var j = 0
+        while (j < nCols) {
+          if (direct(j) >= 0) {
+            val v = batch.column(direct(j))
+            val out = v.getDoubles(0, n)
+            if (v.hasNull) {
+              var i = 0
+              while (i < n) {
+                if (v.isNullAt(i)) { out(i) = 0.0; b.nulls(j).set(b.rows + i) }
+                i += 1
+              }
+            }
+            seg(j) = out
+          }
+          j += 1
+        }
+        if (evaluated.nonEmpty) {
+          evaluated.foreach(seg(_) = new Array[Double](n))
+          var i = 0
+          while (i < n) {
+            val r = proj(batch.getRow(i))
+            var e = 0
+            while (e < evaluated.length) {
+              val c = evaluated(e)
+              if (r.isNullAt(e)) b.nulls(c).set(b.rows + i) else seg(c)(i) = r.getDouble(e)
+              e += 1
+            }
+            i += 1
+          }
+        }
+        b.add(seg, n)
+      }
+      b.result(part)
+    }
   }
 
   /** The predictor × dependent grid in grid order: each pair's fitted

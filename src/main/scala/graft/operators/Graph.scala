@@ -140,7 +140,7 @@ object Graph {
       if (i >= 0) isSeed(i) = true
     })
     val s = isSeed.count(identity).toLong
-    require(s >= 1 || seedsOpt.isEmpty, s"$op: seed set is empty (or disjoint from the graph)")
+    require(s >= 1 || n == 0, s"$op: seed set is empty (or disjoint from the graph)")
     val teleport = math.round(0.15 * Scale.toDouble / s)
     val r = Array.tabulate(n)(i => if (isSeed(i)) Scale / s else 0L)
     val cval = new Array[Long](n)
@@ -222,8 +222,9 @@ object Graph {
     // rank is checkpointed: the |V| count is metadata-cheap
     val nv = rank.count()
     val bc = broadcastRegimeOk(nv)
-    val s = if (seedsOpt.isEmpty) nv else rank.filter(col("is_seed")).count()
-    require(s >= 1 || seedsOpt.isEmpty, s"$op: seed set is empty (or disjoint from the graph)")
+    // an empty graph runs the loop over no vertex: s = 1 stands in for |S|
+    val s = if (nv == 0) 1L else if (seedsOpt.isEmpty) nv else rank.filter(col("is_seed")).count()
+    require(s >= 1, s"$op: seed set is empty (or disjoint from the graph)")
     val ts = math.round(0.15 * Scale.toDouble / s)
     var r = rank.withColumn("r",
         when(col("is_seed"), lit(Scale / s)).otherwise(lit(0L)))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, NumericType, StringType, StructField, StructType}
 import graft.Tables
-import graft.functions.Numerics
+import graft.functions.{GraftFunctions, Numerics}
 
 /**
  * Preprocessing operators mirroring the reference's preprocessing
@@ -80,10 +80,10 @@ object Preprocess {
   /** What [[profile]] reads of a frame in one aggregate: its row count;
     * each column's null count, in column order; the columns with at
     * most one distinct non-null value (after the fill, when the
-    * strategy fills with a statistic); and each column's fill value as
-    * a typed literal. */
+    * strategy fills with a statistic); each column's fill value as a
+    * typed literal; and each categorical's sorted levels. */
   final case class Profile(rows: Long, nulls: Seq[(String, Long)], constant: Seq[String],
-      fills: Map[String, Column])
+      fills: Map[String, Column], levels: Map[String, Seq[String]])
 
   /** The statistic of each fill strategy that needs one. */
   private val fillStats = Map[String, Column => Column](("mean", avg), ("min", min), ("max", max))
@@ -106,24 +106,55 @@ object Preprocess {
    * a mean of several copies of 0.1 does not. Such a fill over a string
    * column is refused before the aggregate runs: it would fail mid-job
    * on the first value that does not parse as a number.
+   *
+   * The same aggregate reads the levels of each of `categoricals` (a
+   * subset of `cols` under a mean, min or max fill): its distinct
+   * non-null values as strings, sorted, as the one-hot encoding reads
+   * them from the filled column, so a column with nulls gains its fill
+   * value, in the filled column's type. At most [[MaxOneHotLevels]] + 1
+   * values are kept per partition and in the merge; [[oneHot]]'s
+   * encoder refuses a column that has more than [[MaxOneHotLevels]].
    */
-  def profile(df: DataFrame, cols: Seq[String], strategy: String = "fail"): Profile = {
+  def profile(df: DataFrame, cols: Seq[String], strategy: String = "fail",
+      categoricals: Seq[String] = Nil): Profile = {
     val stat = fillStats.get(strategy)
     if (stat.isDefined) requireNumeric(df, cols)(c => s"Cannot fill nulls in string column '$c' " +
       s"with its $strategy; use drop, fail or a numeric encoding.")
     val rows = count(lit(1))
     // per column: null count, constant flag, fill value (min without a fill)
-    val row = df.agg(rows, cols.map { c =>
+    val perCol = cols.map { c =>
       val v = column(c)
       val f = stat.fold(min(v))(_(v))
       val same = max(v).isNull || min(v) === max(v)
       struct(rows - count(v), same && (count(v) === rows || f <=> min(v)), f)
-    }: _*).head()
+    }
+    // per categorical: its distinct values in the filled type, and the
+    // fill value in that type when it fills nulls
+    val perCat = categoricals.map { c =>
+      val v = column(c)
+      stat.fold(struct(GraftFunctions.boundedDistinct(v, MaxOneHotLevels), lit(null))) { s =>
+        val filled = coalesce(v, lit(null).cast(df.agg(s(v)).schema.head.dataType))
+        struct(GraftFunctions.boundedDistinct(filled, MaxOneHotLevels),
+          when(count(v) < rows, coalesce(lit(null).cast(df.schema(c).dataType), s(v))))
+      }
+    }
+    val row = df.agg(rows, perCol ++ perCat: _*).head()
     val per = cols.indices.map(i => cols(i) -> row.getStruct(i + 1))
+    val levels = categoricals.indices.map { i =>
+      val r = row.getStruct(1 + cols.size + i)
+      // distinct values print distinctly, but for -0.0 against 0.0
+      val fill = Option(r.get(1)).map {
+        case d: Double => if (d == 0.0) 0.0 else d
+        case f: Float => if (f == 0.0f) 0.0f else f
+        case other => other
+      }
+      categoricals(i) -> (r.getSeq[Any](0) ++ fill).map(_.toString).distinct.sorted
+    }.toMap
     Profile(row.getLong(0), per.map { case (c, r) => c -> r.getLong(0) },
       per.collect { case (c, r) if r.getBoolean(1) => c },
       if (stat.isEmpty) Map.empty
-      else per.map { case (c, r) => c -> lit(r.get(2)).cast(r.schema(2).dataType) }.toMap)
+      else per.map { case (c, r) => c -> lit(r.get(2)).cast(r.schema(2).dataType) }.toMap,
+      levels)
   }
 
   /** `df` with each column of `fills` coalesced with its fill literal:
@@ -254,29 +285,31 @@ object Preprocess {
   val MaxOneHotLevels = 1000
 
   /** Dummy-encode categoricals with >2 levels, dropping the first
-    * level (preprocessing.py:82-108). Levels are collected in ONE
-    * bounded pass — distinct().limit(cap+1), so the driver can never
-    * receive more than cap+1 rows even for a high-cardinality column
-    * (an ID passed as a categorical by mistake), which fails fast
-    * without the extra countDistinct scan a previous revision paid.
-    * NULL is not a level (the missing-value step resolves missing
-    * covariates BEFORE encoding; countDistinct would also have
-    * ignored it, NPE'd below, and under-counted the cap). Levels sort
-    * for determinism; the encoding itself is a pivot-free CASE WHEN
-    * projection Catalyst folds into the scan. */
+    * level (preprocessing.py:82-108). The levels come from one
+    * [[profile]] aggregate over all of `cols`, bounded per partition and
+    * in the merge, so the driver never receives more than cap+1 values
+    * of a column even for a high-cardinality one (an ID passed as a
+    * categorical by mistake), which fails fast. NULL is not a level: the
+    * missing-value step resolves missing covariates BEFORE encoding. */
   def oneHot(df: DataFrame, cols: Seq[String]): DataFrame =
+    if (cols.isEmpty) df else encode(df, cols, profile(df, Nil, categoricals = cols).levels)
+
+  /** The one-hot encoder [[oneHot]] and the pipeline share: each of
+    * `cols` with more than two of its sorted `levels` becomes a dummy
+    * per level but the first, a pivot-free CASE WHEN projection Catalyst
+    * folds into the scan; a column with two levels or fewer stays as it
+    * is. A column with more than [[MaxOneHotLevels]] levels is refused. */
+  def encode(df: DataFrame, cols: Seq[String], levels: Map[String, Seq[String]]): DataFrame =
     cols.foldLeft(df) { (d, c) =>
-      val collected = d.select(column(c)).filter(column(c).isNotNull)
-        .distinct().limit(MaxOneHotLevels + 1).collect()
-      require(collected.length <= MaxOneHotLevels,
+      val lv = levels(c)
+      require(lv.length <= MaxOneHotLevels,
         s"categorical covariate '$c' has more than $MaxOneHotLevels " +
           "distinct levels — one-hot encoding it would add that many " +
           "columns to the design matrix; this is almost certainly an " +
           "ID column passed as categorical")
-      val levels = collected.map(_.get(0).toString).sorted
-      if (levels.length <= 2) d
+      if (lv.length <= 2) d
       else {
-        val dummies = levels.drop(1).map(v =>
+        val dummies = lv.drop(1).map(v =>
           when(column(c) === v, 1).otherwise(0).as(s"${c}_$v"))
         d.select((d.columns.filterNot(_ == c).map(column).toSeq ++ dummies): _*)
       }

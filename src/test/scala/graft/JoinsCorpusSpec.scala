@@ -788,6 +788,20 @@ class JoinsCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("pagerank and ppr on an empty edge list return an empty frame in every regime") {
+    val sess = spark
+    import sess.implicits._
+    val e = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val seeds = Seq(3L).toDF("node")
+    for (regime <- 0 to 2) operators.Graph.regimes.withValue(regime) {
+      for ((name, out) <- Seq("pagerank" -> operators.Graph.pagerank(e, 3),
+          "ppr" -> operators.Graph.personalizedPagerank(e, seeds, 3))) {
+        assert(out.columns.toSeq == Seq("node", "rank_micro", "rank"), s"$name regime $regime")
+        assert(out.collect().isEmpty, s"$name regime $regime")
+      }
+    }
+  }
+
   test("ppr: hand-checked seed-biased iterations, mass conservation, invariance") {
     val sess = spark
     import sess.implicits._

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every setting the library reads is listed here: a new
   * `spark.graft.*` conf key or `SPARK_GRAFT_*` environment variable in
-  * `src/main/scala` fails this spec until it is added below. */
+  * `src/main/scala` fails this spec until it is added below. So is
+  * every file that writes a setting into a running session: the fit
+  * path (its column-batch packer included) writes none. */
 class KnobCensusSpec extends AnyFunSuite {
   private val confKeys = Set(
     "spark.graft.ann.queryRowsMax",
@@ -21,6 +23,10 @@ class KnobCensusSpec extends AnyFunSuite {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_SF_DIR",
     "SPARK_GRAFT_VERIFY_ONLY")
+
+  private val confWriters = Set(
+    "src/main/scala/graft/Bench.scala",
+    "src/main/scala/graft/streaming/StreamingOps.scala")
 
   private def literals(pattern: String): Map[String, Seq[String]] = {
     val re = pattern.r
@@ -42,5 +48,11 @@ class KnobCensusSpec extends AnyFunSuite {
     val found = literals("\"(SPARK_GRAFT_[A-Z0-9_]+)\"")
     assert(found.keySet == envVars,
       s"unlisted: ${found -- envVars}; listed but gone: ${envVars -- found.keySet}")
+  }
+
+  test("only the listed files write a setting into a running session") {
+    val found = literals("""(\.conf\.(?:set|unset)|\bsetConf)\(""").values.flatten.toSet
+    assert(found == confWriters,
+      s"unlisted: ${found -- confWriters}; listed but gone: ${confWriters -- found}")
   }
 }

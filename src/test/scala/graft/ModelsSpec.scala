@@ -242,4 +242,34 @@ class ModelsSpec extends AnyFunSuite {
     assert(near(r.pval, pRef, 1e-6), s"pval ${r.pval} vs $pRef")
     assert(r.converged)
   }
+
+  test("the column-order eta pass is bit-identical to the row-order dot product, k 2 to 22") {
+    val rng = new scala.util.Random(41)
+    // logistic floors w at 1e-10, firth at 1e-12
+    for (k <- 2 to 22; wfloor <- Seq(1e-10, 1e-12)) {
+      val n = 37 + rng.nextInt(200)
+      // an intercept column, a binary column and wide-ranging Gaussians
+      val xd = Array.tabulate(k * n) { c =>
+        c / n match {
+          case 0 => 1.0
+          case 1 => if (rng.nextBoolean()) 1.0 else 0.0
+          case _ => rng.nextGaussian() * math.pow(10, rng.nextInt(7) - 3)
+        }
+      }
+      val beta = Array.fill(k)(rng.nextGaussian() * 3)
+      val p = Array.fill(n)(Double.NaN)
+      val w = Array.fill(n)(Double.NaN)
+      Models.etaPW(xd, n, k, beta, p, w, wfloor)
+      for (i <- 0 until n) {
+        var acc = 0.0
+        for (j <- 0 until k) acc += xd(j * n + i) * beta(j)
+        val pi = 1.0 / (1.0 + math.exp(-acc))
+        val wi = math.max(pi * (1.0 - pi), wfloor)
+        assert(java.lang.Double.doubleToRawLongBits(p(i)) == java.lang.Double.doubleToRawLongBits(pi),
+          s"k=$k row $i: p ${p(i)} vs $pi")
+        assert(java.lang.Double.doubleToRawLongBits(w(i)) == java.lang.Double.doubleToRawLongBits(wi),
+          s"k=$k row $i: w ${w(i)} vs $wi")
+      }
+    }
+  }
 }

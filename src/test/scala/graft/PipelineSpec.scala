@@ -574,14 +574,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     cohortDf.withColumn("zh", org.apache.spark.sql.functions.expr("if(id % 7 = 0, null, z)"))
       .write.parquet(s"$dir/cohort.parquet")
     def jobs(run: Observed, label: String) = run.jobs.count(_._1 == label)
-    // one aggregate for the fail check and the constant drop, one for
-    // the 3-level categorical's level scan: two jobs each under adaptive
-    // execution
+    // one aggregate for the fail check, the constant drop and the
+    // 3-level categorical's levels: two jobs under adaptive execution
     val firth = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
       dependents = "d1,d2", covariates = "z,zconst,seg", categoricalCovariates = "seg",
       model = "firth", minCaseCount = 10, output = s"$dir/out_firth"))
     assert(jobs(firth, "graft/route") == 0, firth.jobs)
-    assert(jobs(firth, "graft/preprocess") == 4, firth.jobs)
+    assert(jobs(firth, "graft/preprocess") == 2, firth.jobs)
     // the mean fill is a literal: the fit's plan reads no aggregate
     val linear = observe(GraftConfig(input = s"$dir/cohort.parquet", predictors = "x",
       dependents = "z", covariates = "zh,zconst", missingCovariateValues = "mean",
@@ -648,6 +647,39 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(msg.contains("'grp'") && msg.contains("strings"), msg)
       assert(!run.jobs.exists(_._1 == "graft/fit"), run.jobs)
+    }
+  }
+
+  test("a categorical with 1,001 levels fails on its level count before any fit job") {
+    def subjects(offset: Int) = cohortDf.withColumn("subject",
+      org.apache.spark.sql.functions.expr(s"cast((id + $offset) % 1001 as string)"))
+    val ids = subjects(0).union(subjects(400)).union(subjects(800))
+    assert(ids.select("subject").distinct().count() == 1001)
+    var msg = ""
+    val run = observing {
+      msg = intercept[IllegalArgumentException](Pipeline.run(ids, GraftConfig(input = "",
+        predictors = "x", dependents = "d1", covariates = "z,subject",
+        categoricalCovariates = "subject", model = "logistic", minCaseCount = 10))).getMessage
+    }
+    assert(msg.contains("categorical covariate 'subject' has more than 1000 distinct levels"), msg)
+    assert(run.jobs.nonEmpty && !run.jobs.exists(_._1 == "graft/fit"), run.jobs)
+  }
+
+  test("--phecode-defs naming a directory, a glob or a missing file fails before any job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_defs_path").toString
+    new java.io.File(s"$dir/defs").mkdir()
+    val w = new java.io.PrintWriter(s"$dir/defs/a.csv")
+    w.println("phecode,phenotype,sex,category,category_number")
+    w.close()
+    for (path <- Seq(s"$dir/defs", s"$dir/defs/*.csv", s"$dir/missing.csv")) {
+      var msg = ""
+      val run = observing {
+        msg = intercept[IllegalArgumentException](Pipeline.run(cohortDf, GraftConfig(input = "",
+          predictors = "x", dependents = "d1,d2", model = "logistic", minCaseCount = 10,
+          phewas = true, phecodeDefs = path))).getMessage
+      }
+      assert(msg.contains(s"'$path'") && msg.contains("one CSV file"), msg)
+      assert(run.jobs.isEmpty, s"$path: ${run.jobs}")
     }
   }
 }

@@ -224,6 +224,67 @@ class PreprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("the profile's levels are the distinct collect of the filled column under every fill") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{avg, coalesce, col, lit, max, min}
+    import org.apache.spark.sql.types._
+    val nan = Double.NaN
+    val columns = Seq[(String, DataType, Seq[Any])](
+      ("s3", StringType, Seq("b", "a", "c", "a", "b", "c", "a", "b", "c")),
+      ("s3n", StringType, Seq("b", null, "c", "a", "b", null, "a", "b", "c")),
+      ("i4", IntegerType, Seq(1, 2, 3, 5, 1, 2, 3, 5, 5)),
+      ("i4n", IntegerType, Seq(1, null, 3, 5, 1, 2, null, 5, 5)),
+      // -0.0 and 0.0 are one level, NaN is one
+      ("dz", DoubleType, Seq(-0.0, 0.0, 1.5, nan, null, 1.5, -0.0, nan, 2.0)))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("x", DoubleType),
+      StructField("d1", DoubleType)) ++ columns.map(c => StructField(c._1, c._2)))
+    val rows = (0 until 9).map(i =>
+      Row.fromSeq(Seq[Any](i.toLong, i * 0.5, (i % 2).toDouble) ++ columns.map(_._3(i))))
+    val raw = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val stats = Map[String, org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+      "mean" -> (c => avg(c)), "min" -> (c => min(c)), "max" -> (c => max(c)))
+    /** The frame the encoding reads levels from (the strategy's fill
+      * done independently of the profile), or the error the profile
+      * raises instead; then the levels as a distinct collect reads them. */
+    def filled(c: String, s: String): Either[String, org.apache.spark.sql.DataFrame] = {
+      val t = raw.schema(c).dataType
+      s match {
+        case "fail" => Right(raw)
+        case "drop" => Right(raw.na.drop(Seq(c)))
+        case "zero" | "one" if t == StringType => Right(raw)
+        case "zero" | "one" => Right(raw.withColumn(c,
+          coalesce(col(c), lit(if (s == "zero") 0.0 else 1.0).cast(t))))
+        case st if t == StringType => Left(s"string column '$c' with its $st")
+        case st =>
+          val r = raw.agg(stats(st)(col(c))).head()
+          Right(raw.withColumn(c, coalesce(col(c), lit(r.get(0)).cast(r.schema(0).dataType))))
+      }
+    }
+    def distinctCollect(df: org.apache.spark.sql.DataFrame, c: String): Seq[String] =
+      df.select(col(c)).filter(col(c).isNotNull).distinct().collect().map(_.get(0).toString)
+        .sorted.toSeq
+    for (s <- Seq("fail", "drop", "zero", "one", "mean", "min", "max"); (c, _, _) <- columns) {
+      val tag = s"$s $c"
+      // the pipeline fills drop/zero/one before profiling, mean/min/max in it
+      val pre = s match {
+        case "drop" | "zero" | "one" => Preprocess.fillNulls(raw, Seq(c), s)
+        case _ => raw
+      }
+      filled(c, s) match {
+        case Right(df) =>
+          val levels = Preprocess.profile(pre, Seq(c), s, Seq(c)).levels(c)
+          assert(levels == distinctCollect(df, c), tag)
+        case Left(error) =>
+          val msg = intercept[IllegalArgumentException](
+            Preprocess.profile(pre, Seq(c), s, Seq(c))).getMessage
+          assert(msg.contains(error), s"$tag: $msg")
+      }
+    }
+    // the mean fill of an int column is a double: its levels print as one
+    assert(Preprocess.profile(raw, Seq("i4n"), "mean", Seq("i4n")).levels("i4n") ==
+      Seq("1.0", "2.0", "3.0", "3.142857142857143", "5.0"))
+  }
+
   test("oneHot leaves <=2-level columns untouched") {
     val sess = spark
     import sess.implicits._

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType, StringType, StructField,
+  StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSession
@@ -11,8 +12,8 @@ import graft.GraftSession
 /** The wide-frame paths of `Association.assoc`: column blocks against
   * the long-format entry, block and partition invariance, the block
   * count rule, collinear covariates on the wide and the long route,
-  * linear partition invariance, and all-null columns on every chunk
-  * path. */
+  * linear partition invariance, all-null columns on every chunk path,
+  * and the column-batch packer against the row loop. */
 class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
@@ -321,5 +322,103 @@ class BlockFitSpec extends AnyFunSuite with BeforeAndAfterAll {
       val cfg = Association.Config(preds, deps, Seq("z"), model = model, minCaseCount = 5)
       check(s"$model blocks", Association.assoc(df, cfg), "total_n")
     }
+  }
+
+  // ----------------------------------------------- the two packers
+
+  private val batchDeps = (0 until 96).map(j => f"d$j%02d") ++ Seq("d_nan", "d_late")
+
+  /** A parquet cohort of 5,000 rows in `files` files (so one file holds
+    * two of the reader's 4,096-row batches): double, int, long and float
+    * predictors, a 3-level string categorical, a covariate with nulls,
+    * 96 binary dependents (dictionary-encoded unless `dictionary` is
+    * off), one with NaN values, and `d_late`, non-null in the first
+    * batch and mostly null in the second, whose null slots the reused
+    * vector still holds first-batch values in. */
+  private def batchCohort(files: Int, dictionary: Boolean): DataFrame = {
+    val rng = new scala.util.Random(29)
+    val rows = (0 until 5000).map { i =>
+      val x = rng.nextGaussian()
+      Row((Seq[Any](i, x, rng.nextInt(90), rng.nextLong() % 1000L, rng.nextFloat() * 3,
+        Seq("A", "B", "C")(rng.nextInt(3)), rng.nextInt(70),
+        if (i % 13 == 0) null else rng.nextGaussian()) ++ (0 until 96).map { j =>
+          if ((i + j) % 41 == 0) null
+          else if (rng.nextDouble() < 1.0 / (1.0 + math.exp(-(0.5 * x - 1.0 + j / 96.0)))) 1.0 else 0.0
+        } ++ Seq(
+          if (i % 97 == 5) Double.NaN else if (rng.nextDouble() < 0.4) 1.0 else 0.0,
+          if (i >= 4096 && i % 3 != 0) null else if (rng.nextDouble() < 0.5) 1.0 else 0.0)): _*)
+    }
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("x", DoubleType),
+      StructField("x_int", IntegerType), StructField("x_long", LongType),
+      StructField("x_float", FloatType), StructField("site", StringType),
+      StructField("age", IntegerType), StructField("zh", DoubleType)) ++
+      batchDeps.map(StructField(_, DoubleType)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_batches").toString
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(files)
+      .write.option("parquet.enable.dictionary", dictionary.toString).parquet(s"$dir/cohort.parquet")
+    spark.read.parquet(s"$dir/cohort.parquet")
+  }
+
+  /** Whether [[Association.columnChunks]] copies `df` from column batches. */
+  private def packsBatches(df: DataFrame, cfg: Association.Config): Boolean =
+    org.apache.spark.sql.graftshim.ParquetBatches.unapply(df.select(
+      (cfg.predictors ++ cfg.covariates ++ cfg.dependents).map(n =>
+        org.apache.spark.sql.functions.col(s"`$n`").cast("double")): _*)
+      .queryExecution.executedPlan).isDefined
+
+  /** Both packers' chunks, value bits and null bitmaps, and each model's
+    * rows, bit for bit. */
+  private def assertPackersAgree(df: DataFrame, cfg: Association.Config, tag: String): Unit = {
+    def chunks = Association.columnChunks(df, cfg).collect().sortBy(_.part).toSeq.map(c =>
+      (c.part, c.n, c.values.toSeq.map(_.toSeq.map(java.lang.Double.doubleToRawLongBits)),
+        c.nulls.toSeq))
+    val batch = chunks
+    assert(batch.nonEmpty, tag)
+    assert(batch == Association.rowLoop.withValue(true)(chunks), s"$tag: chunks differ")
+    for (model <- Seq("firth", "logistic", "linear")) {
+      val m = cfg.copy(model = model)
+      assert(canon(Association.assoc(df, m)) ==
+        Association.rowLoop.withValue(true)(canon(Association.assoc(df, m))), s"$tag $model")
+    }
+  }
+
+  test("the column-batch packer gives the row loop's chunks and rows, bit for bit") {
+    for ((files, dictionary) <- Seq((1, true), (1, false), (7, true), (32, true))) {
+      val raw = batchCohort(files, dictionary)
+      // a 3-level string categorical (one-hot cases), then a mean fill
+      // (coalesces), each over int/long/float casts; the full width is
+      // past the codegen field limit, six dependents are not
+      for ((covariates, categoricals, strategy) <- Seq(("age,site,x_long,x_float", "site", "fail"),
+          ("age,zh,x_long,x_float", "", "mean")); wide <- Seq(true, false)) {
+        val deps = if (wide) batchDeps else batchDeps.takeRight(6)
+        val tag = s"$files files, dictionary $dictionary, $strategy, ${deps.size} dependents"
+        val (df, cfg) = graft.Pipeline.preprocess(raw, graft.GraftConfig(input = "",
+          predictors = if (wide) "x" else "x,x_int", dependents = deps.mkString(","),
+          covariates = covariates, categoricalCovariates = categoricals,
+          missingCovariateValues = strategy, minCaseCount = 5))
+        assert(packsBatches(df, cfg), tag)
+        if (categoricals.nonEmpty) assert(cfg.covariates.contains("site_C"), tag)
+        assertPackersAgree(df, cfg, tag)
+      }
+    }
+  }
+
+  test("a sex-filtered or tab-delimited cohort keeps the row loop and its rows") {
+    val raw = batchCohort(2, dictionary = true)
+    val deps = batchDeps.takeRight(6)
+    val (filtered, cfg) = graft.Pipeline.preprocess(raw, graft.GraftConfig(input = "",
+      predictors = "x", dependents = deps.mkString(","), covariates = "zh,x_int",
+      missingCovariateValues = "drop", sexCol = "x_int", maleOnly = true, minCaseCount = 5))
+    assert(!packsBatches(filtered, cfg))
+    assertPackersAgree(filtered, cfg, "sex filter")
+    val dir = java.nio.file.Files.createTempDirectory("graft_batches_tsv").toString
+    raw.select((Seq("x", "zh", "age") ++ deps).map(org.apache.spark.sql.functions.col): _*)
+      .coalesce(1).write.option("header", "true").option("delimiter", "\t").csv(s"$dir/out")
+    val part = new java.io.File(s"$dir/out").listFiles().find(_.getName.endsWith(".csv")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/cohort.tsv"))
+    val tsv = graft.sources.Sources.read(spark, s"$dir/cohort.tsv")
+    val tcfg = Association.Config(Seq("x"), deps, Seq("zh", "age"), minCaseCount = 5)
+    assert(!packsBatches(tsv, tcfg))
+    assertPackersAgree(tsv, tcfg, "tsv")
   }
 }
